@@ -112,6 +112,10 @@ object ArpaIO {
       .ngramCountsUnified(train, textCol, order, None, digest = false)
       .limit(math.min(maxGrams, Int.MaxValue - 2).toInt + 1)
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
+    // this bound check must precede ANY use of the per-order slices:
+    // past the bound, the limit keeps an arbitrary cross-order subset
+    // of the rows, so a slice (the unigram Unk check below included)
+    // would read a truncated order
     require(allRows.length <= maxGrams,
       s"the gram inventory pushes the model past the " +
         s"driver-local ARPA bound $maxGrams — ship corpus-scale " +

@@ -538,14 +538,18 @@ object CorpusStats {
     * slim (src?, doc, p, j, g) row per available order (g_j is NULL
     * iff p < j — those rows join to nothing by construction, so they
     * are dropped before the shuffle and the pivot rebuild reads the
-    * missing cell back as NULL), joined ONCE against the unified
-    * (src?, j, g) count frame, then repartitioned by doc so the pivot
-    * rebuild groupBy(doc, p), the lag window (doc) and the final
-    * groupBy(doc) all reuse one exchange. Versus the previous `order`
-    * sequential left joins this is 2 score-side exchanges instead of
-    * order+1, and each shuffled row carries one 16-byte key instead of
-    * the up-to-order-wide gram row with accumulated count columns
-    * (~60% fewer score-side shuffle bytes at order 5). */
+    * missing cell back as NULL) and joined ONCE against the unified
+    * (src?, j, g) count frame: one (src?, j, g)-keyed exchange on the
+    * score side. The pivot rebuild groupBy(src?, doc, p) then collapses
+    * the per-order rows on the map side and shuffles one wide row per
+    * position through a (src?, doc, p) exchange. That partitioning does
+    * not satisfy the doc-keyed lag window, so a third, doc-keyed
+    * exchange follows; the final groupBy(doc) reuses it. Versus the
+    * previous `order` sequential left joins (one join exchange per
+    * order) this is 3 score-side exchanges whatever the order, and the
+    * join's shuffled rows carry one 16-byte key instead of the
+    * up-to-order-wide gram row with accumulated count columns (~60%
+    * fewer score-side shuffle bytes at order 5). */
   private[graft] def ngramScoreTailFromPos(countsU: DataFrame,
                                            nv: DataFrame, pos: DataFrame,
                                            order: Int, alpha: Double,

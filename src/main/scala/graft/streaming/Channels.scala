@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import scala.collection.concurrent.TrieMap
@@ -15,9 +14,14 @@ import scala.collection.concurrent.TrieMap
   * reference's map rows; subscribers decode with an explicit schema.
   *
   * Two transports behind one API:
-  *  - '''memory''' (default): a MemoryStream per channel — faithful to the
-  *    reference's in-process channels and what tests use. Inherently
-  *    driver-side: every published batch is collected to feed the stream.
+  *  - '''memory''' (default): an [[IngressStream]] per channel — faithful
+  *    to the reference's in-process channels and what tests use.
+  *    Inherently driver-side: every published batch is collected to feed
+  *    the stream. However many pushes and published batches arrive
+  *    between two subscriber micro-batches, the subscriber reads them as
+  *    at most one input partition per core, so its row order inside a
+  *    batch is not arrival order: rows that need ordering carry a
+  *    `__seq` field and the consumer sorts by it.
   *  - '''file''' ([[useFileBackend]]): a per-channel append directory.
   *    publish = distributed `batch.write.mode("append")` from the
   *    executors (NO driver collect anywhere on the data path); subscribe =
@@ -29,7 +33,7 @@ import scala.collection.concurrent.TrieMap
 object Channels {
 
   private sealed trait Backend
-  private final case class Mem(stream: MemoryStream[String]) extends Backend
+  private final case class Mem(stream: IngressStream) extends Backend
   private final case class FileCh(dataDir: java.nio.file.Path,
                                   ckptRoot: java.nio.file.Path) extends Backend
 
@@ -54,7 +58,7 @@ object Channels {
     fileRoot = Some(java.nio.file.Paths.get(root))
   }
 
-  /** Back to in-process MemoryStream channels (default; test/dev). */
+  /** Back to in-process memory channels (default; test/dev). */
   def useMemoryBackend(): Unit = {
     reset()
     fileRoot = None
@@ -66,17 +70,14 @@ object Channels {
         val data = root.resolve(name).resolve("data")
         java.nio.file.Files.createDirectories(data)
         FileCh(data, root.resolve(name).resolve("ckpt"))
-      case None =>
-        implicit val sqlCtx = spark.sqlContext
-        import spark.implicits._
-        Mem(MemoryStream[String])
+      case None => Mem(new IngressStream)
     })
 
   /** Streaming DataFrame of a channel's traffic, decoded with `schema`. */
   def subscribe(name: String, schema: StructType)
                (implicit spark: SparkSession): DataFrame = {
     val raw = channel(name) match {
-      case Mem(st)          => st.toDF()
+      case Mem(st)          => st.rows
       case FileCh(data, _)  => spark.readStream.format("text").load(data.toString)
     }
     raw.select(from_json(col("value"), schema).as("r"))
@@ -93,7 +94,7 @@ object Channels {
     channel(name) match {
       case Mem(st) =>
         // in-process transport: the collect IS the transport (rows must
-        // reach the driver-held MemoryStream). Dev/test only by contract,
+        // reach the driver-held stream). Dev/test only by contract,
         // enforced by memoryBatchRowCap: collect at most cap+1 rows (so
         // driver memory stays bounded even for a wildly over-cap batch),
         // and fail the stream if the cap is exceeded.
@@ -107,7 +108,7 @@ object Channels {
                 "transport collects every batch to the driver and is for " +
                 "dev/test only — use Channels.useFileBackend (distributed " +
                 "data plane) or raise Channels.memoryBatchRowCap deliberately")
-            if (rows.nonEmpty) st.addData(rows.toSeq)
+            if (rows.nonEmpty) st.add(rows.toSeq)
             ()
           }
           .start()
@@ -161,9 +162,9 @@ object Channels {
     // empty push must be a no-op on BOTH transports: the file branch
     // would otherwise write a lone newline, which the text source reads
     // as one empty row and from_json turns into an all-null row for
-    // every subscriber (the memory branch's addData(Nil) is harmless)
+    // every subscriber (the memory branch's add(Nil) is harmless)
     if (jsonRows.isEmpty) () else channel(name) match {
-      case Mem(st) => st.addData(jsonRows)
+      case Mem(st) => st.add(jsonRows)
       case FileCh(data, _) =>
         val f = data.resolve(s"push-${pubSeq.getAndIncrement()}-" +
           s"${java.util.UUID.randomUUID()}.txt")

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import java.net.InetSocketAddress
 import scala.collection.concurrent.TrieMap
 
 /** REST control shim for replay sources — parity with the reference's
@@ -10,10 +9,10 @@ import scala.collection.concurrent.TrieMap
   * one named source via the reference's path-param form
   * (/tester/pause/:id — tester.go:69-74), or via ?name= (kept for
   * compatibility with earlier graft clients; the path param wins when
-  * both appear). Built on the JDK's HttpServer (no extra
-  * dependencies); GET /tester/status reports each source's state and
-  * GET /tester/columns its dataset's column names (the reference's
-  * getColumnNames output).
+  * both appear). Built on the JDK's HttpServer via [[HttpEndpoint]]
+  * (no extra dependencies); GET /tester/status reports each source's
+  * state and GET /tester/columns its dataset's column names (the
+  * reference's getColumnNames output).
   *
   * Sources register either explicitly ([[register]]) or straight from
   * a loaded app definition ([[registerFrom]] — one replay source per
@@ -108,16 +107,13 @@ class ControlServer(port: Int) {
   def source(name: String): Option[CsvReplay] = sources.get(name)
 
   def start(): Int = {
-    server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    server.createContext("/tester", (ex: HttpExchange) => handle(ex))
-    server.setExecutor(null)
-    server.start()
+    server = HttpEndpoint.serve(port, "/tester" -> handle)
     server.getAddress.getPort
   }
 
   def stop(): Unit = if (server != null) server.stop(0)
 
-  private def handle(ex: HttpExchange): Unit = {
+  private def handle(ex: HttpExchange): (Int, String) = {
     val rest = ex.getRequestURI.getPath.stripPrefix("/tester").stripPrefix("/")
     // the reference's path-param form: /tester/<action>/<id>
     // (tester.go:69-74); everything after the first segment is the id.
@@ -138,7 +134,7 @@ class ControlServer(port: Int) {
       case Some(n) => sources.get(n).map(n -> _).toSeq
       case None    => sources.toSeq
     }
-    val (code, body) = path match {
+    path match {
       case _ if name.isDefined && targets.isEmpty =>
         (404, s"""{"error": "unknown source: ${esc(name.get)}"}""")
       case "start"  => targets.foreach(_._2.start()); ok(targets)
@@ -156,11 +152,6 @@ class ControlServer(port: Int) {
         }.mkString("{", ",", "}"))
       case other    => (404, s"""{"error": "unknown action: $other"}""")
     }
-    val bytes = body.getBytes("UTF-8")
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length)
-    ex.getResponseBody.write(bytes)
-    ex.close()
   }
 
   private def ok(targets: Seq[(String, CsvReplay)]): (Int, String) =

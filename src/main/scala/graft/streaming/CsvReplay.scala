@@ -1,8 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
@@ -32,17 +30,15 @@ private[streaming] object AutoParse {
   *  - control: start / stop / pause / resume / reload (REST in the
   *    reference; direct methods here, an HTTP shim is a trivial wrapper).
   *
-  * Rows are fed into a MemoryStream as JSON with `__seq` (arrival index)
-  * and `__ts` (emit wall-clock) attached — exactly the meta columns the
-  * pipeline compiler expects.
+  * Rows are fed into an [[IngressStream]] as JSON with `__seq` (arrival
+  * index) and `__ts` (emit wall-clock) attached — exactly the meta
+  * columns the pipeline compiler expects.
   */
 class CsvReplay(path: String, header: Boolean = true, emitDelayMs: Long = 100,
                 replayData: Boolean = false, allDataAtOnce: Boolean = false)
                (implicit spark: SparkSession) {
 
-  implicit private val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-  import spark.implicits._
-  private val stream = MemoryStream[String]
+  private val stream = new IngressStream
   private val running = new AtomicBoolean(false)
   private val paused = new AtomicBoolean(false)
   private val seq = new AtomicLong(0)
@@ -125,13 +121,7 @@ class CsvReplay(path: String, header: Boolean = true, emitDelayMs: Long = 100,
   }
 
   /** Streaming DataFrame with the CSV's columns + __seq + __ts. */
-  def toDF(schema: StructType): DataFrame =
-    stream.toDF()
-      .select(from_json(col("value"), schema).as("r"),
-        get_json_object(col("value"), "$.__seq").cast("bigint").as("__seq"),
-        timestamp_millis(get_json_object(col("value"), "$.__ts_ms")
-          .cast("bigint")).as("__ts"))
-      .select(col("r.*"), col("__seq"), col("__ts"))
+  def toDF(schema: StructType): DataFrame = stream.envelopes(schema)
 
   def start(): Unit = {
     if (running.getAndSet(true)) return
@@ -141,10 +131,10 @@ class CsvReplay(path: String, header: Boolean = true, emitDelayMs: Long = 100,
       do {
         if (allDataAtOnce) {
           val now = System.currentTimeMillis()
-          stream.addData(rows.map(r => toJson(r, seq.getAndIncrement(), now)))
+          stream.add(rows.map(r => toJson(r, seq.getAndIncrement(), now)))
           // replayData + allDataAtOnce must still pace at the emit delay
           // (an unthrottled loop re-adds the whole dataset thousands of
-          // times per second into the driver-held MemoryStream), and an
+          // times per second into the driver-held stream), and an
           // empty dataset must not busy-spin a core
           if (replayData && running.get()) Thread.sleep(delay)
         } else if (rows.isEmpty) {
@@ -157,8 +147,8 @@ class CsvReplay(path: String, header: Boolean = true, emitDelayMs: Long = 100,
             val r = it.next()
             while (paused.get() && running.get()) Thread.sleep(5)
             if (running.get()) {
-              stream.addData(toJson(r, seq.getAndIncrement(),
-                System.currentTimeMillis()))
+              stream.add(Seq(toJson(r, seq.getAndIncrement(),
+                System.currentTimeMillis())))
               Thread.sleep(delay)
             }
           }
@@ -189,6 +179,6 @@ class CsvReplay(path: String, header: Boolean = true, emitDelayMs: Long = 100,
   def emitAllNow(): Unit = {
     val now = System.currentTimeMillis()
     if (rows.nonEmpty)
-      stream.addData(rows.map(r => toJson(r, seq.getAndIncrement(), now)))
+      stream.add(rows.map(r => toJson(r, seq.getAndIncrement(), now)))
   }
 }

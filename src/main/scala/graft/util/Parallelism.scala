@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.plans.logical._
 
 /** Fan-out parallelism guard (optimization guide §1.2 step 1, §2.5
@@ -42,7 +43,9 @@ import org.apache.spark.sql.catalyst.plans.logical._
 object Parallelism {
   /** Scan-split count of a batch, exchange-free (scan-shaped) plan;
     * None for streams or plans whose `.rdd` peek would run jobs under
-    * AQE (joins/aggregations/windows/repartitions/sorts upstream). */
+    * AQE (joins/aggregations/windows/repartitions/sorts upstream, or a
+    * subquery inside any node's expressions, whose jobs the peek's
+    * physical planning submits). */
   def scanPartitions(df: DataFrame): Option[Int] = {
     if (df.isStreaming) return None
     // whitelist of narrow, no-job logical nodes: anything else (Join,
@@ -52,7 +55,8 @@ object Parallelism {
     val scanShaped = df.queryExecution.analyzed.collectFirst {
       case p if !(p.isInstanceOf[Project] || p.isInstanceOf[Filter] ||
         p.isInstanceOf[Generate] || p.isInstanceOf[SubqueryAlias] ||
-        p.isInstanceOf[Union] || p.isInstanceOf[LeafNode]) => p
+        p.isInstanceOf[Union] || p.isInstanceOf[LeafNode]) ||
+        p.expressions.exists(_.exists(_.isInstanceOf[SubqueryExpression])) => p
     }.isEmpty
     if (scanShaped) Some(df.rdd.getNumPartitions) else None
   }
@@ -60,11 +64,11 @@ object Parallelism {
   def spread(df: DataFrame): DataFrame = {
     val sess = df.sparkSession
     val cores = sess.sparkContext.defaultParallelism
-    val byteSmall = {
-      val maxSplit = sess.sessionState.conf.filesMaxPartitionBytes
+    // the size estimate optimizes the plan, which throws on a stream:
+    // evaluate it only once scanPartitions has ruled streams out
+    def byteSmall =
       df.queryExecution.optimizedPlan.stats.sizeInBytes <
-        BigInt(cores.toLong) * maxSplit
-    }
+        BigInt(cores.toLong) * sess.sessionState.conf.filesMaxPartitionBytes
     scanPartitions(df) match {
       case Some(n) if n < cores && byteSmall => df.repartition(cores)
       case _ => df

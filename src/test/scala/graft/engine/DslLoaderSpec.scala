@@ -36,26 +36,20 @@ class DslLoaderSpec extends SparkSpec {
   }
 
   test("http:// loading: plain, flogo-compressed header, and caching") {
-    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    import com.sun.net.httpserver.HttpExchange
     val hits = new java.util.concurrent.atomic.AtomicInteger(0)
-    val server = HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/plain", (ex: HttpExchange) => {
-      hits.incrementAndGet()
-      val b = appJson.getBytes("UTF-8")
-      ex.sendResponseHeaders(200, b.length)
-      ex.getResponseBody.write(b); ex.close()
-    })
-    server.createContext("/compressed", (ex: HttpExchange) => {
-      val bos = new java.io.ByteArrayOutputStream()
-      val gzo = new java.util.zip.GZIPOutputStream(bos)
-      gzo.write(appJson.getBytes("UTF-8")); gzo.close()
-      val b = java.util.Base64.getEncoder.encode(bos.toByteArray)
-      ex.getResponseHeaders.set("flogo-compressed", "true")
-      ex.sendResponseHeaders(200, b.length)
-      ex.getResponseBody.write(b); ex.close()
-    })
-    server.start()
+    val server = graft.streaming.HttpEndpoint.serve(0,
+      "/plain" -> { (_: HttpExchange) =>
+        hits.incrementAndGet()
+        (200, appJson)
+      },
+      "/compressed" -> { (ex: HttpExchange) =>
+        val bos = new java.io.ByteArrayOutputStream()
+        val gzo = new java.util.zip.GZIPOutputStream(bos)
+        gzo.write(appJson.getBytes("UTF-8")); gzo.close()
+        ex.getResponseHeaders.set("flogo-compressed", "true")
+        (200, java.util.Base64.getEncoder.encodeToString(bos.toByteArray))
+      })
     val port = server.getAddress.getPort
     try {
       Dsl.clearRemoteCache()
