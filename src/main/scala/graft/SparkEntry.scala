@@ -711,16 +711,10 @@ object SparkEntry {
       import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
       implicit val ss: SparkSession = s
       // ephemeral run artifacts (staged source, channel files,
-      // checkpoints) on tmpfs when available — the ChunkedReplay
-      // discipline: every micro-batch pays walCommit+commitOffsets
-      // fsyncs, which on disk under contention dominate the gate
-      val root = {
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        if (java.nio.file.Files.isDirectory(shm) &&
-            java.nio.file.Files.isWritable(shm))
-          java.nio.file.Files.createTempDirectory(shm, "graft-chanfile-")
-        else java.nio.file.Files.createTempDirectory("graft-chanfile-")
-      }
+      // checkpoints), deleted below. Channels.publish and subscribe
+      // install LocalCheckpointFiles on both sessions, so no query here
+      // forks a process per checkpoint file.
+      val root = java.nio.file.Files.createTempDirectory("graft-chanfile-")
       graft.streaming.Channels.useFileBackend(root.toString)
       try {
         // Spark's file stream source watches a DIRECTORY; the testdata

@@ -87,8 +87,10 @@ object Pipelines {
   def compileStream(p: PipelineDef, input: DataFrame,
                     env: Map[String, String] = Map.empty,
                     props: Map[String, String] = Map.empty,
-                    instrument: Boolean = false): DataFrame =
+                    instrument: Boolean = false): DataFrame = {
+    graft.streaming.LocalCheckpointFiles.install(input.sparkSession)
     compile(p, input, env, props, streaming = true, instrument)
+  }
 
   // --------------------------------------------------------------------
 

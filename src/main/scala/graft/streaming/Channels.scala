@@ -76,6 +76,7 @@ object Channels {
   /** Streaming DataFrame of a channel's traffic, decoded with `schema`. */
   def subscribe(name: String, schema: StructType)
                (implicit spark: SparkSession): DataFrame = {
+    LocalCheckpointFiles.install(spark)
     val raw = channel(name) match {
       case Mem(st)          => st.rows
       case FileCh(data, _)  => spark.readStream.format("text").load(data.toString)
@@ -89,6 +90,7 @@ object Channels {
     * StreamingQuery so callers control lifecycle. */
   def publish(name: String, df: DataFrame)
              (implicit spark: SparkSession) = {
+    LocalCheckpointFiles.install(df.sparkSession)
     val payload =
       df.select(to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("value"))
     channel(name) match {

@@ -29,21 +29,10 @@ final class ChunkedReplay(source: DataFrame, payload: Seq[Column],
                           chunk: Column, nChunks: Int) {
   require(nChunks > 0, s"nChunks must be positive, got $nChunks")
 
-  // The replay root holds ONLY spent-after-the-run artifacts (staged
-  // chunk copy, watched stream dir, checkpoint), so a RAM-backed tmpfs
-  // is the right home when the host offers one: ~100 ms of every
-  // micro-batch is walCommit+commitOffsets fsync (measured, see
-  // ReplayHarness scaladoc), and under host contention that disk I/O is
-  // what swings the streaming gates 2x between runs. Production
-  // checkpoints go to durable storage — this harness's checkpoint is
-  // deliberately ephemeral (deleted in cleanup()).
-  val root: java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) &&
-        java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, "graft-replay-")
-    else java.nio.file.Files.createTempDirectory("graft-replay-")
-  }
+  // The replay root holds only spent-after-the-run artifacts (staged
+  // chunk copy, watched stream dir, checkpoint): cleanup() deletes it.
+  val root: java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory("graft-replay-")
   /** Point the file-source `readStream` here, with [[schema]]. */
   val streamDir: java.nio.file.Path = root.resolve("stream")
   private val staged = root.resolve("staged")
@@ -152,16 +141,18 @@ object ReplayStats {
   * Trigger floor, measured (sf0.1 watermark gate, 4 chunks, warm JVM):
   * 7 micro-batches (4 data + 3 no-data), triggerExecution 400-900 ms
   * each — addBatch dominates even at 0 input rows (incremental plan
-  * execution + memory-sink commit), plus ~100 ms walCommit+
-  * commitOffsets. The wall for these gates IS batches × that floor.
-  * `Trigger.AvailableNow` was evaluated and rejected: the data
-  * micro-batch per chunk is the SEMANTICS (each chunk must see the
-  * watermark advanced by the previous one, with a no-data batch
-  * between), so AvailableNow cannot reduce the batch count — it would
-  * only add a per-chunk query restart (stream re-planning, state-store
-  * reload) on top. What the floor tolerates badly is checkpoint fsync
-  * under host contention, which [[ChunkedReplay]] removes by rooting
-  * the ephemeral run on tmpfs when available. */
+  * execution + memory-sink commit). The wall for these gates IS
+  * batches × that floor. `Trigger.AvailableNow` was evaluated and
+  * rejected: the data micro-batch per chunk is the SEMANTICS (each
+  * chunk must see the watermark advanced by the previous one, with a
+  * no-data batch between), so AvailableNow cannot reduce the batch
+  * count — it would only add a per-chunk query restart (stream
+  * re-planning, state-store reload) on top. The offset log, commit log
+  * and state-store files each micro-batch writes go through
+  * [[LocalCheckpointFiles]]: Spark's default manager forks a `chmod`
+  * per file when libhadoop is absent (about 35 ms a file, the same on
+  * tmpfs as on disk), which had put about 100 ms of walCommit +
+  * commitOffsets on every batch. */
 private[streaming] object ReplayHarness {
 
   /** Stage `events` by `chunk`, run `agg(fileStream)` in a scoped
@@ -208,6 +199,7 @@ private[streaming] object ReplayHarness {
         scoped.conf.set(k, v)
     }
     scoped.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+    LocalCheckpointFiles.install(scoped)
     val streams = replays.map(r =>
       scoped.readStream.schema(r.schema).parquet(r.streamDir.toString))
     val name = namePrefix +

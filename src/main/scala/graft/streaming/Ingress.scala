@@ -61,6 +61,8 @@ private[graft] object HttpEndpoint {
   */
 private[streaming] final class IngressStream(implicit spark: SparkSession) {
 
+  LocalCheckpointFiles.install(spark)
+
   private val stream = MemoryStream[String](
     spark.sparkContext.defaultParallelism)(Encoders.STRING, spark.sqlContext)
 

@@ -17,8 +17,13 @@ object Telemetry {
 
   sealed trait Event { def queryId: String; def ts: Long }
   case class PipelineStarted(queryId: String, name: String, ts: Long) extends Event
+  /** One micro-batch: its input rows, where its time went (Spark's
+    * `durationMs` phases, 0 for a phase the batch did not run) and the
+    * state-store commit time summed over its stateful operators. */
   case class PipelineProgress(queryId: String, batchId: Long, numInputRows: Long,
-                              ts: Long) extends Event
+                              addBatchMs: Long, walCommitMs: Long,
+                              commitOffsetsMs: Long, triggerExecutionMs: Long,
+                              stateCommitMs: Long, ts: Long) extends Event
   case class PipelineFinished(queryId: String, ts: Long) extends Event
   /** Per-stage emitted-row count for one batch/micro-batch — the analog
     * of the reference's StageStarted/StageFinished broadcast
@@ -51,11 +56,16 @@ object Telemetry {
         sink.emit(PipelineStarted(e.id.toString, Option(e.name).getOrElse(""),
           System.currentTimeMillis()))
       override def onQueryProgress(e: QueryProgressEvent): Unit = {
-        sink.emit(PipelineProgress(e.progress.id.toString, e.progress.batchId,
-          e.progress.numInputRows, System.currentTimeMillis()))
-        e.progress.observedMetrics.asScala.foreach { case (name, row) =>
+        val p = e.progress
+        def ms(phase: String): Long =
+          Option(p.durationMs.get(phase)).map(_.longValue).getOrElse(0L)
+        sink.emit(PipelineProgress(p.id.toString, p.batchId, p.numInputRows,
+          ms("addBatch"), ms("walCommit"), ms("commitOffsets"),
+          ms("triggerExecution"), p.stateOperators.map(_.commitTimeMs).sum,
+          System.currentTimeMillis()))
+        p.observedMetrics.asScala.foreach { case (name, row) =>
           if (name.startsWith("graft_stage_"))
-            sink.emit(StageProgress(e.progress.id.toString, name,
+            sink.emit(StageProgress(p.id.toString, name,
               row.getAs[Long]("rows"), System.currentTimeMillis()))
         }
       }

@@ -139,9 +139,13 @@ class WsTelemetrySink(port: Int = 0, queueCapacity: Int = 256)
     e match {
       case Telemetry.PipelineStarted(_, name, _) =>
         node.put("type", "pipeline-started"); node.put("name", name)
-      case Telemetry.PipelineProgress(_, batchId, rows, _) =>
+      case p: Telemetry.PipelineProgress =>
         node.put("type", "pipeline-progress")
-        node.put("batchId", batchId); node.put("numInputRows", rows)
+        node.put("batchId", p.batchId); node.put("numInputRows", p.numInputRows)
+        node.put("addBatchMs", p.addBatchMs); node.put("walCommitMs", p.walCommitMs)
+        node.put("commitOffsetsMs", p.commitOffsetsMs)
+        node.put("triggerExecutionMs", p.triggerExecutionMs)
+        node.put("stateCommitMs", p.stateCommitMs)
       case Telemetry.StageProgress(_, stage, rows, _) =>
         node.put("type", "stage-finished")
         node.put("stageId", stage); node.put("rows", rows)

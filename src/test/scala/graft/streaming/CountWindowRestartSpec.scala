@@ -1,0 +1,100 @@
+package graft.streaming
+
+import graft.SparkSpec
+import graft.engine.{Dsl, Pipelines}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
+import org.apache.spark.sql.types._
+import scala.collection.concurrent.TrieMap
+
+/** A keyed tumbling count window (the DSL's groupBy + `#aggregate`
+  * tumbling stage over a file channel) is stopped after batch k and
+  * restarted from its checkpoint alone. Its emitted rows must equal the
+  * uninterrupted run's, whether the checkpoint was begun under Spark's
+  * default checkpoint manager or under the engine's. */
+class CountWindowRestartSpec extends SparkSpec {
+
+  private val Key = "spark.sql.streaming.checkpointFileManagerClass"
+  private val Size = 3
+
+  private val pipeline = Dsl.parseApp(
+    s"""{"name": "restart", "type": "flogo:app",
+      | "actions": [{"id": "per_user", "ref": "#stream",
+      |   "settings": {"streamURI": "res://stream:per_user", "groupBy": "user"}}],
+      | "resources": [{"id": "stream:per_user", "data": {
+      |   "metadata": {
+      |     "input":  [{"name": "user", "type": "string"},
+      |                {"name": "value", "type": "double"}],
+      |     "output": [{"name": "seq", "type": "long"},
+      |                {"name": "user", "type": "string"},
+      |                {"name": "result", "type": "double"}]},
+      |   "stages": [{"ref": "#aggregate",
+      |     "settings": {"function": "sum", "windowType": "tumbling",
+      |                  "windowSize": "$Size"},
+      |     "input": {"value": "=$$.value"},
+      |     "output": {"seq": "=$$.__seq", "user": "=$$.__group"}}]}}]}
+      |""".stripMargin).pipelines("per_user")
+  private val schema = StructType(Seq(StructField("user", StringType),
+    StructField("value", DoubleType), StructField("__seq", LongType)))
+
+  /** Four chunks of events over three users; every user's windows span
+    * chunk boundaries, so state crosses each restart point. */
+  private val chunks: Seq[Seq[String]] = (0 until 4).map { c =>
+    (0 until 7).map { i =>
+      val seq = c * 7 + i
+      s"""{"user": "u${seq % 3}", "value": ${seq * 1.5}, "__seq": $seq}"""
+    }
+  }
+
+  /** Run `chunks` through one incarnation of the query on `session`:
+    * push a chunk, drain it, repeat; then stop. Emitted rows are kept
+    * per batch id, so a re-run batch would replace, not duplicate. */
+  private def incarnation(session: SparkSession, channel: String,
+                          ckpt: String, chunks: Seq[Seq[String]],
+                          out: TrieMap[Long, Seq[String]]): Unit = {
+    implicit val s: SparkSession = session
+    val q = Pipelines.compileStream(pipeline, Channels.subscribe(channel, schema))
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        out.put(id, b.collect().map(_.mkString("|")).toSeq); ()
+      }
+      .start()
+    try chunks.foreach { c => Channels.push(channel, c); q.processAllAvailable() }
+    finally q.stop()
+  }
+
+  private def emitted(out: TrieMap[Long, Seq[String]]): Seq[String] =
+    out.values.flatten.toSeq.sortBy(_.takeWhile(_ != '|').toLong)
+
+  test("keyed tumbling count window restarts from its checkpoint with the uninterrupted output") {
+    val root = java.nio.file.Files.createTempDirectory("graft-cw-restart-")
+    Channels.useFileBackend(root.toString)
+    try {
+      val whole = TrieMap.empty[Long, Seq[String]]
+      incarnation(spark.newSession(), "whole", root.resolve("ckpt-whole").toString,
+        chunks, whole)
+      val expected = emitted(whole)
+      // 10, 9 and 9 events per user: three complete windows each
+      assert(expected.size == 9, s"complete windows: $expected")
+
+      for (k <- 1 until chunks.size; fromDefault <- Seq(true, false)) {
+        val ch = s"k$k-$fromDefault"
+        val ckpt = root.resolve(s"ckpt-$ch").toString
+        val out = TrieMap.empty[Long, Seq[String]]
+        val first = spark.newSession()
+        if (fromDefault)
+          first.conf.set(Key, classOf[FileContextBasedCheckpointFileManager].getName)
+        incarnation(first, ch, ckpt, chunks.take(k), out)
+        val second = spark.newSession()
+        incarnation(second, ch, ckpt, chunks.drop(k), out)
+        assert(second.conf.get(Key) == classOf[LocalCheckpointFiles].getName)
+        assert(emitted(out) == expected,
+          s"stopped after batch $k, first run under " +
+            (if (fromDefault) "Spark's default manager" else "the engine's"))
+      }
+    } finally {
+      Channels.useMemoryBackend()
+      graft.util.FsUtil.deleteRecursively(root)
+    }
+  }
+}
