@@ -1,37 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // queries that persist bucketed index tables must never drop a
-      // spark-warehouse/ dir into the repo cwd
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-bench-warehouse")
-      // let AQE size CACHED-plan partitions by bytes (default false):
-      // iteration loops re-read persisted frames every round, and a
-      // vocabulary-sized cache materialized at the session's full
-      // shuffle width re-pays per-task fixed cost x width per job
-      // (measured: unigram trainer -30%, warm jaccard -20% from this
-      // alone). Scale-adaptive by construction — AQE's parallelism-
-      // first coalescing keeps corpus-sized caches at full width on a
-      // cluster; only byte-small caches narrow.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // the generated-class cache defaults to 100 entries; a 186-query
-      // suite cycles hundreds of distinct codegen units through it, so
-      // later queries re-pay Janino compilation for classes the warm-up
-      // already built (driver-side fixed cost in every stage). Sized to
-      // hold the whole suite; memory cost is the class metadata only.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench")
     // THE TIMED ACTION (optimization guide §1.4): the noop sink
     // materializes EVERY column of EVERY row and discards it. The
     // previous `df.count()` action let Catalyst prune columns,

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Optimization-round tooling: dump `.explain("formatted")` for named
   * queries (or all) to `<outDir>/<name>.txt`, so plan-shape claims in
@@ -12,30 +11,7 @@ object Plans {
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.lift(2).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-plans-warehouse")
-      // let AQE size CACHED-plan partitions by bytes (default false):
-      // iteration loops re-read persisted frames every round, and a
-      // vocabulary-sized cache materialized at the session's full
-      // shuffle width re-pays per-task fixed cost x width per job
-      // (measured: unigram trainer -30%, warm jaccard -20% from this
-      // alone). Scale-adaptive by construction — AQE's parallelism-
-      // first coalescing keeps corpus-sized caches at full width on a
-      // cluster; only byte-small caches narrow.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // same codegen-cache sizing as the bench session (Bench.scala) so
-      // correctness and plan dumps run the configuration that is timed
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-plans")
     new java.io.File(outDir).mkdirs()
     // failures are collected and the process exits non-zero, and each
     // target file is deleted before the dump is attempted — a failed

@@ -96,13 +96,14 @@ object ScaleProbe {
     }.reduce(_ unionAll _)
 
   /** Keyed streaming-state probe: tumbling(16) count windows through
-    * CountWindowsTws (transformWithState) on the RocksDB state store,
+    * CountWindows.tumblingStream (flatMapGroupsWithState, the runtime
+    * the engine's pipelines use) on the RocksDB state store,
     * with the user population growing with scale. Replays the events in
     * per-user-ordered chunks through a real file-source stream and reads
     * the query's own StateOperatorProgress, so the SCALE.md claim
     * "per-key state is O(window size), independent of stream length" is
     * a measured number: state rows must track the user count (one
-    * ValueState row per user) and bytes/key must stay flat while total
+    * state row per user) and bytes/key must stay flat while total
     * data grows k-fold. Returns a JSON fragment for the scale line. */
   private def streamingStateProbe(spark: SparkSession, events: DataFrame,
                                   nChunks: Int = 4): String = {
@@ -134,7 +135,7 @@ object ScaleProbe {
     val stream = spark.readStream.schema(replay.schema)
       .parquet(replay.streamDir.toString)
       .as[graft.windows.CountWindows.KeyedSample]
-    val q = graft.windows.CountWindowsTws.tumbling(stream, 16, "sum")
+    val q = graft.windows.CountWindows.tumblingStream(stream, 16, "sum")
       .writeStream.format("noop")
       .option("checkpointLocation", replay.root.resolve("ckpt").toString)
       .outputMode("append").start()
@@ -484,22 +485,9 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,4,10")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the dedup_incremental branch persists bucketed index tables —
-      // same rule as Bench/Verify: never drop spark-warehouse/ into
-      // the repo cwd
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-probe-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-probe")
 
     import graft.operators.{Dedup, Similarity}
 

@@ -253,7 +253,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, graft.operators.NgramIndex]()
 
   // committed fixture of real PNG/BMP bytes + draw-time ground truth
-  // (regenerate: sbt "runMain graft.tools.ImageFixture"); referenced by
+  // (regenerate: sbt "Test/runMain graft.tools.ImageFixture"); referenced by
   // both sides of q_multimodal_decode, so one definition. Resolved from
   // the repo root (sbt sets user.dir there) and overridable for any
   // harness that runs from elsewhere, so a checkout at a different path
@@ -261,12 +261,12 @@ object SparkEntry {
   private[graft] val imageFixturePath = graft.util.Fixtures.imagePath
 
   // committed fixture of real WAV/PCM bytes + synthesis-time ground
-  // truth (regenerate: sbt "runMain graft.tools.AudioFixture") — the
+  // truth (regenerate: sbt "Test/runMain graft.tools.AudioFixture") — the
   // audio counterpart of the image fixture, same resolution rules
   private[graft] val audioFixturePath = graft.util.Fixtures.audioPath
 
   // committed animated-GIF fixture + its per-frame truth table
-  // (regenerate: sbt "runMain graft.tools.GifFixture fixtures")
+  // (regenerate: sbt "Test/runMain graft.tools.GifFixture fixtures")
   private[graft] val gifFixturePath = graft.util.Fixtures.gifPath
   private[graft] val gifTruthPath = graft.util.Fixtures.gifTruthPath
   private[graft] val audioFramesTruthPath =

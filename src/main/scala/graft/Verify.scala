@@ -1,37 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // queries that persist bucketed index tables must never drop a
-      // spark-warehouse/ dir into the repo cwd
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-verify-warehouse")
-      // let AQE size CACHED-plan partitions by bytes (default false):
-      // iteration loops re-read persisted frames every round, and a
-      // vocabulary-sized cache materialized at the session's full
-      // shuffle width re-pays per-task fixed cost x width per job
-      // (measured: unigram trainer -30%, warm jaccard -20% from this
-      // alone). Scale-adaptive by construction — AQE's parallelism-
-      // first coalescing keeps corpus-sized caches at full width on a
-      // cluster; only byte-small caches narrow.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // same codegen-cache sizing as the bench session (Bench.scala) so
-      // correctness and plan dumps run the configuration that is timed
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     // local-iteration filter (comma-separated names); the driver leaves
     // it unset and dumps everything

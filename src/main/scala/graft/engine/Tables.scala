@@ -18,7 +18,7 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // events.ts is parquet TIMESTAMP(NANOS), which Spark 4 refuses to read
     // (PARQUET_TYPE_ILLEGAL) unless nanos are surfaced as long — sessions
-    // must set spark.sql.legacy.parquet.nanosAsLong=true (Verify/Bench do).
+    // must set spark.sql.legacy.parquet.nanosAsLong=true (GraftSession does).
     // We then restore a proper TimestampType column (µs precision).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
@@ -31,7 +31,7 @@ object Tables {
         df.schema("ts").dataType == TimestampNTZType)
       // generator emits timestamp[us] WITHOUT isAdjustedToUTC, which
       // Spark 4 infers as TIMESTAMP_NTZ — a type unix_micros/unix_millis
-      // reject. Sessions here pin spark.sql.session.timeZone=UTC, so the
+      // reject. GraftSession pins spark.sql.session.timeZone=UTC, so the
       // cast to TIMESTAMP (LTZ) interprets the naive wall-clock as UTC:
       // the exact instant DuckDB's epoch math assigns the same bytes.
       // Normalizing at the read keeps every downstream operator on one

@@ -155,7 +155,7 @@ object Multimodal {
     * once by full scale (32768 for 16-bit, 128 for 8-bit): an exact
     * integer sum of squares and three IEEE ops, bit-reproducible for
     * lossless PCM (the fixture oracle relies on this — see
-    * [[graft.tools.AudioFixture]]).
+    * `graft.tools.AudioFixture` in the test sources).
     *
     * Degrades to `decoded = false` instead of throwing on (a) payloads
     * the JDK cannot parse, (b) PCM layouts outside 16-bit-signed-LE /

@@ -23,11 +23,11 @@ object Fixtures {
     }
 
   /** `images.parquet` — real PNG/BMP/JPEG/GIF bytes + draw-time truth
-    * (regenerate: `sbt "runMain graft.tools.ImageFixture"`). */
+    * (regenerate: `sbt "Test/runMain graft.tools.ImageFixture"`). */
   def imagePath: String = new File(dir, "images.parquet").getAbsolutePath
 
   /** `audio.parquet` — real WAV/PCM bytes + synthesis-time truth
-    * (regenerate: `sbt "runMain graft.tools.AudioFixture"`). */
+    * (regenerate: `sbt "Test/runMain graft.tools.AudioFixture"`). */
   def audioPath: String = new File(dir, "audio.parquet").getAbsolutePath
 
   /** `audio_frames_truth.parquet` — one synthesis-time truth row per
@@ -36,7 +36,7 @@ object Fixtures {
     new File(dir, "audio_frames_truth.parquet").getAbsolutePath
 
   /** `gif.parquet` — real multi-frame animated GIFs (regenerate both
-    * with `sbt "runMain graft.tools.GifFixture"`). */
+    * with `sbt "Test/runMain graft.tools.GifFixture"`). */
   def gifPath: String = new File(dir, "gif.parquet").getAbsolutePath
 
   /** `gif_truth.parquet` — one draw-time truth row per (gif, frame). */
@@ -44,12 +44,12 @@ object Fixtures {
     new File(dir, "gif_truth.parquet").getAbsolutePath
 
   /** `video.parquet` — real MP4 (ISO-BMFF) containers (regenerate all
-    * three with `sbt "runMain graft.tools.VideoFixture"`). */
+    * three with `sbt "Test/runMain graft.tools.VideoFixture"`). */
   def videoPath: String = new File(dir, "video.parquet").getAbsolutePath
 
   /** `mjpeg.parquet` — real MP4 containers whose video samples are real
     * JPEG frames (regenerate both with
-    * `sbt "runMain graft.tools.MjpegFixture"`). */
+    * `sbt "Test/runMain graft.tools.MjpegFixture"`). */
   def mjpegPath: String = new File(dir, "mjpeg.parquet").getAbsolutePath
 
   /** `mjpeg_truth.parquet` — one generation-time truth row per
@@ -60,7 +60,7 @@ object Fixtures {
 
   /** `rawvideo.parquet` — real MP4 containers whose video samples are
     * uncompressed planar I420 frames (regenerate both with
-    * `sbt "runMain graft.tools.RawVideoFixture"`). */
+    * `sbt "Test/runMain graft.tools.RawVideoFixture"`). */
   def rawVideoPath: String =
     new File(dir, "rawvideo.parquet").getAbsolutePath
 

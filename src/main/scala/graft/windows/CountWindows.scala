@@ -22,7 +22,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *  2. Streaming `flatMapGroupsWithState` operators — true incremental
   *    per-key state; state size is O(1) for tumbling and O(size) for
   *    sliding per key, independent of stream length, so a 1000-executor
-  *    cluster holds state for billions of keys in the state store.
+  *    cluster holds state for billions of keys in the state store. They
+  *    run on either state store provider (the default HDFS-backed one or
+  *    RocksDB).
   */
 object CountWindows {
 
@@ -276,11 +278,6 @@ object CountWindows {
   case class WindowEmit(key: String, emitAtSeq: Long, result: Double,
                         values: Seq[Double], count: Long)
 
-  /** Shared by the flatMapGroupsWithState and transformWithState
-    * operators. */
-  private[windows] def applyFnPublic(fn: String, values: Seq[Double]): Double =
-    applyFn(fn, values)
-
   private def applyFn(fn: String, values: Seq[Double]): Double = fn match {
     case "sum"   => values.sum
     case "avg"   => if (values.isEmpty) 0.0 else values.sum / values.length
@@ -292,13 +289,11 @@ object CountWindows {
 
   case class TumblingState(buf: Vector[Double], lastSeq: Long)
 
-  /** Shared tumbling fold — the fMGWS operator AND the
-    * transformWithState processor both delegate here, for the same
-    * reason [[slidingFold]] exists: a cadence or high-water-mark fix
-    * must land once, not in two copies that can silently diverge.
-    * Arrival order within a micro-batch is not guaranteed → sort by
-    * seq; a seq at/below the high-water mark from a PRIOR batch
-    * violates the ordering contract and is dropped (see KeyedSample). */
+  /** One micro-batch of the tumbling fold for one key — the body of
+    * [[tumblingStream]]'s state function. Arrival order within a
+    * micro-batch is not guaranteed → sort by seq; a seq at/below the
+    * high-water mark from a PRIOR batch violates the ordering contract
+    * and is dropped (see KeyedSample). */
   private[windows] def tumblingFold(key: String, rows: Seq[KeyedSample],
                                     st0: TumblingState, size: Int,
                                     fn: String)
@@ -386,11 +381,9 @@ object CountWindows {
   case class SlidingState(ring: Vector[Double], nSeen: Long, sinceEmit: Long,
                           lastSeq: Long)
 
-  /** One micro-batch of the sliding fold — sort within the batch, drop
-    * below-HWM stragglers, ring/cadence update, emissions. Shared by the
-    * flatMapGroupsWithState and transformWithState operators so a
-    * cadence/contract fix can never diverge the two (the HWM fix
-    * originally had to land in both copies). */
+  /** One micro-batch of the sliding fold for one key — the body of
+    * [[slidingStream]]'s state function: sort within the batch, drop
+    * below-HWM stragglers, ring/cadence update, emissions. */
   private[windows] def slidingFold(key: String, rows: Seq[KeyedSample],
                                    st0: SlidingState, size: Int,
                                    resolution: Int, fn: String)

@@ -11,19 +11,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
-      s"/tmp/graft-warehouse-${java.util.UUID.randomUUID()}")
-    // same optimizer config as the Bench/Verify/Plans sessions (r18
-    // ADVICE): plan-shape assertions (PlanPropertiesSpec) and operator
-    // tests must exercise the configuration that is benched and shipped
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      "true")
-    .getOrCreate()
+  /** Unique per test JVM, so concurrent suites never share a warehouse. */
+  val name = s"graft-test-${java.util.UUID.randomUUID()}"
+  lazy val session: SparkSession = {
+    val s = GraftSession(name, 4)
+    // the warehouse lives under java.io.tmpdir (RAM-backed under sbt)
+    val warehouse = new org.apache.hadoop.fs.Path(
+      s.conf.get("spark.sql.warehouse.dir")).toUri.getPath
+    sys.addShutdownHook(
+      graft.util.FsUtil.deleteRecursively(java.nio.file.Paths.get(warehouse)))
+    s
+  }
 }

@@ -82,6 +82,6 @@ class RawVideoSpec extends SparkSpec {
       t.decoded, t.width, t.height, t.mean_pixel, t.raster_md5)).toSet
     assert(committed == generated,
       "committed rawvideo_truth.parquet is stale — regenerate with " +
-        "sbt \"runMain graft.tools.RawVideoFixture\"")
+        "sbt \"Test/runMain graft.tools.RawVideoFixture\"")
   }
 }

@@ -6,15 +6,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.types._
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 /** A keyed tumbling count window (the DSL's groupBy + `#aggregate`
   * tumbling stage over a file channel) is stopped after batch k and
   * restarted from its checkpoint alone. Its emitted rows must equal the
   * uninterrupted run's, whether the checkpoint was begun under Spark's
-  * default checkpoint manager or under the engine's. */
+  * default checkpoint manager or under the engine's, on the default
+  * (HDFS-backed) state store and on RocksDB. */
 class CountWindowRestartSpec extends SparkSpec {
 
   private val Key = "spark.sql.streaming.checkpointFileManagerClass"
+  private val StoreKey = "spark.sql.streaming.stateStore.providerClass"
+  private val Stores = Seq("HDFSBackedStateStoreProvider", "RocksDBStateStoreProvider")
+    .map("org.apache.spark.sql.execution.streaming.state." + _)
   private val Size = 3
 
   private val pipeline = Dsl.parseApp(
@@ -48,10 +53,12 @@ class CountWindowRestartSpec extends SparkSpec {
 
   /** Run `chunks` through one incarnation of the query on `session`:
     * push a chunk, drain it, repeat; then stop. Emitted rows are kept
-    * per batch id, so a re-run batch would replace, not duplicate. */
+    * per batch id, so a re-run batch would replace, not duplicate.
+    * Returns the state operator's custom metric names, which name the
+    * state store that ran. */
   private def incarnation(session: SparkSession, channel: String,
                           ckpt: String, chunks: Seq[Seq[String]],
-                          out: TrieMap[Long, Seq[String]]): Unit = {
+                          out: TrieMap[Long, Seq[String]]): Set[String] = {
     implicit val s: SparkSession = session
     val q = Pipelines.compileStream(pipeline, Channels.subscribe(channel, schema))
       .writeStream.option("checkpointLocation", ckpt)
@@ -59,8 +66,10 @@ class CountWindowRestartSpec extends SparkSpec {
         out.put(id, b.collect().map(_.mkString("|")).toSeq); ()
       }
       .start()
-    try chunks.foreach { c => Channels.push(channel, c); q.processAllAvailable() }
-    finally q.stop()
+    try {
+      chunks.foreach { c => Channels.push(channel, c); q.processAllAvailable() }
+      q.lastProgress.stateOperators.flatMap(_.customMetrics.keySet.asScala).toSet
+    } finally q.stop()
   }
 
   private def emitted(out: TrieMap[Long, Seq[String]]): Seq[String] =
@@ -77,19 +86,24 @@ class CountWindowRestartSpec extends SparkSpec {
       // 10, 9 and 9 events per user: three complete windows each
       assert(expected.size == 9, s"complete windows: $expected")
 
-      for (k <- 1 until chunks.size; fromDefault <- Seq(true, false)) {
-        val ch = s"k$k-$fromDefault"
+      for (k <- 1 until chunks.size; fromDefault <- Seq(true, false);
+           store <- Stores) {
+        val rocks = store.contains("RocksDB")
+        val ch = s"k$k-$fromDefault-$rocks"
         val ckpt = root.resolve(s"ckpt-$ch").toString
         val out = TrieMap.empty[Long, Seq[String]]
         val first = spark.newSession()
+        first.conf.set(StoreKey, store)
         if (fromDefault)
           first.conf.set(Key, classOf[FileContextBasedCheckpointFileManager].getName)
         incarnation(first, ch, ckpt, chunks.take(k), out)
         val second = spark.newSession()
-        incarnation(second, ch, ckpt, chunks.drop(k), out)
+        second.conf.set(StoreKey, store)
+        val metrics = incarnation(second, ch, ckpt, chunks.drop(k), out)
         assert(second.conf.get(Key) == classOf[LocalCheckpointFiles].getName)
+        assert(metrics.exists(_.startsWith("rocksdb")) == rocks, metrics)
         assert(emitted(out) == expected,
-          s"stopped after batch $k, first run under " +
+          s"stopped after batch $k on $store, first run under " +
             (if (fromDefault) "Spark's default manager" else "the engine's"))
       }
     } finally {

@@ -4,8 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
 
-import org.apache.spark.sql.SparkSession
-
 /** Generates `fixtures/audio.parquet`: small REAL WAV files (PCM, encoded
   * with the JDK's `javax.sound.sampled` — zero new dependencies) alongside
   * the ground-truth columns the audio-decode gate oracles against.
@@ -24,7 +22,7 @@ import org.apache.spark.sql.SparkSession
   * row-level failure contract (degrade, never throw).
   *
   * Run once, commit the parquet:
-  *   sbt "runMain graft.tools.AudioFixture fixtures/audio.parquet"
+  *   sbt "Test/runMain graft.tools.AudioFixture fixtures/audio.parquet"
   */
 object AudioFixture {
 
@@ -143,10 +141,7 @@ object AudioFixture {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("fixtures/audio.parquet")
     val framesOut = out.replace("audio.parquet", "audio_frames_truth.parquet")
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-fixtures")
     import spark.implicits._
     // one file, deterministic row order — a stable artifact to commit
     spark.createDataset(rows()).toDF().coalesce(1)

@@ -5,8 +5,6 @@ import java.io.ByteArrayOutputStream
 
 import javax.imageio.{IIOImage, ImageIO}
 
-import org.apache.spark.sql.SparkSession
-
 /** Generates `fixtures/gif.parquet` (payloads) and
   * `fixtures/gif_truth.parquet` (one row per frame): small REAL
   * multi-frame animated GIFs written with the JDK's `javax.imageio`
@@ -26,7 +24,7 @@ import org.apache.spark.sql.SparkSession
   * contract: zero frames emitted, never a throw.
   *
   * Run once, commit both parquets:
-  *   sbt "runMain graft.tools.GifFixture fixtures"
+  *   sbt "Test/runMain graft.tools.GifFixture fixtures"
   */
 object GifFixture {
 
@@ -122,10 +120,7 @@ object GifFixture {
             s"(${got.meanPixel} vs ${exp.expected_mean})")
       }
     }
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-fixtures")
     import spark.implicits._
     spark.createDataset(gifs).toDF().coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/gif.parquet")

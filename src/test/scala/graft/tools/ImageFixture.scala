@@ -3,8 +3,6 @@ package graft.tools
 import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.SparkSession
-
 /** Generates `fixtures/images.parquet`: small REAL images (PNG + BMP,
   * encoded with the JDK's `javax.imageio`) alongside the ground-truth
   * columns the decode gate oracles against.
@@ -22,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   * row-level failure contract (degrade, never throw).
   *
   * Run once, commit the parquet:
-  *   sbt "runMain graft.tools.ImageFixture fixtures/images.parquet"
+  *   sbt "Test/runMain graft.tools.ImageFixture fixtures/images.parquet"
   */
 object ImageFixture {
 
@@ -90,10 +88,7 @@ object ImageFixture {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("fixtures/images.parquet")
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-fixtures")
     import spark.implicits._
     // one file, deterministic row order — a stable artifact to commit
     spark.createDataset(rows()).toDF().coalesce(1)

@@ -3,8 +3,6 @@ package graft.tools
 import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.SparkSession
-
 import graft.tools.{VideoFixture => V}
 
 /** Generates `fixtures/mjpeg.parquet`: real MP4 (ISO-BMFF) containers
@@ -39,7 +37,7 @@ import graft.tools.{VideoFixture => V}
   *   - id 12: a valid file truncated at 60% (moov lost) — zero rows.
   *
   * Run once, commit the parquet:
-  *   sbt "runMain graft.tools.MjpegFixture fixtures/mjpeg.parquet"
+  *   sbt "Test/runMain graft.tools.MjpegFixture fixtures/mjpeg.parquet"
   */
 object MjpegFixture {
 
@@ -285,10 +283,7 @@ object MjpegFixture {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("fixtures/mjpeg.parquet")
     val truthOut = out.replace("mjpeg.parquet", "mjpeg_truth.parquet")
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-fixtures")
     import spark.implicits._
     val (rows, truth) = all()
     spark.createDataset(rows).toDF().coalesce(1)

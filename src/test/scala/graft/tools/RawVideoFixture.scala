@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.tools.{MjpegFixture => M}
 
 /** Generates `fixtures/rawvideo.parquet`: real MP4 (ISO-BMFF) containers
@@ -36,7 +34,7 @@ import graft.tools.{MjpegFixture => M}
   *   - id 9: not an MP4 (UTF-8 text) — zero rows, zero truth rows.
   *
   * Run once, commit the parquet:
-  *   sbt "runMain graft.tools.RawVideoFixture fixtures/rawvideo.parquet"
+  *   sbt "Test/runMain graft.tools.RawVideoFixture fixtures/rawvideo.parquet"
   */
 object RawVideoFixture {
 
@@ -195,10 +193,7 @@ object RawVideoFixture {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("fixtures/rawvideo.parquet")
     val truthOut = out.replace("rawvideo.parquet", "rawvideo_truth.parquet")
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-fixtures")
     import spark.implicits._
     val (rows, truth) = all()
     spark.createDataset(rows).toDF().coalesce(1)

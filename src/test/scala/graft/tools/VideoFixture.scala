@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Generates `fixtures/video.parquet`: small REAL MP4 (ISO-BMFF)
   * containers written box-by-box per ISO/IEC 14496-12 — ftyp, mdat, and
   * a moov with per-track tkhd/mdhd/hdlr and full sample tables
@@ -32,7 +30,7 @@ import org.apache.spark.sql.SparkSession
   *     surfaces.
   *
   * Run once, commit the parquet:
-  *   sbt "runMain graft.tools.VideoFixture fixtures/video.parquet"
+  *   sbt "Test/runMain graft.tools.VideoFixture fixtures/video.parquet"
   */
 object VideoFixture {
 
@@ -306,10 +304,7 @@ object VideoFixture {
     val out = args.headOption.getOrElse("fixtures/video.parquet")
     val tracksOut = out.replace("video.parquet", "video_tracks_truth.parquet")
     val samplesOut = out.replace("video.parquet", "video_samples_truth.parquet")
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-fixtures")
     import spark.implicits._
     val (rows, tracks, samples) = all()
     spark.createDataset(rows).toDF().coalesce(1)
