@@ -442,52 +442,30 @@ object Bench {
       require(failedQs.isEmpty,
         s"refusing to record a baseline with failed queries: " +
           failedQs.mkString(", "))
-      // SPARK_GRAFT_RECORD_MERGE=max folds this run into an EXISTING
-      // baseline elementwise-max instead of replacing it. One run's
-      // medians are one draw from a host whose neighbors are invisible
-      // (back-to-back identical full-suite runs here measured 47 s vs
-      // 61 s totals with BOTH clocks moving — external CPU steal that
-      // no wall/task split can classify); the merged envelope means "a
-      // flag = slower than the slowest quiet-ish recording ever
-      // observed, by the gate margin", which is the phantom-rate the
-      // per-round judge re-runs were paying for. gc_ms rides along for
-      // forensics; queries new to the baseline enter at this run's
-      // numbers.
-      val merge = sys.env.get("SPARK_GRAFT_RECORD_MERGE").contains("max")
       val recorded = results.map { case (k, (m, d, tm, g, _)) =>
-        baseline.get(k) match {
-          case Some((bm, bd, btm)) if merge =>
-            // gc_ms gets the same elementwise-max envelope semantics —
-            // overwriting it with the current run's value silently
-            // dropped the baseline's recorded GC time (r11 advice)
-            (k, (math.max(m, bm), math.max(d, bd), math.max(tm, btm),
-              math.max(g, baselineGc.getOrElse(k, 0.0))))
-          case _ => (k, (m, d, tm, g))
-        }
-      }
+        (k, (m, d, tm, g)) }
       // ANY record run with SPARK_GRAFT_ONLY must carry the UNTOUCHED
-      // baseline entries through, or a single-query fold-in silently
-      // truncates the whole envelope to that query (observed: 110 -> 1
-      // on a merge run in r12, and again 149 -> 3 on a plain filtered
-      // record in r15 — the carry now applies to both modes; a plain
-      // UNFILTERED record still replaces the file wholesale)
+      // baseline entries through, or a single-query record silently
+      // truncates the whole envelope to that query (observed: 149 -> 3
+      // on a filtered record in r15); an UNFILTERED record replaces the
+      // file wholesale
       val carried =
-        if (merge || only.isDefined) baseline.view
+        if (only.isDefined) baseline.view
           .filterKeys(k => !results.exists(_._1 == k))
           .map { case (k, (bm, bd, btm)) =>
             (k, (bm, bd, btm, baselineGc.getOrElse(k, 0.0))) }.toSeq
         else Seq.empty
-      // the calibration references recorded alongside: the quietest
-      // loop times ever observed at record time (min-merge — for a
+      // the calibration references recorded alongside; a filtered record
+      // keeps the quietest loop times observed at record time (for a
       // "how fast CAN this host run" reference, slower recordings are
       // noise, not envelope)
       val calEntry = Seq(
         ("__calibration",
-          (if ((merge || only.isDefined) && baseCalRecorded > 0)
+          (if (only.isDefined && baseCalRecorded > 0)
             math.min(calBase, baseCalRecorded)
           else calBase, 0.0, -1.0, 0.0)),
         ("__calibration_mt",
-          (if ((merge || only.isDefined) && baseCalMtRecorded > 0)
+          (if (only.isDefined && baseCalMtRecorded > 0)
             math.min(calMtBase, baseCalMtRecorded)
           else calMtBase, 0.0, -1.0, 0.0)))
       val merged = recorded ++ carried ++ calEntry
@@ -495,8 +473,7 @@ object Bench {
         s"""  "$k": {"median": $m, "mad": $d, "task_ms": $tm, "gc_ms": $g}""" }
         .mkString("{\n", ",\n", "\n}\n")
       java.nio.file.Files.writeString(basePath, body)
-      System.err.println(s"[bench] recorded baseline -> $basePath" +
-        (if (merge) " (merged max)" else ""))
+      System.err.println(s"[bench] recorded baseline -> $basePath")
     }
     // a run with ANY failed query has no meaningful total: summing only
     // the survivors would report a LOWER total when an expensive query

@@ -420,8 +420,8 @@ object ScaleProbe {
         s""""files_after":$filesAfter,""" +
         s""""probe_after_s":${"%.3f".format(probeAfter)}}"""
     } finally {
-      Similarity.dropIvfIndex(spark, idx)
-      if (out != null) Similarity.dropIvfIndex(spark, out)
+      idx.drop(spark)
+      if (out != null) out.drop(spark)
     }
   }
 
@@ -1300,29 +1300,14 @@ object ScaleProbe {
       // the per-scale index is corpus-sized on disk — drop it before
       // the next decade (a 50x sweep would otherwise accrete ~85x the
       // corpus in /tmp)
-      if (incIdx != null) {
-        spark.sql(s"DROP TABLE IF EXISTS ${incIdx.bandsTable}")
-        spark.sql(s"DROP TABLE IF EXISTS ${incIdx.shinglesTable}")
-        graft.util.FsUtil.deleteRecursively(
-          java.nio.file.Paths.get(incIdx.path))
-      }
-      if (ivfIdx != null) {
-        spark.sql(s"DROP TABLE IF EXISTS ${ivfIdx.corpusTable}")
-        spark.sql(s"DROP TABLE IF EXISTS ${ivfIdx.centroidsTable}")
-        graft.util.FsUtil.deleteRecursively(
-          java.nio.file.Paths.get(ivfIdx.path))
-      }
-      if (embIncIdx != null) {
-        spark.sql(s"DROP TABLE IF EXISTS ${embIncIdx.bandsTable}")
-        spark.sql(s"DROP TABLE IF EXISTS ${embIncIdx.vectorsTable}")
-        graft.util.FsUtil.deleteRecursively(
-          java.nio.file.Paths.get(embIncIdx.path))
-      }
-      if (ivfPqIdx != null) Similarity.dropIvfPqIndex(spark, ivfPqIdx)
-      if (chunkIdx != null) operators.Chunking.dropChunkIndex(spark, chunkIdx)
-      if (lineIdx != null) Dedup.dropLineIndex(spark, lineIdx)
-      if (spanIdx != null) Dedup.dropSpanIndex(spark, spanIdx)
-      if (ngIdx != null) operators.CorpusStats.dropNgramIndex(spark, ngIdx)
+      if (incIdx != null) incIdx.drop(spark)
+      if (ivfIdx != null) ivfIdx.drop(spark)
+      if (embIncIdx != null) embIncIdx.drop(spark)
+      if (ivfPqIdx != null) ivfPqIdx.drop(spark)
+      if (chunkIdx != null) chunkIdx.drop(spark)
+      if (lineIdx != null) lineIdx.drop(spark)
+      if (spanIdx != null) spanIdx.drop(spark)
+      if (ngIdx != null) ngIdx.drop(spark)
       val ngramAbJson =
         if (wanted("ngram_ab")) "," + ngramShuffleAbProbe(spark, docs, sfDir)
         else ""

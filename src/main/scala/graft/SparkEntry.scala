@@ -1,324 +1,36 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.engine.{Dsl, Pipelines, Tables}
-import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
-import graft.operators.{Chunking, Clustering, Contamination, Dedup, Multimodal, Similarity}
-import graft.windows.{AggFunctions, CountWindows, TimeWindows}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.gates._
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2 (+ the LLM-pipeline extensions), with a DuckDB-equivalent
-  * `oracleSql` for every SQL-expressible one. Column names and row ordering
-  * are aligned between both sides; every double produced by arithmetic is
-  * rounded identically on both sides.
+/** Driver contract — one gate per implemented operator from SURVEY.md §2
+  * (+ the LLM-pipeline extensions). Each gate is one [[gates.Gate]] in
+  * its family file under `graft/gates/`; `queries` and `oracleSql` are
+  * derived from that one registry.
   */
 object SparkEntry {
+
+  /** Every gate, family by family. */
+  val gates: Seq[Gate] = Seq(
+    EngineGates.gates, FilterGates.gates, AggregationGates.gates,
+    CountWindowGates.gates, TimeWindowGates.gates, ChannelGates.gates,
+    JoinGates.gates, TextGates.gates, DedupGates.gates,
+    SimilarityGates.gates, PipelineGates.gates, MultimodalGates.gates
+  ).flatten
+  require(gates.map(_.name).distinct.size == gates.size,
+    "duplicate gate names: " +
+      gates.groupBy(_.name).collect { case (n, gs) if gs.size > 1 => n })
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.spark).toMap
+
+  val oracleSql: Map[String, String] =
+    gates.map(g => g.name -> g.oracleSql).toMap
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_groupby_agg")(spark, "/root/testdata/sf0.001")
 
-  // ----------------------------------------------------------------------
-  // helpers
-  // ----------------------------------------------------------------------
-
-  private def ev(s: SparkSession, d: String): DataFrame = Tables.events(s, d)
-  private def li(s: SparkSession, d: String): DataFrame = Tables.lineitem(s, d)
-  private def docs(s: SparkSession, d: String): DataFrame = Tables.documents(s, d)
-
-  /** Documents with a unique md5 island spliced in at char 61 — the
-    * q_dedup_spans/_cut fixture derivation (pool-word fixture text
-    * repeats almost everywhere, so without the island every doc would
-    * be one full-length span and the interval merge would never branch;
-    * the oracle's `t2` CTE derives the same bytes). */
-  private def islandDocs(dn: DataFrame): DataFrame =
-    dn.select(col("doc_id"),
-      concat(col("text").substr(lit(1), lit(60)), lit("["),
-        md5(concat(lit("u"), col("doc_id").cast("string")).cast("binary")),
-        lit("]"), col("text").substr(lit(61), length(col("text"))))
-        .as("text"))
-
-  // 31^j mod 2^20 for j < 16 — the CDC gear-polynomial constants shared
-  // by the q_cdc_* oracles (Chunking.cdcChunks inlines the same values)
-  private val cdcPows: Seq[Long] =
-    Iterator.iterate(1L)(x => x * 31 % (1L << 20)).take(16).toSeq
-
-  /** DuckDB replay of Subword.trainBpeMerges FOLLOWED BY the apply of
-    * the learned rules — the gate compares per-document piece totals
-    * (the q_bpe_encode pattern), not the rule strings. `n` unrolled
-    * rounds, each a pair-count CTE + 1-row argmax + a merge
-    * application; the word frame travels as token LISTS carrying the
-    * word identity so the final segmentation joins back to per-doc
-    * word counts. Applying the data-dependent merge uses a
-    * delimited-string `replace` (chr(31) boundaries — absent from the
-    * printable-ASCII corpus), whose left-to-right non-overlapping
-    * semantics equal the Spark side's fold.
-    *
-    * The comparison shape is the hardening: r11 and r12 both came back
-    * driver-hash-red on a rule-STRING output while local DuckDB
-    * replays passed bit-exact (r11's cause was version-shifted list
-    * surfaces; r12's remaining candidate is value RENDERING — e.g.
-    * DuckDB's `sum()` returns HUGEINT, which some duckdb/pandas
-    * combinations surface as float). Per-doc BIGINT totals of the
-    * applied segmentation have no strings and no uncast aggregates in
-    * the output, yet still pin the learned rules: a divergence in any
-    * round's argmax changes the segmentation of every word containing
-    * that pair and with it the totals. Measured at sf0.01, every
-    * round's argmax wins by a strictly positive count margin
-    * (7..1808), so the (l, r) collation tie-break never engages and
-    * the learned rules are a pure function of integer counts — no
-    * engine-collation surface remains. Pair extraction is a lateral
-    * `unnest(range(...))` + 1-based `list_extract` (the shape every
-    * passing q_cdc_* oracle uses), characters come from
-    * `list_transform(range, substr)`, and the outer delimiters are
-    * stripped with arithmetic `substr`, never `trim`. */
-  private def bpeOracleSql(n: Int): String = {
-    val us = "chr(31)"
-    val rounds = (1 to n).map { r =>
-      s"""p$r AS (
-         |  SELECT list_extract(tk, u.i) AS l, list_extract(tk, u.i + 1) AS r,
-         |         sum(c)::BIGINT AS n
-         |  FROM w$r, unnest(range(1, len(tk))) AS u(i)
-         |  GROUP BY 1, 2),
-         |b$r AS (SELECT l, r FROM p$r ORDER BY n DESC, l, r LIMIT 1),
-         |w${r + 1} AS (
-         |  SELECT w, string_split(substr(s1, 2, length(s1) - 2), $us||$us)
-         |           AS tk, c
-         |  FROM (SELECT w, replace($us || array_to_string(tk, $us||$us) || $us,
-         |                       $us || b.l || $us || $us || b.r || $us,
-         |                       $us || b.l || b.r || $us) AS s1, c
-         |        FROM w$r, b$r AS b))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $tokCte,
-       |wdc AS (SELECT doc_id, w, count(*)::BIGINT AS c2
-       |        FROM (SELECT doc_id, unnest(tk) AS w FROM t)
-       |        GROUP BY doc_id, w),
-       |w1 AS (
-       |  SELECT w, list_transform(range(1, length(w) + 1),
-       |                           i -> substr(w, i, 1)) AS tk, c
-       |  FROM (SELECT w, sum(c2)::BIGINT AS c FROM wdc GROUP BY w)),
-       |$rounds
-       |SELECT doc_id AS doc, sum(c2 * len(tk))::BIGINT AS n_pieces
-       |FROM wdc JOIN w${n + 1} USING (w)
-       |GROUP BY doc_id ORDER BY doc""".stripMargin
-  }
-
-  /** The fixed merge list the q_bpe_encode / q_bpe_freq gates apply —
-    * includes composing rules (th+e, er+s, an+d) so the gates witness
-    * rank-order application, not just independent merges. */
-  private val bpeGateMerges: Seq[(String, String)] = Seq(
-    ("e", "r"), ("i", "n"), ("o", "w"), ("t", "h"),
-    ("th", "e"), ("er", "s"), ("a", "n"), ("an", "d"))
-
-  /** DuckDB expression: the final BPE piece list of word column `w`
-    * under [[bpeGateMerges]] — characters joined with chr(31) bounds,
-    * each merge a nested left-to-right `replace`, split back at the
-    * end (the same delimited-replace equivalence bpeOracleSql uses). */
-  private def bpeApplySql: String = {
-    def q(s: String) = "'" + s.replace("'", "''") + "'"
-    val us = "chr(31)"
-    val init =
-      s"$us || array_to_string([ch for ch in string_split(w, '')], " +
-        s"$us||$us) || $us"
-    val folded = bpeGateMerges.foldLeft(init) { case (acc, (l, r)) =>
-      s"replace($acc,\n           $us || ${q(l)} || $us || $us || " +
-        s"${q(r)} || $us,\n           $us || ${q(l + r)} || $us)"
-    }
-    s"list_filter(string_split(trim($folded, chr(31)), $us||$us), " +
-      "x -> x <> '')"
-  }
-
-  /** DuckDB replay of Chunking.cdcChunks over `src` (any relation with
-    * doc_id + text): yields (doc_id, chunk, start, len, chunk_hash).
-    * One definition for every q_cdc_* / q_chunk_* oracle.
-    *
-    * LINEAR row form (the zip-unnest discipline every heavy replay
-    * follows): one row per character, the gear polynomial as sixteen
-    * `lag` terms in ONE window pass, boundary flags folded to chunk ids
-    * by a running sum, chunk text rebuilt by ordered `string_agg`. The
-    * per-position list-comprehension + per-chunk `substr(text, start)`
-    * form it replaces was O(n·w) interpreted lambda steps plus an
-    * O(n²/divisor) head re-scan per document — 28 s at the 300 k-char
-    * sweep and unusable at the 10 MB one; this form is ~0.6 s and
-    * ~12 s respectively, and the per-gate budget stays under a minute.
-    * Empty (non-null) text has no char rows, so its single empty chunk
-    * comes from the UNION'd n = 0 branch. */
-  private def cdcChunksSql(src: String): String = {
-    val lagSum = cdcPows.zipWithIndex.map { case (p, j) =>
-      if (j == 0) s"code * $p"
-      else s"coalesce(lag(code, $j) OVER w, 0) * $p"
-    }.mkString(" + ")
-    s"""(WITH __c AS (
-       |  SELECT doc_id, length(text) AS n, string_split(text, '') AS chs
-       |  FROM $src WHERE text IS NOT NULL),
-       |__p AS (
-       |  SELECT doc_id, n, unnest(range(1, n + 1)) AS p, unnest(chs) AS ch
-       |  FROM __c),
-       |__h AS (
-       |  SELECT doc_id, p, ch,
-       |         CASE WHEN p >= 16 AND p < n
-       |              THEN ($lagSum) % 1048576 % 64 = 13
-       |              ELSE false END AS is_bnd
-       |  FROM (SELECT doc_id, n, p, ch, unicode(ch)::BIGINT AS code
-       |        FROM __p)
-       |  WINDOW w AS (PARTITION BY doc_id ORDER BY p)),
-       |__a AS (
-       |  SELECT doc_id, p, ch,
-       |         coalesce(sum(CASE WHEN is_bnd THEN 1 ELSE 0 END)
-       |           OVER (PARTITION BY doc_id ORDER BY p
-       |                 ROWS BETWEEN UNBOUNDED PRECEDING
-       |                          AND 1 PRECEDING), 0) AS chunk
-       |  FROM __h)
-       |SELECT doc_id, chunk::BIGINT AS chunk, min(p)::BIGINT AS start,
-       |       count(*)::BIGINT AS len,
-       |       md5(string_agg(ch, '' ORDER BY p)) AS chunk_hash
-       |FROM __a GROUP BY doc_id, chunk
-       |UNION ALL
-       |SELECT doc_id, 0::BIGINT, 1::BIGINT, 0::BIGINT, md5('')
-       |FROM __c WHERE n = 0)""".stripMargin
-  }
-  /** The corpus/delta/snapshot replays chunk row-SUBSETS of
-    * `documents` (chunking is per-document, so a subset's chunks are a
-    * subset of the whole table's chunks): chunk the whole table ONCE
-    * as a MATERIALIZED CTE and derive each side by id filter/shift.
-    * Explicit MATERIALIZED because DuckDB 1.0 inlines CTEs — two
-    * references would run the full char-level pass twice. */
-  private val allChunksCte =
-    s"allch AS MATERIALIZED (SELECT * FROM ${cdcChunksSql("documents")})"
-
-  private def emb(s: SparkSession, d: String): DataFrame = Tables.embeddings(s, d)
-
-  /** The DoReMi gates' corpus: documents plus a deterministically
-    * TRANSLATED 'synth' domain (vowels → digits over docs with id <
-    * 150, re-keyed +500000) — the fixture corpus is homogeneous
-    * (every source shares one vocabulary), so without a genuinely
-    * distinct domain every excess loss is zero and the MW loop would
-    * be degenerate. Replayed verbatim in the oracle's `corp` CTE. */
-  private def doremiCorpus(s: SparkSession, d: String): DataFrame = {
-    val all = docs(s, d)
-    all.select(col("doc_id"), col("source"), col("text"))
-      .unionAll(all.where(col("doc_id") < 150)
-        .select((col("doc_id") + 500000).as("doc_id"),
-          lit("synth").as("source"),
-          translate(col("text"), "aeiou", "01234").as("text")))
-  }
-
-  /** Memoized DoReMi learning per (session, sf-dir) — q_doremi_weights
-    * and q_doremi_mixture consume the SAME learned frame (review
-    * finding: the mixture gate used to re-run the two held-out scoring
-    * passes the weights gate had just paid for; the ssjCache
-    * discipline). Rows: (source, n_docs, lg, lo, ex, w, alpha). */
-  private val doremiCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, Long, Long, Long, Long, Long, Long)]]()
-  private def doremiLearned(s: SparkSession, d: String)
-      : Seq[(String, Long, Long, Long, Long, Long, Long)] =
-    doremiCache.computeIfAbsent(idxTag(s, d), _ => {
-      val aug = doremiCorpus(s, d)
-      graft.operators.Selection.doremiWeights(
-          aug.where(col("doc_id") % 3 =!= 0),
-          aug.where(col("doc_id") % 3 === 0), "doc_id", "text", "source",
-          rounds = 4, eta = 0.5, smoothMicro = 200000L)
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
-        .toSeq
-    })
-
-  // one persisted dedup / IVF index per (session, sf-dir) — see
-  // q_dedup_incremental's comment; table names and paths carry the same
-  // key so a second sf-dir can never overwrite a cached handle's tables
-  private val incIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.operators.DedupIndex]()
-  private val ivfIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.operators.IvfIndex]()
-  private val embIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.operators.EmbeddingIndex]()
-  private val exactIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.operators.ExactIndex]()
-  // built-on-subset-then-folded variant (q_knn_ivf_extended): separate
-  // cache from ivfIdxCache because the fold MUTATES the corpus table —
-  // sharing a handle would double-fold on interleaved invocations
-  private val extIvfIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.operators.IvfIndex]()
-  private val ivfPqIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.operators.IvfPqIndex]()
-  private val chunkIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.operators.ChunkIndex]()
-  private val lineIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.operators.LineIndex]()
-  private val spanIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.operators.SpanIndex]()
-  private val ngramIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.operators.NgramIndex]()
-
-  // committed fixture of real PNG/BMP bytes + draw-time ground truth
-  // (regenerate: sbt "Test/runMain graft.tools.ImageFixture"); referenced by
-  // both sides of q_multimodal_decode, so one definition. Resolved from
-  // the repo root (sbt sets user.dir there) and overridable for any
-  // harness that runs from elsewhere, so a checkout at a different path
-  // still finds the committed parquet.
-  private[graft] val imageFixturePath = graft.util.Fixtures.imagePath
-
-  // committed fixture of real WAV/PCM bytes + synthesis-time ground
-  // truth (regenerate: sbt "Test/runMain graft.tools.AudioFixture") — the
-  // audio counterpart of the image fixture, same resolution rules
-  private[graft] val audioFixturePath = graft.util.Fixtures.audioPath
-
-  // committed animated-GIF fixture + its per-frame truth table
-  // (regenerate: sbt "Test/runMain graft.tools.GifFixture fixtures")
-  private[graft] val gifFixturePath = graft.util.Fixtures.gifPath
-  private[graft] val gifTruthPath = graft.util.Fixtures.gifTruthPath
-  private[graft] val audioFramesTruthPath =
-    graft.util.Fixtures.audioFramesTruthPath
-  private[graft] val videoFixturePath = graft.util.Fixtures.videoPath
-  private[graft] val mjpegFixturePath = graft.util.Fixtures.mjpegPath
-  private[graft] val rawVideoFixturePath = graft.util.Fixtures.rawVideoPath
-  private[graft] val mjpegTruthPath = graft.util.Fixtures.mjpegTruthPath
-  private[graft] val rawVideoTruthPath = graft.util.Fixtures.rawVideoTruthPath
-  private[graft] val videoTracksTruthPath =
-    graft.util.Fixtures.videoTracksTruthPath
-  private[graft] val videoSamplesTruthPath =
-    graft.util.Fixtures.videoSamplesTruthPath
-
-  // the sanitation rule is load-bearing for table-name collision safety
-  // — one definition, used by every index-backed gate
-  private def idxTag(s: SparkSession, d: String): String =
-    (s.sparkContext.applicationId + "_" + d).replaceAll("[^A-Za-z0-9]", "_")
-
-  // ONE full-outer stream-stream replay serves all four join-type
-  // gates (r15 judge item: the four near-identical chunked replays
-  // were ~34 s of a 105 s suite). Soundness of the projection split:
-  // the full-outer emission set is matched ∪ left-evicted ∪
-  // right-evicted; matches are identical across join types and each
-  // side's null-padded eviction rows obey that side's bound
-  // INDEPENDENTLY of join type, so inner = both ids non-null, left =
-  // l_id non-null, right = r_id non-null — exact, because event_id is
-  // never null (the only nullable replay column is the key, and
-  // null-key rows surface as eviction rows with their side's id set).
-  // Each gate keeps its OWN independent DuckDB oracle derivation, and
-  // StreamingJoinsSpec still drives every joinType through the real
-  // streaming plan. Memoized per (session, sf-dir) like the index
-  // gates; result is small (pairs + evictions), persisted in memory.
-  private val ssjCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def ssjReplay(s: SparkSession, d: String,
-                        joinType: String): DataFrame =
-    ssjCache.computeIfAbsent(joinType + "|" + idxTag(s, d), _ => {
-      implicit val ss: SparkSession = s
-      val e = ev(s, d)
-      val chunk = graft.streaming.ReplayChunks.byTime(e, "ts", 4)
-      val out = graft.streaming.StreamingJoins.intervalJoinReplay(
-          e.where(col("event_type") === "click"),
-          e.where(col("event_type") === "purchase"),
-          "ts", "user_id", "event_id", chunk, 4, "1 hour", "2 hours",
-          joinType = joinType)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count() // materialize once, inside the compute
-      out
-    })
-  private def ssjFullReplay(s: SparkSession, d: String): DataFrame =
-    ssjReplay(s, d, "full_outer")
   /** Bench warm-up hook: pre-fill the shared replays so the timed
     * gates measure their steady-state projections (the established
     * index-gate discipline — warm-up wall is reported separately).
@@ -327,8 +39,8 @@ object SparkEntry {
     * plan — r16 ADVICE: keep a second join-type code path live in
     * Verify, not just in StreamingJoinsSpec). */
   def warmStreamJoinReplay(s: SparkSession, d: String): Unit = {
-    ssjFullReplay(s, d)
-    ssjReplay(s, d, "left_outer")
+    GateSupport.ssjFullReplay(s, d)
+    GateSupport.ssjReplay(s, d, "left_outer")
     ()
   }
 
@@ -336,7293 +48,6 @@ object SparkEntry {
     * directory, then forget the handles. Verify/Bench call this before
     * `spark.stop()` so harness processes never orphan corpus-sized
     * index directories under java.io.tmpdir. */
-  def dropCachedIndexes(spark: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    incIdxCache.values.asScala.foreach(
-      graft.operators.Dedup.dropIndex(spark, _))
-    (ivfIdxCache.values.asScala ++ extIvfIdxCache.values.asScala).foreach(
-      graft.operators.Similarity.dropIvfIndex(spark, _))
-    embIdxCache.values.asScala.foreach(
-      graft.operators.Dedup.dropEmbeddingIndex(spark, _))
-    exactIdxCache.values.asScala.foreach(
-      graft.operators.Dedup.dropExactIndex(spark, _))
-    ivfPqIdxCache.values.asScala.foreach(
-      graft.operators.Similarity.dropIvfPqIndex(spark, _))
-    chunkIdxCache.values.asScala.foreach(
-      graft.operators.Chunking.dropChunkIndex(spark, _))
-    lineIdxCache.values.asScala.foreach(
-      graft.operators.Dedup.dropLineIndex(spark, _))
-    spanIdxCache.values.asScala.foreach(
-      graft.operators.Dedup.dropSpanIndex(spark, _))
-    ngramIdxCache.values.asScala.foreach(
-      graft.operators.CorpusStats.dropNgramIndex(spark, _))
-    Seq(incIdxCache, ivfIdxCache, extIvfIdxCache, embIdxCache,
-      exactIdxCache, ivfPqIdxCache, chunkIdxCache, lineIdxCache)
-      .foreach(_.clear())
-    spanIdxCache.clear()
-    ngramIdxCache.clear()
-    ssjCache.values.asScala.foreach(df => { df.unpersist(); () })
-    ssjCache.clear()
-  }
-
-  // orphan guard for every OTHER consumer (specs, shell probes, a
-  // harness that dies mid-run): at JVM exit, delete the cached handles'
-  // backing directories. File-only (no Spark calls — the session and
-  // its in-memory catalog are already dying with the JVM), best-effort
-  // by FsUtil contract.
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import scala.jdk.CollectionConverters._
-      (incIdxCache.values.asScala.map(_.path) ++
-        ivfIdxCache.values.asScala.map(_.path) ++
-        extIvfIdxCache.values.asScala.map(_.path) ++
-        embIdxCache.values.asScala.map(_.path) ++
-        exactIdxCache.values.asScala.map(_.path) ++
-        ivfPqIdxCache.values.asScala.map(_.path) ++
-        chunkIdxCache.values.asScala.map(_.path) ++
-        lineIdxCache.values.asScala.map(_.path) ++
-        spanIdxCache.values.asScala.map(_.path) ++
-        ngramIdxCache.values.asScala.map(_.path))
-        .foreach(p => graft.util.FsUtil.deleteRecursively(
-          java.nio.file.Paths.get(p)))
-    }, "graft-index-cleanup"))
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- engine-level: pipeline chain, mappers, expression language ----
-
-    // E1/E2/E3: stage chain = filter -> projection -> aggregate
-    "q_pipeline_chain" -> ((s, d) =>
-      li(s, d)
-        .where(col("l_quantity") > 10)
-        .select(col("l_returnflag"),
-          (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("rev"))
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"), round(sum(col("rev")), 2).as("revenue"))
-        .orderBy("l_returnflag")),
-
-    // E4: expression language (string + arithmetic mapper)
-    "q_expr_mapper" -> ((s, d) =>
-      Tables.orders(s, d)
-        .select(col("o_orderkey"),
-          concat(lit("order-"), col("o_orderstatus")).as("tag"),
-          // round to 4: price*0.9 has exactly 3 decimal digits, so 4-decimal
-          // rounding has no ties (2 decimals hits exact half-cents, where
-          // DuckDB's decimal-aware rounding differs from double HALF_UP)
-          round(col("o_totalprice") * 0.9, 4).as("discounted"))
-        .orderBy("o_orderkey")),
-
-    // E4 bonus: JSON field extraction in the mapper
-    "q_expr_json" -> ((s, d) =>
-      ev(s, d)
-        .select(col("event_id"),
-          get_json_object(col("props"), "$.k").cast("int").as("k"))
-        .orderBy("event_id")),
-
-    // E4 breadth: the extended flogo function surface routed through
-    // Dsl.translate itself (not hand-built columns), pinning the
-    // argument-convention adaptations — 0-based substring, literal
-    // (non-regex) split, 0-based/-1-absent indexOf — against DuckDB
-    "q_expr_functions" -> ((s, d) =>
-      docs(s, d).selectExpr(
-        Dsl.translate("=$.doc_id") + " AS doc_id",
-        Dsl.translate("=string.substring($.text, 0, 10)") + " AS head10",
-        Dsl.translate("=string.indexOf($.text, 'the')") + " AS idx_the",
-        Dsl.translate("=string.endsWith($.source, '1')") + " AS src1",
-        Dsl.translate("=array.length(string.split($.text, ' '))")
-          + " AS n_parts",
-        Dsl.translate("=math.ceil(number.round($.doc_id / 7.0, 1))")
-          + " AS bucket7")
-        .orderBy("doc_id")),
-
-    // ---- filter activity (P1) ----
-
-    // mapper zeroes out large values, non-zero filter drops them
-    "q_filter_nonzero" -> ((s, d) =>
-      ev(s, d)
-        .select(col("event_id"),
-          when(col("value") > 50, lit(0.0)).otherwise(col("value")).as("v"))
-        .where(col("v") =!= 0.0)
-        .orderBy("event_id")),
-
-    // vector form: keep vectors with any non-zero element
-    "q_filter_nonzero_vec" -> ((s, d) =>
-      emb(s, d)
-        .where(!VF.allZero(col("embedding")))
-        .select(col("vec_id"))
-        .orderBy("vec_id")),
-
-    // ---- aggregation functions F1-F6 ----
-
-    "q_groupby_agg" -> ((s, d) =>
-      li(s, d)
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(round(sum("l_quantity"), 4).as("sum_qty"),
-          round(avg("l_quantity"), 4).as("avg_qty"),
-          round(min("l_quantity"), 4).as("min_qty"),
-          round(max("l_quantity"), 4).as("max_qty"),
-          count(lit(1)).as("n"))
-        .orderBy("l_returnflag", "l_linestatus")),
-
-    // F6 accumulate: order-preserving collect per key. The array is
-    // serialized to a fixed-point CSV string (decimal(18,4) keeps trailing
-    // zeros identically in Spark and DuckDB) because the driver's pandas
-    // compare cannot hash array-typed columns.
-    "q_accumulate" -> ((s, d) =>
-      ev(s, d)
-        .groupBy("user_id")
-        .agg(AggFunctions.scalar("accumulate", col("value"), col("event_id"))
-          .as("vals_arr"))
-        .select(col("user_id"),
-          concat_ws(",", transform(col("vals_arr"),
-            x => round(x, 4).cast("decimal(18,4)").cast("string"))).as("vals"))
-        .orderBy("user_id")),
-
-    // W5 keyed variant: per-key aggregation (nameKey=event_type)
-    "q_keyed_agg" -> ((s, d) =>
-      ev(s, d)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), round(avg("value"), 4).as("avg_value"))
-        .orderBy("event_type")),
-
-    // E5 groupBy discriminator: per-key partitioned state
-    "q_groupby_state" -> ((s, d) =>
-      ev(s, d)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sv"))
-        .orderBy("user_id")),
-
-    // vector element-wise aggregation (F1/F2 vector forms)
-    "q_vector_agg" -> ((s, d) => {
-      val v = emb(s, d).withColumn("v", col("embedding").cast("array<double>"))
-      v.groupBy("label")
-        .agg(AggFunctions.vector("sum", col("v")).as("vs"),
-          AggFunctions.vector("avg", col("v")).as("va"))
-        .select(col("label"), posexplode(arrays_zip(col("vs"), col("va"))))
-        .select(col("label"), (col("pos") + 1).cast("bigint").as("idx"),
-          (round(col("col.vs"), 4) + lit(0.0)).as("vsum"),
-          (round(col("col.va"), 4) + lit(0.0)).as("vavg"))
-        .orderBy("label", "idx")
-    }),
-
-    // ---- count windows W1/W2 ----
-
-    "q_tumbling_count" -> ((s, d) =>
-      CountWindows.tumblingBatch(ev(s, d), "user_id", "event_id", "value",
-          10, "sum")
-        .select(col("user_id"), col("window_id"),
-          round(col("result"), 4).as("result"))
-        .orderBy("user_id", "window_id")),
-
-    // the hot-key parallel-rank path against the SAME oracle as
-    // q_tumbling_count: range-salted ranking + exact restitch must be
-    // indistinguishable from the plain path on real keyed data (the
-    // skewed-fixture equality lives in TumblingSaltedSpec; this gate
-    // pins the oracle agreement)
-    "q_tumbling_salted" -> ((s, d) =>
-      CountWindows.tumblingBatchSalted(ev(s, d), "user_id", "event_id",
-          "value", 10, "sum", buckets = 8)
-        .select(col("user_id"), col("window_id"),
-          round(col("result"), 4).as("result"))
-        .orderBy("user_id", "window_id")),
-
-    "q_sliding_count" -> ((s, d) =>
-      CountWindows.slidingBatch(ev(s, d), "user_id", "event_id", "value",
-          10, 3, "avg")
-        .select(col("user_id"), col("emit_at").cast("bigint").as("emit_at"),
-          round(col("result"), 4).as("result"))
-        .orderBy("user_id", "emit_at")),
-
-    // W2 through the overlap-chunk salted path against q_sliding_count's
-    // replay; chunkRows deliberately tiny so chunk boundaries land
-    // inside frames and the borrowed-tail machinery is exercised at
-    // gate scale, not just in the spec
-    "q_sliding_salted" -> ((s, d) =>
-      CountWindows.slidingBatchSalted(ev(s, d), "user_id", "event_id",
-          "value", 10, 3, "avg", buckets = 8, chunkRows = 32L)
-        .select(col("user_id"), col("emit_at").cast("bigint").as("emit_at"),
-          round(col("result"), 4).as("result"))
-        .orderBy("user_id", "emit_at")),
-
-    // W1 via the streaming flatMapGroupsWithState operator (batch-executed)
-    "q_tumbling_stream" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      import s.implicits._
-      val ds = ev(s, d).select(col("user_id").cast("string").as("key"),
-        col("event_id").as("seq"), col("value")).as[CountWindows.KeyedSample]
-      CountWindows.tumblingStream(ds, 7, "sum")
-        .select(col("key").cast("bigint").as("user_id"),
-          col("emitAtSeq").as("emit_seq"), round(col("result"), 4).as("result"))
-        .orderBy("user_id", "emit_seq")
-    }),
-
-    // ---- time windows W3/W4 (E9 timers -> event-time windows) ----
-
-    "q_time_tumbling" -> ((s, d) =>
-      TimeWindows.tumbling(ev(s, d), col("ts"), "1 hour",
-          Seq(col("event_type")),
-          Seq(count(lit(1)).as("n"), round(sum("value"), 4).as("sv")))
-        .select(unix_timestamp(col("window.start")).as("ws"),
-          col("event_type"), col("n"), col("sv"))
-        .orderBy("ws", "event_type")),
-
-    "q_time_sliding" -> ((s, d) =>
-      TimeWindows.sliding(ev(s, d), col("ts"), "2 hours", "1 hour", Nil,
-          Seq(count(lit(1)).as("n"), round(sum("value"), 4).as("sv")))
-        .select(unix_timestamp(col("window.start")).as("ws"), col("n"), col("sv"))
-        .orderBy("ws")),
-
-    // Watermark late-data gate: REAL Structured Streaming execution.
-    // Events are replayed as 4 arrival micro-batches (md5-hash chunks, so
-    // every chunk spans the whole month and chunks 2-4 carry genuinely
-    // late rows), with a 45-minute watermark over 1-hour windows. A late
-    // row (window end <= watermark at its arrival batch) is dropped; a
-    // window emits (append mode) only once the watermark passes its end.
-    // Both rules are pure functions of the data under this deterministic
-    // replay, so DuckDB SQL can oracle-check actual streaming semantics —
-    // the CORRECTNESS row behind the "watermarks bound streaming state"
-    // scale claim (SCALE.md W3/W4).
-    "q_watermark_late" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      graft.streaming.Watermarks.lateDataReplay(ev(s, d), "ts", "value",
-          TF.hashBucket(col("event_id").cast("string"), 4), 4,
-          "45 minutes", "1 hour")
-        .select(unix_timestamp(col("window.start")).as("ws"), col("n"),
-          round(col("sv"), 4).as("sv"))
-        .orderBy("ws")
-    }),
-
-    // W4×W5 STREAMING composition: keyed sliding event-time windows
-    // under a watermark, executed as real Structured Streaming via the
-    // same deterministic 4-chunk replay as q_watermark_late. Sliding
-    // panes make lateness per WINDOW INSTANCE (a late row's older pane
-    // can be expired while its newer pane still absorbs it) — the rule
-    // the oracle replays per (row, pane) pair.
-    "q_keyed_time_sliding" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      graft.streaming.Watermarks.keyedSlidingReplay(ev(s, d), "ts",
-          "event_type", "value",
-          TF.hashBucket(col("event_id").cast("string"), 4), 4,
-          "45 minutes", "2 hours", "1 hour")
-        .select(unix_timestamp(col("window.start")).as("ws"),
-          col("key").as("event_type"), col("n"),
-          round(col("sv"), 4).as("sv"))
-        .orderBy("ws", "event_type")
-    }),
-
-    // Stream-STREAM watermarked interval join (StreamingJoins): clicks
-    // correlated with the same user's purchases within 2 hours, run as
-    // REAL Structured Streaming over two file sources advanced in
-    // lockstep time-ordered chunks (one ReplayChunks.byTime axis over
-    // ALL events, so a chunk is the same time range on both inputs).
-    // The inner join's time-bound condition gives Spark an eviction
-    // rule for both state buffers — state is genuinely dropped as the
-    // watermark advances mid-replay — yet with time-ordered arrival the
-    // emission set provably equals the batch interval join (proof
-    // sketch in StreamingJoins' scaladoc), which DuckDB replays as a
-    // plain join. lag_us is exact integer microseconds (no FP).
-    // INNER = both-ids-non-null projection of the ONE shared
-    // full-outer replay (see ssjFullReplay's soundness note)
-    "q_stream_interval_join" -> ((s, d) =>
-      ssjFullReplay(s, d)
-        .where(col("l_id").isNotNull && col("r_id").isNotNull)
-        .select(col("l_id").as("click_id"), col("r_id").as("purchase_id"),
-          col("key").as("user_id"), col("lag_us"))
-        .orderBy("click_id", "purchase_id")),
-
-    // LEFT-OUTER stream-stream interval join: its OWN real left_outer
-    // chunked replay (NOT a projection of the shared full-outer one —
-    // r16 ADVICE: the gate battery keeps a second join-type code path
-    // running through the actual streaming plan), plus the append-mode
-    // outer subtlety pinned in StreamingJoinsSpec — an unmatched click
-    // emits its null-padded row ONLY when the final watermark strictly
-    // passes click_ts + 2h (eviction is the proof that no purchase can
-    // come); unmatched clicks still alive in state at end-of-stream
-    // emit nothing. The oracle replays exactly that rule: batch join ∪
-    // (unmatched ∧ evicted-by-final-watermark).
-    "q_stream_interval_join_left" -> ((s, d) =>
-      ssjReplay(s, d, "left_outer")
-        .select(col("l_id").as("click_id"), col("r_id").as("purchase_id"),
-          col("key").as("user_id"), col("lag_us"))
-        .orderBy("click_id", "purchase_id")),
-
-    // RIGHT-OUTER form: the eviction bound is ASYMMETRIC (the time
-    // condition r_ts ∈ [l_ts, l_ts+2h] is) — an unmatched purchase's
-    // null-padded row emits iff the final watermark strictly passes
-    // purchase_ts ITSELF (any later click sits above the watermark,
-    // hence past it). Spec-pinned in StreamingJoinsSpec; the oracle
-    // replays batch join ∪ (unmatched ∧ r_ts < final wm).
-    "q_stream_interval_join_right" -> ((s, d) =>
-      ssjFullReplay(s, d)
-        .where(col("r_id").isNotNull)
-        .select(col("l_id").as("click_id"), col("r_id").as("purchase_id"),
-          col("key").as("user_id"), col("lag_us"))
-        .orderBy("click_id", "purchase_id")),
-
-    // FULL-OUTER form: the shared replay itself, unprojected — both
-    // sides' eviction rules apply (the union of the left and right
-    // oracles' unmatched sets over one replay).
-    "q_stream_interval_join_full" -> ((s, d) =>
-      ssjFullReplay(s, d)
-        .select(col("l_id").as("click_id"), col("r_id").as("purchase_id"),
-          col("key").as("user_id"), col("lag_us"))
-        .orderBy("click_id", "purchase_id")),
-
-    // W5 map-shaped keyed output (reference emits map[key]agg,
-    // windows.go:469-479). The map column itself is exercised via
-    // toMapShape; for the driver's compare (which cannot hash map columns)
-    // the entries — already key-sorted by toMapShape's array_sort — are
-    // flattened to a deterministic "k=v,..." string on both sides.
-    "q_keyed_map_shape" -> ((s, d) => {
-      val hourly = TimeWindows.tumbling(ev(s, d), col("ts"), "1 hour",
-        Seq(col("event_type")), Seq(count(lit(1)).as("n")))
-        .select(unix_timestamp(col("window.start")).as("ws"),
-          col("event_type"), col("n").cast("double").as("n"))
-      TimeWindows.toMapShape(hourly, "ws", "event_type", "n")
-        .select(col("ws"),
-          concat_ws(",", transform(map_entries(col("result")),
-            e => concat(e.getField("key"), lit("="),
-              e.getField("value").cast("decimal(18,1)").cast("string"))))
-            .as("kv"))
-        .orderBy("ws")
-    }),
-
-    // ---- channels (E7): fan-in union of two filtered streams ----
-
-    "q_channel_fanin" -> ((s, d) => {
-      val e = ev(s, d)
-      val a = e.where(col("event_type") === "click")
-        .select(lit("clicks").as("channel"), col("value"))
-      val b = e.where(col("event_type") === "purchase")
-        .select(lit("purchases").as("channel"), col("value"))
-      a.unionAll(b).groupBy("channel")
-        .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sv"))
-        .orderBy("channel")
-    }),
-
-    // The same fan-in topology over the DISTRIBUTED channel transport:
-    // two real streaming producers publish into one file-backed channel
-    // (publish = executor-side part-file appends, never a driver
-    // collect; Channels file backend), a subscriber stream aggregates.
-    // This is the transport that survives channels carrying volume at
-    // cluster scale — the memory transport stays the dev/test plane.
-    "q_channel_file_fanin" -> ((s, d) => {
-      import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
-      implicit val ss: SparkSession = s
-      // ephemeral run artifacts (staged source, channel files,
-      // checkpoints), deleted below. Channels.publish and subscribe
-      // install LocalCheckpointFiles on both sessions, so no query here
-      // forks a process per checkpoint file.
-      val root = java.nio.file.Files.createTempDirectory("graft-chanfile-")
-      graft.streaming.Channels.useFileBackend(root.toString)
-      try {
-        // Spark's file stream source watches a DIRECTORY; the testdata
-        // table is one parquet file, so stage it (distributed write) —
-        // on a cluster this is the object-store drop zone the producers
-        // would already be reading.
-        val srcDir = root.resolve("src").toString
-        ev(s, d).select(col("event_type"), col("value"))
-          .write.mode("overwrite").parquet(srcDir)
-        val srcSchema = StructType(Seq(
-          StructField("event_type", StringType),
-          StructField("value", DoubleType)))
-        val src = s.readStream.schema(srcSchema).parquet(srcDir)
-        val pa = graft.streaming.Channels.publish("mix",
-          src.where(col("event_type") === "click")
-            .select(lit("clicks").as("channel"), col("value")))
-        val pb = graft.streaming.Channels.publish("mix",
-          src.where(col("event_type") === "purchase")
-            .select(lit("purchases").as("channel"), col("value")))
-        // The stateful subscriber aggregation runs in a SCOPED session
-        // with few state partitions — the ReplayHarness discipline:
-        // micro-batch cost scales with state-store partition count
-        // (measured here: at the caller's 32 shuffle partitions, each
-        // of 3 drain batches paid 32 state-store open/commit tasks of
-        // ~0.6-0.9 s pure wait, ~70 s of task time for a 2-group
-        // aggregation), and the scoped conf can never be observed by
-        // queries planned concurrently on the caller's session
-        val scoped = s.newSession()
-        s.conf.getAll.foreach { case (k, v) =>
-          if (!scoped.conf.getOption(k).contains(v) &&
-              scoped.conf.isModifiable(k))
-            scoped.conf.set(k, v)
-        }
-        scoped.conf.set("spark.sql.shuffle.partitions", "4")
-        val agg = graft.streaming.Channels.subscribe("mix",
-            StructType(Seq(StructField("channel", StringType),
-              StructField("value", DoubleType))))(scoped)
-          .groupBy("channel")
-          .agg(count(lit(1)).as("n"), sum("value").as("sv"))
-        val name = "graft_chan_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", root.resolve("ckpt-sub").toString)
-          .start()
-        try {
-          pa.processAllAvailable(); pb.processAllAvailable()
-          q.processAllAvailable()
-        } finally { pa.stop(); pb.stop(); q.stop() }
-        // materialize (2 rows) and drop the per-invocation memory-sink
-        // view so repeated runs don't accumulate registered tables
-        val sink = scoped.table(name)
-          .select(col("channel"), col("n"), round(col("sv"), 4).as("sv"))
-          .orderBy("channel")
-        val out = s.createDataFrame(
-          java.util.Arrays.asList(sink.collect(): _*), sink.schema)
-        scoped.catalog.dropTempView(name)
-        out
-      } finally {
-        graft.streaming.Channels.useMemoryBackend()
-        // the memory sink held the result until materialization; the
-        // staged source copy and channel files are spent
-        graft.util.FsUtil.deleteRecursively(root)
-      }
-    }),
-
-    // ---- joins (Spark-native capabilities; E7 composition target) ----
-
-    "q_join_broadcast" -> ((s, d) =>
-      Tables.customer(s, d)
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, d)),
-          col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(count(lit(1)).as("n_cust"), round(sum("c_acctbal"), 2).as("acctbal"))
-        .orderBy("r_name", "n_name")),
-
-    "q_join_shuffle" -> ((s, d) =>
-      Tables.orders(s, d)
-        .where(col("o_orderdate") >= to_timestamp(lit("1996-01-01")))
-        .join(li(s, d), col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(countDistinct(col("o_orderkey")).as("n_orders"),
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-            .as("revenue"))
-        .orderBy("o_orderpriority")),
-
-    // TPC-H Q5-style 5-way join: dims (customer->nation->region) reduce
-    // to a broadcastable (custkey, nation) map; the only shuffle is the
-    // orders-lineitem fact join, with the date filter pushed to the
-    // orders scan — the join-depth plan shape a warehouse query needs
-    "q_star_join" -> ((s, d) => {
-      val o = Tables.orders(s, d)
-        .where(col("o_orderdate") >= to_timestamp(lit("1996-01-01")) &&
-          col("o_orderdate") < to_timestamp(lit("1997-01-01")))
-      val dim = Tables.customer(s, d)
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, d).where(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("c_custkey"), col("n_name"))
-      li(s, d)
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(dim), col("o_custkey") === col("c_custkey"))
-        .groupBy("n_name")
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))),
-            4).as("revenue"),
-          count(lit(1)).as("n_items"))
-        .orderBy("n_name")
-    }),
-
-    // anti-join: customers with no order in the window — the left_anti
-    // shape; the build side is the DISTINCT active keys, so the
-    // broadcast carries one row per customer, not one per order
-    "q_anti_join" -> ((s, d) => {
-      val active = Tables.orders(s, d)
-        .where(col("o_orderdate") >= to_timestamp(lit("1996-01-01")) &&
-          col("o_orderdate") < to_timestamp(lit("1997-01-01")))
-        .select(col("o_custkey"))
-        .distinct()
-      Tables.customer(s, d)
-        .join(active, col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_inactive"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // rollup: hierarchical totals in one pass (grouping sets expand
-    // map-side — no extra scan per level). The GROUP BY ROLLUP itself
-    // goes through spark.sql: Dataset.rollup + agg(sum) trips Spark
-    // 4.1's ambiguous-self-join check on the Expand-duplicated
-    // grouping attributes, while the SQL-parsed form of the same plan
-    // analyzes cleanly.
-    "q_rollup" -> ((s, d) => {
-      Tables.customer(s, d)
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, d)),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("r_name").as("rg"), col("n_name").as("nt"),
-          col("c_acctbal"))
-        .createOrReplaceTempView("q_rollup_in")
-      s.sql(
-        """SELECT coalesce(rg, 'ALL') AS region,
-          |       coalesce(nt, 'ALL') AS nation,
-          |       count(*) AS n_cust, round(sum(c_acctbal), 2) AS acctbal
-          |FROM q_rollup_in GROUP BY ROLLUP (rg, nt)
-          |ORDER BY region, nation""".stripMargin)
-    }),
-
-    // cube: all 2^n grouping-set combinations in one pass (adds the
-    // (nation-only) slice ROLLUP lacks). Same SQL-parsed construction as
-    // q_rollup — see that query's note on the Dataset API's
-    // ambiguous-self-join check.
-    "q_cube" -> ((s, d) => {
-      Tables.customer(s, d)
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, d)),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("r_name").as("rg"), col("n_name").as("nt"),
-          col("c_acctbal"))
-        .createOrReplaceTempView("q_cube_in")
-      s.sql(
-        """SELECT coalesce(rg, 'ALL') AS region,
-          |       coalesce(nt, 'ALL') AS nation,
-          |       count(*) AS n_cust, round(sum(c_acctbal), 2) AS acctbal
-          |FROM q_cube_in GROUP BY CUBE (rg, nt)
-          |ORDER BY region, nation""".stripMargin)
-    }),
-
-    // explicit GROUPING SETS: hand-picked slices ((region), (nation)) in
-    // ONE Expand pass — the shape neither ROLLUP nor CUBE expresses
-    // (two independent single-dimension aggregations, no grand total,
-    // no cross product). Same SQL-parsed construction as q_rollup.
-    "q_grouping_sets" -> ((s, d) => {
-      Tables.customer(s, d)
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, d)),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("r_name").as("rg"), col("n_name").as("nt"),
-          col("c_acctbal"))
-        .createOrReplaceTempView("q_gsets_in")
-      s.sql(
-        """SELECT coalesce(rg, 'ALL') AS region,
-          |       coalesce(nt, 'ALL') AS nation,
-          |       count(*) AS n_cust, round(sum(c_acctbal), 2) AS acctbal
-          |FROM q_gsets_in GROUP BY GROUPING SETS ((rg), (nt))
-          |ORDER BY region, nation""".stripMargin)
-    }),
-
-    // pre-aggregate the fact side BEFORE the dimension join: the shuffle
-    // carries one row per customer, and the join build side broadcasts
-    "q_topk" -> ((s, d) =>
-      Tables.orders(s, d)
-        .groupBy("o_custkey")
-        .agg(round(sum("o_totalprice"), 2).as("total"))
-        .join(broadcast(Tables.customer(s, d)),
-          col("o_custkey") === col("c_custkey"))
-        .select(col("c_custkey"), col("c_name"), col("total"))
-        .orderBy(col("total").desc, col("c_custkey").asc)
-        .limit(10)),
-
-    // ---- text analysis ----
-
-    "q_token_count" -> ((s, d) =>
-      docs(s, d)
-        .select(col("doc_id"), TF.tokenCount(col("text")).cast("bigint").as("n_tokens"),
-          TF.bpeishTokenCount(col("text")).cast("bigint").as("n_bpeish"))
-        .orderBy("doc_id")),
-
-    "q_lang_id" -> ((s, d) =>
-      docs(s, d)
-        .select(col("doc_id"), TF.langId(col("text")).as("lang_pred"))
-        .orderBy("doc_id")),
-
-    // lang-ID with its confidence margin: margin 0 = ambiguous/mixed
-    // (route to a heavier classifier); integer-exact, shares the
-    // textStats kernel pass with the prediction
-    "q_lang_margin" -> ((s, d) =>
-      docs(s, d)
-        .select(col("doc_id"), TF.langId(col("text")).as("lang_pred"),
-          TF.langIdMargin(col("text")).as("margin"))
-        .orderBy("doc_id")),
-
-    "q_quality" -> ((s, d) =>
-      docs(s, d)
-        .select(col("doc_id"),
-          round(TF.punctRatio(col("text")), 6).as("pr"),
-          round(TF.stopwordRatio(col("text")), 6).as("swr"),
-          round(TF.qualityScore(col("text")), 6).as("quality"))
-        .orderBy("doc_id")),
-
-    // Gopher rule-set verdicts (Rae et al. 2021 App. A) — the published
-    // heuristic filter battery; every metric and the conjunction pass
-    // spread: gopherFlags is a regex-heavy per-document kernel that ran
-    // serialized on the 2-task scan (task 1.3 s ~= wall under noop)
-    "q_quality_gopher" -> ((s, d) =>
-      graft.util.Parallelism.spread(docs(s, d))
-        .select(col("doc_id"), TF.gopherFlags(col("text")).as("g"))
-        .select(col("doc_id"), col("g.n_words").as("n_words"),
-          col("g.mean_word_len").as("mean_word_len"),
-          col("g.symbol_ratio").as("symbol_ratio"),
-          col("g.bullet_frac").as("bullet_frac"),
-          col("g.ellipsis_frac").as("ellipsis_frac"),
-          col("g.alpha_frac").as("alpha_frac"),
-          col("g.stop_hits").as("stop_hits"),
-          col("g.pass").as("pass"))
-        .orderBy("doc_id")),
-
-    "q_fingerprint" -> ((s, d) =>
-      docs(s, d)
-        .select(col("doc_id"), TF.fingerprint(col("text")).as("fp"))
-        .orderBy("doc_id")),
-
-    // calibration audit of the heuristic quality score against the
-    // Gopher verdict as the reference label: 10 reliability bins with
-    // per-bin confidence/accuracy/gap (n-weighted gap mean = ECE).
-    // One scan, one k-row groupBy — the check a learned quality
-    // filter must pass before its threshold is trusted at 100 TB
-    "q_calibration" -> ((s, d) =>
-      graft.operators.Features.calibrationBins(
-          docs(s, d).select(
-            round(TF.qualityScore(col("text")), 6).as("score"),
-            TF.gopherFlags(col("text")).getField("pass").as("label")),
-          "score", "label", 10)
-        .orderBy("bin")),
-
-    // repetition signal: duplicate 3-gram fraction per document
-    "q_repetition" -> ((s, d) =>
-      docs(s, d)
-        .select(col("doc_id"),
-          round(TF.repetitionScore(col("text"), 3), 6).as("rep3"))
-        .orderBy("doc_id")),
-
-    // within-doc repeated-line REMOVAL (the transform behind the
-    // q_dup_lines measurement): keep-first over trimmed line content,
-    // single-pass codegen kernel, zero shuffle. Fixture docs are
-    // single-line, so the gate regroups tokens into 2-token lines —
-    // 181 docs carry real internal repeats at that width. The text
-    // coalesce pins the gate to the suite's null-doc convention
-    // (kept_text '' like q_dedup_lines — tokenSpans is null-in-null-out,
-    // so without it a null doc rides through as NULL while the oracle's
-    // no-chunk-rows replay says ''; caught by the composed sweep).
-    "q_drop_repeated_lines" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
-        TF.dropRepeatedLines(
-          TF.tokenLines(coalesce(col("text"), lit("")), 2))
-          .as("kept_text"))
-        .orderBy("doc_id")),
-
-    // lexical diversity: within-doc token Shannon entropy (bits), type/
-    // token ratio — one row-local codegen kernel pass, zero shuffle
-    "q_token_entropy" -> ((s, d) => {
-      val st = TF.tokenEntropy(col("text"))
-      docs(s, d)
-        .select(col("doc_id"),
-          st.getField("ntok").as("n_tokens"),
-          st.getField("ntypes").as("n_types"),
-          round(st.getField("entropy_bits"), 6).as("entropy_bits"),
-          round(TF.typeTokenRatio(col("text")), 6).as("ttr"))
-        .orderBy("doc_id")
-    }),
-
-    // within-doc duplicate-line fractions (MassiveText/RefinedWeb rule):
-    // repeat occurrences of trimmed non-blank lines, by line and by char
-    "q_dup_lines" -> ((s, d) => {
-      val st = TF.dupLineStats(col("text"))
-      docs(s, d)
-        .select(col("doc_id"),
-          st.getField("n_lines").as("n_lines"),
-          round(st.getField("dup_line_frac"), 6).as("dup_line_frac"),
-          round(st.getField("dup_char_frac"), 6).as("dup_char_frac"))
-        .orderBy("doc_id")
-    }),
-
-    // composite training-data pipeline: quality filter -> language
-    // filter -> exact-dedup keep -> deterministic split. The flagship
-    // composition every piece above feeds into.
-    "q_training_pipeline" -> ((s, d) => {
-      // Single scan of documents: score, language-ID and fingerprint in one
-      // projection (codegen CSE evaluates the shared tokenization once),
-      // then dedup-keep via a window min over the fingerprint — the heavy
-      // text columns never survive past the projection, so the one shuffle
-      // carries only (doc_id, q, fp).
-      import org.apache.spark.sql.expressions.Window
-      docs(s, d)
-        .select(col("doc_id"),
-          TF.qualityScore(col("text")).as("q"),
-          TF.langId(col("text")).as("lang_pred"),
-          TF.fingerprint(col("text")).as("fp"))
-        .where(col("q") >= 0.5 && col("lang_pred") === "en")
-        .withColumn("keep_id", min("doc_id").over(Window.partitionBy("fp")))
-        .where(col("doc_id") === col("keep_id"))
-        .select(col("doc_id"), round(col("q"), 6).as("q"),
-          TF.splitAssign(col("doc_id").cast("string"), 80, 10).as("split"))
-        .orderBy("doc_id")
-    }),
-
-    // PII scrubbing: emails/IPs/phone runs -> typed placeholders
-    "q_pii_scrub" -> ((s, d) =>
-      docs(s, d)
-        .select(col("doc_id"), TF.scrubPii(col("text")).as("clean"),
-          TF.piiCount(col("text")).cast("bigint").as("n_pii"))
-        .orderBy("doc_id")),
-
-    // TF-IDF scores: per-doc term frequencies against the FULL corpus's
-    // document frequencies (the doc_id < 15 cut filters the tf side only
-    // — Catalyst pushes it below the join but not into the df aggregate)
-    "q_tfidf" -> ((s, d) =>
-      graft.operators.CorpusStats.tfidf(docs(s, d), "doc_id", "text")
-        .where(col("doc") < 15)
-        .select(col("doc").as("doc_id"), col("term"), col("tf"), col("score"))
-        .orderBy("doc_id", "term")),
-
-    // corpus-as-its-own-LM bigram scoring: mean ln P(w2|w1) per doc —
-    // the perplexity-filter signal, computed from exact corpus counts
-    "q_bigram_lm" -> ((s, d) =>
-      graft.operators.CorpusStats.bigramLogProb(docs(s, d), "doc_id", "text")
-        .select(col("doc").as("doc_id"), col("n_bigrams"), col("avg_lp"))
-        .orderBy("doc_id")),
-
-    // unicode canonicalization (NFC + ROOT casefold + whitespace
-    // collapse) — the pre-hash step; the oracle runs DuckDB's
-    // nfc_normalize + lower + regex collapse. The corpus is printable
-    // ASCII so NFC is identity HERE (the spec pins the accent/ligature
-    // branches on unicode vectors); what this gate proves cross-engine
-    // is the casefold + collapse contract and md5 identity of the
-    // normalized bytes
-    "q_normalize" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
-          TF.normalizeText(col("text")).as("__n"))
-        .select(col("doc_id"), length(col("__n")).as("n_norm"),
-          md5(col("__n").cast("binary")).as("norm_md5"))
-        .orderBy("doc_id")),
-
-    // URL canonicalization — the crawl-dedup KEY: messy per-doc URLs
-    // (derived deterministically from the table so both engines start
-    // from identical bytes) normalize through scheme/host lowering,
-    // default-port drop, slash collapse, tracking-param strip, param
-    // sort, fragment drop. Row-local codegen; the md5 key is what a
-    // 100 TB crawl groups by BEFORE any content dedup
-    "q_url_canon" -> ((s, d) => {
-      val dn = docs(s, d)
-      val raw = when(col("doc_id") % 3 === 0, concat(
-          lit("HTTPS://WWW.ExAmple-"), (col("doc_id") % 7).cast("string"),
-          lit(".COM:443/Docs//"), col("source"),
-          lit("/?utm_source=feed&z=9&ref=x&a="), col("lang"),
-          lit("&utm_campaign=c&b=2#frag")))
-        .when(col("doc_id") % 3 === 1, concat(
-          lit("HTTP://user:pw@Host-"), (col("doc_id") % 5).cast("string"),
-          lit(".Org:80/A//B/c/"), col("source"),
-          lit("?b=2&a=1&a=0&gclid=g#x")))
-        .otherwise(concat(
-          lit("https://plain.example.net/"), col("source"),
-          lit("/page/"), col("doc_id").cast("string")))
-      dn.select(col("doc_id"), TF.canonicalUrl(raw).as("url_canon"))
-        .withColumn("url_key", md5(col("url_canon").cast("binary")))
-        .orderBy("doc_id")
-    }),
-
-    // CCNet-style held-out LM quality score: the LM trains on 2/3 of
-    // the corpus and scores the other third — likeness to the reference
-    // split, not to itself; add-0.5 smoothing keeps unseen bigrams
-    // finite and n_unseen is the OOV junk signal
-    "q_bigram_heldout" -> ((s, d) => {
-      val all = docs(s, d)
-      graft.operators.CorpusStats.bigramLogProbAgainst(
-          all.where(col("doc_id") % 3 =!= 0),
-          all.where(col("doc_id") % 3 === 0), "doc_id", "text", k = 0.5)
-        .select(col("doc").as("doc_id"), col("n_bigrams"),
-          col("n_unseen"), col("avg_lp"))
-        .orderBy("doc_id")
-    }),
-
-    // CCNet head/middle/tail: the held-out LM score partitioned into
-    // terciles on the DISCRETE integer grid (score×10^4), the same
-    // flip-immune cum-sum boundaries as q_length_buckets — the slice
-    // labels CCNet ships its crawl under
-    "q_ccnet_buckets" -> ((s, d) => {
-      val all = docs(s, d)
-      graft.operators.Selection.perplexityBuckets(
-          all.where(col("doc_id") % 3 =!= 0),
-          all.where(col("doc_id") % 3 === 0), "doc_id", "text")
-        .select(col("doc").as("doc_id"), col("n_bigrams"),
-          col("n_unseen"), col("avg_lp"), col("bucket"))
-        .orderBy("doc_id")
-    }),
-
-    // order-3 held-out LM with STUPID BACKOFF (Brants et al. 2007):
-    // every token scored at its longest available history, alpha=0.4
-    // penalty per backoff step, add-0.5 unigram floor over V. The
-    // oracle replays every branch of the backoff CASE (the alpha
-    // powers are the same multiply-chain literals in both plans);
-    // n_oov and n_backed are the junk signals
-    "q_ngram_lm" -> ((s, d) => {
-      val all = docs(s, d)
-      graft.operators.CorpusStats.ngramLogProbAgainst(
-          all.where(col("doc_id") % 3 =!= 0),
-          all.where(col("doc_id") % 3 === 0), "doc_id", "text",
-          order = 3, alpha = 0.4, k = 0.5)
-        .select(col("doc").as("doc_id"), col("n_tokens"), col("n_oov"),
-          col("n_backed"), col("avg_lp"))
-        .orderBy("doc_id")
-    }),
-
-    // ARPA/KenLM model interchange gated through APPLIED scoring (the
-    // q_unigram_vocab_io contract): the engine's count-derived stupid-
-    // backoff model travels export -> import -> re-export (byte
-    // equality required in-gate) and the IMPORTED copy — log-probs and
-    // backoff weights read back from ARPA text, exactly what a user
-    // does with a real pretrained KenLM artifact — drives the standard
-    // ARPA backoff-walk scorer. The oracle rebuilds the same round-6
-    // log10 tables from counts and replays every branch of the walk,
-    // so any value the text layer corrupts breaks the hash
-    "q_arpa_score" -> ((s, d) => {
-      val all = docs(s, d)
-      val arpa = graft.operators.ArpaIO.toArpa(
-        all.where(col("doc_id") % 3 =!= 0), "text", 3, alpha = 0.4,
-        k = 0.5)
-      val model = graft.operators.ArpaIO.fromArpa(arpa)
-      require(graft.operators.ArpaIO.render(model) == arpa,
-        "ARPA round-trip drifted")
-      graft.operators.ArpaIO.scoreAgainst(s, model,
-          all.where(col("doc_id") % 3 === 0), "doc_id", "text")
-        .select(col("doc").as("doc_id"), col("n_tokens"), col("n_oov"),
-          col("n_backed"), col("avg_lp10"))
-        .orderBy("doc_id")
-    }),
-
-    // INCREMENTAL n-gram LM: the train side comes out of a persisted
-    // count-table index built from HALF the training corpus and
-    // EXTENDED with the other half — under the disjoint-ids contract
-    // scoring against the folded index EQUALS a full retrain on the
-    // union, so the oracle is literally q_ngram_lm's (same split,
-    // order, alpha, k): the incremental==batch contract is
-    // ORACLE-gated, the q_dedup_spans_incr pattern. Only the delta
-    // was ever re-counted; history contributed 16-byte digests +
-    // counts folded Exchange-free out of the bucketed tables
-    "q_ngram_lm_incr" -> ((s, d) => {
-      val all = docs(s, d)
-      val tag = idxTag(s, d)
-      val idx = ngramIdxCache.computeIfAbsent(tag, _ => {
-        val built = graft.operators.CorpusStats.buildNgramIndex(
-          all.where(col("doc_id") % 3 === 1), "doc_id", "text", 3,
-          s"graft_ng_idx_$tag",
-          s"${sys.props("java.io.tmpdir")}/graft-ng-idx-$tag")
-        graft.operators.CorpusStats.extendNgramIndex(
-          all.where(col("doc_id") % 3 === 2), "doc_id", "text", built)
-        built
-      })
-      graft.operators.CorpusStats.ngramLogProbAgainstIndex(
-          all.where(col("doc_id") % 3 === 0), "doc_id", "text", idx,
-          alpha = 0.4, k = 0.5)
-        .select(col("doc").as("doc_id"), col("n_tokens"), col("n_oov"),
-          col("n_backed"), col("avg_lp"))
-        .orderBy("doc_id")
-    }),
-
-    // CCNet buckets at the PAPER's grain — 5-gram scoring (Wenzek et
-    // al.'s KenLM order) via stupid backoff, then the same flip-immune
-    // integer-grid terciles as q_ccnet_buckets
-    "q_ccnet_buckets_5gram" -> ((s, d) => {
-      val all = docs(s, d)
-      graft.operators.Selection.perplexityBuckets(
-          all.where(col("doc_id") % 3 =!= 0),
-          all.where(col("doc_id") % 3 === 0), "doc_id", "text",
-          order = 5, alpha = 0.4, k = 0.5)
-        .select(col("doc").as("doc_id"), col("n_tokens"), col("n_oov"),
-          col("n_backed"), col("avg_lp"), col("bucket"))
-        .orderBy("doc_id")
-    }),
-
-    // DoReMi-style mixture-weight LEARNING (Xie et al. 2023): excess
-    // loss per domain = global-generalist minus own-specialist
-    // held-out bigram loss; 4 integer multiplicative-weights rounds +
-    // uniform smoothing. The fixture corpus is HOMOGENEOUS (every
-    // source shares one 31-token vocabulary, so pooling always beats
-    // the tiny specialists and every excess is 0 — a degenerate loop),
-    // so the gate augments it with a deterministically TRANSLATED
-    // 'synth' domain (vowels -> digits, the shifted-copy convention on
-    // the text side): its specialist genuinely beats the diluted
-    // generalist, the MW rounds move real weight, and the oracle
-    // replays ALL of it (generated CTE chain, the quality-classifier
-    // pattern) — every loss, every renormalization, bit-exact
-    "q_doremi_weights" -> ((s, d) => {
-      import s.implicits._
-      doremiLearned(s, d)
-        .toDF("source", "n_docs", "loss_global_i4", "loss_own_i4",
-          "excess_i4", "weight_micro", "alpha_micro")
-        .orderBy("source")
-    }),
-
-    // DoReMi at CCNet's ACTUAL grain: both loss passes routed through
-    // the order-5 stupid-backoff LM (global generalist + per-source
-    // specialists re-keyed by (source, gram)) instead of the add-k
-    // bigram surrogate; the MW loop and grid are byte-identical to
-    // q_doremi_weights. The oracle generalizes the same round-CTE
-    // chain — the losses CTE swaps, the loop replay does not
-    "q_doremi_weights_5gram" -> ((s, d) => {
-      val aug = doremiCorpus(s, d)
-      graft.operators.Selection.doremiWeights(
-          aug.where(col("doc_id") % 3 =!= 0),
-          aug.where(col("doc_id") % 3 === 0), "doc_id", "text",
-          "source", order = 5, alpha = 0.4, rounds = 4, eta = 0.5,
-          smoothMicro = 200000L, k = 0.5)
-        .orderBy("source")
-    }),
-
-    // the learned mixture APPLIED — DoReMi alpha composed into
-    // Sampling.byWeight (the capstone the two operators advertise):
-    // mixing weight w_d = round(alpha_d/1e6 · N/n_d, 6) converts the
-    // learned target SHARE into a per-doc copy count over the corpus'
-    // CURRENT shares; every step (the MW rounds, the weight grid,
-    // byWeight's floor/round(frac·1e6) decomposition, the md5 draw) is
-    // replayed in the oracle. Driver state: #domains doubles
-    "q_doremi_mixture" -> ((s, d) => {
-      val learned = doremiLearned(s, d)
-        .map { case (src, _, _, _, _, _, alpha) => src -> alpha }.toMap
-      val labeled = doremiCorpus(s, d).where(col("source").isNotNull)
-      graft.operators.Sampling.byAlphaMicro(
-          labeled.select(col("doc_id"), col("source")),
-          "doc_id", "source", learned, salt = "doremi")
-        .select(col("doc_id"), col("source"), col("__rep"))
-        .orderBy("doc_id", "__rep")
-    }),
-
-    // subword tokenization (greedy longest-match against an explicit
-    // vocab): per-doc piece/unk totals. Tokenization runs once per
-    // DISTINCT word (Zipf amortization); counts join back by word. The
-    // DuckDB oracle replays the greedy walk with a recursive CTE
-    "q_subword" -> ((s, d) =>
-      graft.operators.Subword.pieceCounts(docs(s, d), "doc_id", "text",
-          subwordVocab)
-        .select(col("doc").as("doc_id"), col("n_pieces"), col("n_unk"))
-        .orderBy("doc_id")),
-
-    // corpus piece-frequency table: pins PIECE IDENTITY across engines
-    // (agreeing totals could coincide; an agreeing distribution cannot)
-    "q_subword_pieces" -> ((s, d) =>
-      graft.operators.Subword.pieceFrequencies(docs(s, d), "text",
-          subwordVocab)
-        .orderBy("piece")),
-
-    // the TRAINING half: top-40 char 2..4-grams by occurrence-weighted
-    // frequency over the distinct-word frame — candidate scoring for a
-    // vocab trainer, all codegen (explode(sequence) + substring), top-k
-    // as a bounded heap (TakeOrderedAndProject), rk windowed over the
-    // 40 survivors only
-    "q_subword_vocab" -> ((s, d) =>
-      graft.operators.Subword.topNgramPieces(docs(s, d), "text", 2, 4, 40)
-        .select(col("piece"), col("n_occ"), col("rk").cast("bigint").as("rk"))
-        .orderBy("rk")),
-
-    // unigram-LM (SentencePiece-style) Viterbi segmentation: per-doc
-    // piece/unk totals + the summed log-prob under a -ln(prime) scored
-    // vocab (tie-free by unique factorization). The DuckDB oracle
-    // replays the DP as a sliding-window recursive CTE — one code
-    // point per iteration, true linear DP, no path enumeration
-    "q_unigram" -> ((s, d) =>
-      graft.operators.Subword.unigramCounts(docs(s, d), "doc_id", "text",
-          unigramVocab.toMap, unigramUnkScore)
-        .select(col("doc").as("doc_id"), col("n_pieces"), col("n_unk"),
-          col("score"))
-        .orderBy("doc_id")),
-
-    // HF Unigram tokenizer.json interchange gated through APPLIED
-    // segmentation (the q_unigram contract): the scored vocab travels
-    // export -> import -> re-export (byte-equality required in-gate)
-    // and the IMPORTED copy drives unigramCounts — any piece or score
-    // the JSON layer corrupts changes a Viterbi path and breaks the
-    // oracle hash
-    "q_unigram_vocab_io" -> ((s, d) => {
-      val json = graft.operators.VocabIO.toHfUnigramJson(
-        unigramVocab, unkId = Some(0))
-      val (imported, unk) = graft.operators.VocabIO.fromHfUnigramJson(json)
-      require(imported == unigramVocab && unk.contains(0) &&
-        graft.operators.VocabIO.toHfUnigramJson(imported, unk) == json,
-        "unigram tokenizer.json round-trip drifted")
-      graft.operators.Subword.unigramCounts(docs(s, d), "doc_id", "text",
-          imported.toMap, unigramUnkScore)
-        .select(col("doc").as("doc_id"), col("n_pieces"), col("n_unk"),
-          col("score"))
-        .orderBy("doc_id")
-    }),
-
-    // the Viterbi PATH itself: corpus piece frequencies pin piece
-    // identity across engines (agreeing totals could coincide; an
-    // agreeing distribution cannot) — and Viterbi genuinely diverges
-    // from greedy here ("value" -> val+ue, not va+lu+e)
-    "q_unigram_pieces" -> ((s, d) =>
-      graft.operators.Subword.unigramPieceFrequencies(docs(s, d), "text",
-          unigramVocab.toMap, unigramUnkScore)
-        .orderBy("piece")),
-
-    // unigram-LM TRAINING (SentencePiece hard EM, Kudo '18): 60 seed
-    // 2..4-gram candidates + every corpus code point, two Viterbi-EM
-    // rounds with a likelihood-loss prune to 40 multi-char pieces
-    // between them, gated through the APPLIED SEGMENTATION (the
-    // q_bpe_merges pattern): the learned vocab re-segments the corpus
-    // and the per-doc BIGINT totals must match the oracle's replay of
-    // seed + EM + prune + apply (three instances of the same generated
-    // DP CTE as q_unigram). round6 score quantization at every M-step
-    // is the cross-engine contract that makes DP path sums bit-equal.
-    "q_unigram_train" -> ((s, d) => {
-      val dd = docs(s, d)
-      val vocab = graft.operators.Subword.trainUnigram(
-        dd, "text", 60, 40, 2, 4, 2, unigramUnkScore).toMap
-      graft.operators.Subword.unigramCounts(dd, "doc_id", "text", vocab,
-          unigramUnkScore)
-        .select(col("doc").as("doc_id"), col("n_pieces"), col("n_unk"))
-        .orderBy("doc_id")
-    }),
-
-    // the SOFT-EM trainer (Kudo '18's actual E-step, closing the
-    // documented hard-EM divergence): two forward-backward EM rounds —
-    // expected piece counts on the 1e-6 micro-occurrence grid, every
-    // alpha/beta cell round-6 log-sum-exp-quantized — then the same
-    // prune and the same hard-Viterbi APPLY as q_unigram_train. The
-    // oracle replays both soft E-steps as recursive forward+backward
-    // CTEs plus the final Viterbi DP
-    "q_unigram_train_soft" -> ((s, d) => {
-      val dd = docs(s, d)
-      val vocab = graft.operators.Subword.trainUnigram(
-        dd, "text", 60, 40, 2, 4, 2, unigramUnkScore, soft = true).toMap
-      graft.operators.Subword.unigramCounts(dd, "doc_id", "text", vocab,
-          unigramUnkScore)
-        .select(col("doc").as("doc_id"), col("n_pieces"), col("n_unk"))
-        .orderBy("doc_id")
-    }),
-
-    // BPE ENCODE (inference by rank-ordered merges, the apply half of
-    // q_bpe_merges): per-doc piece totals under a fixed 8-rule list
-    // with composing rules — rank order matters and both engines must
-    // apply it identically
-    "q_bpe_encode" -> ((s, d) =>
-      graft.operators.Subword.bpeEncode(docs(s, d), "doc_id", "text",
-          bpeGateMerges)
-        .orderBy("doc")),
-
-    // the SAME contract through the unbounded-rule-count apply path
-    // (ranked mapPartitions walk instead of the 64-rule codegen fold —
-    // the path a trained 32k-rule vocabulary runs): same rules, same
-    // oracle, so the two implementations are pinned to each other AND
-    // to DuckDB
-    "q_bpe_encode_large" -> ((s, d) =>
-      graft.operators.Subword.bpeEncodeLarge(docs(s, d), "doc_id", "text",
-          bpeGateMerges)
-        .orderBy("doc")),
-
-    // the tokenizer's OUTPUT artifact: every document as its sequence
-    // of frequency-ranked vocabulary ids, pieces in document order.
-    // Gated as exploded (doc, pos, id) SCALAR rows — the array form is
-    // equivalent but the driver's pandas comparator cannot sort an
-    // array-typed cell (r12's q_encode_ids err), and exploded rows pin
-    // the same facts: piece identity, id assignment, and ordering.
-    "q_encode_ids" -> ((s, d) => {
-      val dd = docs(s, d)
-      val vocab = graft.operators.Subword.vocabTable(dd, "text",
-        bpeGateMerges)
-      graft.operators.Subword.encodeToIds(dd, "doc_id", "text",
-          bpeGateMerges, vocab)
-        .select(col("doc"), posexplode(col("ids")).as(Seq("pos", "id")))
-        .select(col("doc"), (col("pos") + 1).cast("long").as("pos"),
-          col("id").cast("long").as("id"))
-        .orderBy("doc", "pos")
-    }),
-
-    // decode-inverts-encode certificate: every document's id stream,
-    // decoded through the vocab, must reproduce its boundary-free token
-    // concatenation — pins posexplode ordering, the id<->piece
-    // bijection, and that the vocab inner join drops nothing. Docs
-    // with no tokens (empty or null text) decode to "" by convention.
-    "q_decode_roundtrip" -> ((s, d) => {
-      val dd = docs(s, d)
-      val vocab = graft.operators.Subword.vocabTable(dd, "text",
-        bpeGateMerges)
-      val enc = graft.operators.Subword.encodeToIds(dd, "doc_id", "text",
-        bpeGateMerges, vocab)
-      val dec = graft.operators.Subword.decodeIds(enc, "doc", "ids", vocab)
-      dd.select(col("doc_id"),
-          concat_ws("", TF.tokens(col("text"))).as("orig"))
-        .join(dec, col("doc_id") === col("doc"), "left")
-        .select(col("doc_id"),
-          length(coalesce(col("decoded"), lit(""))).cast("long")
-            .as("n_decoded_chars"),
-          (coalesce(col("decoded"), lit("")) ===
-            coalesce(col("orig"), lit(""))).as("roundtrip_ok"))
-        .orderBy("doc_id")
-    }),
-
-    // piece IDENTITY under the same merges: the corpus piece
-    // distribution, not just counts — two different segmentations of
-    // equal length cannot both match it
-    "q_bpe_freq" -> ((s, d) =>
-      graft.operators.Subword.bpePieceFrequencies(docs(s, d), "text",
-          bpeGateMerges)
-        .orderBy("piece")),
-
-    // BPE merge TRAINING: 6 rounds of occurrence-weighted pair counting
-    // + argmax + merge application over the distinct-word frame, gated
-    // through the APPLIED SEGMENTATION (the q_bpe_encode pattern): the
-    // learned rules re-encode the corpus and the per-doc piece totals
-    // must match the oracle's replay of the same 6 training rounds +
-    // apply. What this pins: any argmax divergence that changes the
-    // final segmentation (including rank-order changes of INTERACTING
-    // rules — this corpus's rule 6 (m,er) composes on rule 1 (e,r)).
-    // What it deliberately does not: a rank swap of non-interacting
-    // rules or a pair_count-only divergence with the same winner is
-    // invisible by construction — the price of a BIGINT-only output
-    // (no rule strings, no uncast aggregates), the shape that survived
-    // two rounds of driver-DuckDB rendering drift where the rule-string
-    // output hash-flipped. SubwordSpec pins rank order itself against
-    // hand corpora. The rule collect is 6 rows by contract.
-    "q_bpe_merges" -> ((s, d) => {
-      val dd = docs(s, d)
-      val rules = graft.operators.Subword.trainBpeMerges(dd, "text", 6)
-        .orderBy("rk").collect()
-        .map(r => (r.getAs[String]("lhs"), r.getAs[String]("rhs"))).toSeq
-      graft.operators.Subword.bpeEncode(dd, "doc_id", "text", rules)
-        .orderBy("doc")
-    }),
-
-    // corpus n-gram frequency table (top 100, deterministic tie-break)
-    "q_ngram_freq" -> ((s, d) =>
-      docs(s, d)
-        .select(explode(TF.wordShingles(col("text"), 2)).as("ngram"))
-        .groupBy("ngram").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("ngram").asc)
-        .limit(100)),
-
-    // exact corpus heavy hitters (bigrams with share >= 0.15%) via the
-    // two-pass Misra-Gries + recount shape: the bigram stream is scanned
-    // twice but NEVER shuffled — only O(partitions/minShare) candidates
-    // leave the executors. Exact threshold recount makes the result
-    // partition-invariant (CorpusStatsSpec pins this).
-    "q_heavy_hitters" -> ((s, d) =>
-      operators.CorpusStats.heavyHitters(
-        docs(s, d).select(explode(TF.wordNgramsAll(col("text"), 2)).as("item")),
-        "item", minShare = 0.0015)
-        .orderBy("item")),
-
-    // per-source vocabulary cardinality: exact distinct count + an
-    // in-query certificate that the HLL++ sketch (the only affordable
-    // form at 100 TB — fixed-size registers, map-side mergeable, item
-    // stream never shuffles) lands within 5%. Oracle emits the exact
-    // count and TRUE.
-    // spread before the bigram explode: the certificate's per-row work
-    // (HLL register updates at rsd 0.01 + the countDistinct Expand
-    // duplication) ran on the 2-task documents scan — 3.8 s of task
-    // time serialized into 4.6 s of wall (measured under the noop
-    // action; count() had pruned both aggregates, hiding it)
-    "q_approx_distinct" -> ((s, d) =>
-      operators.CorpusStats.distinctCertificate(
-        graft.util.Parallelism.spread(docs(s, d)).select(col("source"),
-          explode(TF.wordNgramsAll(col("text"), 2)).as("item")),
-        "source", "item")
-        .orderBy("source")),
-
-    // MERGEABLE distinct sketches across ingest days: three per-day
-    // HLL sketch frames union into one, the merged estimate is
-    // certified within 5% of exact AND bit-equal to the single-pass
-    // sketch (register-max union is associative) — the incremental
-    // primitive that answers day-range distincts without re-scans
-    "q_distinct_incremental" -> ((s, d) => {
-      val items = docs(s, d).select(col("source"),
-        pmod(col("doc_id"), lit(3)).as("__day"),
-        explode(TF.tokens(col("text"))).as("w"))
-      val daily = (0 until 3).map(k =>
-        operators.CorpusStats.distinctSketches(
-          items.where(col("__day") === k), "source", "w"))
-      val merged = operators.CorpusStats.mergeDistinctSketches(
-        daily.reduce(_ unionAll _), "source")
-      val mergedEst = operators.CorpusStats.estimateDistinct(
-        merged, "source").withColumnRenamed("estimate", "__m")
-      val singleEst = operators.CorpusStats.estimateDistinct(
-        operators.CorpusStats.distinctSketches(items, "source", "w"),
-        "source").withColumnRenamed("estimate", "__s")
-      items.groupBy("source")
-        .agg(countDistinct(col("w")).as("exact_distinct"))
-        // null-safe joins: a null-source stratum keeps its certificate
-        // row (a string-Seq join would silently drop it)
-        .join(mergedEst.withColumnRenamed("source", "__ms"),
-          col("source") <=> col("__ms")).drop("__ms")
-        .join(singleEst.withColumnRenamed("source", "__ss"),
-          col("source") <=> col("__ss")).drop("__ss")
-        .select(col("source"), col("exact_distinct"),
-          (abs(col("__m") - col("exact_distinct")) <=
-            lit(0.05) * col("exact_distinct") &&
-            col("__m") === col("__s")).as("merged_ok"))
-        .orderBy("source")
-    }),
-
-    // per-source length quantiles: exact interpolated p50/p90 (matching
-    // quantile_cont, oracle-comparable) + rank certificates that the
-    // quantile SKETCH's picks land within +-10% rank. Same certificate
-    // pattern as q_knn_ivf_trained's recall column.
-    "q_approx_quantiles" -> ((s, d) =>
-      operators.CorpusStats.quantileCertificate(docs(s, d), "source", "n_chars")
-        .orderBy("source")),
-
-    // ---- dedup ----
-
-    "q_dedup_exact" -> ((s, d) =>
-      Dedup.exactGroups(docs(s, d), "doc_id", "text")
-        .select(col("fp"), col("keep_id"), col("n_docs"))
-        .orderBy("fp")),
-
-    // sub-document dedup: fixed-width (8-token) passages repeated across
-    // >= 2 distinct docs are dropped keep-first and each doc reassembled
-    // from its surviving spans. Passage TEXT never crosses a shuffle —
-    // hashes decide, chunk indexes travel back, the doc's own token
-    // array re-slices locally (see Dedup.passageDedup).
-    "q_dedup_passage" -> ((s, d) =>
-      Dedup.passageDedup(docs(s, d), "doc_id", "text", width = 8, minDocs = 2)
-        .orderBy("doc_id")),
-
-    // corpus-level LINE dedup (the RefinedWeb boilerplate rule: a line
-    // repeated across >= 2 DISTINCT documents is removed from ALL of
-    // them). The fixture's documents are single-line, so the gate
-    // first regroups each document's tokens into 8-token lines (the
-    // linear tokenSpans kernel — the fixture's 153 cross-doc duplicate
-    // passages become duplicate LINES) and then drives the real
-    // operator over the multi-line corpus; the oracle rebuilds the
-    // identical lines and replays the drop rule.
-    "q_dedup_lines" -> ((s, d) => {
-      val multi = docs(s, d).select(col("doc_id"),
-        TF.tokenLines(col("text"), 8).as("text"))
-      Dedup.lineDedup(multi, "doc_id", "text").orderBy("doc_id")
-    }),
-
-    // content-defined chunking: rolling-hash (gear/Rabin-family)
-    // boundaries over codepoints — chunk edges move with the content, so
-    // an edited corpus re-chunks only around the edit. Entirely builtin
-    // higher-order functions: zero UDFs, zero shuffles, chunks exploded
-    // row-locally. The oracle replays the identical polynomial
-    // arithmetic in DuckDB (exact integers — boundaries must agree
-    // bit-for-bit).
-    "q_cdc_chunks" -> ((s, d) =>
-      Chunking.cdcChunks(docs(s, d))
-        .orderBy("doc_id", "chunk")),
-
-    // chunk-level exact dedup over the CDC chunks: recurring spans
-    // (boilerplate, templates) by content hash. One shuffle, on the
-    // 16-byte hash at chunk cardinality, with map-side partial agg.
-    "q_cdc_dedup" -> ((s, d) =>
-      Chunking.chunkDuplicates(docs(s, d), minDocs = 2)
-        .orderBy("chunk_hash")),
-
-    // per-document boilerplate ratio: the fraction of a doc's chunks
-    // duplicated corpus-wide — the quality signal only the chunk grain
-    // sees (not whole-doc-dup, not line-aligned)
-    "q_boilerplate" -> ((s, d) =>
-      Chunking.boilerplateRatio(docs(s, d))
-        .orderBy("doc_id")),
-
-    // fixed-size OVERLAPPING token windows (12 tokens, stride 8): the
-    // model-context-defined passage grain an embedding/RAG pipeline
-    // encodes, vs cdcChunks' content-defined grain. Zero shuffles —
-    // enumeration, slicing and hashing are row-local codegen; the
-    // oracle replays window starts, clipping and the md5 span id
-    "q_token_windows" -> ((s, d) =>
-      Chunking.tokenWindows(docs(s, d), size = 12, stride = 8)
-        .orderBy("doc_id", "win")),
-
-    // at-ingest novelty: the same delta streamed through a real
-    // file-source replay (4 chunks, each its own micro-batch) against
-    // the persisted index — per-CHUNK verdicts, fully stateless
-    // (row-local CDC kernel + stream-static join), so the replay must
-    // equal the batch verdicts exactly; the oracle is the batch SQL
-    "q_chunk_novelty_stream" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      val all = docs(s, d)
-      val corpus = all.where(col("doc_id") % 4 =!= 3)
-      val delta = all.where(col("doc_id") % 4 === 3)
-        .select(col("doc_id"), col("text"))
-        .unionAll(corpus.where(col("doc_id") % 8 === 0)
-          .select((col("doc_id") + 500000).as("doc_id"), col("text")))
-      val tag = idxTag(s, d)
-      val idx = chunkIdxCache.computeIfAbsent(tag, _ =>
-        Chunking.buildChunkIndex(corpus, "doc_id", "text",
-          s"graft_chunk_idx_$tag",
-          s"${sys.props("java.io.tmpdir")}/graft-chunk-idx-$tag"))
-      graft.streaming.StreamingNovelty.verdictReplay(delta, "doc_id",
-          "text", idx, pmod(col("doc_id"), lit(4)), 4)
-        .orderBy("id", "chunk")
-    }),
-
-    // THE CAPSTONE COMPOSITION — a daily incremental-ingest pipeline in
-    // ONE plan: the delta is (1) novelty-scored against the persisted
-    // chunk index (re-crawls drop at novelty < 0.3), (2) quality-scored
-    // by the corpus-trained held-out LM (avg_lp >= -4.5), and (3)
-    // fuzzy-decontaminated against the benchmark split (Jaccard >=
-    // 0.35 drops). Every stage is separately oracle-verified; this gate
-    // proves they COMPOSE — one delta scan feeding three filters whose
-    // joins are all id- or hash-keyed, nothing corpus-sized broadcast.
-    "q_incremental_pipeline" -> ((s, d) => {
-      val all = docs(s, d)
-      val corpus = all.where(col("doc_id") % 4 =!= 3)
-      val delta = all.where(col("doc_id") % 4 === 3)
-        .select(col("doc_id"), col("text"))
-        .unionAll(corpus.where(col("doc_id") % 8 === 0)
-          .select((col("doc_id") + 500000).as("doc_id"), col("text")))
-      val bench = corpus.where(col("doc_id") % 10 === 7)
-      val tag = idxTag(s, d)
-      val idx = chunkIdxCache.computeIfAbsent(tag, _ =>
-        Chunking.buildChunkIndex(corpus, "doc_id", "text",
-          s"graft_chunk_idx_$tag",
-          s"${sys.props("java.io.tmpdir")}/graft-chunk-idx-$tag"))
-      val nov = Chunking.deltaNovelty(delta, "doc_id", "text", idx)
-        .where(col("novelty") >= 0.3)
-        .select(col("doc_id"), col("novelty"))
-      val lm = graft.operators.CorpusStats.bigramLogProbAgainst(
-          corpus, delta, "doc_id", "text")
-        .where(col("avg_lp") >= -4.5)
-        .select(col("doc").as("doc_id"), col("avg_lp"))
-      val dirty = Contamination.flagContaminatedFuzzy(delta, "doc_id",
-          "text", bench, "doc_id", "text", 3, 0.35)
-        .select(col("doc").as("doc_id"))
-      nov.join(lm, "doc_id")
-        .join(dirty, Seq("doc_id"), "left_anti")
-        .orderBy("doc_id")
-    }),
-
-    // snapshot-to-snapshot chunk diff: old = the corpus; new = edits
-    // appended to every 5th doc, every 11th-mod-3 doc dropped, every
-    // 13th-mod-1 doc duplicated under a new id. Multiset chunk
-    // semantics (retained + removed = n_old per doc); the change ratio
-    // is the symmetric difference over total chunk slots. One shuffle
-    // of (id, hash, count) triples — text never moves.
-    "q_chunk_diff" -> ((s, d) => {
-      val all = docs(s, d).select(col("doc_id"), col("text"))
-      val newer = all.where(col("doc_id") % 11 =!= 3)
-        .select(col("doc_id"),
-          when(col("doc_id") % 5 === 0,
-            concat(col("text"), lit(" APPENDED SNAPSHOT EDIT")))
-            .otherwise(col("text")).as("text"))
-        .unionAll(all.where(col("doc_id") % 13 === 1)
-          .select((col("doc_id") + 600000).as("doc_id"), col("text")))
-      Chunking.chunkDiff(all, newer, "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // incremental-crawl novelty against the persisted chunk index:
-    // corpus (doc_id % 4 != 3) is indexed once (bucketed 16-byte chunk
-    // hashes, no bodies); the delta — fresh docs plus re-keyed verbatim
-    // COPIES of corpus docs (+500000) — scores per-doc chunk novelty
-    // against it. The copies must come back novelty = 0 (every chunk
-    // seen), making the seen-hash branch non-vacuous; CDC boundaries
-    // make the verdict robust to partial edits, which offset slicing
-    // would not be.
-    "q_chunk_novelty" -> ((s, d) => {
-      val all = docs(s, d)
-      val corpus = all.where(col("doc_id") % 4 =!= 3)
-      val delta = all.where(col("doc_id") % 4 === 3)
-        .select(col("doc_id"), col("text"))
-        .unionAll(corpus.where(col("doc_id") % 8 === 0)
-          .select((col("doc_id") + 500000).as("doc_id"), col("text")))
-      val tag = idxTag(s, d)
-      val idx = chunkIdxCache.computeIfAbsent(tag, _ =>
-        Chunking.buildChunkIndex(corpus, "doc_id", "text",
-          s"graft_chunk_idx_$tag",
-          s"${sys.props("java.io.tmpdir")}/graft-chunk-idx-$tag"))
-      Chunking.deltaNovelty(delta, "doc_id", "text", idx)
-        .orderBy("doc_id")
-    }),
-
-    // exact dedup of a delta against the persisted fingerprint index
-    // (16-byte keys, no bodies) — same corpus/delta split and memo
-    // pattern as q_dedup_incremental. The documents table has no exact
-    // dups, so the delta also carries re-keyed verbatim COPIES of
-    // corpus docs (+500000): those must come back keep=false, making
-    // the seen-fingerprint branch non-vacuous in the gate.
-    "q_dedup_exact_incr" -> ((s, d) => {
-      val all = docs(s, d)
-      val corpus = all.where(col("doc_id") % 4 =!= 3)
-      val delta = all.where(col("doc_id") % 4 === 3)
-        .select(col("doc_id"), col("text"))
-        .unionAll(corpus.where(col("doc_id") % 8 === 0)
-          .select((col("doc_id") + 500000).as("doc_id"), col("text")))
-      val tag = idxTag(s, d)
-      val idx = exactIdxCache.computeIfAbsent(tag, _ =>
-        Dedup.buildExactIndex(corpus, "doc_id", "text",
-          s"graft_fp_idx_$tag",
-          s"${sys.props("java.io.tmpdir")}/graft-fp-idx-$tag"))
-      Dedup.exactAgainstIndex(delta, "doc_id", "text", idx)
-        .orderBy("doc_id")
-    }),
-
-    // incremental line dedup: the delta is rewritten against the
-    // PERSISTED corpus line-frequency index (additive distinct-doc
-    // slices, folded Exchange-free out of their lfp buckets) — equal
-    // by contract to lineDedup over corpus ∪ delta restricted to the
-    // delta's docs, which is exactly what the oracle replays. Same
-    // corpus/delta split and memo pattern as q_dedup_exact_incr; same
-    // 8-token line construction as q_dedup_lines.
-    "q_dedup_lines_incr" -> ((s, d) => {
-      val all = docs(s, d).select(col("doc_id"),
-        TF.tokenLines(col("text"), 8).as("text"))
-      val corpus = all.where(col("doc_id") % 4 =!= 3)
-      val delta = all.where(col("doc_id") % 4 === 3)
-      val tag = idxTag(s, d)
-      val idx = lineIdxCache.computeIfAbsent(tag, _ =>
-        Dedup.buildLineIndex(corpus, "doc_id", "text",
-          s"graft_lf_idx_$tag",
-          s"${sys.props("java.io.tmpdir")}/graft-lf-idx-$tag"))
-      Dedup.lineDedupAgainstIndex(delta, "doc_id", "text", idx)
-        .orderBy("doc_id")
-    }),
-
-    // INCREMENTAL substring dedup: the delta quarter probes a persisted
-    // gram-frequency index of the frozen three quarters — only delta
-    // text is scanned, corpus history contributes 16-byte hashes +
-    // counts folded Exchange-free out of the bucketed table
-    // (IncrementalDedupSpec pins the plan). Under the disjoint-ids
-    // guard the result EQUALS duplicateSpans(corpus ∪ delta) restricted
-    // to delta docs — which is exactly what the oracle computes, so the
-    // incremental==batch contract is ORACLE-gated, not just spec-pinned
-    "q_dedup_spans_incr" -> ((s, d) => {
-      val all = islandDocs(docs(s, d))
-      val corpus = all.where(col("doc_id") % 4 =!= 3)
-      val delta = all.where(col("doc_id") % 4 === 3)
-      val tag = idxTag(s, d)
-      val idx = spanIdxCache.computeIfAbsent(tag, _ =>
-        Dedup.buildSpanIndex(corpus, "doc_id", "text", 20,
-          s"graft_span_idx_$tag",
-          s"${sys.props("java.io.tmpdir")}/graft-span-idx-$tag"))
-      Dedup.duplicateSpansAgainstIndex(delta, "doc_id", "text", idx)
-        .select(col("doc").as("doc_id"), col("span_start"),
-          col("span_end"), col("span_len"))
-        .orderBy("doc_id", "span_start")
-    }),
-
-    "q_dedup_jaccard" -> ((s, d) =>
-      Dedup.jaccardPairs(docs(s, d), "doc_id", "text", 3, 0.8)
-        .orderBy("d1", "d2")),
-
-    // ASYMMETRIC containment dedup (|∩| / min): catches the short-doc-
-    // quoted-inside-long-doc mode Jaccard scores arbitrarily low; the
-    // prefix lemma applies to the SMALLER side only (scaladoc)
-    "q_dedup_containment" -> ((s, d) =>
-      Dedup.containmentPairs(docs(s, d), "doc_id", "text", 3, 0.6)
-        .orderBy("d1", "d2")),
-
-    // per-source data-card report: docs, tokens, exact-dup rate, mean
-    // quality, DISCRETE median length — the audit table a curation run
-    // publishes
-    "q_corpus_report" -> ((s, d) =>
-      graft.operators.CorpusStats.corpusReport(docs(s, d), "doc_id",
-          "source", "text")
-        .orderBy("src")),
-
-    // cross-source overlap matrix: corpus-level shingle-set Jaccard +
-    // containment per source pair — the mixture-planning signal priced
-    // BEFORE any per-document dedup runs
-    "q_source_overlap" -> ((s, d) =>
-      graft.operators.CorpusStats.sourceOverlap(docs(s, d), "source",
-          "text", 3)
-        .orderBy("src1", "src2")),
-
-    // per-source unigram KL divergence against the corpus blend — the
-    // language-DRIFT complement of the overlap matrix (overlap prices
-    // repeated content, KL prices unlike-the-blend language; the
-    // DoReMi/DSIR line measures domain shift exactly this way). MLE
-    // needs no smoothing: every stratum word occurs in the corpus.
-    "q_source_kl" -> ((s, d) =>
-      graft.operators.CorpusStats.sourceDivergence(docs(s, d), "source",
-          "text")
-        .select(col("grp").as("source"), col("n_tokens"), col("kl"))
-        .orderBy("source")),
-
-    // DSIR importance weights (Xie et al., NeurIPS 2023): per-document
-    // log weight of the target-slice (English docs) hashed-unigram
-    // distribution over the raw blend — 512 md5-prefix buckets (the
-    // engine's seed-free hash convention, SQL-replayable), add-0.5
-    // smoothing. The scoring step a distribution-matched resample
-    // (weightedSample / quantileFilter downstream) runs on.
-    "q_dsir_weights" -> ((s, d) =>
-      graft.operators.Selection.dsirWeights(docs(s, d),
-          col("lang") === "en", "doc_id", "text")
-        .select(col("doc").as("doc_id"), col("n_tokens"),
-          col("dsir_weight"))
-        .orderBy("doc_id")),
-
-    // quality-classifier TRAINING (the CCNet/fastText surrogate):
-    // 6 rounds of batch-GD logistic regression on hashed-unigram
-    // presence features, gated through the scores of EVERY doc under
-    // the learned weights. Integer micro-unit weights make training
-    // bit-replayable (margins are exact BIGINT sums; the only
-    // order-dependent float sums collapse at the integer update
-    // rounding) — the oracle replays all 6 rounds. BIGINT+BOOL output.
-    "q_quality_classifier" -> ((s, d) => {
-      val dd = docs(s, d)
-      val (w, b) = graft.operators.Selection.trainQualityClassifier(
-        dd, col("source") === "src1", "doc_id", "text",
-        iters = 6, lr = 0.5, buckets = 512)
-      graft.operators.Selection.scoreQualityClassifier(dd, "doc_id",
-          "text", w, b)
-        .select(col("doc").as("doc_id"), col("score_micro"), col("pred"))
-        .orderBy("doc_id")
-    }),
-
-    // THE DELIVERY CAPSTONE — this round's additions composed as ONE
-    // declarative plan: (1) within-doc repeated-line removal (codegen
-    // kernel), (2) corpus-level line dedup over the CLEANED docs
-    // (remove-all rule — after step 1 a line occurs at most once per
-    // doc, so distinct-doc counts are plain doc counts), (3) drop
-    // empty survivors, (4) deterministic shard manifest of the kept
-    // payloads. Line text crosses exactly one shuffle (the doc-keyed
-    // reassembly join); the frequency stream and the manifest are
-    // hash-only.
-    "q_delivery_pipeline" -> ((s, d) => {
-      val multi = docs(s, d).select(col("doc_id"),
-        TF.dropRepeatedLines(
-          TF.tokenLines(coalesce(col("text"), lit("")), 8)).as("text"))
-      val kept = Dedup.lineDedup(multi, "doc_id", "text")
-        .where(col("n_kept") >= 1)
-        .select(col("doc_id"),
-          length(col("kept_text")).cast("long").as("n_chars"))
-      graft.operators.Sampling.shardManifest(kept, "doc_id", "n_chars",
-          4, salt = "deliver")
-        .orderBy("shard")
-    }),
-
-    // THE CURATION CAPSTONE — a mixture-build pipeline in ONE
-    // declarative plan: (1) per-source quality floor (discrete p25
-    // length threshold, the flip-immune quantileFilter), (2) exact
-    // dedup keep-first by fingerprint, (3) temperature flattening at
-    // alpha=0.5, (4) packing into 2048-token sequences. Every stage is
-    // separately oracle-verified; this gate proves they COMPOSE — the
-    // only shuffles are the stage-inherent ones (tiny group-threshold
-    // frames, the 16-byte fingerprint window, per-stratum windows),
-    // document text never crosses a shuffle after the fingerprint, and
-    // nothing corpus-sized ever broadcasts.
-    "q_curation_pipeline" -> ((s, d) => {
-      val all = docs(s, d)
-        .select(col("doc_id"), col("source"), col("n_chars"), col("text"))
-      val q = graft.operators.Features.quantileFilter(
-        all, "source", "n_chars", 0.25)
-      val kept = q
-        .withColumn("__fp", TF.fingerprint(col("text")))
-        .withColumn("__keep", min(col("doc_id")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("__fp"))))
-        .where(col("doc_id") === col("__keep"))
-        .select(col("doc_id"), col("source"),
-          TF.tokenCount(col("text")).cast("bigint").as("n_tok"))
-      val mixed = graft.operators.Sampling.temperatureSample(
-        kept, "doc_id", "source", rate = 4.0, alpha = 0.5, salt = "cur")
-      graft.operators.Sampling.packSequences(
-          mixed, "doc_id", "source", "n_tok", 2048L, salt = "cur")
-        .select(col("doc_id"), col("source"), col("n_tok"),
-          col("__offset"), col("__seq"))
-        .orderBy("doc_id")
-    }),
-
-    // pairs → transitive closure → survivor per duplicate cluster: the
-    // verdict table a training-data filter actually joins against.
-    // Large-star/small-star connected components; oracle = the same
-    // jaccard pairs closed with a DuckDB recursive CTE.
-    "q_dedup_clusters" -> ((s, d) =>
-      Clustering.dedupVerdicts(
-          Dedup.jaccardPairs(docs(s, d), "doc_id", "text", 3, 0.8),
-          "d1", "d2")
-        .orderBy("id")),
-
-    // RefinedWeb-style survivor refinement: each duplicate cluster
-    // keeps its best-QUALITY member (6-rounded, ties by id) instead of
-    // its minimum id — dedup should improve the corpus, not freeze
-    // crawl order. Singletons (docs in no pair) always survive.
-    "q_dedup_best" -> ((s, d) => {
-      val dd = docs(s, d)
-      Clustering.bestOfCluster(
-          dd.select(col("doc_id"),
-            round(TF.qualityScore(col("text")), 6).as("quality")),
-          Dedup.jaccardPairs(dd, "doc_id", "text", 3, 0.8),
-          "doc_id", "quality")
-        .select(col("doc_id"), col("component"), col("quality"),
-          col("keep"))
-        .orderBy("doc_id")
-    }),
-
-    // same contract as q_dedup_jaccard; LSH recall at threshold 0.8 with
-    // 32 bands x 2 rows is ~1-1e-14, so the exact-jaccard oracle applies
-    "q_dedup_minhash" -> ((s, d) =>
-      Dedup.minhashPairs(docs(s, d), "doc_id", "text", 3, 0.8)
-        .orderBy("d1", "d2")),
-
-    // incremental dedup against a persisted bucketed signature index:
-    // corpus = doc_id % 4 != 3 is indexed once (bucketed band-key +
-    // shingle tables), delta = doc_id % 4 == 3 dedups against it —
-    // the emitted pairs are exactly the batch pairs touching the delta
-    // (union-equivalence, IncrementalDedupSpec), which is what the
-    // oracle's `d1 % 4 = 3 OR d2 % 4 = 3` filter expresses. The index
-    // side of the candidate join reads its buckets Exchange-free.
-    // The index is built ONCE per (session, sf-dir) and reused across
-    // invocations — that IS the operator's contract (signatures are
-    // computed at write time, deltas probe a persisted artifact);
-    // rebuilding an immutable index on every call would measure the
-    // harness, not the operator. The first invocation pays the build.
-    // The table NAME and path carry the same (session, sf-dir) key as
-    // the cache entry: a shared name would let a second sf-dir in the
-    // same session overwrite the tables behind the first dir's cached
-    // handle — silently wrong pairs, no error.
-    "q_dedup_incremental" -> ((s, d) => {
-      val all = docs(s, d)
-      val tag = idxTag(s, d)
-      val idx = incIdxCache.computeIfAbsent(tag, _ =>
-        Dedup.buildIndex(all.where(col("doc_id") % 4 =!= 3),
-          "doc_id", "text", s"graft_inc_idx_$tag",
-          s"${sys.props("java.io.tmpdir")}/graft-inc-idx-$tag"))
-      Dedup.pairsAgainstIndex(all.where(col("doc_id") % 4 === 3),
-          "doc_id", "text", idx, 0.8)
-        .orderBy("d1", "d2")
-    }),
-
-    // portable token hash (md5-derived 64-bit, identical in DuckDB) so
-    // the full simhash pipeline is oracle-checked; the xxhash64 kernel
-    // stays the fast default for library callers
-    "q_dedup_simhash" -> ((s, d) =>
-      Dedup.simhashPairs(docs(s, d), "doc_id", "text", 3, portable = true)
-        .select(col("d1"), col("d2"), col("hamming").cast("bigint").as("hamming"))
-        .orderBy("d1", "d2")),
-
-    "q_dedup_embedding" -> ((s, d) =>
-      Dedup.embeddingPairs(emb(s, d), "vec_id", "embedding", 0.4)
-        .orderBy("id1", "id2")),
-
-    // SemDeDup composed at the paper's shape (Abbas et al. 2023):
-    // assign cells against 10 fixed centroids (the ivf-gate
-    // convention), find >= 0.85 pairs WITHIN cells only, keep each
-    // duplicate group's member least similar to its centroid. Shifted
-    // copies (the q_dedup_embedding_lsh construction) provide real
-    // duplicate groups; copies landing in a different cell than their
-    // original are MISSED by design — the paper's recall trade, and
-    // the oracle replays the same assignment so the miss set is
-    // deterministic
-    "q_semdedup" -> ((s, d) => {
-      val base = emb(s, d)
-        .select(col("vec_id"), VF.asDoubles(col("embedding")).as("embedding"))
-      val shifted = base.where(col("vec_id") < 250)
-        .select((col("vec_id") + 100000).as("vec_id"),
-          transform(col("embedding"), x => x + lit(0.08)).as("embedding"))
-      val centroids = base.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      Dedup.semDedup(base.unionAll(shifted), "vec_id", "embedding",
-          centroids, "cid", "cvec", 0.85)
-        .select(col("vid").as("vec_id"), col("cell"), col("cent_sim"),
-          col("component"), col("keep"))
-        .orderBy("vec_id")
-    }),
-
-    // SemDeDup's ε-sweep mode: prune each CELL to a 35% keep fraction
-    // ranked by centroid similarity (least-central kept — diversity),
-    // the boundary on the integer micro-grid so it can never flip on
-    // FP dust. Same corpus/centroid fixture as q_semdedup, so the two
-    // modes' keep sets are directly comparable; no pair join — one
-    // window over the assigned frame
-    "q_semdedup_frac" -> ((s, d) => {
-      val base = emb(s, d)
-        .select(col("vec_id"), VF.asDoubles(col("embedding")).as("embedding"))
-      val shifted = base.where(col("vec_id") < 250)
-        .select((col("vec_id") + 100000).as("vec_id"),
-          transform(col("embedding"), x => x + lit(0.08)).as("embedding"))
-      val centroids = base.where(col("vec_id") < 10)
-        .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      Dedup.semDedupFraction(base.unionAll(shifted), "vec_id",
-          "embedding", centroids, "cid", "cvec", 0.35)
-        .select(col("vid").as("vec_id"), col("cell"), col("cent_sim"),
-          col("rk"), col("n_cell"), col("keep"))
-        .orderBy("vec_id")
-    }),
-
-    // same operator at a near-dup threshold: 0.85 dispatches to the
-    // banded-LSH branch (embeddingPairsLsh), so BOTH candidate-generation
-    // strategies are oracle-gated. The testdata embeddings are near-random
-    // (max pairwise cosine ~0.51), so the corpus is augmented with
-    // deterministically shifted copies (x + 0.08 per element, reproduced
-    // verbatim in the DuckDB oracle): their self-pair cosines spread over
-    // ~[0.76, 0.90], so the 0.85 cut is a real per-pair decision (~80
-    // pairs pass at every SF), not a vacuous 0-row match. dim is passed
-    // explicitly so the gate path is fully lazy — no driver-side collect
-    // anywhere. Deterministic planes + the 1e-9 per-pair miss bound make
-    // the exact quadratic SQL a valid oracle; DedupSpec additionally pins
-    // LSH == exact.
-    "q_dedup_embedding_lsh" -> ((s, d) => {
-      val base = emb(s, d)
-        .select(col("vec_id"), VF.asDoubles(col("embedding")).as("embedding"))
-      val shifted = base.where(col("vec_id") < 250)
-        .select((col("vec_id") + 100000).as("vec_id"),
-          transform(col("embedding"), x => x + lit(0.08)).as("embedding"))
-      Dedup.embeddingPairs(base.unionAll(shifted), "vec_id", "embedding",
-          0.85, dim = 64)
-        .orderBy("id1", "id2")
-    }),
-
-    // embedding delta vs a persisted banded-LSH index: base corpus
-    // signed once into bucketed tables (memoized per session/sf-dir
-    // like the text index), the shifted near-copies probe it as the
-    // delta. Oracle = the batch pair set restricted to pairs touching
-    // the delta ids — union-equivalence, same as q_dedup_incremental.
-    "q_dedup_embedding_incr" -> ((s, d) => {
-      val base = emb(s, d)
-        .select(col("vec_id"), VF.asDoubles(col("embedding")).as("embedding"))
-      val shifted = base.where(col("vec_id") < 250)
-        .select((col("vec_id") + 100000).as("vec_id"),
-          transform(col("embedding"), x => x + lit(0.08)).as("embedding"))
-      val tag = idxTag(s, d)
-      val idx = embIdxCache.computeIfAbsent(tag, _ =>
-        Dedup.buildEmbeddingIndex(base, "vec_id", "embedding",
-          s"graft_emb_idx_$tag",
-          s"${sys.props("java.io.tmpdir")}/graft-emb-idx-$tag",
-          0.85, dim = 64))
-      Dedup.embeddingPairsAgainstIndex(shifted, "vec_id", "embedding", idx)
-        .orderBy("id1", "id2")
-    }),
-
-    // ---- similarity search ----
-
-    "q_knn_bruteforce" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.bruteForceKnn(e.where(col("vec_id") < 5), e,
-          "vec_id", "embedding", 3)
-        .orderBy("qid", "rank")
-    }),
-
-    // contrastive hard negatives: top-k most-similar vectors whose
-    // label DIFFERS — near the anchor, semantically wrong; the filter
-    // composes with any ANN candidate path at scale
-    "q_hard_negatives" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.hardNegatives(e.where(col("vec_id") < 5), e,
-          "vec_id", "embedding", "label", 5)
-        .orderBy("qid", "rank")
-    }),
-
-    // JL dimension reduction 64 -> 16 under the md5-seeded ±1 matrix:
-    // gated as exploded (vec_id, j, y) scalar rows; the sign matrix is
-    // replayed by the oracle from the salt alone, so this pins the
-    // whole projection (matrix derivation, summation, 1/sqrt scaling)
-    "q_random_projection" -> ((s, d) =>
-      Similarity.randomProject(emb(s, d), "embedding", 64, 16, "rp1")
-        .select(col("vec_id"), posexplode(col("rp")).as(Seq("j", "y")))
-        .select(col("vec_id"), col("j").cast("long").as("j"),
-          round(col("y"), 6).as("y"))
-        .orderBy("vec_id", "j")),
-
-    "q_knn_ivf" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.ivfKnn(e.where(col("vec_id").between(100, 104)), e,
-          "vec_id", "embedding",
-          e.where(col("vec_id") < 10), "vec_id", "embedding", 3)
-        .orderBy("qid", "rank")
-    }),
-
-    // whole-corpus kNN GRAPH: every vector's top-3 neighbors via IVF
-    // cells at nProbe=2 — corpus-sized probes, so the cell join is
-    // shuffle-hash on BOTH sides (nothing corpus-sized broadcasts)
-    "q_knn_graph" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.knnGraph(e, "vec_id", "embedding",
-          e.where(col("vec_id") < 10), "vec_id", "embedding",
-          k = 3, nProbe = 2)
-        .orderBy("qid", "rank")
-    }),
-
-    // the graph CONSUMED: kNN edges above cosine 0.4 close into
-    // communities (large-star/small-star) — embedding-level duplicate
-    // groups at corpus scale, the composition knnGraph exists for
-    "q_embedding_communities" -> ((s, d) => {
-      val e = emb(s, d)
-      val edges = Similarity.knnGraph(e, "vec_id", "embedding",
-          e.where(col("vec_id") < 10), "vec_id", "embedding",
-          k = 3, nProbe = 2)
-        .where(col("sim") >= 0.4)
-        .select(col("qid").as("d1"), col("cid").as("d2"))
-      Clustering.dedupVerdicts(edges, "d1", "d2").orderBy("id")
-    }),
-
-    // same query through the PERSISTED cell-partitioned index: cell
-    // assignment (the full-corpus argmax scan) happened once at build,
-    // and the probe reads only the probed cells' partitions (partition
-    // pruning pinned by IvfIndexSpec). Same oracle as q_knn_ivf —
-    // results are identical by construction. Index memoized per
-    // (session, sf-dir) like the dedup index.
-    "q_knn_ivf_indexed" -> ((s, d) => {
-      val e = emb(s, d)
-      val tag = idxTag(s, d)
-      val idx = ivfIdxCache.computeIfAbsent(tag, _ =>
-        Similarity.buildIvfIndex(e, "vec_id", "embedding",
-          e.where(col("vec_id") < 10), "vec_id", "embedding",
-          s"graft_ivf_idx_$tag",
-          s"${sys.props("java.io.tmpdir")}/graft-ivf-idx-$tag"))
-      Similarity.ivfKnnFromIndex(s,
-          e.where(col("vec_id").between(100, 104)),
-          "vec_id", "embedding", idx, 3)
-        .orderBy("qid", "rank")
-    }),
-
-    // SemDeDup READ FROM THE PERSISTED IVF INDEX — the 100 TB path
-    // semDedupAssigned's scaladoc promises, gated: the index's
-    // cell-partitioned corpus table is consumed as the assigned frame
-    // (same memoized index as q_knn_ivf_indexed — assignment is a
-    // once-per-corpus artifact), the own-centroid similarity recovered
-    // with ONE dot per row against the broadcast centroid table. Raw
-    // corpus (near-random vectors), so tau = 0.4 — q_dedup_embedding's
-    // threshold — yields 13 real within-cell pairs
-    "q_semdedup_index" -> ((s, d) => {
-      val e = emb(s, d)
-      val tag = idxTag(s, d)
-      val idx = ivfIdxCache.computeIfAbsent(tag, _ =>
-        Similarity.buildIvfIndex(e, "vec_id", "embedding",
-          e.where(col("vec_id") < 10), "vec_id", "embedding",
-          s"graft_ivf_idx_$tag",
-          s"${sys.props("java.io.tmpdir")}/graft-ivf-idx-$tag"))
-      Dedup.semDedupFromIndex(s, idx, 0.4)
-        .select(col("vid").as("vec_id"), col("cell"), col("cent_sim"),
-          col("component"), col("keep"))
-        .orderBy("vec_id")
-    }),
-
-    // incremental IVF: the index is built over 3/4 of the corpus, the
-    // remaining quarter folds in via extendIvfIndex (assignment against
-    // the PERSISTED centroids, O(delta) appended files). Queries over
-    // the folded index must equal full-corpus IVF at the same centroids
-    // — the oracle is the very same ivfSql as q_knn_ivf/_indexed, so the
-    // gate fails if the fold drops, duplicates, or mis-assigns a single
-    // delta vector that the probed cells should see.
-    "q_knn_ivf_extended" -> ((s, d) => {
-      val e = emb(s, d)
-      val tag = idxTag(s, d)
-      val idx = extIvfIdxCache.computeIfAbsent(tag, _ => {
-        val i = Similarity.buildIvfIndex(
-          e.where(col("vec_id") % 4 =!= 3), "vec_id", "embedding",
-          e.where(col("vec_id") < 10), "vec_id", "embedding",
-          s"graft_ivfx_idx_$tag",
-          s"${sys.props("java.io.tmpdir")}/graft-ivfx-idx-$tag")
-        Similarity.extendIvfIndex(e.where(col("vec_id") % 4 === 3),
-          "vec_id", "embedding", i)
-        i
-      })
-      Similarity.ivfKnnFromIndex(s,
-          e.where(col("vec_id").between(100, 104)),
-          "vec_id", "embedding", idx, 3)
-        .orderBy("qid", "rank")
-    }),
-
-    // Embedding clustering as a data-organization operator: every
-    // vector assigned to its nearest of 10 fixed centroids (argmax
-    // cosine, ties to the smaller cell — a single codegen'd projection,
-    // no join/window, spec-asserted in SimilaritySpec) and summarized
-    // per cluster. The oracle replays the same argmax in DuckDB, so
-    // the gate pins assignment semantics end-to-end — the primitive
-    // under IVF indexing AND any cluster-then-curate pipeline step.
-    "q_embedding_clusters" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.assignCells(e, "vec_id", "embedding",
-          e.where(col("vec_id") < 10), "vec_id", "embedding")
-        .groupBy(col("cell"))
-        .agg(count(lit(1)).as("n_vecs"), min(col("vec_id")).as("min_vec"),
-          max(col("vec_id")).as("max_vec"))
-        .orderBy("cell")
-    }),
-
-    // Persisted IVF-PQ (the FAISS IVFADC layout, Spark-native): one
-    // cell-partitioned table carrying m=16 one-byte PQ codes AND the
-    // original vectors as separate columns — the ADC scan column-prunes
-    // to codes (never reads vectors, spec-asserted via ReadSchema), the
-    // exact-refine tail reads vectors only for top-R candidate ids.
-    // Output rows are the exhaustive probe (nProbe = #cells) + generous
-    // refine = exact brute-force top-k (hashable against the same SQL
-    // as q_knn_pq), cross-joined with a certificate that the PRUNED
-    // nProbe=4 probe still clears recall >= 0.3 over the same index.
-    "q_knn_ivfpq" -> ((s, d) => {
-      val e = emb(s, d)
-      val tag = idxTag(s, d)
-      val idx = ivfPqIdxCache.computeIfAbsent(tag, _ =>
-        Similarity.buildIvfPqIndex(e, "vec_id", "embedding",
-          e.where(col("vec_id") < 10), "vec_id", "embedding",
-          Similarity.trainPq(e, "embedding", m = 16, codesPerSub = 32,
-            seed = 7L),
-          s"graft_ivfpq_idx_$tag",
-          s"${sys.props("java.io.tmpdir")}/graft-ivfpq-idx-$tag"))
-      val q = e.where(col("vec_id") < 5)
-      val exact0 = Similarity.ivfPqKnnFromIndex(s, q, "vec_id",
-        "embedding", idx, 3, nProbe = 10, refine = 48)
-      val exact = if (exact0.storageLevel ==
-          org.apache.spark.storage.StorageLevel.NONE) exact0.cache()
-        else exact0
-      val pruned = Similarity.ivfPqKnnFromIndex(s, q, "vec_id",
-        "embedding", idx, 3, nProbe = 4, refine = 48)
-      exact.crossJoin(
-          broadcast(Similarity.recallCertificate(exact, pruned, 0.3)))
-        .orderBy("qid", "rank")
-    }),
-
-    // k-means-trained IVF (MLlib) with an in-query recall certificate.
-    // Trains on a seeded half-sample with random init (the faiss-style
-    // coarse-quantizer recipe): the 100 TB contract is that centroids
-    // need a sample, not the corpus. The output rows are the
-    // exhaustive-probe (nProbe = #cells = exact) top-k — hashable
-    // against plain brute-force SQL — cross-joined with a one-row
-    // certificate that the pruned nProbe=4 probe over the SAME trained
-    // centroids recalls >= 0.3 of those exact pairs. Recall is
-    // deterministic (seeded sample + seeded init + Lloyd), measured
-    // 5/15 at sf0.001, 7/15 at sf0.01, 10/15 at sf0.1; per-qid recall
-    // ranges 0..1 (qid 0 recalls 0/3 at sf0.01), which is why the
-    // certificate is aggregate, not per-query. If a regression drops
-    // recall below the floor, recall_ok flips false on every row and
-    // the hash compare fails loudly. IvfTrainedSpec additionally pins
-    // the 20-query recall floor (0.4) for this configuration.
-    "q_knn_ivf_trained" -> ((s, d) => {
-      val e = emb(s, d)
-      val cent = Similarity.trainCentroids(e, "embedding", 16,
-        maxIter = 10, sampleFraction = 0.5, initMode = "random")
-      val q = e.where(col("vec_id") < 5)
-      // the exact subtree feeds the output rows AND the certificate —
-      // cache it (idempotently: deterministic training + Seq-equality
-      // expressions make repeat invocations' plans identical) so the
-      // corpus cell-assignment runs once, not twice per action
-      val exact0 = Similarity.ivfKnn(q, e, "vec_id", "embedding",
-        cent, "cell", "centroid", 3, nProbe = 16)
-      val exact = if (exact0.storageLevel ==
-          org.apache.spark.storage.StorageLevel.NONE) exact0.cache()
-        else exact0
-      val approx = Similarity.ivfKnn(q, e, "vec_id", "embedding",
-        cent, "cell", "centroid", 3, nProbe = 4)
-      exact.crossJoin(
-          broadcast(Similarity.recallCertificate(exact, approx, 0.3)))
-        .orderBy("qid", "rank")
-    }),
-
-    // Exhaustive-probe trained IVF: same k-means centroids, but
-    // nProbe = #cells (16) probes EVERY cell, so the search is exact
-    // regardless of what training produced — each corpus vector sits in
-    // exactly one cell and every cell is scanned. That makes the whole
-    // trained path (train -> assign -> probe -> rank) oracle-checkable
-    // against plain brute-force SQL; the pruned nProbe=4 variant above
-    // keeps covering the approximate probe behavior (recall floor in
-    // IvfTrainedSpec).
-    "q_knn_ivf_trained_exact" -> ((s, d) => {
-      val e = emb(s, d)
-      val cent = Similarity.trainCentroids(e, "embedding", 16,
-        maxIter = 10, sampleFraction = 0.5, initMode = "random")
-      Similarity.ivfKnn(e.where(col("vec_id") < 5), e, "vec_id", "embedding",
-          cent, "cell", "centroid", 3, nProbe = 16)
-        .orderBy("qid", "rank")
-    }),
-
-    // SQ8 retrieve-then-refine: the corpus is scanned as 1-byte-per-dim
-    // codes (asymmetric distance against the full-precision query), the
-    // top k*4 candidates re-ranked exactly. Emits the exact top-k rows
-    // plus an in-query certificate that the quantized path's recall
-    // stays >= 0.9 (measured 1.0 at sf0.001/0.01/0.1 — codebook and
-    // scoring are deterministic functions of the corpus).
-    "q_knn_sq8" -> ((s, d) => {
-      val e = emb(s, d)
-      val cb = Similarity.trainSq(e, "embedding")
-      val q = e.where(col("vec_id") < 5)
-      val exact0 = Similarity.bruteForceKnn(q, e, "vec_id", "embedding", 3)
-      val exact = if (exact0.storageLevel ==
-          org.apache.spark.storage.StorageLevel.NONE) exact0.cache()
-        else exact0
-      val approx = Similarity.sqKnn(q, e, "vec_id", "embedding", 3, cb,
-        refine = 4)
-      exact.crossJoin(
-          broadcast(Similarity.recallCertificate(exact, approx, 0.9)))
-        .orderBy("qid", "rank")
-    }),
-
-    // PQ/ADC retrieve-then-refine: corpus scanned via m=16 one-byte
-    // subspace codes (16x compression at 64 dims vs float32 — the
-    // memory decade BEYOND SQ8's 4x), scored per query by m table
-    // lookups, per-partition bounded heaps keeping the shuffle at
-    // partitions x queries x top-R rows, then exact re-rank. Same
-    // certificate discipline as q_knn_sq8: emits exact top-k plus an
-    // in-query recall >= 0.9 certificate (measured 1.0 at the gate's
-    // refine=48 on every sf — near-random vectors are PQ's worst case,
-    // which is exactly why the refine budget is generous here).
-    "q_knn_pq" -> ((s, d) => {
-      val e = emb(s, d)
-      val cb = Similarity.trainPq(e, "embedding", m = 16,
-        codesPerSub = 32, seed = 7L)
-      val q = e.where(col("vec_id") < 5)
-      val exact0 = Similarity.bruteForceKnn(q, e, "vec_id", "embedding", 3)
-      val exact = if (exact0.storageLevel ==
-          org.apache.spark.storage.StorageLevel.NONE) exact0.cache()
-        else exact0
-      val approx = Similarity.pqKnn(q, e, "vec_id", "embedding", 3, cb,
-        refine = 48)
-      exact.crossJoin(
-          broadcast(Similarity.recallCertificate(exact, approx, 0.9)))
-        .orderBy("qid", "rank")
-    }),
-
-    // Banded random-hyperplane LSH at a measured-recall-1.0 band budget:
-    // 4 bits x 48 bands misses a true neighbor at cosine s with per-pair
-    // probability (1 - p^4)^48 (p = 1 - acos(s)/pi); measured as EXACT
-    // top-3 equality vs brute force at sf0.001/sf0.01/sf0.1. Planes are
-    // seeded-deterministic, so the recall is a property of the config,
-    // not of a lucky run — which is what lets this gate use the
-    // brute-force SQL oracle. The config trades pruning for exactness
-    // (near-random 64-d vectors are LSH's worst case); the 6x24 default
-    // stays the practical ANN setting, recall-floored in SimilaritySpec.
-    "q_knn_lsh" -> ((s, d) => {
-      val e = emb(s, d)
-      Similarity.lshKnn(e.where(col("vec_id") < 5), e, "vec_id", "embedding",
-          64, 3, bitsPerBand = 4, numBands = 48)
-        .orderBy("qid", "rank")
-    }),
-
-    // RP→rerank ANN on a PLANTED corpus: the fixture's near-random
-    // vectors put true-neighbor margins inside JL distortion (the
-    // honest r14 boundary), so each query gets three shifted copies
-    // (+0.06/+0.08/+0.10, reproduced verbatim in the oracle) whose
-    // cosines (~0.76..0.92) clear the ~0.5 random field by far more
-    // than the 32-dim projection noise — candidate generation in RP
-    // space then provably recovers them, and the exact rerank restores
-    // full-precision order. Emits exact top-3 + an in-query recall
-    // >= 0.9 certificate (measured 1.0 at sf0.001/0.01/0.1).
-    "q_knn_rp" -> ((s, d) => {
-      val base = emb(s, d)
-        .select(col("vec_id"), VF.asDoubles(col("embedding")).as("embedding"))
-      val qBase = base.where(col("vec_id") < 5)
-      val shifted = Seq(0.06, 0.08, 0.10).zipWithIndex
-        .map { case (delta, i) =>
-          qBase.select((col("vec_id") + (i + 1) * 100000L).as("vec_id"),
-            transform(col("embedding"), x => x + lit(delta)).as("embedding"))
-        }
-        .reduce(_ unionAll _)
-      val corpus = base.unionAll(shifted)
-      val exact0 = Similarity.bruteForceKnn(qBase, corpus,
-        "vec_id", "embedding", 3)
-      val exact = if (exact0.storageLevel ==
-          org.apache.spark.storage.StorageLevel.NONE) exact0.cache()
-        else exact0
-      val approx = Similarity.rpKnn(qBase, corpus, "vec_id", "embedding",
-        64, 32, "rpknn", 3, refine = 16)
-      exact.crossJoin(
-          broadcast(Similarity.recallCertificate(exact, approx, 0.9)))
-        .orderBy("qid", "rank")
-    }),
-
-    // deterministic train/val/test split + sample bucket (repeatable
-    // across engines: md5-based bucketing)
-    "q_sample_split" -> ((s, d) =>
-      docs(s, d)
-        .select(col("doc_id"),
-          TF.hashBucket(col("doc_id").cast("string"), 100).as("bucket"),
-          TF.splitAssign(col("doc_id").cast("string"), 80, 10).as("split"))
-        .orderBy("doc_id")),
-
-    // corpus mixing: per-source token budgets drawn by salted-hash order
-    // — deterministic, append-stable, engine-portable (same md5 recipe
-    // as splitAssign, so DuckDB replicates the draw byte-for-byte)
-    // deterministic balanced subset: the 40 docs per language with the
-    // smallest salted portable hash — planner turns the row_number<=n
-    // filter into a pre-shuffle bounded top-n (WindowGroupLimit), so
-    // skewed strata cost n rows per task, not a stratum sort
-    "q_stratified_sample" -> ((s, d) =>
-      graft.operators.Sampling.stratifiedSample(
-          docs(s, d).select(col("doc_id"), col("lang")),
-          "doc_id", "lang", 40, salt = "strat1")
-        .orderBy("lang", "doc_id")),
-
-    // training-shard manifest: deterministic salted-hash shard
-    // assignment + the per-shard audit row a trainer checks before
-    // reading payloads (doc count, payload chars, order-invariant
-    // checksum = sum of per-doc hashes). Pure function of (ids, salt,
-    // nShards) — the oracle replays the md5 convention exactly.
-    "q_shard_manifest" -> ((s, d) =>
-      graft.operators.Sampling.shardManifest(docs(s, d), "doc_id",
-          "n_chars", 8)
-        .orderBy("shard")),
-
-    // Efraimidis–Spirakis weighted sampling without replacement, weight
-    // = n_chars: the oracle replays key = ln(u48)/w and takes the same
-    // top 100. Membership (not key values) is compared — the measured
-    // min adjacent-key gap (~5e-9) is ten orders above cross-engine
-    // libm ulp noise, so the selected set is engine-stable. No window,
-    // no shuffle: TakeOrderedAndProject keeps a k-bounded heap per task.
-    "q_weighted_sample" -> ((s, d) =>
-      graft.operators.Sampling.weightedSample(
-          docs(s, d).select(col("doc_id"), col("lang"), col("n_chars")),
-          "doc_id", "n_chars", 100, salt = "wsamp")
-        .orderBy("doc_id")),
-
-    // length-bucketed batching report: quartile boundaries (DISCRETE
-    // data-value quantiles — integer boundaries drawn from the data, so
-    // bucket edges are hash-stable cross-engine), row-local bucket
-    // assign, per-bucket pad-to-max waste
-    "q_length_buckets" -> ((s, d) =>
-      graft.operators.Sampling.lengthBuckets(
-          docs(s, d).select(col("doc_id"), col("n_chars")),
-          "doc_id", "n_chars")
-        .orderBy("bucket")),
-
-    // the per-stratum variant: 25 docs per language, drawn ∝ n_chars
-    // within the stratum; WindowGroupLimit bounds the shuffle at k rows
-    // per (task, stratum)
-    "q_weighted_stratum" -> ((s, d) =>
-      graft.operators.Sampling.weightedSamplePerStratum(
-          docs(s, d).select(col("doc_id"), col("lang"), col("n_chars")),
-          "doc_id", "lang", "n_chars", 25, salt = "wsamp")
-        .orderBy("doc_id")),
-
-    // per-domain quality cap (C4-style host cap): keep the 15
-    // best-scoring docs per source, ranked on the 6-rounded quality
-    // score so the cut is engine-reproducible; WindowGroupLimit bounds
-    // the shuffle at n rows per (task, stratum)
-    "q_domain_cap" -> ((s, d) =>
-      graft.operators.Sampling.capPerStratum(
-          docs(s, d).select(col("doc_id"), col("source"),
-            round(TF.qualityScore(col("text")), 6).as("quality")),
-          "doc_id", "source", "quality", 15)
-        .select(col("doc_id"), col("source"), col("quality"),
-          col("__rk").cast("bigint").as("rk"))
-        .orderBy("source", "rk")),
-
-    // BM25 top-10 per query: one corpus shuffle (tf counts with the doc
-    // length riding along), query set + df + corpus stats broadcast,
-    // ranking on the ROUNDED score so the cut is engine-reproducible
-    "q_bm25" -> ((s, d) =>
-      graft.operators.CorpusStats.bm25TopK(docs(s, d), "doc_id", "text",
-          Map("q1" -> "fast vector scan", "q2" -> "customer query data",
-              "q3" -> "window merge batch stream"), 10)
-        .select(col("query_id"), col("doc").as("doc_id"), col("score"),
-          col("rank").cast("bigint").as("rank"))
-        .orderBy("query_id", "rank")),
-
-    "q_corpus_mix" -> ((s, d) =>
-      graft.operators.Sampling.byTokenBudget(
-          docs(s, d).select(col("doc_id"), col("source"),
-            TF.tokenCount(col("text")).cast("bigint").as("n_tok")),
-          "doc_id", "source",
-          "n_tok", Map("src0" -> 2000L, "src1" -> 500L, "src2" -> 100000L),
-          salt = "mix1")
-        .select(col("doc_id"), col("source"), col("n_tok"), col("__cum"))
-        .orderBy("doc_id")),
-
-    // per-source z-score of a quality signal: groupBy moments + hash
-    // join back, no window sort; zero-variance groups normalize to 0
-    "q_zscore" -> ((s, d) =>
-      graft.operators.Features.zscore(
-          docs(s, d).select(col("doc_id"), col("source"), col("n_chars")),
-          "source", Seq("n_chars"))
-        .orderBy("doc_id")),
-
-    // keep docs at/above their source's DISCRETE p75 length (smallest
-    // value whose cumulative count reaches ceil(0.75 n) — an actual
-    // data value, so the threshold compare is integer-vs-integer and
-    // flip-immune) — the per-stratum threshold filter quality
-    // pipelines run
-    "q_quantile_filter" -> ((s, d) =>
-      graft.operators.Features.quantileFilter(
-          docs(s, d).select(col("doc_id"), col("source"), col("n_chars")),
-          "source", "n_chars", 0.75)
-        .orderBy("doc_id")),
-
-    // robust z-score: (x - median)/MAD per source, both DISCRETE data
-    // values — outlier-immune normalization, integer-exact up to the
-    // one final division
-    "q_robust_zscore" -> ((s, d) =>
-      graft.operators.Features.robustZscore(
-          docs(s, d).select(col("doc_id"), col("source"), col("n_chars")),
-          "source", "n_chars")
-        .orderBy("doc_id")),
-
-    // winsorize document lengths into [p05, p95] discrete bounds — the
-    // outlier clip before moment-based normalization
-    "q_winsorize" -> ((s, d) =>
-      graft.operators.Features.winsorize(
-          docs(s, d).select(col("doc_id"), col("n_chars")),
-          "n_chars", 0.05, 0.95)
-        .orderBy("doc_id")),
-
-    // temperature (alpha=0.5) mixture flattening: per source keep
-    // min(n, floor(2 * sqrt(n))) docs in the salted-hash order — sqrt
-    // is IEEE correctly-rounded, so the targets are engine-exact
-    "q_temperature_mix" -> ((s, d) =>
-      graft.operators.Sampling.temperatureSample(
-          docs(s, d).select(col("doc_id"), col("source")),
-          "doc_id", "source", rate = 2.0, alpha = 0.5, salt = "tmix")
-        .select(col("doc_id"), col("source"))
-        .orderBy("doc_id")),
-
-    // weighted corpus upsampling: mixing weight 2.25 = two copies of
-    // every src0 doc + a deterministic 25% third copy; 0.5 thins src1;
-    // zero-shuffle broadcast + map-side explode
-    "q_corpus_upsample" -> ((s, d) =>
-      graft.operators.Sampling.byWeight(
-          docs(s, d).select(col("doc_id"), col("source")),
-          "doc_id", "source",
-          Map("src0" -> 2.25, "src1" -> 0.5, "src2" -> 1.0, "src3" -> 0.0),
-          salt = "up1")
-        .select(col("doc_id"), col("source"), col("__rep"))
-        .orderBy("doc_id", "__rep")),
-
-    // sequence packing: concat-then-chunk into 2048-token training
-    // sequences per source, deterministic salted-hash order — emits each
-    // doc's token offset and starting sequence ordinal
-    "q_pack_sequences" -> ((s, d) =>
-      graft.operators.Sampling.packSequences(
-          docs(s, d).select(col("doc_id"), col("source"),
-            TF.tokenCount(col("text")).cast("bigint").as("n_tok")),
-          "doc_id", "source", "n_tok", 2048L, salt = "pack1")
-        .select(col("doc_id"), col("source"), col("n_tok"),
-          col("__offset"), col("__seq"))
-        .orderBy("doc_id")),
-
-    // covering slices over the same packing: one row per (doc, seq)
-    // intersection with doc-relative start/len — boundary docs emit one
-    // slice per spanned sequence, so per-doc lens sum to n_tok and
-    // per-seq lens sum to the 2048 budget except each stratum's tail
-    // (slice-algebra invariants pinned in SamplingSpec; the oracle
-    // re-derives every slice in SQL)
-    "q_pack_slices" -> ((s, d) =>
-      graft.operators.Sampling.explodePackedSlices(
-          docs(s, d).select(col("doc_id"), col("source"),
-            TF.tokenCount(col("text")).cast("bigint").as("n_tok")),
-          "doc_id", "source", "n_tok", 2048L, salt = "pack1")
-        .orderBy("doc_id", "seq")),
-
-    // fill-in-the-middle construction: a deterministic 60% of docs
-    // split at two salted-hash cuts and reassemble PSM
-    // (<PRE>p<SUF>s<MID>m); the rest pass through. Row-local, zero
-    // shuffle; lengths + md5 pin the exact reassembled bytes
-    "q_fim_split" -> ((s, d) =>
-      graft.operators.Sampling.fimSplit(docs(s, d), "doc_id", "text",
-          pct = 60, salt = "fim")
-        .select(col("doc_id"), col("fim_applied"), col("n_prefix"),
-          col("n_middle"), col("n_suffix"),
-          md5(col("fim_text").cast("binary")).as("fim_md5"))
-        .orderBy("doc_id")),
-
-    // exact duplicate-SPAN detection (the Lee-et-al substring-dedup
-    // family): maximal character intervals whose every 20-gram repeats
-    // somewhere in the corpus. The fixture text is pool-words (nearly
-    // everything repeats), so a unique md5 island is spliced into each
-    // doc at char 61 — span boundaries then fall mid-document and the
-    // interval MERGE genuinely executes (two+ islands per doc)
-    "q_dedup_spans" -> ((s, d) =>
-      graft.operators.Dedup.duplicateSpans(
-          islandDocs(docs(s, d)), "doc_id", "text", 20)
-        .select(col("doc").as("doc_id"), col("span_start"),
-          col("span_end"), col("span_len"))
-        .orderBy("doc_id", "span_start")),
-
-    // TOKEN-grain duplicate spans (the grain Lee et al. actually use):
-    // maximal token intervals whose every 5-token window repeats,
-    // reported as char spans (cutSpans-ready) + token bounds. Same
-    // two-shuffle plan as the char form; pre-shuffle volume is
-    // ~minTokens x the TOKEN stream, ~mean-token-length cheaper than
-    // the every-char-position form
-    "q_dedup_spans_tokens" -> ((s, d) =>
-      graft.operators.Dedup.duplicateTokenSpans(
-          islandDocs(docs(s, d)), "doc_id", "text", 5)
-        .select(col("doc").as("doc_id"), col("span_start"),
-          col("span_end"), col("span_len"), col("tok_start"),
-          col("tok_end"), col("n_tok"))
-        .orderBy("doc_id", "span_start")),
-
-    // the token-grain rewrite half: token spans carry char bounds, so
-    // cutSpans consumes them unchanged — kept-length + md5 pin the
-    // exact surviving bytes of the paper-faithful grain
-    "q_dedup_spans_tokens_cut" -> ((s, d) => {
-      val t2 = islandDocs(docs(s, d))
-      graft.operators.Dedup.cutSpans(t2,
-          graft.operators.Dedup.duplicateTokenSpans(t2, "doc_id",
-            "text", 5),
-          "doc_id", "text")
-        .select(col("doc").as("doc_id"),
-          length(col("kept_text")).cast("bigint").as("n_kept"),
-          md5(col("kept_text").cast("binary")).as("kept_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // the rewrite half: the spans CUT out of the text (Lee et al.
-    // remove spans, not documents). Kept-length + md5 pin the exact
-    // surviving bytes; docs reassemble through ONE doc-keyed shuffle
-    "q_dedup_spans_cut" -> ((s, d) => {
-      val t2 = islandDocs(docs(s, d))
-      graft.operators.Dedup.cutSpans(t2,
-          graft.operators.Dedup.duplicateSpans(t2, "doc_id", "text", 20),
-          "doc_id", "text")
-        .select(col("doc").as("doc_id"),
-          length(col("kept_text")).cast("bigint").as("n_kept"),
-          md5(col("kept_text").cast("binary")).as("kept_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // span-curation CAPSTONE: substring dedup -> cut -> post-cut
-    // length floor (a doc reduced below 40 chars drops — the Lee-et-al
-    // follow-up) -> re-tokenize the surviving bytes -> salted-hash
-    // sequence packing per source. One composition, every stage
-    // separately gated; the curated token stream is what a trainer
-    // actually reads after substring dedup
-    "q_span_pipeline" -> ((s, d) => {
-      val t2 = islandDocs(docs(s, d))
-      val kept = graft.operators.Dedup.cutSpans(t2,
-          graft.operators.Dedup.duplicateSpans(t2, "doc_id", "text", 20),
-          "doc_id", "text")
-        .where(length(col("kept_text")) >= 40)
-        .select(col("doc").as("doc_id"), col("kept_text"))
-      val toks = kept
-        .join(docs(s, d).select(col("doc_id"), col("source")), "doc_id")
-        .select(col("doc_id"), col("source"),
-          TF.tokenCount(col("kept_text")).cast("bigint").as("n_tok"))
-      graft.operators.Sampling.packSequences(toks, "doc_id", "source",
-          "n_tok", 256L, salt = "span1")
-        .select(col("doc_id"), col("source"), col("n_tok"),
-          col("__offset").cast("bigint").as("off"),
-          col("__seq").cast("bigint").as("seq"))
-        .orderBy("doc_id")
-    }),
-
-    // benchmark decontamination: docs sharing an 8-gram with the
-    // "benchmark" (doc_id < 10 as a stand-in eval set)
-    "q_decontaminate" -> ((s, d) => {
-      val corpus = docs(s, d)
-      Contamination.flagContaminated(corpus, "doc_id", "text",
-          corpus.where(col("doc_id") < 10), "doc_id", "text", 8)
-        .orderBy("doc")
-    }),
-
-    // the same contamination check AT INGEST: the corpus streamed
-    // through a real file-source replay against the broadcast bench
-    // shingle set — fully stateless (row-local shingle explode +
-    // stream-static broadcast join), so the per-(doc, shingle) hit
-    // stream must equal the batch run exactly; the oracle is batch SQL
-    "q_decontaminate_stream" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      val corpus = docs(s, d)
-      graft.streaming.StreamingContamination.hitsReplay(
-          corpus, "doc_id", "text",
-          corpus.where(col("doc_id") < 10), "doc_id", "text", 8,
-          pmod(col("doc_id"), lit(3)), 3)
-        .orderBy("doc", "s")
-    }),
-
-    // same result as q_decontaminate via the large-benchmark plan: a
-    // Bloom sketch of bench shingles prunes the corpus map-side, the
-    // exact join verifies only survivors (ContaminationSpec pins
-    // exactness even with a deliberately undersized sketch)
-    "q_decontaminate_bloom" -> ((s, d) => {
-      val corpus = docs(s, d)
-      Contamination.flagContaminatedBloom(corpus, "doc_id", "text",
-          corpus.where(col("doc_id") < 10), "doc_id", "text", 8)
-        .orderBy("doc")
-    }),
-
-    // FUZZY decontamination: shingle-set Jaccard >= 0.35 against the
-    // benchmark split — catches paraphrase-level leaks exact n-gram
-    // overlap misses (a sub every 7 words breaks EVERY 8-gram yet keeps
-    // Jaccard ~0.4, the spec's premise); best bench item per doc
-    "q_decontaminate_fuzzy" -> ((s, d) => {
-      val all = docs(s, d)
-      Contamination.flagContaminatedFuzzy(all, "doc_id", "text",
-          all.where(col("doc_id") % 10 === 7), "doc_id", "text",
-          n = 3, threshold = 0.35)
-        .orderBy("doc")
-    }),
-
-    // ---- DSL pipelines (the reference's JSON API, E1-E6 end-to-end) ----
-
-    // count tumbling window via DSL: groupBy discriminator + stall/emit
-    "q_dsl_tumbling" -> ((s, d) => {
-      val p = Dsl.parsePipeline("dsl_tumbling",
-        """{
-          |"metadata": {"input": [{"name":"k","type":"string"},
-          |                       {"name":"value","type":"double"}],
-          |             "output": [{"name":"k","type":"string"},
-          |                        {"name":"emit_seq","type":"long"},
-          |                        {"name":"result","type":"double"}]},
-          |"stages": [{"ref":"#aggregate",
-          |            "settings":{"function":"sum","windowType":"tumbling",
-          |                        "windowSize":"10"},
-          |            "input":{"value":"=$.value"},
-          |            "output":{"pipeline.emit_seq":"=$.__seq",
-          |                      "pipeline.result":"=number.round($.result, 4)"}}]
-          |}""".stripMargin).copy(groupBy = Some("k"))
-      val in = ev(s, d).select(col("user_id").cast("string").as("k"),
-        col("value"), col("event_id").as("__seq"))
-      Pipelines.compileBatch(p, in).orderBy("k", "emit_seq")
-    }),
-
-    // int-avg compat (divergence #1): avg over an int stream truncates
-    // like Go integer division (average.go:75-76), opted in via the
-    // avgCompat=int pipeline setting
-    "q_dsl_avg_int" -> ((s, d) => {
-      val p = Dsl.parsePipeline("dsl_avg_int",
-        """{
-          |"metadata": {"input": [{"name":"k","type":"string"},
-          |                       {"name":"value","type":"long"}],
-          |             "output": [{"name":"k","type":"string"},
-          |                        {"name":"emit_seq","type":"long"},
-          |                        {"name":"result","type":"long"}]},
-          |"stages": [{"ref":"#aggregate",
-          |            "settings":{"function":"avg","windowType":"tumbling",
-          |                        "windowSize":"10","avgCompat":"int"},
-          |            "input":{"value":"=$.value"},
-          |            "output":{"pipeline.emit_seq":"=$.__seq",
-          |                      "pipeline.result":"=$.result"}}]
-          |}""".stripMargin).copy(groupBy = Some("k"))
-      val in = ev(s, d).select(col("user_id").cast("string").as("k"),
-        col("value").cast("long").as("value"), col("event_id").as("__seq"))
-      Pipelines.compileBatch(p, in).orderBy("k", "emit_seq")
-    }),
-
-    // expression mapper + non-zero filter via DSL
-    "q_dsl_filter" -> ((s, d) => {
-      val p = Dsl.parsePipeline("dsl_filter",
-        """{
-          |"metadata": {"input": [{"name":"event_id","type":"long"},
-          |                       {"name":"value","type":"double"}],
-          |             "output": [{"name":"event_id","type":"long"},
-          |                        {"name":"v","type":"double"}]},
-          |"stages": [{"ref":"#filter",
-          |            "settings":{"type":"non-zero"},
-          |            "input":{"value":"=if($.value > 50, 0.0d, $.value)"},
-          |            "output":{"pipeline.v":"=$.value"}}]
-          |}""".stripMargin)
-      val in = ev(s, d).select(col("event_id"), col("value"))
-      Pipelines.compileBatch(p, in).orderBy("event_id")
-    }),
-
-    // timeTumbling window via DSL (timer emission = last event of pane)
-    "q_dsl_time_agg" -> ((s, d) => {
-      val p = Dsl.parsePipeline("dsl_time_agg",
-        """{
-          |"metadata": {"input": [{"name":"event_type","type":"string"},
-          |                       {"name":"value","type":"double"}],
-          |             "output": [{"name":"k","type":"string"},
-          |                        {"name":"emit_seq","type":"long"},
-          |                        {"name":"result","type":"double"}]},
-          |"stages": [{"ref":"#aggregate",
-          |            "settings":{"function":"sum","windowType":"timeTumbling",
-          |                        "windowSize":"3600000"},
-          |            "input":{"value":"=$.value"},
-          |            "output":{"pipeline.k":"=$.event_type",
-          |                      "pipeline.emit_seq":"=$.__seq",
-          |                      "pipeline.result":"=number.round($.result, 4)"}}]
-          |}""".stripMargin).copy(groupBy = Some("event_type"))
-      val in = ev(s, d).select(col("event_type"), col("value"),
-        col("event_id").as("__seq"), col("ts").as("__ts"))
-      Pipelines.compileBatch(p, in).orderBy("k", "emit_seq")
-    }),
-
-    // as-of join: each purchase enriched with the user's latest
-    // preceding click (the time-series operator Spark lacks natively)
-    "q_asof_join" -> ((s, d) => {
-      val e = ev(s, d)
-      val purchases = e.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val clicks = e.where(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      operators.AsOfJoin.asOf(purchases, clicks, "user_id", "ts",
-          Map("click_id" -> "event_id", "click_value" -> "value"))
-        .select(col("event_id"), col("user_id"), col("click_id"),
-          col("click_value"))
-        .orderBy("event_id")
-    }),
-
-    // FORWARD as-of join: each click enriched with the user's next
-    // purchase at-or-after it (pandas merge_asof direction="forward");
-    // the same union-and-carry plan mirrored in time
-    "q_asof_forward" -> ((s, d) => {
-      val e = ev(s, d)
-      val clicks = e.where(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = e.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      operators.AsOfJoin.asOfForward(clicks, purchases, "user_id", "ts",
-          Map("purchase_id" -> "event_id", "purchase_value" -> "value"))
-        .select(col("event_id"), col("user_id"), col("purchase_id"),
-          col("purchase_value"))
-        .orderBy("event_id")
-    }),
-
-    // NEAREST as-of: each click matched to the user's closest purchase
-    // in either direction, ties to the preceding one — the backward and
-    // forward carries chained with a µs-distance pick
-    "q_asof_nearest" -> ((s, d) => {
-      val e = ev(s, d)
-      val clicks = e.where(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = e.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      operators.AsOfJoin.asOfNearest(clicks, purchases, "user_id", "ts",
-          Map("purchase_id" -> "event_id", "purchase_value" -> "value"))
-        .select(col("event_id"), col("user_id"), col("purchase_id"),
-          col("purchase_value"))
-        .orderBy("event_id")
-    }),
-
-    // gap-based sessionization: a 12 h inactivity gap splits a user's
-    // event stream; one summary row per session (single-shuffle plan,
-    // boundary rule pinned to session_window in SessionizeSpec)
-    "q_sessionize" -> ((s, d) =>
-      operators.Sessionize.summarize(ev(s, d), "user_id", "ts", 43200L,
-          "value", Seq("event_id"))
-        .orderBy("user_id", "session_idx")),
-
-    // STREAMING sessionization through a real file-source replay:
-    // session_window + 1 h watermark over 6 ts-ordered arrival chunks —
-    // append mode emits exactly the sessions whose end (last event +
-    // 12 h gap) the final watermark passed; a pure function of the data,
-    // so batch SQL oracles real streaming semantics
-    "q_sessionize_stream" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      val e = ev(s, d)
-      graft.streaming.StreamingSessions.sessionReplay(e, "user_id",
-          "ts", "value",
-          graft.streaming.ReplayChunks.byTime(e, "ts", 6), 6,
-          "1 hour", "12 hours")
-        .select(col("k").as("user_id"), col("start_ms"), col("n_events"),
-          col("total_value"))
-        .orderBy("user_id", "start_ms")
-    }),
-
-    // at-ingest per-key rate cap: each user's FIRST 8 events by (ts,
-    // event_id) survive, the rest drop at the state-store counter — a
-    // REAL chunked Structured Streaming replay (6 ts-monotone arrival
-    // chunks), so the kept set pins cross-batch state carry; equals the
-    // batch row_number()<=8 by the determinism contract
-    "q_rate_cap_stream" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      val e = ev(s, d)
-      graft.streaming.StreamingCaps.capReplay(e, "user_id",
-          "ts", "event_id", 8,
-          graft.streaming.ReplayChunks.byTime(e, "ts", 6), 6)
-        .select(col("k").as("user_id"), col("tsUs").as("ts_us"),
-          col("id").as("event_id"))
-        .orderBy("user_id", "ts_us", "event_id")
-    }),
-
-    // strictly-ordered first-touch funnel: users reaching each stage of
-    // funnel DISCOVERY: the 20 most frequent 3-step event-type paths,
-    // per-user order by event_id (unique, so paths are deterministic)
-    "q_event_paths" -> ((s, d) =>
-      operators.EventAnalytics.topPaths(ev(s, d), "user_id", "event_id",
-          "event_type", n = 3, k = 20)
-        .orderBy("rk")),
-
-    // view -> click -> purchase (each stage strictly after the key's
-    // earliest completion of the previous one)
-    "q_funnel" -> ((s, d) =>
-      operators.EventAnalytics.funnel(ev(s, d), "user_id", "ts",
-          "event_type", Seq("view", "click", "purchase"))
-        .orderBy("stage_idx")),
-
-    // windowed funnel: each stage must convert within 1 hour of the
-    // previous stage's first touch (prev_t < t <= prev_t + 1h, compared
-    // at epoch µs on both sides). Same cascade plan, one extra scalar
-    // band per stage join
-    "q_funnel_windowed" -> ((s, d) =>
-      operators.EventAnalytics.funnel(ev(s, d), "user_id", "ts",
-          "event_type", Seq("view", "click", "purchase"),
-          maxLagMs = Some(3600000L))
-        .orderBy("stage_idx")),
-
-    // weekly cohort retention: distinct users per (first-event week,
-    // week offset) — pure epoch math over Monday-truncated weeks
-    "q_retention" -> ((s, d) =>
-      operators.EventAnalytics.retention(ev(s, d), "user_id", "ts")
-        .orderBy("cohort_ms", "week_offset")),
-
-    // windowed retention: only returns within 2 weeks of the user's
-    // exact first event count (inclusive at the horizon, compared at
-    // epoch µs on both sides) — the bounded-tail variant of q_retention
-    "q_retention_windowed" -> ((s, d) =>
-      operators.EventAnalytics.retention(ev(s, d), "user_id", "ts",
-          horizonMs = Some(1209600000L))
-        .orderBy("cohort_ms", "week_offset")),
-
-    // range join: purchases paired with same-user clicks within +-1 hour
-    "q_range_join" -> ((s, d) => {
-      val e = ev(s, d)
-      val purchases = e.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val clicks = e.where(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      operators.RangeJoin.timeRange(purchases, clicks, "user_id", "ts",
-          3600000L, 3600000L)
-        .select(col("event_id"), col("user_id"),
-          col("r_event_id").as("click_id"))
-        .orderBy("event_id", "click_id")
-    }),
-
-    // skew-mitigated aggregation: two-phase salted shuffle, same answer
-    // as the direct groupBy (the oracle), hot keys fanned over 32 salts
-    "q_skew_salted" -> ((s, d) =>
-      operators.Skew.saltedSumCount(ev(s, d), col("user_id"), col("value"),
-          "sv_raw")
-        .select(col("key").as("user_id"), round(col("sv_raw"), 4).as("sv"),
-          col("n"))
-        .orderBy("user_id")),
-
-    // ---- multimodal plumbing ----
-
-    "q_multimodal_meta" -> ((s, d) =>
-      Multimodal.payloadMeta(docs(s, d), "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // Byte-stream feature path through the typed mapPartitions stage
-    // (Multimodal.byteFeatures — the opaque-payload operator for bytes
-    // with no in-process codec). Features derive deterministically from
-    // the payload bytes (length / md5 / byte mean / frame cadence); the
-    // oracle walks the same UTF-8 bytes via the hex encoding, so the
-    // whole pipeline — including the mapPartitions hop — stays
-    // SQL-oracle-expressible on MULTIBYTE text too: the byte mean is a
-    // single IEEE division of two exact integers, bit-identical in both
-    // engines (no rounding).
-    "q_multimodal_features" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      Multimodal.extractFeatures(
-          Multimodal.asMediaRecords(docs(s, d), "doc_id", "text"))
-        .toDF()
-        .select(col("id"), col("nBytes").as("n_bytes"),
-          col("contentHash").as("content_hash"),
-          col("meanByte").as("mean_byte"),
-          col("frameCount").cast("bigint").as("frame_count"))
-        .orderBy("id")
-    }),
-
-    // REAL image decode (javax.imageio) over the committed fixture of
-    // actual PNG/BMP bytes: decoded width/height/mean-pixel must match
-    // the ground truth recorded AT DRAW TIME — a decode that does not
-    // parse the container cannot reproduce them (lossless roundtrip).
-    // Rows 48-52 are non-image / truncated payloads pinning the
-    // decoded=false degradation (a corrupt record fails the row, never
-    // the stage). Fixture-bound, so invariant across sf — it gates the
-    // codec, not the corpus; the mapPartitions plumbing at corpus scale
-    // is q_multimodal_features.
-    "q_multimodal_decode" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      import ss.implicits._
-      val recs = s.read.parquet(imageFixturePath)
-        .select(col("id"), col("payload"),
-          col("media_type").as("mediaType"),
-          lit(0).as("width"), lit(0).as("height"))
-        .as[Multimodal.MediaRecord]
-      Multimodal.decodeImages(recs).toDF()
-        .select(col("id"), col("decoded"), col("width"), col("height"),
-          col("meanPixel").as("mean_pixel"))
-        .orderBy("id")
-    }),
-
-    // REAL image resize: decode → bilinear scale to maxDim=10 → PNG
-    // re-encode → decode AGAIN with the verified decoder. The oracle
-    // predicts output dims from the fixture's draw-time dims via the
-    // exact-integer contract (floor division), and `decoded = true`
-    // proves a real decodable PNG came out — a byte-truncating fake
-    // cannot survive the round trip. Corrupt payloads pass through and
-    // still fail decode; within-budget images pass through at their
-    // original dims.
-    "q_multimodal_resize" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      import ss.implicits._
-      val recs = s.read.parquet(imageFixturePath)
-        .select(col("id"), col("payload"),
-          col("media_type").as("mediaType"),
-          lit(0).as("width"), lit(0).as("height"))
-        .as[Multimodal.MediaRecord]
-      Multimodal.decodeImages(Multimodal.resizeImages(recs, 10)).toDF()
-        .select(col("id"), col("decoded"), col("width"), col("height"))
-        .orderBy("id")
-    }),
-
-    // REAL audio decode (javax.sound.sampled) over the committed fixture
-    // of actual WAV/PCM bytes: decoded channels/rate/frames/RMS must
-    // match the ground truth recorded AT SYNTHESIS TIME — lossless PCM,
-    // so a decode that parses the RIFF container reproduces them exactly
-    // and one that does not cannot. Rows 24-28 are non-audio / truncated
-    // payloads pinning the decoded=false degradation. Fixture-bound and
-    // sf-invariant, like q_multimodal_decode: it gates the codec.
-    "q_multimodal_audio" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      import ss.implicits._
-      val recs = s.read.parquet(audioFixturePath)
-        .select(col("id"), col("payload"),
-          col("media_type").as("mediaType"),
-          lit(0).as("width"), lit(0).as("height"))
-        .as[Multimodal.MediaRecord]
-      Multimodal.decodeAudios(recs).toDF()
-        .select(col("id"), col("decoded"), col("channels"),
-          col("sampleRate").as("sample_rate"), col("frames"),
-          col("rms"))
-        .orderBy("id")
-    }),
-
-    // REAL windowed audio features over the committed WAV fixture:
-    // decode, cut the sample stream into 25 ms windows, emit per-window
-    // RMS — matched bit-exactly against the synthesis-time per-window
-    // truth table (same exact-integer arithmetic both sides). Corrupt
-    // rows emit zero windows; the row-expanding degradation shape.
-    "q_multimodal_audio_frames" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      import ss.implicits._
-      val recs = s.read.parquet(audioFixturePath)
-        .select(col("id"), col("payload"),
-          col("media_type").as("mediaType"),
-          lit(0).as("width"), lit(0).as("height"))
-        .as[Multimodal.MediaRecord]
-      Multimodal.decodeAllAudioFrames(recs).toDF()
-        .select(col("id"), col("frame"),
-          col("nSamples").as("n_samples"), col("rms"))
-        .orderBy("id", "frame")
-    }),
-
-    // REAL multi-frame extraction (javax.imageio sequence reader) over
-    // the committed animated-GIF fixture: every decoded frame's
-    // dims/mean must match the per-frame truth recorded AT DRAW TIME
-    // (palette-by-construction GIFs are lossless; generation re-decodes
-    // and asserts, so the committed truth is provable). Corrupt rows
-    // (ids 12-13) emit zero rows — the row-expanding degradation shape.
-    "q_multimodal_gif" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      import ss.implicits._
-      val recs = s.read.parquet(gifFixturePath)
-        .select(col("id"), col("payload"),
-          col("media_type").as("mediaType"),
-          lit(0).as("width"), lit(0).as("height"))
-        .as[Multimodal.MediaRecord]
-      Multimodal.decodeAllFrames(recs).toDF()
-        .select(col("id"), col("frame"), col("width"), col("height"),
-          col("meanPixel").as("mean_pixel"))
-        .orderBy("id", "frame")
-    }),
-
-    // REAL MP4 container demux (pure-JVM ISO-BMFF box walk) over the
-    // committed fixture: per-track handler/timescale/duration/dims and
-    // sample-table totals must match the truth recorded AS THE BOXES
-    // WERE WRITTEN — a parser that does not walk moov/trak/mdia/stbl
-    // cannot reproduce them. Corrupt payloads (ids 20-22) emit zero
-    // rows; id 23 (valid moov, stco past EOF) parses here but degrades
-    // in the samples gate — two distinct failure surfaces.
-    "q_multimodal_video" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      import ss.implicits._
-      val recs = s.read.parquet(videoFixturePath)
-        .select(col("id"), col("payload"),
-          col("media_type").as("mediaType"),
-          lit(0).as("width"), lit(0).as("height"))
-        .as[Multimodal.MediaRecord]
-      graft.operators.VideoDemux.demuxAll(recs).toDF()
-        .select(col("id"), col("track"), col("handler"),
-          col("timescale"), col("durationUnits").as("duration_units"),
-          col("width"), col("height"), col("nSamples").as("n_samples"),
-          col("nKeyframes").as("n_keyframes"),
-          col("sampleBytes").as("sample_bytes"))
-        .orderBy("id", "track")
-    }),
-
-    // REAL keyframe-sample extraction: resolve every video-track sync
-    // sample's byte range via stss+stsc+stco arithmetic, read THOSE
-    // bytes out of mdat and md5 them — matched against hashes computed
-    // from the bytes as the generator wrote them. This is the demux
-    // half of video frame-sampling (route keyframe payloads to
-    // decoders); codec decode stays the documented JDK boundary.
-    "q_multimodal_video_samples" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      import ss.implicits._
-      val recs = s.read.parquet(videoFixturePath)
-        .select(col("id"), col("payload"),
-          col("media_type").as("mediaType"),
-          lit(0).as("width"), lit(0).as("height"))
-        .as[Multimodal.MediaRecord]
-      graft.operators.VideoDemux.extractAllSamples(recs).toDF()
-        .select(col("id"), col("track"), col("sample"), col("offset"),
-          col("size"), col("md5"))
-        .orderBy("id", "track", "sample")
-    }),
-
-    // REAL video PIXEL decode for MJPEG: demux the MP4 (box walk +
-    // stsc/stco sample ranges), slice each video sample out of mdat and
-    // decode it with javax.imageio — each MJPEG sample IS a complete
-    // JPEG. Matched against per-frame truth (dims / exact mean / raster
-    // md5) computed at generation time from the exact bytes written; a
-    // path that does not isolate and decode each sample cannot reproduce
-    // a raster md5. avc1 payloads (id 9) and a garbled sample (id 10,
-    // sample 2) pin the per-SAMPLE decoded=false degradation; malformed
-    // containers (ids 11-12) emit zero rows.
-    "q_multimodal_mjpeg" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      import ss.implicits._
-      val recs = s.read.parquet(mjpegFixturePath)
-        .select(col("id"), col("payload"),
-          col("media_type").as("mediaType"),
-          lit(0).as("width"), lit(0).as("height"))
-        .as[Multimodal.MediaRecord]
-      graft.operators.VideoDemux.decodeAllJpegFrames(recs).toDF()
-        .select(col("id"), col("track"), col("sample"),
-          col("isKey").as("is_key"), col("decoded"), col("width"),
-          col("height"), col("meanPixel").as("mean_pixel"),
-          col("rasterMd5").as("raster_md5"))
-        .orderBy("id", "track", "sample")
-    }),
-
-    // REAL raw-video pixel decode over the committed fixture of MP4
-    // containers with uncompressed I420 samples: demux resolves each
-    // sample's byte range, the three YUV planes slice out (odd dims
-    // round the chroma planes UP), and the fixed-point BT.601 kernel
-    // produces the raster — md5 and exact mean must match the
-    // generation-time truth EXACTLY (I420 is lossless; no codec-drift
-    // tolerance). avc1 rows pin the permanent inter-frame boundary as
-    // per-sample decoded=false; a truncated sample degrades alone.
-    "q_multimodal_raw" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      import ss.implicits._
-      val recs = s.read.parquet(rawVideoFixturePath)
-        .select(col("id"), col("payload"),
-          col("media_type").as("mediaType"),
-          lit(0).as("width"), lit(0).as("height"))
-        .as[Multimodal.MediaRecord]
-      graft.operators.VideoDemux.decodeAllVideoFrames(recs).toDF()
-        .select(col("id"), col("track"), col("sample"),
-          col("isKey").as("is_key"), col("decoded"), col("width"),
-          col("height"), col("meanPixel").as("mean_pixel"),
-          col("rasterMd5").as("raster_md5"))
-        .orderBy("id", "track", "sample")
-    }),
-
-    // Row-expanding frame-sample path (the generator shape of real video
-    // frame sampling): every 2nd 64-byte slice, hashed — one record in,
-    // N frames out, partition-parallel. The frame hash is md5 of the
-    // frame's HEX encoding (injective, so it certifies content exactly):
-    // a 64-byte cut can split a multibyte character, and the oracle's
-    // DuckDB has no md5(BLOB) — hex is the byte-exact form both engines
-    // can hash.
-    "q_multimodal_frames" -> ((s, d) => {
-      implicit val ss: SparkSession = s
-      Multimodal.sampleFrames(
-          Multimodal.asMediaRecords(docs(s, d), "doc_id", "text"), 2)
-        .toDF()
-        .select(col("id"), col("frame").cast("bigint").as("frame"),
-          octet_length(col("bytes")).cast("bigint").as("n_bytes"),
-          md5(hex(col("bytes"))).as("frame_hash"))
-        .orderBy("id", "frame")
-    })
-  )
-
-  // ----------------------------------------------------------------------
-  // DuckDB oracles. Tables are the same parquet files; column names and
-  // ORDER BY match the Spark side exactly.
-  // ----------------------------------------------------------------------
-
-  /** O(total tokens) word n-gram OCCURRENCE rows from a token-list CTE:
-    * zip-unnest pairs each token with its position, `lead` builds the
-    * gram, QUALIFY drops the ragged tail. This replaces the
-    * `list_transform(range, i -> tk[i+1:i+n])` form everywhere: DuckDB
-    * evaluates each per-position slice against the WHOLE list, so that
-    * shape is O(tokens^2) per document — invisible on the ~550-char
-    * fixture docs, a 30-minute stall on the round-14 long-document
-    * sweep's 300k-char documents (tools/longdoc_sweep.py). Emits
-    * ($docCol, p, gram) with identical gram strings and multiplicities
-    * (tokens are non-empty and non-null, so a NULL gram appears exactly
-    * at the last n-1 positions). */
-  private def ngramRowsSql(src: String, n: Int,
-                           docCol: String = "doc_id",
-                           gram: String = "bg"): String = {
-    val cat = ("tok" +: (1 until n).map(j => s"lead(tok, $j) OVER w"))
-      .mkString(" || ' ' || ")
-    s"""(SELECT $docCol, p, $cat AS $gram
-       |   FROM (SELECT $docCol, unnest(tk) AS tok,
-       |                unnest(range(1, len(tk) + 1)) AS p FROM $src)
-       |   WINDOW w AS (PARTITION BY $docCol ORDER BY p)
-       |   QUALIFY $gram IS NOT NULL)""".stripMargin
-  }
-
-  /** CTE chain replaying [[graft.operators.CorpusStats.ngramLogProbAgainst]]
-    * at `order` over the doc_id%3 train/score split, ending in a
-    * `scored(doc_id, n_tokens, n_oov, n_backed, avg_lp)` relation —
-    * shared by q_ngram_lm and q_ccnet_buckets_5gram. Every backoff
-    * branch is replayed: per-order count CTEs, lag-built grams, the
-    * a_j count joins, contexts as lag(a_j) (the count of the j-gram
-    * ending at p-1 IS the denominator of the (j+1)-gram branch), and
-    * the alpha-power penalties as CAST(...AS DOUBLE) literals of the
-    * SAME multiply-chain doubles the Spark plan embeds
-    * (CorpusStats.alphaPowers — bare fractional literals are DECIMAL
-    * in DuckDB, so every one is cast to keep each arithmetic step the
-    * identical IEEE op). */
-  private def ngramLmScoredSql(order: Int, alpha: Double,
-                               k: Double): String = {
-    val apows = graft.operators.CorpusStats.alphaPowers(alpha, order - 1)
-    val kd = s"CAST($k AS DOUBLE)"
-    def apow(e: String) =
-      (1 until order).map(i =>
-        s"WHEN ($e) = $i THEN CAST(${apows(i)} AS DOUBLE)")
-        .mkString("CASE ", " ", " ELSE CAST(1.0 AS DOUBLE) END")
-    val m = s"least(p, $order)"
-    val countCtes = (1 to order).map { j =>
-      if (j == 1)
-        "c1 AS (SELECT w AS g, count(*)::BIGINT AS c FROM " +
-          "(SELECT unnest(tk) w FROM tr) GROUP BY 1)"
-      else
-        s"c$j AS (SELECT bg AS g, count(*)::BIGINT AS c FROM " +
-          s"${ngramRowsSql("tr", j)} GROUP BY 1)"
-    }.mkString(",\n")
-    val lagCols = (1 until order)
-      .map(j => s"lag(tok, $j) OVER w AS t$j").mkString(", ")
-    val gramCols = (1 to order).map { j =>
-      if (j == 1) "tok AS g1"
-      else ((j - 1) to 1 by -1).map(d => s"t$d")
-        .mkString("", " || ' ' || ", " || ' ' || tok") + s" AS g$j"
-    }.mkString(", ")
-    val aJoins = (1 to order)
-      .map(j => s"LEFT JOIN c$j ON g.g$j = c$j.g").mkString(" ")
-    val aCols = (1 to order).map(j => s"c$j.c AS a$j").mkString(", ")
-    val aList = (1 to order).map(j => s"a$j").mkString(", ")
-    val bCols = (1 until order)
-      .map(j => s"lag(a$j, 1) OVER w AS b$j").mkString(", ")
-    val branches = (order to 2 by -1).map { j =>
-      s"WHEN a$j IS NOT NULL THEN (${apow(s"$m - $j")}) * a$j / b${j - 1}"
-    }.mkString(" ")
-    val base = s"(${apow(s"$m - 1")}) * (coalesce(a1, 0) + $kd) / " +
-      s"(nv.n + $kd * nv.v)"
-    val fullA = (s"WHEN p >= $order THEN a$order" +:
-      ((order - 1) to 2 by -1).map(j => s"WHEN p = $j THEN a$j"))
-      .mkString("CASE ", " ", " END")
-    s"""$tokCte,
-       |tr AS (SELECT * FROM t WHERE doc_id % 3 <> 0),
-       |sc AS (SELECT * FROM t WHERE doc_id % 3 = 0),
-       |$countCtes,
-       |nv AS (SELECT (SELECT coalesce(sum(len(tk)), 0) FROM tr)::BIGINT AS n,
-       |              (SELECT count(*) FROM c1)::BIGINT AS v),
-       |pos AS (SELECT doc_id, p, tok, $lagCols
-       |        FROM (SELECT doc_id, unnest(tk) AS tok,
-       |                     unnest(range(1, len(tk) + 1)) AS p FROM sc)
-       |        WINDOW w AS (PARTITION BY doc_id ORDER BY p)),
-       |g AS (SELECT doc_id, p, $gramCols FROM pos),
-       |jx AS (SELECT g.doc_id, g.p, $aCols FROM g $aJoins),
-       |x AS (SELECT doc_id, p, $aList, $bCols
-       |      FROM jx WINDOW w AS (PARTITION BY doc_id ORDER BY p)),
-       |lpp AS (SELECT doc_id,
-       |         CASE WHEN a1 IS NULL THEN 1 ELSE 0 END AS oov,
-       |         CASE WHEN p >= 2 AND ($fullA) IS NULL
-       |              THEN 1 ELSE 0 END AS backed,
-       |         ln(CASE $branches ELSE $base END) AS lp
-       |       FROM x CROSS JOIN nv),
-       |scored AS (SELECT doc_id, count(*) AS n_tokens,
-       |             sum(oov)::BIGINT AS n_oov,
-       |             sum(backed)::BIGINT AS n_backed,
-       |             round(avg(lp), 4) AS avg_lp
-       |           FROM lpp GROUP BY doc_id)""".stripMargin
-  }
-
-  /** CTE chain replaying [[graft.operators.ArpaIO]]'s export + the
-    * standard ARPA backoff walk over the doc_id%3 train/score split,
-    * ending in `scored(doc_id, n_tokens, n_oov, n_backed, avg_lp10)`.
-    * The oracle rebuilds exactly what toArpa serializes — round-6
-    * log10 of the MLE conditionals c_j/c_{j-1}, the add-k unigram
-    * floor with its `<unk>` entry, and the constant backoff
-    * log10(alpha) (embedded as the SAME round-6 double the export
-    * writes, via the shared ArpaIO.round6) — then walks: longest
-    * present gram wins, each level backed off adds the context's
-    * backoff weight, absent contexts add exactly 0.0, absent unigrams
-    * score as `<unk>`. Context presence at p-1 comes from lag(l_j)
-    * over the doc window, the count oracle's lag trick. */
-  private def arpaScoredSql(order: Int, alpha: Double,
-                            k: Double): String = {
-    val lbD = graft.operators.ArpaIO.round6(math.log10(alpha))
-    val lb = s"CAST($lbD AS DOUBLE)"
-    val kd = s"CAST($k AS DOUBLE)"
-    val countCtes = (1 to order).map { j =>
-      if (j == 1)
-        "c1 AS (SELECT w AS g, count(*)::BIGINT AS c FROM " +
-          "(SELECT unnest(tk) w FROM tr) GROUP BY 1)"
-      else
-        s"c$j AS (SELECT bg AS g, count(*)::BIGINT AS c FROM " +
-          s"${ngramRowsSql("tr", j)} GROUP BY 1)"
-    }.mkString(",\n")
-    val probCtes = (1 to order).map { j =>
-      if (j == 1)
-        // the '<unk>' row rides IN p1 exactly as it does in the
-        // exported model's unigram table: a literal '<unk>' token in
-        // SCORED text matches the entry (KenLM's vocabulary mapping,
-        // and what ArpaIO.scoreAgainst's digest join does) — without
-        // it the oracle would count such a token OOV (review finding)
-        s"p1 AS (SELECT g, round(log10((c + $kd) / (nv.n + $kd * nv.v)), 6)" +
-          " AS lp FROM c1, nv" +
-          " UNION ALL SELECT '<unk>', lp FROM unk)"
-      else
-        s"p$j AS (SELECT c$j.g AS g, round(log10(CAST(c$j.c AS DOUBLE)" +
-          s" / c${j - 1}.c), 6) AS lp FROM c$j JOIN c${j - 1}" +
-          s" ON regexp_replace(c$j.g, ' [^ ]+$$', '') = c${j - 1}.g)"
-    }.mkString(",\n")
-    val lagCols = (1 until order)
-      .map(j => s"lag(tok, $j) OVER w AS t$j").mkString(", ")
-    val gramCols = (1 to order).map { j =>
-      if (j == 1) "tok AS g1"
-      else ((j - 1) to 1 by -1).map(d => s"t$d")
-        .mkString("", " || ' ' || ", " || ' ' || tok") + s" AS g$j"
-    }.mkString(", ")
-    val lJoins = (1 to order)
-      .map(j => s"LEFT JOIN p$j ON g.g$j = p$j.g").mkString(" ")
-    val lCols = (1 to order).map(j => s"p$j.lp AS l$j").mkString(", ")
-    val lList = (1 to order).map(j => s"l$j").mkString(", ")
-    val bCols = (1 until order).map(j =>
-      s"CASE WHEN lag(l$j, 1) OVER w IS NOT NULL THEN $lb" +
-        s" ELSE CAST(0.0 AS DOUBLE) END AS b$j").mkString(", ")
-    def cbSql(j: Int) = (j until order).map(i => s"b$i").mkString(" + ")
-    val branches = (order to 2 by -1).map { j =>
-      if (j == order) s"WHEN l$j IS NOT NULL THEN l$j"
-      else s"WHEN l$j IS NOT NULL THEN ${cbSql(j)} + l$j"
-    }.mkString(" ")
-    val walk = s"CASE $branches" +
-      s" WHEN l1 IS NOT NULL THEN ${cbSql(1)} + l1" +
-      s" ELSE ${cbSql(1)} + unk.lp END"
-    val fullA = (s"WHEN p >= $order THEN l$order" +:
-      ((order - 1) to 2 by -1).map(j => s"WHEN p = $j THEN l$j"))
-      .mkString("CASE ", " ", " END")
-    s"""$tokCte,
-       |tr AS (SELECT * FROM t WHERE doc_id % 3 <> 0),
-       |sc AS (SELECT * FROM t WHERE doc_id % 3 = 0),
-       |$countCtes,
-       |nv AS (SELECT (SELECT coalesce(sum(len(tk)), 0) FROM tr)::BIGINT AS n,
-       |              (SELECT count(*) FROM c1)::BIGINT AS v),
-       |unk AS (SELECT round(log10($kd / (n + $kd * v)), 6) AS lp FROM nv),
-       |$probCtes,
-       |pos AS (SELECT doc_id, p, tok, $lagCols
-       |        FROM (SELECT doc_id, unnest(tk) AS tok,
-       |                     unnest(range(1, len(tk) + 1)) AS p FROM sc)
-       |        WINDOW w AS (PARTITION BY doc_id ORDER BY p)),
-       |g AS (SELECT doc_id, p, $gramCols FROM pos),
-       |jx AS (SELECT g.doc_id, g.p, $lCols FROM g $lJoins),
-       |x AS (SELECT doc_id, p, $lList, $bCols
-       |      FROM jx WINDOW w AS (PARTITION BY doc_id ORDER BY p)),
-       |lpp AS (SELECT doc_id,
-       |         CASE WHEN l1 IS NULL THEN 1 ELSE 0 END AS oov,
-       |         CASE WHEN p >= 2 AND ($fullA) IS NULL
-       |              THEN 1 ELSE 0 END AS backed,
-       |         $walk AS lp
-       |       FROM x CROSS JOIN unk),
-       |scored AS (SELECT doc_id, count(*) AS n_tokens,
-       |             sum(oov)::BIGINT AS n_oov,
-       |             sum(backed)::BIGINT AS n_backed,
-       |             round(avg(lp), 4) AS avg_lp10
-       |           FROM lpp GROUP BY doc_id)""".stripMargin
-  }
-
-  /** The q_doremi_weights oracle: full replay of
-    * [[graft.operators.Selection.doremiWeights]] — global + per-domain
-    * held-out bigram losses on the 1e-4 grid, then every
-    * multiplicative-weights round unrolled as one CTE each (the
-    * quality-classifier oracle pattern). All weight arithmetic is
-    * BIGINT except the one renormalizing division per (domain, round),
-    * CAST-ed exactly as the Scala loop computes it. Emits a WITH chain
-    * ENDING in `dal(source, n_docs, lg, lo, ex, w, alpha_micro)` — the
-    * caller appends its own final SELECT (q_doremi_weights projects it;
-    * q_doremi_mixture chains the byWeight replay on top). */
-  /** The synth-augmented DoReMi corpus + tokenization + train/score
-    * split — shared by both mixture-learning grains' oracles (bigram
-    * q_doremi_weights/q_doremi_mixture and the order-n
-    * q_doremi_weights_5gram). Ends with trd/scd(doc_id, source, tk). */
-  private val doremiCorpusCtes =
-    """corp AS (
-      |  SELECT doc_id, source, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 500000, 'synth', translate(text, 'aeiou', '01234')
-      |  FROM documents WHERE doc_id < 150),
-      |tds AS (SELECT doc_id, source,
-      |  list_filter(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-      |              x -> x <> '') tk
-      |  FROM corp WHERE source IS NOT NULL),
-      |trd AS (SELECT * FROM tds WHERE doc_id % 3 <> 0),
-      |scd AS (SELECT * FROM tds WHERE doc_id % 3 = 0)""".stripMargin
-
-  /** The multiplicative-weights + smoothing tail (r0..dal) over a
-    * relation `lx(source, n_docs, lg, lo)` — every MW round unrolled
-    * as one CTE, all-BIGINT except the one renormalizing division per
-    * (domain, round). Shared by both grains so the loop replay can
-    * never drift from [[graft.operators.Selection.doremiLoop]]. */
-  private def doremiMwTailSql(rounds: Int, eta: Double,
-                              smoothMicro: Long): String = {
-    val etaD = s"CAST($eta AS DOUBLE)"
-    val roundCtes = (1 to rounds).map { r =>
-      s"""r$r AS (SELECT source, n_docs, lg, lo, ex,
-         |  round(CAST(raw AS DOUBLE) / CAST(sum(raw) OVER () AS DOUBLE)
-         |        * CAST(1000000 AS DOUBLE))::BIGINT AS w
-         |  FROM (SELECT *, w * (1000000 +
-         |          round($etaD * (ex * 100))::BIGINT) AS raw
-         |        FROM r${r - 1}))""".stripMargin
-    }.mkString(",\n")
-    s"""r0 AS (SELECT source, n_docs, lg, lo,
-       |         greatest(0, lg - lo)::BIGINT AS ex,
-       |         1000000::BIGINT AS w
-       |       FROM lx),
-       |$roundCtes,
-       |kk AS (SELECT count(*)::BIGINT AS kd FROM r0),
-       |dal AS (SELECT source, n_docs, lg, lo, ex, w,
-       |          round(CAST((1000000 - $smoothMicro) * w AS DOUBLE) /
-       |                CAST(1000000 AS DOUBLE))::BIGINT +
-       |          round(CAST($smoothMicro AS DOUBLE) / kk.kd)::BIGINT
-       |            AS alpha_micro
-       |        FROM r$rounds CROSS JOIN kk)""".stripMargin
-  }
-
-  private def doremiOracleSql(rounds: Int, eta: Double,
-                              smoothMicro: Long): String = {
-    s"""WITH $doremiCorpusCtes,
-       |c2g AS (SELECT bg, count(*)::BIGINT AS c2
-       |        FROM ${ngramRowsSql("trd", 2)} GROUP BY 1),
-       |ugg AS (SELECT w, count(*)::BIGINT AS c1
-       |        FROM (SELECT unnest(tk) w FROM trd) GROUP BY 1),
-       |vg AS (SELECT count(*)::BIGINT AS vv FROM ugg),
-       |bgsc AS (SELECT doc_id, bg FROM ${ngramRowsSql("scd", 2)}),
-       |gsc AS (SELECT doc_id,
-       |          round(avg(ln((coalesce(c2g.c2, 0) + 0.5) /
-       |                       (coalesce(ugg.c1, 0) + 0.5 * vg.vv))), 4)
-       |            AS avg_lp
-       |        FROM bgsc LEFT JOIN c2g USING (bg)
-       |        LEFT JOIN ugg ON split_part(bgsc.bg, ' ', 1) = ugg.w
-       |        CROSS JOIN vg GROUP BY doc_id),
-       |bgtro AS (SELECT t.source, r.bg
-       |          FROM ${ngramRowsSql("trd", 2)} r JOIN trd t USING (doc_id)),
-       |c2o AS (SELECT source, bg, count(*)::BIGINT AS c2
-       |        FROM bgtro GROUP BY 1, 2),
-       |ugo AS (SELECT source, w, count(*)::BIGINT AS c1
-       |        FROM (SELECT source, unnest(tk) w FROM trd) GROUP BY 1, 2),
-       |vdo AS (SELECT source, count(*)::BIGINT AS vv FROM ugo GROUP BY 1),
-       |bgsco AS (SELECT r.doc_id, t.source, r.bg
-       |          FROM ${ngramRowsSql("scd", 2)} r JOIN scd t USING (doc_id)),
-       |osc AS (SELECT b.doc_id,
-       |          round(avg(ln((coalesce(c.c2, 0) + 0.5) /
-       |                       (coalesce(u.c1, 0) + 0.5 * v.vv))), 4)
-       |            AS avg_lp
-       |        FROM bgsco b
-       |        LEFT JOIN c2o c ON b.source = c.source AND b.bg = c.bg
-       |        LEFT JOIN ugo u ON b.source = u.source
-       |                       AND split_part(b.bg, ' ', 1) = u.w
-       |        JOIN vdo v ON b.source = v.source
-       |        GROUP BY b.doc_id),
-       |per AS (SELECT t.source, count(*)::BIGINT AS n_docs,
-       |          sum(round(g.avg_lp * 10000)::BIGINT)::BIGINT AS sg,
-       |          sum(round(o.avg_lp * 10000)::BIGINT)::BIGINT AS so
-       |        FROM scd t JOIN gsc g USING (doc_id) JOIN osc o USING (doc_id)
-       |        GROUP BY 1),
-       |lx AS (SELECT source, n_docs,
-       |         round(CAST(-sg AS DOUBLE) / n_docs)::BIGINT AS lg,
-       |         round(CAST(-so AS DOUBLE) / n_docs)::BIGINT AS lo
-       |       FROM per),
-       |${doremiMwTailSql(rounds, eta, smoothMicro)}""".stripMargin
-  }
-
-  /** Order-n stupid-backoff scored CTEs over the pre-tokenized
-    * trd/scd relations (doc_id, source, tk) — the DoReMi-grain replay
-    * of the [[ngramLmScoredSql]] chain (which owns q_ngram_lm's split
-    * and junk columns; this one emits only `${"$"}{pfx}sc(doc_id,
-    * avg_lp)`). With `bySource`, every count table and the (N, V)
-    * frame re-key by source and each held-out doc joins its OWN
-    * domain's tables — the inner nv join drops train-absent domains,
-    * exactly as the engine's by-source scorer does. */
-  private def ngramScoredCtes(pfx: String, order: Int, alpha: Double,
-                              k: Double, bySource: Boolean): String = {
-    val apows = graft.operators.CorpusStats.alphaPowers(alpha, order - 1)
-    val kd = s"CAST($k AS DOUBLE)"
-    def apow(e: String) =
-      (1 until order).map(i =>
-        s"WHEN ($e) = $i THEN CAST(${apows(i)} AS DOUBLE)")
-        .mkString("CASE ", " ", " ELSE CAST(1.0 AS DOUBLE) END")
-    val m = s"least(p, $order)"
-    val srcSel = if (bySource) "source, " else ""
-    val countCtes = (1 to order).map { j =>
-      if (j == 1)
-        s"${pfx}c1 AS (SELECT ${srcSel}w AS g, count(*)::BIGINT AS c " +
-          s"FROM (SELECT ${srcSel}unnest(tk) w FROM trd) GROUP BY " +
-          (if (bySource) "1, 2)" else "1)")
-      else if (bySource)
-        s"${pfx}c$j AS (SELECT t.source, r.bg AS g, " +
-          s"count(*)::BIGINT AS c FROM ${ngramRowsSql("trd", j)} r " +
-          "JOIN trd t USING (doc_id) GROUP BY 1, 2)"
-      else
-        s"${pfx}c$j AS (SELECT bg AS g, count(*)::BIGINT AS c FROM " +
-          s"${ngramRowsSql("trd", j)} GROUP BY 1)"
-    }.mkString(",\n")
-    val nvCte =
-      if (bySource)
-        s"${pfx}nv AS (SELECT source, sum(c)::BIGINT AS n, " +
-          s"count(*)::BIGINT AS v FROM ${pfx}c1 GROUP BY 1)"
-      else
-        s"${pfx}nv AS (SELECT (SELECT coalesce(sum(len(tk)), 0) " +
-          s"FROM trd)::BIGINT AS n, (SELECT count(*) FROM " +
-          s"${pfx}c1)::BIGINT AS v)"
-    val lagCols = (1 until order)
-      .map(j => s"lag(tok, $j) OVER w AS t$j").mkString(", ")
-    val gramCols = (1 to order).map { j =>
-      if (j == 1) "tok AS g1"
-      else ((j - 1) to 1 by -1).map(d => s"t$d")
-        .mkString("", " || ' ' || ", " || ' ' || tok") + s" AS g$j"
-    }.mkString(", ")
-    val aJoins = (1 to order).map { j =>
-      val cond =
-        if (bySource) s"${pfx}g.source = ${pfx}c$j.source AND " +
-          s"${pfx}g.g$j = ${pfx}c$j.g"
-        else s"${pfx}g.g$j = ${pfx}c$j.g"
-      s"LEFT JOIN ${pfx}c$j ON $cond"
-    }.mkString(" ")
-    val aCols = (1 to order).map(j => s"${pfx}c$j.c AS a$j")
-      .mkString(", ")
-    val aList = (1 to order).map(j => s"a$j").mkString(", ")
-    val bCols = (1 until order)
-      .map(j => s"lag(a$j, 1) OVER w AS b$j").mkString(", ")
-    val branches = (order to 2 by -1).map { j =>
-      s"WHEN a$j IS NOT NULL THEN (${apow(s"$m - $j")}) * a$j / b${j - 1}"
-    }.mkString(" ")
-    val base = s"(${apow(s"$m - 1")}) * (coalesce(a1, 0) + $kd) / " +
-      s"(nv.n + $kd * nv.v)"
-    val nvJoin =
-      if (bySource) s"JOIN ${pfx}nv nv USING (source)"
-      else s"CROSS JOIN ${pfx}nv nv"
-    s"""$countCtes,
-       |$nvCte,
-       |${pfx}pos AS (SELECT doc_id, ${srcSel}p, tok, $lagCols
-       |        FROM (SELECT doc_id, ${srcSel}unnest(tk) AS tok,
-       |                     unnest(range(1, len(tk) + 1)) AS p FROM scd)
-       |        WINDOW w AS (PARTITION BY doc_id ORDER BY p)),
-       |${pfx}g AS (SELECT doc_id, ${srcSel}p, $gramCols FROM ${pfx}pos),
-       |${pfx}jx AS (SELECT ${pfx}g.doc_id, ${
-      if (bySource) s"${pfx}g.source, " else ""}${pfx}g.p, $aCols
-       |             FROM ${pfx}g $aJoins),
-       |${pfx}x AS (SELECT doc_id, ${srcSel}p, $aList, $bCols
-       |      FROM ${pfx}jx WINDOW w AS (PARTITION BY doc_id ORDER BY p)),
-       |${pfx}lpp AS (SELECT doc_id, ln(CASE $branches ELSE $base END) AS lp
-       |       FROM ${pfx}x $nvJoin),
-       |${pfx}sc AS (SELECT doc_id, round(avg(lp), 4) AS avg_lp
-       |       FROM ${pfx}lpp GROUP BY doc_id)""".stripMargin
-  }
-
-  /** The q_doremi_weights_5gram oracle: the same corpus fixture and
-    * MW-round chain as [[doremiOracleSql]], with BOTH loss passes at
-    * the order-n stupid-backoff grain (global generalist + by-source
-    * specialists) instead of the add-k bigram surrogate. */
-  private def doremiNgramOracleSql(order: Int, alpha: Double, k: Double,
-                                   rounds: Int, eta: Double,
-                                   smoothMicro: Long): String = {
-    s"""WITH $doremiCorpusCtes,
-       |${ngramScoredCtes("g5", order, alpha, k, bySource = false)},
-       |${ngramScoredCtes("o5", order, alpha, k, bySource = true)},
-       |per AS (SELECT t.source, count(*)::BIGINT AS n_docs,
-       |          sum(round(g.avg_lp * 10000)::BIGINT)::BIGINT AS sg,
-       |          sum(round(o.avg_lp * 10000)::BIGINT)::BIGINT AS so
-       |        FROM scd t JOIN g5sc g USING (doc_id)
-       |        JOIN o5sc o USING (doc_id)
-       |        GROUP BY 1),
-       |lx AS (SELECT source, n_docs,
-       |         round(CAST(-sg AS DOUBLE) / n_docs)::BIGINT AS lg,
-       |         round(CAST(-so AS DOUBLE) / n_docs)::BIGINT AS lo
-       |       FROM per),
-       |${doremiMwTailSql(rounds, eta, smoothMicro)}""".stripMargin
-  }
-
-  /** Shared SQL fragment: distinct 3-gram shingles per doc (list-valued,
-    * first-occurrence order, like the engine's WordShingles). Documents
-    * with fewer than 3 tokens or null text produce NO row (the old
-    * slice form produced an empty/NULL list) — every consumer joins `d`
-    * through candidate pairs, which such documents cannot enter. */
-  private val shingleCte =
-    s"""d AS MATERIALIZED (
-      |  SELECT doc_id, list_distinct(list(sh ORDER BY p)) AS sh
-      |  FROM ${ngramRowsSql("""(SELECT doc_id,
-      |               list_filter(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-      |                           x -> x <> '') tk
-      |        FROM documents)""", 3, gram = "sh")}
-      |  GROUP BY doc_id),
-      |inv AS (SELECT doc_id, unnest(sh) s FROM d),
-      |rare AS (SELECT s FROM inv GROUP BY s HAVING count(*) BETWEEN 2 AND 1000),
-      |cand AS (SELECT DISTINCT a.doc_id d1, b.doc_id d2
-      |         FROM inv a JOIN rare USING (s) JOIN inv b USING (s)
-      |         WHERE a.doc_id < b.doc_id),
-      |jac AS MATERIALIZED (SELECT d1, d2,
-      |               len(list_intersect(x.sh, y.sh))::DOUBLE /
-      |               (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh))) j
-      |        FROM cand JOIN d x ON x.doc_id = d1 JOIN d y ON y.doc_id = d2)
-      |""".stripMargin
-
-  // Every similarity oracle excludes zero-norm vectors up front — the
-  // engine's documented convention (VectorFunctions.cosineFrom): cosine
-  // is UNDEFINED there, the sim is NULL, and the row falls out of
-  // top-k/probe results. DuckDB's list_cosine_similarity instead
-  // returns -1.0 for a zero vector, which silently keeps such rows in
-  // the ranking (and tie-assigns them to cell 0 in argmax replays) —
-  // caught by the round-14 embedding-degeneracy sweep.
-  private val ivfSql =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings
-      |           WHERE list_dot_product(embedding::DOUBLE[],
-      |                                  embedding::DOUBLE[]) > 0),
-      |cent AS (SELECT vec_id AS cell, v AS cv FROM e WHERE vec_id < 10),
-      |asg AS (SELECT vec_id, v, cell FROM (
-      |  SELECT e.vec_id, e.v, c.cell,
-      |         row_number() OVER (PARTITION BY e.vec_id
-      |           ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell) rn
-      |  FROM e CROSS JOIN cent c) WHERE rn = 1),
-      |q AS (SELECT vec_id qid, v qv, cell FROM asg
-      |      WHERE vec_id BETWEEN 100 AND 104),
-      |s AS (SELECT q.qid, a.vec_id cid, list_cosine_similarity(q.qv, a.v) sim
-      |      FROM q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.qid)
-      |SELECT qid, rank, cid, round(sim, 4) + 0.0 AS sim FROM (
-      |  SELECT qid, cid, sim,
-      |         row_number() OVER (PARTITION BY qid
-      |                            ORDER BY sim DESC, cid) AS rank
-      |  FROM s)
-      |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin
-
-  private val jaccardSql =
-    s"""WITH $shingleCte
-       |SELECT d1, d2, round(j, 4) AS jaccard FROM jac
-       |WHERE j >= 0.8 ORDER BY d1, d2""".stripMargin
-
-  private val swEn = "'the','a','of','and','to','in','is','that','it','for'"
-  private val swDe = "'der','die','das','und','ist','nicht','ein','mit','auf','für'"
-  private val swFr = "'le','la','les','et','est','un','une','dans','que','pour'"
-  private val swEs = "'el','la','los','las','y','es','un','una','que','por'"
-  private val swAll = ((swEn + "," + swDe + "," + swFr + "," + swEs)
-    .split(",").map(_.trim).distinct).mkString(",")
-
-  /** Subword vocab shared by the Spark gates and the DuckDB oracles:
-    * single chars (minus f/j/q/u/v — engineered unks) + multi-char
-    * pieces over the corpus vocabulary. */
-  private val subwordVocab: Seq[String] = Seq(
-    "a", "b", "c", "d", "e", "g", "h", "i", "k", "l", "m", "n", "o", "p",
-    "r", "s", "t", "w", "y",
-    "wind", "ow", "table", "merge", "batch", "val", "quer", "cust", "omer",
-    "fast", "filt", "er", "gro", "join", "key", "str", "eam", "agg", "data",
-    "sort", "scan", "slow", "small", "spark", "row", "hash", "lin", "col",
-    "umn", "ord", "vect", "or", "big", "part", "the")
-  private val subwordVocabSql: String =
-    subwordVocab.map(p => s"('$p')").mkString(", ")
-
-  /** Shared oracle fragment: the greedy longest-match recursion over
-    * every distinct corpus word — per-word piece count, unk count, and
-    * the piece list itself (unks collapsed to `<unk>`). Prefixed by
-    * `WITH RECURSIVE` at the use site. */
-  private def subwordRecCte: String =
-    s"""wc AS (SELECT doc_id, w, count(*)::BIGINT AS c
-       |       FROM (SELECT doc_id, unnest(tk) AS w FROM t)
-       |       GROUP BY doc_id, w),
-       |words AS (SELECT DISTINCT w FROM wc),
-       |vocab(piece) AS (VALUES $subwordVocabSql),
-       |rec AS (
-       |  SELECT w, w AS rest, 0::BIGINT AS np, 0::BIGINT AS nu,
-       |         []::VARCHAR[] AS pieces
-       |  FROM words
-       |  UNION ALL
-       |  SELECT w,
-       |         substr(rest, CASE WHEN best IS NULL THEN 2
-       |                           ELSE len(best) + 1 END),
-       |         np + 1,
-       |         nu + CASE WHEN best IS NULL THEN 1 ELSE 0 END,
-       |         list_append(pieces, coalesce(best, '<unk>'))
-       |  FROM (SELECT w, rest, np, nu, pieces,
-       |          (SELECT piece FROM vocab WHERE starts_with(rest, piece)
-       |           ORDER BY len(piece) DESC LIMIT 1) AS best
-       |        FROM rec WHERE rest <> '')
-       |),
-       |wp AS (SELECT w, np, nu, pieces FROM rec WHERE rest = '')""".stripMargin
-
-  /** Unigram-LM vocab shared by the Spark gates and the DuckDB
-    * oracles: piece -> log-prob score. Multi-char pieces take the
-    * SMALL primes (better scores, so Viterbi genuinely prefers them
-    * over single-char chains) and the full a-z floor takes the rest.
-    * Scores are -ln(prime) with distinct primes per piece: a path sum
-    * is -ln of a product of primes, unique per piece MULTISET by
-    * unique factorization (and the -10 unk penalty cannot cancel a
-    * prime ratio — e^10 is irrational), so the Viterbi argmax is
-    * TIE-FREE by construction on any input, not just the fixtures. */
-  private val unigramVocab: Seq[(String, Double)] = {
-    val multi = Seq(
-      "ta", "ab", "ble", "tab", "le", "able", "win", "dow", "ind", "ow",
-      "nd", "str", "eam", "tre", "re", "am", "ream", "val", "ue", "alu",
-      "lu", "va", "qu", "ery", "uer", "que", "cu", "ust", "omer", "tom",
-      "er", "cust", "me", "fil", "ter", "ilt", "lt", "fi", "col", "umn",
-      "olu", "mn", "co", "ord", "rd", "de", "rge", "erg", "ge", "ba",
-      "tch", "atc", "ch", "at", "gr", "oup", "rou", "ro", "ve", "ctor",
-      "ec", "tor", "ct", "sp", "ark", "par", "pa", "sm", "all", "ma",
-      "ll", "ha", "ash", "sh", "sc", "an", "can", "sl", "so", "rt",
-      "ort", "lin", "ine", "ne", "dat", "ata", "da", "jo", "oin", "oi",
-      "ke", "ey", "th", "he", "bi", "ig", "du", "up", "ag", "gg", "fa",
-      "ast", "st", "ar")
-    val pieces = multi ++ ('a' to 'z').map(_.toString)
-    require(pieces.distinct.length == pieces.length, "duplicate piece")
-    val primes = Iterator.from(2)
-      .filter(c => (2 until c).takeWhile(p => p * p <= c).forall(c % _ != 0))
-      .take(pieces.length).toSeq
-    pieces.zip(primes).map { case (p, pr) => (p, -math.log(pr.toDouble)) }
-  }
-  private val unigramUnkScore = -10.0
-  private val unigramMaxLen =
-    unigramVocab.map { case (p, _) => p.codePointCount(0, p.length) }.max
-
-  /** Shared oracle fragment: the unigram-LM Viterbi DP over every
-    * distinct corpus word, as a recursive CTE advancing ONE code point
-    * per iteration with a sliding window of the last `unigramMaxLen`
-    * states (true linear DP — no path enumeration). Vocab lookups are
-    * LEFT JOINs (at most one match per arm: pieces are unique), NOT
-    * correlated scalar subqueries, which DuckDB's binder rejects
-    * inside a recursive term. Score literals are rendered with an
-    * `e0` suffix so DuckDB parses them as DOUBLE directly — a bare
-    * decimal literal routes through DECIMAL(17,16) and lands one ulp
-    * off the JVM's double, breaking bit-parity of path sums. Prefixed
-    * by `WITH RECURSIVE` at the use site; expects `t` from tokCte. */
-  private def unigramRecCte: String = {
-    val vocabSql = unigramVocab.map { case (p, s) =>
-      val r = s.toString
-      require(!r.toLowerCase.contains("e"), s"score $r needs plain form")
-      s"('$p', ${r}e0)"
-    }.mkString(", ")
-    s"""wc AS (SELECT doc_id, w, count(*)::BIGINT AS c
-       |       FROM (SELECT doc_id, unnest(tk) AS w FROM t)
-       |       GROUP BY doc_id, w),
-       |uwords AS (SELECT DISTINCT w FROM wc),
-       |uvocab(piece, psc) AS (VALUES $vocabSql),
-       |${unigramDpSql("urec", "uwp", "uwords", "uvocab", unigramMaxLen)}"""
-      .stripMargin
-  }
-
-  /** One unigram-LM Viterbi DP instance as SQL text: recursive CTE
-    * `rec` + result CTE `out(w, np, nu, sc, ps)` over the words of
-    * `wordsCte` (column `w`) scored by `vocabCte(piece, psc)` with
-    * window `L`. Factored out of [[unigramRecCte]] verbatim so the
-    * trainer oracle ([[unigramTrainOracleSql]]) can instantiate the
-    * SAME DP three times (E-step 1, E-step 2, final apply) against
-    * DERIVED vocab CTEs — one DP codebase, zero drift. */
-  private def unigramDpSql(rec: String, out: String, wordsCte: String,
-                           vocabCte: String, L: Int): String = {
-    val nulls = (1 until L).map(i =>
-      s"NULL::STRUCT(sc DOUBLE, np BIGINT, nu BIGINT, ps VARCHAR[]) AS s$i")
-      .mkString(",\n       |         ").stripMargin
-    val joins = (2 to L).map(l =>
-      s"  LEFT JOIN $vocabCte v$l ON pos >= ${l - 1} " +
-        s"AND v$l.piece = substr(w, pos + ${2 - l}, $l)").mkString("\n")
-    val arms = (2 to L).map(l =>
-      s"""      CASE WHEN v$l.piece IS NOT NULL
-         |           THEN struct_pack(sc := s${l - 1}.sc + v$l.psc,
-         |                            np := s${l - 1}.np + 1, nu := s${l - 1}.nu,
-         |                            ps := list_append(s${l - 1}.ps, v$l.piece)) END""")
-      .mkString(",\n")
-    val shift = (0 until L - 1).map(i => s"s$i").mkString(", ")
-    s"""$rec AS (
-       |  SELECT w, len(w)::INT AS n, 0 AS pos,
-       |         struct_pack(sc := 0.0::DOUBLE, np := 0::BIGINT,
-       |                     nu := 0::BIGINT, ps := []::VARCHAR[]) AS s0,
-       |         $nulls
-       |  FROM $wordsCte
-       |  UNION ALL
-       |  SELECT w, n, pos + 1,
-       |    list_max(list_filter([
-       |      CASE WHEN v1.piece IS NOT NULL
-       |           THEN struct_pack(sc := s0.sc + v1.psc, np := s0.np + 1,
-       |                            nu := s0.nu,
-       |                            ps := list_append(s0.ps, v1.piece))
-       |           ELSE struct_pack(sc := s0.sc + (${unigramUnkScore}e0),
-       |                            np := s0.np + 1, nu := s0.nu + 1,
-       |                            ps := list_append(s0.ps, '<unk>')) END,
-       |$arms
-       |    ], x -> x IS NOT NULL)) AS s0,
-       |    $shift
-       |  FROM $rec
-       |  LEFT JOIN $vocabCte v1 ON v1.piece = substr(w, pos + 1, 1)
-       |$joins
-       |  WHERE pos < n
-       |),
-       |$out AS (SELECT w, s0.np AS np, s0.nu AS nu, s0.sc AS sc,
-       |               s0.ps AS ps
-       |        FROM $rec WHERE pos = n)""".stripMargin
-  }
-
-  /** The q_unigram_train oracle: full replay of Subword.trainUnigram
-    * (seedSize seeds of lengths 2..4 + every corpus code point, two
-    * Viterbi-EM rounds, a likelihood-loss prune to targetMulti between
-    * them) and of the final apply — THREE instances of the same
-    * generated DP ([[unigramDpSql]]) against derived vocab CTEs.
-    * Cross-engine determinism leans on the trainer's round6 score
-    * quantization: every M-step score is `round(ln((c+1)/T), 6)` in
-    * both engines (ulp-different ln collapses under the rounding), so
-    * DP path sums — sums of bit-equal doubles in the same order — are
-    * bit-equal, and so are the loss products. The char-decomposition
-    * sum adds positions left-to-right with +0e0 for absent arms
-    * (exact identity on the all-negative scores), mirroring the
-    * trainer's foreach accumulation; loss is -0.0-canonicalized on
-    * both sides before the (l DESC, piece) rank. */
-  private def unigramTrainOracleSql(seedSize: Int, targetMulti: Int): String = {
-    val L = 4
-    // every vocab/word CTE a recursive DP joins is MATERIALIZED: DuckDB
-    // inlines single-reference CTEs, and an INLINED vocab inside a
-    // recursive term re-evaluates its whole upstream chain (including
-    // the PREVIOUS DP) on every iteration — the difference between
-    // seconds and unbounded
-    s"""WITH RECURSIVE $tokCte,
-       |wc AS (SELECT doc_id, w, count(*)::BIGINT AS c
-       |       FROM (SELECT doc_id, unnest(tk) AS w FROM t)
-       |       GROUP BY doc_id, w),
-       |wcw AS MATERIALIZED (SELECT w, sum(c)::BIGINT AS c FROM wc GROUP BY w),
-       |twords AS MATERIALIZED (SELECT w FROM wcw),
-       |seeds AS (
-       |  SELECT piece, n_occ FROM (
-       |    SELECT piece, n_occ,
-       |           row_number() OVER (ORDER BY n_occ DESC, piece) AS rk
-       |    FROM (SELECT substr(w, s + 1, n) AS piece,
-       |                 sum(c)::BIGINT AS n_occ
-       |          FROM wcw,
-       |               unnest(range(2, ${L + 1})) AS ln(n),
-       |               unnest(range(0, greatest(len(w) - n + 1, 0))) AS st(s)
-       |          GROUP BY piece))
-       |  WHERE rk <= $seedSize),
-       |sing AS (SELECT substr(w, s + 1, 1) AS piece, sum(c)::BIGINT AS n_occ
-       |         FROM wcw, unnest(range(0, len(w))) AS st(s)
-       |         GROUP BY piece),
-       |v0c AS (SELECT piece, n_occ, TRUE AS single FROM sing
-       |        UNION ALL SELECT piece, n_occ, FALSE FROM seeds),
-       |t0 AS (SELECT sum(n_occ + 1)::BIGINT AS tt FROM v0c),
-       |v0 AS MATERIALIZED (
-       |       SELECT piece, round(ln((n_occ + 1)::DOUBLE / tt::DOUBLE), 6)
-       |                AS psc
-       |       FROM v0c CROSS JOIN t0),
-       |${unigramDpSql("trec1", "tout1", "twords", "v0", L)},
-       |ec1 AS (SELECT piece, sum(c)::BIGINT AS n
-       |        FROM (SELECT w, unnest(ps) AS piece FROM tout1)
-       |        JOIN wcw USING (w) GROUP BY piece),
-       |c1 AS (SELECT v.piece, v.single, coalesce(e.n, 0)::BIGINT AS c
-       |       FROM v0c v LEFT JOIN ec1 e USING (piece)),
-       |t1 AS (SELECT sum(c + 1)::BIGINT AS tt FROM c1),
-       |m1 AS (SELECT c1.piece, c1.single, c1.c,
-       |              round(ln((c1.c + 1)::DOUBLE / t1.tt::DOUBLE), 6) AS psc
-       |       FROM c1 CROSS JOIN t1),
-       |lss AS (SELECT piece, CASE WHEN lraw = 0 THEN 0e0 ELSE lraw END AS l
-       |        FROM (
-       |          SELECT m.piece,
-       |                 round(m.c::DOUBLE * (m.psc -
-       |                   (coalesce(x1.psc, 0e0) + coalesce(x2.psc, 0e0)
-       |                    + coalesce(x3.psc, 0e0) + coalesce(x4.psc, 0e0))),
-       |                   6) AS lraw
-       |          FROM m1 m
-       |          LEFT JOIN m1 x1 ON x1.piece = substr(m.piece, 1, 1)
-       |          LEFT JOIN m1 x2 ON len(m.piece) >= 2
-       |                         AND x2.piece = substr(m.piece, 2, 1)
-       |          LEFT JOIN m1 x3 ON len(m.piece) >= 3
-       |                         AND x3.piece = substr(m.piece, 3, 1)
-       |          LEFT JOIN m1 x4 ON len(m.piece) >= 4
-       |                         AND x4.piece = substr(m.piece, 4, 1)
-       |          WHERE NOT m.single)),
-       |keep AS (SELECT piece FROM (
-       |           SELECT piece,
-       |                  row_number() OVER (ORDER BY l DESC, piece) AS rk
-       |           FROM lss)
-       |         WHERE rk <= $targetMulti),
-       |v1 AS MATERIALIZED (
-       |       SELECT piece, psc FROM m1
-       |       WHERE single OR piece IN (SELECT piece FROM keep)),
-       |${unigramDpSql("trec2", "tout2", "twords", "v1", L)},
-       |ec2 AS (SELECT piece, sum(c)::BIGINT AS n
-       |        FROM (SELECT w, unnest(ps) AS piece FROM tout2)
-       |        JOIN wcw USING (w) GROUP BY piece),
-       |c2 AS (SELECT v.piece, coalesce(e.n, 0)::BIGINT AS c
-       |       FROM v1 v LEFT JOIN ec2 e USING (piece)),
-       |t2 AS (SELECT sum(c + 1)::BIGINT AS tt FROM c2),
-       |v2 AS MATERIALIZED (
-       |       SELECT c2.piece,
-       |              round(ln((c2.c + 1)::DOUBLE / t2.tt::DOUBLE), 6) AS psc
-       |       FROM c2 CROSS JOIN t2),
-       |${unigramDpSql("trec3", "tout3", "twords", "v2", L)}
-       |SELECT doc_id, sum(c * np)::BIGINT AS n_pieces,
-       |       sum(c * nu)::BIGINT AS n_unk
-       |FROM wc JOIN tout3 USING (w)
-       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
-
-  /** One SOFT (forward-backward) E-step instance as SQL: recursive
-    * forward/backward DPs over `twords` scored by `vocabCte(piece,
-    * psc)`, ending in `${"$"}{id}ec(piece, n)` — expected piece counts
-    * in MICRO-occurrences weighted by word occurrence, replaying
-    * [[graft.operators.Subword.softWordCounts]] term by term: each α/β
-    * cell is the round-6 log-sum-exp of its ≤ L arm terms combined in
-    * ascending piece length with absent arms coalesced to the −10^9
-    * sentinel (exp underflows to exactly 0.0), the l = 1 arm falling
-    * back to the unk score; per-occurrence posteriors
-    * `exp(α(s) + psc + β(s+l) − Z)` round to the 10^-6 grid BEFORE the
-    * exact-integer cross-word aggregation. Substr windows and guards
-    * mirror [[unigramDpSql]]'s joins (and the right-end guards keep a
-    * truncated tail substr from matching a shorter piece). */
-  private def unigramSoftEStepSql(id: String, vocabCte: String,
-                                  L: Int): String = {
-    val unk = s"(${unigramUnkScore}e0)"
-    val sent = "(-1000000000e0)"
-    // forward: computing alpha(pos+1); a0..a{L-1} = alpha(pos-i)
-    val fJoins = (2 to L).map(l =>
-      s"  LEFT JOIN $vocabCte v$l ON pos >= ${l - 1} " +
-        s"AND v$l.piece = substr(w, pos + ${2 - l}, $l)").mkString("\n")
-    val fTerms = (1 to L).map { l =>
-      if (l == 1) s"coalesce(a0 + coalesce(v1.psc, $unk), $sent)"
-      else s"coalesce(a${l - 1} + v$l.psc, $sent)"
-    }
-    // backward: computing beta(pos-1); b0..b{L-1} = beta(pos-1+i+1)
-    val bJoins = (1 to L).map(l =>
-      s"  LEFT JOIN $vocabCte u$l ON pos + ${l - 1} <= n " +
-        s"AND u$l.piece = substr(w, pos, $l)").mkString("\n")
-    val bTerms = (1 to L).map { l =>
-      if (l == 1) s"coalesce(coalesce(u1.psc, $unk) + b0, $sent)"
-      else s"coalesce(u$l.psc + b${l - 1}, $sent)"
-    }
-    def lse(ts: Seq[String], mx: String): String =
-      s"round($mx + ln(" +
-        ts.map(t => s"exp($t - $mx)").mkString(" + ") + "), 6)"
-    val aShift = (0 until L - 1).map(i => s"a$i").mkString(", ")
-    val bShift = (0 until L - 1).map(i => s"b$i").mkString(", ")
-    val aNulls = (1 until L).map(i => s"NULL::DOUBLE AS a$i")
-      .mkString(", ")
-    val bNulls = (1 until L).map(i => s"NULL::DOUBLE AS b$i")
-      .mkString(", ")
-    // weight arms: posterior micro-mass of the in-vocab piece at
-    // (pos, l); right-end guard so a truncated substr cannot match
-    val wArms = (1 to L).map { l =>
-      s"""  SELECT fa.w, v.piece,
-         |    round(exp(fa.a0 + v.psc + fb.b0 - fz.z) * 1000000e0)::BIGINT
-         |      AS micro
-         |  FROM ${id}fa fa
-         |  JOIN $vocabCte v ON fa.pos + $l <= fa.n
-         |                  AND v.piece = substr(fa.w, fa.pos + 1, $l)
-         |  JOIN ${id}fb fb ON fb.w = fa.w AND fb.pos = fa.pos + $l
-         |  JOIN ${id}fz fz ON fz.w = fa.w""".stripMargin
-    }.mkString("\n  UNION ALL\n")
-    val tList = (1 to L).map(i => s"t$i").mkString(", ")
-    val fTermCols = fTerms.zipWithIndex
-      .map { case (t, i) => s"$t AS t${i + 1}" }.mkString(", ")
-    val bTermCols = bTerms.zipWithIndex
-      .map { case (t, i) => s"$t AS t${i + 1}" }.mkString(", ")
-    val aList = (0 until L).map(i => s"a$i").mkString(", ")
-    val bList = (0 until L).map(i => s"b$i").mkString(", ")
-    s"""${id}fr AS (
-       |  SELECT w, len(w)::INT AS n, 0 AS pos, 0e0::DOUBLE AS a0, $aNulls
-       |  FROM twords
-       |  UNION ALL
-       |  SELECT w, n, pos + 1,
-       |    ${lse((1 to L).map(i => s"t$i"), "mx")} AS a0,
-       |    $aShift
-       |  FROM (SELECT w, n, pos, $aList, $tList,
-       |               greatest($tList) AS mx
-       |        FROM (SELECT fr.w, fr.n, fr.pos, $aList, $fTermCols
-       |              FROM ${id}fr fr
-       |  LEFT JOIN $vocabCte v1 ON v1.piece = substr(w, pos + 1, 1)
-       |$fJoins
-       |              WHERE pos < n))
-       |),""".stripMargin + "\n" +
-      s"""${id}br AS (
-       |  SELECT w, len(w)::INT AS n, len(w)::INT AS pos,
-       |         0e0::DOUBLE AS b0, $bNulls
-       |  FROM twords
-       |  UNION ALL
-       |  SELECT w, n, pos - 1,
-       |    ${lse((1 to L).map(i => s"t$i"), "mx")} AS b0,
-       |    $bShift
-       |  FROM (SELECT w, n, pos, $bList, $tList,
-       |               greatest($tList) AS mx
-       |        FROM (SELECT br.w, br.n, br.pos, $bList, $bTermCols
-       |              FROM ${id}br br
-       |$bJoins
-       |              WHERE pos > 0))
-       |),
-       |${id}fa AS MATERIALIZED (SELECT w, n, pos, a0 FROM ${id}fr),
-       |${id}fb AS MATERIALIZED (SELECT w, pos, b0 FROM ${id}br),
-       |${id}fz AS MATERIALIZED (SELECT w, a0 AS z FROM ${id}fr
-       |                         WHERE pos = n),
-       |${id}wg AS (
-       |$wArms),
-       |${id}ec AS (SELECT piece, sum(c * micro)::BIGINT AS n
-       |        FROM ${id}wg JOIN wcw USING (w) GROUP BY piece)"""
-        .stripMargin
-  }
-
-  /** The q_unigram_train_soft oracle: [[unigramTrainOracleSql]] with
-    * both E-steps SOFT ([[unigramSoftEStepSql]] — forward-backward
-    * expected counts in micro-occurrences, M-steps and the prune loss
-    * at the 10^6 count unit) and the final apply still the hard
-    * Viterbi DP (training is soft; application is always Viterbi, as
-    * in SentencePiece). */
-  private def unigramTrainSoftOracleSql(seedSize: Int,
-                                        targetMulti: Int): String = {
-    val L = 4
-    s"""WITH RECURSIVE $tokCte,
-       |wc AS (SELECT doc_id, w, count(*)::BIGINT AS c
-       |       FROM (SELECT doc_id, unnest(tk) AS w FROM t)
-       |       GROUP BY doc_id, w),
-       |wcw AS MATERIALIZED (SELECT w, sum(c)::BIGINT AS c FROM wc GROUP BY w),
-       |twords AS MATERIALIZED (SELECT w FROM wcw),
-       |seeds AS (
-       |  SELECT piece, n_occ FROM (
-       |    SELECT piece, n_occ,
-       |           row_number() OVER (ORDER BY n_occ DESC, piece) AS rk
-       |    FROM (SELECT substr(w, s + 1, n) AS piece,
-       |                 sum(c)::BIGINT AS n_occ
-       |          FROM wcw,
-       |               unnest(range(2, ${L + 1})) AS ln(n),
-       |               unnest(range(0, greatest(len(w) - n + 1, 0))) AS st(s)
-       |          GROUP BY piece))
-       |  WHERE rk <= $seedSize),
-       |sing AS (SELECT substr(w, s + 1, 1) AS piece, sum(c)::BIGINT AS n_occ
-       |         FROM wcw, unnest(range(0, len(w))) AS st(s)
-       |         GROUP BY piece),
-       |v0c AS (SELECT piece, n_occ, TRUE AS single FROM sing
-       |        UNION ALL SELECT piece, n_occ, FALSE FROM seeds),
-       |t0 AS (SELECT sum((n_occ + 1) * 1000000)::BIGINT AS tt FROM v0c),
-       |v0 AS MATERIALIZED (
-       |       SELECT piece,
-       |              round(ln(((n_occ + 1) * 1000000)::DOUBLE / tt::DOUBLE),
-       |                    6) AS psc
-       |       FROM v0c CROSS JOIN t0),
-       |${unigramSoftEStepSql("s1", "v0", L)},
-       |c1 AS (SELECT v.piece, v.single, coalesce(e.n, 0)::BIGINT AS c
-       |       FROM v0c v LEFT JOIN s1ec e USING (piece)),
-       |t1 AS (SELECT sum(c + 1000000)::BIGINT AS tt FROM c1),
-       |m1 AS (SELECT c1.piece, c1.single, c1.c,
-       |              round(ln((c1.c + 1000000)::DOUBLE / t1.tt::DOUBLE), 6)
-       |                AS psc
-       |       FROM c1 CROSS JOIN t1),
-       |lss AS (SELECT piece, CASE WHEN lraw = 0 THEN 0e0 ELSE lraw END AS l
-       |        FROM (
-       |          SELECT m.piece,
-       |                 round((m.c::DOUBLE / 1000000e0) * (m.psc -
-       |                   (coalesce(x1.psc, 0e0) + coalesce(x2.psc, 0e0)
-       |                    + coalesce(x3.psc, 0e0) + coalesce(x4.psc, 0e0))),
-       |                   6) AS lraw
-       |          FROM m1 m
-       |          LEFT JOIN m1 x1 ON x1.piece = substr(m.piece, 1, 1)
-       |          LEFT JOIN m1 x2 ON len(m.piece) >= 2
-       |                         AND x2.piece = substr(m.piece, 2, 1)
-       |          LEFT JOIN m1 x3 ON len(m.piece) >= 3
-       |                         AND x3.piece = substr(m.piece, 3, 1)
-       |          LEFT JOIN m1 x4 ON len(m.piece) >= 4
-       |                         AND x4.piece = substr(m.piece, 4, 1)
-       |          WHERE NOT m.single)),
-       |keep AS (SELECT piece FROM (
-       |           SELECT piece,
-       |                  row_number() OVER (ORDER BY l DESC, piece) AS rk
-       |           FROM lss)
-       |         WHERE rk <= $targetMulti),
-       |v1 AS MATERIALIZED (
-       |       SELECT piece, psc FROM m1
-       |       WHERE single OR piece IN (SELECT piece FROM keep)),
-       |${unigramSoftEStepSql("s2", "v1", L)},
-       |c2 AS (SELECT v.piece, coalesce(e.n, 0)::BIGINT AS c
-       |       FROM v1 v LEFT JOIN s2ec e USING (piece)),
-       |t2 AS (SELECT sum(c + 1000000)::BIGINT AS tt FROM c2),
-       |v2 AS MATERIALIZED (
-       |       SELECT c2.piece,
-       |              round(ln((c2.c + 1000000)::DOUBLE / t2.tt::DOUBLE), 6)
-       |                AS psc
-       |       FROM c2 CROSS JOIN t2),
-       |${unigramDpSql("strec3", "stout3", "twords", "v2", L)}
-       |SELECT doc_id, sum(c * np)::BIGINT AS n_pieces,
-       |       sum(c * nu)::BIGINT AS n_unk
-       |FROM wc JOIN stout3 USING (w)
-       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
-
-  /** Shared oracle fragment for q_dedup_spans/_cut: the island-text
-    * derivation (islandDocs), every-position 20-gram md5s, the >1x
-    * gram filter, and the per-doc gaps-and-islands interval merge
-    * ending in `spans(doc_id, span_start, span_end)` — plus `t2` for
-    * the cut replay to join back to. */
-  private val dupSpansCte = {
-    // g = md5 of the 20-char window at pos, built LINEARLY: split the
-    // text into char rows ONCE, window-lead the next 19 chars, concat.
-    // The naive per-position substr(text, i, 20) pays an O(i) head
-    // scan per call in DuckDB exactly as in Spark (the SCALE.md
-    // round-15 quadratic class) — hours on a 10 MB document. The split
-    // must land in its OWN CTE (cl) so unnest consumes a COLUMN: with
-    // string_split inline under the unnest, DuckDB re-evaluates the
-    // split per output vector — 98 s -> 19 s at the 10 MB fixture
-    // (the cdcChunksSql __c/__p shape, same lesson).
-    val leads = (1 until 20).map(j => s"lead(c, $j) OVER w")
-      .mkString(" || ")
-    s"""t2 AS (
-      |  SELECT doc_id,
-      |    substr(text, 1, 60) || '[' || md5('u' || doc_id::VARCHAR) ||
-      |    ']' || substr(text, 61) AS text
-      |  FROM documents),
-      |cl AS (
-      |  SELECT doc_id, len(text) AS n, string_split(text, '') AS chs
-      |  FROM t2 WHERE len(text) >= 20),
-      |ch AS (
-      |  SELECT doc_id, unnest(range(1, n + 1)) AS pos, unnest(chs) AS c
-      |  FROM cl),
-      |g AS (
-      |  SELECT doc_id, pos::BIGINT AS pos, md5(c || $leads) AS g
-      |  FROM ch
-      |  WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-      |  QUALIFY lead(c, 19) OVER w IS NOT NULL),
-      |dup AS (SELECT g FROM g GROUP BY g HAVING count(*) > 1),
-      |h AS (SELECT doc_id, pos FROM g JOIN dup USING (g)),
-      |m AS (SELECT doc_id, pos,
-      |        max(pos + 19) OVER (PARTITION BY doc_id ORDER BY pos
-      |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-      |          AS prev_end
-      |      FROM h),
-      |isl AS (SELECT doc_id, pos,
-      |          sum(CASE WHEN prev_end IS NULL OR pos > prev_end + 1
-      |                   THEN 1 ELSE 0 END) OVER (
-      |            PARTITION BY doc_id ORDER BY pos) AS island
-      |        FROM m),
-      |spans AS (SELECT doc_id, min(pos)::BIGINT AS span_start,
-      |                 (max(pos) + 19)::BIGINT AS span_end
-      |          FROM isl GROUP BY doc_id, island)""".stripMargin
-  }
-
-  /** The q_dedup_spans_tokens oracle: duplicateTokenSpans at
-    * minTokens=5 replayed linearly. Same char-row split as
-    * [[dupSpansCte]]; tokens derive from the char rows (run starts via
-    * lag, token ids via a cumulative sum, bytes + 1-based code-point
-    * bounds via an ordered string_agg + min/max), 5-token grams are
-    * space-joined window leads, and the island merge runs on TOKEN ids
-    * with the char bounds carried through — exactly the generator's
-    * (tpos, cs, ce, g) contract. */
-  private val dupTokenSpansCte = {
-    val n = 5
-    val gram = (1 until n)
-      .map(j => s"|| ' ' || lead(tok, $j) OVER w ").mkString
-    s"""t2 AS (
-      |  SELECT doc_id,
-      |    substr(text, 1, 60) || '[' || md5('u' || doc_id::VARCHAR) ||
-      |    ']' || substr(text, 61) AS text
-      |  FROM documents),
-      |cl AS (
-      |  SELECT doc_id, len(text) AS n, string_split(text, '') AS chs
-      |  FROM t2 WHERE len(text) >= 1),
-      |ch AS (
-      |  SELECT doc_id, unnest(range(1, n + 1)) AS pos, unnest(chs) AS c
-      |  FROM cl),
-      |tk1 AS (
-      |  SELECT doc_id, pos, c, it,
-      |    CASE WHEN it = 1 AND coalesce(lag(it) OVER (
-      |           PARTITION BY doc_id ORDER BY pos), 0) = 0
-      |         THEN 1 ELSE 0 END AS st
-      |  FROM (SELECT doc_id, pos, c,
-      |          CASE WHEN c IN (' ', chr(9), chr(10), chr(11), chr(12),
-      |                          chr(13)) THEN 0 ELSE 1 END AS it
-      |        FROM ch)),
-      |tk2 AS (
-      |  SELECT doc_id, pos, c, it,
-      |    sum(st) OVER (PARTITION BY doc_id ORDER BY pos) AS tid
-      |  FROM tk1),
-      |tok AS (
-      |  SELECT doc_id, tid, string_agg(c, '' ORDER BY pos) AS tok,
-      |         min(pos)::BIGINT AS ts, max(pos)::BIGINT AS te
-      |  FROM tk2 WHERE it = 1 GROUP BY doc_id, tid),
-      |tg AS (
-      |  SELECT doc_id, tid::BIGINT AS tpos, ts AS cs,
-      |         lead(te, ${n - 1}) OVER w AS ce,
-      |         md5(tok $gram) AS g
-      |  FROM tok
-      |  WINDOW w AS (PARTITION BY doc_id ORDER BY tid)
-      |  QUALIFY lead(tok, ${n - 1}) OVER w IS NOT NULL),
-      |tdup AS (SELECT g FROM tg GROUP BY g HAVING count(*) > 1),
-      |th AS (SELECT doc_id, tpos, cs, ce FROM tg JOIN tdup USING (g)),
-      |tm AS (SELECT doc_id, tpos, cs, ce,
-      |         max(tpos + ${n - 1}) OVER (PARTITION BY doc_id
-      |           ORDER BY tpos
-      |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-      |           AS prev_end
-      |       FROM th),
-      |tisl AS (SELECT doc_id, tpos, cs, ce,
-      |           sum(CASE WHEN prev_end IS NULL OR tpos > prev_end + 1
-      |                    THEN 1 ELSE 0 END) OVER (
-      |             PARTITION BY doc_id ORDER BY tpos) AS island
-      |         FROM tm),
-      |tspans AS (SELECT doc_id, min(cs)::BIGINT AS span_start,
-      |                  max(ce)::BIGINT AS span_end,
-      |                  min(tpos)::BIGINT AS tok_start,
-      |                  (max(tpos) + ${n - 1})::BIGINT AS tok_end
-      |           FROM tisl GROUP BY doc_id, island)""".stripMargin
-  }
-
-  /** [[dupTokenSpansCte]] extended through the same cut replay shape
-    * as [[spanCutCte]] — covered positions explode from the TOKEN
-    * spans' char bounds, the token CTE's own `ch` rows anti-join them,
-    * ordered string_agg stitches `tcut(doc_id, kept)`. No length
-    * guard needed: the token char-split keeps every len>=1 doc, so a
-    * span-free doc reassembles byte-identical and only the empty-text
-    * doc falls through to coalesce(''). */
-  private def tokenSpanCutCte: String =
-    s"""$dupTokenSpansCte,
-       |tcov AS (SELECT doc_id,
-       |           unnest(range(span_start, span_end + 1)) AS pos
-       |         FROM tspans),
-       |tkeptc AS (SELECT doc_id, pos, c
-       |           FROM ch ANTI JOIN tcov USING (doc_id, pos)),
-       |tkk AS (SELECT doc_id, string_agg(c, '' ORDER BY pos) AS kept
-       |        FROM tkeptc GROUP BY doc_id),
-       |tcut AS (SELECT t2.doc_id,
-       |           CASE WHEN t2.text IS NULL THEN NULL
-       |                ELSE coalesce(tkk.kept, '') END AS kept
-       |         FROM t2 LEFT JOIN tkk USING (doc_id))""".stripMargin
-
-  /** [[dupSpansCte]] extended through the span CUT: covered positions
-    * explode from the spans (total <= doc length), the `ch` char rows
-    * anti-join them, and an ordered string_agg stitches the kept
-    * bytes into `cut(doc_id, kept)` — shared by q_dedup_spans_cut and
-    * the q_span_pipeline capstone so the cut replay cannot drift. */
-  private def spanCutCte: String =
-    s"""$dupSpansCte,
-       |cov AS (SELECT doc_id, unnest(range(span_start, span_end + 1)) AS pos
-       |        FROM spans),
-       |keptc AS (SELECT doc_id, pos, c
-       |          FROM ch ANTI JOIN cov USING (doc_id, pos)),
-       |k AS (SELECT doc_id, string_agg(c, '' ORDER BY pos) AS kept
-       |      FROM keptc GROUP BY doc_id),
-       |cut AS (SELECT t2.doc_id,
-       |          CASE WHEN t2.text IS NULL THEN NULL
-       |               WHEN len(t2.text) < 20 THEN t2.text
-       |               ELSE coalesce(k.kept, '') END AS kept
-       |        FROM t2 LEFT JOIN k USING (doc_id))""".stripMargin
-
-  /** The q_quality_classifier oracle: ALL `iters` logistic-GD rounds
-    * replayed bit-exactly. The integer-quantization contract makes
-    * this possible (see Selection.trainQualityClassifier): margins,
-    * probabilities, residuals and gradients are ALL integers — BIGINT
-    * sums are order-free, so no float aggregation exists anywhere —
-    * and the weight update rounds a double both engines derive from
-    * the same integers with the same two operations (bit-identical
-    * even on exact .5 boundaries, which grid-valued gradients make
-    * common). Per-round CTEs mirror the Scala loop 1:1;
-    * multi-referenced frames are MATERIALIZED (the unigram-train
-    * lesson: an inlined CTE re-evaluates its upstream chain per
-    * reference). Scoring runs over the UNLABELED feature frame —
-    * null-source docs train nothing but still score. */
-  private def qualityClassifierOracleSql(iters: Int, buckets: Int,
-                                         lr: String): String = {
-    val rounds = (1 to iters).map { t =>
-      s"""m$t AS (SELECT f.doc, f.y,
-         |          (SELECT bi FROM bias${t - 1}) + sum(w.w) AS mg
-         |        FROM feats f JOIN w${t - 1} w USING (b)
-         |        GROUP BY f.doc, f.y),
-         |r$t AS MATERIALIZED (
-         |        SELECT doc,
-         |          (y::BIGINT * 1000000 -
-         |           round(1000000e0 / (1.0e0 +
-         |                 exp(-(mg::DOUBLE / 1000000e0))), 0)::BIGINT)
-         |            AS r
-         |        FROM m$t),
-         |g$t AS (SELECT f.b, sum(r.r)::BIGINT AS g
-         |        FROM feats f JOIN r$t r USING (doc) GROUP BY f.b),
-         |w$t AS MATERIALIZED (
-         |        SELECT p.b,
-         |          (p.w + round($lr * coalesce(g.g, 0) / n.n)::BIGINT)
-         |            AS w
-         |        FROM w${t - 1} p LEFT JOIN g$t g USING (b)
-         |        CROSS JOIN nn n),
-         |bias$t AS MATERIALIZED (
-         |        SELECT (p.bi + round($lr * (SELECT sum(r)::BIGINT
-         |                                    FROM r$t)
-         |                              / n.n)::BIGINT) AS bi
-         |        FROM bias${t - 1} p CROSS JOIN nn n)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $tokCte,
-       |feats AS MATERIALIZED (
-       |  SELECT DISTINCT q.doc_id AS doc,
-       |         (d.source = 'src1')::INT::DOUBLE AS y,
-       |         ('0x' || substr(md5(w), 1, 6))::BIGINT % $buckets AS b
-       |  FROM (SELECT doc_id, unnest(tk) AS w FROM t) q
-       |  JOIN documents d USING (doc_id)
-       |  WHERE d.source IS NOT NULL),
-       |sfeats AS MATERIALIZED (
-       |  SELECT DISTINCT doc_id AS doc,
-       |         ('0x' || substr(md5(w), 1, 6))::BIGINT % $buckets AS b
-       |  FROM (SELECT doc_id, unnest(tk) AS w FROM t)),
-       |nn AS MATERIALIZED (
-       |  SELECT count(DISTINCT doc)::BIGINT AS n FROM feats),
-       |w0 AS MATERIALIZED (
-       |  SELECT unnest(range(0, $buckets))::BIGINT AS b, 0::BIGINT AS w),
-       |bias0 AS MATERIALIZED (SELECT 0::BIGINT AS bi),
-       |$rounds
-       |SELECT f.doc AS doc_id,
-       |       ((SELECT bi FROM bias$iters) + sum(w.w))::BIGINT
-       |         AS score_micro,
-       |       ((SELECT bi FROM bias$iters) + sum(w.w)) > 0 AS pred
-       |FROM sfeats f JOIN w$iters w USING (b)
-       |GROUP BY f.doc ORDER BY doc_id""".stripMargin
-  }
-
-  private val tokCte =
-    """t AS (SELECT doc_id, text,
-      |             list_filter(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-      |                         x -> x <> '') tk
-      |      FROM documents)""".stripMargin
-
-  /** Distinct (doc_id, 8-gram) rows — linear form (see ngramRowsSql). */
-  private val s8RowsCte =
-    s"""sh AS (
-      |  SELECT DISTINCT doc_id, s8
-      |  FROM ${ngramRowsSql("t", 8, gram = "s8")})""".stripMargin
-
-  private val decontaminateSql =
-    s"""WITH $tokCte,
-      |$s8RowsCte,
-      |bench AS (SELECT DISTINCT s8 AS s FROM sh WHERE doc_id < 10),
-      |corpus AS (SELECT doc_id AS doc, s8 AS s FROM sh WHERE doc_id >= 10)
-      |SELECT doc, count(DISTINCT s) AS n_shared
-      |FROM corpus JOIN bench USING (s)
-      |GROUP BY doc ORDER BY doc""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-
-    "q_pipeline_chain" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
-        |FROM lineitem WHERE l_quantity > 10
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_expr_mapper" ->
-      """SELECT o_orderkey, concat('order-', o_orderstatus) AS tag,
-        |       round(o_totalprice * 0.9, 4) AS discounted
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q_expr_json" ->
-      """SELECT event_id, regexp_extract(props, '"k": ([0-9]+)', 1)::INTEGER AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    // flogo conventions, DuckDB-side: 1-based substring shift, strpos-1
-    // for 0-based indexOf, literal string_split, ceil cast to BIGINT
-    // (Spark's ceil(double) is integral)
-    "q_expr_functions" ->
-      """SELECT doc_id,
-        |       substring(text, 1, 10) AS head10,
-        |       strpos(text, 'the') - 1 AS idx_the,
-        |       ends_with(source, '1') AS src1,
-        |       len(string_split(text, ' ')) AS n_parts,
-        |       ceil(round(doc_id / 7.0, 1))::BIGINT AS bucket7
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_filter_nonzero" ->
-      """SELECT event_id, v FROM (
-        |  SELECT event_id, CASE WHEN value > 50 THEN 0.0 ELSE value END AS v
-        |  FROM events) WHERE v <> 0.0 ORDER BY event_id""".stripMargin,
-
-    "q_filter_nonzero_vec" ->
-      """SELECT vec_id FROM embeddings
-        |WHERE len(list_filter(embedding, x -> x <> 0)) > 0
-        |ORDER BY vec_id""".stripMargin,
-
-    "q_groupby_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       round(sum(l_quantity), 4) AS sum_qty,
-        |       round(avg(l_quantity), 4) AS avg_qty,
-        |       round(min(l_quantity), 4) AS min_qty,
-        |       round(max(l_quantity), 4) AS max_qty,
-        |       count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_accumulate" ->
-      """SELECT user_id,
-        |  array_to_string(list(round(value, 4)::DECIMAL(18,4)::VARCHAR
-        |                       ORDER BY event_id), ',') AS vals
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_keyed_map_shape" ->
-      """SELECT ws, string_agg(event_type || '=' || n::DECIMAL(18,1)::VARCHAR,
-        |                      ',' ORDER BY event_type) AS kv
-        |FROM (SELECT epoch(date_trunc('hour', ts))::BIGINT AS ws, event_type,
-        |             count(*)::DOUBLE AS n
-        |      FROM events GROUP BY 1, 2)
-        |GROUP BY ws ORDER BY ws""".stripMargin,
-
-    "q_keyed_agg" ->
-      """SELECT event_type, count(*) AS n, round(avg(value), 4) AS avg_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_groupby_state" ->
-      """SELECT user_id, count(*) AS n, round(sum(value), 4) AS sv
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_vector_agg" ->
-      """SELECT label, i AS idx, round(sum(x), 4) + 0.0 AS vsum, round(avg(x), 4) + 0.0 AS vavg
-        |FROM (SELECT label, unnest(embedding::DOUBLE[]) x,
-        |             generate_subscripts(embedding, 1) i
-        |      FROM embeddings)
-        |GROUP BY label, i ORDER BY label, idx""".stripMargin,
-
-    "q_tumbling_count" ->
-      """SELECT user_id, window_id, round(sum(value), 4) AS result FROM (
-        |  SELECT user_id, value,
-        |         (row_number() OVER (PARTITION BY user_id ORDER BY event_id) - 1)
-        |           // 10 AS window_id,
-        |         count(*) OVER (PARTITION BY user_id) AS cnt,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id) - 1 AS rn
-        |  FROM events)
-        |GROUP BY user_id, window_id HAVING count(*) = 10
-        |ORDER BY user_id, window_id""".stripMargin,
-
-    // identical replay to q_tumbling_count — the salted path's output
-    // contract IS the plain path's
-    "q_tumbling_salted" ->
-      """SELECT user_id, window_id, round(sum(value), 4) AS result FROM (
-        |  SELECT user_id, value,
-        |         (row_number() OVER (PARTITION BY user_id ORDER BY event_id) - 1)
-        |           // 10 AS window_id
-        |  FROM events)
-        |GROUP BY user_id, window_id HAVING count(*) = 10
-        |ORDER BY user_id, window_id""".stripMargin,
-
-    "q_sliding_count" ->
-      """SELECT user_id, rn AS emit_at, round(a, 4) AS result FROM (
-        |  SELECT user_id,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id) - 1 AS rn,
-        |         avg(value) OVER (PARTITION BY user_id ORDER BY event_id
-        |                          ROWS BETWEEN 9 PRECEDING AND CURRENT ROW) AS a
-        |  FROM events)
-        |WHERE rn >= 9 AND (rn - 9) % 3 = 0
-        |ORDER BY user_id, emit_at""".stripMargin,
-
-    // identical replay to q_sliding_count — the salted path's output
-    // contract IS the plain path's
-    "q_sliding_salted" ->
-      """SELECT user_id, rn AS emit_at, round(a, 4) AS result FROM (
-        |  SELECT user_id,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id) - 1 AS rn,
-        |         avg(value) OVER (PARTITION BY user_id ORDER BY event_id
-        |                          ROWS BETWEEN 9 PRECEDING AND CURRENT ROW) AS a
-        |  FROM events)
-        |WHERE rn >= 9 AND (rn - 9) % 3 = 0
-        |ORDER BY user_id, emit_at""".stripMargin,
-
-    "q_tumbling_stream" ->
-      """SELECT user_id, event_id AS emit_seq, round(s, 4) AS result FROM (
-        |  SELECT user_id, event_id,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS rn,
-        |         sum(value) OVER (PARTITION BY user_id ORDER BY event_id
-        |                          ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS s
-        |  FROM events)
-        |WHERE rn % 7 = 0 ORDER BY user_id, emit_seq""".stripMargin,
-
-    "q_time_tumbling" ->
-      """SELECT epoch(date_trunc('hour', ts))::BIGINT AS ws, event_type,
-        |       count(*) AS n, round(sum(value), 4) AS sv
-        |FROM events GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin,
-
-    "q_time_sliding" ->
-      """SELECT ws, count(*) AS n, round(sum(value), 4) AS sv FROM (
-        |  SELECT epoch(date_trunc('hour', ts))::BIGINT AS ws, value FROM events
-        |  UNION ALL
-        |  SELECT epoch(date_trunc('hour', ts))::BIGINT - 3600 AS ws, value
-        |  FROM events)
-        |GROUP BY ws ORDER BY ws""".stripMargin,
-
-    // Deterministic replay makes streaming watermark semantics batch-SQL
-    // expressible: the watermark in force while chunk k loads is
-    // max(event time over chunks < k) - 45 min (ms-floored, as Spark
-    // floors event-time stats to milliseconds); a row is dropped iff its
-    // window end <= that watermark, and a window is emitted iff its end
-    // <= the final watermark.
-    "q_watermark_late" ->
-      """WITH c AS (
-        |  SELECT ts, value,
-        |         ('0x' || substr(md5(event_id::VARCHAR), 1, 8))::BIGINT % 4
-        |           AS chunk
-        |  FROM events),
-        |mx AS (SELECT chunk, max(ts) AS mxts FROM c GROUP BY chunk),
-        |wm AS (SELECT k.chunk,
-        |         (SELECT epoch_ms(max(mxts)) - 2700000 FROM mx
-        |          WHERE mx.chunk < k.chunk) AS wm_ms
-        |       FROM (SELECT DISTINCT chunk FROM c) k),
-        |kept AS (
-        |  SELECT c.ts, c.value FROM c JOIN wm USING (chunk)
-        |  WHERE wm.wm_ms IS NULL
-        |     OR epoch_ms(date_trunc('hour', c.ts) + INTERVAL 1 HOUR)
-        |          > wm.wm_ms),
-        |fin AS (SELECT epoch_ms(max(ts)) - 2700000 AS wm_ms FROM c)
-        |SELECT epoch(date_trunc('hour', ts))::BIGINT AS ws, count(*) AS n,
-        |       round(sum(value), 4) AS sv
-        |FROM kept, fin
-        |WHERE epoch_ms(date_trunc('hour', ts) + INTERVAL 1 HOUR) <= fin.wm_ms
-        |GROUP BY ws ORDER BY ws""".stripMargin,
-
-    // the keyed SLIDING replay: each event expands to its two 2h/1h
-    // panes (a static UNION ALL — no engine-specific lateral), then the
-    // same per-chunk watermark rules apply PER PANE: a pane is dropped
-    // iff its end <= the watermark in force at the row's arrival chunk,
-    // and emitted iff its end <= the final watermark
-    "q_keyed_time_sliding" ->
-      """WITH c AS (
-        |  SELECT ts, event_type, value,
-        |         ('0x' || substr(md5(event_id::VARCHAR), 1, 8))::BIGINT % 4
-        |           AS chunk
-        |  FROM events),
-        |mx AS (SELECT chunk, max(ts) AS mxts FROM c GROUP BY chunk),
-        |wm AS (SELECT k.chunk,
-        |         (SELECT epoch_ms(max(mxts)) - 2700000 FROM mx
-        |          WHERE mx.chunk < k.chunk) AS wm_ms
-        |       FROM (SELECT DISTINCT chunk FROM c) k),
-        |x AS (
-        |  SELECT ts, event_type, value, chunk,
-        |         date_trunc('hour', ts) AS wstart FROM c
-        |  UNION ALL
-        |  SELECT ts, event_type, value, chunk,
-        |         date_trunc('hour', ts) - INTERVAL 1 HOUR AS wstart FROM c),
-        |kept AS (
-        |  SELECT x.wstart, x.event_type, x.value FROM x JOIN wm USING (chunk)
-        |  WHERE wm.wm_ms IS NULL
-        |     OR epoch_ms(x.wstart + INTERVAL 2 HOUR) > wm.wm_ms),
-        |fin AS (SELECT epoch_ms(max(ts)) - 2700000 AS wm_ms FROM c)
-        |SELECT epoch(wstart)::BIGINT AS ws, event_type, count(*) AS n,
-        |       round(sum(value), 4) AS sv
-        |FROM kept, fin
-        |WHERE epoch_ms(wstart + INTERVAL 2 HOUR) <= fin.wm_ms
-        |GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin,
-
-    // stream-stream interval join under time-ordered lockstep replay:
-    // nothing arrives after its partner's state eviction (see
-    // StreamingJoins scaladoc), so the streaming emission set IS the
-    // batch interval join — replayed here directly
-    "q_stream_interval_join" ->
-      """SELECT l.event_id::BIGINT AS click_id,
-        |       r.event_id::BIGINT AS purchase_id,
-        |       l.user_id::BIGINT AS user_id,
-        |       (epoch_us(r.ts) - epoch_us(l.ts))::BIGINT AS lag_us
-        |FROM events l JOIN events r
-        |  ON l.event_type = 'click' AND r.event_type = 'purchase'
-        | AND l.user_id = r.user_id
-        | AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 2 HOUR
-        |ORDER BY click_id, purchase_id""".stripMargin,
-
-    // outer form: matches are the inner join; a null row appears iff
-    // the click has no match AND the final watermark (min over both
-    // inputs' ms-floored max ts, minus the 1 h delay) STRICTLY passes
-    // click_ts + 2 h — the spec-pinned eviction rule
-    "q_stream_interval_join_left" ->
-      """WITH l AS (SELECT * FROM events WHERE event_type = 'click'),
-        |r AS (SELECT * FROM events WHERE event_type = 'purchase'),
-        |wm AS (SELECT least((SELECT epoch_ms(max(ts)) FROM l),
-        |                    (SELECT epoch_ms(max(ts)) FROM r))
-        |              - 3600000 AS wm_ms),
-        |m AS (SELECT l.event_id::BIGINT AS click_id,
-        |             r.event_id::BIGINT AS purchase_id,
-        |             l.user_id::BIGINT AS user_id,
-        |             (epoch_us(r.ts) - epoch_us(l.ts))::BIGINT AS lag_us
-        |      FROM l JOIN r ON l.user_id = r.user_id
-        |        AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 2 HOUR),
-        |u AS (SELECT l.event_id::BIGINT AS click_id,
-        |             NULL::BIGINT AS purchase_id,
-        |             l.user_id::BIGINT AS user_id,
-        |             NULL::BIGINT AS lag_us
-        |      FROM l, wm
-        |      WHERE l.event_id NOT IN (SELECT click_id FROM m)
-        |        AND epoch_us(l.ts) < (wm.wm_ms - 7200000) * 1000)
-        |SELECT * FROM m UNION ALL SELECT * FROM u
-        |ORDER BY click_id, purchase_id""".stripMargin,
-
-    // right-outer: the purchase side's eviction bound is its OWN ts
-    // (asymmetric condition — see the gate comment); null row iff
-    // unmatched AND r_ts strictly below the final watermark
-    "q_stream_interval_join_right" ->
-      """WITH l AS (SELECT * FROM events WHERE event_type = 'click'),
-        |r AS (SELECT * FROM events WHERE event_type = 'purchase'),
-        |wm AS (SELECT least((SELECT epoch_ms(max(ts)) FROM l),
-        |                    (SELECT epoch_ms(max(ts)) FROM r))
-        |              - 3600000 AS wm_ms),
-        |m AS (SELECT l.event_id::BIGINT AS click_id,
-        |             r.event_id::BIGINT AS purchase_id,
-        |             l.user_id::BIGINT AS user_id,
-        |             (epoch_us(r.ts) - epoch_us(l.ts))::BIGINT AS lag_us
-        |      FROM l JOIN r ON l.user_id = r.user_id
-        |        AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 2 HOUR),
-        |u AS (SELECT NULL::BIGINT AS click_id,
-        |             r.event_id::BIGINT AS purchase_id,
-        |             r.user_id::BIGINT AS user_id,
-        |             NULL::BIGINT AS lag_us
-        |      FROM r, wm
-        |      WHERE r.event_id NOT IN (SELECT purchase_id FROM m)
-        |        AND epoch_us(r.ts) < wm.wm_ms * 1000)
-        |SELECT * FROM m UNION ALL SELECT * FROM u
-        |ORDER BY click_id, purchase_id""".stripMargin,
-
-    // full-outer: both unmatched sets, each under its own side's
-    // eviction bound, over the one shared replay
-    "q_stream_interval_join_full" ->
-      """WITH l AS (SELECT * FROM events WHERE event_type = 'click'),
-        |r AS (SELECT * FROM events WHERE event_type = 'purchase'),
-        |wm AS (SELECT least((SELECT epoch_ms(max(ts)) FROM l),
-        |                    (SELECT epoch_ms(max(ts)) FROM r))
-        |              - 3600000 AS wm_ms),
-        |m AS (SELECT l.event_id::BIGINT AS click_id,
-        |             r.event_id::BIGINT AS purchase_id,
-        |             l.user_id::BIGINT AS user_id,
-        |             (epoch_us(r.ts) - epoch_us(l.ts))::BIGINT AS lag_us
-        |      FROM l JOIN r ON l.user_id = r.user_id
-        |        AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 2 HOUR),
-        |ul AS (SELECT l.event_id::BIGINT AS click_id,
-        |              NULL::BIGINT AS purchase_id,
-        |              l.user_id::BIGINT AS user_id,
-        |              NULL::BIGINT AS lag_us
-        |       FROM l, wm
-        |       WHERE l.event_id NOT IN (SELECT click_id FROM m)
-        |         AND epoch_us(l.ts) < (wm.wm_ms - 7200000) * 1000),
-        |ur AS (SELECT NULL::BIGINT AS click_id,
-        |              r.event_id::BIGINT AS purchase_id,
-        |              r.user_id::BIGINT AS user_id,
-        |              NULL::BIGINT AS lag_us
-        |       FROM r, wm
-        |       WHERE r.event_id NOT IN (SELECT purchase_id FROM m)
-        |         AND epoch_us(r.ts) < wm.wm_ms * 1000)
-        |SELECT * FROM m UNION ALL SELECT * FROM ul
-        |UNION ALL SELECT * FROM ur
-        |ORDER BY click_id, purchase_id""".stripMargin,
-
-    "q_channel_fanin" ->
-      """SELECT channel, count(*) AS n, round(sum(value), 4) AS sv FROM (
-        |  SELECT 'clicks' AS channel, value FROM events WHERE event_type = 'click'
-        |  UNION ALL
-        |  SELECT 'purchases' AS channel, value FROM events
-        |  WHERE event_type = 'purchase')
-        |GROUP BY channel ORDER BY channel""".stripMargin,
-
-    // the file-transport variant computes the same fan-in aggregate; the
-    // JSON envelope round-trips doubles losslessly, so the oracle is
-    // identical
-    "q_channel_file_fanin" ->
-      """SELECT channel, count(*) AS n, round(sum(value), 4) AS sv FROM (
-        |  SELECT 'clicks' AS channel, value FROM events WHERE event_type = 'click'
-        |  UNION ALL
-        |  SELECT 'purchases' AS channel, value FROM events
-        |  WHERE event_type = 'purchase')
-        |GROUP BY channel ORDER BY channel""".stripMargin,
-
-    "q_join_broadcast" ->
-      """SELECT r_name, n_name, count(*) AS n_cust,
-        |       round(sum(c_acctbal), 2) AS acctbal
-        |FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-
-    "q_join_shuffle" ->
-      """SELECT o_orderpriority, count(DISTINCT o_orderkey) AS n_orders,
-        |       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
-        |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q_anti_join" ->
-      """SELECT c_mktsegment, count(*) AS n_inactive
-        |FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey
-        |                    AND o_orderdate >= '1996-01-01'
-        |                    AND o_orderdate < '1997-01-01')
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q_rollup" ->
-      """SELECT coalesce(r_name, 'ALL') AS region,
-        |       coalesce(n_name, 'ALL') AS nation,
-        |       count(*)::BIGINT AS n_cust, round(sum(c_acctbal), 2) AS acctbal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP (r_name, n_name) ORDER BY region, nation""".stripMargin,
-
-    "q_cube" ->
-      """SELECT coalesce(r_name, 'ALL') AS region,
-        |       coalesce(n_name, 'ALL') AS nation,
-        |       count(*)::BIGINT AS n_cust, round(sum(c_acctbal), 2) AS acctbal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY CUBE (r_name, n_name) ORDER BY region, nation""".stripMargin,
-
-    "q_grouping_sets" ->
-      """SELECT coalesce(r_name, 'ALL') AS region,
-        |       coalesce(n_name, 'ALL') AS nation,
-        |       count(*)::BIGINT AS n_cust, round(sum(c_acctbal), 2) AS acctbal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY GROUPING SETS ((r_name), (n_name))
-        |ORDER BY region, nation""".stripMargin,
-
-    "q_star_join" ->
-      """SELECT n_name,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
-        |       count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA' AND o_orderdate >= '1996-01-01'
-        |  AND o_orderdate < '1997-01-01'
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-
-    "q_topk" ->
-      """SELECT c_custkey, c_name, round(sum(o_totalprice), 2) AS total
-        |FROM customer JOIN orders ON o_custkey = c_custkey
-        |GROUP BY c_custkey, c_name
-        |ORDER BY total DESC, c_custkey LIMIT 10""".stripMargin,
-
-    "q_token_count" ->
-      s"""WITH $tokCte
-         |SELECT doc_id, len(tk) AS n_tokens,
-         |       len(regexp_extract_all(text,
-         |           '[A-Za-z]+|[0-9]|[^A-Za-z0-9 \\t\\n\\x0b\\f\\r]')) AS n_bpeish
-         |FROM t ORDER BY doc_id""".stripMargin,
-
-    // df over the full corpus, tf cut to doc_id < 15 after the join;
-    // smoothed idf = ln((N+1)/(df+1)) + 1, same tokenization CTE
-    "q_tfidf" ->
-      s"""WITH $tokCte,
-         |tfc AS (SELECT doc_id, term, count(*)::BIGINT AS tf
-         |        FROM (SELECT doc_id, unnest(tk) AS term FROM t)
-         |        GROUP BY doc_id, term),
-         |dfreq AS (SELECT term, count(*)::BIGINT AS df FROM tfc GROUP BY term),
-         |n AS (SELECT count(*)::DOUBLE AS n FROM documents)
-         |SELECT doc_id, term, tf,
-         |       round(tf * (ln((n.n + 1) / (dfreq.df + 1)) + 1), 4) AS score
-         |FROM tfc JOIN dfreq USING (term) CROSS JOIN n
-         |WHERE doc_id < 15
-         |ORDER BY doc_id, term""".stripMargin,
-
-    // greedy longest-match subword tokenization, replayed in SQL by the
-    // recursive CTE; per-doc totals weight each distinct word's piece
-    // counts by its occurrence count
-    "q_subword" ->
-      s"""WITH RECURSIVE $tokCte,
-         |$subwordRecCte
-         |SELECT doc_id, sum(c * np)::BIGINT AS n_pieces,
-         |       sum(c * nu)::BIGINT AS n_unk
-         |FROM wc JOIN wp USING (w)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_subword_pieces" ->
-      s"""WITH RECURSIVE $tokCte,
-         |$subwordRecCte,
-         |wcw AS (SELECT w, sum(c)::BIGINT AS c FROM wc GROUP BY w),
-         |pc AS (SELECT w, unnest(pieces) AS piece FROM wp)
-         |SELECT piece, sum(c)::BIGINT AS n
-         |FROM wcw JOIN pc USING (w)
-         |GROUP BY piece ORDER BY piece""".stripMargin,
-
-    // unigram-LM Viterbi DP replayed as a sliding-window recursive CTE
-    // (state structs for the last maxPieceLen positions; argmax via
-    // list_max over STRUCT(sc,np,nu,ps) — tie-free scores make the
-    // tail of that order defensive). Per-word results weight by
-    // occurrence, exactly like q_subword
-    "q_unigram" ->
-      s"""WITH RECURSIVE $tokCte,
-         |$unigramRecCte
-         |SELECT doc_id, sum(c * np)::BIGINT AS n_pieces,
-         |       sum(c * nu)::BIGINT AS n_unk,
-         |       round(sum(c * sc), 4) AS score
-         |FROM wc JOIN uwp USING (w)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_unigram_pieces" ->
-      s"""WITH RECURSIVE $tokCte,
-         |$unigramRecCte,
-         |uwcw AS (SELECT w, sum(c)::BIGINT AS c FROM wc GROUP BY w),
-         |upc AS (SELECT w, unnest(ps) AS piece FROM uwp)
-         |SELECT piece, sum(c)::BIGINT AS n
-         |FROM uwcw JOIN upc USING (w)
-         |GROUP BY piece ORDER BY piece""".stripMargin,
-
-    // identical DP to q_unigram — the gate's Spark side segments with
-    // the vocab AFTER an export->import round-trip through the HF
-    // Unigram tokenizer.json layer, so a hash match here certifies the
-    // JSON layer preserved every piece and score bit-exactly
-    "q_unigram_vocab_io" ->
-      s"""WITH RECURSIVE $tokCte,
-         |$unigramRecCte
-         |SELECT doc_id, sum(c * np)::BIGINT AS n_pieces,
-         |       sum(c * nu)::BIGINT AS n_unk,
-         |       round(sum(c * sc), 4) AS score
-         |FROM wc JOIN uwp USING (w)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // the full trainer replay: seeds + singles -> EM1 -> loss prune ->
-    // EM2 -> apply, three generated DP CTEs (see unigramTrainOracleSql)
-    "q_unigram_train" -> unigramTrainOracleSql(60, 40),
-
-    // seed -> soft-EM1 -> prune -> soft-EM2 -> hard apply: two
-    // generated forward-backward E-steps + one Viterbi DP (see
-    // unigramTrainSoftOracleSql)
-    "q_unigram_train_soft" -> unigramTrainSoftOracleSql(60, 40),
-
-    // occurrence-weighted char-ngram candidates via a correlated lateral
-    // unnest over the distinct-word frame — same weighting as the Spark
-    // side's explode(sequence) walk
-    "q_bpe_merges" -> bpeOracleSql(6),
-
-    "q_bpe_encode" ->
-      s"""WITH $tokCte,
-         |wc AS (SELECT doc_id, w, count(*)::BIGINT AS c
-         |       FROM (SELECT doc_id, unnest(tk) AS w FROM t)
-         |       GROUP BY doc_id, w),
-         |wp AS (SELECT w, len($bpeApplySql)::BIGINT AS np
-         |       FROM (SELECT DISTINCT w FROM wc))
-         |SELECT doc_id AS doc, sum(c * np)::BIGINT AS n_pieces
-         |FROM wc JOIN wp USING (w)
-         |GROUP BY doc_id ORDER BY doc""".stripMargin,
-
-    // same replay as q_bpe_encode — the large-path gate applies the
-    // same training-consistent rule list, for which ranked apply ==
-    // sequential rank-order fold (see Subword.applyMergesRanked)
-    "q_bpe_encode_large" ->
-      s"""WITH $tokCte,
-         |wc AS (SELECT doc_id, w, count(*)::BIGINT AS c
-         |       FROM (SELECT doc_id, unnest(tk) AS w FROM t)
-         |       GROUP BY doc_id, w),
-         |wp AS (SELECT w, len($bpeApplySql)::BIGINT AS np
-         |       FROM (SELECT DISTINCT w FROM wc))
-         |SELECT doc_id AS doc, sum(c * np)::BIGINT AS n_pieces
-         |FROM wc JOIN wp USING (w)
-         |GROUP BY doc_id ORDER BY doc""".stripMargin,
-
-    "q_bpe_freq" ->
-      s"""WITH $tokCte,
-         |wcw AS (SELECT w, count(*)::BIGINT AS c
-         |        FROM (SELECT unnest(tk) AS w FROM t) GROUP BY w)
-         |SELECT piece, sum(c)::BIGINT AS n
-         |FROM (SELECT unnest($bpeApplySql) AS piece, c FROM wcw)
-         |GROUP BY piece ORDER BY piece""".stripMargin,
-
-    // per-token positions via lateral range, per-word segmentation via
-    // the delimited-replace apply, vocab ids by (freq desc, piece),
-    // sequence positions via row_number over (token pos, piece pos) —
-    // exploded scalar rows, mirroring the Spark side's posexplode
-    "q_encode_ids" ->
-      s"""WITH $tokCte,
-         |wcw AS (SELECT w, count(*)::BIGINT AS c
-         |        FROM (SELECT unnest(tk) AS w FROM t) GROUP BY w),
-         |freq AS (SELECT piece, sum(c)::BIGINT AS n
-         |         FROM (SELECT unnest($bpeApplySql) AS piece, c FROM wcw)
-         |         GROUP BY piece),
-         |vocab AS (SELECT piece,
-         |            (row_number() OVER (ORDER BY n DESC, piece) - 1)::BIGINT
-         |              AS id
-         |          FROM freq),
-         |wp AS (SELECT w, $bpeApplySql AS pieces FROM (SELECT w FROM wcw)),
-         |tw AS (SELECT doc_id, unnest(range(1, len(tk) + 1)) AS tp,
-         |             unnest(tk) AS w FROM t),
-         |pieces AS (SELECT tw.doc_id, tw.tp, v.i AS pp,
-         |             list_extract(wp.pieces, v.i) AS piece
-         |           FROM tw JOIN wp USING (w),
-         |                unnest(range(1, len(wp.pieces) + 1)) AS v(i))
-         |SELECT doc_id AS doc,
-         |       (row_number() OVER (PARTITION BY doc_id ORDER BY tp, pp))::BIGINT
-         |         AS pos,
-         |       id
-         |FROM pieces JOIN vocab USING (piece)
-         |ORDER BY doc, pos""".stripMargin,
-
-    // decode replay: the same per-word segmentation, reassembled in
-    // (token, piece) order and compared to the boundary-free token
-    // concatenation — the id round trip itself is bijective by the
-    // vocab construction, so the replay goes piece-direct
-    "q_decode_roundtrip" ->
-      s"""WITH $tokCte,
-         |wcw AS (SELECT w, count(*)::BIGINT AS c
-         |        FROM (SELECT unnest(tk) AS w FROM t) GROUP BY w),
-         |wp AS (SELECT w, $bpeApplySql AS pieces FROM (SELECT w FROM wcw)),
-         |tw AS (SELECT doc_id, unnest(range(1, len(tk) + 1)) AS tp,
-         |             unnest(tk) AS w FROM t),
-         |pieces AS (SELECT tw.doc_id, tw.tp, v.i AS pp,
-         |             list_extract(wp.pieces, v.i) AS piece
-         |           FROM tw JOIN wp USING (w),
-         |                unnest(range(1, len(wp.pieces) + 1)) AS v(i)),
-         |dec AS (SELECT doc_id,
-         |          string_agg(piece, '' ORDER BY tp, pp) AS decoded
-         |        FROM pieces GROUP BY doc_id)
-         |SELECT t.doc_id,
-         |  length(coalesce(dec.decoded, ''))::BIGINT AS n_decoded_chars,
-         |  (coalesce(dec.decoded, '')
-         |     = coalesce(array_to_string(tk, ''), '')) AS roundtrip_ok
-         |FROM t LEFT JOIN dec USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-
-    "q_subword_vocab" ->
-      s"""WITH $tokCte,
-         |wcw AS (SELECT w, count(*)::BIGINT AS c
-         |        FROM (SELECT unnest(tk) AS w FROM t) GROUP BY w),
-         |cand AS (SELECT substr(w, s + 1, n) AS piece, sum(c)::BIGINT AS n_occ
-         |         FROM wcw,
-         |              unnest(range(2, 5)) AS ln(n),
-         |              unnest(range(0, greatest(len(w) - n + 1, 0))) AS st(s)
-         |         GROUP BY piece)
-         |SELECT piece, n_occ, rk FROM (
-         |  SELECT piece, n_occ,
-         |         row_number() OVER (ORDER BY n_occ DESC, piece) AS rk
-         |  FROM cand)
-         |WHERE rk <= 40 ORDER BY rk""".stripMargin,
-
-    "q_lang_id" ->
-      s"""WITH $tokCte,
-         |c AS (SELECT doc_id,
-         |  len(list_filter(tk, x -> x IN ($swEn))) en,
-         |  len(list_filter(tk, x -> x IN ($swDe))) de,
-         |  len(list_filter(tk, x -> x IN ($swFr))) fr,
-         |  len(list_filter(tk, x -> x IN ($swEs))) es,
-         |  length(regexp_replace(text, '[^\\x{4e00}-\\x{9fff}]', '', 'g')) cjk,
-         |  len(tk) ntok
-         |  FROM t)
-         |SELECT doc_id,
-         |  CASE WHEN cjk * 2 > ntok THEN 'zh'
-         |       WHEN en = 0 AND de = 0 AND fr = 0 AND es = 0 THEN 'und'
-         |       WHEN en >= de AND en >= fr AND en >= es THEN 'en'
-         |       WHEN de >= fr AND de >= es THEN 'de'
-         |       WHEN fr >= es THEN 'fr'
-         |       ELSE 'es' END AS lang_pred
-         |FROM c ORDER BY doc_id""".stripMargin,
-
-    // the prediction's CASE plus best-minus-second of the four integer
-    // scores — exact arithmetic end-to-end
-    "q_lang_margin" ->
-      s"""WITH $tokCte,
-         |c AS (SELECT doc_id,
-         |  len(list_filter(tk, x -> x IN ($swEn))) en,
-         |  len(list_filter(tk, x -> x IN ($swDe))) de,
-         |  len(list_filter(tk, x -> x IN ($swFr))) fr,
-         |  len(list_filter(tk, x -> x IN ($swEs))) es,
-         |  length(regexp_replace(text, '[^\\x{4e00}-\\x{9fff}]', '', 'g')) cjk,
-         |  len(tk) ntok
-         |  FROM t)
-         |SELECT doc_id,
-         |  CASE WHEN cjk * 2 > ntok THEN 'zh'
-         |       WHEN en = 0 AND de = 0 AND fr = 0 AND es = 0 THEN 'und'
-         |       WHEN en >= de AND en >= fr AND en >= es THEN 'en'
-         |       WHEN de >= fr AND de >= es THEN 'de'
-         |       WHEN fr >= es THEN 'fr'
-         |       ELSE 'es' END AS lang_pred,
-         |  (list_reverse_sort([en, de, fr, es])[1]
-         |   - list_reverse_sort([en, de, fr, es])[2])::BIGINT AS margin
-         |FROM c ORDER BY doc_id""".stripMargin,
-
-    "q_quality" ->
-      s"""WITH $tokCte,
-         |m AS (SELECT doc_id,
-         |  CASE WHEN length(text) > 0 THEN
-         |    len(regexp_extract_all(text, '[!-/:-@\\[-`{-~]'))::DOUBLE / length(text)
-         |  ELSE 0.0 END AS pr,
-         |  CASE WHEN len(tk) > 0 THEN
-         |    len(list_filter(tk, x -> x IN ($swAll)))::DOUBLE / len(tk)
-         |  ELSE 0.0 END AS swr,
-         |  len(tk) AS ntok
-         |  FROM t)
-         |SELECT doc_id, round(pr, 6) AS pr, round(swr, 6) AS swr,
-         |  round(0.4 * least(ntok::DOUBLE / 100.0, 1.0)
-         |      + 0.3 * (1.0 - least(pr * 5.0, 1.0))
-         |      + 0.3 * least(swr * 4.0, 1.0), 6) AS quality
-         |FROM m ORDER BY doc_id""".stripMargin,
-
-    // rule thresholds compared as DOUBLEs on both sides: a bare 0.1 is
-    // a DECIMAL literal in DuckDB, and a ratio exactly on a boundary
-    // would flip between decimal-exact and IEEE comparison semantics
-    "q_quality_gopher" ->
-      s"""WITH $tokCte,
-         |m AS (SELECT doc_id,
-         |  len(tk) AS n,
-         |  CASE WHEN len(tk) > 0 THEN
-         |    list_sum(list_transform(tk, x -> length(x)))::DOUBLE / len(tk)
-         |  ELSE 0.0 END AS mean_len,
-         |  CASE WHEN len(tk) > 0 THEN
-         |    (len(regexp_extract_all(text, '#'))
-         |     + len(regexp_extract_all(text, '\\.\\.\\.'))
-         |     + len(regexp_extract_all(text, '…')))::DOUBLE / len(tk)
-         |  ELSE 0.0 END AS sym_ratio,
-         |  list_filter(list_transform(string_split(text, chr(10)),
-         |                             l -> trim(l)),
-         |              l -> strlen(l) > 0) AS ls,
-         |  CASE WHEN len(tk) > 0 THEN
-         |    len(list_filter(tk, x -> regexp_matches(x, '[a-zA-Z]')))::DOUBLE
-         |      / len(tk)
-         |  ELSE 0.0 END AS alpha_frac,
-         |  ((CASE WHEN list_contains(tk, 'the') THEN 1 ELSE 0 END) +
-         |   (CASE WHEN list_contains(tk, 'be') THEN 1 ELSE 0 END) +
-         |   (CASE WHEN list_contains(tk, 'to') THEN 1 ELSE 0 END) +
-         |   (CASE WHEN list_contains(tk, 'of') THEN 1 ELSE 0 END) +
-         |   (CASE WHEN list_contains(tk, 'and') THEN 1 ELSE 0 END) +
-         |   (CASE WHEN list_contains(tk, 'that') THEN 1 ELSE 0 END) +
-         |   (CASE WHEN list_contains(tk, 'have') THEN 1 ELSE 0 END) +
-         |   (CASE WHEN list_contains(tk, 'with') THEN 1 ELSE 0 END))
-         |    AS stop_hits
-         |  FROM t),
-         |m2 AS (SELECT doc_id, n, mean_len, sym_ratio, alpha_frac,
-         |  stop_hits,
-         |  CASE WHEN len(ls) > 0 THEN
-         |    len(list_filter(ls, l -> starts_with(l, '•')
-         |          OR starts_with(l, '-') OR starts_with(l, '*')))::DOUBLE
-         |      / len(ls)
-         |  ELSE 0.0 END AS bullet_frac,
-         |  CASE WHEN len(ls) > 0 THEN
-         |    len(list_filter(ls, l -> ends_with(l, '...')
-         |          OR ends_with(l, '…')))::DOUBLE / len(ls)
-         |  ELSE 0.0 END AS ellipsis_frac
-         |  FROM m)
-         |SELECT doc_id, n::BIGINT AS n_words,
-         |  round(mean_len, 6) AS mean_word_len,
-         |  round(sym_ratio, 6) AS symbol_ratio,
-         |  round(bullet_frac, 6) AS bullet_frac,
-         |  round(ellipsis_frac, 6) AS ellipsis_frac,
-         |  round(alpha_frac, 6) AS alpha_frac,
-         |  stop_hits::BIGINT AS stop_hits,
-         |  (n >= 50 AND n <= 100000
-         |   AND mean_len >= CAST(3.0 AS DOUBLE)
-         |   AND mean_len <= CAST(10.0 AS DOUBLE)
-         |   AND sym_ratio <= CAST(0.1 AS DOUBLE)
-         |   AND bullet_frac <= CAST(0.9 AS DOUBLE)
-         |   AND ellipsis_frac <= CAST(0.3 AS DOUBLE)
-         |   AND alpha_frac >= CAST(0.8 AS DOUBLE)
-         |   AND stop_hits >= 2) AS pass
-         |FROM m2 ORDER BY doc_id""".stripMargin,
-
-    "q_fingerprint" ->
-      """SELECT doc_id,
-        |       md5(trim(regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g'))) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // reliability-bin replay: the q_quality score and the
-    // q_quality_gopher pass conjunction joined per doc, binned at
-    // min(floor(score*10), 9); conf/acc averaged over the 6-rounded
-    // scores and rounded at 4, gap derived from the rounded pair
-    "q_calibration" ->
-      s"""WITH $tokCte,
-         |qs AS (SELECT doc_id,
-         |  round(0.4 * least(ntok::DOUBLE / 100.0, 1.0)
-         |      + 0.3 * (1.0 - least(pr * 5.0, 1.0))
-         |      + 0.3 * least(swr * 4.0, 1.0), 6) AS score
-         |  FROM (SELECT doc_id,
-         |    CASE WHEN length(text) > 0 THEN
-         |      len(regexp_extract_all(text, '[!-/:-@\\[-`{-~]'))::DOUBLE
-         |        / length(text)
-         |    ELSE 0.0 END AS pr,
-         |    CASE WHEN len(tk) > 0 THEN
-         |      len(list_filter(tk, x -> x IN ($swAll)))::DOUBLE / len(tk)
-         |    ELSE 0.0 END AS swr,
-         |    len(tk) AS ntok
-         |    FROM t)),
-         |gm AS (SELECT doc_id,
-         |  len(tk) AS n,
-         |  CASE WHEN len(tk) > 0 THEN
-         |    list_sum(list_transform(tk, x -> length(x)))::DOUBLE / len(tk)
-         |  ELSE 0.0 END AS mean_len,
-         |  CASE WHEN len(tk) > 0 THEN
-         |    (len(regexp_extract_all(text, '#'))
-         |     + len(regexp_extract_all(text, '\\.\\.\\.'))
-         |     + len(regexp_extract_all(text, '…')))::DOUBLE / len(tk)
-         |  ELSE 0.0 END AS sym_ratio,
-         |  list_filter(list_transform(string_split(text, chr(10)),
-         |                             l -> trim(l)),
-         |              l -> strlen(l) > 0) AS ls,
-         |  CASE WHEN len(tk) > 0 THEN
-         |    len(list_filter(tk, x -> regexp_matches(x, '[a-zA-Z]')))::DOUBLE
-         |      / len(tk)
-         |  ELSE 0.0 END AS alpha_frac,
-         |  ((CASE WHEN list_contains(tk, 'the') THEN 1 ELSE 0 END) +
-         |   (CASE WHEN list_contains(tk, 'be') THEN 1 ELSE 0 END) +
-         |   (CASE WHEN list_contains(tk, 'to') THEN 1 ELSE 0 END) +
-         |   (CASE WHEN list_contains(tk, 'of') THEN 1 ELSE 0 END) +
-         |   (CASE WHEN list_contains(tk, 'and') THEN 1 ELSE 0 END) +
-         |   (CASE WHEN list_contains(tk, 'that') THEN 1 ELSE 0 END) +
-         |   (CASE WHEN list_contains(tk, 'have') THEN 1 ELSE 0 END) +
-         |   (CASE WHEN list_contains(tk, 'with') THEN 1 ELSE 0 END))
-         |    AS stop_hits
-         |  FROM t),
-         |gp AS (SELECT doc_id,
-         |  (n >= 50 AND n <= 100000
-         |   AND mean_len >= CAST(3.0 AS DOUBLE)
-         |   AND mean_len <= CAST(10.0 AS DOUBLE)
-         |   AND sym_ratio <= CAST(0.1 AS DOUBLE)
-         |   AND (CASE WHEN len(ls) > 0 THEN
-         |          len(list_filter(ls, l -> starts_with(l, '•')
-         |                OR starts_with(l, '-')
-         |                OR starts_with(l, '*')))::DOUBLE / len(ls)
-         |        ELSE 0.0 END) <= CAST(0.9 AS DOUBLE)
-         |   AND (CASE WHEN len(ls) > 0 THEN
-         |          len(list_filter(ls, l -> ends_with(l, '...')
-         |                OR ends_with(l, '…')))::DOUBLE / len(ls)
-         |        ELSE 0.0 END) <= CAST(0.3 AS DOUBLE)
-         |   AND alpha_frac >= CAST(0.8 AS DOUBLE)
-         |   AND stop_hits >= 2) AS pass
-         |  FROM gm),
-         |j AS (SELECT least(floor(score * 10), CAST(9 AS DOUBLE))::BIGINT
-         |        AS bin,
-         |        score,
-         |        CASE WHEN pass THEN 1.0 ELSE 0.0 END AS lab
-         |      FROM qs JOIN gp USING (doc_id))
-         |SELECT bin, count(*)::BIGINT AS n,
-         |       round(avg(score), 4) AS conf, round(avg(lab), 4) AS acc,
-         |       round(abs(round(avg(score), 4) - round(avg(lab), 4)), 4)
-         |         AS gap
-         |FROM j GROUP BY bin ORDER BY bin""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT md5(trim(regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g'))) AS fp,
-        |       min(doc_id) AS keep_id, count(*) AS n_docs
-        |FROM documents GROUP BY fp ORDER BY fp""".stripMargin,
-
-    // delta verdict = fp unseen in the corpus partition AND smallest
-    // delta id carrying it
-    // the fp probe join is NULL-SAFE (IS NOT DISTINCT FROM), matching
-    // the operator's documented contract: a null fp (null text) is its
-    // own dedup group, so a delta null-fp doc IS seen when the corpus
-    // holds one — a plain equi-join would call every null-fp doc novel
-    "q_dedup_exact_incr" ->
-      """WITH f AS (SELECT doc_id,
-        |  md5(trim(regexp_replace(lower(text), '[ \t\n\x0b\f\r]+', ' ', 'g'))) AS fp
-        |  FROM documents),
-        |corpus AS (SELECT DISTINCT fp, true AS hit
-        |           FROM f WHERE doc_id % 4 <> 3),
-        |delta AS (SELECT doc_id, fp FROM f WHERE doc_id % 4 = 3
-        |          UNION ALL
-        |          SELECT doc_id + 500000, fp FROM f
-        |          WHERE doc_id % 4 <> 3 AND doc_id % 8 = 0)
-        |SELECT doc_id, fp, (NOT seen AND doc_id = mn) AS keep FROM (
-        |  SELECT d.doc_id, d.fp, coalesce(c.hit, false) AS seen,
-        |         min(d.doc_id) OVER (PARTITION BY d.fp) AS mn
-        |  FROM delta d
-        |  LEFT JOIN corpus c ON d.fp IS NOT DISTINCT FROM c.fp)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_repetition" ->
-      s"""WITH $tokCte,
-         |r AS (SELECT doc_id, count(*)::BIGINT AS n3,
-         |             count(DISTINCT sh)::BIGINT AS nd
-         |      FROM ${ngramRowsSql("t", 3, gram = "sh")}
-         |      GROUP BY doc_id)
-         |SELECT t.doc_id,
-         |  round(CASE WHEN r.n3 > 0 THEN 1.0 - r.nd::DOUBLE / r.n3::DOUBLE
-         |        ELSE 0.0 END, 6) AS rep3
-         |FROM t LEFT JOIN r USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-
-    // within-doc token Shannon entropy replayed from the shared
-    // tokenization CTE: group per (doc, token), H = (ln n - sum c*ln c
-    // over c>1 / n) / ln 2 — c=1 terms are exactly 0 so both engines
-    // sum the same term set; round(6) absorbs summation-order ulp
-    "q_token_entropy" ->
-      s"""WITH $tokCte,
-         |g AS (SELECT doc_id, tok, count(*)::BIGINT AS c
-         |      FROM (SELECT doc_id, unnest(tk) AS tok FROM t)
-         |      GROUP BY doc_id, tok),
-         |e AS (SELECT doc_id, sum(c)::BIGINT AS n, count(*)::BIGINT AS nt,
-         |             sum(CASE WHEN c > 1 THEN c * ln(c) ELSE 0.0 END) AS sl
-         |      FROM g GROUP BY doc_id)
-         |SELECT t.doc_id,
-         |  (CASE WHEN t.tk IS NULL THEN NULL
-         |        ELSE coalesce(e.n, 0) END)::BIGINT AS n_tokens,
-         |  (CASE WHEN t.tk IS NULL THEN NULL
-         |        ELSE coalesce(e.nt, 0) END)::BIGINT AS n_types,
-         |  round(CASE WHEN t.tk IS NULL THEN NULL
-         |             WHEN e.n IS NULL THEN 0.0
-         |             ELSE (ln(e.n) - e.sl / e.n) / ln(2) END, 6)
-         |    AS entropy_bits,
-         |  round(CASE WHEN t.tk IS NULL THEN NULL
-         |             WHEN e.n IS NULL THEN 0.0
-         |             ELSE e.nt::DOUBLE / e.n END, 6) AS ttr
-         |FROM t LEFT JOIN e USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-
-    // duplicate-line fractions: trimmed non-blank newline splits, where
-    // trim strips the full ASCII whitespace class (space \t \x0B \f \r —
-    // the engine's regex \s minus the already-split \n), not DuckDB's
-    // space-only default; "duplicate" = every occurrence beyond a line's
-    // first (list_distinct keeps firsts on both engines); single IEEE
-    // divisions of exact longs
-    "q_dup_lines" ->
-      """WITH l AS (SELECT doc_id,
-        |  list_filter(list_transform(string_split(text, chr(10)),
-        |    x -> trim(x, ' ' || chr(9) || chr(11) || chr(12) || chr(13))),
-        |              x -> x <> '') AS lines
-        |  FROM documents),
-        |a AS (SELECT doc_id,
-        |        len(lines)::BIGINT AS n_lines,
-        |        len(list_distinct(lines))::BIGINT AS ndl,
-        |        CASE WHEN lines IS NULL THEN NULL
-        |             ELSE coalesce(list_sum(list_transform(lines,
-        |                    x -> length(x))), 0) END AS tot,
-        |        CASE WHEN lines IS NULL THEN NULL
-        |             ELSE coalesce(list_sum(list_transform(
-        |                    list_distinct(lines), x -> length(x))), 0)
-        |             END AS dtot
-        |      FROM l)
-        |SELECT doc_id, n_lines,
-        |  round(CASE WHEN n_lines > 0
-        |               THEN (n_lines - ndl)::DOUBLE / n_lines
-        |             WHEN n_lines IS NOT NULL THEN 0.0 END, 6)
-        |    AS dup_line_frac,
-        |  round(CASE WHEN tot > 0 THEN (tot - dtot)::DOUBLE / tot
-        |             WHEN tot IS NOT NULL THEN 0.0 END, 6)
-        |    AS dup_char_frac
-        |FROM a ORDER BY doc_id""".stripMargin,
-
-    "q_training_pipeline" ->
-      s"""WITH $tokCte,
-         |m AS (SELECT doc_id, text, tk,
-         |  CASE WHEN length(text) > 0 THEN
-         |    len(regexp_extract_all(text, '[!-/:-@\\[-`{-~]'))::DOUBLE / length(text)
-         |  ELSE 0.0 END AS pr,
-         |  CASE WHEN len(tk) > 0 THEN
-         |    len(list_filter(tk, x -> x IN ($swAll)))::DOUBLE / len(tk)
-         |  ELSE 0.0 END AS swr,
-         |  len(list_filter(tk, x -> x IN ($swEn))) en,
-         |  len(list_filter(tk, x -> x IN ($swDe))) de,
-         |  len(list_filter(tk, x -> x IN ($swFr))) fr,
-         |  len(list_filter(tk, x -> x IN ($swEs))) es,
-         |  length(regexp_replace(text, '[^\\x{4e00}-\\x{9fff}]', '', 'g')) cjk,
-         |  len(tk) ntok
-         |  FROM t),
-         |scored AS (SELECT doc_id, text,
-         |  0.4 * least(ntok::DOUBLE / 100.0, 1.0)
-         |  + 0.3 * (1.0 - least(pr * 5.0, 1.0))
-         |  + 0.3 * least(swr * 4.0, 1.0) AS q,
-         |  CASE WHEN cjk * 2 > ntok THEN 'zh'
-         |       WHEN en = 0 AND de = 0 AND fr = 0 AND es = 0 THEN 'und'
-         |       WHEN en >= de AND en >= fr AND en >= es THEN 'en'
-         |       WHEN de >= fr AND de >= es THEN 'de'
-         |       WHEN fr >= es THEN 'fr'
-         |       ELSE 'es' END AS lang_pred
-         |  FROM m),
-         |filtered AS (SELECT * FROM scored WHERE q >= 0.5 AND lang_pred = 'en'),
-         |keep AS (SELECT min(doc_id) AS doc_id FROM filtered
-         |         GROUP BY md5(trim(regexp_replace(lower(text), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'))))
-         |SELECT f.doc_id, round(f.q, 6) AS q,
-         |  CASE WHEN ('0x' || substr(md5(f.doc_id::VARCHAR), 1, 8))::BIGINT % 100 < 80
-         |       THEN 'train'
-         |       WHEN ('0x' || substr(md5(f.doc_id::VARCHAR), 1, 8))::BIGINT % 100 < 90
-         |       THEN 'val' ELSE 'test' END AS split
-         |FROM filtered f JOIN keep USING (doc_id)
-         |ORDER BY f.doc_id""".stripMargin,
-
-    "q_pii_scrub" ->
-      """SELECT doc_id,
-        |  regexp_replace(
-        |    regexp_replace(
-        |      regexp_replace(text,
-        |        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-        |      '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}', '[IP]', 'g'),
-        |    '\+?[0-9][0-9()\- \t\n\x0b\f\r]{6,}[0-9]', '[PHONE]', 'g') AS clean,
-        |  len(regexp_extract_all(text,
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-        |  + len(regexp_extract_all(text,
-        |      '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}'))
-        |  + len(regexp_extract_all(text,
-        |      '\+?[0-9][0-9()\- \t\n\x0b\f\r]{6,}[0-9]')) AS n_pii
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // non-distinct bigram occurrences (unlike q_ngram_freq's per-doc
-    // distinct sets); P(w2|w1) = c2/c1 MLE, natural log, mean per doc
-    "q_bigram_lm" ->
-      s"""WITH $tokCte,
-         |bg AS (SELECT doc_id, bg FROM ${ngramRowsSql("t", 2)}),
-         |c2 AS (SELECT bg, count(*)::BIGINT AS c2 FROM bg GROUP BY 1),
-         |ug AS (SELECT w, count(*)::BIGINT AS c1
-         |       FROM (SELECT unnest(tk) w FROM t) GROUP BY 1)
-         |SELECT doc_id, count(*) AS n_bigrams,
-         |       round(avg(ln(c2.c2 / ug.c1)), 4) AS avg_lp
-         |FROM bg JOIN c2 USING (bg)
-         |        JOIN ug ON split_part(bg.bg, ' ', 1) = ug.w
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q_normalize" ->
-      """SELECT doc_id,
-        |       length(trim(regexp_replace(lower(nfc_normalize(text)),
-        |              '[ \t\n\x0b\f\r]+', ' ', 'g'))) AS n_norm,
-        |       md5(trim(regexp_replace(lower(nfc_normalize(text)),
-        |           '[ \t\n\x0b\f\r]+', ' ', 'g'))) AS norm_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // the canonicalization rules of TextFunctions.canonicalUrl replayed
-    // rule-by-rule: NOTE || not concat (DuckDB concat IGNORES nulls; ||
-    // propagates them like Spark's concat), and the explicit 'g' flag
-    // on the slash collapse (DuckDB replaces first-match by default
-    // where Spark replaces all)
-    "q_url_canon" ->
-      """WITH raw AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0 THEN
-        |           'HTTPS://WWW.ExAmple-' || (doc_id % 7)::VARCHAR ||
-        |           '.COM:443/Docs//' || source ||
-        |           '/?utm_source=feed&z=9&ref=x&a=' || lang ||
-        |           '&utm_campaign=c&b=2#frag'
-        |         WHEN doc_id % 3 = 1 THEN
-        |           'HTTP://user:pw@Host-' || (doc_id % 5)::VARCHAR ||
-        |           '.Org:80/A//B/c/' || source || '?b=2&a=1&a=0&gclid=g#x'
-        |         ELSE 'https://plain.example.net/' || source ||
-        |              '/page/' || doc_id::VARCHAR END AS u
-        |  FROM documents),
-        |parsed AS (
-        |  SELECT doc_id,
-        |    nullif(lower(regexp_extract(u, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)), '') AS scheme,
-        |    regexp_replace(u, '^[A-Za-z][A-Za-z0-9+.-]*://', '') AS rest
-        |  FROM raw),
-        |hp AS (SELECT *, regexp_extract(rest, '^([^/?#]+)', 1) AS hostport
-        |       FROM parsed),
-        |auth AS (SELECT *, regexp_replace(hostport, '^.*@', '') AS authority
-        |         FROM hp),
-        |parts AS (
-        |  SELECT doc_id, scheme,
-        |    lower(regexp_extract(authority, '^([^:]*)', 1)) AS host,
-        |    regexp_extract(authority, ':([0-9]+)$', 1) AS port,
-        |    substr(rest, len(hostport) + 1) AS tail
-        |  FROM auth),
-        |pq AS (
-        |  SELECT doc_id, scheme, host, port,
-        |    regexp_replace(regexp_extract(tail, '^([^?#]*)', 1),
-        |                   '/{2,}', '/', 'g') AS p2,
-        |    regexp_extract(tail, '\?([^#]*)', 1) AS query
-        |  FROM parts),
-        |norm AS (
-        |  SELECT doc_id, scheme, host, port,
-        |    CASE WHEN p2 = '' THEN '/'
-        |         ELSE regexp_replace(p2, '(.)/$', '\1') END AS path,
-        |    array_to_string(list_sort(list_filter(string_split(query, '&'),
-        |      p -> p <> '' AND NOT regexp_matches(p,
-        |             '^(utm_[^=]*|gclid|fbclid)(=|$)'))), '&') AS q
-        |  FROM pq),
-        |canon AS (
-        |  SELECT doc_id,
-        |    scheme || '://' || host ||
-        |    CASE WHEN port <> '' AND NOT (scheme = 'http' AND port = '80')
-        |              AND NOT (scheme = 'https' AND port = '443')
-        |         THEN ':' || port ELSE '' END ||
-        |    path ||
-        |    CASE WHEN q <> '' THEN '?' || q ELSE '' END AS url_canon
-        |  FROM norm)
-        |SELECT doc_id, url_canon, md5(url_canon) AS url_key
-        |FROM canon ORDER BY doc_id""".stripMargin,
-
-    // the held-out replay: train counts from the 2/3 split only,
-    // scored bigrams LEFT-join them, add-0.5 smoothing over V
-    "q_bigram_heldout" ->
-      s"""WITH $tokCte,
-         |tr AS (SELECT * FROM t WHERE doc_id % 3 <> 0),
-         |sc AS (SELECT * FROM t WHERE doc_id % 3 = 0),
-         |bgtr AS (SELECT bg FROM ${ngramRowsSql("tr", 2)}),
-         |c2 AS (SELECT bg, count(*)::BIGINT AS c2 FROM bgtr GROUP BY 1),
-         |ug AS (SELECT w, count(*)::BIGINT AS c1
-         |       FROM (SELECT unnest(tk) w FROM tr) GROUP BY 1),
-         |v AS (SELECT count(*)::BIGINT AS vv FROM ug),
-         |bgsc AS (SELECT doc_id, bg FROM ${ngramRowsSql("sc", 2)})
-         |SELECT doc_id, count(*) AS n_bigrams,
-         |       sum(CASE WHEN c2.c2 IS NULL THEN 1 ELSE 0 END)::BIGINT
-         |         AS n_unseen,
-         |       round(avg(ln((coalesce(c2.c2, 0) + 0.5) /
-         |                    (coalesce(ug.c1, 0) + 0.5 * v.vv))), 4)
-         |         AS avg_lp
-         |FROM bgsc
-         |LEFT JOIN c2 USING (bg)
-         |LEFT JOIN ug ON split_part(bgsc.bg, ' ', 1) = ug.w
-         |CROSS JOIN v
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // the heldout scoring verbatim, then terciles on the integer grid
-    // (score×10^4) via the q_length_buckets cum-sum construction; the
-    // 1/3 and 2/3 literals are the exact doubles Scala's 1.0/3 and
-    // 2.0/3 produce, so ceil(q*n) is the same IEEE multiply
-    "q_ccnet_buckets" ->
-      s"""WITH $tokCte,
-         |tr AS (SELECT * FROM t WHERE doc_id % 3 <> 0),
-         |sc AS (SELECT * FROM t WHERE doc_id % 3 = 0),
-         |bgtr AS (SELECT bg FROM ${ngramRowsSql("tr", 2)}),
-         |c2 AS (SELECT bg, count(*)::BIGINT AS c2 FROM bgtr GROUP BY 1),
-         |ug AS (SELECT w, count(*)::BIGINT AS c1
-         |       FROM (SELECT unnest(tk) w FROM tr) GROUP BY 1),
-         |v AS (SELECT count(*)::BIGINT AS vv FROM ug),
-         |bgsc AS (SELECT doc_id, bg FROM ${ngramRowsSql("sc", 2)}),
-         |scd AS (SELECT doc_id, count(*) AS n_bigrams,
-         |          sum(CASE WHEN c2.c2 IS NULL THEN 1 ELSE 0 END)::BIGINT
-         |            AS n_unseen,
-         |          round(avg(ln((coalesce(c2.c2, 0) + 0.5) /
-         |                       (coalesce(ug.c1, 0) + 0.5 * v.vv))), 4)
-         |            AS avg_lp
-         |        FROM bgsc
-         |        LEFT JOIN c2 USING (bg)
-         |        LEFT JOIN ug ON split_part(bgsc.bg, ' ', 1) = ug.w
-         |        CROSS JOIN v
-         |        GROUP BY doc_id),
-         |g AS (SELECT *, round(avg_lp * 10000)::BIGINT AS s FROM scd),
-         |vc AS (SELECT s AS v2, count(*) AS c FROM g GROUP BY s),
-         |cum AS (SELECT v2,
-         |          sum(c) OVER (ORDER BY v2
-         |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |            AS cum,
-         |          sum(c) OVER () AS n
-         |        FROM vc),
-         |b AS (SELECT
-         |        min(CASE WHEN cum >=
-         |              ceil(CAST(0.3333333333333333 AS DOUBLE) * n)
-         |            THEN v2 END) AS b0,
-         |        min(CASE WHEN cum >=
-         |              ceil(CAST(0.6666666666666666 AS DOUBLE) * n)
-         |            THEN v2 END) AS b1
-         |      FROM cum)
-         |SELECT doc_id, n_bigrams, n_unseen, avg_lp,
-         |       CASE WHEN s > b1 THEN 'head'
-         |            WHEN s > b0 THEN 'middle'
-         |            ELSE 'tail' END AS bucket
-         |FROM g, b ORDER BY doc_id""".stripMargin,
-
-    // the full mixture-learning replay: per-domain losses + every MW
-    // round unrolled (see doremiOracleSql)
-    "q_doremi_weights" ->
-      s"""${doremiOracleSql(4, 0.5, 200000L)}
-         |SELECT source, n_docs, lg AS loss_global_i4,
-         |       lo AS loss_own_i4, ex AS excess_i4, w AS weight_micro,
-         |       alpha_micro
-         |FROM dal ORDER BY source""".stripMargin,
-
-    // the same MW-round chain fed by order-5 stupid-backoff losses
-    "q_doremi_weights_5gram" ->
-      s"""${doremiNgramOracleSql(5, 0.4, 0.5, 4, 0.5, 200000L)}
-         |SELECT source, n_docs, lg AS loss_global_i4,
-         |       lo AS loss_own_i4, ex AS excess_i4, w AS weight_micro,
-         |       alpha_micro
-         |FROM dal ORDER BY source""".stripMargin,
-
-    // the learned mixture APPLIED: alpha -> per-domain mixing weight
-    // round(alpha/1e6 * N/n_d, 6) -> byWeight's floor/round(frac*1e6)
-    // decomposition -> the md5 copy draw — the full doremi chain plus
-    // the q_corpus_upsample machinery in one replay
-    "q_doremi_mixture" ->
-      s"""${doremiOracleSql(4, 0.5, 200000L)},
-         |cnt AS (SELECT source, count(*)::BIGINT AS ndd
-         |        FROM corp WHERE source IS NOT NULL GROUP BY 1),
-         |nnn AS (SELECT sum(ndd)::BIGINT AS nn FROM cnt),
-         |mw AS (SELECT c.source,
-         |         round(CAST(a.alpha_micro AS DOUBLE) /
-         |               CAST(1000000 AS DOUBLE) * nnn.nn / c.ndd, 6) AS w
-         |       FROM cnt c JOIN dal a USING (source) CROSS JOIN nnn),
-         |wdec AS (SELECT source, floor(w)::BIGINT AS n_base,
-         |           round((w - floor(w)) * 1000000)::BIGINT AS thresh
-         |         FROM mw),
-         |dd AS (SELECT doc_id, source,
-         |         n_base + CASE WHEN
-         |           (('0x' || substr(md5('doremi' || doc_id::VARCHAR),
-         |                            1, 8))::BIGINT % 1000000) < thresh
-         |           THEN 1 ELSE 0 END AS n_copies
-         |       FROM corp JOIN wdec USING (source))
-         |SELECT doc_id, source, unnest(range(n_copies))::BIGINT AS __rep
-         |FROM dd WHERE n_copies > 0
-         |ORDER BY doc_id, __rep""".stripMargin,
-
-    // order-3 stupid backoff, every branch replayed (generated CTE
-    // chain — see ngramLmScoredSql)
-    "q_ngram_lm" ->
-      s"""WITH ${ngramLmScoredSql(3, 0.4, 0.5)}
-         |SELECT doc_id, n_tokens, n_oov, n_backed, avg_lp
-         |FROM scored ORDER BY doc_id""".stripMargin,
-
-    // the ARPA export rebuilt from counts + the standard backoff walk
-    // replayed branch by branch (generated CTE chain — arpaScoredSql)
-    "q_arpa_score" ->
-      s"""WITH ${arpaScoredSql(3, 0.4, 0.5)}
-         |SELECT doc_id, n_tokens, n_oov, n_backed, avg_lp10
-         |FROM scored ORDER BY doc_id""".stripMargin,
-
-    // the incremental==batch contract, oracle-gated: build-from-third
-    // + fold-in-third must EQUAL the full retrain, so the oracle IS
-    // q_ngram_lm's full-retrain replay over the same split
-    "q_ngram_lm_incr" ->
-      s"""WITH ${ngramLmScoredSql(3, 0.4, 0.5)}
-         |SELECT doc_id, n_tokens, n_oov, n_backed, avg_lp
-         |FROM scored ORDER BY doc_id""".stripMargin,
-
-    // the 5-gram scoring chain + the q_ccnet_buckets tercile
-    // construction on the integer grid (score x 10^4)
-    "q_ccnet_buckets_5gram" ->
-      s"""WITH ${ngramLmScoredSql(5, 0.4, 0.5)},
-         |gg AS (SELECT *, round(avg_lp * 10000)::BIGINT AS s FROM scored),
-         |vc AS (SELECT s AS v2, count(*) AS c FROM gg GROUP BY s),
-         |cum AS (SELECT v2,
-         |          sum(c) OVER (ORDER BY v2
-         |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |            AS cum,
-         |          sum(c) OVER () AS n
-         |        FROM vc),
-         |b AS (SELECT
-         |        min(CASE WHEN cum >=
-         |              ceil(CAST(0.3333333333333333 AS DOUBLE) * n)
-         |            THEN v2 END) AS b0,
-         |        min(CASE WHEN cum >=
-         |              ceil(CAST(0.6666666666666666 AS DOUBLE) * n)
-         |            THEN v2 END) AS b1
-         |      FROM cum)
-         |SELECT doc_id, n_tokens, n_oov, n_backed, avg_lp,
-         |       CASE WHEN s > b1 THEN 'head'
-         |            WHEN s > b0 THEN 'middle'
-         |            ELSE 'tail' END AS bucket
-         |FROM gg, b ORDER BY doc_id""".stripMargin,
-
-    "q_ngram_freq" ->
-      s"""WITH $tokCte
-         |SELECT ngram, count(*) AS n FROM (
-         |  SELECT DISTINCT doc_id, bg AS ngram
-         |  FROM ${ngramRowsSql("t", 2)})
-         |GROUP BY ngram ORDER BY n DESC, ngram ASC LIMIT 100""".stripMargin,
-
-    // exact threshold over ALL bigram occurrences (non-distinct, unlike
-    // q_ngram_freq) — the MG candidate pass is invisible to the result
-    "q_heavy_hitters" ->
-      s"""WITH $tokCte,
-        |bg AS (SELECT bg AS item FROM ${ngramRowsSql("t", 2)}),
-        |tot AS (SELECT count(*) AS t FROM bg)
-        |SELECT item, count(*) AS n,
-        |       round(count(*) / (SELECT t FROM tot), 6) AS share
-        |FROM bg GROUP BY item
-        |HAVING count(*) >= ceil(0.0015 * (SELECT t FROM tot))
-        |ORDER BY item""".stripMargin,
-
-    // exact per-source distinct tokens; the merged-sketch certificate
-    // (5% of exact AND merged == single-pass) must come back TRUE
-    "q_distinct_incremental" ->
-      s"""WITH $tokCte
-         |SELECT source, count(DISTINCT w) AS exact_distinct,
-         |       TRUE AS merged_ok
-         |FROM (SELECT d2.source, unnest(t.tk) AS w
-         |      FROM t JOIN documents d2 ON t.doc_id = d2.doc_id)
-         |GROUP BY source ORDER BY source""".stripMargin,
-
-    // the sketch column is certified in-query (rsd 0.01 vs 5% tolerance);
-    // the oracle checks the exact count and expects the certificate TRUE
-    "q_approx_distinct" ->
-      s"""WITH $tokCte,
-         |bg AS (SELECT d2.source, r.bg AS item
-         |       FROM ${ngramRowsSql("t", 2)} r
-         |       JOIN documents d2 USING (doc_id))
-         |SELECT source, count(DISTINCT item) AS exact_distinct,
-         |       TRUE AS approx_ok
-         |FROM bg GROUP BY source ORDER BY source""".stripMargin,
-
-    // quantile_cont matches Spark's exact `percentile` interpolation;
-    // the sketch's rank certificates must come back TRUE
-    "q_approx_quantiles" ->
-      """SELECT source, count(*) AS n,
-        |       round(quantile_cont(n_chars, 0.5), 4) AS p50,
-        |       round(quantile_cont(n_chars, 0.9), 4) AS p90,
-        |       TRUE AS ok_p50, TRUE AS ok_p90
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    // passage-level keep-first span dedup, reassembled text compared
-    // verbatim
-    "q_dedup_passage" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-        |                     x -> x <> '') AS toks
-        |  FROM documents
-        |), chunks AS (
-        |  -- linear zip-unnest form: token p belongs to passage
-        |  -- (p-1)//8; the per-passage list slice re-copied the whole
-        |  -- token list per chunk row (quadratic in document length)
-        |  SELECT doc_id, ((p - 1) // 8)::BIGINT AS cidx,
-        |         string_agg(tok, ' ' ORDER BY p) AS passage
-        |  FROM (SELECT doc_id, unnest(toks) AS tok,
-        |               unnest(range(1, len(toks) + 1)) AS p FROM base)
-        |  GROUP BY doc_id, ((p - 1) // 8)
-        |), freq AS (
-        |  SELECT passage, count(DISTINCT doc_id) AS ndocs,
-        |         min(doc_id) AS first_doc
-        |  FROM chunks GROUP BY passage
-        |), kept AS (
-        |  SELECT c.doc_id, c.cidx, c.passage
-        |  FROM chunks c JOIN freq f USING (passage)
-        |  WHERE f.ndocs < 2 OR c.doc_id = f.first_doc
-        |)
-        |SELECT b.doc_id,
-        |       coalesce(k.kept_text, '') AS kept_text,
-        |       coalesce(CAST(ceil(len(b.toks)/8.0) AS BIGINT), 0)
-        |         AS n_chunks,
-        |       coalesce(k.n_kept, 0) AS n_kept
-        |FROM base b LEFT JOIN (
-        |  SELECT doc_id, string_agg(passage, ' ' ORDER BY cidx) AS kept_text,
-        |         count(*) AS n_kept
-        |  FROM kept GROUP BY doc_id) k USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-
-    // line dedup over the 8-token regrouped corpus: lines ARE the
-    // tokenSpans passages (tokens cannot contain \n and spans carry no
-    // edge whitespace, so the engine's trim+split round-trips them
-    // exactly); remove-all-copies rule, per-doc reassembly in order
-    "q_dedup_lines" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-        |                     x -> x <> '') AS toks
-        |  FROM documents
-        |), chunks AS (
-        |  SELECT doc_id, ((p - 1) // 8)::BIGINT AS cidx,
-        |         string_agg(tok, ' ' ORDER BY p) AS line
-        |  FROM (SELECT doc_id, unnest(toks) AS tok,
-        |               unnest(range(1, len(toks) + 1)) AS p FROM base)
-        |  GROUP BY doc_id, ((p - 1) // 8)
-        |), f AS (
-        |  SELECT line FROM chunks GROUP BY line
-        |  HAVING count(DISTINCT doc_id) >= 2
-        |), k AS (
-        |  SELECT c.doc_id, c.cidx, c.line, f.line IS NULL AS keep
-        |  FROM chunks c LEFT JOIN f ON c.line = f.line
-        |)
-        |SELECT b.doc_id,
-        |       coalesce(a.kept_text, '') AS kept_text,
-        |       coalesce(a.n_lines, 0)::BIGINT AS n_lines,
-        |       coalesce(a.n_kept, 0)::BIGINT AS n_kept
-        |FROM base b LEFT JOIN (
-        |  SELECT doc_id,
-        |         coalesce(string_agg(line, chr(10) ORDER BY cidx)
-        |                    FILTER (WHERE keep), '') AS kept_text,
-        |         count(*) AS n_lines,
-        |         count(*) FILTER (WHERE keep) AS n_kept
-        |  FROM k GROUP BY doc_id) a USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-
-    // within-doc keep-first line removal over the 2-token regrouped
-    // corpus: keeper = min position per (doc, line content); regrouped
-    // lines are never blank, so the blank-survival branch is spec-only
-    "q_drop_repeated_lines" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-        |                     x -> x <> '') AS toks
-        |  FROM documents
-        |), chunks AS (
-        |  SELECT doc_id, ((p - 1) // 2)::BIGINT AS cidx,
-        |         string_agg(tok, ' ' ORDER BY p) AS line
-        |  FROM (SELECT doc_id, unnest(toks) AS tok,
-        |               unnest(range(1, len(toks) + 1)) AS p FROM base)
-        |  GROUP BY doc_id, ((p - 1) // 2)
-        |), k AS (
-        |  SELECT doc_id, cidx, line,
-        |         min(cidx) OVER (PARTITION BY doc_id, line) AS keeper
-        |  FROM chunks
-        |)
-        |SELECT b.doc_id, coalesce(a.kept_text, '') AS kept_text
-        |FROM base b LEFT JOIN (
-        |  SELECT doc_id, string_agg(line, chr(10) ORDER BY cidx)
-        |           AS kept_text
-        |  FROM k WHERE cidx = keeper GROUP BY doc_id) a USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-
-    // incremental form: combined corpus ∪ delta distinct-doc counts
-    // (disjoint halves make the engine's index + delta sum exact),
-    // output restricted to the delta's documents
-    "q_dedup_lines_incr" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-        |                     x -> x <> '') AS toks
-        |  FROM documents
-        |), chunks AS (
-        |  SELECT doc_id, ((p - 1) // 8)::BIGINT AS cidx,
-        |         string_agg(tok, ' ' ORDER BY p) AS line
-        |  FROM (SELECT doc_id, unnest(toks) AS tok,
-        |               unnest(range(1, len(toks) + 1)) AS p FROM base)
-        |  GROUP BY doc_id, ((p - 1) // 8)
-        |), f AS (
-        |  SELECT line FROM chunks GROUP BY line
-        |  HAVING count(DISTINCT doc_id) >= 2
-        |), k AS (
-        |  SELECT c.doc_id, c.cidx, c.line, f.line IS NULL AS keep
-        |  FROM chunks c LEFT JOIN f ON c.line = f.line
-        |  WHERE c.doc_id % 4 = 3
-        |)
-        |SELECT b.doc_id,
-        |       coalesce(a.kept_text, '') AS kept_text,
-        |       coalesce(a.n_lines, 0)::BIGINT AS n_lines,
-        |       coalesce(a.n_kept, 0)::BIGINT AS n_kept
-        |FROM (SELECT doc_id FROM base WHERE doc_id % 4 = 3) b
-        |LEFT JOIN (
-        |  SELECT doc_id,
-        |         coalesce(string_agg(line, chr(10) ORDER BY cidx)
-        |                    FILTER (WHERE keep), '') AS kept_text,
-        |         count(*) AS n_lines,
-        |         count(*) FILTER (WHERE keep) AS n_kept
-        |  FROM k GROUP BY doc_id) a USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-
-    // the identical gear-polynomial boundary arithmetic, replayed over
-    // DuckDB's codepoint primitives (string_split('') + unicode) —
-    // exact integers, so the engines must agree on every boundary
-    "q_cdc_chunks" ->
-      s"""SELECT * FROM ${cdcChunksSql("documents")}
-        |ORDER BY doc_id, chunk""".stripMargin,
-
-    "q_cdc_dedup" ->
-      s"""SELECT chunk_hash, count(DISTINCT doc_id) AS n_docs,
-        |       count(*) AS n_chunks, min(len) AS len
-        |FROM ${cdcChunksSql("documents")}
-        |GROUP BY chunk_hash HAVING count(DISTINCT doc_id) >= 2
-        |ORDER BY chunk_hash""".stripMargin,
-
-    // token-window replay: same tokenization, window k of doc = tokens
-    // [k*stride+1 .. k*stride+size] (1-based inclusive list slice,
-    // clipped at the tail), k = 0..ceil(max(n-size,0)/stride); span id
-    // is md5 of the space-joined window
-    // linear window assignment: each token joins its <= ceil(12/8) = 2
-    // covering windows directly (the per-window slice form re-copied
-    // the whole token list per window — quadratic in DuckDB; see
-    // ngramRowsSql). string_agg ORDER BY position == the slice join.
-    "q_token_windows" ->
-      s"""WITH $tokCte,
-         |w AS (SELECT doc_id, tk, len(tk) AS n FROM t WHERE len(tk) > 0),
-         |u AS (SELECT doc_id, n,
-         |        cast(ceil(greatest(n - 12, 0) / 8.0) AS BIGINT) AS wmax,
-         |        unnest(tk) AS tok,
-         |        unnest(range(0, n)) AS p
-         |      FROM w),
-         |a AS (SELECT doc_id, n, tok, p,
-         |        unnest(range(
-         |          greatest(cast(ceil((p - 11) / 8.0) AS BIGINT), 0),
-         |          least(wmax, p // 8) + 1)) AS win
-         |      FROM u)
-         |SELECT doc_id, win, (win * 8)::BIGINT AS start_tok,
-         |       least(12, min(n) - win * 8)::BIGINT AS n_tok,
-         |       md5(string_agg(tok, ' ' ORDER BY p)) AS span_hash
-         |FROM a GROUP BY doc_id, win
-         |ORDER BY doc_id, win""".stripMargin,
-
-    // same CDC replay; duplicated-hash set, per-doc boiler fraction
-    "q_boilerplate" ->
-      s"""WITH ch AS MATERIALIZED (SELECT * FROM ${cdcChunksSql("documents")}),
-         |dup AS (SELECT chunk_hash FROM ch
-         |        GROUP BY chunk_hash HAVING count(DISTINCT doc_id) >= 2)
-         |SELECT ch.doc_id, count(*) AS n_chunks,
-         |       sum(CASE WHEN dup.chunk_hash IS NOT NULL
-         |                THEN 1 ELSE 0 END)::BIGINT AS n_boiler,
-         |       round(sum(CASE WHEN dup.chunk_hash IS NOT NULL
-         |                      THEN 1 ELSE 0 END)::DOUBLE / count(*), 6)
-         |         AS boilerplate
-         |FROM ch LEFT JOIN dup USING (chunk_hash)
-         |GROUP BY ch.doc_id ORDER BY ch.doc_id""".stripMargin,
-
-    // the capstone's oracle is literally the composition of the three
-    // verified stage oracles over the same splits
-    "q_incremental_pipeline" ->
-      s"""WITH $tokCte,
-        |corpus AS (SELECT doc_id, text, tk FROM t WHERE doc_id % 4 <> 3),
-        |delta AS (
-        |  SELECT doc_id, text, tk FROM t WHERE doc_id % 4 = 3
-        |  UNION ALL
-        |  SELECT doc_id + 500000, text, tk FROM t
-        |  WHERE doc_id % 4 <> 3 AND doc_id % 8 = 0),
-        |bench AS (SELECT * FROM corpus WHERE doc_id % 10 = 7),
-        |$allChunksCte,
-        |seen AS (
-        |  SELECT DISTINCT chunk_hash FROM allch WHERE doc_id % 4 <> 3),
-        |dch AS (
-        |  SELECT doc_id, chunk_hash,
-        |         min(doc_id) OVER (PARTITION BY chunk_hash) AS first_id
-        |  FROM (SELECT doc_id, chunk_hash FROM allch WHERE doc_id % 4 = 3
-        |        UNION ALL
-        |        SELECT doc_id + 500000, chunk_hash FROM allch
-        |        WHERE doc_id % 4 <> 3 AND doc_id % 8 = 0)),
-        |nov AS (
-        |  SELECT dch.doc_id,
-        |         round(sum(CASE WHEN seen.chunk_hash IS NULL
-        |                         AND dch.doc_id = dch.first_id
-        |                        THEN 1 ELSE 0 END)::DOUBLE / count(*), 6)
-        |           AS novelty
-        |  FROM dch LEFT JOIN seen ON dch.chunk_hash = seen.chunk_hash
-        |  GROUP BY dch.doc_id),
-        |c2 AS (SELECT bg, count(*)::BIGINT AS c2
-        |       FROM ${ngramRowsSql("corpus", 2)} GROUP BY 1),
-        |ug AS (SELECT w, count(*)::BIGINT AS c1
-        |       FROM (SELECT unnest(tk) w FROM corpus) GROUP BY 1),
-        |v AS (SELECT count(*)::BIGINT AS vv FROM ug),
-        |bgsc AS (SELECT doc_id, bg FROM ${ngramRowsSql("delta", 2)}),
-        |lm AS (
-        |  SELECT doc_id,
-        |         round(avg(ln((coalesce(c2.c2, 0) + 0.5) /
-        |                      (coalesce(ug.c1, 0) + 0.5 * v.vv))), 4)
-        |           AS avg_lp
-        |  FROM bgsc
-        |  LEFT JOIN c2 USING (bg)
-        |  LEFT JOIN ug ON split_part(bgsc.bg, ' ', 1) = ug.w
-        |  CROSS JOIN v GROUP BY doc_id),
-        |dsh AS (SELECT doc_id, list_distinct(list(sh ORDER BY p)) AS sh
-        |        FROM ${ngramRowsSql("delta", 3, gram = "sh")}
-        |        GROUP BY doc_id),
-        |bsh AS (SELECT doc_id, list_distinct(list(sh ORDER BY p)) AS sh
-        |        FROM ${ngramRowsSql("bench", 3, gram = "sh")}
-        |        GROUP BY doc_id),
-        |dirty AS (
-        |  SELECT DISTINCT d.doc_id FROM dsh d CROSS JOIN bsh b
-        |  WHERE round(len(list_intersect(d.sh, b.sh))::DOUBLE /
-        |        (len(d.sh) + len(b.sh) - len(list_intersect(d.sh, b.sh))),
-        |        6) >= 0.35)
-        |SELECT nov.doc_id, novelty, avg_lp
-        |FROM nov JOIN lm USING (doc_id)
-        |WHERE novelty >= 0.3 AND avg_lp >= -4.5
-        |  AND nov.doc_id NOT IN (SELECT doc_id FROM dirty)
-        |ORDER BY nov.doc_id""".stripMargin,
-
-    // batch replay of the streaming verdicts: per-chunk seen flags are
-    // order-independent (stateless query), so the batch SQL is exact
-    "q_chunk_novelty_stream" ->
-      s"""WITH $allChunksCte,
-        |seen AS (
-        |  SELECT DISTINCT chunk_hash FROM allch WHERE doc_id % 4 <> 3),
-        |dch AS (SELECT doc_id, chunk, chunk_hash
-        |        FROM (SELECT doc_id, chunk, chunk_hash FROM allch
-        |              WHERE doc_id % 4 = 3
-        |              UNION ALL
-        |              SELECT doc_id + 500000, chunk, chunk_hash FROM allch
-        |              WHERE doc_id % 4 <> 3 AND doc_id % 8 = 0))
-        |SELECT dch.doc_id AS id, dch.chunk, dch.chunk_hash,
-        |       seen.chunk_hash IS NOT NULL AS seen
-        |FROM dch LEFT JOIN seen ON dch.chunk_hash = seen.chunk_hash
-        |ORDER BY id, chunk""".stripMargin,
-
-    // snapshot-diff replay: the same CDC chunks on both sides, multiset
-    // min/max arithmetic per (doc, hash)
-    "q_chunk_diff" ->
-      s"""WITH $allChunksCte,
-        |edited AS (
-        |  SELECT doc_id, text || ' APPENDED SNAPSHOT EDIT' AS text
-        |  FROM documents WHERE doc_id % 11 <> 3 AND doc_id % 5 = 0),
-        |oc AS (SELECT doc_id, chunk_hash, count(*)::BIGINT AS n_old
-        |       FROM allch GROUP BY 1, 2),
-        |nc AS (SELECT doc_id, chunk_hash, count(*)::BIGINT AS n_new
-        |       FROM (
-        |         SELECT doc_id, chunk_hash FROM allch
-        |         WHERE doc_id % 11 <> 3 AND doc_id % 5 <> 0
-        |         UNION ALL
-        |         SELECT doc_id, chunk_hash FROM ${cdcChunksSql("edited")}
-        |         UNION ALL
-        |         SELECT doc_id + 600000, chunk_hash FROM allch
-        |         WHERE doc_id % 13 = 1) GROUP BY 1, 2),
-        |j AS (SELECT coalesce(oc.doc_id, nc.doc_id) AS doc_id,
-        |             coalesce(n_old, 0) AS o, coalesce(n_new, 0) AS nn
-        |      FROM oc FULL OUTER JOIN nc
-        |        ON oc.doc_id = nc.doc_id
-        |       AND oc.chunk_hash = nc.chunk_hash)
-        |SELECT doc_id, sum(least(o, nn))::BIGINT AS retained,
-        |       sum(greatest(nn - o, 0))::BIGINT AS added,
-        |       sum(greatest(o - nn, 0))::BIGINT AS removed,
-        |       round((sum(greatest(nn - o, 0)) + sum(greatest(o - nn, 0)))
-        |             / (sum(least(o, nn)) * 2 + sum(greatest(nn - o, 0))
-        |                + sum(greatest(o - nn, 0)))::DOUBLE, 6) AS change
-        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // chunk-novelty replay: corpus chunk hashes = the index; per delta
-    // doc, novel = unseen hash AND first delta carrier (min doc_id)
-    "q_chunk_novelty" ->
-      s"""WITH $allChunksCte,
-        |seen AS (
-        |  SELECT DISTINCT chunk_hash FROM allch WHERE doc_id % 4 <> 3),
-        |dch AS (
-        |  SELECT doc_id, chunk_hash,
-        |         min(doc_id) OVER (PARTITION BY chunk_hash) AS first_id
-        |  FROM (SELECT doc_id, chunk_hash FROM allch WHERE doc_id % 4 = 3
-        |        UNION ALL
-        |        SELECT doc_id + 500000, chunk_hash FROM allch
-        |        WHERE doc_id % 4 <> 3 AND doc_id % 8 = 0))
-        |SELECT dch.doc_id, count(*) AS n_chunks,
-        |       sum(CASE WHEN seen.chunk_hash IS NULL
-        |                 AND dch.doc_id = dch.first_id
-        |                THEN 1 ELSE 0 END)::BIGINT AS n_novel,
-        |       round(sum(CASE WHEN seen.chunk_hash IS NULL
-        |                       AND dch.doc_id = dch.first_id
-        |                      THEN 1 ELSE 0 END)::DOUBLE / count(*), 6)
-        |         AS novelty
-        |FROM dch LEFT JOIN seen ON dch.chunk_hash = seen.chunk_hash
-        |GROUP BY dch.doc_id ORDER BY dch.doc_id""".stripMargin,
-
-    "q_dedup_jaccard" -> jaccardSql,
-    "q_dedup_minhash" -> jaccardSql,
-
-    // the four verified stage oracles composed: discrete per-source
-    // p25 floor → fingerprint keep-first → sqrt targets + md5 draw →
-    // prefix-sum packing; every construction appears verbatim in its
-    // own gate's oracle
-    "q_curation_pipeline" ->
-      s"""WITH $tokCte,
-         |vc AS (SELECT source, n_chars AS v, count(*) AS c
-         |       FROM documents WHERE n_chars IS NOT NULL
-         |       GROUP BY 1, 2),
-         |cum AS (SELECT source, v,
-         |          sum(c) OVER (PARTITION BY source ORDER BY v
-         |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |            AS cum,
-         |          sum(c) OVER (PARTITION BY source) AS n
-         |        FROM vc),
-         |thr AS (SELECT source AS g,
-         |          min(CASE WHEN cum >= ceil(CAST(0.25 AS DOUBLE) * n)
-         |                   THEN v END) AS thr
-         |        FROM cum GROUP BY source),
-         |q AS (SELECT dd.doc_id, dd.source, dd.text
-         |      FROM documents dd
-         |      JOIN thr ON dd.source IS NOT DISTINCT FROM thr.g
-         |      WHERE dd.n_chars >= thr),
-         |f AS (SELECT doc_id, source,
-         |        md5(trim(regexp_replace(lower(text), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')))
-         |          AS fp
-         |      FROM q),
-         |k AS (SELECT doc_id, source FROM (
-         |        SELECT f.*, min(doc_id) OVER (PARTITION BY fp) AS keep
-         |        FROM f)
-         |      WHERE doc_id = keep),
-         |tok AS (SELECT k.doc_id, k.source, len(t.tk)::BIGINT AS n_tok,
-         |          ('0x' || substr(md5('cur' || k.doc_id::VARCHAR),
-         |                          1, 8))::BIGINT AS h
-         |        FROM k JOIN t ON k.doc_id = t.doc_id),
-         |c2 AS (SELECT source, count(*) AS n FROM tok GROUP BY source),
-         |tt AS (SELECT source AS g,
-         |         least(n, floor(CAST(4.0 AS DOUBLE)
-         |                        * sqrt(n::DOUBLE))::BIGINT) AS target
-         |       FROM c2),
-         |rr AS (SELECT tok.*,
-         |         row_number() OVER (PARTITION BY source
-         |                            ORDER BY h, doc_id) AS rk
-         |       FROM tok),
-         |kept AS (SELECT doc_id, rr.source AS source, n_tok, h
-         |         FROM rr JOIN tt ON rr.source IS NOT DISTINCT FROM tt.g
-         |         WHERE rk <= target),
-         |pk AS (SELECT doc_id, source, n_tok,
-         |         ((sum(n_tok) OVER (PARTITION BY source ORDER BY h, doc_id
-         |                            ROWS UNBOUNDED PRECEDING))
-         |          - n_tok)::BIGINT AS __offset
-         |       FROM kept)
-         |SELECT doc_id, source, n_tok, __offset,
-         |       (__offset // 2048)::BIGINT AS __seq
-         |FROM pk ORDER BY doc_id""".stripMargin,
-
-    // per-doc signals replayed from their own gates' constructions
-    // (quality formula from q_quality, fingerprint from q_fingerprint,
-    // discrete median from the cum-sum), rolled to stratum grain
-    "q_corpus_report" ->
-      s"""WITH $tokCte,
-         |m AS (SELECT t.doc_id, d2.source, t.tk,
-         |        len(t.tk)::BIGINT AS ntok,
-         |        CASE WHEN length(t.text) > 0 THEN
-         |          len(regexp_extract_all(t.text, '[!-/:-@\\[-`{-~]'))::DOUBLE
-         |            / length(t.text)
-         |        ELSE 0.0 END AS pr,
-         |        CASE WHEN len(t.tk) > 0 THEN
-         |          len(list_filter(t.tk, x -> x IN ($swAll)))::DOUBLE
-         |            / len(t.tk)
-         |        ELSE 0.0 END AS swr,
-         |        md5(trim(regexp_replace(lower(t.text), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')))
-         |          AS fp,
-         |        length(t.text)::BIGINT AS nch
-         |      FROM t JOIN documents d2 ON t.doc_id = d2.doc_id),
-         |q AS (SELECT source, fp, nch, ntok,
-         |        0.4 * least(ntok::DOUBLE / 100.0, 1.0)
-         |        + 0.3 * (1.0 - least(pr * 5.0, 1.0))
-         |        + 0.3 * least(swr * 4.0, 1.0) AS q
-         |      FROM m),
-         |agg AS (SELECT source AS src, count(*) AS n_docs,
-         |          sum(ntok)::BIGINT AS n_tokens,
-         |          count(DISTINCT fp) AS nd,
-         |          round(avg(q), 4) AS mean_quality
-         |        FROM q GROUP BY 1),
-         |vc AS (SELECT source AS src, nch AS v, count(*) AS c
-         |       FROM q WHERE nch IS NOT NULL GROUP BY 1, 2),
-         |cum AS (SELECT src, v,
-         |          sum(c) OVER (PARTITION BY src ORDER BY v
-         |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |            AS cum,
-         |          sum(c) OVER (PARTITION BY src) AS n
-         |        FROM vc),
-         |med AS (SELECT src,
-         |          min(CASE WHEN cum >= ceil(CAST(0.5 AS DOUBLE) * n)
-         |                   THEN v END) AS p50_chars
-         |        FROM cum GROUP BY src)
-         |SELECT agg.src, n_docs, n_tokens,
-         |       round(1.0 - nd::DOUBLE / n_docs, 6) AS dup_rate,
-         |       mean_quality, p50_chars
-         |FROM agg LEFT JOIN med ON agg.src IS NOT DISTINCT FROM med.src
-         |ORDER BY agg.src""".stripMargin,
-
-    // distinct (source, 3-gram) sets, pairwise intersect counts, exact
-    // integer divisions rounded to 6
-    "q_source_overlap" ->
-      s"""WITH $tokCte,
-        |ss AS (SELECT DISTINCT d2.source AS src, r.sh
-        |       FROM ${ngramRowsSql("t", 3, gram = "sh")} r
-        |       JOIN documents d2 USING (doc_id)),
-        |sizes AS (SELECT src, count(*) AS n FROM ss GROUP BY src),
-        |shared AS (SELECT a.src AS src1, b.src AS src2, count(*) AS n_shared
-        |           FROM ss a JOIN ss b ON a.sh = b.sh AND a.src < b.src
-        |           GROUP BY 1, 2)
-        |SELECT src1, src2, x.n AS n1, y.n AS n2, n_shared,
-        |       round(n_shared::DOUBLE / (x.n + y.n - n_shared), 6)
-        |         AS jaccard,
-        |       round(n_shared::DOUBLE / least(x.n, y.n), 6)
-        |         AS containment
-        |FROM shared JOIN sizes x ON shared.src1 = x.src
-        |            JOIN sizes y ON shared.src2 = y.src
-        |ORDER BY src1, src2""".stripMargin,
-
-    // per-source unigram KL vs the corpus: only the stratum's own words
-    // are summed (P_s(w)=0 terms contribute 0), and every such word has
-    // corpus count > 0, so the MLE sum is smoothing-free on both engines
-    "q_source_kl" ->
-      """WITH t AS (SELECT source,
-        |  list_filter(regexp_split_to_array(trim(lower(text)),
-        |                                    '[ \t\n\x0b\f\r]+'),
-        |              x -> x <> '') tk FROM documents),
-        |sw AS (SELECT source, w, count(*)::BIGINT AS c
-        |       FROM (SELECT source, unnest(tk) AS w FROM t) GROUP BY 1, 2),
-        |cw AS (SELECT w, sum(c)::BIGINT AS cw FROM sw GROUP BY 1),
-        |ns AS (SELECT source AS nsrc, sum(c)::BIGINT AS ns
-        |       FROM sw GROUP BY 1),
-        |n AS (SELECT sum(c)::DOUBLE AS n FROM sw)
-        |SELECT sw.source, sum(sw.c)::BIGINT AS n_tokens,
-        |       round(sum((sw.c / ns.ns::DOUBLE) *
-        |                 ln((sw.c / ns.ns::DOUBLE) / (cw.cw / n.n))), 4)
-        |         AS kl
-        |FROM sw JOIN cw USING (w)
-        |JOIN ns ON sw.source IS NOT DISTINCT FROM ns.nsrc, n
-        |GROUP BY sw.source ORDER BY sw.source""".stripMargin,
-
-    // the full 6-round logistic-GD training replay (generated CTE
-    // chain — see qualityClassifierOracleSql)
-    "q_quality_classifier" -> qualityClassifierOracleSql(6, 512, "0.5e0"),
-
-    // DSIR: same 24-bit md5 bucket as the engine ('0x'||substr(md5,1,6)
-    // — Sampling.scala's documented replay convention), add-0.5
-    // smoothed bucket multinomials, per-doc sum of c * ln(pt/pr)
-    "q_dsir_weights" ->
-      """WITH t AS (SELECT doc_id, lang,
-        |  list_filter(regexp_split_to_array(trim(lower(text)),
-        |                                    '[ \t\n\x0b\f\r]+'),
-        |              x -> x <> '') tk FROM documents),
-        |f AS (SELECT doc_id, lang,
-        |             ('0x' || substr(md5(w), 1, 6))::BIGINT % 512 AS b
-        |      FROM (SELECT doc_id, lang, unnest(tk) AS w FROM t)),
-        |dc AS (SELECT doc_id, b, count(*)::BIGINT AS c FROM f GROUP BY 1, 2),
-        |tt AS (SELECT b, count(*)::BIGINT AS ct FROM f WHERE lang = 'en'
-        |       GROUP BY 1),
-        |rt AS (SELECT b, count(*)::BIGINT AS cr FROM f GROUP BY 1),
-        |nt AS (SELECT count(*)::DOUBLE AS n FROM f WHERE lang = 'en'),
-        |nr AS (SELECT count(*)::DOUBLE AS n FROM f)
-        |SELECT dc.doc_id, sum(dc.c)::BIGINT AS n_tokens,
-        |       round(sum(dc.c *
-        |         ln(((coalesce(tt.ct, 0) + 0.5) / (nt.n + 0.5 * 512)) /
-        |            ((rt.cr + 0.5) / (nr.n + 0.5 * 512)))), 4)
-        |         AS dsir_weight
-        |FROM dc JOIN rt USING (b) LEFT JOIN tt USING (b), nt, nr
-        |GROUP BY dc.doc_id ORDER BY dc.doc_id""".stripMargin,
-
-    // same candidate construction as the jaccard oracle (any shared
-    // rare shingle — the Spark prefix candidates are a subset, equal
-    // after exact verification under the same df cap), containment
-    // score with the DOUBLE-cast threshold
-    "q_dedup_containment" ->
-      s"""WITH $shingleCte
-         |SELECT d1, d2,
-         |       round(len(list_intersect(x.sh, y.sh))::DOUBLE /
-         |             least(len(x.sh), len(y.sh)), 4) AS containment
-         |FROM cand JOIN d x ON cand.d1 = x.doc_id
-         |          JOIN d y ON cand.d2 = y.doc_id
-         |WHERE len(list_intersect(x.sh, y.sh))::DOUBLE /
-         |      least(len(x.sh), len(y.sh)) >= CAST(0.6 AS DOUBLE)
-         |ORDER BY d1, d2""".stripMargin,
-
-    // the incremental result is the batch pair set restricted to pairs
-    // touching the delta partition (union-equivalence)
-    "q_dedup_incremental" ->
-      s"""WITH $shingleCte
-         |SELECT d1, d2, round(j, 4) AS jaccard FROM jac
-         |WHERE j >= 0.8 AND (d1 % 4 = 3 OR d2 % 4 = 3)
-         |ORDER BY d1, d2""".stripMargin,
-
-    // transitive closure of the jaccard pair graph via recursive CTE;
-    // component = min reachable id, keep = "I am my component's min"
-    "q_dedup_clusters" ->
-      s"""WITH RECURSIVE $shingleCte,
-         |p AS (SELECT d1, d2 FROM jac WHERE j >= 0.8),
-         |edges AS MATERIALIZED (SELECT d1 AS u, d2 AS v FROM p
-         |          UNION SELECT d2, d1 FROM p),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u)
-         |SELECT u AS id, least(min(v), u) AS component,
-         |       least(min(v), u) = u AS keep
-         |FROM reach GROUP BY u ORDER BY id""".stripMargin,
-
-    // cross-set Jaccard at the oracle's scale is a plain cross join
-    // (450 x 50 pairs at sf0.01); same shingle construction as the
-    // dedup oracles, argmax per doc with bench-id tie-break
-    "q_decontaminate_fuzzy" ->
-      s"""WITH $tokCte,
-        |d AS (SELECT doc_id, list_distinct(list(sh ORDER BY p)) AS sh
-        |      FROM ${ngramRowsSql("t", 3, gram = "sh")}
-        |      GROUP BY doc_id),
-        |bench AS (SELECT doc_id AS bench, sh AS bsh FROM d
-        |          WHERE doc_id % 10 = 7),
-        |corp AS (SELECT doc_id AS doc, sh AS csh FROM d
-        |         WHERE doc_id % 10 <> 7),
-        |j AS (SELECT doc, bench,
-        |        round(len(list_intersect(csh, bsh))::DOUBLE /
-        |              (len(csh) + len(bsh) - len(list_intersect(csh, bsh))),
-        |              6) AS jaccard
-        |      FROM corp CROSS JOIN bench)
-        |SELECT doc, bench, jaccard FROM (
-        |  SELECT doc, bench, jaccard,
-        |         row_number() OVER (PARTITION BY doc
-        |                            ORDER BY jaccard DESC, bench) AS rk
-        |  FROM j WHERE jaccard >= 0.35)
-        |WHERE rk = 1 ORDER BY doc""".stripMargin,
-
-    // closure (as q_dedup_clusters) + the quality formula (as
-    // q_domain_cap) + best-per-component pick; singleton docs are their
-    // own component
-    "q_dedup_best" ->
-      s"""WITH RECURSIVE $shingleCte,
-         |p AS (SELECT d1, d2 FROM jac WHERE j >= 0.8),
-         |edges AS MATERIALIZED (SELECT d1 AS u, d2 AS v FROM p
-         |          UNION SELECT d2, d1 FROM p),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM edges
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-         |comp AS (SELECT u AS doc_id, least(min(v), u) AS component
-         |         FROM reach GROUP BY u),
-         |$tokCte,
-         |m AS (SELECT doc_id,
-         |  CASE WHEN length(text) > 0 THEN
-         |    len(regexp_extract_all(text, '[!-/:-@\\[-`{-~]'))::DOUBLE / length(text)
-         |  ELSE 0.0 END AS pr,
-         |  CASE WHEN len(tk) > 0 THEN
-         |    len(list_filter(tk, x -> x IN ($swAll)))::DOUBLE / len(tk)
-         |  ELSE 0.0 END AS swr,
-         |  len(tk) AS ntok
-         |  FROM t),
-         |q AS (SELECT doc_id,
-         |  round(0.4 * least(ntok::DOUBLE / 100.0, 1.0)
-         |      + 0.3 * (1.0 - least(pr * 5.0, 1.0))
-         |      + 0.3 * least(swr * 4.0, 1.0), 6) AS quality
-         |  FROM m)
-         |SELECT doc_id, component, quality,
-         |       row_number() OVER (PARTITION BY component
-         |                          ORDER BY quality DESC, doc_id) = 1
-         |         AS keep
-         |FROM (SELECT d.doc_id,
-         |             coalesce(c.component, d.doc_id) AS component,
-         |             q.quality
-         |      FROM documents d
-         |      LEFT JOIN comp c USING (doc_id)
-         |      JOIN q USING (doc_id))
-         |ORDER BY doc_id""".stripMargin,
-
-    // Brute-force all-pairs hamming (the banding in simhashPairs is
-    // provably COMPLETE for hamming <= 3 — 4x16-bit pigeonhole — and its
-    // verification exact, so the semantics equal all-pairs). Token hash =
-    // first 64 bits of md5, the portable hash Dedup computes with
-    // portable=true; bit/shift arithmetic stays in UBIGINT to keep the
-    // bit pattern identical to the JVM's unsigned-long treatment.
-    "q_dedup_simhash" ->
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-        |                x -> x <> '') tk
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(tk) AS tok FROM t WHERE len(tk) > 0),
-        |th AS (SELECT doc_id,
-        |         ('0x' || substr(md5(tok), 1, 16))::UBIGINT AS h FROM tok),
-        |votes AS (
-        |  SELECT doc_id, b,
-        |         sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-        |  FROM th CROSS JOIN (SELECT unnest(range(64)) AS b) bits
-        |  GROUP BY doc_id, b),
-        |sh AS (
-        |  SELECT doc_id,
-        |    sum(CASE WHEN v > 0 THEN (1::UBIGINT << b)::HUGEINT
-        |             ELSE 0 END)::UBIGINT AS simhash
-        |  FROM votes GROUP BY doc_id)
-        |SELECT a.doc_id AS d1, b.doc_id AS d2,
-        |       bit_count(xor(a.simhash, b.simhash))::BIGINT AS hamming
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-        |ORDER BY d1, d2""".stripMargin,
-
-    "q_range_join" ->
-      """WITH p AS (SELECT event_id, user_id, ts FROM events
-        |           WHERE event_type = 'purchase'),
-        |     c AS (SELECT event_id AS click_id, user_id, ts FROM events
-        |           WHERE event_type = 'click')
-        |SELECT p.event_id, p.user_id, c.click_id
-        |FROM p JOIN c ON p.user_id = c.user_id
-        |  AND c.ts >= p.ts - INTERVAL 1 HOUR
-        |  AND c.ts <= p.ts + INTERVAL 1 HOUR
-        |ORDER BY p.event_id, c.click_id""".stripMargin,
-
-    "q_asof_join" ->
-      """WITH p AS (SELECT event_id, user_id, ts FROM events
-        |           WHERE event_type = 'purchase'),
-        |     c AS (SELECT event_id AS click_id, user_id, ts,
-        |                  value AS click_value FROM events
-        |           WHERE event_type = 'click')
-        |SELECT p.event_id, p.user_id, c.click_id, c.click_value
-        |FROM p ASOF LEFT JOIN c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-
-    // both ASOF directions joined, the CASE picks by µs distance with
-    // ties to the preceding row — exactly the operator's contract
-    "q_asof_nearest" ->
-      """WITH c AS (SELECT event_id, user_id, ts FROM events
-        |           WHERE event_type = 'click'),
-        |     p AS (SELECT event_id AS pid, user_id, ts,
-        |                  value AS pv FROM events
-        |           WHERE event_type = 'purchase'),
-        |b AS (SELECT c.event_id, c.user_id, c.ts,
-        |             p.pid AS bpid, p.pv AS bpv, p.ts AS bt
-        |      FROM c ASOF LEFT JOIN p
-        |        ON c.user_id = p.user_id AND c.ts >= p.ts),
-        |f AS (SELECT c.event_id, p.pid AS fpid, p.pv AS fpv, p.ts AS ft
-        |      FROM c ASOF LEFT JOIN p
-        |        ON c.user_id = p.user_id AND c.ts <= p.ts)
-        |SELECT b.event_id, b.user_id,
-        |       CASE WHEN bt IS NOT NULL AND (ft IS NULL OR
-        |                 epoch_us(b.ts) - epoch_us(bt)
-        |                   <= epoch_us(ft) - epoch_us(b.ts))
-        |            THEN bpid ELSE fpid END AS purchase_id,
-        |       CASE WHEN bt IS NOT NULL AND (ft IS NULL OR
-        |                 epoch_us(b.ts) - epoch_us(bt)
-        |                   <= epoch_us(ft) - epoch_us(b.ts))
-        |            THEN bpv ELSE fpv END AS purchase_value
-        |FROM b JOIN f USING (event_id)
-        |ORDER BY b.event_id""".stripMargin,
-
-    // the mirrored direction: smallest purchase ts at-or-after the click
-    "q_asof_forward" ->
-      """WITH c AS (SELECT event_id, user_id, ts FROM events
-        |           WHERE event_type = 'click'),
-        |     p AS (SELECT event_id AS purchase_id, user_id, ts,
-        |                  value AS purchase_value FROM events
-        |           WHERE event_type = 'purchase')
-        |SELECT c.event_id, c.user_id, p.purchase_id, p.purchase_value
-        |FROM c ASOF LEFT JOIN p
-        |  ON c.user_id = p.user_id AND c.ts <= p.ts
-        |ORDER BY c.event_id""".stripMargin,
-
-    // same break rule as Sessionize.assign: a µs-precision gap
-    // STRICTLY over 12 h starts a new session (an event exactly 12 h
-    // after its predecessor merges — session_window's inclusive
-    // boundary); first event's null lag falls to ELSE 0
-    "q_sessionize" ->
-      """WITH g AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-        |              OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |              > 43200000000 THEN 1 ELSE 0 END AS brk
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, ts, value,
-        |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                   ROWS UNBOUNDED PRECEDING) AS session_idx
-        |  FROM g)
-        |SELECT user_id, session_idx::BIGINT AS session_idx,
-        |       epoch_ms(min(ts)) AS start_ms, epoch_ms(max(ts)) AS end_ms,
-        |       count(*) AS n_events, round(sum(value), 4) AS total_value
-        |FROM s GROUP BY user_id, s.session_idx
-        |ORDER BY user_id, session_idx""".stripMargin,
-
-    // lead-window replication: per-user event_id order, complete
-    // 3-paths only, global top-20 by (count desc, path). The null-key
-    // filter mirrors EventAnalytics.topPaths' documented contract
-    // (anonymous events form no paths) — without it DuckDB would lump
-    // all NULL user_ids into one partition and manufacture paths
-    // across unrelated anonymous events the moment the fixture gains
-    // a null actor
-    "q_event_paths" ->
-      """WITH s AS (SELECT user_id, event_id, event_type,
-        |             lead(event_type, 1) OVER (PARTITION BY user_id
-        |                                       ORDER BY event_id) AS t1,
-        |             lead(event_type, 2) OVER (PARTITION BY user_id
-        |                                       ORDER BY event_id) AS t2
-        |           FROM events WHERE user_id IS NOT NULL),
-        |p AS (SELECT event_type || '>' || t1 || '>' || t2 AS path
-        |      FROM s WHERE t2 IS NOT NULL),
-        |c AS (SELECT path, count(*) AS n_paths FROM p GROUP BY path
-        |      ORDER BY n_paths DESC, path LIMIT 20)
-        |SELECT row_number() OVER (ORDER BY n_paths DESC, path)::BIGINT
-        |         AS rk,
-        |       path, n_paths
-        |FROM c ORDER BY rk""".stripMargin,
-
-    "q_funnel" ->
-      """WITH s1 AS (SELECT user_id, min(ts) t FROM events
-        |            WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) t FROM events e JOIN s1 USING (user_id)
-        |       WHERE e.event_type = 'click' AND e.ts > s1.t GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) t FROM events e JOIN s2 USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.ts > s2.t GROUP BY 1)
-        |SELECT * FROM (
-        |  SELECT 1 AS stage_idx, 'view' AS stage,
-        |         (SELECT count(*) FROM s1) AS n_keys
-        |  UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
-        |  UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3))
-        |ORDER BY stage_idx""".stripMargin,
-
-    // the 1-hour band compares at epoch µs on both sides: Spark's
-    // session timestamps are µs (nanos div 1000 at load), DuckDB's
-    // epoch_us over TIMESTAMP_NS truncates the same way
-    "q_funnel_windowed" ->
-      """WITH s1 AS (SELECT user_id, min(ts) t FROM events
-        |            WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) t FROM events e JOIN s1 USING (user_id)
-        |       WHERE e.event_type = 'click' AND e.ts > s1.t
-        |         AND epoch_us(e.ts) <= epoch_us(s1.t) + 3600000000 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) t FROM events e JOIN s2 USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.ts > s2.t
-        |         AND epoch_us(e.ts) <= epoch_us(s2.t) + 3600000000 GROUP BY 1)
-        |SELECT * FROM (
-        |  SELECT 1 AS stage_idx, 'view' AS stage,
-        |         (SELECT count(*) FROM s1) AS n_keys
-        |  UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
-        |  UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3))
-        |ORDER BY stage_idx""".stripMargin,
-
-    "q_retention" ->
-      """WITH f AS (SELECT user_id, date_trunc('week', min(ts)) cw
-        |           FROM events GROUP BY 1)
-        |SELECT epoch_ms(cw) AS cohort_ms,
-        |       ((epoch(date_trunc('week', e.ts))::BIGINT
-        |         - epoch(cw)::BIGINT) // 604800)::BIGINT AS week_offset,
-        |       count(DISTINCT e.user_id) AS n_keys
-        |FROM events e JOIN f USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // the 2-week horizon anchors on the user's EXACT first-event
-    // timestamp (not its truncated cohort week) and compares at epoch
-    // µs on both sides, like q_funnel_windowed's band
-    "q_retention_windowed" ->
-      """WITH f AS (SELECT user_id, min(ts) ft,
-        |                  date_trunc('week', min(ts)) cw
-        |           FROM events GROUP BY 1)
-        |SELECT epoch_ms(cw) AS cohort_ms,
-        |       ((epoch(date_trunc('week', e.ts))::BIGINT
-        |         - epoch(cw)::BIGINT) // 604800)::BIGINT AS week_offset,
-        |       count(DISTINCT e.user_id) AS n_keys
-        |FROM events e JOIN f USING (user_id)
-        |WHERE epoch_us(e.ts) <= epoch_us(ft) + 1209600000000
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // batch sessions + the append-mode flush rule: a session emits iff
-    // its end (last event + 12 h gap) <= final watermark (max ts - 1 h);
-    // gap AND emission compare at µs — Spark's full timestamp precision
-    "q_sessionize_stream" ->
-      """WITH g AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    CASE WHEN epoch_us(ts) - lag(epoch_us(ts))
-        |              OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |              > 43200000000 THEN 1 ELSE 0 END AS brk
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, ts, value,
-        |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                   ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM g),
-        |sess AS (
-        |  SELECT user_id, epoch_ms(min(ts)) AS start_ms,
-        |         epoch_us(max(ts)) AS end_us,
-        |         count(*) AS n_events, round(sum(value), 4) AS total_value
-        |  FROM s GROUP BY user_id, sid),
-        |fin AS (SELECT epoch_us(max(ts)) - 3600000000 AS wm_us FROM events)
-        |SELECT user_id, start_ms, n_events, total_value
-        |FROM sess, fin WHERE end_us + 43200000000 <= wm_us
-        |ORDER BY user_id, start_ms""".stripMargin,
-
-    // the determinism contract makes the streaming cap a pure function
-    // of the data: first 8 per key in (ts, event_id) order (NULL keys
-    // form their own capped group on both engines)
-    "q_rate_cap_stream" ->
-      """SELECT user_id, ts_us, event_id FROM (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |         row_number() OVER (PARTITION BY user_id
-        |                            ORDER BY ts, event_id) AS rn
-        |  FROM events)
-        |WHERE rn <= 8
-        |ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    // same tokenization CTE as q_token_count; the draw order is the
-    // salted portable hash, ties broken by doc_id; strict budget cut
-    // the same salted md5 order key, ranked per stratum in SQL
-    "q_stratified_sample" ->
-      """SELECT doc_id, lang FROM (
-        |  SELECT doc_id, lang,
-        |         row_number() OVER (PARTITION BY lang ORDER BY
-        |           ('0x' || substr(md5('strat1' || doc_id::VARCHAR), 1, 8))::BIGINT,
-        |           doc_id) AS rk
-        |  FROM documents)
-        |WHERE rk <= 40 ORDER BY lang, doc_id""".stripMargin,
-
-    // the delivery capstone replayed stage by stage: within-doc
-    // keep-first (min-position keeper), corpus drop rule over the
-    // CLEANED lines, empty survivors dropped, md5-convention manifest
-    // over the kept payload lengths (code points, both engines)
-    "q_delivery_pipeline" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-        |                     x -> x <> '') AS toks
-        |  FROM documents
-        |), chunks AS (
-        |  SELECT doc_id, ((p - 1) // 8)::BIGINT AS cidx,
-        |         string_agg(tok, ' ' ORDER BY p) AS line
-        |  FROM (SELECT doc_id, unnest(toks) AS tok,
-        |               unnest(range(1, len(toks) + 1)) AS p FROM base)
-        |  GROUP BY doc_id, ((p - 1) // 8)
-        |), cleaned AS (
-        |  SELECT doc_id, cidx, line FROM (
-        |    SELECT doc_id, cidx, line,
-        |           min(cidx) OVER (PARTITION BY doc_id, line) AS keeper
-        |    FROM chunks)
-        |  WHERE cidx = keeper
-        |), f AS (
-        |  SELECT line FROM cleaned GROUP BY line
-        |  HAVING count(DISTINCT doc_id) >= 2
-        |), r AS (
-        |  SELECT c.doc_id,
-        |         string_agg(c.line, chr(10) ORDER BY c.cidx)
-        |           FILTER (WHERE f.line IS NULL) AS kept_text,
-        |         count(*) FILTER (WHERE f.line IS NULL) AS n_kept
-        |  FROM cleaned c LEFT JOIN f ON c.line = f.line
-        |  GROUP BY c.doc_id
-        |), kd AS (
-        |  SELECT doc_id, length(kept_text)::BIGINT AS n_chars
-        |  FROM r WHERE n_kept >= 1
-        |)
-        |SELECT shard, count(*)::BIGINT AS n_docs,
-        |       sum(n_chars)::BIGINT AS n_chars,
-        |       sum(ck)::BIGINT AS checksum
-        |FROM (SELECT
-        |        (('0x' || substr(md5('deliver' || doc_id::VARCHAR), 1, 8))::BIGINT
-        |           % 4)::INT AS shard,
-        |        ('0x' || substr(md5('deliver:ck' || doc_id::VARCHAR), 1, 8))::BIGINT
-        |          AS ck,
-        |        n_chars
-        |      FROM kd)
-        |GROUP BY shard ORDER BY shard""".stripMargin,
-
-    // shard assignment + order-invariant checksum replayed with the
-    // same md5 convention (hash values are non-negative, so % == pmod)
-    "q_shard_manifest" ->
-      """SELECT shard, count(*)::BIGINT AS n_docs,
-        |       sum(n_chars)::BIGINT AS n_chars,
-        |       sum(ck)::BIGINT AS checksum
-        |FROM (SELECT
-        |        (('0x' || substr(md5('shard' || doc_id::VARCHAR), 1, 8))::BIGINT
-        |           % 8)::INT AS shard,
-        |        ('0x' || substr(md5('shard:ck' || doc_id::VARCHAR), 1, 8))::BIGINT
-        |          AS ck,
-        |        n_chars
-        |      FROM documents)
-        |GROUP BY shard ORDER BY shard""".stripMargin,
-
-    // A-Res replay: same 48-bit md5 uniform, same ln(u)/w key, same
-    // top-100 — membership compared, keys never emitted (libm ulp)
-    "q_weighted_sample" ->
-      """SELECT doc_id, lang, n_chars FROM (
-        |  SELECT doc_id, lang, n_chars
-        |  FROM documents WHERE n_chars > 0
-        |  ORDER BY ln((('0x' || substr(md5('wsamp' || doc_id::VARCHAR),
-        |                 1, 12))::BIGINT + 0.5) / 281474976710656.0)
-        |           / n_chars DESC, doc_id
-        |  LIMIT 100)
-        |ORDER BY doc_id""".stripMargin,
-
-    // DISCRETE boundaries, replayed structurally: boundary q = the
-    // smallest data value whose cumulative count reaches ceil(q * n)
-    // (percentile_disc convention, built from sum-over-window so no
-    // engine's quantile implementation is trusted); bucketing is then
-    // integer > integer — hash-stable by construction (the interpolated
-    // predecessor flipped ties at a boundary on 1-ulp cross-engine
-    // interpolation differences). The literal casts to DOUBLE so the
-    // ceil argument is the same single IEEE multiply Spark computes.
-    "q_length_buckets" ->
-      """WITH vc AS (SELECT n_chars AS v, count(*) AS c
-        |            FROM documents WHERE n_chars IS NOT NULL
-        |            GROUP BY n_chars),
-        |cum AS (SELECT v,
-        |          sum(c) OVER (ORDER BY v
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |            AS cum,
-        |          sum(c) OVER () AS n
-        |        FROM vc),
-        |b AS (SELECT
-        |        min(CASE WHEN cum >= ceil(CAST(0.25 AS DOUBLE) * n)
-        |                 THEN v END) AS b0,
-        |        min(CASE WHEN cum >= ceil(CAST(0.5 AS DOUBLE) * n)
-        |                 THEN v END) AS b1,
-        |        min(CASE WHEN cum >= ceil(CAST(0.75 AS DOUBLE) * n)
-        |                 THEN v END) AS b2
-        |      FROM cum),
-        |a AS (SELECT doc_id, n_chars,
-        |        ((CASE WHEN n_chars > b0 THEN 1 ELSE 0 END) +
-        |         (CASE WHEN n_chars > b1 THEN 1 ELSE 0 END) +
-        |         (CASE WHEN n_chars > b2 THEN 1 ELSE 0 END))::BIGINT
-        |          AS bucket
-        |      FROM documents, b WHERE n_chars IS NOT NULL)
-        |SELECT bucket, count(*) AS n_docs,
-        |       min(n_chars) AS min_len, max(n_chars) AS max_len,
-        |       sum(n_chars)::BIGINT AS sum_len,
-        |       (max(n_chars) * count(*) - sum(n_chars))::BIGINT
-        |         AS padding_waste
-        |FROM a GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    "q_weighted_stratum" ->
-      """SELECT doc_id, lang, n_chars FROM (
-        |  SELECT doc_id, lang, n_chars,
-        |         row_number() OVER (PARTITION BY lang ORDER BY
-        |           ln((('0x' || substr(md5('wsamp' || doc_id::VARCHAR),
-        |                1, 12))::BIGINT + 0.5) / 281474976710656.0)
-        |           / n_chars DESC, doc_id) AS rk
-        |  FROM documents WHERE n_chars > 0)
-        |WHERE rk <= 25 ORDER BY doc_id""".stripMargin,
-
-    // same quality formula as q_quality (rounded to 6), ranked per
-    // source with doc_id tie-break, capped at 15
-    "q_domain_cap" ->
-      s"""WITH $tokCte,
-         |m AS (SELECT doc_id,
-         |  CASE WHEN length(text) > 0 THEN
-         |    len(regexp_extract_all(text, '[!-/:-@\\[-`{-~]'))::DOUBLE / length(text)
-         |  ELSE 0.0 END AS pr,
-         |  CASE WHEN len(tk) > 0 THEN
-         |    len(list_filter(tk, x -> x IN ($swAll)))::DOUBLE / len(tk)
-         |  ELSE 0.0 END AS swr,
-         |  len(tk) AS ntok
-         |  FROM t),
-         |q AS (SELECT doc_id,
-         |  round(0.4 * least(ntok::DOUBLE / 100.0, 1.0)
-         |      + 0.3 * (1.0 - least(pr * 5.0, 1.0))
-         |      + 0.3 * least(swr * 4.0, 1.0), 6) AS quality
-         |  FROM m)
-         |SELECT doc_id, source, quality, rk FROM (
-         |  SELECT d.doc_id, d.source, q.quality,
-         |         row_number() OVER (PARTITION BY d.source
-         |                            ORDER BY q.quality DESC, d.doc_id) AS rk
-         |  FROM documents d JOIN q USING (doc_id))
-         |WHERE rk <= 15 ORDER BY source, rk""".stripMargin,
-
-    // BM25 with the Lucene non-negative idf; same tokenization CTE both
-    // sides, avgdl exact (integer token sum, one division), ranking on
-    // the rounded score with doc_id tie-break
-    "q_bm25" ->
-      s"""WITH $tokCte,
-         |tf AS (SELECT doc_id, term, count(*)::DOUBLE AS tf, max(dl) AS dl
-         |       FROM (SELECT doc_id, unnest(tk) AS term,
-         |                    len(tk)::BIGINT AS dl FROM t)
-         |       GROUP BY doc_id, term),
-         |qraw(query_id, qtext) AS (VALUES ('q1', 'fast vector scan'),
-         |  ('q2', 'customer query data'), ('q3', 'window merge batch stream')),
-         |qt AS (SELECT DISTINCT query_id,
-         |         unnest(list_filter(regexp_split_to_array(trim(lower(qtext)),
-         |           '[ \\t\\n\\x0b\\f\\r]+'), x -> x <> '')) AS term
-         |       FROM qraw),
-         |dfreq AS (SELECT term, count(*)::DOUBLE AS df FROM tf
-         |          WHERE term IN (SELECT term FROM qt) GROUP BY term),
-         |stats AS (SELECT count(*)::DOUBLE AS n,
-         |                 sum(len(tk))::DOUBLE / count(*)::DOUBLE AS avgdl
-         |          FROM t),
-         |sc AS (SELECT qt.query_id, tf.doc_id,
-         |         round(sum(ln(1 + (stats.n - dfreq.df + 0.5) / (dfreq.df + 0.5))
-         |           * tf.tf * 2.2
-         |           / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl::DOUBLE / stats.avgdl))),
-         |           4) AS score
-         |       FROM tf JOIN qt USING (term) JOIN dfreq USING (term)
-         |            CROSS JOIN stats
-         |       GROUP BY qt.query_id, tf.doc_id)
-         |SELECT query_id, doc_id, score, rank FROM (
-         |  SELECT query_id, doc_id, score,
-         |         row_number() OVER (PARTITION BY query_id
-         |                            ORDER BY score DESC, doc_id) AS rank
-         |  FROM sc)
-         |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    "q_corpus_mix" ->
-      s"""WITH $tokCte,
-         |tt AS (SELECT doc_id, source, len(tk)::BIGINT AS n_tok,
-         |              ('0x' || substr(md5('mix1' || doc_id::VARCHAR), 1, 8))::BIGINT AS h
-         |       FROM t JOIN documents USING (doc_id)),
-         |b(source, budget) AS (VALUES ('src0', 2000), ('src1', 500),
-         |                            ('src2', 100000)),
-         |c AS (SELECT tt.*, budget,
-         |             (sum(n_tok) OVER (PARTITION BY tt.source
-         |                               ORDER BY h, doc_id
-         |                               ROWS UNBOUNDED PRECEDING))::BIGINT AS __cum
-         |      FROM tt JOIN b USING (source))
-         |SELECT doc_id, source, n_tok, __cum FROM c
-         |WHERE __cum <= budget ORDER BY doc_id""".stripMargin,
-
-    "q_sample_split" ->
-      """SELECT doc_id,
-        |  ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 100 AS bucket,
-        |  CASE WHEN ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 100 < 80
-        |       THEN 'train'
-        |       WHEN ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 100 < 90
-        |       THEN 'val' ELSE 'test' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // null-safe group join (IS NOT DISTINCT FROM): a null stratum is
-    // its own group and its rows must survive, mirroring the Spark
-    // side's <=> join — a plain USING(source) silently drops them
-    "q_zscore" ->
-      """WITH m AS (SELECT source AS g, avg(n_chars) mu,
-        |                  stddev_pop(n_chars) sd
-        |           FROM documents GROUP BY 1)
-        |SELECT doc_id, source, n_chars,
-        |       CASE WHEN sd = 0 THEN 0.0
-        |            ELSE round((n_chars - mu) / sd, 4) END AS n_chars_z
-        |FROM documents JOIN m ON source IS NOT DISTINCT FROM m.g
-        |ORDER BY doc_id""".stripMargin,
-
-    // DISCRETE per-group threshold, replayed structurally (the same
-    // cum-sum construction as q_length_buckets — no engine's quantile
-    // implementation is trusted, and the >= compares data values)
-    // null n_chars rows are excluded from the quantile POPULATION
-    // (discreteQuantileByGroup's contract) and fail the threshold
-    // comparison (NULL >= thr is not true), matching the operator on
-    // both counts — the composed-sweep fixture is the first with null
-    // n_chars (null text implies null recomputed length)
-    "q_quantile_filter" ->
-      """WITH vc AS (SELECT source, n_chars AS v, count(*) AS c
-        |            FROM documents WHERE n_chars IS NOT NULL
-        |            GROUP BY 1, 2),
-        |cum AS (SELECT source, v,
-        |          sum(c) OVER (PARTITION BY source ORDER BY v
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |            AS cum,
-        |          sum(c) OVER (PARTITION BY source) AS n
-        |        FROM vc),
-        |t AS (SELECT source AS g,
-        |        min(CASE WHEN cum >= ceil(CAST(0.75 AS DOUBLE) * n)
-        |                 THEN v END) AS thr
-        |      FROM cum GROUP BY source)
-        |SELECT doc_id, source, n_chars
-        |FROM documents JOIN t ON source IS NOT DISTINCT FROM t.g
-        |WHERE n_chars >= thr
-        |ORDER BY doc_id""".stripMargin,
-
-    // two rounds of the per-group discrete-median construction (value,
-    // then |value - median|), one division, round 4
-    // null n_chars: excluded from BOTH median populations (value and
-    // deviation), row kept with a null z-score — robustZscore's
-    // append-shaped LEFT-join contract
-    "q_robust_zscore" ->
-      """WITH vc AS (SELECT source, n_chars AS v, count(*) AS c
-        |            FROM documents WHERE n_chars IS NOT NULL
-        |            GROUP BY 1, 2),
-        |cum AS (SELECT source, v,
-        |          sum(c) OVER (PARTITION BY source ORDER BY v
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |            AS cum,
-        |          sum(c) OVER (PARTITION BY source) AS n
-        |        FROM vc),
-        |med AS (SELECT source AS g,
-        |          min(CASE WHEN cum >= ceil(CAST(0.5 AS DOUBLE) * n)
-        |                   THEN v END) AS m
-        |        FROM cum GROUP BY source),
-        |dv AS (SELECT d.doc_id, d.source, d.n_chars,
-        |              m.m AS med, abs(d.n_chars - m.m) AS dev
-        |       FROM documents d
-        |       LEFT JOIN med m ON d.source IS NOT DISTINCT FROM m.g),
-        |dc AS (SELECT source, dev AS v, count(*) AS c
-        |       FROM dv WHERE dev IS NOT NULL GROUP BY 1, 2),
-        |dcum AS (SELECT source, v,
-        |           sum(c) OVER (PARTITION BY source ORDER BY v
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |             AS cum,
-        |           sum(c) OVER (PARTITION BY source) AS n
-        |         FROM dc),
-        |mad AS (SELECT source AS g,
-        |          min(CASE WHEN cum >= ceil(CAST(0.5 AS DOUBLE) * n)
-        |                   THEN v END) AS mad
-        |        FROM dcum GROUP BY source)
-        |SELECT dv.doc_id, dv.source, dv.n_chars,
-        |       CASE WHEN mad.mad = 0 THEN 0.0
-        |            ELSE round((dv.n_chars - dv.med)::DOUBLE / mad.mad, 4)
-        |       END AS n_chars_rz
-        |FROM dv LEFT JOIN mad ON dv.source IS NOT DISTINCT FROM mad.g
-        |ORDER BY dv.doc_id""".stripMargin,
-
-    // global discrete [p05, p95] bounds via the same cum-sum replay;
-    // the clip is integer arithmetic on both sides. Null n_chars is
-    // excluded from the bounds population and STAYS null in the clip —
-    // DuckDB's greatest/least SKIP nulls (greatest(lo, least(hi,
-    // NULL)) = hi), so without the CASE a null would silently clamp
-    // to the high bound
-    "q_winsorize" ->
-      """WITH vc AS (SELECT n_chars AS v, count(*) AS c
-        |            FROM documents WHERE n_chars IS NOT NULL
-        |            GROUP BY 1),
-        |cum AS (SELECT v,
-        |          sum(c) OVER (ORDER BY v
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |            AS cum,
-        |          sum(c) OVER () AS n
-        |        FROM vc),
-        |b AS (SELECT
-        |        min(CASE WHEN cum >= ceil(CAST(0.05 AS DOUBLE) * n)
-        |                 THEN v END) AS lo,
-        |        min(CASE WHEN cum >= ceil(CAST(0.95 AS DOUBLE) * n)
-        |                 THEN v END) AS hi
-        |      FROM cum)
-        |SELECT doc_id, n_chars,
-        |       CASE WHEN n_chars IS NULL THEN NULL
-        |            ELSE greatest(lo, least(hi, n_chars)) END AS n_chars_w
-        |FROM documents, b
-        |ORDER BY doc_id""".stripMargin,
-
-    // per-source targets min(n, floor(2 * sqrt(n))) — sqrt/multiply/
-    // floor are all IEEE-exact — then the portable md5 draw order
-    "q_temperature_mix" ->
-      """WITH c AS (SELECT source, count(*) AS n
-        |           FROM documents GROUP BY source),
-        |t AS (SELECT source,
-        |        least(n, floor(CAST(2.0 AS DOUBLE) * sqrt(n::DOUBLE))::BIGINT)
-        |          AS target
-        |      FROM c),
-        |r AS (SELECT doc_id, source,
-        |        row_number() OVER (PARTITION BY source ORDER BY
-        |          ('0x' || substr(md5('tmix' || doc_id::VARCHAR),
-        |                          1, 8))::BIGINT, doc_id) AS rk
-        |      FROM documents)
-        |SELECT doc_id, r.source AS source
-        |FROM r JOIN t ON r.source IS NOT DISTINCT FROM t.source
-        |WHERE rk <= target
-        |ORDER BY doc_id""".stripMargin,
-
-    // per-stratum (n_base, thresh=round(frac(w)*1e6)) literals mirror
-    // byWeight's driver-side decomposition of 2.25/0.5/1.0/0.0
-    "q_corpus_upsample" ->
-      """WITH w(source, n_base, thresh) AS (VALUES ('src0', 2, 250000),
-        |                                          ('src1', 0, 500000),
-        |                                          ('src2', 1, 0),
-        |                                          ('src3', 0, 0)),
-        |d AS (SELECT doc_id, source,
-        |        n_base + CASE WHEN (('0x' || substr(md5('up1' || doc_id::VARCHAR), 1, 8))::BIGINT
-        |                            % 1000000) < thresh
-        |                 THEN 1 ELSE 0 END AS n_copies
-        |      FROM documents JOIN w USING (source))
-        |SELECT doc_id, source, unnest(range(n_copies))::BIGINT AS __rep
-        |FROM d WHERE n_copies > 0
-        |ORDER BY doc_id, __rep""".stripMargin,
-
-    // same tokenization + hash-order CTE shape as q_corpus_mix; offset =
-    // prefix sum minus own tokens, seq = integer-div by the 2048 budget
-    "q_pack_sequences" ->
-      s"""WITH $tokCte,
-         |tt AS (SELECT doc_id, source, len(tk)::BIGINT AS n_tok,
-         |              ('0x' || substr(md5('pack1' || doc_id::VARCHAR), 1, 8))::BIGINT AS h
-         |       FROM t JOIN documents USING (doc_id)),
-         |c AS (SELECT tt.*,
-         |             ((sum(n_tok) OVER (PARTITION BY source
-         |                                ORDER BY h, doc_id
-         |                                ROWS UNBOUNDED PRECEDING))
-         |              - n_tok)::BIGINT AS __offset
-         |      FROM tt)
-         |SELECT doc_id, source, n_tok, __offset,
-         |       (__offset // 2048)::BIGINT AS __seq
-         |FROM c ORDER BY doc_id""".stripMargin,
-
-    "q_pack_slices" ->
-      s"""WITH $tokCte,
-         |tt AS (SELECT doc_id, source, len(tk)::BIGINT AS n_tok,
-         |              ('0x' || substr(md5('pack1' || doc_id::VARCHAR), 1, 8))::BIGINT AS h
-         |       FROM t JOIN documents USING (doc_id)),
-         |c AS (SELECT tt.*,
-         |             ((sum(n_tok) OVER (PARTITION BY source
-         |                                ORDER BY h, doc_id
-         |                                ROWS UNBOUNDED PRECEDING))
-         |              - n_tok)::BIGINT AS off
-         |      FROM tt),
-         |sl AS (SELECT source, doc_id, n_tok, off, s.seq::BIGINT AS seq
-         |       FROM c, unnest(range(off // 2048,
-         |                            (off + n_tok - 1) // 2048 + 1)) AS s(seq)
-         |       WHERE n_tok > 0)
-         |SELECT source, seq, doc_id,
-         |       greatest(seq * 2048 - off, 0)::BIGINT AS tok_start,
-         |       (least((seq + 1) * 2048 - off, n_tok)
-         |        - greatest(seq * 2048 - off, 0))::BIGINT AS tok_len
-         |FROM sl ORDER BY doc_id, seq""".stripMargin,
-
-    // every-position 20-gram md5s -> grams occurring >1x -> per-doc
-    // gaps-and-islands interval merge; the same unique-island splice
-    // as the Spark side, so both engines walk identical bytes
-    "q_dedup_spans" ->
-      s"""WITH $dupSpansCte
-         |SELECT doc_id, span_start, span_end,
-         |       (span_end - span_start + 1)::BIGINT AS span_len
-         |FROM spans ORDER BY doc_id, span_start""".stripMargin,
-
-    // incremental == batch-restricted-to-delta, by the span-index
-    // contract — the oracle replays the BATCH form over the full
-    // fixture and keeps the delta quarter
-    "q_dedup_spans_incr" ->
-      s"""WITH $dupSpansCte
-         |SELECT doc_id, span_start, span_end,
-         |       (span_end - span_start + 1)::BIGINT AS span_len
-         |FROM spans WHERE doc_id % 4 = 3
-         |ORDER BY doc_id, span_start""".stripMargin,
-
-    "q_dedup_spans_tokens" ->
-      s"""WITH $dupTokenSpansCte
-         |SELECT doc_id, span_start, span_end,
-         |       (span_end - span_start + 1)::BIGINT AS span_len,
-         |       tok_start, tok_end,
-         |       (tok_end - tok_start + 1)::BIGINT AS n_tok
-         |FROM tspans ORDER BY doc_id, span_start""".stripMargin,
-
-    // the cut replay, LINEAR: spans explode to their covered positions
-    // (total <= doc length), the char rows from `ch` anti-join them,
-    // and an ordered string_agg stitches the survivors — the per-
-    // segment substr form re-scans the string head per segment in
-    // DuckDB exactly as in Spark (quadratic at 17k spans on 10 MB)
-    "q_dedup_spans_cut" ->
-      s"""WITH $spanCutCte
-         |SELECT doc_id, len(kept)::BIGINT AS n_kept, md5(kept) AS kept_md5
-         |FROM cut ORDER BY doc_id""".stripMargin,
-
-    "q_dedup_spans_tokens_cut" ->
-      s"""WITH $tokenSpanCutCte
-         |SELECT doc_id, len(kept)::BIGINT AS n_kept, md5(kept) AS kept_md5
-         |FROM tcut ORDER BY doc_id""".stripMargin,
-
-    // the span-curation capstone: cut text -> post-cut length floor
-    // (docs reduced below 40 chars drop, the Lee-et-al follow-up) ->
-    // re-tokenize the SURVIVING bytes -> salted-hash packing per
-    // source. Every stage reuses a separately-gated replay (the cut
-    // chain is the SHARED spanCutCte fragment; the pack is the
-    // q_pack_sequences orderHash window) so the composition cannot
-    // drift from its parts
-    "q_span_pipeline" ->
-      s"""WITH $spanCutCte,
-         |fl AS (SELECT doc_id, kept FROM cut WHERE len(kept) >= 40),
-         |tokp AS (SELECT fl.doc_id, d.source,
-         |           len(list_filter(regexp_split_to_array(trim(lower(kept)),
-         |             '[ \\t\\n\\x0b\\f\\r]+'), x -> x <> ''))::BIGINT AS n_tok
-         |         FROM fl JOIN documents d USING (doc_id)),
-         |hh AS (SELECT *,
-         |         ('0x' || substr(md5('span1' || doc_id::VARCHAR), 1, 8))::BIGINT AS h
-         |       FROM tokp),
-         |pk AS (SELECT doc_id, source, n_tok,
-         |         ((sum(n_tok) OVER (PARTITION BY source ORDER BY h, doc_id
-         |            ROWS UNBOUNDED PRECEDING)) - n_tok)::BIGINT AS off
-         |       FROM hh)
-         |SELECT doc_id, source, n_tok, off, (off // 256)::BIGINT AS seq
-         |FROM pk ORDER BY doc_id""".stripMargin,
-
-    // the fimSplit recipe replayed: salted orderHash selection, two
-    // hash cuts into [1, n-1] (guarded behind `app` so the modulus is
-    // never zero), PSM reassembly. len/substr count code points in
-    // both engines; NULL text passes through to a NULL md5
-    "q_fim_split" ->
-      """WITH b AS (
-        |  SELECT doc_id, text, len(text)::BIGINT AS n,
-        |    (text IS NOT NULL AND len(text) >= 2 AND
-        |     ('0x' || substr(md5('fim' || doc_id::VARCHAR), 1, 8))::BIGINT
-        |       % 100 < 60) AS app
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, text, n, app,
-        |    CASE WHEN app THEN least(
-        |      ('0x' || substr(md5('fim-a' || doc_id::VARCHAR), 1, 8))::BIGINT
-        |        % (n - 1) + 1,
-        |      ('0x' || substr(md5('fim-b' || doc_id::VARCHAR), 1, 8))::BIGINT
-        |        % (n - 1) + 1) END AS c1,
-        |    CASE WHEN app THEN greatest(
-        |      ('0x' || substr(md5('fim-a' || doc_id::VARCHAR), 1, 8))::BIGINT
-        |        % (n - 1) + 1,
-        |      ('0x' || substr(md5('fim-b' || doc_id::VARCHAR), 1, 8))::BIGINT
-        |        % (n - 1) + 1) END AS c2
-        |  FROM b)
-        |SELECT doc_id, app AS fim_applied,
-        |  c1 AS n_prefix,
-        |  (c2 - c1) AS n_middle,
-        |  (n - c2) AS n_suffix,
-        |  md5(CASE WHEN app THEN
-        |        '<PRE>' || substr(text, 1, c1) ||
-        |        '<SUF>' || substr(text, c2 + 1, n - c2) ||
-        |        '<MID>' || substr(text, c1 + 1, c2 - c1)
-        |      ELSE text END) AS fim_md5
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    "q_decontaminate" -> decontaminateSql,
-
-    // the per-(doc, shingle) hit rows BEFORE the per-doc rollup —
-    // statelessness makes the streamed replay equal this batch set
-    "q_decontaminate_stream" ->
-      s"""WITH $tokCte,
-        |$s8RowsCte,
-        |bench AS (SELECT DISTINCT s8 AS s FROM sh WHERE doc_id < 10),
-        |corpus AS (SELECT doc_id AS doc, s8 AS s FROM sh
-        |           WHERE doc_id >= 10)
-        |SELECT doc, s
-        |FROM corpus JOIN bench USING (s)
-        |ORDER BY doc, s""".stripMargin,
-
-    // the bloom-pruned plan is result-identical to the exact one, so it
-    // shares the oracle verbatim
-    "q_decontaminate_bloom" -> decontaminateSql,
-
-    "q_dedup_embedding" ->
-      """SELECT a.vec_id AS id1, b.vec_id AS id2,
-        |       round(list_cosine_similarity(a.embedding::DOUBLE[],
-        |                                    b.embedding::DOUBLE[]), 4) AS cosine
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(a.embedding::DOUBLE[],
-        |                             b.embedding::DOUBLE[]) >= 0.4
-        |ORDER BY id1, id2""".stripMargin,
-
-    // full SemDeDup replay: same shifted-copy corpus, same 10-centroid
-    // argmax assignment as the ivf oracles (zero-norm rows excluded —
-    // the engine convention), within-cell pairs only, recursive-CTE
-    // closure (the q_dedup_clusters pattern), keep = least
-    // centroid-similar per component on the 6-decimal grid
-    "q_semdedup" ->
-      """WITH RECURSIVE
-        |base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |corpus AS (
-        |  SELECT vec_id, v FROM base
-        |  UNION ALL
-        |  SELECT vec_id + 100000, list_transform(v, x -> x + 0.08)
-        |  FROM base WHERE vec_id < 250),
-        |e AS (SELECT vec_id, v FROM corpus
-        |      WHERE list_dot_product(v, v) > 0),
-        |cent AS (SELECT vec_id AS cell, v AS cv FROM base WHERE vec_id < 10),
-        |asg AS MATERIALIZED (SELECT vec_id, v, cell,
-        |         round(sim, 6) + 0.0 AS cent_sim FROM (
-        |  SELECT e.vec_id, e.v, c.cell,
-        |         list_cosine_similarity(e.v, c.cv) AS sim,
-        |         row_number() OVER (PARTITION BY e.vec_id
-        |           ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell)
-        |           AS rn
-        |  FROM e CROSS JOIN cent c) WHERE rn = 1),
-        |p AS (SELECT a.vec_id AS d1, b.vec_id AS d2
-        |      FROM asg a JOIN asg b
-        |        ON a.cell = b.cell AND a.vec_id < b.vec_id
-        |      WHERE list_cosine_similarity(a.v, b.v) >= 0.85),
-        |edges AS MATERIALIZED (SELECT d1 AS u, d2 AS v FROM p
-        |          UNION SELECT d2, d1 FROM p),
-        |reach(u, v) AS (
-        |  SELECT u, v FROM edges
-        |  UNION
-        |  SELECT r.u, e2.v FROM reach r JOIN edges e2 ON r.v = e2.u),
-        |comp AS (SELECT u AS vec_id, least(min(v), u) AS component
-        |         FROM reach GROUP BY u)
-        |SELECT a.vec_id, a.cell, a.cent_sim,
-        |       coalesce(c.component, a.vec_id) AS component,
-        |       row_number() OVER (
-        |         PARTITION BY coalesce(c.component, a.vec_id)
-        |         ORDER BY a.cent_sim ASC, a.vec_id ASC) = 1 AS keep
-        |FROM asg a LEFT JOIN comp c USING (vec_id)
-        |ORDER BY vec_id""".stripMargin,
-
-    // the ε-sweep replay: same assignment CTE as q_semdedup, then one
-    // per-cell rank window and the all-BIGINT keep boundary
-    // (rk-1)*1e6 < keep_micro * n_cell with keep_micro = round(.35e6)
-    "q_semdedup_frac" ->
-      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |corpus AS (
-        |  SELECT vec_id, v FROM base
-        |  UNION ALL
-        |  SELECT vec_id + 100000, list_transform(v, x -> x + 0.08)
-        |  FROM base WHERE vec_id < 250),
-        |e AS (SELECT vec_id, v FROM corpus
-        |      WHERE list_dot_product(v, v) > 0),
-        |cent AS (SELECT vec_id AS cell, v AS cv FROM base WHERE vec_id < 10),
-        |asg AS (SELECT vec_id, cell,
-        |         round(sim, 6) + 0.0 AS cent_sim FROM (
-        |  SELECT e.vec_id, c.cell,
-        |         list_cosine_similarity(e.v, c.cv) AS sim,
-        |         row_number() OVER (PARTITION BY e.vec_id
-        |           ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell)
-        |           AS rn
-        |  FROM e CROSS JOIN cent c) WHERE rn = 1),
-        |rk AS (SELECT vec_id, cell, cent_sim,
-        |         row_number() OVER (PARTITION BY cell
-        |           ORDER BY cent_sim ASC, vec_id ASC)::BIGINT AS rk,
-        |         count(*) OVER (PARTITION BY cell)::BIGINT AS n_cell
-        |       FROM asg)
-        |SELECT vec_id, cell, cent_sim, rk, n_cell,
-        |       (rk - 1) * 1000000 < 350000 * n_cell AS keep
-        |FROM rk ORDER BY vec_id""".stripMargin,
-
-    // exact quadratic oracle for the LSH branch: valid because the banded
-    // candidate generation is deterministic with a 1e-9 per-pair miss
-    // bound and verification reports the TRUE cosine. The shifted-copy
-    // construction must stay element-wise identical to the Spark side
-    // (float->double cast, then + 0.08 — both exact IEEE ops).
-    "q_dedup_embedding_lsh" ->
-      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |corpus AS (
-        |  SELECT vec_id, v FROM base
-        |  UNION ALL
-        |  SELECT vec_id + 100000, list_transform(v, x -> x + 0.08)
-        |  FROM base WHERE vec_id < 250)
-        |SELECT a.vec_id AS id1, b.vec_id AS id2,
-        |       round(list_cosine_similarity(a.v, b.v), 4) AS cosine
-        |FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(a.v, b.v) >= 0.85
-        |ORDER BY id1, id2""".stripMargin,
-
-    // incremental = the same batch pair set restricted to pairs with at
-    // least one delta (shifted-copy) side
-    "q_dedup_embedding_incr" ->
-      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |corpus AS (
-        |  SELECT vec_id, v FROM base
-        |  UNION ALL
-        |  SELECT vec_id + 100000, list_transform(v, x -> x + 0.08)
-        |  FROM base WHERE vec_id < 250)
-        |SELECT a.vec_id AS id1, b.vec_id AS id2,
-        |       round(list_cosine_similarity(a.v, b.v), 4) AS cosine
-        |FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(a.v, b.v) >= 0.85
-        |  AND (a.vec_id >= 100000 OR b.vec_id >= 100000)
-        |ORDER BY id1, id2""".stripMargin,
-
-    "q_knn_bruteforce" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings
-      |           WHERE list_dot_product(embedding::DOUBLE[],
-      |                                  embedding::DOUBLE[]) > 0),
-        |q AS (SELECT * FROM e WHERE vec_id < 5),
-        |s AS (SELECT q.vec_id qid, c.vec_id cid,
-        |             list_cosine_similarity(q.v, c.v) sim
-        |      FROM q CROSS JOIN e c WHERE c.vec_id <> q.vec_id)
-        |SELECT qid, rank, cid, round(sim, 4) + 0.0 AS sim FROM (
-        |  SELECT qid, cid, sim,
-        |         row_number() OVER (PARTITION BY qid
-        |                            ORDER BY sim DESC, cid) AS rank
-        |  FROM s)
-        |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    // the sign matrix replayed from the salt: +1 when the first hex
-    // digit of md5('rp:rp1:i:j') is even; y_j = sum_i v_i*s_ij/sqrt(16)
-    // (round 6 absorbs cross-engine summation-order ulp). Mirrors the
-    // engine's ragged-vector convention explicitly: a non-null vector
-    // whose length != 64 projects to all zeros (SignedProject's
-    // degrade-to-zero rule), not to a partial sum over whatever
-    // indices exist — so a dimension-injecting sweep fails loudly as
-    // a semantic diff, never as a confusing value mismatch (ADVICE r14)
-    "q_random_projection" ->
-      """WITH s AS (SELECT i.i AS i, j.j AS j,
-        |    CASE WHEN (('0x' || substr(
-        |        md5('rp:rp1:' || i.i::VARCHAR || ':' || j.j::VARCHAR),
-        |        1, 1))::INT % 2) = 0
-        |      THEN 1.0 ELSE -1.0 END::DOUBLE AS sgn
-        |  FROM range(0, 64) i(i), range(0, 16) j(j)),
-        |d AS (SELECT vec_id, embedding, len(embedding) AS n
-        |      FROM embeddings WHERE embedding IS NOT NULL),
-        |v AS (SELECT vec_id, u.i - 1 AS i,
-        |        list_extract(embedding, u.i)::DOUBLE AS x
-        |      FROM d, unnest(range(1, len(embedding) + 1)) AS u(i)
-        |      WHERE n = 64),
-        |p AS (SELECT vec_id, j, sum(x * sgn) AS sy
-        |      FROM v JOIN s USING (i) GROUP BY vec_id, j)
-        |SELECT d.vec_id, jj.j::BIGINT AS j,
-        |       CASE WHEN d.n = 64 THEN round(p.sy / sqrt(16.0), 6)
-        |            ELSE 0.0 END AS y
-        |FROM d CROSS JOIN range(0, 16) jj(j)
-        |LEFT JOIN p ON p.vec_id = d.vec_id AND p.j = jj.j
-        |ORDER BY d.vec_id, jj.j""".stripMargin,
-
-    // same cosine convention as q_knn_bruteforce, plus the null-safe
-    // label-mismatch predicate (IS DISTINCT FROM)
-    "q_hard_negatives" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] v, label
-        |           FROM embeddings
-        |           WHERE list_dot_product(embedding::DOUBLE[],
-        |                                  embedding::DOUBLE[]) > 0),
-        |q AS (SELECT * FROM e WHERE vec_id < 5),
-        |s AS (SELECT q.vec_id qid, c.vec_id cid, c.label clabel,
-        |             list_cosine_similarity(q.v, c.v) sim
-        |      FROM q CROSS JOIN e c
-        |      WHERE c.vec_id <> q.vec_id
-        |        AND c.label IS DISTINCT FROM q.label)
-        |SELECT qid, rank, cid, clabel, round(sim, 4) + 0.0 AS sim FROM (
-        |  SELECT qid, cid, clabel, sim,
-        |         row_number() OVER (PARTITION BY qid
-        |                            ORDER BY sim DESC, cid) AS rank
-        |  FROM s)
-        |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    "q_knn_ivf" -> ivfSql,
-
-    // the knn-graph replay's edges (filter on the ROUNDED sim — the
-    // bit-exact cross-engine value) symmetrized and closed with the
-    // recursive-CTE machinery of the dedup-cluster oracles
-    "q_embedding_communities" ->
-      """WITH RECURSIVE ev AS (SELECT vec_id, embedding::DOUBLE[] v
-        |                     FROM embeddings),
-        |cent AS (SELECT vec_id AS cell, v AS cv FROM ev WHERE vec_id < 10),
-        |asg AS (SELECT vec_id, v, cell FROM (
-        |  SELECT ev.vec_id, ev.v, c.cell,
-        |         row_number() OVER (PARTITION BY ev.vec_id
-        |           ORDER BY list_cosine_similarity(ev.v, c.cv) DESC, c.cell)
-        |           rn
-        |  FROM ev CROSS JOIN cent c) WHERE rn = 1),
-        |probes AS (SELECT vec_id AS qid, v AS qv, cell FROM (
-        |  SELECT ev.vec_id, ev.v, c.cell,
-        |         row_number() OVER (PARTITION BY ev.vec_id
-        |           ORDER BY list_cosine_similarity(ev.v, c.cv) DESC, c.cell)
-        |           rn
-        |  FROM ev CROSS JOIN cent c) WHERE rn <= 2),
-        |sims AS (SELECT p.qid, a.vec_id AS cid,
-        |                list_cosine_similarity(p.qv, a.v) AS sim
-        |         FROM probes p JOIN asg a
-        |           ON a.cell = p.cell AND a.vec_id <> p.qid),
-        |g AS (SELECT qid AS d1, cid AS d2 FROM (
-        |        SELECT qid, cid, sim,
-        |               row_number() OVER (PARTITION BY qid
-        |                                  ORDER BY sim DESC, cid) AS rank
-        |        FROM sims)
-        |      WHERE rank <= 3
-        |        AND round(sim, 4) + 0.0 >= CAST(0.4 AS DOUBLE)),
-        |edges AS MATERIALIZED (SELECT d1 AS u, d2 AS v FROM g
-        |          UNION SELECT d2, d1 FROM g),
-        |reach(u, v) AS (
-        |  SELECT u, v FROM edges
-        |  UNION
-        |  SELECT r.u, e2.v FROM reach r JOIN edges e2 ON r.v = e2.u)
-        |SELECT u AS id, least(min(v), u) AS component,
-        |       least(min(v), u) = u AS keep
-        |FROM reach GROUP BY u ORDER BY id""".stripMargin,
-
-    // same assignment replay; probes rank the top-2 cells per vector
-    // and every vector is a query
-    "q_knn_graph" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings
-      |           WHERE list_dot_product(embedding::DOUBLE[],
-      |                                  embedding::DOUBLE[]) > 0),
-        |cent AS (SELECT vec_id AS cell, v AS cv FROM e WHERE vec_id < 10),
-        |asg AS (SELECT vec_id, v, cell FROM (
-        |  SELECT e.vec_id, e.v, c.cell,
-        |         row_number() OVER (PARTITION BY e.vec_id
-        |           ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell)
-        |           rn
-        |  FROM e CROSS JOIN cent c) WHERE rn = 1),
-        |probes AS (SELECT vec_id AS qid, v AS qv, cell FROM (
-        |  SELECT e.vec_id, e.v, c.cell,
-        |         row_number() OVER (PARTITION BY e.vec_id
-        |           ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell)
-        |           rn
-        |  FROM e CROSS JOIN cent c) WHERE rn <= 2),
-        |s AS (SELECT p.qid, a.vec_id AS cid,
-        |             list_cosine_similarity(p.qv, a.v) AS sim
-        |      FROM probes p JOIN asg a
-        |        ON a.cell = p.cell AND a.vec_id <> p.qid)
-        |SELECT qid, rank, cid, round(sim, 4) + 0.0 AS sim FROM (
-        |  SELECT qid, cid, sim,
-        |         row_number() OVER (PARTITION BY qid
-        |                            ORDER BY sim DESC, cid) AS rank
-        |  FROM s)
-        |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    // identical semantics through the persisted cell-partitioned index
-    "q_knn_ivf_indexed" -> ivfSql,
-
-    // same assignment as ivfSql (the index build), then the q_semdedup
-    // machinery at tau 0.4 over the RAW corpus — cent_sim carried from
-    // the argmax row (identical to the gate's one-dot recomputation
-    // against the assigned cell's centroid)
-    "q_semdedup_index" ->
-      """WITH RECURSIVE
-        |e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings
-        |      WHERE list_dot_product(embedding::DOUBLE[],
-        |                             embedding::DOUBLE[]) > 0),
-        |cent AS (SELECT vec_id AS cell, v AS cv FROM e WHERE vec_id < 10),
-        |asg AS MATERIALIZED (SELECT vec_id, v, cell,
-        |         round(sim, 6) + 0.0 AS cent_sim FROM (
-        |  SELECT e.vec_id, e.v, c.cell,
-        |         list_cosine_similarity(e.v, c.cv) AS sim,
-        |         row_number() OVER (PARTITION BY e.vec_id
-        |           ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell)
-        |           AS rn
-        |  FROM e CROSS JOIN cent c) WHERE rn = 1),
-        |p AS (SELECT a.vec_id AS d1, b.vec_id AS d2
-        |      FROM asg a JOIN asg b
-        |        ON a.cell = b.cell AND a.vec_id < b.vec_id
-        |      WHERE list_cosine_similarity(a.v, b.v) >= 0.4),
-        |edges AS MATERIALIZED (SELECT d1 AS u, d2 AS v FROM p
-        |          UNION SELECT d2, d1 FROM p),
-        |reach(u, v) AS (
-        |  SELECT u, v FROM edges
-        |  UNION
-        |  SELECT r.u, e2.v FROM reach r JOIN edges e2 ON r.v = e2.u),
-        |comp AS (SELECT u AS vec_id, least(min(v), u) AS component
-        |         FROM reach GROUP BY u)
-        |SELECT a.vec_id, a.cell, a.cent_sim,
-        |       coalesce(c.component, a.vec_id) AS component,
-        |       row_number() OVER (
-        |         PARTITION BY coalesce(c.component, a.vec_id)
-        |         ORDER BY a.cent_sim ASC, a.vec_id ASC) = 1 AS keep
-        |FROM asg a LEFT JOIN comp c USING (vec_id)
-        |ORDER BY vec_id""".stripMargin,
-
-    // fold-in equivalence: subset-build + extend must equal full-corpus
-    // IVF at the same centroids, so the oracle is ivfSql unchanged
-    "q_knn_ivf_extended" -> ivfSql,
-
-    // The trained-IVF gate emits exhaustive-probe (= exact) rows plus a
-    // deterministic recall certificate for the pruned nProbe=4 probe, so
-    // the oracle is brute force + TRUE: if recall ever drops below the
-    // 0.3 floor, Spark emits false and the hash compare fails.
-    "q_knn_ivf_trained" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings
-      |           WHERE list_dot_product(embedding::DOUBLE[],
-      |                                  embedding::DOUBLE[]) > 0),
-        |q AS (SELECT * FROM e WHERE vec_id < 5),
-        |s AS (SELECT q.vec_id qid, c.vec_id cid,
-        |             list_cosine_similarity(q.v, c.v) sim
-        |      FROM q CROSS JOIN e c WHERE c.vec_id <> q.vec_id)
-        |SELECT qid, rank, cid, round(sim, 4) + 0.0 AS sim,
-        |       TRUE AS recall_ok FROM (
-        |  SELECT qid, cid, sim,
-        |         row_number() OVER (PARTITION BY qid
-        |                            ORDER BY sim DESC, cid) AS rank
-        |  FROM s)
-        |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    // Exhaustive probe (nProbe = #cells) makes trained IVF exact, so the
-    // oracle is plain brute force — identical to q_knn_bruteforce.
-    "q_knn_ivf_trained_exact" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings
-      |           WHERE list_dot_product(embedding::DOUBLE[],
-      |                                  embedding::DOUBLE[]) > 0),
-        |q AS (SELECT * FROM e WHERE vec_id < 5),
-        |s AS (SELECT q.vec_id qid, c.vec_id cid,
-        |             list_cosine_similarity(q.v, c.v) sim
-        |      FROM q CROSS JOIN e c WHERE c.vec_id <> q.vec_id)
-        |SELECT qid, rank, cid, round(sim, 4) + 0.0 AS sim FROM (
-        |  SELECT qid, cid, sim,
-        |         row_number() OVER (PARTITION BY qid
-        |                            ORDER BY sim DESC, cid) AS rank
-        |  FROM s)
-        |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    // SQ8 gate: exact rows + deterministic recall certificate (same
-    // contract as q_knn_ivf_trained) — oracle is brute force + TRUE
-    "q_knn_sq8" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings
-      |           WHERE list_dot_product(embedding::DOUBLE[],
-      |                                  embedding::DOUBLE[]) > 0),
-        |q AS (SELECT * FROM e WHERE vec_id < 5),
-        |s AS (SELECT q.vec_id qid, c.vec_id cid,
-        |             list_cosine_similarity(q.v, c.v) sim
-        |      FROM q CROSS JOIN e c WHERE c.vec_id <> q.vec_id)
-        |SELECT qid, rank, cid, round(sim, 4) + 0.0 AS sim,
-        |       TRUE AS recall_ok FROM (
-        |  SELECT qid, cid, sim,
-        |         row_number() OVER (PARTITION BY qid
-        |                            ORDER BY sim DESC, cid) AS rank
-        |  FROM s)
-        |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    // same argmax (highest cosine, then smallest cell) replayed in SQL.
-    // A zero-norm vector lands in the cell -1 AUDIT bucket (the
-    // assignCells contract: its cosines are undefined, it matches no
-    // probe) — DuckDB's list_cosine_similarity returns -1.0 there,
-    // which would otherwise tie-assign it to cell 0
-    "q_embedding_clusters" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] v,
-        |                  list_dot_product(embedding::DOUBLE[],
-        |                                   embedding::DOUBLE[]) > 0 AS ok
-        |           FROM embeddings),
-        |c AS (SELECT vec_id AS cell, v AS cv FROM e WHERE vec_id < 10),
-        |r AS (SELECT e.vec_id, c.cell,
-        |             row_number() OVER (PARTITION BY e.vec_id
-        |               ORDER BY list_cosine_similarity(e.v, c.cv) DESC,
-        |                        c.cell) AS rn
-        |      FROM e CROSS JOIN c WHERE e.ok),
-        |a AS (SELECT vec_id, cell FROM r WHERE rn = 1
-        |      UNION ALL SELECT vec_id, -1 AS cell FROM e WHERE NOT ok)
-        |SELECT cell, count(*) AS n_vecs, min(vec_id) AS min_vec,
-        |       max(vec_id) AS max_vec
-        |FROM a GROUP BY cell ORDER BY cell""".stripMargin,
-
-    // exhaustive probe (all 10 cells) + refine=48 recovers exact
-    // brute-force top-3 (spec-pinned), so the same SQL oracles the
-    // persisted IVFADC path; the pruned-probe quality rides in the
-    // certificate column
-    "q_knn_ivfpq" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings
-      |           WHERE list_dot_product(embedding::DOUBLE[],
-      |                                  embedding::DOUBLE[]) > 0),
-        |q AS (SELECT * FROM e WHERE vec_id < 5),
-        |s AS (SELECT q.vec_id qid, c.vec_id cid,
-        |             list_cosine_similarity(q.v, c.v) sim
-        |      FROM q CROSS JOIN e c WHERE c.vec_id <> q.vec_id)
-        |SELECT qid, rank, cid, round(sim, 4) + 0.0 AS sim,
-        |       TRUE AS recall_ok FROM (
-        |  SELECT qid, cid, sim,
-        |         row_number() OVER (PARTITION BY qid
-        |                            ORDER BY sim DESC, cid) AS rank
-        |  FROM s)
-        |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    // like q_knn_sq8: the gate emits exact re-ranked rows + a TRUE
-    // certificate, so the brute-force SQL is the oracle
-    "q_knn_pq" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings
-      |           WHERE list_dot_product(embedding::DOUBLE[],
-      |                                  embedding::DOUBLE[]) > 0),
-        |q AS (SELECT * FROM e WHERE vec_id < 5),
-        |s AS (SELECT q.vec_id qid, c.vec_id cid,
-        |             list_cosine_similarity(q.v, c.v) sim
-        |      FROM q CROSS JOIN e c WHERE c.vec_id <> q.vec_id)
-        |SELECT qid, rank, cid, round(sim, 4) + 0.0 AS sim,
-        |       TRUE AS recall_ok FROM (
-        |  SELECT qid, cid, sim,
-        |         row_number() OVER (PARTITION BY qid
-        |                            ORDER BY sim DESC, cid) AS rank
-        |  FROM s)
-        |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    // The 4x48 band budget has measured recall 1.0 (exact top-3 equality)
-    // at every test scale with deterministic planes, so brute force is a
-    // valid oracle for the gate config.
-    "q_knn_lsh" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings
-      |           WHERE list_dot_product(embedding::DOUBLE[],
-      |                                  embedding::DOUBLE[]) > 0),
-        |q AS (SELECT * FROM e WHERE vec_id < 5),
-        |s AS (SELECT q.vec_id qid, c.vec_id cid,
-        |             list_cosine_similarity(q.v, c.v) sim
-        |      FROM q CROSS JOIN e c WHERE c.vec_id <> q.vec_id)
-        |SELECT qid, rank, cid, round(sim, 4) + 0.0 AS sim FROM (
-        |  SELECT qid, cid, sim,
-        |         row_number() OVER (PARTITION BY qid
-        |                            ORDER BY sim DESC, cid) AS rank
-        |  FROM s)
-        |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    // RP→rerank gate: the gate emits exact re-ranked rows over the
-    // PLANTED corpus (each query's three shifted copies reproduced
-    // verbatim, the q_dedup_embedding_lsh recipe) + a TRUE recall
-    // certificate, so brute force over the same augmentation is the
-    // oracle; zero-norm rows drop on both engines
-    "q_knn_rp" ->
-      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v
-        |              FROM embeddings),
-        |aug AS (
-        |  SELECT vec_id, v FROM base
-        |  UNION ALL
-        |  SELECT vec_id + 100000, list_transform(v, x -> x + 0.06)
-        |  FROM base WHERE vec_id < 5
-        |  UNION ALL
-        |  SELECT vec_id + 200000, list_transform(v, x -> x + 0.08)
-        |  FROM base WHERE vec_id < 5
-        |  UNION ALL
-        |  SELECT vec_id + 300000, list_transform(v, x -> x + 0.10)
-        |  FROM base WHERE vec_id < 5),
-        |e AS (SELECT vec_id, v FROM aug
-        |      WHERE list_dot_product(v, v) > 0),
-        |q AS (SELECT * FROM e WHERE vec_id < 5),
-        |s AS (SELECT q.vec_id qid, c.vec_id cid,
-        |             list_cosine_similarity(q.v, c.v) sim
-        |      FROM q CROSS JOIN e c WHERE c.vec_id <> q.vec_id)
-        |SELECT qid, rank, cid, round(sim, 4) + 0.0 AS sim,
-        |       TRUE AS recall_ok FROM (
-        |  SELECT qid, cid, sim,
-        |         row_number() OVER (PARTITION BY qid
-        |                            ORDER BY sim DESC, cid) AS rank
-        |  FROM s)
-        |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-
-    "q_skew_salted" ->
-      """SELECT user_id, round(sum(value), 4) AS sv, count(*) AS n
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // encode(), not text::BLOB: the cast refuses non-ASCII strings
-    // (DuckDB requires hex escapes), encode() is the UTF-8 byte view
-    "q_multimodal_meta" ->
-      """SELECT doc_id, octet_length(encode(text))::BIGINT AS n_bytes,
-        |       md5(text) AS content_hash
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // a NULL payload is an EMPTY payload (the byteFeatures contract:
-    // zero bytes, md5 of nothing, one empty frame) — coalesce mirrors
-    // it. The payload is the UTF-8 BYTE stream (unicode(ch) reads CODE
-    // POINTS — 12288 for an ideographic space where the payload has
-    // bytes 227/128/128 — hence the encoding arithmetic below)
-    "q_multimodal_features" ->
-      """WITH d AS (SELECT doc_id, coalesce(text, '') AS text,
-        |                  octet_length(encode(coalesce(text, ''))) AS n
-        |           FROM documents),
-        |-- linear codepoint rows: a codepoint's UTF-8 byte SUM and byte
-        |-- COUNT are pure integer functions of its value (RFC 3629
-        |-- prefix arithmetic), so the byte mean needs no hex expansion
-        |-- at all — the per-byte substr(h, 2i-1) form re-scanned the
-        |-- hex string head per byte (quadratic in document bytes)
-        |-- ZIPPED unnest over PRECOMPUTED list/length COLUMNS: both a
-        |-- lone unnest of a multi-million-char list and an unnest whose
-        |-- argument is an inline expression re-evaluate per output
-        |-- batch (each measured ~65 s at the 10 MB sweep); the zipped
-        |-- column form is linear (~1 s)
-        |dc AS (SELECT doc_id, length(text) AS nc,
-        |              string_split(text, '') AS chs
-        |       FROM d WHERE n > 0),
-        |cp AS (SELECT doc_id, unicode(ch)::BIGINT AS c
-        |       FROM (SELECT doc_id, unnest(range(1, nc + 1)) AS p,
-        |                    unnest(chs) AS ch
-        |             FROM dc)),
-        |m AS (SELECT doc_id,
-        |        sum(CASE
-        |          WHEN c < 128 THEN c
-        |          WHEN c < 2048 THEN 320 + c // 64 + c % 64
-        |          WHEN c < 65536
-        |            THEN 480 + c // 4096 + (c // 64) % 64 + c % 64
-        |          ELSE 624 + c // 262144 + (c // 4096) % 64
-        |               + (c // 64) % 64 + c % 64 END)::DOUBLE /
-        |        sum(CASE WHEN c < 128 THEN 1 WHEN c < 2048 THEN 2
-        |                 WHEN c < 65536 THEN 3 ELSE 4 END)::DOUBLE
-        |          AS mean_byte
-        |      FROM cp GROUP BY doc_id)
-        |SELECT d.doc_id AS id, d.n::BIGINT AS n_bytes,
-        |       md5(d.text) AS content_hash,
-        |       coalesce(m.mean_byte, 0.0) AS mean_byte,
-        |       least(greatest((d.n + 63) // 64, 1), 32)::BIGINT AS frame_count
-        |FROM d LEFT JOIN m USING (doc_id) ORDER BY id""".stripMargin,
-
-    // decoded values vs the fixture's draw-time ground truth: the oracle
-    // never decodes — it reads the expected_* columns the generator
-    // computed from the pixel values it set, so agreement proves the
-    // Spark side actually parsed the image bytes
-    "q_multimodal_decode" ->
-      s"""SELECT id, expected_decoded AS decoded,
-        |       expected_width AS width, expected_height AS height,
-        |       expected_mean AS mean_pixel
-        |FROM read_parquet('$imageFixturePath/*.parquet')
-        |ORDER BY id""".stripMargin,
-
-    // the exact-integer dimension contract applied to the draw-time
-    // dims: longer side pinned to 10, floor division for the other,
-    // no-upscale passthrough; corrupt rows stay undecodable
-    "q_multimodal_resize" ->
-      s"""SELECT id, expected_decoded AS decoded,
-        |  CASE WHEN NOT expected_decoded THEN 0
-        |       WHEN greatest(expected_width, expected_height) <= 10
-        |         THEN expected_width
-        |       WHEN expected_width >= expected_height THEN 10
-        |       ELSE greatest(1, (expected_width * 10) // expected_height)
-        |  END AS width,
-        |  CASE WHEN NOT expected_decoded THEN 0
-        |       WHEN greatest(expected_width, expected_height) <= 10
-        |         THEN expected_height
-        |       WHEN expected_width >= expected_height
-        |         THEN greatest(1, (expected_height * 10) // expected_width)
-        |       ELSE 10
-        |  END AS height
-        |FROM read_parquet('$imageFixturePath/*.parquet')
-        |ORDER BY id""".stripMargin,
-
-    // like q_multimodal_decode: the oracle never decodes — it reads the
-    // expected_* columns the generator computed from the samples it
-    // wrote, so agreement proves the Spark side parsed the WAV bytes
-    "q_multimodal_audio" ->
-      s"""SELECT id, expected_decoded AS decoded,
-        |       expected_channels AS channels,
-        |       expected_sample_rate AS sample_rate,
-        |       expected_frames AS frames, expected_rms AS rms
-        |FROM read_parquet('$audioFixturePath/*.parquet')
-        |ORDER BY id""".stripMargin,
-
-    // plain scan of the synthesis-time window-truth table
-    "q_multimodal_audio_frames" ->
-      s"""SELECT id, frame, expected_samples AS n_samples,
-        |       expected_rms AS rms
-        |FROM read_parquet('$audioFramesTruthPath/*.parquet')
-        |ORDER BY id, frame""".stripMargin,
-
-    // the oracle is a plain scan of the draw-time truth table — the
-    // corrupt payloads (zero expected frames) simply have no truth rows
-    "q_multimodal_gif" ->
-      s"""SELECT id, frame, expected_width AS width,
-        |       expected_height AS height, expected_mean AS mean_pixel
-        |FROM read_parquet('$gifTruthPath/*.parquet')
-        |ORDER BY id, frame""".stripMargin,
-
-    // the oracle is a plain scan of the write-time truth table — the
-    // corrupt payloads (20-22) have no rows; id 23 keeps its track rows
-    "q_multimodal_video" ->
-      s"""SELECT id, track, handler, timescale, duration_units,
-        |       width, height, n_samples, n_keyframes, sample_bytes
-        |FROM read_parquet('$videoTracksTruthPath/*.parquet')
-        |ORDER BY id, track""".stripMargin,
-
-    "q_multimodal_video_samples" ->
-      s"""SELECT id, track, sample, "offset", size, md5
-        |FROM read_parquet('$videoSamplesTruthPath/*.parquet')
-        |ORDER BY id, track, sample""".stripMargin,
-
-    // plain scan of the generation-time per-frame truth: container rows
-    // from the write plan, pixel columns from decoding the exact sample
-    // bytes as written (JPEG is lossy — see MjpegFixture provenance)
-    "q_multimodal_mjpeg" ->
-      s"""SELECT id, track, sample, is_key, decoded, width, height,
-        |       mean_pixel, raster_md5
-        |FROM read_parquet('$mjpegTruthPath/*.parquet')
-        |ORDER BY id, track, sample""".stripMargin,
-
-    // plain scan of the generation-time per-frame truth; I420 is
-    // LOSSLESS, so unlike mjpeg the decode must match bit-exactly
-    // (truth mean/md5 come from an independent from-the-spec BT.601
-    // conversion in the fixture generator)
-    "q_multimodal_raw" ->
-      s"""SELECT id, track, sample, is_key, decoded, width, height,
-        |       mean_pixel, raster_md5
-        |FROM read_parquet('$rawVideoTruthPath/*.parquet')
-        |ORDER BY id, track, sample""".stripMargin,
-
-    // NULL payload ≡ empty payload here too: one empty frame. Frames
-    // slice the UTF-8 BYTE stream (a 64-byte cut can land mid-character
-    // — the bytes are then not a valid STRING, and this DuckDB has no
-    // md5(BLOB)), so both sides hash the frame's HEX encoding: substr
-    // on the hex stream at 2× offsets is exact byte slicing, and hex is
-    // injective so md5(hex) certifies the same content md5(bytes) would
-    // linear digit rows (the zip-unnest-precomputed-columns discipline):
-    // hex digit p belongs to frame (p-1)//128; ordered string_agg
-    // rebuilds each frame's hex slice. The per-frame substr(h, i*128+1)
-    // form re-scanned the hex string head per frame — measured 713 s on
-    // the 10 MB long-document sweep vs ~15 s for this form.
-    "q_multimodal_frames" ->
-      """WITH d AS (SELECT doc_id,
-        |                  hex(encode(coalesce(text, ''))) AS h,
-        |                  octet_length(encode(coalesce(text, ''))) AS n
-        |           FROM documents),
-        |dg AS (SELECT doc_id, 2 * n AS m, string_split(h, '') AS gs
-        |       FROM d WHERE n > 0),
-        |r AS (SELECT doc_id, unnest(range(1, m + 1)) AS p,
-        |             unnest(gs) AS g
-        |      FROM dg),
-        |f AS (SELECT doc_id, ((p - 1) // 128)::BIGINT AS frame,
-        |             string_agg(g, '' ORDER BY p) AS fh
-        |      FROM r GROUP BY doc_id, ((p - 1) // 128))
-        |SELECT doc_id AS id, frame, (length(fh) // 2)::BIGINT AS n_bytes,
-        |       md5(fh) AS frame_hash
-        |FROM f WHERE frame % 2 = 0
-        |UNION ALL
-        |SELECT doc_id, 0::BIGINT, 0::BIGINT, md5('')
-        |FROM d WHERE n = 0
-        |ORDER BY id, frame""".stripMargin,
-
-    "q_dsl_tumbling" ->
-      """SELECT CAST(user_id AS VARCHAR) AS k, event_id AS emit_seq,
-        |       round(s, 4) AS result FROM (
-        |  SELECT user_id, event_id,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS rn,
-        |         sum(value) OVER (PARTITION BY user_id ORDER BY event_id
-        |                          ROWS BETWEEN 9 PRECEDING AND CURRENT ROW) AS s
-        |  FROM events)
-        |WHERE rn % 10 = 0 ORDER BY k, emit_seq""".stripMargin,
-
-    "q_dsl_avg_int" ->
-      """SELECT CAST(user_id AS VARCHAR) AS k, event_id AS emit_seq,
-        |       (s // 10)::BIGINT AS result FROM (
-        |  SELECT user_id, event_id,
-        |         row_number() OVER (PARTITION BY user_id
-        |                            ORDER BY event_id) AS rn,
-        |         sum(trunc(value)::BIGINT) OVER (
-        |           PARTITION BY user_id ORDER BY event_id
-        |           ROWS BETWEEN 9 PRECEDING AND CURRENT ROW) AS s
-        |  FROM events)
-        |WHERE rn % 10 = 0 ORDER BY k, emit_seq""".stripMargin,
-
-    "q_dsl_filter" ->
-      """SELECT event_id, v FROM (
-        |  SELECT event_id, CASE WHEN value > 50 THEN 0.0 ELSE value END AS v
-        |  FROM events) WHERE v <> 0.0 ORDER BY event_id""".stripMargin,
-
-    "q_dsl_time_agg" ->
-      """SELECT k, emit_seq, round(s, 4) AS result FROM (
-        |  SELECT event_type AS k, event_id AS emit_seq,
-        |         row_number() OVER (PARTITION BY event_type,
-        |                            date_trunc('hour', ts)
-        |                            ORDER BY event_id DESC) AS rdesc,
-        |         sum(value) OVER (PARTITION BY event_type,
-        |                          date_trunc('hour', ts)) AS s
-        |  FROM events)
-        |WHERE rdesc = 1 ORDER BY k, emit_seq""".stripMargin
-  )
+  def dropCachedIndexes(spark: SparkSession): Unit =
+    GateSupport.dropMemos(spark)
 }

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * the index. */
 case class ChunkIndex(name: String, path: String, numBuckets: Int,
                       window: Int, prime: Int, modBits: Int,
-                      divisor: Int, residue: Int) {
+                      divisor: Int, residue: Int) extends PersistedIndex {
   def chunksTable: String = s"${name}_chunks"
+  def tables: Seq[String] = Seq(chunksTable)
 }
 
 /** Content-defined chunking (CDC) — rolling-hash boundaries over
@@ -409,7 +410,7 @@ object Chunking {
   /** Compact a many-times-extended chunk index to one file per bucket
     * under a NEW name/path — blue/green, same contract as
     * [[Dedup.compactIndex]]: old index stays readable until the caller
-    * [[dropChunkIndex]]es it. */
+    * [[PersistedIndex.drop]]s it. */
   def compactChunkIndex(spark: SparkSession, idx: ChunkIndex,
                         name: String, path: String): ChunkIndex = {
     require(name != idx.name && path != idx.path,
@@ -421,9 +422,4 @@ object Chunking {
       "chunk_hash")
     out
   }
-
-  /** Drop a chunk index: catalog entry + backing directory — the
-    * cutover end of the blue/green contract. */
-  def dropChunkIndex(spark: SparkSession, idx: ChunkIndex): Unit =
-    IndexAdmin.dropTablesAndPath(spark, Seq(idx.chunksTable), idx.path)
 }

@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
   * table, so no side state can drift from the counts. The doc ledger
   * backs the disjoint-ids guard. */
 case class NgramIndex(name: String, path: String, numBuckets: Int,
-                      order: Int) {
+                      order: Int) extends PersistedIndex {
   def gramsTable(j: Int): String = s"${name}_g$j"
   def docsTable: String = s"${name}_docs"
-  def allTables: Seq[String] = (1 to order).map(gramsTable) :+ docsTable
+  def tables: Seq[String] = (1 to order).map(gramsTable) :+ docsTable
 }
 
 /** Corpus-level frequency and cardinality statistics for training-data
@@ -533,7 +533,7 @@ object CorpusStats {
     * consumer reads the reused exchange.
     *
     * Join shape (r19 restructure, guide §2.3/§2.4 — equivalence pinned
-    * by NgramTailEquivalenceSpec against [[ngramScoreTailFromPosSeq]]):
+    * by NgramTailEquivalenceSpec against the sequential reference):
     * the wide position row (doc, p, g1..g_order) is UNPIVOTED to one
     * slim (src?, doc, p, j, g) row per available order (g_j is NULL
     * iff p < j — those rows join to nothing by construction, so they
@@ -586,10 +586,13 @@ object CorpusStats {
 
   /** The backoff-branch replay over a wide (src?, doc, p, c1..c_order)
     * per-position frame — shared by the unified tail above and the
-    * sequential reference below so the model arithmetic exists once. */
-  private def ngramBackoffFromWide(wide: DataFrame, nv: DataFrame,
-                                   order: Int, alpha: Double, k: Double,
-                                   srcCol: Option[String]): DataFrame = {
+    * sequential reference in NgramTailEquivalenceSpec so the model
+    * arithmetic exists once. */
+  private[graft] def ngramBackoffFromWide(wide: DataFrame, nv: DataFrame,
+                                          order: Int, alpha: Double,
+                                          k: Double,
+                                          srcCol: Option[String])
+      : DataFrame = {
     val apows = alphaPowers(alpha, order - 1)
     // exponent ∈ {0..order-1} selects its precomputed literal — the
     // conditions are disjoint, so the chain order is immaterial
@@ -636,30 +639,6 @@ object CorpusStats {
       .agg(count(lit(1)).as("n_tokens"), sum("__oov").as("n_oov"),
         sum("__backed").as("n_backed"),
         round(avg(col("__lp")), 4).as("avg_lp"))
-  }
-
-  /** The pre-r19 sequential tail — `order` left joins of the wide
-    * position row against per-order count frames (g\$j -> c\$j,
-    * optionally (src, g\$j)-keyed). Kept as the reference
-    * implementation NgramTailEquivalenceSpec pins the unified
-    * [[ngramScoreTailFromPos]] against; not on any query path. */
-  private[graft] def ngramScoreTailFromPosSeq(counts: Seq[DataFrame],
-                                              nv: DataFrame, pos: DataFrame,
-                                              order: Int, alpha: Double,
-                                              k: Double,
-                                              srcCol: Option[String])
-      : DataFrame = {
-    require(alpha > 0.0 && alpha <= 1.0,
-      s"backoff alpha must be in (0, 1], got $alpha")
-    require(k > 0.0, s"smoothing k must be positive, got $k")
-    val srcCols = srcCol.map(_ => "src").toSeq
-    val joined = counts.zipWithIndex.foldLeft(pos) { case (df, (c, i)) =>
-      df.join(c, srcCols :+ s"g${i + 1}", "left_outer")
-    }
-    ngramBackoffFromWide(joined.select(
-      (srcCols :+ "doc").map(col) ++ Seq(col("p")) ++
-        (1 to order).map(j => col(s"c$j")): _*),
-      nv, order, alpha, k, srcCol)
   }
 
   /** [[ngramLogProbAgainst]] per SOURCE — the specialist models
@@ -794,9 +773,6 @@ object CorpusStats {
       out.docsTable, s"$path/${out.docsTable}", idx.numBuckets, "doc_id")
     out
   }
-
-  def dropNgramIndex(spark: SparkSession, idx: NgramIndex): Unit =
-    IndexAdmin.dropTablesAndPath(spark, idx.allTables, idx.path)
 
   /** BM25 ranked retrieval: for each named query, the top-`k` documents
     * by the Robertson/Lucene BM25 score

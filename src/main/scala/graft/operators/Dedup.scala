@@ -12,9 +12,11 @@ import graft.functions.TextFunctions
   * [[Dedup.pairsAgainstIndex]] can never probe with mismatched
   * signatures. */
 case class DedupIndex(name: String, path: String, n: Int, numPerms: Int,
-                      rowsPerBand: Int, numBuckets: Int) {
+                      rowsPerBand: Int, numBuckets: Int)
+    extends PersistedIndex {
   def bandsTable: String = s"${name}_bands"
   def shinglesTable: String = s"${name}_sh"
+  def tables: Seq[String] = Seq(bandsTable, shinglesTable)
 }
 
 /** Handle to a persisted exact-dedup fingerprint index (see
@@ -22,8 +24,10 @@ case class DedupIndex(name: String, path: String, n: Int, numPerms: Int,
   * (fp, keep_id), bucketed+sorted by fp — the one-row-per-fp invariant
   * is load-bearing for the probe's outer join and is preserved by
   * [[Dedup.extendExactIndex]]'s anti-join append. */
-case class ExactIndex(name: String, path: String, numBuckets: Int) {
+case class ExactIndex(name: String, path: String, numBuckets: Int)
+    extends PersistedIndex {
   def fpTable: String = s"${name}_fp"
+  def tables: Seq[String] = Seq(fpTable)
 }
 
 /** Handle to a persisted corpus line-frequency index (see
@@ -35,9 +39,11 @@ case class ExactIndex(name: String, path: String, numBuckets: Int) {
   * lfp — no keep-first metadata persists, because the probe
   * deliberately does not re-litigate history), plus the ingested-doc
   * ledger `(doc_id)` backing that guard. */
-case class LineIndex(name: String, path: String, numBuckets: Int) {
+case class LineIndex(name: String, path: String, numBuckets: Int)
+    extends PersistedIndex {
   def freqTable: String = s"${name}_lf"
   def docsTable: String = s"${name}_docs"
+  def tables: Seq[String] = Seq(freqTable, docsTable)
 }
 
 /** Handle to a persisted substring-dedup GRAM index (see
@@ -50,9 +56,10 @@ case class LineIndex(name: String, path: String, numBuckets: Int) {
   * probe can never gram at a different grain than the index. Text
   * never persists — 16-byte hashes and counts only. */
 case class SpanIndex(name: String, path: String, numBuckets: Int,
-                     minLen: Int) {
+                     minLen: Int) extends PersistedIndex {
   def freqTable: String = s"${name}_gf"
   def docsTable: String = s"${name}_docs"
+  def tables: Seq[String] = Seq(freqTable, docsTable)
 }
 
 /** Handle to a persisted embedding near-dup index (see
@@ -63,9 +70,11 @@ case class SpanIndex(name: String, path: String, numBuckets: Int,
   * so probes can never band differently than the index. */
 case class EmbeddingIndex(name: String, path: String, dim: Int,
                           bitsPerBand: Int, numBands: Int,
-                          threshold: Double, numBuckets: Int) {
+                          threshold: Double, numBuckets: Int)
+    extends PersistedIndex {
   def bandsTable: String = s"${name}_bands"
   def vectorsTable: String = s"${name}_vec"
+  def tables: Seq[String] = Seq(bandsTable, vectorsTable)
 }
 
 /** Document deduplication for large-scale training-data pipelines.
@@ -447,11 +456,6 @@ object Dedup {
       s"$path/${out.docsTable}", idx.numBuckets, "doc_id")
     out
   }
-
-  def dropSpanIndex(spark: org.apache.spark.sql.SparkSession,
-                    idx: SpanIndex): Unit =
-    IndexAdmin.dropTablesAndPath(spark,
-      Seq(idx.freqTable, idx.docsTable), idx.path)
 
   /** Maximal duplicated TOKEN spans — [[duplicateSpans]] at the grain
     * Lee et al. 2021 actually use (repeated spans of >= `minTokens`
@@ -926,27 +930,6 @@ object Dedup {
       "doc")
     out
   }
-
-  /** Drop a MinHash dedup index: catalog entries + backing directory.
-    * The cutover end of the blue/green contract — after
-    * [[compactIndex]] returns the new handle and probes have drained
-    * off the old generation, this removes it completely (no orphaned
-    * external tables or paths). */
-  def dropIndex(spark: org.apache.spark.sql.SparkSession,
-                idx: DedupIndex): Unit =
-    IndexAdmin.dropTablesAndPath(spark,
-      Seq(idx.bandsTable, idx.shinglesTable), idx.path)
-
-  /** Drop an exact-fingerprint index — see [[dropIndex]]. */
-  def dropExactIndex(spark: org.apache.spark.sql.SparkSession,
-                     idx: ExactIndex): Unit =
-    IndexAdmin.dropTablesAndPath(spark, Seq(idx.fpTable), idx.path)
-
-  /** Drop an embedding LSH index — see [[dropIndex]]. */
-  def dropEmbeddingIndex(spark: org.apache.spark.sql.SparkSession,
-                         idx: EmbeddingIndex): Unit =
-    IndexAdmin.dropTablesAndPath(spark,
-      Seq(idx.bandsTable, idx.vectorsTable), idx.path)
 
   /** Compact an extended exact-fingerprint index — same blue/green
     * contract as [[compactIndex]]. */
@@ -1895,9 +1878,4 @@ object Dedup {
       s"$path/${out.docsTable}", idx.numBuckets, "doc_id")
     out
   }
-
-  def dropLineIndex(spark: org.apache.spark.sql.SparkSession,
-                    idx: LineIndex): Unit =
-    IndexAdmin.dropTablesAndPath(spark,
-      Seq(idx.freqTable, idx.docsTable), idx.path)
 }

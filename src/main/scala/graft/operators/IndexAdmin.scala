@@ -16,6 +16,20 @@ import org.apache.spark.sql.functions.{broadcast, col}
   * deliberate step. Single-writer contract as for `extend*`: drop only
   * after every probe of the old generation has drained.
   */
+/** A persisted index handle: its catalog tables and the directory that
+  * backs them. */
+trait PersistedIndex {
+  def path: String
+  def tables: Seq[String]
+
+  /** Drop the catalog entries and delete the backing directory — the
+    * cutover end of the blue/green contract: after a compaction returns
+    * the new handle and probes have drained off the old generation, this
+    * removes it completely (no orphaned external tables or paths). */
+  def drop(spark: SparkSession): Unit =
+    IndexAdmin.dropTablesAndPath(spark, tables, path)
+}
+
 private[graft] object IndexAdmin {
 
   def dropTablesAndPath(spark: SparkSession, tables: Seq[String],

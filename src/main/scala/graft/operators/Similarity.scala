@@ -10,9 +10,10 @@ import graft.functions.VectorFunctions._
   * PARTITIONED by `cell` (one directory per cell, so a probe's
   * `cell IN (...)` predicate prunes to exactly the probed partitions)
   * plus the centroid table the cells were assigned against. */
-case class IvfIndex(name: String, path: String) {
+case class IvfIndex(name: String, path: String) extends PersistedIndex {
   def corpusTable: String = s"${name}_cells"
   def centroidsTable: String = s"${name}_cents"
+  def tables: Seq[String] = Seq(corpusTable, centroidsTable)
 }
 
 /** Handle to a persisted IVF-PQ index (see
@@ -24,10 +25,11 @@ case class IvfIndex(name: String, path: String) {
   * the ADC scan selects only (cid, codes, dnorm) and parquet never
   * reads the vector column; the exact refine reads vectors only for
   * the top-R candidate ids. */
-case class IvfPqIndex(name: String, path: String) {
+case class IvfPqIndex(name: String, path: String) extends PersistedIndex {
   def corpusTable: String = s"${name}_pqc"
   def centroidsTable: String = s"${name}_pqcent"
   def codebookTable: String = s"${name}_pqcb"
+  def tables: Seq[String] = Seq(corpusTable, centroidsTable, codebookTable)
 }
 
 /** Approximate / exact nearest-neighbor search over an embedding column.
@@ -319,14 +321,6 @@ object Similarity {
       .format("parquet").saveAsTable(out.corpusTable)
     out
   }
-
-  /** Drop a persisted IVF index: catalog entries + backing directory —
-    * the cutover end of the blue/green contract ([[compactIvfIndex]]).
-    * Drop only after probes have drained off the old generation
-    * (single-writer contract, as for [[extendIvfIndex]]). */
-  def dropIvfIndex(spark: SparkSession, idx: IvfIndex): Unit =
-    IndexAdmin.dropTablesAndPath(spark,
-      Seq(idx.corpusTable, idx.centroidsTable), idx.path)
 
   /** IVF ANN against a persisted index: identical results to [[ivfKnn]]
     * over the same centroids (spec-pinned), but the corpus scan is
@@ -1091,11 +1085,6 @@ object Similarity {
       .format("parquet").saveAsTable(out.corpusTable)
     out
   }
-
-  /** Drop an IVF-PQ index — see [[dropIvfIndex]]. */
-  def dropIvfPqIndex(spark: SparkSession, idx: IvfPqIndex): Unit =
-    IndexAdmin.dropTablesAndPath(spark,
-      Seq(idx.corpusTable, idx.centroidsTable, idx.codebookTable), idx.path)
 
   /** Rehydrate the PQ codebook from the index's own table. */
   def loadPqCodebook(spark: SparkSession, idx: IvfPqIndex): PqCodebook = {

@@ -2,15 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Tripwire for the intentionally-duplicated oracle SQL fragments: the
-  * quality-score formula and the Gopher rule thresholds are inlined in
-  * several oracles (q_quality, q_quality_gopher, q_calibration, the
-  * capstones) because splicing byte-exact fragments across copies with
-  * different indentation would risk perturbing driver-green strings.
-  * The price of duplication is drift — someone updates one copy and
-  * silently leaves the others validating a stale formula — so this
-  * spec asserts every copy still carries the same
-  * whitespace-normalized text. No Spark session needed. */
+/** Tripwire for the oracle SQL fragments several gates share: the
+  * quality-score formula, the Gopher rule thresholds and the n-token
+  * line regrouping. Each is built once in graft.gates.GateSupport and
+  * interpolated into every carrier; this spec asserts every rendered
+  * oracle still carries the same whitespace-normalized text, and pins
+  * the carrier counts so a new hand-written copy registers here too.
+  * No Spark session needed. */
 class OracleConsistencySpec extends AnyFunSuite {
 
   private def norm(s: String): String = s.replaceAll("\\s+", " ")

@@ -15,16 +15,19 @@ class DslLoaderSpec extends SparkSpec {
 
   test("file:// loading with gzip sniffing") {
     val plain = java.io.File.createTempFile("app", ".json")
-    java.nio.file.Files.writeString(plain.toPath, appJson)
-    assert(Dsl.loadApp("file://" + plain.getAbsolutePath)
-      .pipelines.contains("a"))
-
     val gz = java.io.File.createTempFile("app", ".json.gz")
-    val out = new java.util.zip.GZIPOutputStream(
-      new java.io.FileOutputStream(gz))
-    out.write(appJson.getBytes("UTF-8")); out.close()
-    // no .gz hint given — magic-byte sniffing must detect it
-    assert(Dsl.loadApp(gz.getAbsolutePath).pipelines.contains("a"))
+    try {
+      java.nio.file.Files.writeString(plain.toPath, appJson)
+      assert(Dsl.loadApp("file://" + plain.getAbsolutePath)
+        .pipelines.contains("a"))
+
+      val out = new java.util.zip.GZIPOutputStream(
+        new java.io.FileOutputStream(gz))
+      out.write(appJson.getBytes("UTF-8")); out.close()
+      // no .gz hint given — magic-byte sniffing must detect it
+      assert(Dsl.loadApp(gz.getAbsolutePath).pipelines.contains("a"))
+    } finally Seq(plain, gz).foreach(f =>
+      graft.util.FsUtil.deleteRecursively(f.toPath))
   }
 
   test("base64://  (the reference's flogo-compressed wire format)") {

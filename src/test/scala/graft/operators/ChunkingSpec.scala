@@ -163,11 +163,11 @@ class ChunkingSpec extends SparkSpec {
           .listFiles().count(f => f.getName.startsWith("part-"))
         assert(files == idx.numBuckets,
           s"expected 1 file per bucket, got $files")
-      } finally Chunking.dropChunkIndex(spark, compacted)
+      } finally compacted.drop(spark)
       assert(!spark.catalog.tableExists(compacted.chunksTable))
       assert(!new java.io.File(s"$tmp/green").exists())
     } finally {
-      Chunking.dropChunkIndex(spark, idx)
+      idx.drop(spark)
       graft.util.FsUtil.deleteRecursively(java.nio.file.Paths.get(tmp))
     }
     assert(!spark.catalog.tableExists(idx.chunksTable))
@@ -235,7 +235,7 @@ class ChunkingSpec extends SparkSpec {
       assert(seenById.filter(_._1 < 800000).values
         .exists(_.exists(_.last == false)))
     } finally {
-      Chunking.dropChunkIndex(spark, idx)
+      idx.drop(spark)
       graft.util.FsUtil.deleteRecursively(java.nio.file.Paths.get(tmp))
     }
   }
@@ -289,7 +289,7 @@ class ChunkingSpec extends SparkSpec {
       assert(got.filter(_._1 == 900003L).forall(_._3),
         "re-crawled chunks must be seen in the index")
     } finally {
-      Chunking.dropChunkIndex(spark, idx)
+      idx.drop(spark)
       graft.util.FsUtil.deleteRecursively(java.nio.file.Paths.get(tmp))
     }
   }

@@ -543,7 +543,7 @@ class DedupSpec extends SparkSpec {
         s"live-folded duplicate should be dropped: ${got2.toSeq}")
     } finally {
       q.stop()
-      s.sql(s"DROP TABLE IF EXISTS ${idx.fpTable}")
+      idx.drop(s)
     }
   }
 
@@ -762,7 +762,7 @@ class DedupSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getBoolean(5))).sortBy(_._1)
       assert(viaIndex.toSeq == direct.toSeq,
         "index-fed fraction mode must equal the direct operator")
-    } finally Similarity.dropIvfIndex(s, idx)
+    } finally idx.drop(s)
   }
 
   test("semDedupFromIndex: the persisted-IVF path equals the direct " +
@@ -784,7 +784,7 @@ class DedupSpec extends SparkSpec {
       assert(indexed == direct,
         "index-fed semDedup must equal the direct operator")
     } finally {
-      Similarity.dropIvfIndex(s, idx)
+      idx.drop(s)
     }
   }
 }

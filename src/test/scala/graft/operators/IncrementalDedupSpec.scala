@@ -40,10 +40,7 @@ class IncrementalDedupSpec extends SparkSpec {
       // the split actually exercises the cross path at this sf
       assert(incr.exists(p => p._1 % 4 != 3 || p._2 % 4 != 3),
         "no corpus x delta pair in the vector — split is vacuous")
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS ${idx.bandsTable}")
-      s.sql(s"DROP TABLE IF EXISTS ${idx.shinglesTable}")
-    }
+    } finally idx.drop(s)
   }
 
   test("incremental pair verdicts: corpus wins, smaller delta id wins") {
@@ -82,10 +79,7 @@ class IncrementalDedupSpec extends SparkSpec {
         .takeWhile(l => !l.contains("Join")).mkString("\n")
       assert(!above.contains("Exchange"),
         s"Exchange above the index scan:\n$plan")
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS ${idx.bandsTable}")
-      s.sql(s"DROP TABLE IF EXISTS ${idx.shinglesTable}")
-    }
+    } finally idx.drop(s)
   }
 
   test("materialized-signature batch dedup equals the in-memory operator") {
@@ -111,10 +105,7 @@ class IncrementalDedupSpec extends SparkSpec {
       assert(plan.contains("ShuffledHashJoin"), s"expected SHJ:\n$plan")
       assert(!plan.contains("Exchange"),
         s"bucketed banded self-join should be Exchange-free:\n$plan")
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS ${idx.bandsTable}")
-      s.sql(s"DROP TABLE IF EXISTS ${idx.shinglesTable}")
-    }
+    } finally idx.drop(s)
   }
 
   test("embedding delta vs index equals the batch LSH operator") {
@@ -163,13 +154,13 @@ class IncrementalDedupSpec extends SparkSpec {
         s"extend missed first-delta pairs: ${incr2.take(5)}")
       // drop removes catalog entries and the backing path (idempotent —
       // the finally below re-drops harmlessly)
-      Dedup.dropEmbeddingIndex(s, idx)
+      idx.drop(s)
       assert(!s.catalog.tableExists(idx.bandsTable) &&
         !s.catalog.tableExists(idx.vectorsTable) &&
         !java.nio.file.Files.exists(java.nio.file.Paths.get(idx.path)),
-        "dropEmbeddingIndex left debris behind")
+        "EmbeddingIndex.drop left debris behind")
     } finally {
-      Dedup.dropEmbeddingIndex(s, idx)
+      idx.drop(s)
     }
   }
 
@@ -212,9 +203,7 @@ class IncrementalDedupSpec extends SparkSpec {
       val v2 = Dedup.exactAgainstIndex(dup, "doc_id", "text", idx).collect()
       assert(v2.length == 1 && !v2(0).getBoolean(2),
         s"folded fp should mark the duplicate keep=false: ${v2.toSeq}")
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS ${idx.fpTable}")
-    }
+    } finally idx.drop(s)
   }
 
   test("exact fingerprint index joins the null-fp group null-safely") {
@@ -239,9 +228,7 @@ class IncrementalDedupSpec extends SparkSpec {
       Dedup.extendExactIndex(nDelta, "doc_id", "text", idx)
       assert(s.table(idx.fpTable).where(col("fp").isNull).count() == 1,
         "extend must preserve the one-row-per-fp invariant for null fp")
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS ${idx.fpTable}")
-    }
+    } finally idx.drop(s)
   }
 
   test("line index: delta dedup equals the batch operator on corpus ∪ delta") {
@@ -284,7 +271,7 @@ class IncrementalDedupSpec extends SparkSpec {
         Dedup.extendLineIndex(delta, "doc_id", "text", idx)
       }
     } finally {
-      Dedup.dropLineIndex(s, idx)
+      idx.drop(s)
     }
   }
 
@@ -315,7 +302,7 @@ class IncrementalDedupSpec extends SparkSpec {
       assert(!plan.contains("BroadcastHashJoin"),
         s"no corpus-sized side may broadcast:\n$plan")
     } finally {
-      Dedup.dropLineIndex(s, idx)
+      idx.drop(s)
     }
   }
 
@@ -345,9 +332,9 @@ class IncrementalDedupSpec extends SparkSpec {
         val after = Dedup.lineDedupAgainstIndex(delta, "doc_id", "text", out)
           .collect().map(r => (r.getLong(0), r.getString(1))).toSet
         assert(after == before, "compaction must not change verdicts")
-      } finally Dedup.dropLineIndex(s, out)
+      } finally out.drop(s)
     } finally {
-      Dedup.dropLineIndex(s, idx)
+      idx.drop(s)
     }
   }
 
@@ -370,10 +357,7 @@ class IncrementalDedupSpec extends SparkSpec {
       val batch = pairSet(Dedup.minhashPairs(all, "doc_id", "text", 3, 0.8))
       assert((upTo1 ++ incr2) == batch,
         s"extend broken: missing=${batch -- upTo1 -- incr2}")
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS ${idx.bandsTable}")
-      s.sql(s"DROP TABLE IF EXISTS ${idx.shinglesTable}")
-    }
+    } finally idx.drop(s)
   }
 
   private def parquetFiles(s: org.apache.spark.sql.SparkSession,
@@ -428,21 +412,21 @@ class IncrementalDedupSpec extends SparkSpec {
       }
       // cutover: drop the OLD generation — catalog entries and the
       // backing path both go; the compacted handle keeps probing
-      Dedup.dropIndex(s, idx)
+      idx.drop(s)
       assert(!s.catalog.tableExists(idx.bandsTable) &&
         !s.catalog.tableExists(idx.shinglesTable),
-        "dropIndex left catalog entries behind")
+        "DedupIndex.drop left catalog entries behind")
       assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(idx.path)),
-        "dropIndex left the backing directory behind")
+        "DedupIndex.drop left the backing directory behind")
       val afterDrop = pairSet(
         Dedup.pairsAgainstIndex(probe, "doc_id", "text", out, 0.8,
           persistShingles = false))
       assert(afterDrop == before,
         "dropping the old generation broke the compacted index")
     } finally {
-      Dedup.dropIndex(s, idx)
-      if (out != null) Dedup.dropIndex(s, out)
+      idx.drop(s)
+      if (out != null) out.drop(s)
     }
   }
 
@@ -486,22 +470,22 @@ class IncrementalDedupSpec extends SparkSpec {
         s"ivf compaction did not shrink files ($iFilesBefore -> $iFilesAfter)")
       // cutover both: old generations drop clean, new handles keep
       // answering identically
-      Dedup.dropExactIndex(s, eIdx)
+      eIdx.drop(s)
       assert(!s.catalog.tableExists(eIdx.fpTable) &&
         !java.nio.file.Files.exists(java.nio.file.Paths.get(eIdx.path)),
-        "dropExactIndex left debris behind")
+        "ExactIndex.drop left debris behind")
       assert(vset(eOut) == eBefore)
-      Similarity.dropIvfIndex(s, iIdx)
+      iIdx.drop(s)
       assert(!s.catalog.tableExists(iIdx.corpusTable) &&
         !s.catalog.tableExists(iIdx.centroidsTable) &&
         !java.nio.file.Files.exists(java.nio.file.Paths.get(iIdx.path)),
-        "dropIvfIndex left debris behind")
+        "IvfIndex.drop left debris behind")
       assert(kset(iOut) == iBefore)
     } finally {
-      Dedup.dropExactIndex(s, eIdx)
-      if (eOut != null) Dedup.dropExactIndex(s, eOut)
-      Similarity.dropIvfIndex(s, iIdx)
-      if (iOut != null) Similarity.dropIvfIndex(s, iOut)
+      eIdx.drop(s)
+      if (eOut != null) eOut.drop(s)
+      iIdx.drop(s)
+      if (iOut != null) iOut.drop(s)
     }
   }
 
@@ -549,10 +533,10 @@ class IncrementalDedupSpec extends SparkSpec {
       try Similarity.extendIvfIndex(dupVecs, "vec_id", "embedding", iIdx)
       finally s.conf.unset(IndexAdmin.CheckDisjointKey)
     } finally {
-      Dedup.dropIndex(s, mIdx)
-      Dedup.dropExactIndex(s, eIdx)
-      Dedup.dropEmbeddingIndex(s, bIdx)
-      Similarity.dropIvfIndex(s, iIdx)
+      mIdx.drop(s)
+      eIdx.drop(s)
+      bIdx.drop(s)
+      iIdx.drop(s)
     }
   }
 
@@ -581,7 +565,7 @@ class IncrementalDedupSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         Dedup.extendSpanIndex(corpus, "doc_id", "text", idx)
       }
-    } finally Dedup.dropSpanIndex(s, idx)
+    } finally idx.drop(s)
   }
 
   test("span-index: delta-internal duplicates count without the corpus," +
@@ -645,7 +629,7 @@ class IncrementalDedupSpec extends SparkSpec {
         val L = ctext.length.toLong
         assert(full == Set((11L, 1L, L, L)),
           s"whole-doc corpus duplicate must span fully: $full")
-      } finally Dedup.dropSpanIndex(s, out)
-    } finally Dedup.dropSpanIndex(s, idx)
+      } finally out.drop(s)
+    } finally idx.drop(s)
   }
 }

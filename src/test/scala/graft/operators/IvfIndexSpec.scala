@@ -42,10 +42,7 @@ class IvfIndexSpec extends SparkSpec {
       assert(scanLines.exists(l => l.contains("cell") && l.contains("IN")),
         s"no cell IN partition filter on the index scan:\n" +
           scanLines.mkString("\n"))
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS ${idx.corpusTable}")
-      s.sql(s"DROP TABLE IF EXISTS ${idx.centroidsTable}")
-    }
+    } finally idx.drop(s)
   }
 
   test("ivf-pq index: exhaustive probe equals brute force; scans prune both ways") {
@@ -93,11 +90,11 @@ class IvfIndexSpec extends SparkSpec {
       assert(codeScan.nonEmpty && codeScan.forall(!_.contains("cv")),
         s"ADC scan reads the vector column:\n${codeScan.mkString("\n")}")
     } finally {
-      Similarity.dropIvfPqIndex(s, idx)
+      idx.drop(s)
       assert(!s.catalog.tableExists(idx.corpusTable) &&
         !s.catalog.tableExists(idx.codebookTable) &&
         !java.nio.file.Files.exists(java.nio.file.Paths.get(idx.path)),
-        "dropIvfPqIndex left debris behind")
+        "IvfPqIndex.drop left debris behind")
     }
   }
 
@@ -143,14 +140,14 @@ class IvfIndexSpec extends SparkSpec {
         assert(rows(Similarity.ivfPqKnnFromIndex(s, queries, "vec_id",
           "embedding", out, 3, nProbe = 4, refine = 48)) == before,
           "ivf-pq compaction changed the probe")
-        Similarity.dropIvfPqIndex(s, folded)
+        folded.drop(s)
         assert(rows(Similarity.ivfPqKnnFromIndex(s, queries, "vec_id",
           "embedding", out, 3, nProbe = 4, refine = 48)) == before,
           "dropping the old generation broke the compacted ivf-pq index")
-      } finally Similarity.dropIvfPqIndex(s, out)
+      } finally out.drop(s)
     } finally {
-      Similarity.dropIvfPqIndex(s, full)
-      Similarity.dropIvfPqIndex(s, folded)
+      full.drop(s)
+      folded.drop(s)
     }
   }
 
@@ -194,11 +191,6 @@ class IvfIndexSpec extends SparkSpec {
       val ok = Similarity.recallCertificate(exact, approx, 0.3)
         .collect()(0).getBoolean(0)
       assert(ok, "post-fold recall certificate failed at floor 0.3")
-    } finally {
-      for (i <- Seq(full, folded)) {
-        s.sql(s"DROP TABLE IF EXISTS ${i.corpusTable}")
-        s.sql(s"DROP TABLE IF EXISTS ${i.centroidsTable}")
-      }
-    }
+    } finally Seq(full, folded).foreach(_.drop(s))
   }
 }

@@ -44,7 +44,7 @@ class NgramIndexSpec extends SparkSpec {
       // the vector is non-vacuous: some position actually backed off,
       // so the fold of BOTH slices' counts was load-bearing
       assert(incr.exists(_._4 > 0), "no backoff exercised — vacuous")
-    } finally CorpusStats.dropNgramIndex(s, idx)
+    } finally idx.drop(s)
   }
 
   test("count folds read the gram buckets without an Exchange") {
@@ -72,7 +72,7 @@ class NgramIndexSpec extends SparkSpec {
       val plan = probe.queryExecution.executedPlan.toString
       assert(plan.contains("ShuffledHashJoin"),
         s"count joins must be shuffle-hash:\n$plan")
-    } finally CorpusStats.dropNgramIndex(s, idx)
+    } finally idx.drop(s)
   }
 
   test("extend refuses a delta whose ids are already indexed") {
@@ -87,7 +87,7 @@ class NgramIndexSpec extends SparkSpec {
           idx)
       }
       assert(e.getMessage.contains("disjoint"))
-    } finally CorpusStats.dropNgramIndex(s, idx)
+    } finally idx.drop(s)
   }
 
   test("compaction collapses slices and preserves scores") {
@@ -114,7 +114,7 @@ class NgramIndexSpec extends SparkSpec {
           sc, "doc_id", "text", out)
           .select("doc", "n_tokens", "n_oov", "n_backed", "avg_lp"))
         assert(after == before, "compaction changed scores")
-      } finally CorpusStats.dropNgramIndex(s, out)
-    } finally CorpusStats.dropNgramIndex(s, idx)
+      } finally out.drop(s)
+    } finally idx.drop(s)
   }
 }

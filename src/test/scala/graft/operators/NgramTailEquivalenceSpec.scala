@@ -8,11 +8,29 @@ import org.apache.spark.sql.functions._
   * ONE join against the (src?, j, g)-keyed count frame) to the
   * sequential reference implementation it replaced (`order` wide
   * left joins against per-order count tables) — same corpus, same
-  * params, bit-identical output. The reference
-  * ([[CorpusStats.ngramScoreTailFromPosSeq]] + [[CorpusStats.ngramCounts]])
-  * is kept in the tree for exactly this spec (the r18 DoReMi
-  * fused==unfused pattern). */
+  * params, bit-identical output. The reference ([[tailSeq]] over
+  * [[CorpusStats.ngramCounts]]) lives here, the r18 DoReMi
+  * fused==unfused pattern. */
 class NgramTailEquivalenceSpec extends SparkSpec {
+
+  /** The pre-r19 sequential tail — `order` left joins of the wide
+    * position row against per-order count frames (g\$j -> c\$j,
+    * optionally (src, g\$j)-keyed), then the shared backoff replay. */
+  private def tailSeq(counts: Seq[DataFrame], nv: DataFrame,
+                      pos: DataFrame, order: Int, alpha: Double, k: Double,
+                      srcCol: Option[String]): DataFrame = {
+    require(alpha > 0.0 && alpha <= 1.0,
+      s"backoff alpha must be in (0, 1], got $alpha")
+    require(k > 0.0, s"smoothing k must be positive, got $k")
+    val srcCols = srcCol.map(_ => "src").toSeq
+    val joined = counts.zipWithIndex.foldLeft(pos) { case (df, (c, i)) =>
+      df.join(c, srcCols :+ s"g${i + 1}", "left_outer")
+    }
+    CorpusStats.ngramBackoffFromWide(joined.select(
+      (srcCols :+ "doc").map(col) ++ Seq(col("p")) ++
+        (1 to order).map(j => col(s"c$j")): _*),
+      nv, order, alpha, k, srcCol)
+  }
 
   // deterministic multi-source corpus with repeated n-grams, token
   // counts 0..~40, and enough vocabulary overlap that every backoff
@@ -39,7 +57,7 @@ class NgramTailEquivalenceSpec extends SparkSpec {
       case None => broadcast(counts.head
         .agg(sum("c1").as("__n"), count(lit(1)).as("__v")))
     }
-    CorpusStats.ngramScoreTailFromPosSeq(counts, nv,
+    tailSeq(counts, nv,
       CorpusStats.gramPositions(score, "doc_id", "text", order, srcCol,
         digest),
       order, 0.4, 0.5, srcCol)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.util.FsUtil
 
 class ControlServerSpec extends SparkSpec {
 
@@ -39,7 +40,7 @@ class ControlServerSpec extends SparkSpec {
       // error paths mirror the reference's REST surface
       assert(http(port, "/tester/start?name=nope")._1 == 404)
       assert(http(port, "/tester/frobnicate")._1 == 404)
-    } finally srv.stop()
+    } finally { srv.stop(); FsUtil.deleteRecursively(csv.toPath) }
   }
 
   test("path-param routes on sources auto-registered from an app def") {
@@ -79,58 +80,62 @@ class ControlServerSpec extends SparkSpec {
       // a trailing slash (empty id) must 404, NOT broadcast the action
       // to every registered source
       assert(http(port, "/tester/stop/")._1 == 404)
-    } finally srv.stop()
+    } finally { srv.stop(); FsUtil.deleteRecursively(csv.toPath) }
   }
 
   test("registerFrom rejects duplicate handler names") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val csv = java.io.File.createTempFile("ctrl3", ".csv")
-    java.nio.file.Files.writeString(csv.toPath, "v\n1\n")
-    val appJson =
-      s"""{"triggers": [{
-         |  "id": "st", "ref": "#streamtester", "settings": {},
-         |  "handlers": [
-         |    {"settings": {"filePath": "${csv.getAbsolutePath}"},
-         |     "action": {"id": "same"}},
-         |    {"settings": {"filePath": "${csv.getAbsolutePath}"},
-         |     "action": {"id": "same"}}
-         |  ]}]}""".stripMargin
-    val app = graft.engine.Dsl.parseApp(appJson)
-    val srv = new ControlServer(0)
-    val e = intercept[IllegalArgumentException](srv.registerFrom(app))
-    assert(e.getMessage.contains("same"))
+    try {
+      java.nio.file.Files.writeString(csv.toPath, "v\n1\n")
+      val appJson =
+        s"""{"triggers": [{
+           |  "id": "st", "ref": "#streamtester", "settings": {},
+           |  "handlers": [
+           |    {"settings": {"filePath": "${csv.getAbsolutePath}"},
+           |     "action": {"id": "same"}},
+           |    {"settings": {"filePath": "${csv.getAbsolutePath}"},
+           |     "action": {"id": "same"}}
+           |  ]}]}""".stripMargin
+      val app = graft.engine.Dsl.parseApp(appJson)
+      val srv = new ControlServer(0)
+      val e = intercept[IllegalArgumentException](srv.registerFrom(app))
+      assert(e.getMessage.contains("same"))
+    } finally FsUtil.deleteRecursively(csv.toPath)
   }
 
   test("columnNames accessor and loud dataAsMap=false rejection") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val csv = java.io.File.createTempFile("ctrl4", ".csv")
-    java.nio.file.Files.writeString(csv.toPath, "a,b,c\n1,2,3\n")
-    val replay = new CsvReplay(csv.getAbsolutePath)
-    assert(replay.columnNames == Vector("a", "b", "c"))
-    val noHeader = new CsvReplay(csv.getAbsolutePath, header = false)
-    assert(noHeader.columnNames == Vector("c0", "c1", "c2"))
-    // and over REST, the reference's getColumnNames surface
-    val srv0 = new ControlServer(0)
-    srv0.register("t", replay)
-    val port0 = srv0.start()
     try {
-      val (c, body) = http(port0, "/tester/columns/t")
-      assert(c == 200 && body == """{"t": ["a", "b", "c"]}""", body)
-    } finally srv0.stop()
-    // columnNames reflects the LOADED dataset: a rewritten file changes
-    // nothing until reload()
-    java.nio.file.Files.writeString(csv.toPath, "x,y\n1,2\n")
-    assert(replay.columnNames == Vector("a", "b", "c"))
-    replay.reload()
-    assert(replay.columnNames == Vector("x", "y"))
-    val appJson =
-      s"""{"triggers": [{"id": "st", "ref": "#streamtester",
-         |  "handlers": [{"settings": {
-         |    "filePath": "${csv.getAbsolutePath}", "dataAsMap": "false"},
-         |    "action": {"id": "p"}}]}]}""".stripMargin
-    val srv = new ControlServer(0)
-    val e = intercept[IllegalArgumentException](
-      srv.registerFrom(graft.engine.Dsl.parseApp(appJson)))
-    assert(e.getMessage.contains("dataAsMap"))
+      java.nio.file.Files.writeString(csv.toPath, "a,b,c\n1,2,3\n")
+      val replay = new CsvReplay(csv.getAbsolutePath)
+      assert(replay.columnNames == Vector("a", "b", "c"))
+      val noHeader = new CsvReplay(csv.getAbsolutePath, header = false)
+      assert(noHeader.columnNames == Vector("c0", "c1", "c2"))
+      // and over REST, the reference's getColumnNames surface
+      val srv0 = new ControlServer(0)
+      srv0.register("t", replay)
+      val port0 = srv0.start()
+      try {
+        val (c, body) = http(port0, "/tester/columns/t")
+        assert(c == 200 && body == """{"t": ["a", "b", "c"]}""", body)
+      } finally srv0.stop()
+      // columnNames reflects the LOADED dataset: a rewritten file changes
+      // nothing until reload()
+      java.nio.file.Files.writeString(csv.toPath, "x,y\n1,2\n")
+      assert(replay.columnNames == Vector("a", "b", "c"))
+      replay.reload()
+      assert(replay.columnNames == Vector("x", "y"))
+      val appJson =
+        s"""{"triggers": [{"id": "st", "ref": "#streamtester",
+           |  "handlers": [{"settings": {
+           |    "filePath": "${csv.getAbsolutePath}", "dataAsMap": "false"},
+           |    "action": {"id": "p"}}]}]}""".stripMargin
+      val srv = new ControlServer(0)
+      val e = intercept[IllegalArgumentException](
+        srv.registerFrom(graft.engine.Dsl.parseApp(appJson)))
+      assert(e.getMessage.contains("dataAsMap"))
+    } finally FsUtil.deleteRecursively(csv.toPath)
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.engine.{Dsl, Pipelines}
+import graft.util.FsUtil
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -103,7 +104,7 @@ class StreamingRuntimeSpec extends SparkSpec {
       q2.stop()
       val got = s.read.parquet(out).collect().map(_.getInt(0)).sorted.toSeq
       assert(got == Seq(1, 2, 3, 4), s"expected exactly-once 1..4, got $got")
-    } finally Channels.useMemoryBackend()
+    } finally { Channels.useMemoryBackend(); FsUtil.deleteRecursively(root) }
   }
 
   test("channel fan-in: filter pipeline publishes, report pipeline consumes") {
@@ -180,7 +181,7 @@ class StreamingRuntimeSpec extends SparkSpec {
           .resolve("data")).toArray.length
         assert(dataFiles > 0)
       } finally { pub.stop(); q.stop() }
-    } finally Channels.useMemoryBackend()
+    } finally { Channels.useMemoryBackend(); FsUtil.deleteRecursively(root) }
   }
 
   test("file-backed channel: concurrent publishers do not race on commit") {
@@ -214,7 +215,7 @@ class StreamingRuntimeSpec extends SparkSpec {
           .collect().map(_.getInt(0)).sorted
         assert(got.toSeq == (1 to 100), s"lost/duplicated rows: n=${got.length}")
       } finally { pa.stop(); pb.stop(); q.stop() }
-    } finally Channels.useMemoryBackend()
+    } finally { Channels.useMemoryBackend(); FsUtil.deleteRecursively(root) }
   }
 
   test("memory channel fails loudly above its per-batch row cap") {
@@ -410,7 +411,7 @@ class StreamingRuntimeSpec extends SparkSpec {
       assert(whilePaused == afterPause) // paused -> nothing new
       replay.resume(); replay.stop()
       assert(!replay.isRunning)
-    } finally q.stop()
+    } finally { q.stop(); FsUtil.deleteRecursively(csv.toPath) }
   }
 
   test("csv replay drives a DSL tumbling-window pipeline (streamtester demo)") {
@@ -446,7 +447,7 @@ class StreamingRuntimeSpec extends SparkSpec {
       // windows of 3: (1,2,3)->6 at seq 2, (4,5,6)->15 at seq 5;
       // the trailing 7 stalls (incomplete window emits nothing)
       assert(rows.toSeq == Seq((2L, 6.0), (5L, 15.0)))
-    } finally q.stop()
+    } finally { q.stop(); FsUtil.deleteRecursively(csv.toPath) }
   }
 
   test("csv replay survives backslashes and quotes in cells") {
@@ -467,7 +468,7 @@ class StreamingRuntimeSpec extends SparkSpec {
       val rows = s.sql("SELECT name FROM csv_esc ORDER BY __seq")
         .collect().map(_.getString(0))
       assert(rows.toSeq == Seq("path\\to\\thing", "say \"hi\""))
-    } finally q.stop()
+    } finally { q.stop(); FsUtil.deleteRecursively(csv.toPath) }
   }
 
   test("csv replay handles quoted commas, doubled quotes, trailing empties") {
@@ -498,7 +499,7 @@ class StreamingRuntimeSpec extends SparkSpec {
       assert(rows.toSeq == Seq(
         ("hello, world", "5.0", "say \"hi\""),
         ("plain", "", "")), s"got ${rows.toSeq}")
-    } finally q.stop()
+    } finally { q.stop(); FsUtil.deleteRecursively(csv.toPath) }
   }
 
   test("instrumented pipelines emit per-stage row counts (batch + stream)") {

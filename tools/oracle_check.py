@@ -32,17 +32,15 @@ def main():
     oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
     names = sorted(d for d in os.listdir(outdir)
                    if os.path.isdir(os.path.join(outdir, d)))
-    n_pass = n_fail = n_weak = 0
+    n_pass = n_fail = 0
     for name in names:
         files = glob.glob(os.path.join(outdir, name, "*.parquet"))
         if not files:
             print(f"FAIL  {name}: no parquet written"); n_fail += 1; continue
         spark_df = pd.concat([pd.read_parquet(f) for f in sorted(files)])
         if name not in oracle:
-            print(f"weak  {name}: rows-only check, rows={len(spark_df)}"
-                  + (" (EMPTY!)" if len(spark_df) == 0 else ""))
-            n_weak += 1
-            continue
+            print(f"FAIL  {name}: no oracle_sql.json entry")
+            n_fail += 1; continue
         try:
             duck_df = con.sql(oracle[name]).df()
         except Exception as e:
@@ -88,7 +86,7 @@ def main():
                 print(f"      spark: {a.loc[i].to_dict()}")
                 print(f"      duck : {b.loc[i].to_dict()}")
             n_fail += 1
-    print(f"\n{n_pass} pass, {n_fail} FAIL, {n_weak} rows-only")
+    print(f"\n{n_pass} pass, {n_fail} FAIL")
     sys.exit(1 if n_fail else 0)
 
 if __name__ == "__main__":
