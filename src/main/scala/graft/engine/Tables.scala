@@ -50,8 +50,4 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame     = load(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** Register every table as a temp view (for spark.sql use). */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

@@ -262,16 +262,6 @@ object TextFunctions {
     "fr" -> Seq("le", "la", "les", "et", "est", "un", "une", "dans", "que", "pour"),
     "es" -> Seq("el", "la", "los", "las", "y", "es", "un", "una", "que", "por"))
 
-  /** Number of tokens that are stopwords of the given language. */
-  def stopwordCount(text: Column, lang: String): Column = {
-    val sw = stopwords(lang)
-    size(filter(tokens(text), t => t.isInCollection(sw)))
-  }
-
-  /** Count of CJK (U+4E00–U+9FFF) characters. */
-  def cjkCharCount(text: Column): Column =
-    length(regexp_replace(text, "[^\\x{4e00}-\\x{9fff}]", ""))
-
   /** Heuristic language ID: CJK-dominant → zh, otherwise the language with
     * the highest stopword count (ties broken en > de > fr > es), 'und' if no
     * stopwords at all. Deterministic by construction; all counts come

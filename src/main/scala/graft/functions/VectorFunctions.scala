@@ -16,16 +16,6 @@ object VectorFunctions {
   /** Cast any numeric array to Array[Double] for stable arithmetic. */
   def asDoubles(a: Column): Column = a.cast("array<double>")
 
-  /** Element-wise sum of two equal-length vectors. */
-  def vecAdd(a: Column, b: Column): Column = zip_with(a, b, (x, y) => x + y)
-
-  /** Element-wise min / max of two vectors. */
-  def vecMin(a: Column, b: Column): Column = zip_with(a, b, (x, y) => least(x, y))
-  def vecMax(a: Column, b: Column): Column = zip_with(a, b, (x, y) => greatest(x, y))
-
-  /** Scale a vector by a scalar column. */
-  def vecScale(a: Column, s: Column): Column = transform(a, x => x * s)
-
   /** Dot product — a native codegen'd expression (graft.expressions
     * .DotProduct); the lambda fold it replaces is interpreted per element
     * and dominates similarity joins. Same ascending-index summation order,
@@ -51,26 +41,6 @@ object VectorFunctions {
   def cosine(a: Column, b: Column): Column = {
     val ad = asDoubles(a); val bd = asDoubles(b)
     cosineFrom(dot(ad, bd), l2Norm(ad), l2Norm(bd))
-  }
-
-  /** Squared euclidean distance. */
-  def l2DistSq(a: Column, b: Column): Column =
-    aggregate(zip_with(asDoubles(a), asDoubles(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
-
-  /** L2-normalize a vector (for cosine-as-dot at scale: pre-normalize once,
-    * then every pairwise similarity is a plain dot product).
-    * Zero vectors normalize to themselves (never NaN). Callers that
-    * normalize many vectors should materialize the norm once via the
-    * two-argument overload — e.g. `withColumn("n", l2Norm(v))` then
-    * `l2Normalize(v, col("n"))` — so the O(d) norm isn't re-derived per
-    * element by a non-CSE'd plan. */
-  def l2Normalize(a: Column): Column = l2Normalize(a, l2Norm(asDoubles(a)))
-
-  /** L2-normalize with a precomputed norm column. */
-  def l2Normalize(a: Column, norm: Column): Column = {
-    val ad = asDoubles(a)
-    when(norm > 0.0, transform(ad, x => x / norm)).otherwise(ad)
   }
 
   /** True if every element is zero — the vector form of the reference's

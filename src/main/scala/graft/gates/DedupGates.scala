@@ -82,9 +82,8 @@ object DedupGates {
   private val shingleCte =
     s"""d AS MATERIALIZED (
       |  SELECT doc_id, list_distinct(list(sh ORDER BY p)) AS sh
-      |  FROM ${ngramRowsSql("""(SELECT doc_id,
-      |               list_filter(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-      |                           x -> x <> '') tk
+      |  FROM ${ngramRowsSql(s"""(SELECT doc_id,
+      |               ${tokensSql("text")} tk
       |        FROM documents)""", 3, gram = "sh")}
       |  GROUP BY doc_id),
       |inv AS (SELECT doc_id, unnest(sh) s FROM d),
@@ -767,10 +766,8 @@ object DedupGates {
       // per-source unigram KL vs the corpus: only the stratum's own words
       // are summed (P_s(w)=0 terms contribute 0), and every such word has
       // corpus count > 0, so the MLE sum is smoothing-free on both engines
-      """WITH t AS (SELECT source,
-        |  list_filter(regexp_split_to_array(trim(lower(text)),
-        |                                    '[ \t\n\x0b\f\r]+'),
-        |              x -> x <> '') tk FROM documents),
+      s"""WITH t AS (SELECT source,
+        |  ${tokensSql("text")} tk FROM documents),
         |sw AS (SELECT source, w, count(*)::BIGINT AS c
         |       FROM (SELECT source, unnest(tk) AS w FROM t) GROUP BY 1, 2),
         |cw AS (SELECT w, sum(c)::BIGINT AS cw FROM sw GROUP BY 1),
@@ -800,10 +797,8 @@ object DedupGates {
       // DSIR: same 24-bit md5 bucket as the engine ('0x'||substr(md5,1,6)
       // — Sampling.scala's documented replay convention), add-0.5
       // smoothed bucket multinomials, per-doc sum of c * ln(pt/pr)
-      """WITH t AS (SELECT doc_id, lang,
-        |  list_filter(regexp_split_to_array(trim(lower(text)),
-        |                                    '[ \t\n\x0b\f\r]+'),
-        |              x -> x <> '') tk FROM documents),
+      s"""WITH t AS (SELECT doc_id, lang,
+        |  ${tokensSql("text")} tk FROM documents),
         |f AS (SELECT doc_id, lang,
         |             ('0x' || substr(md5(w), 1, 6))::BIGINT % 512 AS b
         |      FROM (SELECT doc_id, lang, unnest(tk) AS w FROM t)),
@@ -1099,9 +1094,8 @@ object DedupGates {
       // first 64 bits of md5, the portable hash Dedup computes with
       // portable=true; bit/shift arithmetic stays in UBIGINT to keep the
       // bit pattern identical to the JVM's unsigned-long treatment.
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-        |                x -> x <> '') tk
+      s"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("text")} tk
         |  FROM documents),
         |tok AS (SELECT doc_id, unnest(tk) AS tok FROM t WHERE len(tk) > 0),
         |th AS (SELECT doc_id,

@@ -200,10 +200,15 @@ private[graft] object GateSupport {
       |          FROM isl GROUP BY doc_id, island)""".stripMargin
   }
 
+  /** TextFunctions.tokens of `expr` as a DuckDB list expression:
+    * lower-cased, trimmed, split on runs of the JVM's `\s` set, empty
+    * tokens dropped. Every oracle tokenizes through this one fragment. */
+  def tokensSql(expr: String): String =
+    raw"list_filter(regexp_split_to_array(trim(lower($expr)), '[ \t\n\x0b\f\r]+'), x -> x <> '')"
+
   val tokCte =
-    """t AS (SELECT doc_id, text,
-      |             list_filter(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-      |                         x -> x <> '') tk
+    s"""t AS (SELECT doc_id, text,
+      |             ${tokensSql("text")} tk
       |      FROM documents)""".stripMargin
 
   /** `base(doc_id, toks)` and `chunks(doc_id, cidx, <alias>)`: every
@@ -214,8 +219,7 @@ private[graft] object GateSupport {
   def tokenGroupsCte(n: Int, alias: String): String =
     raw"""base AS (
          |  SELECT doc_id,
-         |         list_filter(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-         |                     x -> x <> '') AS toks
+         |         ${tokensSql("text")} AS toks
          |  FROM documents
          |), chunks AS (
          |  SELECT doc_id, ((p - 1) // $n)::BIGINT AS cidx,

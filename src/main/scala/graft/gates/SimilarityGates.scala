@@ -986,8 +986,7 @@ object SimilarityGates {
          |qraw(query_id, qtext) AS (VALUES ('q1', 'fast vector scan'),
          |  ('q2', 'customer query data'), ('q3', 'window merge batch stream')),
          |qt AS (SELECT DISTINCT query_id,
-         |         unnest(list_filter(regexp_split_to_array(trim(lower(qtext)),
-         |           '[ \\t\\n\\x0b\\f\\r]+'), x -> x <> '')) AS term
+         |         unnest(${tokensSql("qtext")}) AS term
          |       FROM qraw),
          |dfreq AS (SELECT term, count(*)::DOUBLE AS df FROM tf
          |          WHERE term IN (SELECT term FROM qt) GROUP BY term),
@@ -1441,8 +1440,7 @@ object SimilarityGates {
       s"""WITH $spanCutCte,
          |fl AS (SELECT doc_id, kept FROM cut WHERE len(kept) >= 40),
          |tokp AS (SELECT fl.doc_id, d.source,
-         |           len(list_filter(regexp_split_to_array(trim(lower(kept)),
-         |             '[ \\t\\n\\x0b\\f\\r]+'), x -> x <> ''))::BIGINT AS n_tok
+         |           len(${tokensSql("kept")})::BIGINT AS n_tok
          |         FROM fl JOIN documents d USING (doc_id)),
          |hh AS (SELECT *,
          |         ('0x' || substr(md5('span1' || doc_id::VARCHAR), 1, 8))::BIGINT AS h

@@ -315,14 +315,13 @@ object TextGates {
     * q_doremi_weights/q_doremi_mixture and the order-n
     * q_doremi_weights_5gram). Ends with trd/scd(doc_id, source, tk). */
   private val doremiCorpusCtes =
-    """corp AS (
+    s"""corp AS (
       |  SELECT doc_id, source, text FROM documents
       |  UNION ALL
       |  SELECT doc_id + 500000, 'synth', translate(text, 'aeiou', '01234')
       |  FROM documents WHERE doc_id < 150),
       |tds AS (SELECT doc_id, source,
-      |  list_filter(regexp_split_to_array(trim(lower(text)), '[ \t\n\x0b\f\r]+'),
-      |              x -> x <> '') tk
+      |  ${tokensSql("text")} tk
       |  FROM corp WHERE source IS NOT NULL),
       |trd AS (SELECT * FROM tds WHERE doc_id % 3 <> 0),
       |scd AS (SELECT * FROM tds WHERE doc_id % 3 = 0)""".stripMargin

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,8 +12,11 @@ import org.apache.spark.sql.functions._
 case class ChunkIndex(name: String, path: String, numBuckets: Int,
                       window: Int, prime: Int, modBits: Int,
                       divisor: Int, residue: Int) extends PersistedIndex {
+  type Self = ChunkIndex
+  protected def at(name: String, path: String) = copy(name = name, path = path)
   def chunksTable: String = s"${name}_chunks"
-  def tables: Seq[String] = Seq(chunksTable)
+  def layout: Seq[IndexTable] =
+    Seq(IndexTable.Bucketed(chunksTable, "chunk_hash", numBuckets))
 }
 
 /** Content-defined chunking (CDC) — rolling-hash boundaries over
@@ -238,12 +241,9 @@ object Chunking {
                       divisor: Int = 64, residue: Int = 13): ChunkIndex = {
     val idx = ChunkIndex(name, path, numBuckets, window, prime, modBits,
       divisor, residue)
-    chunksWith(df, idCol, textCol, idx)
-      .groupBy("chunk_hash").agg(min(col(idCol)).as("keep_id"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "chunk_hash").sortBy("chunk_hash")
-      .option("path", s"$path/${idx.chunksTable}")
-      .format("parquet").saveAsTable(idx.chunksTable)
+    idx.write(idx.chunksTable, chunksWith(df, idCol, textCol, idx)
+      .groupBy("chunk_hash").agg(min(col(idCol)).as("keep_id")),
+      append = false)
     idx
   }
 
@@ -260,12 +260,10 @@ object Chunking {
       "extendChunkIndex")
     val existing = spark.table(idx.chunksTable)
       .select(col("chunk_hash").as("__ih")).hint("shuffle_hash")
-    chunksWith(delta, idCol, textCol, idx)
+    idx.write(idx.chunksTable, chunksWith(delta, idCol, textCol, idx)
       .groupBy("chunk_hash").agg(min(col(idCol)).as("keep_id"))
-      .join(existing, col("chunk_hash") <=> col("__ih"), "left_anti")
-      .write.mode(SaveMode.Append)
-      .bucketBy(idx.numBuckets, "chunk_hash").sortBy("chunk_hash")
-      .format("parquet").saveAsTable(idx.chunksTable)
+      .join(existing, col("chunk_hash") <=> col("__ih"), "left_anti"),
+      append = true)
   }
 
   /** Per-document chunk novelty of a delta against the indexed corpus:
@@ -405,21 +403,5 @@ object Chunking {
       .withColumn("change", round(
         (col("added") + col("removed")) /
           (col("retained") * 2 + col("added") + col("removed")), 6))
-  }
-
-  /** Compact a many-times-extended chunk index to one file per bucket
-    * under a NEW name/path — blue/green, same contract as
-    * [[Dedup.compactIndex]]: old index stays readable until the caller
-    * [[PersistedIndex.drop]]s it. */
-  def compactChunkIndex(spark: SparkSession, idx: ChunkIndex,
-                        name: String, path: String): ChunkIndex = {
-    require(name != idx.name && path != idx.path,
-      "compaction is blue/green: compact into a NEW name and path, " +
-        "then drop the old index")
-    val out = idx.copy(name = name, path = path)
-    Dedup.copyBucketed(spark, s"${idx.path}/${idx.chunksTable}",
-      out.chunksTable, s"$path/${out.chunksTable}", idx.numBuckets,
-      "chunk_hash")
-    out
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,10 +18,12 @@ import org.apache.spark.sql.functions._
   * table, so no side state can drift from the counts. The doc ledger
   * backs the disjoint-ids guard. */
 case class NgramIndex(name: String, path: String, numBuckets: Int,
-                      order: Int) extends PersistedIndex {
+                      order: Int) extends LedgeredIndex {
+  type Self = NgramIndex
+  protected def at(name: String, path: String) = copy(name = name, path = path)
   def gramsTable(j: Int): String = s"${name}_g$j"
-  def docsTable: String = s"${name}_docs"
-  def tables: Seq[String] = (1 to order).map(gramsTable) :+ docsTable
+  def layout: Seq[IndexTable] = (1 to order).map(j =>
+    IndexTable.Bucketed(gramsTable(j), "g", numBuckets, Some("n"))) :+ ledger
 }
 
 /** Corpus-level frequency and cardinality statistics for training-data
@@ -334,7 +336,6 @@ object CorpusStats {
                           k: Double = 0.5): DataFrame = {
     require(order >= 2 && order <= 8,
       s"order must be in 2..8, got $order")
-    import graft.functions.TextFunctions
     val countsU = ngramCountsUnified(train, textCol, order, None)
     // one-row broadcast: N and V DERIVED from the unigram slice of the
     // unified count table (sum of counts / row count — exact long sums,
@@ -346,24 +347,6 @@ object CorpusStats {
       .agg(sum("c").as("__n"), count(lit(1)).as("__v")))
     ngramScoreTail(countsU, nv, score, idCol, textCol, order, alpha, k,
       None)
-  }
-
-  /** [[ngramLogProbAgainst]] with RAW gram-string join keys instead of
-    * 16-byte digests — the pre-digest formulation, kept ONLY as the
-    * ScaleProbe A/B twin so "digests shrink the shuffle" is a measured
-    * bytes-and-wall decade comparison, never prose. Not a public
-    * contract; output is identical to the digest path. */
-  private[graft] def ngramLogProbAgainstStrKeys(
-      train: DataFrame, score: DataFrame, idCol: String,
-      textCol: String, order: Int, alpha: Double = 0.4,
-      k: Double = 0.5): DataFrame = {
-    import graft.functions.TextFunctions
-    val countsU = ngramCountsUnified(train, textCol, order, None,
-      digest = false)
-    val nv = broadcast(countsU.where(col("j") === 1)
-      .agg(sum("c").as("__n"), count(lit(1)).as("__v")))
-    ngramScoreTail(countsU, nv, score, idCol, textCol, order, alpha, k,
-      None, digest = false)
   }
 
   /** md5 digest (16 raw bytes) of a gram string — the engine's
@@ -379,7 +362,7 @@ object CorpusStats {
     * [[graft.expressions.GramDigest]] kernel — bit-identical to
     * `unhex(md5(g))` but through the single-block fast path, so the
     * fixed-width-key trade costs a hash, not a MessageDigest + hex
-    * round-trip per gram (the A/B decade probe prices both sides). */
+    * round-trip per gram (SCALE.md records the measured A/B). */
   private def gdig(g: org.apache.spark.sql.Column) =
     graft.expressions.TextExprs.gramDigest(g)
 
@@ -518,10 +501,9 @@ object CorpusStats {
                                     score: DataFrame, idCol: String,
                                     textCol: String, order: Int,
                                     alpha: Double, k: Double,
-                                    srcCol: Option[String],
-                                    digest: Boolean = true): DataFrame =
+                                    srcCol: Option[String]): DataFrame =
     ngramScoreTailFromPos(countsU, nv,
-      gramPositions(score, idCol, textCol, order, srcCol, digest),
+      gramPositions(score, idCol, textCol, order, srcCol),
       order, alpha, k, srcCol)
 
   /** [[ngramScoreTail]] over a PREBUILT position stream — the seam that
@@ -658,7 +640,6 @@ object CorpusStats {
                                   k: Double = 0.5): DataFrame = {
     require(order >= 2 && order <= 8,
       s"order must be in 2..8, got $order")
-    import graft.functions.TextFunctions
     val countsU = ngramCountsUnified(train, textCol, order, Some(srcCol))
     // per-src (N, V) derived from the per-src unigram slice — same
     // exact-derivation argument as the global form, one less corpus pass
@@ -678,44 +659,32 @@ object CorpusStats {
     require(order >= 2 && order <= 8,
       s"order must be in 2..8, got $order")
     val idx = NgramIndex(name, path, numBuckets, order)
-    ngramCounts(df, text, order, None).zipWithIndex.foreach {
-      case (c, i) =>
-        val j = i + 1
-        c.select(col(s"g$j").as("g"), col(s"c$j").as("n"))
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(numBuckets, "g").sortBy("g")
-          .option("path", s"$path/${idx.gramsTable(j)}")
-          .format("parquet").saveAsTable(idx.gramsTable(j))
-    }
-    df.select(col(id).cast("long").as("doc_id")).distinct()
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "doc_id").sortBy("doc_id")
-      .option("path", s"$path/${idx.docsTable}")
-      .format("parquet").saveAsTable(idx.docsTable)
+    writeNgramSlice(df, id, text, idx, append = false)
     idx
   }
 
   /** Fold a crawl delta into the index: O(delta) — appends the delta's
     * own per-order gram-count slices plus its ledger ids; history is
     * never rescanned. Counts are additive over id-disjoint ingests
-    * (guarded); probes fold slices with sum and [[compactNgramIndex]]
+    * (guarded); probes fold slices with sum and compaction
     * re-collapses. */
   def extendNgramIndex(delta: DataFrame, id: String, text: String,
                        idx: NgramIndex): Unit = {
     IndexAdmin.requireDisjointIds(delta, id, idx.docsTable, "doc_id",
       "extendNgramIndex")
-    ngramCounts(delta, text, idx.order, None).zipWithIndex.foreach {
+    writeNgramSlice(delta, id, text, idx, append = true)
+  }
+
+  /** One ingest's per-order gram-count slices plus its ledger ids. */
+  private def writeNgramSlice(df: DataFrame, id: String, text: String,
+                              idx: NgramIndex, append: Boolean): Unit = {
+    ngramCounts(df, text, idx.order, None).zipWithIndex.foreach {
       case (c, i) =>
         val j = i + 1
-        c.select(col(s"g$j").as("g"), col(s"c$j").as("n"))
-          .write.mode(SaveMode.Append)
-          .bucketBy(idx.numBuckets, "g").sortBy("g")
-          .format("parquet").saveAsTable(idx.gramsTable(j))
+        idx.write(idx.gramsTable(j),
+          c.select(col(s"g$j").as("g"), col(s"c$j").as("n")), append)
     }
-    delta.select(col(id).cast("long").as("doc_id")).distinct()
-      .write.mode(SaveMode.Append)
-      .bucketBy(idx.numBuckets, "doc_id").sortBy("doc_id")
-      .format("parquet").saveAsTable(idx.docsTable)
+    idx.writeLedger(df, id, append)
   }
 
   /** [[ngramLogProbAgainst]] with the TRAIN side read out of a
@@ -750,28 +719,6 @@ object CorpusStats {
         .agg(sum("n").as("__n"), count(lit(1)).as("__v")))
     ngramScoreTail(countsU, nv, score, idCol, textCol, idx.order, alpha,
       k, None)
-  }
-
-  /** Blue/green compaction: collapse each order's accumulated
-    * per-ingest slices to one row per gram in a NEW index, then the
-    * caller cuts over and drops the old one. */
-  def compactNgramIndex(spark: SparkSession, idx: NgramIndex,
-                        name: String, path: String): NgramIndex = {
-    require(name != idx.name && path != idx.path,
-      "compaction is blue/green: compact into a NEW name and path, " +
-        "then drop the old index")
-    val out = NgramIndex(name, path, idx.numBuckets, idx.order)
-    (1 to idx.order).foreach { j =>
-      spark.table(idx.gramsTable(j))
-        .groupBy("g").agg(sum("n").as("n"))
-        .write.mode(SaveMode.Overwrite)
-        .bucketBy(out.numBuckets, "g").sortBy("g")
-        .option("path", s"$path/${out.gramsTable(j)}")
-        .format("parquet").saveAsTable(out.gramsTable(j))
-    }
-    Dedup.copyBucketed(spark, s"${idx.path}/${idx.docsTable}",
-      out.docsTable, s"$path/${out.docsTable}", idx.numBuckets, "doc_id")
-    out
   }
 
   /** BM25 ranked retrieval: for each named query, the top-`k` documents

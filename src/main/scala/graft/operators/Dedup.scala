@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
@@ -14,9 +14,13 @@ import graft.functions.TextFunctions
 case class DedupIndex(name: String, path: String, n: Int, numPerms: Int,
                       rowsPerBand: Int, numBuckets: Int)
     extends PersistedIndex {
+  type Self = DedupIndex
+  protected def at(name: String, path: String) = copy(name = name, path = path)
   def bandsTable: String = s"${name}_bands"
   def shinglesTable: String = s"${name}_sh"
-  def tables: Seq[String] = Seq(bandsTable, shinglesTable)
+  def layout: Seq[IndexTable] = Seq(
+    IndexTable.Bucketed(bandsTable, "bkey", numBuckets),
+    IndexTable.Bucketed(shinglesTable, "doc", numBuckets))
 }
 
 /** Handle to a persisted exact-dedup fingerprint index (see
@@ -26,8 +30,11 @@ case class DedupIndex(name: String, path: String, n: Int, numPerms: Int,
   * [[Dedup.extendExactIndex]]'s anti-join append. */
 case class ExactIndex(name: String, path: String, numBuckets: Int)
     extends PersistedIndex {
+  type Self = ExactIndex
+  protected def at(name: String, path: String) = copy(name = name, path = path)
   def fpTable: String = s"${name}_fp"
-  def tables: Seq[String] = Seq(fpTable)
+  def layout: Seq[IndexTable] =
+    Seq(IndexTable.Bucketed(fpTable, "fp", numBuckets))
 }
 
 /** Handle to a persisted corpus line-frequency index (see
@@ -35,15 +42,17 @@ case class ExactIndex(name: String, path: String, numBuckets: Int)
   * per-ingest line-frequency slices `(lfp, ndocs)` bucketed+sorted by
   * lfp (an extend APPENDS its own slice; distinct-doc counts are
   * additive under the id-disjointness guard, so probes fold slices
-  * with sum and [[Dedup.compactLineIndex]] re-collapses to one row per
-  * lfp — no keep-first metadata persists, because the probe
-  * deliberately does not re-litigate history), plus the ingested-doc
-  * ledger `(doc_id)` backing that guard. */
+  * with sum and compaction re-collapses to one row per lfp — no
+  * keep-first metadata persists, because the probe deliberately does
+  * not re-litigate history), plus the ingested-doc ledger `(doc_id)`
+  * backing that guard. */
 case class LineIndex(name: String, path: String, numBuckets: Int)
-    extends PersistedIndex {
+    extends LedgeredIndex {
+  type Self = LineIndex
+  protected def at(name: String, path: String) = copy(name = name, path = path)
   def freqTable: String = s"${name}_lf"
-  def docsTable: String = s"${name}_docs"
-  def tables: Seq[String] = Seq(freqTable, docsTable)
+  def layout: Seq[IndexTable] = Seq(
+    IndexTable.Bucketed(freqTable, "lfp", numBuckets, Some("ndocs")), ledger)
 }
 
 /** Handle to a persisted substring-dedup GRAM index (see
@@ -56,10 +65,12 @@ case class LineIndex(name: String, path: String, numBuckets: Int)
   * probe can never gram at a different grain than the index. Text
   * never persists — 16-byte hashes and counts only. */
 case class SpanIndex(name: String, path: String, numBuckets: Int,
-                     minLen: Int) extends PersistedIndex {
+                     minLen: Int) extends LedgeredIndex {
+  type Self = SpanIndex
+  protected def at(name: String, path: String) = copy(name = name, path = path)
   def freqTable: String = s"${name}_gf"
-  def docsTable: String = s"${name}_docs"
-  def tables: Seq[String] = Seq(freqTable, docsTable)
+  def layout: Seq[IndexTable] = Seq(
+    IndexTable.Bucketed(freqTable, "g", numBuckets, Some("n")), ledger)
 }
 
 /** Handle to a persisted embedding near-dup index (see
@@ -72,9 +83,13 @@ case class EmbeddingIndex(name: String, path: String, dim: Int,
                           bitsPerBand: Int, numBands: Int,
                           threshold: Double, numBuckets: Int)
     extends PersistedIndex {
+  type Self = EmbeddingIndex
+  protected def at(name: String, path: String) = copy(name = name, path = path)
   def bandsTable: String = s"${name}_bands"
   def vectorsTable: String = s"${name}_vec"
-  def tables: Seq[String] = Seq(bandsTable, vectorsTable)
+  def layout: Seq[IndexTable] = Seq(
+    IndexTable.Bucketed(bandsTable, "bkey", numBuckets),
+    IndexTable.Bucketed(vectorsTable, "vid", numBuckets))
 }
 
 /** Document deduplication for large-scale training-data pipelines.
@@ -207,11 +222,9 @@ object Dedup {
                       name: String, path: String,
                       numBuckets: Int = 32): ExactIndex = {
     val idx = ExactIndex(name, path, numBuckets)
-    exactGroups(df, id, text).select(col("fp"), col("keep_id"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "fp").sortBy("fp")
-      .option("path", s"$path/${idx.fpTable}")
-      .format("parquet").saveAsTable(idx.fpTable)
+    idx.write(idx.fpTable,
+      exactGroups(df, id, text).select(col("fp"), col("keep_id")),
+      append = false)
     idx
   }
 
@@ -229,11 +242,10 @@ object Dedup {
       "extendExactIndex")
     val existing = spark.table(idx.fpTable)
       .select(col("fp").as("__ifp")).hint("shuffle_hash")
-    exactGroups(delta, id, text).select(col("fp"), col("keep_id"))
-      .join(existing, col("fp") <=> col("__ifp"), "left_anti")
-      .write.mode(SaveMode.Append)
-      .bucketBy(idx.numBuckets, "fp").sortBy("fp")
-      .format("parquet").saveAsTable(idx.fpTable)
+    idx.write(idx.fpTable,
+      exactGroups(delta, id, text).select(col("fp"), col("keep_id"))
+        .join(existing, col("fp") <=> col("__ifp"), "left_anti"),
+      append = true)
   }
 
   /** Exact-dedup verdicts for a delta against the indexed corpus:
@@ -374,37 +386,23 @@ object Dedup {
                      numBuckets: Int = 32): SpanIndex = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
     val idx = SpanIndex(name, path, numBuckets, minLen)
-    spanGrams(df, id, text, minLen)
-      .groupBy("g").agg(count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "g").sortBy("g")
-      .option("path", s"$path/${idx.freqTable}")
-      .format("parquet").saveAsTable(idx.freqTable)
-    df.select(col(id).cast("long").as("doc_id")).distinct()
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "doc_id").sortBy("doc_id")
-      .option("path", s"$path/${idx.docsTable}")
-      .format("parquet").saveAsTable(idx.docsTable)
+    idx.write(idx.freqTable, spanGrams(df, id, text, minLen)
+      .groupBy("g").agg(count(lit(1)).as("n")), append = false)
+    idx.writeLedger(df, id, append = false)
     idx
   }
 
   /** Fold a delta into the span index: O(delta) — appends the delta's
     * own gram-frequency slice plus its ledger ids. Occurrence counts
     * are additive over disjoint ingests; probes fold slices with sum
-    * and [[compactSpanIndex]] re-collapses. */
+    * and compaction re-collapses. */
   def extendSpanIndex(delta: DataFrame, id: String, text: String,
                       idx: SpanIndex): Unit = {
     IndexAdmin.requireDisjointIds(delta, id, idx.docsTable, "doc_id",
       "extendSpanIndex")
-    spanGrams(delta, id, text, idx.minLen)
-      .groupBy("g").agg(count(lit(1)).as("n"))
-      .write.mode(SaveMode.Append)
-      .bucketBy(idx.numBuckets, "g").sortBy("g")
-      .format("parquet").saveAsTable(idx.freqTable)
-    delta.select(col(id).cast("long").as("doc_id")).distinct()
-      .write.mode(SaveMode.Append)
-      .bucketBy(idx.numBuckets, "doc_id").sortBy("doc_id")
-      .format("parquet").saveAsTable(idx.docsTable)
+    idx.write(idx.freqTable, spanGrams(delta, id, text, idx.minLen)
+      .groupBy("g").agg(count(lit(1)).as("n")), append = true)
+    idx.writeLedger(delta, id, append = true)
   }
 
   /** [[duplicateSpans]] for a delta against the indexed corpus: a
@@ -435,26 +433,6 @@ object Dedup {
       .join(dupG.hint("shuffle_hash"), "g")
       .select(col("doc"), col("pos"))
     mergeSpanIslands(hits, idx.minLen)
-  }
-
-  /** Blue/green compaction: collapse the accumulated per-ingest gram
-    * slices to one row per g in a NEW index, then drop the old one. */
-  def compactSpanIndex(spark: org.apache.spark.sql.SparkSession,
-                       idx: SpanIndex, name: String,
-                       path: String): SpanIndex = {
-    require(name != idx.name && path != idx.path,
-      "compaction is blue/green: compact into a NEW name and path, " +
-        "then drop the old index")
-    val out = SpanIndex(name, path, idx.numBuckets, idx.minLen)
-    spark.table(idx.freqTable)
-      .groupBy("g").agg(sum("n").as("n"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(out.numBuckets, "g").sortBy("g")
-      .option("path", s"$path/${out.freqTable}")
-      .format("parquet").saveAsTable(out.freqTable)
-    copyBucketed(spark, s"${idx.path}/${idx.docsTable}", out.docsTable,
-      s"$path/${out.docsTable}", idx.numBuckets, "doc_id")
-    out
   }
 
   /** Maximal duplicated TOKEN spans — [[duplicateSpans]] at the grain
@@ -866,101 +844,10 @@ object Dedup {
 
   private def writeIndexSlice(sh: DataFrame, idx: DedupIndex,
                               append: Boolean): Unit = {
-    val bands = bandKeyTable(minhashSignatureTable(sh, idx.numPerms),
-      idx.numPerms, idx.rowsPerBand)
-    def write(df: DataFrame, table: String, key: String): Unit = {
-      val w = df.write
-        .mode(if (append) SaveMode.Append else SaveMode.Overwrite)
-        .bucketBy(idx.numBuckets, key)
-        .sortBy(key)
-        .format("parquet")
-      // the location is fixed at creation; append inherits it
-      (if (append) w else w.option("path", s"${idx.path}/$table"))
-        .saveAsTable(table)
-    }
-    write(bands, idx.bandsTable, "bkey")
-    write(sh, idx.shinglesTable, "doc")
-  }
-
-  /** Copy a bucketed table into a one-file-per-bucket layout under a
-    * new name/path. The pre-write `repartition(numBuckets, key)` is the
-    * load-bearing step: repartition's hash partitioning and the bucket
-    * id function are the same murmur3-mod-n, so each task holds exactly
-    * one bucket's rows and writes exactly one file.
-    *
-    * The source is read as RAW parquet from `fromPath`, NOT via
-    * `spark.table`: a catalog read advertises the bucket distribution,
-    * which lets the planner elide the repartition as redundant — and
-    * since nothing downstream exploits bucketing, the bucketed scan
-    * itself is then disabled (DisableUnnecessaryBucketedScan), leaving
-    * split-based tasks that each write a file per bucket they hold:
-    * exactly the accretion being compacted away (measured: 102 files
-    * instead of 32). The raw read has no claimed distribution, so the
-    * exchange survives. */
-  private[operators] def copyBucketed(spark: org.apache.spark.sql.SparkSession,
-                           fromPath: String, to: String, path: String,
-                           numBuckets: Int, key: String): Unit =
-    spark.read.parquet(fromPath)
-      .repartition(numBuckets, col(key))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, key).sortBy(key)
-      .option("path", path)
-      .format("parquet").saveAsTable(to)
-
-  /** Compact a many-times-extended MinHash index: every `extend*` fold
-    * appends one file per (bucket, task) slice, so a long-lived index
-    * accretes small files per bucket until open/seek cost dominates the
-    * probe. Compaction rewrites both tables to ONE file per bucket
-    * under a NEW name/path and returns the new handle — blue/green by
-    * design: the old index stays readable (single-writer contract as
-    * for extends) until the caller drops it, so probes never race a
-    * rewrite. Pairs output is identical (spec-pinned: same rows, ~1
-    * file per bucket asserted). */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-                   idx: DedupIndex, name: String, path: String): DedupIndex = {
-    require(name != idx.name && path != idx.path,
-      "compaction is blue/green: compact into a NEW name and path, " +
-        "then drop the old index")
-    val out = DedupIndex(name, path, idx.n, idx.numPerms, idx.rowsPerBand,
-      idx.numBuckets)
-    copyBucketed(spark, s"${idx.path}/${idx.bandsTable}", out.bandsTable,
-      s"$path/${out.bandsTable}", idx.numBuckets, "bkey")
-    copyBucketed(spark, s"${idx.path}/${idx.shinglesTable}",
-      out.shinglesTable, s"$path/${out.shinglesTable}", idx.numBuckets,
-      "doc")
-    out
-  }
-
-  /** Compact an extended exact-fingerprint index — same blue/green
-    * contract as [[compactIndex]]. */
-  def compactExactIndex(spark: org.apache.spark.sql.SparkSession,
-                        idx: ExactIndex, name: String,
-                        path: String): ExactIndex = {
-    require(name != idx.name && path != idx.path,
-      "compaction is blue/green: compact into a NEW name and path, " +
-        "then drop the old index")
-    val out = ExactIndex(name, path, idx.numBuckets)
-    copyBucketed(spark, s"${idx.path}/${idx.fpTable}", out.fpTable,
-      s"$path/${out.fpTable}", idx.numBuckets, "fp")
-    out
-  }
-
-  /** Compact an extended embedding index — same blue/green contract as
-    * [[compactIndex]]. */
-  def compactEmbeddingIndex(spark: org.apache.spark.sql.SparkSession,
-                            idx: EmbeddingIndex, name: String,
-                            path: String): EmbeddingIndex = {
-    require(name != idx.name && path != idx.path,
-      "compaction is blue/green: compact into a NEW name and path, " +
-        "then drop the old index")
-    val out = EmbeddingIndex(name, path, idx.dim, idx.bitsPerBand,
-      idx.numBands, idx.threshold, idx.numBuckets)
-    copyBucketed(spark, s"${idx.path}/${idx.bandsTable}", out.bandsTable,
-      s"$path/${out.bandsTable}", idx.numBuckets, "bkey")
-    copyBucketed(spark, s"${idx.path}/${idx.vectorsTable}",
-      out.vectorsTable, s"$path/${out.vectorsTable}", idx.numBuckets,
-      "vid")
-    out
+    idx.write(idx.bandsTable, bandKeyTable(
+      minhashSignatureTable(sh, idx.numPerms), idx.numPerms,
+      idx.rowsPerBand), append)
+    idx.write(idx.shinglesTable, sh, append)
   }
 
   /** Batch MinHash dedup over MATERIALIZED signatures: the whole-corpus
@@ -1442,16 +1329,11 @@ object Dedup {
     val (bits, bands) = Similarity.bandingFor(threshold, maxBands)
     val idx = EmbeddingIndex(name, path, dim, bits, bands, threshold,
       numBuckets)
-    def write(d: DataFrame, table: String, key: String): Unit =
-      d.write.mode(SaveMode.Overwrite)
-        .bucketBy(numBuckets, key).sortBy(key)
-        .option("path", s"$path/$table")
-        .format("parquet").saveAsTable(table)
-    write(embBandTable(df, id, vec, dim, bits, bands), idx.bandsTable,
-      "bkey")
-    write(df.select(col(id).as("vid"), asDoubles(col(vec)).as("v"))
-        .withColumn("nrm", l2Norm(col("v"))),
-      idx.vectorsTable, "vid")
+    idx.write(idx.bandsTable, embBandTable(df, id, vec, dim, bits, bands),
+      append = false)
+    idx.write(idx.vectorsTable,
+      df.select(col(id).as("vid"), asDoubles(col(vec)).as("v"))
+        .withColumn("nrm", l2Norm(col("v"))), append = false)
     idx
   }
 
@@ -1466,15 +1348,11 @@ object Dedup {
     import graft.functions.VectorFunctions._
     IndexAdmin.requireDisjointIds(delta, id, idx.vectorsTable, "vid",
       "extendEmbeddingIndex")
-    def append(d: DataFrame, table: String, key: String): Unit =
-      d.write.mode(SaveMode.Append)
-        .bucketBy(idx.numBuckets, key).sortBy(key)
-        .format("parquet").saveAsTable(table)
-    append(embBandTable(delta, id, vec, idx.dim, idx.bitsPerBand,
-      idx.numBands), idx.bandsTable, "bkey")
-    append(delta.select(col(id).as("vid"), asDoubles(col(vec)).as("v"))
-        .withColumn("nrm", l2Norm(col("v"))),
-      idx.vectorsTable, "vid")
+    idx.write(idx.bandsTable, embBandTable(delta, id, vec, idx.dim,
+      idx.bitsPerBand, idx.numBands), append = true)
+    idx.write(idx.vectorsTable,
+      delta.select(col(id).as("vid"), asDoubles(col(vec)).as("v"))
+        .withColumn("nrm", l2Norm(col("v"))), append = true)
   }
 
   /** Near-dup pairs between `delta` and the indexed corpus plus pairs
@@ -1796,16 +1674,8 @@ object Dedup {
                      name: String, path: String,
                      numBuckets: Int = 32): LineIndex = {
     val idx = LineIndex(name, path, numBuckets)
-    lineFreqSlice(df, id, text)
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "lfp").sortBy("lfp")
-      .option("path", s"$path/${idx.freqTable}")
-      .format("parquet").saveAsTable(idx.freqTable)
-    df.select(col(id).cast("long").as("doc_id")).distinct()
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "doc_id").sortBy("doc_id")
-      .option("path", s"$path/${idx.docsTable}")
-      .format("parquet").saveAsTable(idx.docsTable)
+    idx.write(idx.freqTable, lineFreqSlice(df, id, text), append = false)
+    idx.writeLedger(df, id, append = false)
     idx
   }
 
@@ -1813,19 +1683,13 @@ object Dedup {
     * own frequency slice (distinct-doc counts are additive exactly
     * when ingests never share a document, hence the guard) plus its
     * ledger ids. The freq table accumulates one row per (slice, lfp);
-    * probes fold with sum, [[compactLineIndex]] re-collapses. */
+    * probes fold with sum, compaction re-collapses. */
   def extendLineIndex(delta: DataFrame, id: String, text: String,
                       idx: LineIndex): Unit = {
     IndexAdmin.requireDisjointIds(delta, id, idx.docsTable, "doc_id",
       "extendLineIndex")
-    lineFreqSlice(delta, id, text)
-      .write.mode(SaveMode.Append)
-      .bucketBy(idx.numBuckets, "lfp").sortBy("lfp")
-      .format("parquet").saveAsTable(idx.freqTable)
-    delta.select(col(id).cast("long").as("doc_id")).distinct()
-      .write.mode(SaveMode.Append)
-      .bucketBy(idx.numBuckets, "doc_id").sortBy("doc_id")
-      .format("parquet").saveAsTable(idx.docsTable)
+    idx.write(idx.freqTable, lineFreqSlice(delta, id, text), append = true)
+    idx.writeLedger(delta, id, append = true)
   }
 
   /** [[lineDedup]]'s remove-all rule for a delta against the indexed
@@ -1857,25 +1721,5 @@ object Dedup {
       .groupBy("doc_id")
       .agg(collect_list(col("lidx")).as("drop"))
     reassembleMinusDrops(withL, dropIdx)
-  }
-
-  /** Blue/green compaction: collapse the accumulated per-ingest slices
-    * to one row per lfp in a NEW index, then drop the old one. */
-  def compactLineIndex(spark: org.apache.spark.sql.SparkSession,
-                       idx: LineIndex, name: String,
-                       path: String): LineIndex = {
-    require(name != idx.name && path != idx.path,
-      "compaction is blue/green: compact into a NEW name and path, " +
-        "then drop the old index")
-    val out = LineIndex(name, path, idx.numBuckets)
-    spark.table(idx.freqTable)
-      .groupBy("lfp").agg(sum("ndocs").as("ndocs"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(out.numBuckets, "lfp").sortBy("lfp")
-      .option("path", s"$path/${out.freqTable}")
-      .format("parquet").saveAsTable(out.freqTable)
-    copyBucketed(spark, s"${idx.path}/${idx.docsTable}", out.docsTable,
-      s"$path/${out.docsTable}", idx.numBuckets, "doc_id")
-    out
   }
 }

@@ -462,8 +462,6 @@ object Selection {
     require(smoothMicro >= 0L && smoothMicro <= 1000000L,
       s"smoothMicro must be in [0, 1e6], got $smoothMicro")
     import graft.functions.TextFunctions
-    val spark = train.sparkSession
-    import spark.implicits._
     val tr = train.where(col(sourceCol).isNotNull)
     val ho = heldout.where(col(sourceCol).isNotNull)
     // proxy loss: the global generalist

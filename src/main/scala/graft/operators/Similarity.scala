@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
@@ -11,9 +11,12 @@ import graft.functions.VectorFunctions._
   * `cell IN (...)` predicate prunes to exactly the probed partitions)
   * plus the centroid table the cells were assigned against. */
 case class IvfIndex(name: String, path: String) extends PersistedIndex {
+  type Self = IvfIndex
+  protected def at(name: String, path: String) = copy(name = name, path = path)
   def corpusTable: String = s"${name}_cells"
   def centroidsTable: String = s"${name}_cents"
-  def tables: Seq[String] = Seq(corpusTable, centroidsTable)
+  def layout: Seq[IndexTable] = Seq(IndexTable.Cells(corpusTable),
+    IndexTable.Plain(centroidsTable))
 }
 
 /** Handle to a persisted IVF-PQ index (see
@@ -26,10 +29,13 @@ case class IvfIndex(name: String, path: String) extends PersistedIndex {
   * reads the vector column; the exact refine reads vectors only for
   * the top-R candidate ids. */
 case class IvfPqIndex(name: String, path: String) extends PersistedIndex {
+  type Self = IvfPqIndex
+  protected def at(name: String, path: String) = copy(name = name, path = path)
   def corpusTable: String = s"${name}_pqc"
   def centroidsTable: String = s"${name}_pqcent"
   def codebookTable: String = s"${name}_pqcb"
-  def tables: Seq[String] = Seq(corpusTable, centroidsTable, codebookTable)
+  def layout: Seq[IndexTable] = Seq(IndexTable.Cells(corpusTable),
+    IndexTable.Plain(centroidsTable), IndexTable.Plain(codebookTable))
 }
 
 /** Approximate / exact nearest-neighbor search over an embedding column.
@@ -42,9 +48,9 @@ case class IvfPqIndex(name: String, path: String) extends PersistedIndex {
   *   nearest centroid (broadcast centroids), then search only the query's
   *   `nProbe` closest cells. At 100 TB the corpus is bucketed/partitioned
   *   by cell id, so a query touches nProbe partitions instead of all.
-  * - [[cosineLshBuckets]]: random-hyperplane signature for LSH bucketing —
-  *   deterministic planes derived from xxhash64, so signatures are
-  *   reproducible across runs/engines.
+  * - [[cosineLshBandKeys]]: banded random-hyperplane signatures for LSH
+  *   candidate generation — deterministic planes from a seeded PRNG, so
+  *   signatures are reproducible across runs/JVMs.
   */
 object Similarity {
 
@@ -242,6 +248,12 @@ object Similarity {
         (round(col("sim"), 4) + lit(0.0)).as("sim"))
   }
 
+  /** The (cell, centroid) table an IVF or IVF-PQ index persists. */
+  private def centroidTable(centroids: DataFrame, centId: String,
+                            centVec: String): DataFrame =
+    centroids.select(col(centId).cast("bigint").as("cell"),
+      asDoubles(col(centVec)).as("centroid"))
+
   /** Persist the IVF layout the scaladoc above promises: the corpus with
     * assigned cells (plus precomputed norms) written as an external
     * parquet table PARTITIONED by cell, and the centroid table beside
@@ -252,19 +264,12 @@ object Similarity {
                     centroids: DataFrame, centId: String, centVec: String,
                     name: String, path: String): IvfIndex = {
     val idx = IvfIndex(name, path)
-    centroids
-      .select(col(centId).cast("bigint").as("cell"),
-        asDoubles(col(centVec)).as("centroid"))
-      .write.mode(SaveMode.Overwrite)
-      .option("path", s"$path/${idx.centroidsTable}")
-      .format("parquet").saveAsTable(idx.centroidsTable)
-    assignCells(corpus, id, vec, centroids, centId, centVec)
-      .select(col(id).as("cid"), asDoubles(col(vec)).as("cv"), col("cell"))
-      .withColumn("cn", l2Norm(col("cv")))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell")
-      .option("path", s"$path/${idx.corpusTable}")
-      .format("parquet").saveAsTable(idx.corpusTable)
+    idx.write(idx.centroidsTable, centroidTable(centroids, centId, centVec),
+      append = false)
+    idx.write(idx.corpusTable,
+      assignCells(corpus, id, vec, centroids, centId, centVec)
+        .select(col(id).as("cid"), asDoubles(col(vec)).as("cv"), col("cell"))
+        .withColumn("cn", l2Norm(col("cv"))), append = false)
     idx
   }
 
@@ -288,38 +293,10 @@ object Similarity {
     IndexAdmin.requireDisjointIds(delta, id, idx.corpusTable, "cid",
       "extendIvfIndex")
     val cents = spark.table(idx.centroidsTable)
-    assignCells(delta, id, vec, cents, "cell", "centroid")
-      .select(col(id).as("cid"), asDoubles(col(vec)).as("cv"), col("cell"))
-      .withColumn("cn", l2Norm(col("cv")))
-      .write.mode(SaveMode.Append)
-      .partitionBy("cell")
-      .format("parquet").saveAsTable(idx.corpusTable)
-  }
-
-  /** Compact a many-times-extended IVF index: each fold appends one
-    * small file per touched cell directory; compaction rewrites the
-    * corpus table to one file per cell under a NEW name/path (the
-    * pre-write `repartition(col("cell"))` co-locates each cell in one
-    * task) and copies the centroids verbatim. Blue/green like the dedup
-    * compactions: the old index stays probe-able until the caller drops
-    * it. Probe results are identical (spec-pinned). */
-  def compactIvfIndex(spark: SparkSession, idx: IvfIndex, name: String,
-                      path: String): IvfIndex = {
-    require(name != idx.name && path != idx.path,
-      "compaction is blue/green: compact into a NEW name and path, " +
-        "then drop the old index")
-    val out = IvfIndex(name, path)
-    spark.table(idx.centroidsTable)
-      .write.mode(SaveMode.Overwrite)
-      .option("path", s"$path/${out.centroidsTable}")
-      .format("parquet").saveAsTable(out.centroidsTable)
-    spark.table(idx.corpusTable)
-      .repartition(col("cell"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell")
-      .option("path", s"$path/${out.corpusTable}")
-      .format("parquet").saveAsTable(out.corpusTable)
-    out
+    idx.write(idx.corpusTable,
+      assignCells(delta, id, vec, cents, "cell", "centroid")
+        .select(col(id).as("cid"), asDoubles(col(vec)).as("cv"), col("cell"))
+        .withColumn("cn", l2Norm(col("cv"))), append = true)
   }
 
   /** IVF ANN against a persisted index: identical results to [[ivfKnn]]
@@ -488,16 +465,6 @@ object Similarity {
     }
     centroids
   }
-
-  /** Single random-hyperplane LSH bucket: `nBits` sign bits as one
-    * bigint — useful as a coarse partitioning/bucketing key (vectors
-    * with high cosine share buckets with probability
-    * (1 - acos(sim)/pi)^nBits). For candidate generation prefer the
-    * banded form ([[cosineLshBandKeys]]) — a single long bucket has
-    * near-zero recall at moderate similarity. Deterministic across
-    * runs/JVMs (seeded java.util.Random). */
-  def cosineLshBuckets(vec: Column, dim: Int, nBits: Int): Column =
-    cosineLshBandKeys(vec, dim, nBits, 1).getItem(0)
 
   /** Per-band LSH bucket keys: `numBands` independent bands of
     * `bitsPerBand` sign bits each, as array<bigint> (index = band). All
@@ -993,19 +960,12 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     val idx = IvfPqIndex(name, path)
-    centroids
-      .select(col(centId).cast("bigint").as("cell"),
-        asDoubles(col(centVec)).as("centroid"))
-      .write.mode(SaveMode.Overwrite)
-      .option("path", s"$path/${idx.centroidsTable}")
-      .format("parquet").saveAsTable(idx.centroidsTable)
-    cb.centroids.zipWithIndex.flatMap { case (subCents, s) =>
-      subCents.zipWithIndex.map { case (cent, c) => (s, c, cent.toSeq) }
-    }.toDF("sub", "code", "centroid")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .option("path", s"$path/${idx.codebookTable}")
-      .format("parquet").saveAsTable(idx.codebookTable)
+    idx.write(idx.centroidsTable, centroidTable(centroids, centId, centVec),
+      append = false)
+    idx.write(idx.codebookTable,
+      cb.centroids.zipWithIndex.flatMap { case (subCents, s) =>
+        subCents.zipWithIndex.map { case (cent, c) => (s, c, cent.toSeq) }
+      }.toDF("sub", "code", "centroid").coalesce(1), append = false)
     writeIvfPqSlice(assignCells(corpus, id, vec, centroids, centId, centVec)
         .select(col(id).cast("long").as("cid"), asDoubles(col(vec)).as("cv"),
           col("cell").cast("long").as("cell")),
@@ -1034,12 +994,7 @@ object Similarity {
             math.sqrt(n2))
         }
       }.toDF()
-    val w = encoded.write
-      .mode(if (append) SaveMode.Append else SaveMode.Overwrite)
-      .partitionBy("cell")
-      .format("parquet")
-    (if (append) w else w.option("path", s"${idx.path}/${idx.corpusTable}"))
-      .saveAsTable(idx.corpusTable)
+    idx.write(idx.corpusTable, encoded, append)
   }
 
   /** Fold NEW vectors into a persisted IVF-PQ index: assign to the
@@ -1057,33 +1012,6 @@ object Similarity {
         .select(col(id).cast("long").as("cid"), asDoubles(col(vec)).as("cv"),
           col("cell").cast("long").as("cell")),
       loadPqCodebook(spark, idx), idx, append = true)
-  }
-
-  /** Compact a many-times-extended IVF-PQ index — same blue/green
-    * contract as [[compactIvfIndex]]: the corpus table rewrites to one
-    * file per cell under a NEW name/path, the centroid and codebook
-    * tables copy verbatim, the old generation stays probe-able until
-    * the caller drops it. */
-  def compactIvfPqIndex(spark: SparkSession, idx: IvfPqIndex, name: String,
-                        path: String): IvfPqIndex = {
-    require(name != idx.name && path != idx.path,
-      "compaction is blue/green: compact into a NEW name and path, " +
-        "then drop the old index")
-    val out = IvfPqIndex(name, path)
-    def copy(from: String, to: String): Unit =
-      spark.table(from)
-        .write.mode(SaveMode.Overwrite)
-        .option("path", s"$path/$to")
-        .format("parquet").saveAsTable(to)
-    copy(idx.centroidsTable, out.centroidsTable)
-    copy(idx.codebookTable, out.codebookTable)
-    spark.table(idx.corpusTable)
-      .repartition(col("cell"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell")
-      .option("path", s"$path/${out.corpusTable}")
-      .format("parquet").saveAsTable(out.corpusTable)
-    out
   }
 
   /** Rehydrate the PQ codebook from the index's own table. */

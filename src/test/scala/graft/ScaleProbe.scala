@@ -368,8 +368,8 @@ object ScaleProbe {
     * construction, so the default-on disjointness scan is opted out —
     * the documented upstream-guarantee case — to keep the folds
     * O(delta)), then measures probe wall (median of 3) and corpus-table
-    * file count BEFORE and AFTER [[graft.operators.Similarity
-    * .compactIvfIndex]]. Both generations are dropped before return. */
+    * file count BEFORE and AFTER [[graft.operators.PersistedIndex
+    * .compact]]. Both generations are dropped before return. */
   private def compactionProbe(spark: SparkSession, emb: DataFrame,
                               sfDir: String, k: Int): String = {
     import graft.operators.Similarity
@@ -410,8 +410,7 @@ object ScaleProbe {
       val outPath = java.nio.file.Files
         .createTempDirectory(s"graft-probe-cmp2-$k").toString
       val tc0 = System.nanoTime()
-      out = Similarity.compactIvfIndex(spark, idx, s"probe_cmp_out_$k",
-        outPath)
+      out = idx.compact(spark, s"probe_cmp_out_$k", outPath)
       val compactSec = (System.nanoTime() - tc0) / 1e9
       val (filesAfter, probeAfter) = (files(out), probeMedian(out))
       s""""ivf_compaction":{"folds":20,"files_before":$filesBefore,""" +
@@ -423,64 +422,6 @@ object ScaleProbe {
       idx.drop(spark)
       if (out != null) out.drop(spark)
     }
-  }
-
-  /** Digest-vs-string-key shuffle A/B for the n-gram scorer: runs BOTH
-    * formulations on the same (k-fold) corpus and reports wall plus
-    * the EXECUTED plan's exchange totals — dataSize (uncompressed rows
-    * as shuffled) and shuffleBytesWritten (bytes on the wire/disk) —
-    * walked out of the materialized AQE query stages. The action is
-    * collect() (250 scored rows) because it is the one action bound to
-    * the DataFrame's OWN QueryExecution — count()/foreach() build
-    * fresh ones whose plan metrics stay zero. Fixture pitfall this
-    * measurement surfaced: a single-file scan is ONE partition, which
-    * trivially satisfies every clustered distribution, so
-    * EnsureRequirements inserts NO exchanges at all and the whole
-    * scoring fuses shuffle-free — the probe repartitions the train
-    * side first so the audited exchanges exist (as they do on any real
-    * multi-split corpus). */
-  private def ngramShuffleAbProbe(spark: SparkSession, docs: DataFrame,
-                                  sfDir: String): String = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => q +: walk(q.plan)
-      case other =>
-        (other +: other.children.flatMap(walk)) ++
-          other.subqueries.flatMap(walk)
-    }
-    val train = docs.repartition(32)
-    val scored = engine.Tables.documents(spark, sfDir)
-      .where(col("doc_id") < 250)
-      .withColumn("doc_id", col("doc_id") + lit(1300000000L))
-    def audit(df: DataFrame): (Double, Double, Double) = {
-      val t0 = System.nanoTime()
-      df.collect()
-      val w = (System.nanoTime() - t0) / 1e9
-      val ex = walk(df.queryExecution.executedPlan).collect {
-        case e: ShuffleExchangeLike =>
-          (e.metrics("dataSize").value,
-            e.metrics.get("shuffleBytesWritten").map(_.value)
-              .getOrElse(0L))
-      }
-      (w, ex.map(_._1).sum / 1e6, ex.map(_._2).sum / 1e6)
-    }
-    val (dw, dd, dwr) = audit(operators.CorpusStats
-      .ngramLogProbAgainst(train, scored, "doc_id", "text", 5))
-    val (sw, sd, swr) = audit(operators.CorpusStats
-      .ngramLogProbAgainstStrKeys(train, scored, "doc_id", "text", 5))
-    System.err.println(
-      f"[probe] ngram_ab digest wall=$dw%.2fs data=$dd%.1fMB " +
-        f"wire=$dwr%.1fMB | strkeys wall=$sw%.2fs data=$sd%.1fMB " +
-        f"wire=$swr%.1fMB")
-    s""""ngram_ab":{"digest_wall":${"%.2f".format(dw)},""" +
-      s""""digest_data_mb":${"%.1f".format(dd)},""" +
-      s""""digest_wire_mb":${"%.1f".format(dwr)},""" +
-      s""""strkeys_wall":${"%.2f".format(sw)},""" +
-      s""""strkeys_data_mb":${"%.1f".format(sd)},""" +
-      s""""strkeys_wire_mb":${"%.1f".format(swr)}}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -1115,17 +1056,6 @@ object ScaleProbe {
               .where(col("doc_id") < 250)
               .withColumn("doc_id", col("doc_id") + lit(1300000000L)),
             "doc_id", "text", order = 5).count()),
-        // the A/B twin on RAW string keys (the pre-digest formulation):
-        // the pair's shuffleMB + wall rows are the measured evidence
-        // for the 16-byte-digest trade — digests pay row-local md5 to
-        // shrink every count/score shuffle to fixed-width keys
-        "ngram_lm_strkeys" -> (() =>
-          operators.CorpusStats.ngramLogProbAgainstStrKeys(
-            docs,
-            engine.Tables.documents(spark, sfDir)
-              .where(col("doc_id") < 250)
-              .withColumn("doc_id", col("doc_id") + lit(1300000000L)),
-            "doc_id", "text", order = 5).count()),
         // the incremental twin: same fixed scored side, but the train
         // counts fold Exchange-free out of the persisted 5-order index
         // instead of being re-counted — the pair measures what the
@@ -1308,10 +1238,7 @@ object ScaleProbe {
       if (lineIdx != null) lineIdx.drop(spark)
       if (spanIdx != null) spanIdx.drop(spark)
       if (ngIdx != null) ngIdx.drop(spark)
-      val ngramAbJson =
-        if (wanted("ngram_ab")) "," + ngramShuffleAbProbe(spark, docs, sfDir)
-        else ""
-      println(s"""{"scale":$k,"times":{${times.mkString(",")}}$streamingJson$rateCapJson$rateCapTtlJson$sessionsJson$streamJoinJson$compactionJson$ngramAbJson}""")
+      println(s"""{"scale":$k,"times":{${times.mkString(",")}}$streamingJson$rateCapJson$rateCapTtlJson$sessionsJson$streamJoinJson$compactionJson}""")
     }
     spark.stop()
   }

@@ -42,7 +42,6 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("quality score stays in [0,1]") {
     val s = spark
-    import s.implicits._
     val docs = graft.engine.Tables.documents(s, sf())
     val stats = docs.select(qualityScore(col("text")).as("q"))
       .agg(min("q"), max("q")).collect()(0)
@@ -247,7 +246,6 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("tokenEntropy kernel equals the composed explode/groupBy form") {
     val s = spark
-    import s.implicits._
     val docs = graft.engine.Tables.documents(s, sf())
       .where(col("text").isNotNull)
     val kernel = docs.select(col("doc_id"),

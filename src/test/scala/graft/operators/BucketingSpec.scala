@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.engine.Tables
-import org.apache.spark.sql.functions._
 
 /** Bucketed co-located join: correctness AND the plan property that
   * matters at 100 TB — no Exchange on either join side. */

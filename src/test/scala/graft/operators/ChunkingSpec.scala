@@ -151,8 +151,7 @@ class ChunkingSpec extends SparkSpec {
       }
 
       // compact: blue/green to one file per bucket, probe-identical
-      val compacted = Chunking.compactChunkIndex(spark, idx,
-        "chunkidx_spec_g", s"$tmp/green")
+      val compacted = idx.compact(spark, "chunkidx_spec_g", s"$tmp/green")
       try {
         val before = Chunking.deltaNovelty(rekeys.unionAll(fresh),
           "doc_id", "text", idx).collect().map(_.toSeq).toSet

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.TextFunctions
 import org.apache.spark.sql.functions._
 
 class CorpusStatsSpec extends SparkSpec {

@@ -306,7 +306,7 @@ class IncrementalDedupSpec extends SparkSpec {
     }
   }
 
-  test("compactLineIndex collapses slices and preserves probe results") {
+  test("line compaction collapses slices and preserves probe results") {
     val s = spark
     val all = Tables.documents(s, sf()).select(col("doc_id"),
       graft.functions.TextFunctions.tokenLines(col("text"), 8).as("text"))
@@ -325,7 +325,7 @@ class IncrementalDedupSpec extends SparkSpec {
         "extend must append a second slice for shared lines")
       val before = Dedup.lineDedupAgainstIndex(delta, "doc_id", "text", idx)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      val out = Dedup.compactLineIndex(s, idx, "inc_spec_lfc2", tmpPath())
+      val out = idx.compact(s, "inc_spec_lfc2", tmpPath())
       try {
         assert(s.table(out.freqTable).count() == distinctLfp,
           "compaction must collapse to one row per lfp")
@@ -368,7 +368,7 @@ class IncrementalDedupSpec extends SparkSpec {
     graft.util.FsUtil.listFiles(java.nio.file.Paths.get(loc), ".parquet")
   }
 
-  test("compactIndex: identical pairs, one file per bucket after many folds") {
+  test("minhash compaction: identical pairs, one file per bucket") {
     val s = spark
     val all = Tables.documents(s, sf())
     val corpus = all.where(col("doc_id") % 8 < 4)
@@ -388,7 +388,7 @@ class IncrementalDedupSpec extends SparkSpec {
       assert(filesBefore > idx.numBuckets,
         s"vector vacuous: $filesBefore files after 3 folds does not " +
           s"exceed ${idx.numBuckets} buckets")
-      out = Dedup.compactIndex(s, idx, "inc_spec_cp2", tmpPath())
+      out = idx.compact(s, "inc_spec_cp2", tmpPath())
       // pairs identical through the compacted handle
       val after = pairSet(
         Dedup.pairsAgainstIndex(probe, "doc_id", "text", out, 0.8,
@@ -408,7 +408,7 @@ class IncrementalDedupSpec extends SparkSpec {
       }
       // in-place compaction must refuse (blue/green contract)
       intercept[IllegalArgumentException] {
-        Dedup.compactIndex(s, idx, idx.name, idx.path)
+        idx.compact(s, idx.name, idx.path)
       }
       // cutover: drop the OLD generation — catalog entries and the
       // backing path both go; the compacted handle keeps probing
@@ -430,7 +430,7 @@ class IncrementalDedupSpec extends SparkSpec {
     }
   }
 
-  test("compactExactIndex and compactIvfIndex preserve results, shrink files") {
+  test("exact and IVF compaction preserve results, shrink files") {
     val s = spark
     val all = Tables.documents(s, sf())
     val emb = Tables.embeddings(s, sf())
@@ -451,7 +451,7 @@ class IncrementalDedupSpec extends SparkSpec {
       def vset(i: ExactIndex) = Dedup.exactAgainstIndex(probe, "doc_id",
         "text", i).collect().map(r => (r.getLong(0), r.getBoolean(2))).toSet
       val eBefore = vset(eIdx)
-      eOut = Dedup.compactExactIndex(s, eIdx, "inc_spec_ce2", tmpPath())
+      eOut = eIdx.compact(s, "inc_spec_ce2", tmpPath())
       assert(vset(eOut) == eBefore, "exact compaction changed verdicts")
       assert(parquetFiles(s, eOut.fpTable).size <= eIdx.numBuckets)
 
@@ -463,7 +463,7 @@ class IncrementalDedupSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val iBefore = kset(iIdx)
       val iFilesBefore = s.table(iIdx.corpusTable).inputFiles.length
-      iOut = Similarity.compactIvfIndex(s, iIdx, "inc_spec_ci2", tmpPath())
+      iOut = iIdx.compact(s, "inc_spec_ci2", tmpPath())
       assert(kset(iOut) == iBefore, "ivf compaction changed the probe")
       val iFilesAfter = s.table(iOut.corpusTable).inputFiles.length
       assert(iFilesAfter < iFilesBefore,
@@ -616,7 +616,7 @@ class IncrementalDedupSpec extends SparkSpec {
       // duplicated; and our old probe result must be unchanged
       val before = spanSet(Dedup.duplicateSpansAgainstIndex(delta,
         "doc_id", "text", idx))
-      val out = Dedup.compactSpanIndex(s, idx, "inc_spec_sp3", tmpPath())
+      val out = idx.compact(s, "inc_spec_sp3", tmpPath())
       try {
         assert(s.table(out.freqTable).count() == distinctG)
         assert(spanSet(Dedup.duplicateSpansAgainstIndex(delta, "doc_id",

@@ -132,7 +132,7 @@ class IvfIndexSpec extends SparkSpec {
       val filesBefore = s.table(folded.corpusTable).inputFiles.length
       val before = rows(Similarity.ivfPqKnnFromIndex(s, queries, "vec_id",
         "embedding", folded, 3, nProbe = 4, refine = 48))
-      val out = Similarity.compactIvfPqIndex(s, folded, "ivfpq_spec_cp",
+      val out = folded.compact(s, "ivfpq_spec_cp",
         tmp())
       try {
         assert(s.table(out.corpusTable).inputFiles.length < filesBefore,

@@ -103,7 +103,7 @@ class NgramIndexSpec extends SparkSpec {
       val before = scores(CorpusStats.ngramLogProbAgainstIndex(
         sc, "doc_id", "text", idx)
         .select("doc", "n_tokens", "n_oov", "n_backed", "avg_lp"))
-      val out = CorpusStats.compactNgramIndex(s, idx, "ng_spec_d2",
+      val out = idx.compact(s, "ng_spec_d2",
         tmpPath())
       try {
         // one row per distinct gram after compaction (two slices before)

@@ -326,8 +326,6 @@ class SimilaritySpec extends SparkSpec {
       assert(mine == want, s"query $qid diverges from filtered knn")
     }
     // a null-label corpus row is a valid negative for labeled queries
-    val s = spark
-    import s.implicits._
     val withNull = emb.select(col("vec_id"), col("embedding"),
       when(col("vec_id") === 7, lit(null)).otherwise(col("label"))
         .as("label"))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Interchange contract of [[VocabIO]]: TRAINED vocabularies round-trip
   * through the public formats byte-stably, and imported artifacts drive

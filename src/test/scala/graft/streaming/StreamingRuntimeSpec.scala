@@ -301,7 +301,6 @@ class StreamingRuntimeSpec extends SparkSpec {
     // the reference's third example app, loaded from its actual JSON:
     // GET /test/:val -> non-zero filter (proceedOnlyOnEmit) -> log
     implicit val s: org.apache.spark.sql.SparkSession = spark
-    import s.implicits._
     val app = Dsl.parseApp(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/root/reference/examples/filter-flogo.json"))))
     // keyed by ACTION id ("simple_agg" — the example reuses agg-flogo's
@@ -335,7 +334,6 @@ class StreamingRuntimeSpec extends SparkSpec {
 
   test("rest trigger source: HTTP requests become pipeline events") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
-    import s.implicits._
     val ingest = new RestIngest(0)
     val port = ingest.start()
     val p = Dsl.parsePipeline("p",
@@ -561,7 +559,6 @@ class StreamingRuntimeSpec extends SparkSpec {
     // feeds the filter pipeline, whose outputChannel fans into a second
     // pipeline (channel-flogo.json topology), with telemetry attached
     implicit val s: org.apache.spark.sql.SparkSession = spark
-    import s.implicits._
     Channels.reset()
     val app = Dsl.parseApp(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/root/reference/examples/channel-flogo.json"))))
