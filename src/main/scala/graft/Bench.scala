@@ -169,17 +169,12 @@ object Bench {
     // as invalid, not as a 0-second bench
     require(selected.nonEmpty,
       s"SPARK_GRAFT_ONLY matched no queries: ${only.get.mkString(", ")}")
-    // Per-task executor-run and JVM-GC time, accumulated across the whole
-    // session; snapshotted around each run so a stalled run's nature shows
-    // up: wall >> task time = driver-side (planning / codegen /
-    // scheduling / external CPU contention), task time ~ wall * cores =
-    // genuine compute. Listener-bus delivery is async, so per-run
-    // attribution is approximate — good enough for the per-query MEDIANS
-    // emitted in the JSON (task_ms/gc_ms), which is what lets a reader
-    // classify a contended-host run without a re-run: host contention
-    // inflates wall while task-time medians stay near baseline; a real
-    // code regression moves both.
+    // Per-task executor run, CPU and JVM-GC time, accumulated across the
+    // whole session and snapshotted around each rep. Listener-bus
+    // delivery is async, so per-rep attribution is approximate — good
+    // enough for the per-gate MEDIANS the verdict reads ([[classify]]).
     val taskMs = new java.util.concurrent.atomic.AtomicLong(0)
+    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
     val gcMs = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -187,6 +182,7 @@ object Bench {
             te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
           if (te.taskMetrics != null) {
             taskMs.addAndGet(te.taskMetrics.executorRunTime)
+            cpuNs.addAndGet(te.taskMetrics.executorCpuTime)
             gcMs.addAndGet(te.taskMetrics.jvmGCTime)
             ()
           }
@@ -201,276 +197,112 @@ object Bench {
     // partial time, so a broken query can never flatter the total.
     val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(3)
     require(reps >= 1, s"SPARK_GRAFT_REPS must be >= 1, got $reps")
-    // ---- host-contention sentinel ------------------------------------
-    // A fixed single-thread integer loop (serial FNV-1a dependency
-    // chain: immune to memory, GC and JIT-vectorization effects once
-    // warm) timed before every rep. On a quiet host it is constant to a
-    // few percent; under CPU oversubscription it stretches with the
-    // steal. This is the witness the wall/task dual gate lacks: host
-    // contention inflates BOTH clocks (three rounds of driver runs
-    // produced phantom regression flags a quiet re-run dismissed), but
-    // it also stretches this loop, while a genuine code regression
-    // leaves it flat — so a flag whose reps ran under a drifted
-    // calibration is reported separately (contended_flags) instead of
-    // laundered into "regressions".
-    @volatile var calSink = 0
-    def calLoop(): Unit = {
-      var h = 0x811c9dc5
-      var i = 0
-      while (i < 10000000) {
-        h = (h ^ i) * 0x01000193
-        i += 1
-      }
-      calSink = h
+    // true median: even rep counts average the two middles (the bare
+    // lower-middle would flatter every even-reps run low)
+    def med(xs: Vector[Double]): Double = {
+      val s = xs.sorted
+      if (s.length % 2 == 1) s(s.length / 2)
+      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
     }
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      calLoop()
-      (System.nanoTime() - t0) / 1e6
-    }
-    // the MULTI-core witness: 8 threads run the same loop concurrently
-    // and the wall of the slowest is reported. A host stealing whole
-    // cores from this 32-thread suite can leave one thread untouched
-    // (single-thread calibration stays flat) while the parallel stages
-    // that dominate task time starve — 8 concurrent loops can't all
-    // dodge the steal.
-    def calibrateMT(): Double = {
-      val n = math.min(8, Runtime.getRuntime.availableProcessors)
-      val t0 = System.nanoTime()
-      val threads = (0 until n).map(_ => new Thread(() => calLoop()))
-      threads.foreach(_.start())
-      threads.foreach(_.join())
-      (System.nanoTime() - t0) / 1e6
-    }
-    // suite-start references: min of 5 (the quietest observation — any
-    // single draw can be stolen from, the minimum can only be honest)
-    val calBase = { calibrate(); (1 to 5).map(_ => calibrate()).min }
-    val calMtBase = { calibrateMT(); (1 to 5).map(_ => calibrateMT()).min }
-    val calMed = scala.collection.mutable.Map.empty[String, Double]
-    val calMtMed = scala.collection.mutable.Map.empty[String, Double]
     // DETERMINISTIC name order: `queries` is a hash map, so adding one
     // query used to reshuffle the whole schedule — and with it, which
     // query pays any first-use cost the warm-up misses — making
     // per-query numbers incomparable across suite growth
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val times = Vector.newBuilder[Double]
-      val taskTimes = Vector.newBuilder[Double]
-      val gcTimes = Vector.newBuilder[Double]
-      val calTimes = Vector.newBuilder[Double]
-      val calMtTimes = Vector.newBuilder[Double]
-      var failed = false
-      var r = 0
-      while (r < reps && !failed) {
-        calTimes += calibrate()
-        calMtTimes += calibrateMT()
-        val (task0, gc0) = (taskMs.get(), gcMs.get())
-        val t0 = System.nanoTime()
-        try {
-          timed(fn(spark, sfDir))
-          val dt = (System.nanoTime() - t0) / 1e9
-          times += dt
-          taskTimes += (taskMs.get() - task0).toDouble
-          gcTimes += (gcMs.get() - gc0).toDouble
-          System.err.println(f"[bench] $name run${r + 1} wall=$dt%.2fs " +
-            f"task=${(taskMs.get() - task0) / 1e3}%.2fs " +
-            f"gc=${(gcMs.get() - gc0) / 1e3}%.2fs")
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          failed = true
+    val results: Seq[(String, Clocks, Vector[Double])] =
+      selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+        // per rep: (wall s, task run ms, task CPU ms, GC ms)
+        val samples = Vector.newBuilder[(Double, Double, Double, Double)]
+        var failed = false
+        var r = 0
+        while (r < reps && !failed) {
+          val (task0, cpu0, gc0) = (taskMs.get(), cpuNs.get(), gcMs.get())
+          val t0 = System.nanoTime()
+          try {
+            timed(fn(spark, sfDir))
+            val dt = (System.nanoTime() - t0) / 1e9
+            val run = (taskMs.get() - task0).toDouble
+            val cpu = ((cpuNs.get() - cpu0) / 1000000L).toDouble
+            val gc = (gcMs.get() - gc0).toDouble
+            samples += ((dt, run, cpu, gc))
+            System.err.println(f"[bench] $name run${r + 1} wall=$dt%.2fs " +
+              f"task=${run / 1e3}%.2fs cpu=${cpu / 1e3}%.2fs " +
+              f"gc=${gc / 1e3}%.2fs")
+          } catch { case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+            failed = true
+          }
+          r += 1
         }
-        r += 1
+        val ss = samples.result()
+        val ts = ss.map(_._1)
+        if (failed) (name, Clocks(-1.0, -1.0, -1.0, -1.0, -1.0), ts)
+        else {
+          val median = med(ts)
+          // median absolute deviation: the per-query spread measure that
+          // a one-off stall cannot inflate (unlike stddev)
+          (name, Clocks(median, med(ts.map(t => math.abs(t - median))),
+            med(ss.map(_._2)), med(ss.map(_._3)), med(ss.map(_._4))), ts)
+        }
       }
-      val ts = times.result()
-      // true median: even rep counts average the two middles (the bare
-      // lower-middle would flatter every even-reps run low)
-      def med(xs: Vector[Double]): Double = {
-        val s = xs.sorted
-        if (s.length % 2 == 1) s(s.length / 2)
-        else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-      }
-      val median = if (failed) -1.0 else med(ts)
-      // median absolute deviation: the per-query spread measure that a
-      // one-off stall cannot inflate (unlike stddev)
-      val mad = if (failed) -1.0 else med(ts.map(t => math.abs(t - median)))
-      val taskMed = if (failed) -1.0 else med(taskTimes.result())
-      val gcMed = if (failed) -1.0 else med(gcTimes.result())
-      val cs = calTimes.result()
-      if (cs.nonEmpty) calMed(name) = med(cs)
-      val cms = calMtTimes.result()
-      if (cms.nonEmpty) calMtMed(name) = med(cms)
-      name -> ((median, mad, taskMed, gcMed, ts))
-    }
-    val qs = results.map { case (k, (m, _, _, _, _)) => s"\"" + k + "\":" + m }
-      .mkString("{", ",", "}")
-    val mads = results.map { case (k, (_, d, _, _, _)) => s"\"" + k + "\":" + d }
-      .mkString("{", ",", "}")
-    val taskJson = results.map { case (k, (_, _, t, _, _)) =>
-      s"\"" + k + "\":" + t }.mkString("{", ",", "}")
-    val gcJson = results.map { case (k, (_, _, _, g, _)) =>
-      s"\"" + k + "\":" + g }.mkString("{", ",", "}")
-    val runs = results.map { case (k, (_, _, _, _, ts)) =>
-      s"\"" + k + "\":" + ts.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val errs = results.collect { case (k, (m, _, _, _, _)) if m < 0 =>
+    def perGate(f: Clocks => String): String =
+      results.map { case (k, c, _) => "\"" + k + "\":" + f(c) }
+        .mkString("{", ",", "}")
+    val runs = results.map { case (k, _, ts) =>
+      "\"" + k + "\":" + ts.mkString("[", ",", "]") }.mkString("{", ",", "}")
+    val errs = results.collect { case (k, c, _) if c.median < 0 =>
       "\"" + k + "\"" }.mkString("[", ",", "]")
-    // ---- delta vs the RECORDED per-query baseline ---------------------
+    // ---- verdict vs the RECORDED per-gate baseline --------------------
     // BENCH_BASELINE.json (committed; re-recordable with
-    // SPARK_GRAFT_RECORD_BASELINE=1) holds {query: {median, mad}} from a
-    // reference run on this host. Each run emits per-query deltas and a
-    // mechanical noise-vs-regression verdict: a query regresses when its
-    // median exceeds the recorded one by more than
-    // max(5 x the larger MAD, 15% of the recorded median, 50 ms) — MAD
-    // scales the gate to each query's own measured variance, so a
-    // multi-trigger streaming gate with seconds of scheduling jitter
-    // needs a much larger swing to flag than a stable 100 ms query.
-    // The 15% relative floor is the measured CROSS-run host envelope
-    // (within-run MADs are 1-3%, but back-to-back full-suite runs on
-    // this host swing individual sub-second queries ±15% with totals
-    // ±10% — five same-code runs measured 26.9/29.7/28.9/30.6/34.2 s);
-    // a floor below that flags a couple of random small queries every
-    // run, which is noise laundered as signal.
+    // SPARK_GRAFT_RECORD_BASELINE=1) holds one [[Clocks]] entry per gate
+    // from a reference run on this host; each run emits per-gate deltas
+    // and the mechanical verdict of [[classify]].
     val basePath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BASELINE", "BENCH_BASELINE.json"))
-    // baseline entry: (wall median, wall MAD, task-ms median or -1 when
-    // the baseline predates task recording)
-    val baselineAll: Map[String, (Double, Double, Double)] =
+    val baseline: Map[String, Clocks] =
       if (java.nio.file.Files.isReadable(basePath)) {
         val root = new com.fasterxml.jackson.databind.ObjectMapper()
           .readTree(java.nio.file.Files.readString(basePath))
         import scala.jdk.CollectionConverters._
         root.properties().asScala.map { e =>
-          val tm = Option(e.getValue.get("task_ms"))
-            .map(_.asDouble()).getOrElse(-1.0)
-          e.getKey -> (e.getValue.get("median").asDouble(),
-            e.getValue.get("mad").asDouble(), tm)
+          def num(field: String): Double = {
+            val v = e.getValue.get(field)
+            require(v != null, s"$basePath: ${e.getKey} has no $field")
+            v.asDouble()
+          }
+          e.getKey -> Clocks(num("median"), num("mad"), num("task_ms"),
+            num("cpu_ms"), num("gc_ms"))
         }.toMap
       } else Map.empty
-    // the recorded quiet-host calibration references ride in the
-    // baseline file as pseudo-entries; -1 = baseline predates them
-    val baseCalRecorded: Double =
-      baselineAll.get("__calibration").map(_._1).getOrElse(-1.0)
-    val baseCalMtRecorded: Double =
-      baselineAll.get("__calibration_mt").map(_._1).getOrElse(-1.0)
-    val baseline = baselineAll - "__calibration" - "__calibration_mt"
-    // gc_ms kept separately: only needed to round-trip baseline entries
-    // whose queries a filtered record run did not execute
-    val baselineGc: Map[String, Double] =
-      if (java.nio.file.Files.isReadable(basePath)) {
-        val root = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(java.nio.file.Files.readString(basePath))
-        import scala.jdk.CollectionConverters._
-        root.properties().asScala.map { e =>
-          e.getKey -> Option(e.getValue.get("gc_ms"))
-            .map(_.asDouble()).getOrElse(0.0)
-        }.toMap
-      } else Map.empty
-    val deltas = results.collect {
-      case (k, (m, _, _, _, _)) if m >= 0 && baseline.contains(k) =>
-        val (bm, _, _) = baseline(k)
-        k -> (if (bm > 0) (m - bm) / bm * 100.0 else 0.0)
+    val judged = results.collect {
+      case (k, c, _) if c.median >= 0 && baseline.contains(k) =>
+        (k, baseline(k), c)
     }
-    val deltaJson = deltas
-      .map { case (k, d) => "\"" + k + f"""\":$d%.1f""" }
-      .mkString("{", ",", "}")
-    // Dual gate: a query flags only when BOTH clocks regress.
-    //  - wall: median beyond recorded + max(5 x BASELINE MAD, 15%, 50 ms).
-    //    The BASELINE MAD only — using the current run's MAD let a real
-    //    regression that also inflates per-rep jitter widen its own
-    //    tolerance and self-mask (r9 advice).
-    //  - task: executor task-time median beyond recorded + max(15%,
-    //    250 ms of aggregate task time). Host contention (the r9 driver
-    //    run's 18 phantom flags) inflates wall via scheduling delay
-    //    while per-task compute stays near baseline; a real code
-    //    regression does the work on the executors and moves both.
-    //    Baselines without task_ms (or streaming gates whose work is
-    //    mostly off the task clock: task median < 10% of wall) keep the
-    //    wall-only gate — for those, task time can't witness either way.
-    def wallRegressed(k: String, m: Double): Boolean =
-      m > baseline(k)._1 + math.max(5 * baseline(k)._2,
-        math.max(0.15 * baseline(k)._1, 0.05))
-    // the task clock can witness only when the baseline recorded it AND
-    // the query is executor-dominated (task >= 10% of wall at baseline)
-    def taskWitness(k: String): Boolean =
-      baseline(k)._3 >= 0 && baseline(k)._3 >= 0.1 * baseline(k)._1 * 1000
-    def taskRegressed(k: String, tm: Double): Boolean =
-      tm > baseline(k)._3 + math.max(0.15 * baseline(k)._3, 250.0)
-    // the sentinel verdict: this query's reps ran while either witness
-    // sat over its RECORDED quiet-host reference (absolute, not
-    // relative to this run's own start — a fully-contended run would
-    // otherwise self-normalize): the single-thread loop >25% (serial
-    // steal) or the 8-thread loop >40% (multi-core steal, the mode
-    // that inflates wall AND task while one lucky thread stays flat;
-    // wider margin because the parallel draw has scheduler variance
-    // even quiet). Only classifies when the baseline carries the
-    // references.
-    def calDrifted(k: String): Boolean =
-      (baseCalRecorded > 0 &&
-        calMed.getOrElse(k, -1.0) > 1.25 * baseCalRecorded) ||
-      (baseCalMtRecorded > 0 &&
-        calMtMed.getOrElse(k, -1.0) > 1.4 * baseCalMtRecorded)
-    val regressions = results.collect {
-      case (k, (m, _, tm, _, _)) if m >= 0 && baseline.contains(k) &&
-        wallRegressed(k, m) && (!taskWitness(k) || taskRegressed(k, tm)) &&
-        !calDrifted(k)
-        => "\"" + k + "\""
-    }.mkString("[", ",", "]")
-    // would-be flags whose reps ran under a drifted calibration: the
-    // host was provably stealing CPU from a single serial thread, so
-    // both clocks are suspect — surfaced for the reader, not graded
-    val contendedFlags = results.collect {
-      case (k, (m, _, tm, _, _)) if m >= 0 && baseline.contains(k) &&
-        wallRegressed(k, m) && (!taskWitness(k) || taskRegressed(k, tm)) &&
-        calDrifted(k)
-        => "\"" + k + "\""
-    }.mkString("[", ",", "]")
-    // wall regressed but the executor clock stayed flat: almost always
-    // host contention, but a genuinely driver-side code regression
-    // (planning/codegen growth) produces the same signature — surfaced
-    // as a warn-level list instead of dropped, so a reader can triage
-    // (check gc_ms/warmup and the delta history) rather than never
-    // seeing it (r10 advice)
-    val wallOnly = results.collect {
-      case (k, (m, _, tm, _, _)) if m >= 0 && baseline.contains(k) &&
-        wallRegressed(k, m) && taskWitness(k) && !taskRegressed(k, tm)
-        => "\"" + k + "\""
-    }.mkString("[", ",", "]")
+    val deltaJson = judged.map { case (k, b, c) =>
+      val d = if (b.median > 0) (c.median - b.median) / b.median * 100.0 else 0.0
+      "\"" + k + f"""\":$d%.1f""" }.mkString("{", ",", "}")
+    def flagged(v: Verdict): String = judged
+      .collect { case (k, b, c) if classify(b, c) == v => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
+    val regressions = flagged(Verdict.Regression)
+    val contendedFlags = flagged(Verdict.Contended)
+    val wallOnly = flagged(Verdict.WallOnly)
     if (sys.env.contains("SPARK_GRAFT_RECORD_BASELINE")) {
       // a partial baseline would permanently exempt the failed queries
-      // from regression gating (the delta gate requires a recorded
-      // entry) — refuse rather than silently losing coverage
-      val failedQs = results.collect { case (k, (m, _, _, _, _)) if m < 0 => k }
+      // from regression gating (the verdict requires a recorded entry)
+      // — refuse rather than silently losing coverage
+      val failedQs = results.collect { case (k, c, _) if c.median < 0 => k }
       require(failedQs.isEmpty,
         s"refusing to record a baseline with failed queries: " +
           failedQs.mkString(", "))
-      val recorded = results.map { case (k, (m, d, tm, g, _)) =>
-        (k, (m, d, tm, g)) }
       // ANY record run with SPARK_GRAFT_ONLY must carry the UNTOUCHED
       // baseline entries through, or a single-query record silently
       // truncates the whole envelope to that query (observed: 149 -> 3
       // on a filtered record in r15); an UNFILTERED record replaces the
       // file wholesale
-      val carried =
-        if (only.isDefined) baseline.view
-          .filterKeys(k => !results.exists(_._1 == k))
-          .map { case (k, (bm, bd, btm)) =>
-            (k, (bm, bd, btm, baselineGc.getOrElse(k, 0.0))) }.toSeq
-        else Seq.empty
-      // the calibration references recorded alongside; a filtered record
-      // keeps the quietest loop times observed at record time (for a
-      // "how fast CAN this host run" reference, slower recordings are
-      // noise, not envelope)
-      val calEntry = Seq(
-        ("__calibration",
-          (if (only.isDefined && baseCalRecorded > 0)
-            math.min(calBase, baseCalRecorded)
-          else calBase, 0.0, -1.0, 0.0)),
-        ("__calibration_mt",
-          (if (only.isDefined && baseCalMtRecorded > 0)
-            math.min(calMtBase, baseCalMtRecorded)
-          else calMtBase, 0.0, -1.0, 0.0)))
-      val merged = recorded ++ carried ++ calEntry
-      val body = merged.map { case (k, (m, d, tm, g)) =>
-        s"""  "$k": {"median": $m, "mad": $d, "task_ms": $tm, "gc_ms": $g}""" }
+      val recorded = results.map { case (k, c, _) => k -> c }
+      val entries = if (only.isDefined) baseline ++ recorded else recorded.toMap
+      val body = entries.toSeq.sortBy(_._1).map { case (k, c) =>
+        s"""  "$k": {"median": ${c.median}, "mad": ${c.mad}, "task_ms": ${c.taskMs}, "cpu_ms": ${c.cpuMs}, "gc_ms": ${c.gcMs}}""" }
         .mkString("{\n", ",\n", "\n}\n")
       java.nio.file.Files.writeString(basePath, body)
       System.err.println(s"[bench] recorded baseline -> $basePath")
@@ -479,8 +311,8 @@ object Bench {
     // the survivors would report a LOWER total when an expensive query
     // breaks — the run must read as invalid, not as a speedup
     val total =
-      if (results.exists(_._2._1 < 0)) -1.0
-      else results.map(_._2._1).sum
+      if (results.exists(_._2.median < 0)) -1.0
+      else results.map(_._2.median).sum
     // micro-batch counts of the chunked-replay streaming gates: a slow
     // streaming number with an UNCHANGED batch count is per-batch floor
     // (host) noise; a changed count is a semantics/code change
@@ -496,20 +328,13 @@ object Bench {
     // Consumers must parse lines independently and prefer the LAST
     // complete line; parsing all of stdout as a single JSON document is
     // unsupported. The layout is built for the driver's 2,000-char TAIL
-    // capture (r12's artifact kept only the trailing cal_mt_ms map and
-    // lost the regressions field): the minimal verdict line goes out
-    // FIRST (covers any head-based capture), and the full line puts
-    // every bulky diagnostic map up front so its LAST ~1,000 chars are
-    // the verdict fields — total, errors, regressions, contention
-    // flags — which is what a tail capture keeps. The per-run times
-    // are stderr forensics (also echoed per-run above as they happen).
-    val calJson = results.map(_._1)
-      .flatMap(k => calMed.get(k).map(v => f""""$k":$v%.2f"""))
-      .mkString("{", ",", "}")
-    val calMtJson = results.map(_._1)
-      .flatMap(k => calMtMed.get(k).map(v => f""""$k":$v%.2f"""))
-      .mkString("{", ",", "}")
-    val fullRecord = f"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"warmup_sec":$warmupSec%.2f,"sf":"$sfDir","cal_base_ms":$calBase%.2f,"cal_baseline_ms":$baseCalRecorded%.2f,"cal_mt_base_ms":$calMtBase%.2f,"cal_mt_baseline_ms":$baseCalMtRecorded%.2f,"cal_ms":$calJson,"cal_mt_ms":$calMtJson,"queries":$qs,"mad":$mads,"task_ms":$taskJson,"gc_ms":$gcJson,"baseline_delta_pct":$deltaJson,"replay_batches":$replayBatches,"errors":$errs,"total":$total,"regressions":$regressions,"contended_flags":$contendedFlags,"wall_only_warnings":$wallOnly}"""
+    // capture: the minimal verdict line goes out FIRST (covers any
+    // head-based capture), and the full line puts every bulky per-gate
+    // map up front so its LAST ~1,000 chars are the verdict fields —
+    // total, errors, regressions, contention flags — which is what a
+    // tail capture keeps. The per-run times are stderr forensics (also
+    // echoed per-run above as they happen).
+    val fullRecord = f"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"warmup_sec":$warmupSec%.2f,"sf":"$sfDir","queries":${perGate(_.median.toString)},"mad":${perGate(_.mad.toString)},"task_ms":${perGate(_.taskMs.toString)},"cpu_ms":${perGate(_.cpuMs.toString)},"gc_ms":${perGate(_.gcMs.toString)},"baseline_delta_pct":$deltaJson,"replay_batches":$replayBatches,"errors":$errs,"total":$total,"regressions":$regressions,"contended_flags":$contendedFlags,"wall_only_warnings":$wallOnly}"""
     println(f"""{"metric":"total","value":$total,"unit":"sec","errors":$errs,"sf":"$sfDir","regressions":$regressions,"contended_flags":$contendedFlags,"wall_only_warnings":$wallOnly}""")
     println(fullRecord)
     // The driver's stdout JSON extractor has come back empty for 5+
@@ -524,5 +349,46 @@ object Bench {
     System.err.println(s"""[bench] runs: $runs""")
     SparkEntry.dropCachedIndexes(spark)
     spark.stop()
+  }
+
+  /** One gate's clocks: the medians over its reps of wall time (s) and
+    * of its tasks' summed executor run, CPU and JVM-GC time (ms), plus
+    * the wall MAD (s). A failed gate reads -1 throughout. A
+    * BENCH_BASELINE.json entry has the same fields (`median`, `mad`,
+    * `task_ms`, `cpu_ms`, `gc_ms`). */
+  final case class Clocks(median: Double, mad: Double, taskMs: Double,
+                          cpuMs: Double, gcMs: Double)
+
+  sealed trait Verdict
+  object Verdict {
+    case object Clean extends Verdict
+    case object Regression extends Verdict
+    /** Tasks ran longer on unchanged CPU: they waited for a core. */
+    case object Contended extends Verdict
+    /** Neither task clock moved: the extra wall is driver-side. */
+    case object WallOnly extends Verdict
+  }
+
+  /** The mechanical verdict on one gate against its baseline entry.
+    *  - Wall regresses beyond max(5 x the BASELINE MAD, 15%, 50 ms). The
+    *    baseline MAD only: this run's MAD would let a real regression
+    *    that also inflates per-rep jitter widen its own tolerance.
+    *  - A gate whose baseline task time is under 10% of its wall (mostly
+    *    driver or streaming machinery) has no task witness: a wall
+    *    regression is a regression.
+    *  - Otherwise the task clocks name the cause, each against
+    *    max(15%, 250 ms): CPU over its bound is more work done, so a
+    *    regression; run time over it on CPU within it is tasks waiting
+    *    for a core, so a contended host; neither over is driver-side
+    *    time (planning, codegen, scheduling), a warning. */
+  def classify(base: Clocks, now: Clocks): Verdict = {
+    def over(t: Double, b: Double) = t > b + math.max(0.15 * b, 250.0)
+    val wallOver = now.median > base.median +
+      math.max(5 * base.mad, math.max(0.15 * base.median, 0.05))
+    if (!wallOver) Verdict.Clean
+    else if (base.taskMs < 0.1 * base.median * 1000) Verdict.Regression
+    else if (over(now.cpuMs, base.cpuMs)) Verdict.Regression
+    else if (over(now.taskMs, base.taskMs)) Verdict.Contended
+    else Verdict.WallOnly
   }
 }

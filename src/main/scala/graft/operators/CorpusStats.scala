@@ -368,13 +368,11 @@ object CorpusStats {
 
   /** The order-1..order gram count frames over `train`, keyed by
     * 16-byte gram digest (`g\$j` -> `c\$j`) — each is ONE map-side-
-    * combined shuffle at j-gram-vocabulary cardinality, shuffle-hash
-    * pinned for its score-side join (never broadcast: at scale each is
-    * corpus-vocabulary-sized). With `srcCol` set, keys are
-    * (src, g\$j): the per-domain specialist tables the order-n DoReMi
-    * form scores against. Shared by [[ngramLogProbAgainst]] and
-    * [[buildNgramIndex]]/[[extendNgramIndex]] so batch and incremental
-    * count at the identical grain. */
+    * combined shuffle at j-gram-vocabulary cardinality. With `srcCol`
+    * set, keys are (src, g\$j): per-domain tables. The persisted
+    * per-order index layout ([[buildNgramIndex]]/[[extendNgramIndex]])
+    * writes these frames as they are; scoring counts through
+    * [[ngramCountsUnified]] at the identical grain. */
   private[graft] def ngramCounts(train0: DataFrame, textCol: String,
                                  order: Int,
                                  srcCol: Option[String],
@@ -400,7 +398,6 @@ object CorpusStats {
       keyed
         .groupBy((srcCol.map(_ => "src").toSeq :+ s"g$j").map(col): _*)
         .agg(count(lit(1)).as(s"c$j"))
-        .hint("shuffle_hash")
     }
   }
 
@@ -454,9 +451,9 @@ object CorpusStats {
     * same shuffled bytes — the per-order shuffles were disjoint slices
     * of exactly this one). Counts are identical to the per-order
     * tables: j rides in the key, so grams of different orders can
-    * never merge. Used by every scoring path; [[ngramCounts]] stays
-    * for the persisted per-order index layout (build/extend) and the
-    * ARPA export, whose artifacts are per-order by contract. */
+    * never merge. Used by every scoring path and the ARPA export;
+    * [[ngramCounts]] stays for the persisted per-order index layout
+    * (build/extend), whose tables are per-order by contract. */
   private[graft] def ngramCountsUnified(train: DataFrame, textCol: String,
                                         order: Int, srcCol: Option[String],
                                         digest: Boolean = true): DataFrame = {
@@ -651,8 +648,8 @@ object CorpusStats {
 
   /** Persist the corpus's order-1..order gram counts as a scorable
     * index — see [[NgramIndex]]. Each order's table is ONE map-side-
-    * combined count shuffle (the same [[ngramCounts]] frames the
-    * direct scorer builds), written bucketed+sorted by digest. */
+    * combined count shuffle ([[ngramCounts]], at the grain the direct
+    * scorer counts), written bucketed+sorted by digest. */
   def buildNgramIndex(df: DataFrame, id: String, text: String,
                       order: Int, name: String, path: String,
                       numBuckets: Int = 32): NgramIndex = {

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
@@ -47,6 +47,17 @@ object Telemetry {
     def emit(e: Event): Unit = println(s"[telemetry] $e")
   }
 
+  /** One micro-batch's progress as a [[PipelineProgress]]: the phases
+    * Spark did not report for this batch read 0. */
+  def progress(p: StreamingQueryProgress): PipelineProgress = {
+    def ms(phase: String): Long =
+      Option(p.durationMs.get(phase)).map(_.longValue).getOrElse(0L)
+    PipelineProgress(p.id.toString, p.batchId, p.numInputRows,
+      ms("addBatch"), ms("walCommit"), ms("commitOffsets"),
+      ms("triggerExecution"), p.stateOperators.map(_.commitTimeMs).sum,
+      System.currentTimeMillis())
+  }
+
   /** Attach a listener forwarding query lifecycle (and, for instrumented
     * pipelines, per-stage row counts) to `sink`; returns the listener so
     * callers can detach it. */
@@ -57,12 +68,7 @@ object Telemetry {
           System.currentTimeMillis()))
       override def onQueryProgress(e: QueryProgressEvent): Unit = {
         val p = e.progress
-        def ms(phase: String): Long =
-          Option(p.durationMs.get(phase)).map(_.longValue).getOrElse(0L)
-        sink.emit(PipelineProgress(p.id.toString, p.batchId, p.numInputRows,
-          ms("addBatch"), ms("walCommit"), ms("commitOffsets"),
-          ms("triggerExecution"), p.stateOperators.map(_.commitTimeMs).sum,
-          System.currentTimeMillis()))
+        sink.emit(progress(p))
         p.observedMetrics.asScala.foreach { case (name, row) =>
           if (name.startsWith("graft_stage_"))
             sink.emit(StageProgress(p.id.toString, name,

@@ -75,9 +75,8 @@ object CountWindows {
     * correctness: bucket membership is decided by one consistent
     * comparison, local ranks within a bucket are exact, and offsets
     * are exact counts. The (key × buckets) offset frame is broadcast —
-    * callers with millions of distinct keys should route only their
-    * hot keys here ([[tumblingBatchAuto]]) and keep the long tail on
-    * the plain path.
+    * callers with millions of distinct keys should pass only their
+    * hot keys here and keep the long tail on the plain path.
     *
     * Same contract as [[tumblingBatch]]: `ord` unique per key. */
   def tumblingBatchSalted(df: DataFrame, key: String, ord: String,
@@ -128,49 +127,6 @@ object CountWindows {
         Window.partitionBy(col(key), col("__b")).orderBy(col(ord))) - 1)
       .withColumn("__rn", col("__off") + col("__lrn"))
       .drop("__b", "__off", "__lrn", "__offk", "__offb")
-  }
-
-  /** Routes each key by measured row count: keys at or above
-    * `hotThreshold` rows take the salted parallel-rank path, the long
-    * tail takes the plain single-task-per-key path, and the union is
-    * exactly [[tumblingBatch]]'s output (both branches emit identical
-    * windows for their disjoint key sets). One extra count aggregate
-    * (cheap: map-side combine to one row per key) buys a bounded
-    * broadcast in the salted branch — only hot keys enter it. */
-  def tumblingBatchAuto(df: DataFrame, key: String, ord: String,
-                        value: String, size: Int, fn: String,
-                        hotThreshold: Long = 2000000L,
-                        buckets: Int = 32): DataFrame = {
-    require(hotThreshold >= 1, s"hotThreshold must be >= 1")
-    val hot = df.groupBy(col(key)).agg(count(lit(1)).as("__kc"))
-      .where(col("__kc") >= hotThreshold)
-      .select(col(key), lit(true).as("__hot"))
-    val tagged = df.join(broadcast(hot), Seq(key), "left")
-    val hotPart = tagged.where(col("__hot")).drop("__hot")
-    val coldPart = tagged.where(col("__hot").isNull).drop("__hot")
-    tumblingBatchSalted(hotPart, key, ord, value, size, fn, buckets)
-      .unionAll(tumblingBatch(coldPart, key, ord, value, size, fn))
-  }
-
-  /** [[tumblingBatchAuto]]'s W2 twin: keys at or above `hotThreshold`
-    * rows take [[slidingBatchSalted]], the long tail takes
-    * [[slidingBatch]]; union equals the plain output exactly. */
-  def slidingBatchAuto(df: DataFrame, key: String, ord: String,
-                       value: String, size: Int, resolution: Int,
-                       fn: String, hotThreshold: Long = 2000000L,
-                       buckets: Int = 32,
-                       chunkRows: Long = 262144L): DataFrame = {
-    require(hotThreshold >= 1, s"hotThreshold must be >= 1")
-    val hot = df.groupBy(col(key)).agg(count(lit(1)).as("__kc"))
-      .where(col("__kc") >= hotThreshold)
-      .select(col(key), lit(true).as("__hot"))
-    val tagged = df.join(broadcast(hot), Seq(key), "left")
-    val hotPart = tagged.where(col("__hot")).drop("__hot")
-    val coldPart = tagged.where(col("__hot").isNull).drop("__hot")
-    slidingBatchSalted(hotPart, key, ord, value, size, resolution, fn,
-        buckets, chunkRows)
-      .unionAll(slidingBatch(coldPart, key, ord, value, size, resolution,
-        fn))
   }
 
   /** Sliding count window batch analog. Emission cadence matches the

@@ -144,10 +144,9 @@ object ScaleProbe {
       val progs = q.recentProgress.filter(_.numInputRows > 0)
       // an empty input (or a filter leaving zero rows) must report
       // zeros, not crash on progs.last after the staging/stream cost
-      // was already paid; durationMs keys are also not guaranteed
+      // was already paid
       val batchMs = progs.map(p =>
-        Option(p.durationMs.get("triggerExecution")).map(_.toLong)
-          .getOrElse(0L))
+        graft.streaming.Telemetry.progress(p).triggerExecutionMs)
       val (stateRows, stateMem, sstBytes) =
         progs.lastOption.flatMap(_.stateOperators.headOption) match {
           case Some(st) => (st.numRowsTotal, st.memoryUsedBytes,
@@ -198,8 +197,7 @@ object ScaleProbe {
       replay.run(() => q.processAllAvailable())
       val progs = q.recentProgress.filter(_.numInputRows > 0)
       val batchMs = progs.map(p =>
-        Option(p.durationMs.get("triggerExecution")).map(_.toLong)
-          .getOrElse(0L))
+        graft.streaming.Telemetry.progress(p).triggerExecutionMs)
       val (stateRows, stateMem) =
         progs.lastOption.flatMap(_.stateOperators.headOption) match {
           case Some(st) => (st.numRowsTotal, st.memoryUsedBytes)
@@ -243,8 +241,7 @@ object ScaleProbe {
       replay.run(() => q.processAllAvailable())
       val progs = q.recentProgress.filter(_.numInputRows > 0)
       val batchMs = progs.map(p =>
-        Option(p.durationMs.get("triggerExecution")).map(_.toLong)
-          .getOrElse(0L))
+        graft.streaming.Telemetry.progress(p).triggerExecutionMs)
       val (stateRows, stateMem) =
         progs.lastOption.flatMap(_.stateOperators.headOption) match {
           case Some(st) => (st.numRowsTotal, st.memoryUsedBytes)

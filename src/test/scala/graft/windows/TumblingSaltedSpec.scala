@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * ranks, so every window id, membership, and aggregate agrees
   * bit-for-bit. Pinned here on skewed fixtures (one mega-hot key
   * dwarfing the rest) for every aggregation fn including the
-  * order-sensitive `accumulate`, plus the auto-router's split/union. */
+  * order-sensitive `accumulate`. */
 class TumblingSaltedSpec extends SparkSpec {
   import CountWindows._
 
@@ -69,16 +69,6 @@ class TumblingSaltedSpec extends SparkSpec {
     assert(canon(salted) == canon(plain))
   }
 
-  test("auto router splits hot/cold and unions to the plain result") {
-    val df = skewed(3000)
-    val plain = tumblingBatch(df, "key", "seq", "value", 16, "sum")
-    // threshold puts ONLY the hot key on the salted path (cold keys
-    // have 37 rows each)
-    val auto = tumblingBatchAuto(df, "key", "seq", "value", 16, "sum",
-      hotThreshold = 1000L, buckets = 8)
-    assert(canon(auto) == canon(plain))
-  }
-
   private def canonS(df: org.apache.spark.sql.DataFrame) =
     df.orderBy("key", "emit_at").collect().map(_.toSeq).toSeq
 
@@ -99,16 +89,6 @@ class TumblingSaltedSpec extends SparkSpec {
     val salted = slidingBatchSalted(df, "key", "seq", "value", 3, 7,
       "avg", buckets = 4, chunkRows = 32L)
     assert(canonS(salted) == canonS(plain))
-  }
-
-  test("sliding auto router splits hot/cold and unions to plain") {
-    val df = skewed(2500)
-    val plain = slidingBatch(df, "key", "seq", "value", 16, 5, "sum")
-      .select("key", "seq", "value", "result", "emit_at")
-    val auto = slidingBatchAuto(df, "key", "seq", "value", 16, 5, "sum",
-        hotThreshold = 1000L, buckets = 8, chunkRows = 128L)
-      .select("key", "seq", "value", "result", "emit_at")
-    assert(canonS(auto) == canonS(plain))
   }
 
   test("salted paths keep NULL-key groups (null-safe joins)") {
