@@ -204,6 +204,12 @@ object Bench {
       if (s.length % 2 == 1) s(s.length / 2)
       else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
     }
+    // median and median absolute deviation: the per-query spread measure
+    // that a one-off stall cannot inflate (unlike stddev)
+    def medMad(xs: Vector[Double]): (Double, Double) = {
+      val m = med(xs)
+      (m, med(xs.map(x => math.abs(x - m))))
+    }
     // DETERMINISTIC name order: `queries` is a hash map, so adding one
     // query used to reshuffle the whole schedule — and with it, which
     // query pays any first-use cost the warm-up misses — making
@@ -235,13 +241,12 @@ object Bench {
         }
         val ss = samples.result()
         val ts = ss.map(_._1)
-        if (failed) (name, Clocks(-1.0, -1.0, -1.0, -1.0, -1.0), ts)
+        if (failed) (name, Clocks(-1.0, -1.0, -1.0, -1.0, -1.0, -1.0), ts)
         else {
-          val median = med(ts)
-          // median absolute deviation: the per-query spread measure that
-          // a one-off stall cannot inflate (unlike stddev)
-          (name, Clocks(median, med(ts.map(t => math.abs(t - median))),
-            med(ss.map(_._2)), med(ss.map(_._3)), med(ss.map(_._4))), ts)
+          val (wall, wallMad) = medMad(ts)
+          val (cpu, cpuMad) = medMad(ss.map(_._3))
+          (name, Clocks(wall, wallMad, med(ss.map(_._2)), cpu, cpuMad,
+            med(ss.map(_._4))), ts)
         }
       }
     def perGate(f: Clocks => String): String =
@@ -270,7 +275,7 @@ object Bench {
             v.asDouble()
           }
           e.getKey -> Clocks(num("median"), num("mad"), num("task_ms"),
-            num("cpu_ms"), num("gc_ms"))
+            num("cpu_ms"), num("cpu_mad"), num("gc_ms"))
         }.toMap
       } else Map.empty
     val judged = results.collect {
@@ -302,7 +307,7 @@ object Bench {
       val recorded = results.map { case (k, c, _) => k -> c }
       val entries = if (only.isDefined) baseline ++ recorded else recorded.toMap
       val body = entries.toSeq.sortBy(_._1).map { case (k, c) =>
-        s"""  "$k": {"median": ${c.median}, "mad": ${c.mad}, "task_ms": ${c.taskMs}, "cpu_ms": ${c.cpuMs}, "gc_ms": ${c.gcMs}}""" }
+        s"""  "$k": {"median": ${c.median}, "mad": ${c.mad}, "task_ms": ${c.taskMs}, "cpu_ms": ${c.cpuMs}, "cpu_mad": ${c.cpuMad}, "gc_ms": ${c.gcMs}}""" }
         .mkString("{\n", ",\n", "\n}\n")
       java.nio.file.Files.writeString(basePath, body)
       System.err.println(s"[bench] recorded baseline -> $basePath")
@@ -352,12 +357,12 @@ object Bench {
   }
 
   /** One gate's clocks: the medians over its reps of wall time (s) and
-    * of its tasks' summed executor run, CPU and JVM-GC time (ms), plus
-    * the wall MAD (s). A failed gate reads -1 throughout. A
+    * of its tasks' summed executor run, CPU and JVM-GC time (ms), and
+    * the MADs of wall and CPU. A failed gate reads -1 throughout. A
     * BENCH_BASELINE.json entry has the same fields (`median`, `mad`,
-    * `task_ms`, `cpu_ms`, `gc_ms`). */
+    * `task_ms`, `cpu_ms`, `cpu_mad`, `gc_ms`). */
   final case class Clocks(median: Double, mad: Double, taskMs: Double,
-                          cpuMs: Double, gcMs: Double)
+                          cpuMs: Double, cpuMad: Double, gcMs: Double)
 
   sealed trait Verdict
   object Verdict {
@@ -370,25 +375,31 @@ object Bench {
   }
 
   /** The mechanical verdict on one gate against its baseline entry.
-    *  - Wall regresses beyond max(5 x the BASELINE MAD, 15%, 50 ms). The
-    *    baseline MAD only: this run's MAD would let a real regression
-    *    that also inflates per-rep jitter widen its own tolerance.
+    * A clock is over when it exceeds its baseline median by more than
+    * max(5 x its BASELINE MAD, 15%, a floor): wall with a 50 ms floor,
+    * task CPU with 250 ms. Task run time has no MAD term, only
+    * max(15%, 250 ms): it is the witness of tasks waiting for a core,
+    * and the record's own waits (cold first reps) would widen it. The
+    * baseline MAD only: this run's MAD would let a real regression
+    * that also inflates per-rep jitter widen its own tolerance.
+    *  - Wall within its bound is clean.
     *  - A gate whose baseline task time is under 10% of its wall (mostly
     *    driver or streaming machinery) has no task witness: a wall
     *    regression is a regression.
-    *  - Otherwise the task clocks name the cause, each against
-    *    max(15%, 250 ms): CPU over its bound is more work done, so a
-    *    regression; run time over it on CPU within it is tasks waiting
-    *    for a core, so a contended host; neither over is driver-side
-    *    time (planning, codegen, scheduling), a warning. */
+    *  - Otherwise the task clocks name the cause: CPU over its bound is
+    *    more work done, so a regression; run time over it on CPU within
+    *    it is tasks waiting for a core, so a contended host; neither
+    *    over is driver-side time (planning, codegen, scheduling), a
+    *    warning. */
   def classify(base: Clocks, now: Clocks): Verdict = {
-    def over(t: Double, b: Double) = t > b + math.max(0.15 * b, 250.0)
-    val wallOver = now.median > base.median +
-      math.max(5 * base.mad, math.max(0.15 * base.median, 0.05))
-    if (!wallOver) Verdict.Clean
+    def over(t: Double, b: Double, mad: Double, floor: Double) =
+      t > b + math.max(5 * mad, math.max(0.15 * b, floor))
+    if (!over(now.median, base.median, base.mad, 0.05)) Verdict.Clean
     else if (base.taskMs < 0.1 * base.median * 1000) Verdict.Regression
-    else if (over(now.cpuMs, base.cpuMs)) Verdict.Regression
-    else if (over(now.taskMs, base.taskMs)) Verdict.Contended
+    else if (over(now.cpuMs, base.cpuMs, base.cpuMad, 250.0))
+      Verdict.Regression
+    else if (over(now.taskMs, base.taskMs, 0.0, 250.0))
+      Verdict.Contended
     else Verdict.WallOnly
   }
 }
