@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Dsl._
+import graft.windows.{AggFunctions, CountWindows, PaneGate}
 
 /** Pipeline compiler: DSL definition -> declarative DataFrame plan.
   *
@@ -307,7 +308,7 @@ object Pipelines {
         throw new IllegalArgumentException(s"unsupported keyed window: $other")
     }
     val named = withWin
-      .withColumn("__name", coalesce(name.cast("string"), lit(""))) // null name -> Go zero-value "" key, never a NULL_MAP_KEY crash
+      .withColumn("__name", mapKey(name))
       .withColumn("__value", value)
     val perName =
       if (windowType == "timeSliding") {
@@ -319,7 +320,7 @@ object Pipelines {
           max(col("__value")).as("__pmax"),
           max(col("__seq")).as("__pseq")) ++
           (if (fn == "accumulate")
-            Seq(graft.windows.AggFunctions
+            Seq(AggFunctions
               .scalar("accumulate", col("__value"), col("__seq")).as("__plist"))
           else Nil)
         val partials = named
@@ -352,12 +353,16 @@ object Pipelines {
       } else {
         named
           .groupBy(col("__group"), col("__win"), col("__name"))
-          .agg(graft.windows.AggFunctions
-            .scalar(fn, col("__value"), col("__seq")).as("__agg"),
+          .agg(AggFunctions.scalar(fn, col("__value"), col("__seq")).as("__agg"),
             max(col("__seq")).as("__name_seq"))
       }
     assembleKeyedMap(perName, Seq(col("__group"), col("__win")))
   }
+
+  /** The map key of every keyed path: a NULL name becomes the Go
+    * zero-value "" key, never a NULL_MAP_KEY crash. */
+  private def mapKey(name: Column): Column =
+    coalesce(name.cast("string"), lit(""))
 
   /** Per-window map[name -> agg] emission shape shared by the batch and
     * streaming keyed paths (the reference's MapData emission,
@@ -399,8 +404,8 @@ object Pipelines {
           .withColumn("__psum", sum(col("__agg_value")).over(paneFrame))
           .withColumn("__pcnt", count(col("__agg_value")).over(paneFrame))
           .withColumn("__runmax", max(col("__pcnt")).over(runMax))
-          .withColumn("result", graft.windows.AggFunctions
-            .maxSamplesAvgCompat(col("__psum"), col("__runmax")))
+          .withColumn("result",
+            AggFunctions.maxSamplesAvgCompat(col("__psum"), col("__runmax")))
           .withColumn("report",
             row_number().over(paneFrame.orderBy(col("__seq").desc)) === 1)
       case "tumbling" =>
@@ -410,17 +415,16 @@ object Pipelines {
         df.withColumn("__rn", rn)
           .withColumn("__win", winId)
           .withColumn("result",
-            windowAgg(effFn, col("__agg_value"), col("__seq"),
+            AggFunctions.over(effFn, col("__agg_value"),
               winFrame.orderBy(col("__seq"))
                 .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
           .withColumn("report", pmod(col("__rn"), lit(size)) === size - 1)
       case "sliding" =>
         val frame = byKey.rowsBetween(-(size - 1), Window.currentRow)
-        val firstEmit = math.max(size, resolution)
         df.withColumn("__rn", row_number().over(byKey) - 1)
-          .withColumn("result", windowAgg(effFn, col("__agg_value"), col("__seq"), frame))
-          .withColumn("report", col("__rn") >= firstEmit - 1 &&
-            pmod(col("__rn") - (firstEmit - 1), lit(resolution)) === 0)
+          .withColumn("result", AggFunctions.over(effFn, col("__agg_value"), frame))
+          .withColumn("report",
+            CountWindows.slidingCadence(col("__rn"), size, resolution))
       case "timeTumbling" =>
         // pane = floor(ts / size ms); timer emission == last event in pane
         // (the ticker consumes the last stalled context, state.go:233-241)
@@ -428,7 +432,7 @@ object Pipelines {
         val paneFrame = Window.partitionBy(col("__group"), col("__pane"))
         df.withColumn("__pane", pane)
           .withColumn("result",
-            windowAgg(effFn, col("__agg_value"), col("__seq"),
+            AggFunctions.over(effFn, col("__agg_value"),
               paneFrame.orderBy(col("__seq"))
                 .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
           .withColumn("report",
@@ -459,10 +463,9 @@ object Pipelines {
                 transform(array_sort(collect_list(struct(
                     col("__seq").as("o"), col("__agg_value").as("v")))
                   .over(paneRange)), e => e.getField("v"))
-              case f => windowAgg(f, col("__agg_value"), col("__seq"),
-                paneRange)
+              case f => AggFunctions.over(f, col("__agg_value"), paneRange)
             }
-          } else windowAgg(effFn, col("__agg_value"), col("__seq"),
+          } else AggFunctions.over(effFn, col("__agg_value"),
             Window.partitionBy(col("__group")).orderBy(ms)
               .rangeBetween(-(size - 1), Window.currentRow))
         withPane
@@ -478,28 +481,6 @@ object Pipelines {
     }
   }
 
-  private def windowAgg(fn: String, value: Column, ord: Column,
-                        frame: org.apache.spark.sql.expressions.WindowSpec): Column =
-    fn match {
-      case "sum"   => sum(value).over(frame)
-      case "avg"   => avg(value).over(frame)
-      // Go int-division avg (average.go:75-76): truncates TOWARD ZERO.
-      // Catalyst's IntegralDivide is Java long division (exact for the
-      // full long range — a double quotient would lose sums >= 2^53)
-      case "avgInt" =>
-        org.apache.spark.sql.graft.ColumnBridge.column(
-          org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-            org.apache.spark.sql.graft.ColumnBridge.expression(
-              sum(value.cast("long")).over(frame)),
-            org.apache.spark.sql.graft.ColumnBridge.expression(
-              count(value).over(frame))))
-      case "min"   => min(value).over(frame)
-      case "max"   => max(value).over(frame)
-      case "count" => count(value).over(frame)
-      case "accumulate" => collect_list(value).over(frame)
-      case other => throw new IllegalArgumentException(s"unknown agg fn: $other")
-    }
-
   /** Streaming keyed (nameKey/valueKey) windows — reference
     * windows.go:425-467 in the streaming engine.
     *  - tumbling(count): the keyed flatMapGroupsWithState operator.
@@ -508,8 +489,8 @@ object Pipelines {
     *    group, name) aggregate, then per-(window, group) map assembly —
     *    both incremental, both distributed, emitted when the watermark
     *    closes the window. Sliding uses the built-in paned
-    *    window(size, slide), like the unkeyed streaming path (no
-    *    warm-up gating — that batch-only nuance is documented there). */
+    *    window(size, slide) and the warm-up gate, like the unkeyed
+    *    streaming path. */
   private def keyedStreamingAggregate(df: DataFrame, fn: String,
                                       windowType: String, size: Int,
                                       resolution: Int, watermark: String,
@@ -522,20 +503,19 @@ object Pipelines {
         require(df.columns.contains("__seq"),
           "streaming keyed count windows need a source-provided __seq column")
         val ds = df.select(col("__group").as("key"), col("__seq").as("seq"),
-          name.cast("string").as("name"), value.cast("double").as("value"))
-          .as[graft.windows.CountWindows.KeyedNamedSample]
-        graft.windows.CountWindows.keyedTumblingStream(ds, size, fn).toDF()
+          mapKey(name).as("name"), value.cast("double").as("value"))
+          .as[CountWindows.KeyedNamedSample]
+        CountWindows.keyedCountStream(ds, size, fn).toDF()
           .select(col("key").as("__group"), col("emitAtSeq").as("__seq"),
             col("result"), lit(true).as("report"))
       case "timeTumbling" =>
         val perName = df
-          .withColumn("__name", coalesce(name.cast("string"), lit(""))) // null name -> Go zero-value "" key, never a NULL_MAP_KEY crash
+          .withColumn("__name", mapKey(name))
           .withColumn("__kv", value)
           .withWatermark("__ts", watermark)
           .groupBy(window(col("__ts"), s"$size milliseconds"),
             col("__group"), col("__name"))
-          .agg(graft.windows.AggFunctions
-            .scalar(fn, col("__kv"), col("__seq")).as("__agg"),
+          .agg(AggFunctions.scalar(fn, col("__kv"), col("__seq")).as("__agg"),
             max(col("__seq")).as("__name_seq"))
         assembleKeyedMap(perName, Seq(col("window"), col("__group")))
           .select(col("__group"), col("__seq"), col("result"), col("report"))
@@ -544,13 +524,12 @@ object Pipelines {
         // gate (same canEmit contract as the unkeyed streaming path; the
         // keyed batch path enforces it with its global window)
         val perName = df
-          .withColumn("__name", coalesce(name.cast("string"), lit(""))) // null name -> Go zero-value "" key, never a NULL_MAP_KEY crash
+          .withColumn("__name", mapKey(name))
           .withColumn("__kv", value)
           .withWatermark("__ts", watermark)
           .groupBy(window(col("__ts"), s"$size milliseconds",
             s"$resolution milliseconds"), col("__group"), col("__name"))
-          .agg(graft.windows.AggFunctions
-            .scalar(fn, col("__kv"), col("__seq")).as("__agg"),
+          .agg(AggFunctions.scalar(fn, col("__kv"), col("__seq")).as("__agg"),
             max(col("__seq")).as("__name_seq"),
             min(unix_millis(col("__ts"))).as("__nmin"),
             max(unix_millis(col("__ts"))).as("__nmax"))
@@ -559,25 +538,9 @@ object Pipelines {
             collect_list(struct(col("__name"), col("__agg"))))).as("__map"),
             max(col("__name_seq")).as("__seq"),
             min(col("__nmin")).as("__tmin"), max(col("__nmax")).as("__tmax"))
-        val wrapped =
-          if (fn == "accumulate")
-            transform_values(col("__map"),
-              (_, v) => transform(v, x => x.cast("double")))
-          else transform_values(col("__map"),
-            (_, v) => array(v.cast("double")))
-        val panes = assembled.select(col("__group").as("group"),
-          unix_millis(col("window.start")).as("winStart"),
-          unix_millis(col("window.end")).as("winEnd"),
-          col("__tmin").as("minTs"), col("__tmax").as("maxTs"),
-          col("__seq").as("seq"), wrapped.as("result"))
-          .as[graft.windows.PaneGate.Pane]
-        val gated = graft.windows.PaneGate
-          .warmGate(panes, size, resolution).toDF()
-        val unwrapped =
-          if (fn == "accumulate") col("result")
-          else transform_values(col("result"), (_, v) => element_at(v, 1))
-        gated.select(col("group").as("__group"), col("seq").as("__seq"),
-          unwrapped.as("result"), lit(true).as("report"))
+        gatePanes(assembled, fn, size, resolution)
+          .select(col("__group"), col("__seq"), col("result"),
+            lit(true).as("report"))
       case other =>
         throw new IllegalArgumentException(
           s"unsupported streaming keyed window: $other")
@@ -603,21 +566,16 @@ object Pipelines {
             "(monotone arrival order per key; CsvReplay supplies one)")
         val ds = df.select(col("__group").as("key"), col("__seq").as("seq"),
           col("__agg_value").cast("double").as("value"))
-          .as[graft.windows.CountWindows.KeyedSample]
-        val emitted =
-          if (windowType == "tumbling")
-            graft.windows.CountWindows.tumblingStream(ds, size, fn)
-          else
-            graft.windows.CountWindows.slidingStream(ds, size, resolution, fn)
+          .as[CountWindows.KeyedSample]
+        val res = if (windowType == "tumbling") size else resolution
         val result = if (fn == "accumulate") col("values") else col("result")
-        emitted.toDF()
+        CountWindows.countStream(ds, size, res, fn).toDF()
           .select(col("key").as("__group"), col("emitAtSeq").as("__seq"),
             result.as("result"), lit(true).as("report"))
       case "timeTumbling" =>
         df.withWatermark("__ts", watermark)
           .groupBy(window(col("__ts"), s"$size milliseconds"), col("__group"))
-          .agg(graft.windows.AggFunctions
-            .scalar(fn, col("__agg_value"), col("__seq")).as("result"))
+          .agg(AggFunctions.scalar(fn, col("__agg_value"), col("__seq")).as("result"))
           .select(col("__group"), unix_millis(col("window.end")).as("__seq"),
             col("result"), lit(true).as("report"))
       case "timeSliding" =>
@@ -628,29 +586,49 @@ object Pipelines {
         val agg = df.withWatermark("__ts", watermark)
           .groupBy(window(col("__ts"), s"$size milliseconds",
             s"$resolution milliseconds"), col("__group"))
-          .agg(graft.windows.AggFunctions
-            .scalar(fn, col("__agg_value"), col("__seq")).as("__r"),
+          .agg(AggFunctions.scalar(fn, col("__agg_value"), col("__seq")).as("__r"),
             min(unix_millis(col("__ts"))).as("__tmin"),
             max(unix_millis(col("__ts"))).as("__tmax"))
-        val wrapped =
-          if (fn == "accumulate")
-            map(lit(""), transform(col("__r"), v => v.cast("double")))
-          else map(lit(""), array(col("__r").cast("double")))
-        val panes = agg.select(col("__group").as("group"),
-          unix_millis(col("window.start")).as("winStart"),
-          unix_millis(col("window.end")).as("winEnd"),
-          col("__tmin").as("minTs"), col("__tmax").as("maxTs"),
-          unix_millis(col("window.end")).as("seq"),
-          wrapped.as("result")).as[graft.windows.PaneGate.Pane]
-        val gated = graft.windows.PaneGate
-          .warmGate(panes, size, resolution).toDF()
-        val res =
-          if (fn == "accumulate") element_at(col("result"), lit(""))
-          else element_at(element_at(col("result"), lit("")), 1)
-        gated.select(col("group").as("__group"), col("seq").as("__seq"),
-          res.as("result"), lit(true).as("report"))
+        val assembled = agg.select(col("window"), col("__group"),
+          map(lit(""), col("__r")).as("__map"),
+          unix_millis(col("window.end")).as("__seq"), col("__tmin"),
+          col("__tmax"))
+        gatePanes(assembled, fn, size, resolution)
+          .select(col("__group"), col("__seq"),
+            element_at(col("result"), lit("")).as("result"),
+            lit(true).as("report"))
       case other =>
         throw new IllegalArgumentException(s"unknown windowType: $other")
     }
+  }
+
+  /** The streaming timeSliding warm-up gate ([[PaneGate]]) over closed
+    * panes shaped as the keyed emission: `window`, `__group`, `__seq`,
+    * `__tmin`/`__tmax` (pane event-time bounds, ms) and `__map`
+    * (map[name -> agg]; the unkeyed path's single name is ""). Returns
+    * `__group`, `__seq` and the surviving panes' `result` map. */
+  private def gatePanes(assembled: DataFrame, fn: String, size: Int,
+                        resolution: Int): DataFrame = {
+    val spark = assembled.sparkSession
+    import spark.implicits._
+    implicit val ss: org.apache.spark.sql.SparkSession = spark
+    // the gate's payload is map<string, array<double>>
+    val wrapped =
+      if (fn == "accumulate")
+        transform_values(col("__map"),
+          (_, v) => transform(v, x => x.cast("double")))
+      else transform_values(col("__map"), (_, v) => array(v.cast("double")))
+    val panes = assembled.select(col("__group").as("group"),
+      unix_millis(col("window.start")).as("winStart"),
+      unix_millis(col("window.end")).as("winEnd"),
+      col("__tmin").as("minTs"), col("__tmax").as("maxTs"),
+      col("__seq").as("seq"), wrapped.as("result"))
+      .as[PaneGate.Pane]
+    val unwrapped =
+      if (fn == "accumulate") col("result")
+      else transform_values(col("result"), (_, v) => element_at(v, 1))
+    PaneGate.warmGate(panes, size, resolution).toDF()
+      .select(col("group").as("__group"), col("seq").as("__seq"),
+        unwrapped.as("result"))
   }
 }

@@ -89,7 +89,7 @@ object CountWindowGates {
       import s.implicits._
       val ds = ev(s, d).select(col("user_id").cast("string").as("key"),
         col("event_id").as("seq"), col("value")).as[CountWindows.KeyedSample]
-      CountWindows.tumblingStream(ds, 7, "sum")
+      CountWindows.countStream(ds, 7, 7, "sum")
         .select(col("key").cast("bigint").as("user_id"),
           col("emitAtSeq").as("emit_seq"), round(col("result"), 4).as("result"))
         .orderBy("user_id", "emit_seq")

@@ -215,14 +215,6 @@ private[streaming] object ReplayHarness {
     }
     finally {
       ReplayStats.batches.put(namePrefix, query.recentProgress.length.toLong)
-      // floor forensics (SPARK_GRAFT_REPLAY_DEBUG=1): where each
-      // micro-batch's wall went — the trigger-scheduling floor the
-      // bench's streaming gates sit on is the sum of these
-      if (sys.env.contains("SPARK_GRAFT_REPLAY_DEBUG"))
-        query.recentProgress.foreach { p =>
-          System.err.println(s"[replay] batch=${p.batchId} " +
-            s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-        }
       query.stop()
       // the memory sink holds the result; the staged corpus copies,
       // stream dirs, and checkpoint are spent

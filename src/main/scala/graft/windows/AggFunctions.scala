@@ -2,7 +2,7 @@ package graft.windows
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, WindowSpec}
 import org.apache.spark.sql.{Encoder, Encoders}
 
 /** The reference's six aggregation functions (sum/avg/min/max/count/
@@ -21,34 +21,51 @@ object AggFunctions {
     * Spark's collect_list is partition-order-dependent, so we sort by the
     * caller-supplied sequence to make order deterministic). */
   def scalar(fn: String, value: Column, ord: Column): Column = fn match {
-    case "sum"   => sum(value)
-    case "avg"   => avg(value)
-    case "min"   => min(value)
-    case "max"   => max(value)
-    case "count" => count(value)
     case "accumulate" =>
       transform(array_sort(collect_list(struct(ord.as("o"), value.as("v")))),
         e => e.getField("v"))
-    // Go int-division avg ([[intAvgCompat]]); fully incremental
-    // (sum + count), so it works in streaming aggregations too
-    case "avgInt" => intAvgCompat(value)
-    case other => throw new IllegalArgumentException(s"unknown agg fn: $other")
+    case other => table(other, value, identity)
   }
+
+  /** The same functions over a window frame (`avgInt` included). The
+    * frame's own order is `accumulate`'s order, so callers order the
+    * frame by arrival. */
+  def over(fn: String, value: Column, frame: WindowSpec): Column = fn match {
+    case "accumulate" => collect_list(value).over(frame)
+    case other => table(other, value, _.over(frame))
+  }
+
+  /** The one function table behind [[scalar]] and [[over]]; `w` places
+    * each aggregate (identity for a grouped aggregation, `.over(frame)`
+    * for a window). `avgInt` is Go int-division avg ([[intAvgCompat]]):
+    * fully incremental (sum + count), so it streams too. */
+  private def table(fn: String, value: Column, w: Column => Column): Column =
+    fn match {
+      case "sum"    => w(sum(value))
+      case "avg"    => w(avg(value))
+      case "min"    => w(min(value))
+      case "max"    => w(max(value))
+      case "count"  => w(count(value))
+      // Go division truncates TOWARD ZERO (so -7/2 = -3) — exactly Java
+      // long division, so Catalyst IntegralDivide matches for the full
+      // long range (a double quotient would lose sums >= 2^53, and floor
+      // would give -4)
+      case "avgInt" =>
+        org.apache.spark.sql.graft.ColumnBridge.column(
+          org.apache.spark.sql.catalyst.expressions.IntegralDivide(
+            org.apache.spark.sql.graft.ColumnBridge.expression(
+              w(sum(value.cast("long")))),
+            org.apache.spark.sql.graft.ColumnBridge.expression(
+              w(count(value)))))
+      case other => throw new IllegalArgumentException(s"unknown agg fn: $other")
+    }
 
   /** Compat: the reference's integer-typed avg truncates (Go int division,
     * functions/average.go:75-76: `x / count`). Our engine defaults to true
     * floating-point avg; pipelines chasing bit-parity with int-typed
-    * reference streams opt in via this expression. Go division truncates
-    * TOWARD ZERO (so -7/2 = -3) — exactly Java long division, so Catalyst
-    * IntegralDivide matches for the full long range (a double quotient
-    * would lose sums >= 2^53, and floor would give -4). Same construction
-    * as the DSL avgCompat=int window path (Pipelines.windowAgg). */
-  def intAvgCompat(value: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-        org.apache.spark.sql.graft.ColumnBridge.expression(
-          sum(value.cast("long"))),
-        org.apache.spark.sql.graft.ColumnBridge.expression(count(value))))
+    * reference streams opt in via this expression (the DSL's avgCompat=int
+    * windows reach it as `avgInt`). */
+  def intAvgCompat(value: Column): Column = table("avgInt", value, identity)
 
   /** Compat: the reference's timeTumbling avg divides by `maxSamples` — a
     * HIGH-WATER mark of pane sizes across the stream, not the emitting

@@ -1,9 +1,10 @@
 package graft.windows
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.reflect.runtime.universe.TypeTag
 
 /** Count-based windows — the one window family Spark has no built-in for.
   *
@@ -15,16 +16,18 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    sample, aggregating over all `size` buffered samples
   *    (reference: windows.go:210-275; emission cadence windows.go:252-257).
   *
-  * Two implementations:
+  * At `resolution == size` the sliding rule emits the same windows, at
+  * the same samples, as tumbling, so each form below is ONE rule:
   *  1. Batch analogs built from window functions — pure Catalyst plans used
   *     by the correctness gate (hash partition by key + sort within
-  *     partition; scales like any ranked-window query).
-  *  2. Streaming `flatMapGroupsWithState` operators — true incremental
-  *    per-key state; state size is O(1) for tumbling and O(size) for
-  *    sliding per key, independent of stream length, so a 1000-executor
-  *    cluster holds state for billions of keys in the state store. They
-  *    run on either state store provider (the default HDFS-backed one or
-  *    RocksDB).
+  *     partition; scales like any ranked-window query). Tumbling stays a
+  *     grouped aggregation; [[slidingCadence]] is the one emission rule.
+  *  2. One streaming `flatMapGroupsWithState` operator over [[countFold]]
+  *    — true incremental per-key state of at most `size` samples,
+  *    independent of stream length (none are kept after a tumbling
+  *    emission), so a 1000-executor cluster holds state for billions of
+  *    keys in the state store. It runs on either state store provider
+  *    (the default HDFS-backed one or RocksDB).
   */
 object CountWindows {
 
@@ -39,16 +42,10 @@ object CountWindows {
     * size-th sample).
     */
   def tumblingBatch(df: DataFrame, key: String, ord: String, value: String,
-                    size: Int, fn: String): DataFrame = {
-    val w = Window.partitionBy(col(key)).orderBy(col(ord))
-    df.withColumn("__rn", row_number().over(w) - 1)
-      .withColumn("__win", (col("__rn") / size).cast("bigint"))
-      .groupBy(col(key), col("__win").as("window_id"))
-      .agg(AggFunctions.scalar(fn, col(value), col(ord)).as("result"),
-           count(lit(1)).as("n"))
-      .where(col("n") === size)
-      .drop("n")
-  }
+                    size: Int, fn: String): DataFrame =
+    completeWindows(df.withColumn("__rn",
+        row_number().over(Window.partitionBy(col(key)).orderBy(col(ord))) - 1),
+      key, ord, value, size, fn)
 
   /** Hot-key variant of [[tumblingBatch]]: identical output, but the
     * per-key ranking — the one serial stage in the plain path — is
@@ -82,8 +79,15 @@ object CountWindows {
   def tumblingBatchSalted(df: DataFrame, key: String, ord: String,
                           value: String, size: Int, fn: String,
                           buckets: Int = 32): DataFrame =
-    saltedRanks(df, key, ord, buckets)
-      .withColumn("__win", (col("__rn") / size).cast("bigint"))
+    completeWindows(saltedRanks(df, key, ord, buckets), key, ord, value,
+      size, fn)
+
+  /** Everything after the ranks of [[tumblingBatch]] and
+    * [[tumblingBatchSalted]]: window id from the 0-based rank `__rn`, one
+    * row per complete window. */
+  private def completeWindows(ranked: DataFrame, key: String, ord: String,
+                              value: String, size: Int, fn: String): DataFrame =
+    ranked.withColumn("__win", (col("__rn") / size).cast("bigint"))
       .groupBy(col(key), col("__win").as("window_id"))
       .agg(AggFunctions.scalar(fn, col(value), col(ord)).as("result"),
            count(lit(1)).as("n"))
@@ -139,25 +143,32 @@ object CountWindows {
     * samples. */
   def slidingBatch(df: DataFrame, key: String, ord: String, value: String,
                    size: Int, resolution: Int, fn: String): DataFrame = {
-    val firstEmit = math.max(size, resolution)
     val w = Window.partitionBy(col(key)).orderBy(col(ord))
-    val frame = w.rowsBetween(-(size - 1), Window.currentRow)
-    val agged = fn match {
-      case "accumulate" => collect_list(col(value)).over(frame) // frame order
-      case "sum"        => sum(col(value)).over(frame)
-      case "avg"        => avg(col(value)).over(frame)
-      case "min"        => min(col(value)).over(frame)
-      case "max"        => max(col(value)).over(frame)
-      case "count"      => count(col(value)).over(frame)
-      case other => throw new IllegalArgumentException(s"unknown agg fn: $other")
-    }
-    df.withColumn("__rn", row_number().over(w) - 1)
-      .withColumn("result", agged)
-      .where(col("__rn") >= firstEmit - 1 &&
-        ((col("__rn") - (firstEmit - 1)) % resolution) === 0)
-      .withColumn("emit_at", col("__rn"))
-      .drop("__rn")
+    slidingEmissions(df.withColumn("__rn", row_number().over(w) - 1), w,
+      value, size, resolution, fn)
   }
+
+  /** The reference's sliding emission cadence over a 0-based arrival
+    * rank (windows.go:252-265): first at 1-based sample
+    * `max(size, resolution)`, then every `resolution` samples. At
+    * `resolution == size` it is the tumbling rule. */
+  def slidingCadence(rn: Column, size: Int, resolution: Int): Column = {
+    val first = math.max(size, resolution) - 1
+    rn >= first && (rn - first) % resolution === 0
+  }
+
+  /** Everything after the ranks of [[slidingBatch]] and
+    * [[slidingBatchSalted]]: the trailing `size`-row frame of `w` (which
+    * orders by arrival) at every rank `__rn` the cadence emits on. */
+  private def slidingEmissions(ranked: DataFrame, w: WindowSpec, value: String,
+                               size: Int, resolution: Int,
+                               fn: String): DataFrame =
+    ranked
+      .withColumn("result", AggFunctions.over(fn, col(value),
+        w.rowsBetween(-(size - 1), Window.currentRow)))
+      .where(slidingCadence(col("__rn"), size, resolution))
+      .withColumn("emit_at", col("__rn").cast("int"))
+      .drop("__rn")
 
   /** Hot-key variant of [[slidingBatch]]: identical emissions, but
     * neither the ranking nor the trailing-frame aggregation runs as a
@@ -185,33 +196,17 @@ object CountWindows {
     require(size >= 2, s"size must be >= 2, got $size")
     require(chunkRows >= size,
       s"chunkRows ($chunkRows) must be >= size ($size)")
-    val firstEmit = math.max(size, resolution)
-    val ranked = saltedRanks(df, key, ord, buckets)
-    val withChunk = ranked
+    val withChunk = saltedRanks(df, key, ord, buckets)
       .withColumn("__own", (col("__rn") / chunkRows).cast("long"))
       .withColumn("__ch", explode(
         when(col("__rn") % chunkRows >= chunkRows - (size - 1),
           array(col("__own"), col("__own") + 1))
           .otherwise(array(col("__own")))))
-    val w = Window.partitionBy(col(key), col("__ch"))
-      .orderBy(col("__rn"))
-    val frame = w.rowsBetween(-(size - 1), Window.currentRow)
-    val agged = fn match {
-      case "accumulate" => collect_list(col(value)).over(frame)
-      case "sum"        => sum(col(value)).over(frame)
-      case "avg"        => avg(col(value)).over(frame)
-      case "min"        => min(col(value)).over(frame)
-      case "max"        => max(col(value)).over(frame)
-      case "count"      => count(col(value)).over(frame)
-      case other => throw new IllegalArgumentException(s"unknown agg fn: $other")
-    }
-    withChunk
-      .withColumn("result", agged)
+    slidingEmissions(withChunk,
+        Window.partitionBy(col(key), col("__ch")).orderBy(col("__rn")),
+        value, size, resolution, fn)
       .where(col("__ch") === col("__own"))
-      .where(col("__rn") >= firstEmit - 1 &&
-        ((col("__rn") - (firstEmit - 1)) % resolution) === 0)
-      .withColumn("emit_at", col("__rn").cast("int"))
-      .drop("__rn", "__own", "__ch")
+      .drop("__own", "__ch")
   }
 
   // ---------------------------------------------------------------------
@@ -243,45 +238,6 @@ object CountWindows {
     case "accumulate" => Double.NaN // caller reads `values`
   }
 
-  case class TumblingState(buf: Vector[Double], lastSeq: Long)
-
-  /** One micro-batch of the tumbling fold for one key — the body of
-    * [[tumblingStream]]'s state function. Arrival order within a
-    * micro-batch is not guaranteed → sort by seq; a seq at/below the
-    * high-water mark from a PRIOR batch violates the ordering contract
-    * and is dropped (see KeyedSample). */
-  private[windows] def tumblingFold(key: String, rows: Seq[KeyedSample],
-                                    st0: TumblingState, size: Int,
-                                    fn: String)
-      : (TumblingState, Vector[WindowEmit]) = {
-    var st = st0
-    val out = Vector.newBuilder[WindowEmit]
-    rows.sortBy(_.seq).iterator.filter(_.seq > st.lastSeq).foreach { s =>
-      val buf = st.buf :+ s.value
-      if (buf.length == size) {
-        out += WindowEmit(key, s.seq, applyFn(fn, buf), buf, size.toLong)
-        st = TumblingState(Vector.empty, s.seq)
-      } else st = TumblingState(buf, s.seq)
-    }
-    (st, out.result())
-  }
-
-  /** Streaming tumbling count window. Works identically on batch Datasets
-    * (Spark executes mapGroups-style state over sorted groups). */
-  def tumblingStream(ds: Dataset[KeyedSample], size: Int, fn: String)
-                    (implicit spark: SparkSession): Dataset[WindowEmit] = {
-    import spark.implicits._
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[TumblingState, WindowEmit](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key, rows, state: GroupState[TumblingState]) =>
-          val st0 = state.getOption.getOrElse(TumblingState(Vector.empty, -1L))
-          val (st, out) = tumblingFold(key, rows.toSeq, st0, size, fn)
-          state.update(st)
-          out.iterator
-      }
-  }
-
   /** One keyed-window sample: `name` is the per-sample map key (the
     * reference's nameKey, windows.go:425-467); window fill counts ALL
     * samples of the group regardless of name, matching the batch
@@ -294,86 +250,86 @@ object CountWindows {
   case class KeyedMapEmit(key: String, emitAtSeq: Long,
                           result: Map[String, Double])
 
-  /** Parallel name/value buffers keep the encoder flat; aggregation by
-    * name happens only at emission. */
-  case class KeyedTumblingState(names: Vector[String], values: Vector[Double],
-                                lastSeq: Long)
+  /** Per-key state of the one count-window fold. `ring` holds the samples
+    * of the window being filled (at most `size`); `sinceEmit` counts
+    * samples since the last emission — the reference's `numSamples`,
+    * reset to 0 on every emit (windows.go:262); `lastSeq` is the per-key
+    * high-water mark enforcing the KeyedSample ordering contract across
+    * micro-batches. */
+  case class CountState[A](ring: Vector[A], sinceEmit: Long, lastSeq: Long)
 
-  /** Streaming keyed tumbling count window: accumulate `size` samples per
-    * group (names mixed), emit map[name -> fn(values of name)] on the
-    * size-th, reset. `accumulate` is unsupported here (a map of lists is
-    * not a stable streaming sink type); use the batch form for it. */
-  def keyedTumblingStream(ds: Dataset[KeyedNamedSample], size: Int, fn: String)
-                         (implicit spark: SparkSession): Dataset[KeyedMapEmit] = {
-    require(fn != "accumulate",
-      "accumulate is unsupported for streaming keyed windows")
-    import spark.implicits._
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[KeyedTumblingState, KeyedMapEmit](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key, rows, state: GroupState[KeyedTumblingState]) =>
-          var st = state.getOption.getOrElse(
-            KeyedTumblingState(Vector.empty, Vector.empty, -1L))
-          val out = Vector.newBuilder[KeyedMapEmit]
-          rows.toSeq.sortBy(_.seq).iterator.filter(_.seq > st.lastSeq).foreach { s =>
-            val names = st.names :+ s.name
-            val values = st.values :+ s.value
-            if (names.length == size) {
-              val m = names.indices.groupBy(names(_))
-                .map { case (n, idxs) => n -> applyFn(fn, idxs.map(values)) }
-              out += KeyedMapEmit(key, s.seq, m)
-              st = KeyedTumblingState(Vector.empty, Vector.empty, s.seq)
-            } else st = KeyedTumblingState(names, values, s.seq)
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
-
-  /** `sinceEmit` counts samples since the last emission — the reference's
-    * `numSamples`, which is reset to 0 on every emit (windows.go:262).
-    * `lastSeq` is the per-key high-water mark enforcing the KeyedSample
-    * ordering contract across micro-batches, same as TumblingState. */
-  case class SlidingState(ring: Vector[Double], nSeen: Long, sinceEmit: Long,
-                          lastSeq: Long)
-
-  /** One micro-batch of the sliding fold for one key — the body of
-    * [[slidingStream]]'s state function: sort within the batch, drop
-    * below-HWM stragglers, ring/cadence update, emissions. */
-  private[windows] def slidingFold(key: String, rows: Seq[KeyedSample],
-                                   st0: SlidingState, size: Int,
-                                   resolution: Int, fn: String)
-      : (SlidingState, Vector[WindowEmit]) = {
+  /** One micro-batch of the count-window fold for one key: sort the
+    * batch's (seq, sample) pairs by seq (arrival order within a
+    * micro-batch is not guaranteed), drop those at or below the
+    * high-water mark (see KeyedSample), then emit `(seq, window)` when
+    * the ring holds `size` samples and `resolution` samples arrived since
+    * the last emission. An emission keeps only the ring's last
+    * `size - resolution` samples (none for tumbling), so the first
+    * emission is at sample `max(size, resolution)` and the next every
+    * `resolution` samples (windows.go:252-265). */
+  private[windows] def countFold[A](rows: Seq[(Long, A)], st0: CountState[A],
+                                    size: Int, resolution: Int)
+      : (CountState[A], Vector[(Long, Vector[A])]) = {
     var st = st0
-    val out = Vector.newBuilder[WindowEmit]
-    rows.sortBy(_.seq).iterator.filter(_.seq > st.lastSeq).foreach { s =>
-      val ring = (st.ring :+ s.value).takeRight(size)
-      val n = st.nSeen + 1
-      val since = st.sinceEmit + 1
-      if (n >= size && since >= resolution) {
-        out += WindowEmit(key, s.seq, applyFn(fn, ring), ring, ring.length.toLong)
-        st = SlidingState(ring, n, 0L, s.seq)
-      } else st = SlidingState(ring, n, since, s.seq)
+    val out = Vector.newBuilder[(Long, Vector[A])]
+    rows.sortBy(_._1).iterator.filter(_._1 > st.lastSeq).foreach {
+      case (seq, a) =>
+        val ring = (st.ring :+ a).takeRight(size)
+        val since = st.sinceEmit + 1
+        if (ring.length == size && since >= resolution) {
+          out += seq -> ring
+          st = CountState(ring.takeRight(size - resolution), 0L, seq)
+        } else st = CountState(ring, since, seq)
     }
     (st, out.result())
   }
 
-  /** Streaming sliding count window with resolution. Cadence matches the
-    * reference (windows.go:252-265): emit requires a full ring
-    * (nSeen >= size) AND sinceEmit >= resolution, so the first emission is
-    * at sample max(size, resolution) and then every `resolution` samples. */
-  def slidingStream(ds: Dataset[KeyedSample], size: Int, resolution: Int,
-                    fn: String)
-                   (implicit spark: SparkSession): Dataset[WindowEmit] = {
+  /** The one streaming count-window operator: [[countFold]] per key in
+    * `flatMapGroupsWithState`. Works identically on batch Datasets
+    * (Spark executes mapGroups-style state over sorted groups). */
+  private def countOperator[S, A: TypeTag, E <: Product: TypeTag](
+      ds: Dataset[S], key: S => String, sample: S => (Long, A), size: Int,
+      resolution: Int)(emit: (String, Long, Vector[A]) => E)
+      (implicit spark: SparkSession): Dataset[E] = {
+    require(size >= 1 && resolution >= 1,
+      s"count windows need size and resolution >= 1, got $size, $resolution")
     import spark.implicits._
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[SlidingState, WindowEmit](
+    ds.groupByKey(key)
+      .flatMapGroupsWithState[CountState[A], E](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key, rows, state: GroupState[SlidingState]) =>
-          val st0 = state.getOption.getOrElse(SlidingState(Vector.empty, 0L, 0L, -1L))
-          val (st, out) = slidingFold(key, rows.toSeq, st0, size, resolution, fn)
+        (k, rows, state: GroupState[CountState[A]]) =>
+          val st0 = state.getOption.getOrElse(CountState(Vector.empty[A], 0L, -1L))
+          val (st, out) = countFold(rows.map(sample).toSeq, st0, size, resolution)
           state.update(st)
-          out.iterator
+          out.iterator.map { case (seq, ring) => emit(k, seq, ring) }
       }
+  }
+
+  /** Streaming count window: tumbling at `resolution == size`, sliding
+    * otherwise (cadence as [[countFold]]). */
+  def countStream(ds: Dataset[KeyedSample], size: Int, resolution: Int,
+                  fn: String)
+                 (implicit spark: SparkSession): Dataset[WindowEmit] =
+    countOperator(ds, (s: KeyedSample) => s.key,
+        (s: KeyedSample) => (s.seq, s.value), size, resolution) {
+      (k, seq, ring) =>
+        WindowEmit(k, seq, applyFn(fn, ring), ring, ring.length.toLong)
+    }
+
+  /** Streaming keyed tumbling count window: the same fold over
+    * (name, value) samples at `resolution = size` (names mixed), emitting
+    * map[name -> fn(values of name)]. `accumulate` is unsupported here (a
+    * map of lists is not a stable streaming sink type); use the batch form
+    * for it. */
+  def keyedCountStream(ds: Dataset[KeyedNamedSample], size: Int, fn: String)
+                      (implicit spark: SparkSession): Dataset[KeyedMapEmit] = {
+    require(fn != "accumulate",
+      "accumulate is unsupported for streaming keyed windows")
+    countOperator(ds, (s: KeyedNamedSample) => s.key,
+        (s: KeyedNamedSample) => (s.seq, (s.name, s.value)), size, size) {
+      (k, seq, ring) =>
+        KeyedMapEmit(k, seq, ring.groupMap(_._1)(_._2)
+          .map { case (n, vs) => n -> applyFn(fn, vs) })
+    }
   }
 }

@@ -96,8 +96,8 @@ object ScaleProbe {
     }.reduce(_ unionAll _)
 
   /** Keyed streaming-state probe: tumbling(16) count windows through
-    * CountWindows.tumblingStream (flatMapGroupsWithState, the runtime
-    * the engine's pipelines use) on the RocksDB state store,
+    * CountWindows.countStream at resolution = size (flatMapGroupsWithState,
+    * the runtime the engine's pipelines use) on the RocksDB state store,
     * with the user population growing with scale. Replays the events in
     * per-user-ordered chunks through a real file-source stream and reads
     * the query's own StateOperatorProgress, so the SCALE.md claim
@@ -135,7 +135,7 @@ object ScaleProbe {
     val stream = spark.readStream.schema(replay.schema)
       .parquet(replay.streamDir.toString)
       .as[graft.windows.CountWindows.KeyedSample]
-    val q = graft.windows.CountWindows.tumblingStream(stream, 16, "sum")
+    val q = graft.windows.CountWindows.countStream(stream, 16, 16, "sum")
       .writeStream.format("noop")
       .option("checkpointLocation", replay.root.resolve("ckpt").toString)
       .outputMode("append").start()

@@ -142,6 +142,39 @@ class KeyedWindowSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming keyed tumbling window keys a NULL name as \"\" like batch") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val p = Dsl.parsePipeline("p",
+      """{
+        |"metadata": {"input": [{"name":"n","type":"string"},
+        |                       {"name":"v","type":"double"}]},
+        |"stages": [{"ref":"#aggregate",
+        |            "settings":{"function":"sum","windowType":"tumbling",
+        |                        "windowSize":"3",
+        |                        "nameKey":"=$.n","valueKey":"=$.v"}}]
+        |}""".stripMargin)
+    val samples = Seq[(String, Double, Long)](("a", 1.0, 0L), (null, 2.0, 1L),
+      ("a", 3.0, 2L))
+    val input = MemoryStream[(String, Double, Long)]
+    val sdf = input.toDF().select(col("_1").as("n"), col("_2").as("v"),
+      col("_3").as("__seq"))
+    val q = Pipelines.compileStream(p, sdf)
+      .writeStream.format("memory").queryName("keyed_null_name_stream")
+      .outputMode("append").start()
+    try {
+      input.addData(samples: _*)
+      q.processAllAvailable()
+      val got = s.sql("SELECT result FROM keyed_null_name_stream")
+        .collect().map(_.getAs[Map[String, Double]](0)).toSeq
+      val batch = Pipelines.compileBatch(p, samples.toDF("n", "v", "__seq"))
+        .select("result").collect().map(_.getAs[Map[String, Double]](0)).toSeq
+      assert(got == batch)
+      assert(got == Seq(Map("" -> 2.0, "a" -> 4.0)))
+    } finally q.stop()
+  }
+
   test("streaming keyed timeTumbling window assembles per-name maps") {
     val s = spark
     import s.implicits._

@@ -8,12 +8,13 @@ import org.apache.spark.sql.types._
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-/** A keyed tumbling count window (the DSL's groupBy + `#aggregate`
-  * tumbling stage over a file channel) is stopped after batch k and
-  * restarted from its checkpoint alone. Its emitted rows must equal the
-  * uninterrupted run's, whether the checkpoint was begun under Spark's
-  * default checkpoint manager or under the engine's, on the default
-  * (HDFS-backed) state store and on RocksDB. */
+/** A keyed count window (the DSL's groupBy + `#aggregate` count stage
+  * over a file channel), at both cadences of its one fold — tumbling and
+  * sliding — is stopped after batch k and restarted from its checkpoint
+  * alone. Its emitted rows must equal the uninterrupted run's, whether
+  * the checkpoint was begun under Spark's default checkpoint manager or
+  * under the engine's, on the default (HDFS-backed) state store and on
+  * RocksDB. */
 class CountWindowRestartSpec extends SparkSpec {
 
   private val Key = "spark.sql.streaming.checkpointFileManagerClass"
@@ -22,7 +23,8 @@ class CountWindowRestartSpec extends SparkSpec {
     .map("org.apache.spark.sql.execution.streaming.state." + _)
   private val Size = 3
 
-  private val pipeline = Dsl.parseApp(
+  /** The count-window stage of `windowType` over `per_user`. */
+  private def pipeline(windowType: String, resolution: Int) = Dsl.parseApp(
     s"""{"name": "restart", "type": "flogo:app",
       | "actions": [{"id": "per_user", "ref": "#stream",
       |   "settings": {"streamURI": "res://stream:per_user", "groupBy": "user"}}],
@@ -34,8 +36,8 @@ class CountWindowRestartSpec extends SparkSpec {
       |                {"name": "user", "type": "string"},
       |                {"name": "result", "type": "double"}]},
       |   "stages": [{"ref": "#aggregate",
-      |     "settings": {"function": "sum", "windowType": "tumbling",
-      |                  "windowSize": "$Size"},
+      |     "settings": {"function": "sum", "windowType": "$windowType",
+      |                  "windowSize": "$Size", "resolution": "$resolution"},
       |     "input": {"value": "=$$.value"},
       |     "output": {"seq": "=$$.__seq", "user": "=$$.__group"}}]}}]}
       |""".stripMargin).pipelines("per_user")
@@ -56,8 +58,9 @@ class CountWindowRestartSpec extends SparkSpec {
     * per batch id, so a re-run batch would replace, not duplicate.
     * Returns the state operator's custom metric names, which name the
     * state store that ran. */
-  private def incarnation(session: SparkSession, channel: String,
-                          ckpt: String, chunks: Seq[Seq[String]],
+  private def incarnation(session: SparkSession, pipeline: Dsl.PipelineDef,
+                          channel: String, ckpt: String,
+                          chunks: Seq[Seq[String]],
                           out: TrieMap[Long, Seq[String]]): Set[String] = {
     implicit val s: SparkSession = session
     val q = Pipelines.compileStream(pipeline, Channels.subscribe(channel, schema))
@@ -75,40 +78,47 @@ class CountWindowRestartSpec extends SparkSpec {
   private def emitted(out: TrieMap[Long, Seq[String]]): Seq[String] =
     out.values.flatten.toSeq.sortBy(_.takeWhile(_ != '|').toLong)
 
-  test("keyed tumbling count window restarts from its checkpoint with the uninterrupted output") {
-    val root = java.nio.file.Files.createTempDirectory("graft-cw-restart-")
-    Channels.useFileBackend(root.toString)
-    try {
-      val whole = TrieMap.empty[Long, Seq[String]]
-      incarnation(spark.newSession(), "whole", root.resolve("ckpt-whole").toString,
-        chunks, whole)
-      val expected = emitted(whole)
-      // 10, 9 and 9 events per user: three complete windows each
-      assert(expected.size == 9, s"complete windows: $expected")
+  // 10, 9 and 9 events per user: three complete tumbling windows each;
+  // sliding (size 3, resolution 2) emits at samples 3, 5, 7 and 9
+  Seq(("tumbling", Size, 9), ("sliding", 2, 12)).foreach {
+    case (windowType, resolution, windows) =>
+      test(s"keyed $windowType count window restarts from its checkpoint " +
+          "with the uninterrupted output") {
+        val p = pipeline(windowType, resolution)
+        val root = java.nio.file.Files.createTempDirectory("graft-cw-restart-")
+        Channels.useFileBackend(root.toString)
+        try {
+          val whole = TrieMap.empty[Long, Seq[String]]
+          incarnation(spark.newSession(), p, "whole",
+            root.resolve("ckpt-whole").toString, chunks, whole)
+          val expected = emitted(whole)
+          assert(expected.size == windows, s"complete windows: $expected")
 
-      for (k <- 1 until chunks.size; fromDefault <- Seq(true, false);
-           store <- Stores) {
-        val rocks = store.contains("RocksDB")
-        val ch = s"k$k-$fromDefault-$rocks"
-        val ckpt = root.resolve(s"ckpt-$ch").toString
-        val out = TrieMap.empty[Long, Seq[String]]
-        val first = spark.newSession()
-        first.conf.set(StoreKey, store)
-        if (fromDefault)
-          first.conf.set(Key, classOf[FileContextBasedCheckpointFileManager].getName)
-        incarnation(first, ch, ckpt, chunks.take(k), out)
-        val second = spark.newSession()
-        second.conf.set(StoreKey, store)
-        val metrics = incarnation(second, ch, ckpt, chunks.drop(k), out)
-        assert(second.conf.get(Key) == classOf[LocalCheckpointFiles].getName)
-        assert(metrics.exists(_.startsWith("rocksdb")) == rocks, metrics)
-        assert(emitted(out) == expected,
-          s"stopped after batch $k on $store, first run under " +
-            (if (fromDefault) "Spark's default manager" else "the engine's"))
+          for (k <- 1 until chunks.size; fromDefault <- Seq(true, false);
+               store <- Stores) {
+            val rocks = store.contains("RocksDB")
+            val ch = s"k$k-$fromDefault-$rocks"
+            val ckpt = root.resolve(s"ckpt-$ch").toString
+            val out = TrieMap.empty[Long, Seq[String]]
+            val first = spark.newSession()
+            first.conf.set(StoreKey, store)
+            if (fromDefault)
+              first.conf.set(Key,
+                classOf[FileContextBasedCheckpointFileManager].getName)
+            incarnation(first, p, ch, ckpt, chunks.take(k), out)
+            val second = spark.newSession()
+            second.conf.set(StoreKey, store)
+            val metrics = incarnation(second, p, ch, ckpt, chunks.drop(k), out)
+            assert(second.conf.get(Key) == classOf[LocalCheckpointFiles].getName)
+            assert(metrics.exists(_.startsWith("rocksdb")) == rocks, metrics)
+            assert(emitted(out) == expected,
+              s"stopped after batch $k on $store, first run under " +
+                (if (fromDefault) "Spark's default manager" else "the engine's"))
+          }
+        } finally {
+          Channels.useMemoryBackend()
+          graft.util.FsUtil.deleteRecursively(root)
+        }
       }
-    } finally {
-      Channels.useMemoryBackend()
-      graft.util.FsUtil.deleteRecursively(root)
-    }
   }
 }

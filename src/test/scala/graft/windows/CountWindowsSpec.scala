@@ -62,7 +62,7 @@ class CountWindowsSpec extends SparkSpec {
     val ev = graft.engine.Tables.events(s, sf())
     val ds = ev.select(col("user_id").cast("string").as("key"),
       col("event_id").as("seq"), col("value")).as[KeyedSample]
-    val stream = tumblingStream(ds, 5, "sum")
+    val stream = countStream(ds, 5, 5, "sum")
       .select(col("key"), round(col("result"), 6).as("r"))
       .collect().map(r => (r.getString(0), r.getDouble(1))).sorted.toSeq
     val batch = tumblingBatch(
@@ -81,7 +81,7 @@ class CountWindowsSpec extends SparkSpec {
     val ev = graft.engine.Tables.events(s, sf())
     val ds = ev.select(col("user_id").cast("string").as("key"),
       col("event_id").as("seq"), col("value")).as[KeyedSample]
-    val stream = slidingStream(ds, 5, 2, "avg")
+    val stream = countStream(ds, 5, 2, "avg")
       .select(col("key"), round(col("result"), 6).as("r"))
       .collect().map(r => (r.getString(0), r.getDouble(1))).sorted.toSeq
     val batch = slidingBatch(

@@ -16,7 +16,7 @@ class StreamingWindowsSpec extends SparkSpec {
     implicit val sqlCtx = s.sqlContext
     implicit val ss: org.apache.spark.sql.SparkSession = s
     val input = MemoryStream[KeyedSample]
-    val query = tumblingStream(input.toDS(), 3, "sum")
+    val query = countStream(input.toDS(), 3, 3, "sum")
       .writeStream.format("memory").queryName("tumbling_mb")
       .outputMode(OutputMode.Append).start()
     try {
@@ -46,7 +46,7 @@ class StreamingWindowsSpec extends SparkSpec {
     implicit val sqlCtx = s.sqlContext
     implicit val ss: org.apache.spark.sql.SparkSession = s
     val input = MemoryStream[KeyedSample]
-    val query = slidingStream(input.toDS(), 3, 2, "avg")
+    val query = countStream(input.toDS(), 3, 2, "avg")
       .writeStream.format("memory").queryName("sliding_mb")
       .outputMode(OutputMode.Append).start()
     try {
@@ -69,7 +69,7 @@ class StreamingWindowsSpec extends SparkSpec {
     implicit val sqlCtx = s.sqlContext
     implicit val ss: org.apache.spark.sql.SparkSession = s
     val input = MemoryStream[KeyedSample]
-    val query = tumblingStream(input.toDS(), 2, "sum")
+    val query = countStream(input.toDS(), 2, 2, "sum")
       .writeStream.format("memory").queryName("ooo_mb")
       .outputMode(OutputMode.Append).start()
     try {
@@ -91,7 +91,7 @@ class StreamingWindowsSpec extends SparkSpec {
     implicit val sqlCtx = s.sqlContext
     implicit val ss: org.apache.spark.sql.SparkSession = s
     val input = MemoryStream[KeyedSample]
-    val query = slidingStream(input.toDS(), 2, 1, "sum")
+    val query = countStream(input.toDS(), 2, 1, "sum")
       .writeStream.format("memory").queryName("ooo_sliding_mb")
       .outputMode(OutputMode.Append).start()
     try {

@@ -42,6 +42,10 @@ class WindowPropertiesSpec extends SparkSpec {
   }
 
   test("property: sliding emissions at max(size,res) cadence, ring content") {
+    val s = spark
+    import s.implicits._
+    implicit val ss: org.apache.spark.sql.SparkSession = s
+    val split = new scala.util.Random(20261019L)
     cases(8) { r =>
       (List.fill(r.nextInt(40))(r.nextDouble() * 200 - 100),
         1 + r.nextInt(6), 1 + r.nextInt(9))
@@ -50,11 +54,43 @@ class WindowPropertiesSpec extends SparkSpec {
           "value", size, res, "max")
         .orderBy("emit_at").collect()
         .map(r => (r.getAs[Int]("emit_at"), r.getAs[Double]("result"))).toSeq
-      val firstEmit = math.max(size, res)
-      val expected = values.indices
-        .filter(i => i >= firstEmit - 1 && (i - (firstEmit - 1)) % res == 0)
-        .map(i => (i, values.slice(math.max(0, i - size + 1), i + 1).max))
+      def expectedAt(res: Int): Seq[(Int, Double)] = {
+        val firstEmit = math.max(size, res)
+        values.indices
+          .filter(i => i >= firstEmit - 1 && (i - (firstEmit - 1)) % res == 0)
+          .map(i => (i, values.slice(math.max(0, i - size + 1), i + 1).max))
+      }
+      val expected = expectedAt(res)
       assert(got == expected)
+      // the streaming operator at the same (size, res)
+      val samples = values.zipWithIndex.map { case (v, i) => (i + 1L, v) }
+      val stream = CountWindows.countStream(samples.map { case (q, v) =>
+          CountWindows.KeyedSample("k", q, v) }.toDS(), size, res, "max")
+        .collect().map(e => ((e.emitAtSeq - 1).toInt, e.result))
+        .sortBy(_._1).toSeq
+      assert(stream == expected)
+      // the fold over random shuffled micro-batches, state carried
+      // between them, emits what one batch does, at this cadence and at
+      // the tumbling one (res == size), where the ring never holds a
+      // full window between batches
+      def foldBatches(res: Int): Seq[(Int, Double)] = {
+        var st = CountWindows.CountState(Vector.empty[Double], 0L, -1L)
+        val out = Seq.newBuilder[(Int, Double)]
+        var rest = samples
+        while (rest.nonEmpty) {
+          val (batch, tail) = rest.splitAt(1 + split.nextInt(rest.length))
+          val (next, emits) =
+            CountWindows.countFold(split.shuffle(batch), st, size, res)
+          if (res == size)
+            assert(next.ring.length < size, s"ring after a batch: $next")
+          out ++= emits.map { case (q, ring) => ((q - 1).toInt, ring.max) }
+          st = next
+          rest = tail
+        }
+        out.result()
+      }
+      assert(foldBatches(res) == expected)
+      assert(foldBatches(size) == expectedAt(size))
     }
   }
 
@@ -70,7 +106,7 @@ class WindowPropertiesSpec extends SparkSpec {
     } { case (samples, size) =>
       val ds = samples.zipWithIndex.map { case ((n, v), i) =>
         CountWindows.KeyedNamedSample("k", i + 1L, n, v) }.toDS()
-      val got = CountWindows.keyedTumblingStream(ds, size, "sum")
+      val got = CountWindows.keyedCountStream(ds, size, "sum")
         .collect().map(e => (e.emitAtSeq, e.result)).sortBy(_._1).toSeq
       // reference semantics: window closes on the size-th sample of the
       // GROUP (names mixed); emission = per-name sums of that chunk
@@ -99,7 +135,7 @@ class WindowPropertiesSpec extends SparkSpec {
       val ds = values.zipWithIndex
         .map { case (v, i) => CountWindows.KeyedSample("k", i + 1L, v) }
         .toDS()
-      val stream = CountWindows.tumblingStream(ds, size, "avg")
+      val stream = CountWindows.countStream(ds, size, size, "avg")
         .collect().map(e => (e.emitAtSeq, e.result)).sortBy(_._1).toSeq
       val expected = values.grouped(size).zipWithIndex
         .filter(_._1.length == size)
