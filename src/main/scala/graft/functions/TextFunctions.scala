@@ -235,21 +235,15 @@ object TextFunctions {
     coalesce(graft.expressions.TextExprs.charShingles(text, n),
       array().cast("array<string>"))
 
-  /** Canonical normalization: lower-case, collapse whitespace, trim. */
-  def normalized(text: Column): Column =
-    trim(regexp_replace(lower(text), "\\s+", " "))
-
-  /** Deterministic document fingerprint: md5 of the normalized text.
+  /** Deterministic document fingerprint: md5 of the normalized text
+    * (lower-cased, whitespace runs collapsed to one space, trimmed).
     * Equal fingerprints == exact duplicates modulo case/whitespace.
     * Single-pass codegen kernel (graft.expressions.Md5Kernel) —
-    * byte-identical to `md5(normalized(text) as binary)` without the
-    * regex walk over every body. */
+    * byte-identical to
+    * `md5(trim(regexp_replace(lower(text), "\\s+", " ")) as binary)`
+    * without the regex walk over every body. */
   def fingerprint(text: Column): Column =
     graft.expressions.TextExprs.normalizedMd5(text)
-
-  /** 64-bit rolling-hash content fingerprint (xxhash64 of normalized text) —
-    * cheap join key for exact dedup at scale (8 bytes vs full text shuffle). */
-  def fingerprint64(text: Column): Column = xxhash64(normalized(text))
 
   // --------------------------------------------------------------------------
   // Language identification — deterministic stopword/script heuristic.
@@ -308,13 +302,6 @@ object TextFunctions {
       lit(1.0) - distinctN.cast("double") / total.cast("double"))
       .otherwise(lit(0.0))
   }
-
-  /** Mean token length in characters. */
-  def meanTokenLen(text: Column): Column =
-    when(tokenCount(text) > 0,
-      aggregate(transform(tokens(text), t => length(t).cast("double")),
-        lit(0.0), (a, x) => a + x) / tokenCount(text))
-      .otherwise(lit(0.0))
 
   // --------------------------------------------------------------------------
   // Deterministic hash bucketing — repeatable sampling / split assignment.

@@ -425,7 +425,7 @@ object SimilarityGates {
         |ORDER BY vec_id""".stripMargin),
 
     // incremental IVF: the index is built over 3/4 of the corpus, the
-    // remaining quarter folds in via extendIvfIndex (assignment against
+    // remaining quarter folds in via `extend` (assignment against
     // the PERSISTED centroids, O(delta) appended files). Queries over
     // the folded index must equal full-corpus IVF at the same centroids
     // — the oracle is the very same ivfSql as q_knn_ivf/_indexed, so the
@@ -437,8 +437,7 @@ object SimilarityGates {
         val i = Similarity.buildIvfIndex(
           e.where(col("vec_id") % 4 =!= 3), "vec_id", "embedding",
           e.where(col("vec_id") < 10), "vec_id", "embedding", name, path)
-        Similarity.extendIvfIndex(e.where(col("vec_id") % 4 === 3),
-          "vec_id", "embedding", i)
+        i.extend(e.where(col("vec_id") % 4 === 3), "vec_id", "embedding")
         i
       })
       Similarity.ivfKnnFromIndex(s,

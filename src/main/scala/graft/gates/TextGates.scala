@@ -1601,8 +1601,7 @@ object TextGates {
       val idx = memoIndex("ng", s, d)((name, path) => {
         val built = graft.operators.CorpusStats.buildNgramIndex(
           all.where(col("doc_id") % 3 === 1), "doc_id", "text", 3, name, path)
-        graft.operators.CorpusStats.extendNgramIndex(
-          all.where(col("doc_id") % 3 === 2), "doc_id", "text", built)
+        built.extend(all.where(col("doc_id") % 3 === 2), "doc_id", "text")
         built
       })
       graft.operators.CorpusStats.ngramLogProbAgainstIndex(

@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * [[Chunking.buildChunkIndex]]): one (chunk_hash, keep_id) row per
   * distinct chunk content, bucketed by hash, plus the CDC parameters —
   * baked in at build time so probes can never chunk differently than
-  * the index. */
+  * the index. An extend appends only the hashes not yet indexed (a
+  * NULL-safe anti-join), preserving one row per hash; only survivors
+  * are recorded, so the guard checks the delta against the keep ids. */
 case class ChunkIndex(name: String, path: String, numBuckets: Int,
                       window: Int, prime: Int, modBits: Int,
                       divisor: Int, residue: Int) extends PersistedIndex {
@@ -17,6 +19,14 @@ case class ChunkIndex(name: String, path: String, numBuckets: Int,
   def chunksTable: String = s"${name}_chunks"
   def layout: Seq[IndexTable] =
     Seq(IndexTable.Bucketed(chunksTable, "chunk_hash", numBuckets))
+  protected def guard: (String, String) = (chunksTable, "keep_id")
+  protected def slices(df: DataFrame, id: String, text: String,
+                       append: Boolean): Seq[(String, DataFrame)] = {
+    val kept = Chunking.chunksWith(df, id, text, this)
+      .groupBy("chunk_hash").agg(min(col(id)).as("keep_id"))
+    Seq(chunksTable -> (if (append)
+      IndexAdmin.unseen(kept, "chunk_hash", chunksTable) else kept))
+  }
 }
 
 /** Content-defined chunking (CDC) — rolling-hash boundaries over
@@ -55,34 +65,20 @@ object Chunking {
 
   /** Content-defined chunks of `textCol`: one row per chunk with its
     * 1-based `start`, `len` (codepoints) and `chunk_hash` (md5 of the
-    * chunk text — the dedup identity). `carry` names extra input
-    * columns to keep on every chunk row (row-local passthrough — e.g.
-    * the event-time column a streaming caller's watermark rides on).
-    * A NULL text yields NO chunk rows (the boundary kernel
-    * null-propagates and the explode of a null array emits nothing) —
-    * the contract every q_cdc / q_chunk oracle mirrors with an
-    * explicit text IS NOT NULL filter. */
+    * chunk text — the dedup identity). A NULL text yields NO chunk rows
+    * (the boundary kernel null-propagates and the explode of a null
+    * array emits nothing) — the contract every q_cdc / q_chunk oracle
+    * mirrors with an explicit text IS NOT NULL filter. */
   def cdcChunks(docs: DataFrame, idCol: String = "doc_id",
                 textCol: String = "text", window: Int = 16,
                 prime: Int = 31, modBits: Int = 20, divisor: Int = 64,
-                residue: Int = 13, carry: Seq[String] = Nil): DataFrame = {
+                residue: Int = 13): DataFrame = {
     require(window >= 2 && modBits <= 40 && divisor >= 2 &&
       residue >= 0 && residue < divisor && prime > 0,
       "degenerate CDC parameters (window=" + window + ", prime=" + prime +
         s", modBits=$modBits, divisor=$divisor, residue=$residue): need " +
         "window >= 2, prime > 0, modBits <= 40, divisor >= 2, " +
         "0 <= residue < divisor")
-    // fail fast on carry-name collisions: a carry that shadows the id,
-    // the text, or a generated output column would otherwise surface
-    // only as an ambiguous-column error far downstream
-    val reserved = Set(idCol, textCol, "chunk", "start", "len",
-      "chunk_hash")
-    val clash = carry.filter(reserved)
-    require(clash.isEmpty && carry.distinct.size == carry.size,
-      s"carry columns must be distinct and disjoint from idCol/textCol " +
-        s"and the generated outputs ${reserved.mkString("(", ", ", ")")}" +
-        s"; offending: ${(clash ++ carry.diff(carry.distinct)).distinct
-          .mkString(", ")}")
     // Boundary detection is a compiled O(n) rolling-hash kernel
     // (graft.expressions.CdcBoundaries, one call per row, codegen'd) —
     // the composed higher-order-function form ran INTERPRETED, and
@@ -103,22 +99,20 @@ object Chunking {
     // copy O(document) bytes into every chunk row in the generate's
     // output (Tungsten rows are self-contained), turning the explode
     // into another O(n²/divisor) pass.
-    val carryCols = carry.map(col)
     docs
-      .select(col(idCol) +: col(textCol).as("__text") +: carryCols: _*)
+      .select(col(idCol), col(textCol).as("__text"))
       .withColumn("__bnd", graft.expressions.TextExprs.cdcBoundaries(
         col("__text"), window, prime, modBits, divisor, residue))
       .withColumn("__spans", zip_with(
         graft.expressions.TextExprs.cdcSlices(col("__text"), col("__bnd")),
         expr("concat(array(1), transform(__bnd, x -> x + 1))"),
         (s, st) => struct(st.as("start"), s.as("ctext"))))
-      .select(col(idCol) +: carryCols :+
-        posexplode(col("__spans")).as(Seq("chunk", "__sp")): _*)
-      .select(col(idCol) +: col("chunk").cast("long").as("chunk") +:
-        col("__sp.start").cast("long").as("start") +:
-        length(col("__sp.ctext")).cast("long").as("len") +:
-        md5(col("__sp.ctext").cast("binary")).as("chunk_hash") +:
-        carryCols: _*)
+      .select(col(idCol),
+        posexplode(col("__spans")).as(Seq("chunk", "__sp")))
+      .select(col(idCol), col("chunk").cast("long").as("chunk"),
+        col("__sp.start").cast("long").as("start"),
+        length(col("__sp.ctext")).cast("long").as("len"),
+        md5(col("__sp.ctext").cast("binary")).as("chunk_hash"))
   }
 
   /** Fixed-size OVERLAPPING token windows — the model-context-defined
@@ -222,8 +216,9 @@ object Chunking {
   // Persisted chunk index — the incremental-crawl lifecycle
   // ------------------------------------------------------------------
 
-  private def chunksWith(df: DataFrame, idCol: String, textCol: String,
-                         idx: ChunkIndex): DataFrame =
+  private[operators] def chunksWith(df: DataFrame, idCol: String,
+                                    textCol: String,
+                                    idx: ChunkIndex): DataFrame =
     cdcChunks(df, idCol, textCol, idx.window, idx.prime, idx.modBits,
       idx.divisor, idx.residue)
 
@@ -238,33 +233,9 @@ object Chunking {
   def buildChunkIndex(df: DataFrame, idCol: String, textCol: String,
                       name: String, path: String, numBuckets: Int = 32,
                       window: Int = 16, prime: Int = 31, modBits: Int = 20,
-                      divisor: Int = 64, residue: Int = 13): ChunkIndex = {
-    val idx = ChunkIndex(name, path, numBuckets, window, prime, modBits,
-      divisor, residue)
-    idx.write(idx.chunksTable, chunksWith(df, idCol, textCol, idx)
-      .groupBy("chunk_hash").agg(min(col(idCol)).as("keep_id")),
-      append = false)
-    idx
-  }
-
-  /** Fold a processed delta's chunks in: only hashes NOT already
-    * indexed append (anti-join), preserving one-row-per-hash. Same
-    * single-writer and disjoint-ids contracts as the other indexes —
-    * the id check is the default-on [[IndexAdmin.requireDisjointIds]]
-    * guard, so a re-folded crawl fails loudly instead of silently
-    * re-litigating keep verdicts. */
-  def extendChunkIndex(delta: DataFrame, idCol: String, textCol: String,
-                       idx: ChunkIndex): Unit = {
-    val spark = delta.sparkSession
-    IndexAdmin.requireDisjointIds(delta, idCol, idx.chunksTable, "keep_id",
-      "extendChunkIndex")
-    val existing = spark.table(idx.chunksTable)
-      .select(col("chunk_hash").as("__ih")).hint("shuffle_hash")
-    idx.write(idx.chunksTable, chunksWith(delta, idCol, textCol, idx)
-      .groupBy("chunk_hash").agg(min(col(idCol)).as("keep_id"))
-      .join(existing, col("chunk_hash") <=> col("__ih"), "left_anti"),
-      append = true)
-  }
+                      divisor: Int = 64, residue: Int = 13): ChunkIndex =
+    ChunkIndex(name, path, numBuckets, window, prime, modBits, divisor,
+      residue).build(df, idCol, textCol)
 
   /** Per-document chunk novelty of a delta against the indexed corpus:
     * (id, n_chunks, n_novel, novelty) where a chunk is novel iff its
@@ -306,7 +277,7 @@ object Chunking {
     * and the index join is stream-static), so this runs in append mode
     * with no watermark, no state store, and per-record latency — score
     * documents as they arrive, fold accepted batches into the index
-    * with [[extendChunkIndex]] on whatever cadence the ingest commits.
+    * with `extend` on whatever cadence the ingest commits.
     * Within-stream first-carrier dedup (deltaNovelty's window) is
     * deliberately absent: it would need keyed state on chunk_hash;
     * cross-batch duplicates are what the periodic index fold-in
@@ -323,45 +294,6 @@ object Chunking {
       .select(col("chunk_hash").as("__ih"), lit(true).as("__seen"))
       .hint("shuffle_hash")
     chunksWith(stream, idCol, textCol, idx)
-      .join(seen, col("chunk_hash") <=> col("__ih"), "left_outer")
-      .select(col(idCol), col("chunk"), col("chunk_hash"),
-        coalesce(col("__seen"), lit(false)).as("seen"))
-  }
-
-  /** Opt-in STATEFUL variant of [[chunkVerdictStream]] with AT-INGEST
-    * first-carrier semantics: each chunk_hash emits at most once per
-    * watermark horizon — the FIRST observed carrier (arrival order;
-    * within one micro-batch the tie is arbitrary, which is the honest
-    * contract for an ingest stream) — so two novel duplicates arriving
-    * in the same stream dedup in-stream instead of waiting for the
-    * next [[extendChunkIndex]] fold-in. The cost the stateless default
-    * deliberately avoids: keyed state on chunk_hash, bounded by the
-    * watermark horizon (`dropDuplicatesWithinWatermark` — state for a
-    * hash is dropped once the watermark passes its event time, so
-    * state size is ingest-rate x horizon, not corpus-sized). Emits
-    * (id, chunk, chunk_hash, seen) in append mode; `seen` still means
-    * "in the persisted index" — an in-stream duplicate simply never
-    * emits. Duplicates arriving further apart than `watermarkDelay`
-    * can re-emit (state already evicted); the periodic fold-in remains
-    * the cross-horizon backstop. */
-  def chunkVerdictStreamFirstCarrier(stream: DataFrame, idCol: String,
-                                     textCol: String, tsCol: String,
-                                     watermarkDelay: String,
-                                     idx: ChunkIndex): DataFrame = {
-    val seen = stream.sparkSession.table(idx.chunksTable)
-      .select(col("chunk_hash").as("__ih"), lit(true).as("__seen"))
-      .hint("shuffle_hash")
-    val chunks = cdcChunks(
-      stream.withWatermark(tsCol, watermarkDelay), idCol, textCol,
-      idx.window, idx.prime, idx.modBits, idx.divisor, idx.residue,
-      carry = Seq(tsCol))
-    // Spark rejects dropDuplicatesWithinWatermark on bounded frames; a
-    // batch frame has a natural horizon (the whole frame), so plain
-    // dropDuplicates IS the same first-carrier contract there
-    val firsts =
-      if (stream.isStreaming) chunks.dropDuplicatesWithinWatermark("chunk_hash")
-      else chunks.dropDuplicates("chunk_hash")
-    firsts
       .join(seen, col("chunk_hash") <=> col("__ih"), "left_outer")
       .select(col(idCol), col("chunk"), col("chunk_hash"),
         coalesce(col("__seen"), lit(false)).as("seen"))

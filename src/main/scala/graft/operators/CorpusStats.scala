@@ -24,6 +24,13 @@ case class NgramIndex(name: String, path: String, numBuckets: Int,
   def gramsTable(j: Int): String = s"${name}_g$j"
   def layout: Seq[IndexTable] = (1 to order).map(j =>
     IndexTable.Bucketed(gramsTable(j), "g", numBuckets, Some("n"))) :+ ledger
+  protected def countSlices(df: DataFrame, id: String,
+                            text: String): Seq[(String, DataFrame)] =
+    CorpusStats.ngramCounts(df, text, order, None).zipWithIndex.map {
+      case (c, i) =>
+        val j = i + 1
+        gramsTable(j) -> c.select(col(s"g$j").as("g"), col(s"c$j").as("n"))
+    }
 }
 
 /** Corpus-level frequency and cardinality statistics for training-data
@@ -370,7 +377,7 @@ object CorpusStats {
     * 16-byte gram digest (`g\$j` -> `c\$j`) — each is ONE map-side-
     * combined shuffle at j-gram-vocabulary cardinality. With `srcCol`
     * set, keys are (src, g\$j): per-domain tables. The persisted
-    * per-order index layout ([[buildNgramIndex]]/[[extendNgramIndex]])
+    * per-order index layout ([[NgramIndex]])
     * writes these frames as they are; scoring counts through
     * [[ngramCountsUnified]] at the identical grain. */
   private[graft] def ngramCounts(train0: DataFrame, textCol: String,
@@ -655,33 +662,7 @@ object CorpusStats {
                       numBuckets: Int = 32): NgramIndex = {
     require(order >= 2 && order <= 8,
       s"order must be in 2..8, got $order")
-    val idx = NgramIndex(name, path, numBuckets, order)
-    writeNgramSlice(df, id, text, idx, append = false)
-    idx
-  }
-
-  /** Fold a crawl delta into the index: O(delta) — appends the delta's
-    * own per-order gram-count slices plus its ledger ids; history is
-    * never rescanned. Counts are additive over id-disjoint ingests
-    * (guarded); probes fold slices with sum and compaction
-    * re-collapses. */
-  def extendNgramIndex(delta: DataFrame, id: String, text: String,
-                       idx: NgramIndex): Unit = {
-    IndexAdmin.requireDisjointIds(delta, id, idx.docsTable, "doc_id",
-      "extendNgramIndex")
-    writeNgramSlice(delta, id, text, idx, append = true)
-  }
-
-  /** One ingest's per-order gram-count slices plus its ledger ids. */
-  private def writeNgramSlice(df: DataFrame, id: String, text: String,
-                              idx: NgramIndex, append: Boolean): Unit = {
-    ngramCounts(df, text, idx.order, None).zipWithIndex.foreach {
-      case (c, i) =>
-        val j = i + 1
-        idx.write(idx.gramsTable(j),
-          c.select(col(s"g$j").as("g"), col(s"c$j").as("n")), append)
-    }
-    idx.writeLedger(df, id, append)
+    NgramIndex(name, path, numBuckets, order).build(df, id, text)
   }
 
   /** [[ngramLogProbAgainst]] with the TRAIN side read out of a

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
@@ -21,13 +21,24 @@ case class DedupIndex(name: String, path: String, n: Int, numPerms: Int,
   def layout: Seq[IndexTable] = Seq(
     IndexTable.Bucketed(bandsTable, "bkey", numBuckets),
     IndexTable.Bucketed(shinglesTable, "doc", numBuckets))
+  protected def guard: (String, String) = (shinglesTable, "doc")
+  protected def slices(df: DataFrame, id: String, text: String,
+                       append: Boolean): Seq[(String, DataFrame)] = {
+    val sh = Dedup.withShingles(df, id, text, n)
+    Seq(bandsTable -> Dedup.bandKeyTable(
+        Dedup.minhashSignatureTable(sh, numPerms), numPerms, rowsPerBand),
+      shinglesTable -> sh)
+  }
 }
 
 /** Handle to a persisted exact-dedup fingerprint index (see
   * [[Dedup.buildExactIndex]]): one row per distinct corpus fingerprint
   * (fp, keep_id), bucketed+sorted by fp — the one-row-per-fp invariant
-  * is load-bearing for the probe's outer join and is preserved by
-  * [[Dedup.extendExactIndex]]'s anti-join append. */
+  * is load-bearing for the probe's outer join, so an extend appends
+  * only the fps not yet indexed (a NULL-safe anti-join). Only survivors
+  * are recorded, so the guard checks the delta against the keep ids: a
+  * re-folded id could become another fp's keep_id and corrupt keep
+  * verdicts downstream. */
 case class ExactIndex(name: String, path: String, numBuckets: Int)
     extends PersistedIndex {
   type Self = ExactIndex
@@ -35,6 +46,12 @@ case class ExactIndex(name: String, path: String, numBuckets: Int)
   def fpTable: String = s"${name}_fp"
   def layout: Seq[IndexTable] =
     Seq(IndexTable.Bucketed(fpTable, "fp", numBuckets))
+  protected def guard: (String, String) = (fpTable, "keep_id")
+  protected def slices(df: DataFrame, id: String, text: String,
+                       append: Boolean): Seq[(String, DataFrame)] = {
+    val fps = Dedup.exactGroups(df, id, text).select(col("fp"), col("keep_id"))
+    Seq(fpTable -> (if (append) IndexAdmin.unseen(fps, "fp", fpTable) else fps))
+  }
 }
 
 /** Handle to a persisted corpus line-frequency index (see
@@ -53,6 +70,9 @@ case class LineIndex(name: String, path: String, numBuckets: Int)
   def freqTable: String = s"${name}_lf"
   def layout: Seq[IndexTable] = Seq(
     IndexTable.Bucketed(freqTable, "lfp", numBuckets, Some("ndocs")), ledger)
+  protected def countSlices(df: DataFrame, id: String,
+                            text: String): Seq[(String, DataFrame)] =
+    Seq(freqTable -> Dedup.lineFreqSlice(df, id, text))
 }
 
 /** Handle to a persisted substring-dedup GRAM index (see
@@ -71,6 +91,10 @@ case class SpanIndex(name: String, path: String, numBuckets: Int,
   def freqTable: String = s"${name}_gf"
   def layout: Seq[IndexTable] = Seq(
     IndexTable.Bucketed(freqTable, "g", numBuckets, Some("n")), ledger)
+  protected def countSlices(df: DataFrame, id: String,
+                            text: String): Seq[(String, DataFrame)] =
+    Seq(freqTable -> Dedup.spanGrams(df, id, text, minLen)
+      .groupBy("g").agg(count(lit(1)).as("n")))
 }
 
 /** Handle to a persisted embedding near-dup index (see
@@ -90,6 +114,15 @@ case class EmbeddingIndex(name: String, path: String, dim: Int,
   def layout: Seq[IndexTable] = Seq(
     IndexTable.Bucketed(bandsTable, "bkey", numBuckets),
     IndexTable.Bucketed(vectorsTable, "vid", numBuckets))
+  protected def guard: (String, String) = (vectorsTable, "vid")
+  protected def slices(df: DataFrame, id: String, vec: String,
+                       append: Boolean): Seq[(String, DataFrame)] = {
+    import graft.functions.VectorFunctions._
+    Seq(bandsTable ->
+        Dedup.embBandTable(df, id, vec, dim, bitsPerBand, numBands),
+      vectorsTable -> df.select(col(id).as("vid"), asDoubles(col(vec)).as("v"))
+        .withColumn("nrm", l2Norm(col("v"))))
+  }
 }
 
 /** Document deduplication for large-scale training-data pipelines.
@@ -186,27 +219,6 @@ object Dedup {
       .withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark("fp")
 
-  /** Streaming exact dedup against FULL history: [[streamingExact]]'s
-    * watermark-bounded in-stream dedup composed with a stream-static
-    * NULL-SAFE anti-join against the persisted fingerprint index, so a
-    * document that duplicates ANYTHING ever folded into the index is
-    * dropped — no matter how long ago its original arrived. This fixes
-    * the horizon limitation the streamingExact scaladoc documents:
-    * in-stream state stays watermark-bounded (finite), while history
-    * lives in the bucketed index table on storage, not in the state
-    * store. The static side is re-read per micro-batch, so a
-    * concurrent [[extendExactIndex]] (e.g. a nightly fold-in of the
-    * accepted stream output) is picked up without restarting the
-    * query. */
-  def streamingExactWithHistory(stream: DataFrame, textCol: String,
-                                tsCol: String, delay: String,
-                                idx: ExactIndex): DataFrame = {
-    val spark = stream.sparkSession
-    val seen = spark.table(idx.fpTable).select(col("fp").as("__ifp"))
-    streamingExact(stream, textCol, tsCol, delay)
-      .join(seen, col("fp") <=> col("__ifp"), "left_anti")
-  }
-
   /** One row per duplicate group: fingerprint, surviving id, group size. */
   def exactGroups(df: DataFrame, id: String, text: String): DataFrame =
     df.withColumn("fp", TextFunctions.fingerprint(col(text)))
@@ -220,33 +232,8 @@ object Dedup {
     * counterpart of [[buildIndex]]. */
   def buildExactIndex(df: DataFrame, id: String, text: String,
                       name: String, path: String,
-                      numBuckets: Int = 32): ExactIndex = {
-    val idx = ExactIndex(name, path, numBuckets)
-    idx.write(idx.fpTable,
-      exactGroups(df, id, text).select(col("fp"), col("keep_id")),
-      append = false)
-    idx
-  }
-
-  /** Fold a processed delta's fingerprints in: only fps NOT already
-    * indexed are appended (NULL-SAFE anti-join — the null-fp group of
-    * null-text docs must match its indexed row like any other, or every
-    * extend would re-append it), preserving the one-row-per-fp
-    * invariant. Single-writer contract, as for the other indexes. */
-  def extendExactIndex(delta: DataFrame, id: String, text: String,
-                       idx: ExactIndex): Unit = {
-    val spark = delta.sparkSession
-    // a re-folded id can become another fp's keep_id, corrupting keep
-    // verdicts downstream — fail loudly instead (default-on check)
-    IndexAdmin.requireDisjointIds(delta, id, idx.fpTable, "keep_id",
-      "extendExactIndex")
-    val existing = spark.table(idx.fpTable)
-      .select(col("fp").as("__ifp")).hint("shuffle_hash")
-    idx.write(idx.fpTable,
-      exactGroups(delta, id, text).select(col("fp"), col("keep_id"))
-        .join(existing, col("fp") <=> col("__ifp"), "left_anti"),
-      append = true)
-  }
+                      numBuckets: Int = 32): ExactIndex =
+    ExactIndex(name, path, numBuckets).build(df, id, text)
 
   /** Exact-dedup verdicts for a delta against the indexed corpus:
     * (id, fp, keep) for every delta row, keep = the fingerprint is
@@ -333,8 +320,8 @@ object Dedup {
     * array in one row (10 MB doc = 10M windows). Shared by
     * [[duplicateSpans]] and the [[SpanIndex]] family so batch and
     * incremental gram at the identical grain. */
-  private def spanGrams(df: DataFrame, id: String, text: String,
-                        minLen: Int): DataFrame =
+  private[operators] def spanGrams(df: DataFrame, id: String,
+                                   text: String, minLen: Int): DataFrame =
     // spread before the per-position gram generator (one digest per
     // CHARACTER): the fan-out factor is the largest in the engine, so
     // a 2-task scan serializes the whole family (guard: no-op at scale)
@@ -385,24 +372,7 @@ object Dedup {
                      minLen: Int, name: String, path: String,
                      numBuckets: Int = 32): SpanIndex = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
-    val idx = SpanIndex(name, path, numBuckets, minLen)
-    idx.write(idx.freqTable, spanGrams(df, id, text, minLen)
-      .groupBy("g").agg(count(lit(1)).as("n")), append = false)
-    idx.writeLedger(df, id, append = false)
-    idx
-  }
-
-  /** Fold a delta into the span index: O(delta) — appends the delta's
-    * own gram-frequency slice plus its ledger ids. Occurrence counts
-    * are additive over disjoint ingests; probes fold slices with sum
-    * and compaction re-collapses. */
-  def extendSpanIndex(delta: DataFrame, id: String, text: String,
-                      idx: SpanIndex): Unit = {
-    IndexAdmin.requireDisjointIds(delta, id, idx.docsTable, "doc_id",
-      "extendSpanIndex")
-    idx.write(idx.freqTable, spanGrams(delta, id, text, idx.minLen)
-      .groupBy("g").agg(count(lit(1)).as("n")), append = true)
-    idx.writeLedger(delta, id, append = true)
+    SpanIndex(name, path, numBuckets, minLen).build(df, id, text)
   }
 
   /** [[duplicateSpans]] for a delta against the indexed corpus: a
@@ -726,31 +696,17 @@ object Dedup {
     * h_i(x) = (a_i * x + b_i) mod p with p = 2^31 - 1. Base hash is
     * xxhash64 truncated to 32 bits so a_i * x + b_i stays well inside a
     * 64-bit long under ANSI arithmetic (no overflow). */
-  // the canonical modulus lives next to the kernel so the (perms,
-  // modulus) pair can never desynchronize across modules
-  private val MinhashP = graft.expressions.MinHashKernel.P
   private[graft] def perms(n: Int): Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(42)
     Seq.fill(n)(((rnd.nextInt(Int.MaxValue - 1).toLong | 1L),
       rnd.nextInt(Int.MaxValue - 1).toLong))
   }
 
-  /** MinHash signature column: array<bigint> of length `numPerms` over a
-    * distinct-shingle array column. Empty shingle sets get the sentinel
-    * signature of all p (never collides with a real hash). */
-  def minhashSignature(shingles: Column, numPerms: Int): Column = {
-    val h32 = transform(shingles, s => xxhash64(s).bitwiseAND(lit(0xffffffffL)))
-    val sigs = perms(numPerms).map { case (a, b) =>
-      aggregate(h32, lit(MinhashP),
-        (m, h) => least(m, pmod(h * lit(a) + lit(b), lit(MinhashP))))
-    }
-    array(sigs: _*)
-  }
-
   /** MinHash signatures via the single-pass kernel
     * (graft.expressions.MinHashKernel — Spark's own XXH64, so hashes are
-    * bit-identical to [[minhashSignature]] and the previous explode +
-    * numPerms-column min() aggregate): a pure projection over the
+    * bit-identical to the composed `aggregate` form the specs keep as a
+    * reference and to the previous explode + numPerms-column min()
+    * aggregate): a pure projection over the
     * shingle array, no row expansion, no shuffle. Empty-shingle docs are
     * excluded (parity with the aggregate formulation). */
   def minhashSignatureTable(sh: DataFrame, numPerms: Int): DataFrame = {
@@ -822,33 +778,9 @@ object Dedup {
     * cluster memory. */
   def buildIndex(df: DataFrame, id: String, text: String, name: String,
                  path: String, n: Int = 3, numPerms: Int = 64,
-                 rowsPerBand: Int = 2, numBuckets: Int = 32): DedupIndex = {
-    val idx = DedupIndex(name, path, n, numPerms, rowsPerBand, numBuckets)
-    writeIndexSlice(withShingles(df, id, text, n), idx, append = false)
-    idx
-  }
-
-  /** Fold a processed delta into the index (bucketed append with the
-    * index's own spec): after [[pairsAgainstIndex]] has emitted the
-    * delta's pairs, extending makes the next delta dedup against
-    * corpus + this one. Caller contract (as for pairsAgainstIndex):
-    * delta ids are disjoint from ids already indexed — VERIFIED by
-    * default ([[IndexAdmin.requireDisjointIds]]; a re-appended id
-    * would double-count in every later probe). */
-  def extendIndex(delta: DataFrame, id: String, text: String,
-                  idx: DedupIndex): Unit = {
-    IndexAdmin.requireDisjointIds(delta, id, idx.shinglesTable, "doc",
-      "extendIndex")
-    writeIndexSlice(withShingles(delta, id, text, idx.n), idx, append = true)
-  }
-
-  private def writeIndexSlice(sh: DataFrame, idx: DedupIndex,
-                              append: Boolean): Unit = {
-    idx.write(idx.bandsTable, bandKeyTable(
-      minhashSignatureTable(sh, idx.numPerms), idx.numPerms,
-      idx.rowsPerBand), append)
-    idx.write(idx.shinglesTable, sh, append)
-  }
+                 rowsPerBand: Int = 2, numBuckets: Int = 32): DedupIndex =
+    DedupIndex(name, path, n, numPerms, rowsPerBand, numBuckets)
+      .build(df, id, text)
 
   /** Batch MinHash dedup over MATERIALIZED signatures: the whole-corpus
     * analogue of [[pairsAgainstIndex]], and the 100 TB answer to
@@ -946,29 +878,17 @@ object Dedup {
   // SimHash
   // ------------------------------------------------------------------
 
-  /** 64-bit SimHash over a token/shingle array column, as bigint.
-    * bit b of the result is 1 iff sum over tokens of (+1 if bit b of
-    * xxhash64(token) else -1) is positive. */
-  def simhash64(tokens: Column): Column = {
-    val hs = transform(tokens, t => xxhash64(t))
-    val bits = (0 until 64).map { b =>
-      val vote = aggregate(hs, lit(0L), (acc, h) =>
-        acc + when(shiftright(h, b).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L))
-      when(vote > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   /** SimHash per document via the single-pass kernel
     * (graft.expressions.SimHashKernel): a pure projection, no row
     * expansion, no shuffle. Documents with zero tokens are absent from
     * the output (parity with the previous explode+groupBy formulation).
     *
-    * Token hash: by default Spark's own XXH64 (bit-identical to
-    * [[simhash64]] and the xxhash64 SQL function); with
-    * `portable = true` the first 64 bits of md5 — computable identically
-    * in DuckDB (`('0x' || substr(md5(t), 1, 16))::UBIGINT`), which makes
-    * the whole SimHash dedup pipeline SQL-oracle-expressible. */
+    * Token hash: by default Spark's own XXH64 (bit-identical to the
+    * composed form the specs keep as a reference and to the xxhash64
+    * SQL function); with `portable = true` the first 64 bits of md5 —
+    * computable identically in DuckDB
+    * (`('0x' || substr(md5(t), 1, 16))::UBIGINT`), which makes the whole
+    * SimHash dedup pipeline SQL-oracle-expressible. */
   def simhashTable(df: DataFrame, id: String, text: String,
                    portable: Boolean = false): DataFrame =
     // fused tokenize+hash kernel: one pass over the raw text, no token
@@ -1185,21 +1105,6 @@ object Dedup {
     semDedupAssigned(asg, tau)
   }
 
-  def embeddingPairsExact(df: DataFrame, id: String, vec: String,
-                          threshold: Double): DataFrame = {
-    import graft.functions.VectorFunctions._
-    // norms are computed once per vector BEFORE the self-join, so each of
-    // the O(n^2) pairs costs exactly one codegen'd dot product
-    val v = df.select(col(id).as("vid"), asDoubles(col(vec)).as("v"))
-      .withColumn("nrm", l2Norm(col("v")))
-    v.as("a").join(v.as("b"), col("a.vid") < col("b.vid"))
-      .withColumn("cosine",
-        cosineFrom(dot(col("a.v"), col("b.v")), col("a.nrm"), col("b.nrm")))
-      .where(col("cosine") >= threshold)
-      .select(col("a.vid").as("id1"), col("b.vid").as("id2"),
-        round(col("cosine"), 4).as("cosine"))
-  }
-
   /** Pairs of vectors with cosine similarity >= threshold. Picks the
     * candidate-generation strategy analytically from the banding math:
     *
@@ -1305,7 +1210,7 @@ object Dedup {
     * key hash — single-column join/bucketing, same argument as
     * [[bandKeyTable]] (a cross-band collision only adds a candidate
     * that exact cosine verification discards). */
-  private def embBandTable(df: DataFrame, id: String, vec: String,
+  private[operators] def embBandTable(df: DataFrame, id: String, vec: String,
                            dim: Int, bits: Int, bands: Int): DataFrame = {
     import graft.functions.VectorFunctions._
     df.select(col(id).as("vid"), posexplode(
@@ -1324,35 +1229,10 @@ object Dedup {
                           name: String, path: String, threshold: Double,
                           dim: Int, maxBands: Int = 512,
                           numBuckets: Int = 32): EmbeddingIndex = {
-    import graft.functions.VectorFunctions._
     require(dim > 0, "buildEmbeddingIndex requires an explicit dim")
     val (bits, bands) = Similarity.bandingFor(threshold, maxBands)
-    val idx = EmbeddingIndex(name, path, dim, bits, bands, threshold,
-      numBuckets)
-    idx.write(idx.bandsTable, embBandTable(df, id, vec, dim, bits, bands),
-      append = false)
-    idx.write(idx.vectorsTable,
-      df.select(col(id).as("vid"), asDoubles(col(vec)).as("v"))
-        .withColumn("nrm", l2Norm(col("v"))), append = false)
-    idx
-  }
-
-  /** Fold a processed delta into the embedding index (bucketed append
-    * with the index's own banding) — same contract as [[extendIndex]]:
-    * after [[embeddingPairsAgainstIndex]] has emitted the delta's
-    * pairs, the next delta dedups against corpus + this one. Caller
-    * contract: delta ids disjoint from ids already indexed — VERIFIED
-    * by default ([[IndexAdmin.requireDisjointIds]]). */
-  def extendEmbeddingIndex(delta: DataFrame, id: String, vec: String,
-                           idx: EmbeddingIndex): Unit = {
-    import graft.functions.VectorFunctions._
-    IndexAdmin.requireDisjointIds(delta, id, idx.vectorsTable, "vid",
-      "extendEmbeddingIndex")
-    idx.write(idx.bandsTable, embBandTable(delta, id, vec, idx.dim,
-      idx.bitsPerBand, idx.numBands), append = true)
-    idx.write(idx.vectorsTable,
-      delta.select(col(id).as("vid"), asDoubles(col(vec)).as("v"))
-        .withColumn("nrm", l2Norm(col("v"))), append = true)
+    EmbeddingIndex(name, path, dim, bits, bands, threshold, numBuckets)
+      .build(df, id, vec)
   }
 
   /** Near-dup pairs between `delta` and the indexed corpus plus pairs
@@ -1405,45 +1285,6 @@ object Dedup {
         cosineFrom(dot(col("v1"), col("v2")), col("n1"), col("n2")))
       .where(col("cosine") >= t)
       .select(col("id1"), col("id2"), round(col("cosine"), 4).as("cosine"))
-  }
-
-  /** Per-document keep/drop verdicts for a delta from its incremental
-    * pair set — the row an ingest pipeline actually filters on.
-    * `pairs` is [[pairsAgainstIndex]] (or the embedding analogue)
-    * output over `delta`; a delta doc DROPS when any pair partners it
-    * with an indexed doc (corpus-wins, same convention as
-    * [[exactAgainstIndex]] — id order between corpus and delta is
-    * irrelevant) or with a smaller delta id. Output: (id, keep), one
-    * row per delta doc.
-    *
-    * Verdicts are pair-partner greedy, not transitive: within-delta
-    * chains (a~b, b~c, a!~c) keep only the smallest id, matching the
-    * batch [[graft.operators.Clustering.dedupVerdicts]] for chains
-    * whose pairs all exist; for full closure semantics over a large
-    * delta, run Clustering.dedupVerdicts on the pair set instead. */
-  def verdictsFromIncrementalPairs(delta: DataFrame, id: String,
-                                   pairs: DataFrame,
-                                   d1: String = "d1",
-                                   d2: String = "d2"): DataFrame = {
-    val ids = delta.select(col(id).cast("long").as("__did"))
-    // mark which side of each pair is a delta doc (the other is indexed)
-    val marked = pairs
-      .select(col(d1).cast("long").as("a"), col(d2).cast("long").as("b"))
-      .join(ids.select(col("__did").as("a"), lit(true).as("__la")),
-        Seq("a"), "left_outer")
-      .join(ids.select(col("__did").as("b"), lit(true).as("__lb")),
-        Seq("b"), "left_outer")
-    val drops = marked.select(explode(array(
-        // delta side of a cross pair always drops (corpus wins)
-        when(col("__la").isNotNull && col("__lb").isNull, col("a")),
-        when(col("__lb").isNotNull && col("__la").isNull, col("b")),
-        // within-delta pair: the larger id drops (d1 < d2 by contract)
-        when(col("__la").isNotNull && col("__lb").isNotNull, col("b"))))
-        .as("__drop"))
-      .where(col("__drop").isNotNull).distinct()
-    ids.join(drops.select(col("__drop").as("__did"), lit(true).as("__d")),
-        Seq("__did"), "left_outer")
-      .select(col("__did").as(id), col("__d").isNull.as("keep"))
   }
 
   def embeddingPairsLsh(df: DataFrame, id: String, vec: String,
@@ -1659,7 +1500,7 @@ object Dedup {
 
   /** One ingest batch's line-frequency slice: `(lfp, ndocs)` at
     * DISTINCT-doc grain — the additive unit the index accumulates. */
-  private def lineFreqSlice(df: DataFrame, id: String,
+  private[operators] def lineFreqSlice(df: DataFrame, id: String,
                             text: String): DataFrame =
     lineKeys(lineSplit(df, id, text)).groupBy("lfp")
       .agg(countDistinct(col("doc_id")).as("ndocs"))
@@ -1669,28 +1510,11 @@ object Dedup {
     * re-crawl's boilerplate lines match the ACCUMULATED corpus counts,
     * not just the delta's own. 8-byte hashes + two longs per distinct
     * line; line text never persists. The doc ledger backs the
-    * disjoint-ids guard every `extend*` in this file enforces. */
+    * disjoint-ids guard. */
   def buildLineIndex(df: DataFrame, id: String, text: String,
                      name: String, path: String,
-                     numBuckets: Int = 32): LineIndex = {
-    val idx = LineIndex(name, path, numBuckets)
-    idx.write(idx.freqTable, lineFreqSlice(df, id, text), append = false)
-    idx.writeLedger(df, id, append = false)
-    idx
-  }
-
-  /** Fold a delta into the line index: O(delta) — APPENDS the delta's
-    * own frequency slice (distinct-doc counts are additive exactly
-    * when ingests never share a document, hence the guard) plus its
-    * ledger ids. The freq table accumulates one row per (slice, lfp);
-    * probes fold with sum, compaction re-collapses. */
-  def extendLineIndex(delta: DataFrame, id: String, text: String,
-                      idx: LineIndex): Unit = {
-    IndexAdmin.requireDisjointIds(delta, id, idx.docsTable, "doc_id",
-      "extendLineIndex")
-    idx.write(idx.freqTable, lineFreqSlice(delta, id, text), append = true)
-    idx.writeLedger(delta, id, append = true)
-  }
+                     numBuckets: Int = 32): LineIndex =
+    LineIndex(name, path, numBuckets).build(df, id, text)
 
   /** [[lineDedup]]'s remove-all rule for a delta against the indexed
     * corpus: a delta line is dropped iff its distinct-doc count across

@@ -30,10 +30,19 @@ object IndexTable {
   * with its layout, and the directory that backs them. The lifecycle
   * is build → probe → extend → compact-into-new → CUTOVER → drop-old,
   * and every step that touches storage goes through this trait: build
-  * and extend through [[write]], compaction through [[compact]], the
+  * and extend through one fold, compaction through [[compact]], the
   * cutover end through [[drop]]. Single-writer contract: extend,
   * compact and drop only while no other writer holds the index, and
-  * drop an old generation only after every probe of it has drained. */
+  * drop an old generation only after every probe of it has drained.
+  *
+  * The fold contract: the ids of every extend's delta are DISJOINT
+  * from the ids already indexed. A re-folded id double-counts in every
+  * later probe, and no later read can tell the duplicate from a
+  * legitimate row, so the fold verifies it by default against the
+  * handle's [[guard]] ([[IndexAdmin.requireDisjointIds]]; the
+  * `spark.graft.index.checkDisjointIds` conf opts out when upstream
+  * guarantees it). An extend is O(delta): it appends the delta's own
+  * slices and never rescans history. */
 trait PersistedIndex {
   /** The concrete handle type, which [[compact]] returns. */
   type Self <: PersistedIndex
@@ -44,17 +53,52 @@ trait PersistedIndex {
   /** This handle's parameters under another name and path. */
   protected def at(name: String, path: String): Self
 
+  /** The table and id column the disjoint-ids guard scans. */
+  protected def guard: (String, String)
+
+  /** The `(table, rows)` pairs one ingest of `df` writes, keyed by the
+    * id column `id` and the content column `c` (text or vector). A
+    * slice that needs the index's own state (an anti-join against the
+    * indexed keys, the persisted centroids or codebook) reads it here,
+    * after the seed is written. */
+  protected def slices(df: DataFrame, id: String, c: String,
+                       append: Boolean): Seq[(String, DataFrame)]
+
   /** The one writer of index tables. A build (`append = false`)
     * overwrites `table` at `<path>/<table>`; an extend appends to it
     * without a path, since the location is fixed at creation and the
     * append inherits it. Both repeat the table's declared layout. */
-  private[graft] def write(table: String, df: DataFrame,
-                           append: Boolean): Unit = {
+  private def write(table: String, df: DataFrame, append: Boolean): Unit = {
     val t = layout.find(_.name == table).getOrElse(throw
       new IllegalArgumentException(s"$table is not a table of index $name"))
     IndexAdmin.save(df, t,
       if (append) None else Some(s"$path/$table"))
   }
+
+  /** The one fold-in: guard the delta's ids (extend only), then write
+    * its slices. */
+  private def fold(df: DataFrame, id: String, c: String,
+                   append: Boolean): Unit = {
+    if (append) IndexAdmin.requireDisjointIds(df, id, guard._1, guard._2,
+      s"${getClass.getSimpleName} $name")
+    slices(df, id, c, append).foreach { case (t, rows) =>
+      write(t, rows, append) }
+  }
+
+  /** Create the index over `df`: write the `seed` parameter tables
+    * (centroids, codebook), then fold `df` in without appending. */
+  private[graft] def build(df: DataFrame, id: String, c: String,
+                           seed: (String, DataFrame)*): this.type = {
+    seed.foreach { case (t, rows) => write(t, rows, append = false) }
+    fold(df, id, c, append = false)
+    this
+  }
+
+  /** Fold a processed delta into the index: after the probe has
+    * answered the delta, extending makes the next delta probe against
+    * corpus + this one. `c` is the column the index was built over. */
+  def extend(delta: DataFrame, id: String, c: String): Unit =
+    fold(delta, id, c, append = true)
 
   /** Compact a many-times-extended index: every extend appends small
     * files per bucket or cell until open/seek cost dominates the
@@ -89,21 +133,25 @@ trait PersistedIndex {
   }
 }
 
-/** A persisted index whose extends are guarded by a ledger of ingested
-  * document ids: `(doc_id)` bucketed by `doc_id`, the index side of
-  * [[IndexAdmin.requireDisjointIds]] for indexes whose other tables
-  * carry no document id. */
+/** A persisted index of additive count slices whose tables carry no
+  * document id: a ledger of ingested document ids, `(doc_id)` bucketed
+  * by `doc_id`, is its guard, and every fold records the delta's ids
+  * in it beside the handle's own [[countSlices]]. */
 trait LedgeredIndex extends PersistedIndex {
   def numBuckets: Int
   def docsTable: String = s"${name}_docs"
   protected def ledger: IndexTable =
     IndexTable.Bucketed(docsTable, "doc_id", numBuckets)
+  protected def guard: (String, String) = (docsTable, "doc_id")
 
-  /** Record the distinct ids of `df` in the ledger. */
-  private[graft] def writeLedger(df: DataFrame, id: String,
-                                 append: Boolean): Unit =
-    write(docsTable, df.select(col(id).cast("long").as("doc_id")).distinct(),
-      append)
+  /** The count slices one ingest of `df` writes. */
+  protected def countSlices(df: DataFrame, id: String,
+                            c: String): Seq[(String, DataFrame)]
+
+  protected def slices(df: DataFrame, id: String, c: String,
+                       append: Boolean): Seq[(String, DataFrame)] =
+    countSlices(df, id, c) :+ (docsTable ->
+      df.select(col(id).cast("long").as("doc_id")).distinct())
 }
 
 private[graft] object IndexAdmin {
@@ -151,17 +199,23 @@ private[graft] object IndexAdmin {
     case IndexTable.Plain(name) => spark.table(name)
   }
 
+  /** The rows of `rows` whose `key` is not yet in `table` — the append
+    * slice of an index that keeps one row per key. NULL-SAFE: a null
+    * key matches its indexed row like any other, or every extend would
+    * re-append it. */
+  def unseen(rows: DataFrame, key: String, table: String): DataFrame =
+    rows.join(rows.sparkSession.table(table).select(col(key).as("__seen"))
+      .hint("shuffle_hash"), col(key) <=> col("__seen"), "left_anti")
+
   /** Conf key gating [[requireDisjointIds]] (default on). A 100 TB
     * ingest that already guarantees monotone ids upstream can turn the
     * verification scan off; everyone else gets a loud failure instead
     * of silently double-counted probes. */
   val CheckDisjointKey = "spark.graft.index.checkDisjointIds"
 
-  /** Enforce the `extend*` fold-in contract — delta ids DISJOINT from
-    * ids already indexed — instead of trusting the scaladoc. A
-    * violation is otherwise silent and compounding: a re-appended id
-    * double-counts in every subsequent probe and no later read can
-    * tell the duplicate from a legitimate row.
+  /** Enforce the fold contract of [[PersistedIndex]] — delta ids
+    * DISJOINT from ids already indexed — instead of trusting the
+    * scaladoc. `op` names the handle in the message.
     *
     * Cost: one column-pruned scan of the index's id column, semi-joined
     * against the (broadcast) delta ids, aborted after the first few

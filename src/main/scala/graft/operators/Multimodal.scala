@@ -386,13 +386,6 @@ object Multimodal {
     }
   }
 
-  /** Resize every record, partition-parallel. */
-  def resizeAll(ds: Dataset[MediaRecord], targetBytes: Int)
-               (implicit spark: SparkSession): Dataset[MediaRecord] = {
-    import spark.implicits._
-    ds.mapPartitions(_.map(padPayload(_, targetBytes)))
-  }
-
   /** REAL image resize — decode (`javax.imageio`), scale so the longer
     * side equals `maxDim` (aspect preserved; bilinear `Graphics2D`
     * draw), re-encode as PNG; zero new dependencies. The thumbnail/

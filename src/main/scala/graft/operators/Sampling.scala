@@ -641,59 +641,7 @@ object Sampling {
     * it). One k-row aggregate over one scan. */
   def shardManifest(df: DataFrame, idCol: String, charsCol: String,
                     nShards: Int, salt: String = "shard"): DataFrame =
-    manifestAgg(withShard(df, idCol, nShards, salt), idCol, charsCol, salt)
-
-  // the ONE manifest aggregation — writer read-back and reader-side
-  // verification recompute it, so a convention change (salt suffix,
-  // hash width, column set) edited anywhere but here would silently
-  // fail every artifact's certification
-  private def manifestAgg(df: DataFrame, idCol: String, charsCol: String,
-                          salt: String, suffix: String = ""): DataFrame =
-    df.groupBy("shard")
-      .agg(count(lit(1)).as("n_docs" + suffix),
-        sum(col(charsCol)).as("n_chars" + suffix),
-        sum(orderHash(col(idCol), salt + ":ck")).as("checksum" + suffix))
-
-  /** Materialize the corpus as `nShards` hash-assigned parquet shard
-    * directories (one file per shard via the shard-keyed repartition)
-    * and return the manifest computed FROM THE WRITTEN FILES — the
-    * read-back certifies the artifact on disk, not the plan that
-    * produced it. Shard assignment is [[withShard]]'s, so re-running
-    * the writer on an appended corpus rewrites shards in place with
-    * every pre-existing doc in the same shard as before. */
-  def writeShards(df: DataFrame, idCol: String, charsCol: String,
-                  nShards: Int, path: String,
-                  salt: String = "shard"): DataFrame = {
-    withShard(df, idCol, nShards, salt)
-      .repartition(nShards, col("shard"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("shard").parquet(path)
-    manifestAgg(df.sparkSession.read.parquet(path), idCol, charsCol, salt)
-  }
-
-  /** Reader-side certification — what a trainer runs BEFORE touching
-    * payload bytes: recompute the manifest from the shard directories
-    * and diff it against the expected one, shard by shard. Output is
-    * one row per shard on EITHER side (full outer — a missing or
-    * extraneous shard directory is a failed row, not a silent drop):
-    * `(shard, ok, n_docs, n_docs_found, n_chars, n_chars_found,
-    * checksum, checksum_found)`; `ok` iff all three pairs match. The
-    * scan prunes to (idCol, charsCol, shard) — certification never
-    * reads a payload column. */
-  def verifyShards(spark: org.apache.spark.sql.SparkSession, path: String,
-                   expected: DataFrame, idCol: String, charsCol: String,
-                   salt: String = "shard"): DataFrame = {
-    val found = manifestAgg(spark.read.parquet(path), idCol, charsCol,
-        salt, suffix = "_found")
-      .select(col("shard").as("__fsh"), col("n_docs_found"),
-        col("n_chars_found"), col("checksum_found"))
-    expected.join(found, col("shard") === col("__fsh"), "full_outer")
-      .select(coalesce(col("shard"), col("__fsh")).as("shard"),
-        (col("n_docs") <=> col("n_docs_found") &&
-          col("n_chars") <=> col("n_chars_found") &&
-          col("checksum") <=> col("checksum_found")).as("ok"),
-        col("n_docs"), col("n_docs_found"),
-        col("n_chars"), col("n_chars_found"),
-        col("checksum"), col("checksum_found"))
-  }
+    withShard(df, idCol, nShards, salt).groupBy("shard")
+      .agg(count(lit(1)).as("n_docs"), sum(col(charsCol)).as("n_chars"),
+        sum(orderHash(col(idCol), salt + ":ck")).as("checksum"))
 }

@@ -9,7 +9,12 @@ import graft.functions.VectorFunctions._
   * the corpus with assigned cells as an external parquet table
   * PARTITIONED by `cell` (one directory per cell, so a probe's
   * `cell IN (...)` predicate prunes to exactly the probed partitions)
-  * plus the centroid table the cells were assigned against. */
+  * plus the centroid table the cells were assigned against. Centroids
+  * are immutable after build (the faiss IVF contract: fold-ins shift
+  * cell occupancy, never geometry), so every fold assigns against the
+  * persisted table and writes files only under the cells its rows land
+  * in; a build plus extends equals one build over the union at the same
+  * centroids (spec- and gate-pinned). */
 case class IvfIndex(name: String, path: String) extends PersistedIndex {
   type Self = IvfIndex
   protected def at(name: String, path: String) = copy(name = name, path = path)
@@ -17,6 +22,13 @@ case class IvfIndex(name: String, path: String) extends PersistedIndex {
   def centroidsTable: String = s"${name}_cents"
   def layout: Seq[IndexTable] = Seq(IndexTable.Cells(corpusTable),
     IndexTable.Plain(centroidsTable))
+  protected def guard: (String, String) = (corpusTable, "cid")
+  protected def slices(df: DataFrame, id: String, vec: String,
+                       append: Boolean): Seq[(String, DataFrame)] =
+    Seq(corpusTable -> Similarity.assignCells(df, id, vec,
+        df.sparkSession.table(centroidsTable), "cell", "centroid")
+      .select(col(id).as("cid"), asDoubles(col(vec)).as("cv"), col("cell"))
+      .withColumn("cn", l2Norm(col("cv"))))
 }
 
 /** Handle to a persisted IVF-PQ index (see
@@ -36,6 +48,18 @@ case class IvfPqIndex(name: String, path: String) extends PersistedIndex {
   def codebookTable: String = s"${name}_pqcb"
   def layout: Seq[IndexTable] = Seq(IndexTable.Cells(corpusTable),
     IndexTable.Plain(centroidsTable), IndexTable.Plain(codebookTable))
+  protected def guard: (String, String) = (corpusTable, "cid")
+  /** Assign to the persisted coarse centroids and encode against the
+    * persisted codebook, both immutable after build. */
+  protected def slices(df: DataFrame, id: String, vec: String,
+                       append: Boolean): Seq[(String, DataFrame)] = {
+    val spark = df.sparkSession
+    Seq(corpusTable -> Similarity.pqEncoded(Similarity.assignCells(df, id,
+        vec, spark.table(centroidsTable), "cell", "centroid")
+      .select(col(id).cast("long").as("cid"), asDoubles(col(vec)).as("cv"),
+        col("cell").cast("long").as("cell")),
+      Similarity.loadPqCodebook(spark, this)))
+  }
 }
 
 /** Approximate / exact nearest-neighbor search over an embedding column.
@@ -264,39 +288,8 @@ object Similarity {
                     centroids: DataFrame, centId: String, centVec: String,
                     name: String, path: String): IvfIndex = {
     val idx = IvfIndex(name, path)
-    idx.write(idx.centroidsTable, centroidTable(centroids, centId, centVec),
-      append = false)
-    idx.write(idx.corpusTable,
-      assignCells(corpus, id, vec, centroids, centId, centVec)
-        .select(col(id).as("cid"), asDoubles(col(vec)).as("cv"), col("cell"))
-        .withColumn("cn", l2Norm(col("cv"))), append = false)
-    idx
-  }
-
-  /** Fold a delta of NEW vectors into a persisted IVF index: assign each
-    * delta vector to its nearest EXISTING centroid (read from the
-    * index's centroid table — centroids are immutable after build, the
-    * faiss IVF contract: fold-ins shift cell occupancy, never geometry)
-    * and append to the cell-partitioned corpus table, repeating the
-    * partition spec but NOT the path — the same append discipline as the
-    * dedup indexes' `extend*`. Each fold writes files only under the
-    * cells the delta actually lands in, so fold-in cost is O(delta),
-    * not O(index), and the result is identical to a from-scratch build
-    * over corpus ∪ delta at the same centroids (spec- and gate-pinned).
-    * Single-writer contract; caller contract: delta ids disjoint from
-    * indexed ids — VERIFIED by default (a duplicate id would silently
-    * double-count in every probe); see [[IndexAdmin.requireDisjointIds]]
-    * for the opt-out conf. */
-  def extendIvfIndex(delta: DataFrame, id: String, vec: String,
-                     idx: IvfIndex): Unit = {
-    val spark = delta.sparkSession
-    IndexAdmin.requireDisjointIds(delta, id, idx.corpusTable, "cid",
-      "extendIvfIndex")
-    val cents = spark.table(idx.centroidsTable)
-    idx.write(idx.corpusTable,
-      assignCells(delta, id, vec, cents, "cell", "centroid")
-        .select(col(id).as("cid"), asDoubles(col(vec)).as("cv"), col("cell"))
-        .withColumn("cn", l2Norm(col("cv"))), append = true)
+    idx.build(corpus, id, vec,
+      idx.centroidsTable -> centroidTable(centroids, centId, centVec))
   }
 
   /** IVF ANN against a persisted index: identical results to [[ivfKnn]]
@@ -960,29 +953,25 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     val idx = IvfPqIndex(name, path)
-    idx.write(idx.centroidsTable, centroidTable(centroids, centId, centVec),
-      append = false)
-    idx.write(idx.codebookTable,
-      cb.centroids.zipWithIndex.flatMap { case (subCents, s) =>
-        subCents.zipWithIndex.map { case (cent, c) => (s, c, cent.toSeq) }
-      }.toDF("sub", "code", "centroid").coalesce(1), append = false)
-    writeIvfPqSlice(assignCells(corpus, id, vec, centroids, centId, centVec)
-        .select(col(id).cast("long").as("cid"), asDoubles(col(vec)).as("cv"),
-          col("cell").cast("long").as("cell")),
-      cb, idx, append = false)
-    idx
+    idx.build(corpus, id, vec,
+      idx.centroidsTable -> centroidTable(centroids, centId, centVec),
+      idx.codebookTable ->
+        cb.centroids.zipWithIndex.flatMap { case (subCents, s) =>
+          subCents.zipWithIndex.map { case (cent, c) => (s, c, cent.toSeq) }
+        }.toDF("sub", "code", "centroid").coalesce(1))
   }
 
-  /** Encode (cid, cv, cell) rows and write/append the corpus slice. */
-  private def writeIvfPqSlice(assigned: DataFrame, cb: PqCodebook,
-                              idx: IvfPqIndex, append: Boolean): Unit = {
+  /** Encode assigned (cid, cv, cell) rows against `cb`: one IVF-PQ
+    * corpus slice. */
+  private[operators] def pqEncoded(assigned: DataFrame,
+                                   cb: PqCodebook): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
     val cn2 = pqCentNorm2(cb)
     val centsArr = cb.centroids.map(_.toArray).toArray
     val dsub = cb.dsub
     val bc = spark.sparkContext.broadcast((centsArr, cn2))
-    val encoded = assigned.as[(Long, Seq[Double], Long)]
+    assigned.as[(Long, Seq[Double], Long)]
       .mapPartitions { it =>
         val (bCents, bCn2) = bc.value
         it.map { case (cid, cvSeq, cell) =>
@@ -994,24 +983,6 @@ object Similarity {
             math.sqrt(n2))
         }
       }.toDF()
-    idx.write(idx.corpusTable, encoded, append)
-  }
-
-  /** Fold NEW vectors into a persisted IVF-PQ index: assign to the
-    * immutable coarse centroids, encode against the immutable
-    * codebooks, append only the touched cell partitions — O(delta),
-    * the [[extendIvfIndex]] contract, delta-ids-disjoint VERIFIED by
-    * default. */
-  def extendIvfPqIndex(delta: DataFrame, id: String, vec: String,
-                       idx: IvfPqIndex): Unit = {
-    val spark = delta.sparkSession
-    IndexAdmin.requireDisjointIds(delta, id, idx.corpusTable, "cid",
-      "extendIvfPqIndex")
-    val cents = spark.table(idx.centroidsTable)
-    writeIvfPqSlice(assignCells(delta, id, vec, cents, "cell", "centroid")
-        .select(col(id).cast("long").as("cid"), asDoubles(col(vec)).as("cv"),
-          col("cell").cast("long").as("cell")),
-      loadPqCodebook(spark, idx), idx, append = true)
   }
 
   /** Rehydrate the PQ codebook from the index's own table. */

@@ -33,14 +33,4 @@ object Skew {
         sum(col("__pnv")).as("n_val"))
       .withColumnRenamed("__key", "key")
   }
-
-  /** Salted average built from the sum/count phases (exact, unlike
-    * averaging partial averages; divides by the NON-NULL count so null
-    * values are ignored exactly as Spark's avg() ignores them). */
-  def saltedAvg(df: DataFrame, key: Column, value: Column,
-                numSalts: Int = 32): DataFrame =
-    saltedSumCount(df, key, value, "__sum", numSalts)
-      .select(col("key"),
-        when(col("n_val") > 0, col("__sum") / col("n_val")).as("avg"),
-        col("n"))
 }

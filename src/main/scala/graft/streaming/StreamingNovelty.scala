@@ -24,20 +24,4 @@ object StreamingNovelty {
       Seq(col(idCol).as("id"), col(textCol).as("text")),
       chunk, nChunks, 4, "graft_cn_")(
       stream => Chunking.chunkVerdictStream(stream, "id", "text", idx))
-
-  /** Chunked replay of the STATEFUL
-    * [[Chunking.chunkVerdictStreamFirstCarrier]] variant — the spec's
-    * witness that two novel duplicates arriving in ONE stream dedup
-    * in-stream (keyed chunk_hash state bounded by the watermark
-    * horizon), instead of deferring to the periodic index fold-in. */
-  def firstCarrierReplay(docs: DataFrame, idCol: String, textCol: String,
-                         tsCol: String, watermarkDelay: String,
-                         idx: ChunkIndex, chunk: Column, nChunks: Int)
-                        (implicit spark: SparkSession): DataFrame =
-    ReplayHarness.replayToBatch(spark, docs,
-      Seq(col(idCol).as("id"), col(textCol).as("text"),
-        col(tsCol).as("ts")),
-      chunk, nChunks, 4, "graft_cnfc_")(
-      stream => Chunking.chunkVerdictStreamFirstCarrier(
-        stream, "id", "text", "ts", watermarkDelay, idx))
 }

@@ -383,12 +383,12 @@ object ScaleProbe {
     try {
       spark.conf.set(checkKey, "false")
       try (0 until 20).foreach { f =>
-        Similarity.extendIvfIndex(
+        idx.extend(
           engine.Tables.embeddings(spark, sfDir)
             .where(col("vec_id") < 250)
             .select((col("vec_id") + 100000000000L + f * 10000000L)
               .as("vec_id"), col("embedding")),
-          "vec_id", "embedding", idx)
+          "vec_id", "embedding")
       } finally spark.conf.unset(checkKey)
       def probeMedian(i: graft.operators.IvfIndex): Double =
         (1 to 3).map { _ =>
@@ -902,7 +902,7 @@ object ScaleProbe {
           () => {
             val d = ivfDelta(extendRep)
             extendRep += 1
-            Similarity.extendIvfIndex(d, "vec_id", "embedding", ivfIdx)
+            ivfIdx.extend(d, "vec_id", "embedding")
             d.count()
           }
         },

@@ -66,7 +66,7 @@ class ExtensionsSpec extends SparkSpec {
       "SELECT graft_minhash_sig(toks, 16) FROM kernel_probe")
       .collect()(0).getSeq[Long](0)
     val apiSig = Seq(Seq("the", "cat")).toDF("toks")
-      .select(graft.operators.Dedup.minhashSignature(col("toks"), 16))
+      .select(graft.operators.DedupReference.minhashSignature(col("toks"), 16))
       .collect()(0).getSeq[Long](0)
     assert(sqlSig.length == 16 && sqlSig == apiSig)
     // within-doc repeated-line removal from SQL == the Scala API form
@@ -116,21 +116,24 @@ class ExtensionsSpec extends SparkSpec {
     assert(salted == direct)
     val avgDirect = df.groupBy("k").agg(avg("v")).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val avgSalted = graft.operators.Skew.saltedAvg(df, col("k"), col("v"))
+    def saltedAvg(d: org.apache.spark.sql.DataFrame) = graft.operators.Skew
+      .saltedSumCount(d, col("k"), col("v"), "sv")
+      .select(col("key"), when(col("n_val") > 0, col("sv") / col("n_val")))
+    val avgSalted = saltedAvg(df)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     avgDirect.foreach { case (k, v) =>
       assert(math.abs(avgSalted(k) - v) < 1e-9)
     }
 
-    // null values: avg must divide by the NON-NULL count exactly as
-    // Spark's avg does (sum skips nulls; dividing by the row count
-    // would silently deflate the average)
+    // null values: an avg over the phases must divide by the NON-NULL
+    // count n_val exactly as Spark's avg does (sum skips nulls; dividing
+    // by the row count would silently deflate the average)
     val withNulls = rows.toDF("k", "v")
       .withColumn("v", when(col("v") % 3 === 0, col("v")))
     val nd = withNulls.groupBy("k").agg(avg("v")).collect()
       .map(r => r.getString(0) -> Option(r.get(1)).map(_.asInstanceOf[Double]))
       .toMap
-    val ns = graft.operators.Skew.saltedAvg(withNulls, col("k"), col("v"))
+    val ns = saltedAvg(withNulls)
       .collect()
       .map(r => r.getString(0) -> Option(r.get(1)).map(_.asInstanceOf[Double]))
       .toMap

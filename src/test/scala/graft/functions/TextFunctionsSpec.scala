@@ -155,23 +155,13 @@ class TextFunctionsSpec extends SparkSpec {
     }
   }
 
-  test("mean token length, char shingles, 64-bit fingerprint") {
+  test("char shingles over normalized text") {
     val s = spark
     import s.implicits._
     val df = Seq("ab cde f", "", "Hello  HELLO").toDF("text")
-    val rows = df.select(
-        meanTokenLen(col("text")).as("mtl"),
-        charShingles(col("text"), 3).as("cs"),
-        fingerprint64(col("text")).as("fp64"))
-      .collect()
-    assert(rows(0).getDouble(0) == 2.0) // (2 + 3 + 1) / 3
-    assert(rows(1).getDouble(0) == 0.0)
+    val rows = df.select(charShingles(col("text"), 3).as("cs")).collect()
     // char 3-grams over normalized "ab cde f", distinct
-    assert(rows(0).getSeq[String](1).head == "ab ")
-    // fingerprint64 is case/whitespace-insensitive like fingerprint
-    val fp = Seq("Hello  World", "hello world ").toDF("t")
-      .select(fingerprint64(col("t"))).collect().map(_.getLong(0))
-    assert(fp(0) == fp(1))
+    assert(rows(0).getSeq[String](0).head == "ab ")
   }
 
   test("md5 kernel is byte-identical to the composed builtin form") {

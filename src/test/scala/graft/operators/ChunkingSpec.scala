@@ -138,7 +138,7 @@ class ChunkingSpec extends SparkSpec {
 
       // extend folds the delta in; the same content re-keyed again now
       // scores 0 everywhere
-      Chunking.extendChunkIndex(fresh, "doc_id", "text", idx)
+      idx.extend(fresh, "doc_id", "text")
       val again = fresh
         .select(($"doc_id" + 950000).as("doc_id"), $"text")
       val nov2 = Chunking.deltaNovelty(again, "doc_id", "text", idx)
@@ -147,7 +147,7 @@ class ChunkingSpec extends SparkSpec {
 
       // duplicate delta ids fail loudly (default-on guard)
       intercept[IllegalArgumentException] {
-        Chunking.extendChunkIndex(fresh, "doc_id", "text", idx)
+        idx.extend(fresh, "doc_id", "text")
       }
 
       // compact: blue/green to one file per bucket, probe-identical
@@ -233,60 +233,6 @@ class ChunkingSpec extends SparkSpec {
         .forall(_.forall(_.last == true)))
       assert(seenById.filter(_._1 < 800000).values
         .exists(_.exists(_.last == false)))
-    } finally {
-      idx.drop(spark)
-      graft.util.FsUtil.deleteRecursively(java.nio.file.Paths.get(tmp))
-    }
-  }
-
-  test("first-carrier stream: in-stream novel duplicates dedup at " +
-      "ingest, later batches and the index still witness") {
-    implicit val s = spark
-    val tmp = s"/tmp/graft-chunkidx-fc-${java.util.UUID.randomUUID()}"
-    val corpus = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
-      .select($"doc_id", $"text")
-    val idx = Chunking.buildChunkIndex(corpus.filter($"doc_id" % 2 === 0),
-      "doc_id", "text", "chunkidx_fc_spec", s"$tmp/idx")
-    try {
-      // a fresh text absent from the corpus, long enough to chunk
-      val rnd = new scala.util.Random(7)
-      val freshText = (1 to 120)
-        .map(_ => rnd.alphanumeric.take(8).mkString).mkString(" ")
-      val corpusText = corpus.filter($"doc_id" % 2 === 0)
-        .orderBy($"doc_id").limit(1).collect().head.getString(1)
-      def ts(sec: Int) = new java.sql.Timestamp(1700000000000L + sec * 1000L)
-      // batch 0: first carrier of the fresh text; batch 1: its exact
-      // duplicate (in-stream dup, inside the watermark horizon) plus a
-      // re-crawl of an indexed corpus page
-      val delta = Seq(
-        (900001L, freshText, ts(0), 0),
-        (900002L, freshText, ts(5), 1),
-        (900003L, corpusText, ts(6), 1))
-        .toDF("doc_id", "text", "ts", "b")
-      val got = graft.streaming.StreamingNovelty.firstCarrierReplay(
-          delta, "doc_id", "text", "ts", "10 seconds", idx, $"b", 2)
-        .collect().map(r => (r.getLong(0), r.getString(2), r.getBoolean(3)))
-      // every chunk_hash emits exactly once across the whole stream
-      val perHash = got.groupBy(_._2).view.mapValues(_.length)
-      assert(perHash.values.forall(_ == 1),
-        s"hash emitted more than once: ${perHash.filter(_._2 > 1)}")
-      // the duplicate document emits NOTHING — deduped in-stream
-      assert(!got.exists(_._1 == 900002L),
-        s"in-stream duplicate leaked: ${got.filter(_._1 == 900002L).toSeq}")
-      // replay equality vs the batch expectation: the first carrier
-      // emits all of freshText's chunks unseen; the re-crawl emits all
-      // of the corpus page's chunks seen=true
-      def hashesOf(text: String) = Chunking.cdcChunks(
-          Seq((1L, text)).toDF("doc_id", "text"))
-        .select($"chunk_hash").collect().map(_.getString(0)).toSet
-      assert(got.filter(_._1 == 900001L).map(_._2).toSet ==
-        hashesOf(freshText))
-      assert(got.filter(_._1 == 900001L).forall(!_._3),
-        "fresh chunks must be unseen")
-      assert(got.filter(_._1 == 900003L).map(_._2).toSet ==
-        hashesOf(corpusText))
-      assert(got.filter(_._1 == 900003L).forall(_._3),
-        "re-crawled chunks must be seen in the index")
     } finally {
       idx.drop(spark)
       graft.util.FsUtil.deleteRecursively(java.nio.file.Paths.get(tmp))

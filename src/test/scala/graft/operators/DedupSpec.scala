@@ -138,7 +138,8 @@ class DedupSpec extends SparkSpec {
     val kernel = Dedup.minhashSignatureTable(sh, 16)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val lambda = sh.where(size(col("sh")) > 0)
-      .select(col("doc"), Dedup.minhashSignature(col("sh"), 16).as("sig"))
+      .select(col("doc"),
+        DedupReference.minhashSignature(col("sh"), 16).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(kernel.nonEmpty)
     assert(kernel == lambda)
@@ -146,8 +147,8 @@ class DedupSpec extends SparkSpec {
 
   test("simhash pairs are verified by driver-side recomputation") {
     val sims = docs.select(col("doc_id"),
-        Dedup.simhash64(graft.functions.TextFunctions.tokens(col("text")))
-          .as("h"))
+        DedupReference.simhash64(
+          graft.functions.TextFunctions.tokens(col("text"))).as("h"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val pairs = Dedup.simhashPairs(docs, "doc_id", "text", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
@@ -211,7 +212,8 @@ class DedupSpec extends SparkSpec {
     // pair the quadratic baseline finds (deterministic planes: equality
     // here proves the gate query itself is exact on this corpus)
     for (t <- Seq(0.4, 0.5)) {
-      val exact = Dedup.embeddingPairsExact(emb, "vec_id", "embedding", t)
+      val exact = DedupReference
+        .embeddingPairsExact(emb, "vec_id", "embedding", t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val lsh = Dedup.embeddingPairsLsh(emb, "vec_id", "embedding", t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -223,7 +225,8 @@ class DedupSpec extends SparkSpec {
   test("blocked all-pairs equals the exact baseline (zero misses)") {
     val emb = Tables.embeddings(spark, sf())
     for (nb <- Seq(1, 3, 16)) {
-      val exact = Dedup.embeddingPairsExact(emb, "vec_id", "embedding", 0.4)
+      val exact = DedupReference
+        .embeddingPairsExact(emb, "vec_id", "embedding", 0.4)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val blocked = Dedup
         .embeddingPairsBlocked(emb, "vec_id", "embedding", 0.4, numBlocks = nb)
@@ -493,58 +496,6 @@ class DedupSpec extends SparkSpec {
       (5L, "header\nbody five", 2L, 2L),
       (7L, "body seven", 2L, 1L),
       (9L, "", 1L, 0L)))
-  }
-
-  test("streaming dedup with history drops duplicates of indexed docs") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // history: 'old' was ingested long ago and folded into the index;
-    // a null-text doc too (the null-fp group must match null-safely)
-    val history = Seq((1L, "old"), (2L, null.asInstanceOf[String]))
-      .toDF("doc_id", "text")
-    val idx = Dedup.buildExactIndex(history, "doc_id", "text",
-      "hist_fp_idx", java.nio.file.Files
-        .createTempDirectory("graft-hist-idx").toString)
-    val input = MemoryStream[(String, Long)]
-    val stream = input.toDF()
-      .select(when(col("_1") === "NULL", lit(null)).otherwise(col("_1"))
-          .as("text"),
-        timestamp_seconds(col("_2")).as("ts"))
-    val q = Dedup.streamingExactWithHistory(stream, "text", "ts",
-        "10 seconds", idx)
-      .select(col("text"), unix_timestamp(col("ts")).as("sec"))
-      .writeStream.format("memory").queryName("stream_hist_dedup")
-      .outputMode("append").start()
-    try {
-      // 'old' duplicates history (dropped by the index anti-join even
-      // though it's a first arrival IN-STREAM); 'fresh' passes; the
-      // in-stream duplicate of 'fresh' is dropped by the watermark
-      // dedup; a null-text row duplicates history's null-fp group
-      input.addData(("old", 100L), ("fresh", 101L), ("fresh", 102L),
-        ("NULL", 103L))
-      q.processAllAvailable()
-      val got = s.sql("SELECT text, sec FROM stream_hist_dedup ORDER BY sec")
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      assert(got.toSeq == Seq(("fresh", 101L)), s"got ${got.toSeq}")
-      // LIVE fold-in: extend the index while the query runs — the
-      // static side is re-read per micro-batch, so a duplicate of the
-      // newly folded doc is dropped WITHOUT restarting the query (the
-      // scaladoc's claim, pinned here against engine changes)
-      Dedup.extendExactIndex(
-        Seq((3L, "folded live")).toDF("doc_id", "text"),
-        "doc_id", "text", idx)
-      input.addData(("folded live", 110L))
-      q.processAllAvailable()
-      val got2 = s.sql("SELECT text, sec FROM stream_hist_dedup ORDER BY sec")
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      assert(got2.toSeq == Seq(("fresh", 101L)),
-        s"live-folded duplicate should be dropped: ${got2.toSeq}")
-    } finally {
-      q.stop()
-      idx.drop(s)
-    }
   }
 
   test("duplicateSpans: overlap merge, adjacency, gaps, self-repeats") {

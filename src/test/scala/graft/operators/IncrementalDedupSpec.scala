@@ -43,21 +43,6 @@ class IncrementalDedupSpec extends SparkSpec {
     } finally idx.drop(s)
   }
 
-  test("incremental pair verdicts: corpus wins, smaller delta id wins") {
-    val s = spark
-    import s.implicits._
-    // delta ids 10,11,12,13; pairs: (5,10) cross — 10 drops regardless
-    // of order; (11,20) cross with larger indexed id — 11 still drops
-    // (corpus wins); (12,13) within delta — 13 drops; 12 has no
-    // dropping pair and keeps
-    val delta = Seq(10L, 11L, 12L, 13L).toDF("doc_id")
-    val pairs = Seq((5L, 10L, 0.9), (11L, 20L, 0.9), (12L, 13L, 0.9))
-      .toDF("d1", "d2", "jaccard")
-    val v = Dedup.verdictsFromIncrementalPairs(delta, "doc_id", pairs)
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert(v == Map(10L -> false, 11L -> false, 12L -> true, 13L -> false))
-  }
-
   test("candidate join reads the index buckets without an Exchange") {
     val s = spark
     val all = Tables.documents(s, sf())
@@ -144,7 +129,7 @@ class IncrementalDedupSpec extends SparkSpec {
       val shifted2 = base.where(col("vec_id") < 100)
         .select((col("vec_id") + 200000).as("vec_id"),
           transform(col("embedding"), x => x + lit(0.08)).as("embedding"))
-      Dedup.extendEmbeddingIndex(shifted, "vec_id", "embedding", idx)
+      idx.extend(shifted, "vec_id", "embedding")
       val incr2 = eset(Dedup.embeddingPairsAgainstIndex(
         shifted2, "vec_id", "embedding", idx))
       // shifted2(v+0.08) vs shifted(v+0.08) are IDENTICAL vectors —
@@ -197,7 +182,7 @@ class IncrementalDedupSpec extends SparkSpec {
         "larger within-delta duplicate should not keep")
       // a duplicated delta doc (same text, new id) flips to keep=false
       // after the original's fp is folded in via extend
-      Dedup.extendExactIndex(delta, "doc_id", "text", idx)
+      idx.extend(delta, "doc_id", "text")
       val dup = delta.limit(1)
         .select((col("doc_id") + 900000).as("doc_id"), col("text"))
       val v2 = Dedup.exactAgainstIndex(dup, "doc_id", "text", idx).collect()
@@ -225,7 +210,7 @@ class IncrementalDedupSpec extends SparkSpec {
       assert(v.length == 2 && v.forall(!_.getBoolean(2)),
         s"null-text delta docs are dups of the corpus null-fp group: " +
           v.mkString(", "))
-      Dedup.extendExactIndex(nDelta, "doc_id", "text", idx)
+      idx.extend(nDelta, "doc_id", "text")
       assert(s.table(idx.fpTable).where(col("fp").isNull).count() == 1,
         "extend must preserve the one-row-per-fp invariant for null fp")
     } finally idx.drop(s)
@@ -257,7 +242,7 @@ class IncrementalDedupSpec extends SparkSpec {
         "fixture must produce at least one cross-split duplicate line")
       // fold the delta in; a re-keyed verbatim COPY of a delta doc now
       // collides with the indexed counts on every line -> empty survivor
-      Dedup.extendLineIndex(delta, "doc_id", "text", idx)
+      idx.extend(delta, "doc_id", "text")
       val probe = delta.orderBy("doc_id").limit(1)
         .select((col("doc_id") + 900000).as("doc_id"), col("text"))
       val v = Dedup.lineDedupAgainstIndex(probe, "doc_id", "text", idx)
@@ -268,7 +253,7 @@ class IncrementalDedupSpec extends SparkSpec {
       // re-folding the same ids must fail loudly (additive counts would
       // silently double)
       intercept[IllegalArgumentException] {
-        Dedup.extendLineIndex(delta, "doc_id", "text", idx)
+        idx.extend(delta, "doc_id", "text")
       }
     } finally {
       idx.drop(s)
@@ -316,7 +301,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val idx = Dedup.buildLineIndex(c0, "doc_id", "text",
       "inc_spec_lfc", tmpPath())
     try {
-      Dedup.extendLineIndex(c1, "doc_id", "text", idx)
+      idx.extend(c1, "doc_id", "text")
       // two slices appended: some lfp rows exist twice pre-compaction
       val pre = s.table(idx.freqTable).count()
       val distinctLfp = s.table(idx.freqTable)
@@ -347,7 +332,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val idx = Dedup.buildIndex(corpus, "doc_id", "text", "inc_spec_c",
       tmpPath())
     try {
-      Dedup.extendIndex(d1, "doc_id", "text", idx)
+      idx.extend(d1, "doc_id", "text")
       // after the fold, d2 dedups against corpus+d1: its pairs plus the
       // batch pairs over corpus+d1 must reconstruct the full batch set
       val incr2 = pairSet(
@@ -378,8 +363,8 @@ class IncrementalDedupSpec extends SparkSpec {
     try {
       // three folds -> the bands table accretes a slice of files per fold
       for (m <- 4 to 6)
-        Dedup.extendIndex(all.where(col("doc_id") % 8 === m),
-          "doc_id", "text", idx)
+        idx.extend(all.where(col("doc_id") % 8 === m),
+          "doc_id", "text")
       val probe = all.where(col("doc_id") % 8 === 7)
       val before = pairSet(
         Dedup.pairsAgainstIndex(probe, "doc_id", "text", idx, 0.8,
@@ -445,8 +430,8 @@ class IncrementalDedupSpec extends SparkSpec {
     var iOut: IvfIndex = null
     try {
       for (m <- 4 to 5)
-        Dedup.extendExactIndex(all.where(col("doc_id") % 8 === m),
-          "doc_id", "text", eIdx)
+        eIdx.extend(all.where(col("doc_id") % 8 === m),
+          "doc_id", "text")
       val probe = all.where(col("doc_id") % 8 === 7)
       def vset(i: ExactIndex) = Dedup.exactAgainstIndex(probe, "doc_id",
         "text", i).collect().map(r => (r.getLong(0), r.getBoolean(2))).toSet
@@ -455,8 +440,8 @@ class IncrementalDedupSpec extends SparkSpec {
       assert(vset(eOut) == eBefore, "exact compaction changed verdicts")
       assert(parquetFiles(s, eOut.fpTable).size <= eIdx.numBuckets)
 
-      Similarity.extendIvfIndex(emb.where(col("vec_id") % 4 === 3),
-        "vec_id", "embedding", iIdx)
+      iIdx.extend(emb.where(col("vec_id") % 4 === 3),
+        "vec_id", "embedding")
       val queries = emb.where(col("vec_id").between(100, 104))
       def kset(i: IvfIndex) = Similarity.ivfKnnFromIndex(s, queries,
           "vec_id", "embedding", i, 3).collect()
@@ -511,26 +496,26 @@ class IncrementalDedupSpec extends SparkSpec {
       tmpPath())
     try {
       intercept[IllegalArgumentException] {
-        Dedup.extendIndex(dupDocs, "doc_id", "text", mIdx)
+        mIdx.extend(dupDocs, "doc_id", "text")
       }
       intercept[IllegalArgumentException] {
-        Dedup.extendExactIndex(
+        eIdx.extend(
           // collide with an indexed KEEP id specifically — the fp table
           // only records survivors, so only those are checkable
           s.table(eIdx.fpTable).limit(3)
             .select(col("keep_id").as("doc_id"), lit("fresh text").as("text")),
-          "doc_id", "text", eIdx)
+          "doc_id", "text")
       }
       intercept[IllegalArgumentException] {
-        Dedup.extendEmbeddingIndex(dupVecs, "vec_id", "embedding", bIdx)
+        bIdx.extend(dupVecs, "vec_id", "embedding")
       }
       intercept[IllegalArgumentException] {
-        Similarity.extendIvfIndex(dupVecs, "vec_id", "embedding", iIdx)
+        iIdx.extend(dupVecs, "vec_id", "embedding")
       }
       // opting out via the documented conf lets the same fold through
       // (the caller now owns the invariant)
       s.conf.set(IndexAdmin.CheckDisjointKey, "false")
-      try Similarity.extendIvfIndex(dupVecs, "vec_id", "embedding", iIdx)
+      try iIdx.extend(dupVecs, "vec_id", "embedding")
       finally s.conf.unset(IndexAdmin.CheckDisjointKey)
     } finally {
       mIdx.drop(s)
@@ -563,7 +548,7 @@ class IncrementalDedupSpec extends SparkSpec {
           s"extra=${incr -- batch}")
       // additive counts would silently double — re-folding refused
       intercept[IllegalArgumentException] {
-        Dedup.extendSpanIndex(corpus, "doc_id", "text", idx)
+        idx.extend(corpus, "doc_id", "text")
       }
     } finally idx.drop(s)
   }
@@ -608,7 +593,7 @@ class IncrementalDedupSpec extends SparkSpec {
       // blue/green compact: one row per g, identical probe verdicts
       val c1 = Seq((9L, "unique corpus content nothing repeats here at all"))
         .toDF("doc_id", "text")
-      Dedup.extendSpanIndex(c1, "doc_id", "text", idx)
+      idx.extend(c1, "doc_id", "text")
       val pre = s.table(idx.freqTable).count()
       val distinctG = s.table(idx.freqTable).select("g").distinct().count()
       assert(pre > distinctG, "extend must append a second slice")

@@ -10,6 +10,8 @@ import org.apache.spark.sql.functions._
 /** The one persisted-index layout, checked for every index handle: each
   * handle is built, extended twice and compacted through
   * [[PersistedIndex]], and
+  *  - a third extend with already-indexed ids fails the disjoint-ids
+  *    guard,
   *  - probes answer identically before and after compaction,
   *  - every compacted bucketed or cell table holds at most one file per
   *    bucket or cell,
@@ -21,11 +23,11 @@ class IndexLayoutSpec extends SparkSpec {
 
   /** One handle family: build over a corpus slice, extend with a delta
     * slice, probe with the held-out slice. Slices are `id % 4` of the
-    * documents (or embeddings): 0 builds, 1 and 2 extend, 3 probes. */
+    * documents (or embeddings): 0 builds, 1 and 2 extend, 3 probes.
+    * `c` is the content column the index is built and extended over. */
   private case class Family[I <: PersistedIndex { type Self = I }](
-      kind: String, input: () => DataFrame, id: String,
+      kind: String, input: () => DataFrame, id: String, c: String,
       build: (DataFrame, String, String) => I,
-      extend: (DataFrame, I) => Unit,
       probe: (DataFrame, I) => DataFrame) extends Case {
     def run(): Unit = check(this)
   }
@@ -44,52 +46,43 @@ class IndexLayoutSpec extends SparkSpec {
   private def queries(d: DataFrame) = d.where(col("vec_id") % 40 === 3)
 
   private val families: Seq[Case] = Seq(
-    Family[DedupIndex]("minhash", () => docs, "doc_id",
+    Family[DedupIndex]("minhash", () => docs, "doc_id", "text",
       (df, n, p) => Dedup.buildIndex(df, "doc_id", "text", n, p),
-      (df, i) => Dedup.extendIndex(df, "doc_id", "text", i),
       (df, i) => Dedup.pairsAgainstIndex(df, "doc_id", "text", i, 0.8,
         persistShingles = false)),
-    Family[ExactIndex]("exact", () => docs, "doc_id",
+    Family[ExactIndex]("exact", () => docs, "doc_id", "text",
       (df, n, p) => Dedup.buildExactIndex(df, "doc_id", "text", n, p),
-      (df, i) => Dedup.extendExactIndex(df, "doc_id", "text", i),
       (df, i) => Dedup.exactAgainstIndex(df, "doc_id", "text", i)),
     Family[LineIndex]("line", () => docs.select(col("doc_id"),
         graft.functions.TextFunctions.tokenLines(col("text"), 8).as("text")),
-      "doc_id",
+      "doc_id", "text",
       (df, n, p) => Dedup.buildLineIndex(df, "doc_id", "text", n, p),
-      (df, i) => Dedup.extendLineIndex(df, "doc_id", "text", i),
       (df, i) => Dedup.lineDedupAgainstIndex(df, "doc_id", "text", i)),
-    Family[SpanIndex]("span", () => docs, "doc_id",
+    Family[SpanIndex]("span", () => docs, "doc_id", "text",
       (df, n, p) => Dedup.buildSpanIndex(df, "doc_id", "text", 20, n, p),
-      (df, i) => Dedup.extendSpanIndex(df, "doc_id", "text", i),
       (df, i) => Dedup.duplicateSpansAgainstIndex(df, "doc_id", "text", i)),
-    Family[EmbeddingIndex]("embedding", () => emb, "vec_id",
+    Family[EmbeddingIndex]("embedding", () => emb, "vec_id", "embedding",
       (df, n, p) => Dedup.buildEmbeddingIndex(df, "vec_id", "embedding",
         n, p, 0.85, dim = 64),
-      (df, i) => Dedup.extendEmbeddingIndex(df, "vec_id", "embedding", i),
       (_, i) => Dedup.embeddingPairsAgainstIndex(shifted, "vec_id",
         "embedding", i)),
-    Family[IvfIndex]("ivf", () => emb, "vec_id",
+    Family[IvfIndex]("ivf", () => emb, "vec_id", "embedding",
       (df, n, p) => Similarity.buildIvfIndex(df, "vec_id", "embedding",
         cents, "vec_id", "embedding", n, p),
-      (df, i) => Similarity.extendIvfIndex(df, "vec_id", "embedding", i),
       (_, i) => Similarity.ivfKnnFromIndex(spark, queries(emb), "vec_id",
         "embedding", i, 3, nProbe = 2)),
-    Family[IvfPqIndex]("ivf-pq", () => emb, "vec_id",
+    Family[IvfPqIndex]("ivf-pq", () => emb, "vec_id", "embedding",
       (df, n, p) => Similarity.buildIvfPqIndex(df, "vec_id", "embedding",
         cents, "vec_id", "embedding", codebook, n, p),
-      (df, i) => Similarity.extendIvfPqIndex(df, "vec_id", "embedding", i),
       (_, i) => Similarity.ivfPqKnnFromIndex(spark, queries(emb),
         "vec_id", "embedding", i, 3, nProbe = 4, refine = 48)),
-    Family[NgramIndex]("n-gram", () => docs, "doc_id",
+    Family[NgramIndex]("n-gram", () => docs, "doc_id", "text",
       (df, n, p) => CorpusStats.buildNgramIndex(df, "doc_id", "text", 3,
         n, p),
-      (df, i) => CorpusStats.extendNgramIndex(df, "doc_id", "text", i),
       (df, i) => CorpusStats.ngramLogProbAgainstIndex(df, "doc_id", "text",
         i)),
-    Family[ChunkIndex]("chunk", () => docs, "doc_id",
+    Family[ChunkIndex]("chunk", () => docs, "doc_id", "text",
       (df, n, p) => Chunking.buildChunkIndex(df, "doc_id", "text", n, p),
-      (df, i) => Chunking.extendChunkIndex(df, "doc_id", "text", i),
       (df, i) => Chunking.deltaNovelty(df, "doc_id", "text", i)))
 
   private def tmpPath(): String =
@@ -168,8 +161,14 @@ class IndexLayoutSpec extends SparkSpec {
     val idx = f.build(part(0), s"layout_spec_$tag", tmpPath())
     var out: Option[I] = None
     try {
-      f.extend(part(1), idx)
-      f.extend(part(2), idx)
+      idx.extend(part(1), f.id, f.c)
+      idx.extend(part(2), f.id, f.c)
+      // part 0 holds every id the build recorded, the keep ids of the
+      // exact and chunk indexes included
+      val refused = intercept[IllegalArgumentException](
+        idx.extend(part(0), f.id, f.c))
+      assert(refused.getMessage.contains("disjoint"),
+        s"${f.kind}: ${refused.getMessage}")
       assertDeclaredLayout(idx)
       val before = rows(f.probe(part(3), idx))
       assert(before.nonEmpty, s"${f.kind}: the probe finds nothing")

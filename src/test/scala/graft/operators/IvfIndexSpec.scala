@@ -114,7 +114,7 @@ class IvfIndexSpec extends SparkSpec {
     val folded = Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding",
       cents, "vec_id", "embedding", cb, "ivfpq_spec_fold", tmp())
     try {
-      Similarity.extendIvfPqIndex(delta, "vec_id", "embedding", folded)
+      folded.extend(delta, "vec_id", "embedding")
       for (nProbe <- Seq(1, 4)) {
         val fr = rows(Similarity.ivfPqKnnFromIndex(s, queries, "vec_id",
           "embedding", full, 3, nProbe, refine = 48))
@@ -124,8 +124,7 @@ class IvfIndexSpec extends SparkSpec {
       }
       // the fold-in contract is verified, as for every other extender
       intercept[IllegalArgumentException] {
-        Similarity.extendIvfPqIndex(delta.limit(5), "vec_id", "embedding",
-          folded)
+        folded.extend(delta.limit(5), "vec_id", "embedding")
       }
       // blue/green compaction: fewer files, identical probes through
       // the new handle, old generation drops clean
@@ -165,7 +164,7 @@ class IvfIndexSpec extends SparkSpec {
       cents, "vec_id", "embedding", "ivf_spec_folded",
       java.nio.file.Files.createTempDirectory("graft-ivf-spec").toString)
     try {
-      Similarity.extendIvfIndex(delta, "vec_id", "embedding", folded)
+      folded.extend(delta, "vec_id", "embedding")
       // row-level equivalence of the two physical indexes, not just of
       // one probe's top-k: every (cid, cell) must agree
       val a = s.table(full.corpusTable).select("cid", "cell")

@@ -29,10 +29,11 @@ class MultimodalSpec extends SparkSpec {
 
   test("resize + frame-sample stages: schema, expansion, partition-parallel") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
+    import s.implicits._
     val docs = Tables.documents(s, sf()).limit(40).repartition(4)
     val records = Multimodal.asMediaRecords(docs, "doc_id", "text")
     // resize: payload exactly targetBytes, partitioning preserved
-    val resized = Multimodal.resizeAll(records, 128)
+    val resized = records.map(Multimodal.padPayload(_, 128))
     assert(resized.rdd.getNumPartitions == 4)
     resized.collect().foreach(r => assert(r.payload.length == 128))
     // frame sampling: row-expanding, frames reference their record
@@ -98,7 +99,7 @@ class MultimodalSpec extends SparkSpec {
             s"frameCount=${feats(p.id).frameCount}")
     }
     // resize pads with zero bytes beyond the source, preserving a prefix
-    val resized = Multimodal.resizeAll(ds, 256).collect()
+    val resized = ds.map(Multimodal.padPayload(_, 256)).collect()
     resized.foreach { r =>
       val src = payloads(r.id.toInt).payload
       assert(r.payload.length == 256)

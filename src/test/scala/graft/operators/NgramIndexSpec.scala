@@ -30,8 +30,7 @@ class NgramIndexSpec extends SparkSpec {
       all.where(col("doc_id") % 3 === 1), "doc_id", "text", 3,
       "ng_spec_a", tmpPath())
     try {
-      CorpusStats.extendNgramIndex(
-        all.where(col("doc_id") % 3 === 2), "doc_id", "text", idx)
+      idx.extend(all.where(col("doc_id") % 3 === 2), "doc_id", "text")
       val incr = scores(CorpusStats.ngramLogProbAgainstIndex(
         all.where(col("doc_id") % 3 === 0), "doc_id", "text", idx)
         .select("doc", "n_tokens", "n_oov", "n_backed", "avg_lp"))
@@ -54,8 +53,7 @@ class NgramIndexSpec extends SparkSpec {
       all.where(col("doc_id") % 3 === 1), "doc_id", "text", 2,
       "ng_spec_b", tmpPath())
     try {
-      CorpusStats.extendNgramIndex(
-        all.where(col("doc_id") % 3 === 2), "doc_id", "text", idx)
+      idx.extend(all.where(col("doc_id") % 3 === 2), "doc_id", "text")
       // the fold the probe path runs per order: groupBy(g).sum(n) over
       // the bucketed slices must reuse the bucket partitioning
       (1 to 2).foreach { j =>
@@ -83,8 +81,7 @@ class NgramIndexSpec extends SparkSpec {
       "ng_spec_c", tmpPath())
     try {
       val e = intercept[IllegalArgumentException] {
-        CorpusStats.extendNgramIndex(slice.limit(5), "doc_id", "text",
-          idx)
+        idx.extend(slice.limit(5), "doc_id", "text")
       }
       assert(e.getMessage.contains("disjoint"))
     } finally idx.drop(s)
@@ -97,8 +94,7 @@ class NgramIndexSpec extends SparkSpec {
       all.where(col("doc_id") % 3 === 1), "doc_id", "text", 2,
       "ng_spec_d", tmpPath())
     try {
-      CorpusStats.extendNgramIndex(
-        all.where(col("doc_id") % 3 === 2), "doc_id", "text", idx)
+      idx.extend(all.where(col("doc_id") % 3 === 2), "doc_id", "text")
       val sc = all.where(col("doc_id") % 3 === 0)
       val before = scores(CorpusStats.ngramLogProbAgainstIndex(
         sc, "doc_id", "text", idx)

@@ -577,32 +577,6 @@ class SamplingSpec extends SparkSpec {
     val m2 = mrows(Sampling.shardManifest(df.orderBy(col("doc_id").desc),
       "doc_id", "n", 8))
     assert(m1 == m2, "manifest must be order-invariant")
-    // the writer's read-back manifest equals the direct one — the
-    // artifact on disk is certified, and each shard dir holds ONE file
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-shards").toString
-    val wm = mrows(Sampling.writeShards(df, "doc_id", "n", 8, path))
-    assert(wm == m1, s"read-back manifest diverges: $wm vs $m1")
-    val files = (0 until 8).map { sh =>
-      new java.io.File(s"$path/shard=$sh").listFiles()
-        .count(_.getName.endsWith(".parquet"))
-    }
-    assert(files.forall(_ == 1), s"one file per shard expected: $files")
-    // reader-side certification: intact artifact verifies on every
-    // shard; a vanished shard directory fails ITS row (found side
-    // null) while the others stay ok — nothing silently drops
-    val manifest = Sampling.shardManifest(df, "doc_id", "n", 8)
-    val okAll = Sampling.verifyShards(s, path, manifest, "doc_id", "n")
-      .collect()
-    assert(okAll.length == 8 && okAll.forall(_.getBoolean(1)),
-      s"intact write must certify: ${okAll.mkString(", ")}")
-    graft.util.FsUtil.deleteRecursively(
-      java.nio.file.Paths.get(s"$path/shard=3"))
-    val broken = Sampling.verifyShards(s, path, manifest, "doc_id", "n")
-      .collect().map(r => r.getInt(0) -> r.getBoolean(1)).toMap
-    assert(!broken(3) && (0 until 8).filter(_ != 3).forall(broken(_)),
-      s"only the vanished shard may fail: $broken")
-    graft.util.FsUtil.deleteRecursively(java.nio.file.Paths.get(path))
   }
 
   test("fimSplit: PSM reassembly reconstructs the original exactly") {

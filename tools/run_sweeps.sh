@@ -2,7 +2,10 @@
 # Run the full robustness-sweep battery against HEAD: eight single-axis
 # fixture sweeps plus the composed (seven injection axes chained onto
 # the null fixture) sweep — nine gate runs, each a full-gate Verify +
-# DuckDB oracle compare. ~2.5 min per sweep at sf0.01 on local[32].
+# DuckDB oracle compare. At sf0.01 on a 4-core VM the battery took
+# 1 h 44 min: about 20 min each for the long-document and composed
+# sweeps (their fixtures carry the 10 MB documents) and 3.5-10 min for
+# each of the other seven.
 #
 #   tools/run_sweeps.sh [sfdir]     # default /root/testdata/sf0.01
 #
