@@ -3,13 +3,12 @@ package graft.expressions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Generator, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass word-shingle kernel. Semantically identical to the
@@ -51,7 +50,7 @@ object TextKernels {
     new GenericArrayData(out)
   }
 
-  /** Unicode text normalization kernel (backs [[NormalizeText]]): NFC
+  /** Unicode text normalization kernel (backs TextFunctions.normalize): NFC
     * or NFKC canonicalization (`java.text.Normalizer` — zero new
     * dependencies), optional ROOT-locale casefold, optional
     * trim-and-collapse of whitespace runs to single spaces. The
@@ -73,7 +72,7 @@ object TextKernels {
   }
 
   /** Within-document repeated-line removal kernel (backs
-    * [[DropRepeatedLines]]): one pass over the \n-split, keeping a
+    * TextFunctions.dropRepeatedLines): one pass over the \n-split, keeping a
     * line iff its trimmed content is blank OR has not occurred EARLIER
     * in the same document — the MassiveText/RefinedWeb within-doc
     * repetition transform (dupLineStats is its measurement; the
@@ -114,7 +113,7 @@ object TextKernels {
     c == ' ' || c == '\t' || c == '\u000B' || c == '\f' || c == '\r'
 
   /** Rolling content-defined-chunking boundary kernel (backs
-    * [[CdcBoundaries]] / Chunking.cdcChunks): 1-based codepoint
+    * Chunking.cdcChunks): 1-based codepoint
     * positions i (window <= i < n) where the gear polynomial
     * H_i = Σ_{j<w} code(c_{i-j})·p^j mod 2^modBits satisfies
     * H_i mod divisor = residue. The hash ROLLS —
@@ -265,7 +264,7 @@ object TextKernels {
     * Dedup.passageDedup and Chunking.tokenWindows: their composed form
     * (`transform(sequence, i -> array_join(slice(tokens(text), ...)))`)
     * ran interpreted, and the tokenization landed INSIDE the per-span
-    * lambda (the CollapseProject trap CdcBoundaries documents), so the
+    * lambda (the CollapseProject trap Chunking.cdcChunks documents), so the
     * full split+filter re-ran for every span — O(n²/stride) per
     * document, a stall on 10 MB documents. Tokenization matches
     * [[wordShingles]] / TextFunctions.tokens: lowercase, split \\s+,
@@ -297,7 +296,11 @@ object TextKernels {
   }
 
   /** Non-distinct variant: every n-gram occurrence in position order
-    * (backs [[WordNgramsAll]]); same tokenization as [[wordShingles]]. */
+    * (backs TextFunctions.wordNgramsAll); same tokenization as
+    * [[wordShingles]]. The composed higher-order-function form it
+    * replaces re-evaluated the tokenize subtree once PER POSITION inside
+    * the transform lambda — O(len^2) per document and the dominant cost
+    * of the heavy-hitters scan; this kernel tokenizes once. */
   def wordNgramsAll(s: UTF8String, n: Int): ArrayData = {
     if (s == null) return null
     val toks = s.toString.toLowerCase(java.util.Locale.ROOT)
@@ -321,152 +324,6 @@ object TextKernels {
   }
 }
 
-case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_word_shingles"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.wordShingles(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.TextKernels.wordShingles($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): WordShingles =
-    copy(child = newChild)
-}
-
-/** Codegen'd unicode normalization — see [[TextKernels.normalizeText]]. */
-case class NormalizeText(child: Expression, nfkc: Boolean,
-                         casefold: Boolean, collapseWs: Boolean)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_normalize"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.normalizeText(input.asInstanceOf[UTF8String], nfkc,
-      casefold, collapseWs)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.TextKernels.normalizeText(" +
-        s"$c, $nfkc, $casefold, $collapseWs);")
-
-  override protected def withNewChildInternal(newChild: Expression): NormalizeText =
-    copy(child = newChild)
-}
-
-/** Codegen'd within-doc repeated-line removal — see
-  * [[TextKernels.dropRepeatedLines]]. */
-case class DropRepeatedLines(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_drop_repeated_lines"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.dropRepeatedLines(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.TextKernels.dropRepeatedLines($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): DropRepeatedLines =
-    copy(child = newChild)
-}
-
-/** Codegen'd CDC boundary positions — see [[TextKernels.cdcBoundaries]]. */
-case class CdcBoundaries(child: Expression, window: Int, prime: Int,
-                         modBits: Int, divisor: Int, residue: Int)
-    extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
-  override def prettyName: String = "graft_cdc_boundaries"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.cdcBoundaries(input.asInstanceOf[UTF8String], window,
-      prime.toLong, modBits, divisor.toLong, residue.toLong)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.TextKernels.cdcBoundaries(" +
-        s"$c, $window, ${prime}L, $modBits, ${divisor}L, ${residue}L);")
-
-  override protected def withNewChildInternal(newChild: Expression): CdcBoundaries =
-    copy(child = newChild)
-}
-
-/** Codegen'd char-shingle extraction — see [[TextKernels.charShingles]]. */
-case class CharShingles(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_char_shingles"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.charShingles(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.TextKernels.charShingles($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): CharShingles =
-    copy(child = newChild)
-}
-
-/** Codegen'd token-span extraction — see [[TextKernels.tokenSpans]]. */
-case class TokenSpans(child: Expression, size: Int, stride: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_token_spans"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.tokenSpans(input.asInstanceOf[UTF8String], size, stride)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.TextKernels.tokenSpans($c, $size, $stride);")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenSpans =
-    copy(child = newChild)
-}
-
-/** Codegen'd boundary-array slicing — see [[TextKernels.cdcSlices]]. */
-case class CdcSlices(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_cdc_slices"
-
-  override protected def nullSafeEval(text: Any, bnd: Any): Any =
-    TextKernels.cdcSlices(text.asInstanceOf[UTF8String],
-      bnd.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, b) =>
-      s"${ev.value} = graft.expressions.TextKernels.cdcSlices($t, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CdcSlices =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Non-distinct n-gram OCCURRENCE kernel backing
-  * TextFunctions.wordNgramsAll: one entry per starting position, in
-  * order. Same tokenization contract as [[WordShingles]]. The composed
-  * higher-order-function form it replaces re-evaluated the tokenize
-  * (lower/trim/split/filter) subtree once PER POSITION inside the
-  * transform lambda — O(len^2) per document and the dominant cost of
-  * the heavy-hitters scan; this kernel tokenizes once. */
-case class WordNgramsAll(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_word_ngrams_all"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.wordNgramsAll(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.TextKernels.wordNgramsAll($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): WordNgramsAll =
-    copy(child = newChild)
-}
 
 /** Single-pass normalized-md5 kernel backing TextFunctions.fingerprint.
   * Byte-for-byte equal to the composed form
@@ -532,7 +389,7 @@ object Md5Kernel {
     * single-block MD5 round function (RFC 1321 — public algorithm):
     * no MessageDigest state machine, no digest-array allocation, just
     * the 64 rounds over one padded block. Bit-identical to the library
-    * digest (property-pinned in TextExpressionsSpec); longer inputs
+    * digest (property-pinned in Md5KernelSpec); longer inputs
     * fall back to MessageDigest. */
   def md5Hash64(s: UTF8String): Long = {
     val bytes = s.getBytes
@@ -624,8 +481,8 @@ object Md5Kernel {
   }
 
   /** Full 16-byte md5 digest of `s`'s UTF-8 bytes — the gram-key
-    * kernel behind [[GramDigest]]: bit-identical to `unhex(md5(s))`
-    * (property-pinned in TextExpressionsSpec) but without the builtin
+    * kernel behind TextExprs.gramDigest: bit-identical to `unhex(md5(s))`
+    * (property-pinned in Md5KernelSpec) but without the builtin
     * path's per-call MessageDigest + 32-hex-char render/unrender
     * round-trip. Inputs <= 55 bytes (virtually every word n-gram)
     * take the single-block round function; longer inputs fall back to
@@ -654,62 +511,6 @@ object Md5Kernel {
   }
 }
 
-/** 16-byte md5 digest as BINARY — semantically `unhex(md5(child))`
-  * (property-pinned) but through [[Md5Kernel.md5Digest16]]'s
-  * single-block fast path: the builtin md5() routes every call
-  * through a fresh commons-codec MessageDigest and renders 32 hex
-  * chars that unhex immediately unrenders. The n-gram family's
-  * shuffle keys ([[graft.operators.CorpusStats]]) are the hot
-  * caller — this is the same digests, cheaper. */
-case class GramDigest(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_gram_digest"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires string, got ${other.simpleString}")
-    }
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    Md5Kernel.md5Digest16(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.Md5Kernel.md5Digest16($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): GramDigest =
-    copy(child = newChild)
-}
-
-case class NormalizedMd5(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_normalized_md5"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires string, got ${other.simpleString}")
-    }
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    Md5Kernel.normalizedMd5(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.Md5Kernel.normalizedMd5($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): NormalizedMd5 =
-    copy(child = newChild)
-}
 
 /** Per-document 64-bit SimHash over a token array in one kernel call:
   * for each token, Spark's own XXH64 (seed 42 — bit-identical to the
@@ -807,85 +608,6 @@ object SimHashKernel {
   }
 }
 
-case class SimHash64Expr(child: Expression, portable: Boolean = false)
-    extends UnaryExpression {
-  import org.apache.spark.sql.types.LongType
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<string>, got ${other.simpleString}")
-    }
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    if (portable) SimHashKernel.simhashMd5(input.asInstanceOf[ArrayData])
-    else SimHashKernel.simhash(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (portable) "simhashMd5" else "simhash"
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.SimHashKernel.$fn($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
-    copy(child = newChild)
-}
-
-/** Fused tokenize + SimHash over the RAW text column — the hot-path
-  * form [[graft.operators.Dedup.simhashTable]] uses. Bit-identical to
-  * `SimHash64Expr(tokens(text))` (spec-pinned over the corpus); null
-  * for a zero-token text, so callers filter `isNotNull` instead of
-  * pre-computing `size(tokens) > 0`. */
-case class SimHashFromText(child: Expression, portable: Boolean = false)
-    extends UnaryExpression {
-  import org.apache.spark.sql.types.LongType
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true // null input OR zero tokens
-  override def prettyName: String = "graft_simhash_text"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires string, got ${other.simpleString}")
-    }
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else SimHashKernel.simhashText(v.asInstanceOf[UTF8String], portable)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val boxed = ctx.freshName("simhashBoxed")
-    val code =
-      code"""
-        ${c.code}
-        boolean ${ev.isNull} = true;
-        long ${ev.value} = 0L;
-        if (!${c.isNull}) {
-          java.lang.Long $boxed =
-            graft.expressions.SimHashKernel.simhashText(${c.value}, $portable);
-          if ($boxed != null) { ${ev.isNull} = false; ${ev.value} = $boxed.longValue(); }
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashFromText =
-    copy(child = newChild)
-}
-
 /** All text-quality counts in one pass, backing qualityScore/langId:
   * token count, ASCII-punctuation count, char (code point) count,
   * per-language and any-language stopword hits, CJK code points.
@@ -920,8 +642,9 @@ object TextStatsKernel {
     (c >= '!' && c <= '/') || (c >= ':' && c <= '@') ||
       (c >= '[' && c <= '`') || (c >= '{' && c <= '~')
 
-  /** Returns [ntok, npunct, nchar, en, de, fr, es, nswAll, cjk]. */
-  def stats(s: UTF8String): InternalRowLike = {
+  /** Returns the row (ntok, npunct, nchar, en, de, fr, es, nswall, cjk),
+    * all longs. */
+  def stats(s: UTF8String): InternalRow = {
     val raw = s.toString
     var npunct = 0L
     var cjk = 0L
@@ -957,52 +680,9 @@ object TextStatsKernel {
       }
       j += 1
     }
-    InternalRowLike(ntok, npunct, nchar, perLang(0), perLang(1), perLang(2),
+    InternalRow(ntok, npunct, nchar, perLang(0), perLang(1), perLang(2),
       perLang(3), nswAll, cjk)
   }
-
-  case class InternalRowLike(ntok: Long, npunct: Long, nchar: Long, en: Long,
-                             de: Long, fr: Long, es: Long, nswAll: Long,
-                             cjk: Long)
-}
-
-case class TextStats(child: Expression) extends UnaryExpression {
-  import org.apache.spark.sql.types.{LongType, StructField, StructType}
-  import org.apache.spark.sql.catalyst.InternalRow
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires string, got ${other.simpleString}")
-    }
-  }
-
-  override def dataType: DataType = StructType(
-    Seq("ntok", "npunct", "nchar", "en", "de", "fr", "es", "nswall", "cjk")
-      .map(StructField(_, LongType, nullable = false)))
-  override def prettyName: String = "graft_text_stats"
-
-  // public: invoked from generated code via the captured reference
-  def compute(s: UTF8String): InternalRow = {
-    val r = TextStatsKernel.stats(s)
-    InternalRow(r.ntok, r.npunct, r.nchar, r.en, r.de, r.fr, r.es, r.nswAll,
-      r.cjk)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("textStatsExpr", this,
-      classOf[TextStats].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TextStats =
-    copy(child = newChild)
 }
 
 /** MinHash signature over a shingle array in one kernel call: for each
@@ -1013,19 +693,26 @@ case class TextStats(child: Expression) extends UnaryExpression {
   * constants come from the caller (Dedup.perms — fixed seed). A null
   * shingle element hashes to the seed (42) exactly like Spark's
   * xxhash64 builtin does for NULL, keeping the bit-parity claim true
-  * even for null-containing arrays (WordShingles never produces them,
+  * even for null-containing arrays (wordShingles never produces them,
   * but the SQL-facing Column API accepts containsNull=true arrays).
+  *
+  * The permutation constants are IndexedSeqs, NOT Arrays: the kernel
+  * value sits in the plan as a literal, and case-class equality over an
+  * Array field is reference equality, which would make two
+  * structurally identical plans never compare equal — breaking cache
+  * reuse (every dedup call would register a fresh, never-hit cache
+  * entry) and semantic plan equality generally. The hot loop still runs
+  * on arrays via the transient lazy copies.
   */
-object MinHashKernel {
+case class MinHashKernel(a: IndexedSeq[Long], b: IndexedSeq[Long]) {
   import org.apache.spark.sql.catalyst.expressions.XXH64
+  import MinHashKernel.P
 
-  /** The MinHash modulus (2^31 - 1) — the ONE canonical constant; the
-    * permutation generator and sentinel in Dedup reference it. */
-  val P: Long = 2147483647L
+  @transient private lazy val aArr: Array[Long] = a.toArray
+  @transient private lazy val bArr: Array[Long] = b.toArray
 
-  def signature(shingles: ArrayData, a: Array[Long],
-                b: Array[Long]): Array[Long] = {
-    val k = a.length
+  def compute(shingles: ArrayData): ArrayData = {
+    val k = aArr.length
     val out = Array.fill(k)(P)
     val n = shingles.numElements()
     var i = 0
@@ -1037,58 +724,22 @@ object MinHashKernel {
           t.numBytes, 42L) & 0xffffffffL
       var j = 0
       while (j < k) {
-        val v = java.lang.Math.floorMod(h * a(j) + b(j), P)
+        val v = java.lang.Math.floorMod(h * aArr(j) + bArr(j), P)
         if (v < out(j)) out(j) = v
         j += 1
       }
       i += 1
     }
-    out
+    new GenericArrayData(out)
   }
+
+  override def toString: String = s"graft_minhash_sig(${a.length} perms)"
 }
 
-// Permutation constants are Seqs, NOT Arrays: case-class equality over
-// an Array field is reference equality, which would make two
-// structurally identical plans never compare equal — breaking cache
-// reuse (every dedup call would register a fresh, never-hit cache
-// entry) and semantic plan equality generally. The hot loop still runs
-// on arrays via the transient lazy copies below.
-case class MinHashSig(child: Expression, a: IndexedSeq[Long],
-                      b: IndexedSeq[Long])
-    extends UnaryExpression {
-  import org.apache.spark.sql.types.LongType
-
-  @transient private lazy val aArr: Array[Long] = a.toArray
-  @transient private lazy val bArr: Array[Long] = b.toArray
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash_sig"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<string>, got ${other.simpleString}")
-    }
-  }
-
-  // public: invoked from generated code via the captured reference
-  def compute(shingles: ArrayData): GenericArrayData =
-    new GenericArrayData(MinHashKernel.signature(shingles, aArr, bArr))
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("minhashSigExpr", this,
-      classOf[MinHashSig].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
+object MinHashKernel {
+  /** The MinHash modulus (2^31 - 1) — the ONE canonical constant; the
+    * permutation generator and sentinel in Dedup reference it. */
+  val P: Long = 2147483647L
 }
 
 /** Per-document token-distribution statistics in one row-local pass:
@@ -1112,8 +763,8 @@ object TokenEntropyKernel {
   private def isWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == 0x0b || c == '\f' || c == '\r'
 
-  /** Returns (ntok, ntypes, entropyBits). */
-  def stats(s: UTF8String): (Long, Long, Double) = {
+  /** Returns the row (ntok: long, ntypes: long, entropy_bits: double). */
+  def stats(s: UTF8String): InternalRow = {
     val lowered = s.trim().toLowerCase.toString
     val counts = new java.util.HashMap[String, Array[Long]]()
     var n = 0L
@@ -1131,7 +782,7 @@ object TokenEntropyKernel {
       }
       j += 1
     }
-    if (n == 0L) return (0L, 0L, 0.0)
+    if (n == 0L) return InternalRow(0L, 0L, 0.0)
     var sl = 0.0
     val it = counts.values().iterator()
     while (it.hasNext) {
@@ -1139,66 +790,8 @@ object TokenEntropyKernel {
       if (c > 1L) sl += c * math.log(c.toDouble)
     }
     val h = (math.log(n.toDouble) - sl / n) / math.log(2.0)
-    (n, counts.size().toLong, h)
+    InternalRow(n, counts.size().toLong, h)
   }
-}
-
-case class TokenEntropy(child: Expression) extends UnaryExpression {
-  import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-  import org.apache.spark.sql.catalyst.InternalRow
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires string, got ${other.simpleString}")
-    }
-  }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("ntok", LongType, nullable = false),
-    StructField("ntypes", LongType, nullable = false),
-    StructField("entropy_bits", DoubleType, nullable = false)))
-  override def prettyName: String = "graft_token_entropy"
-
-  // public: invoked from generated code via the captured reference
-  def compute(s: UTF8String): InternalRow = {
-    val (n, t, h) = TokenEntropyKernel.stats(s)
-    InternalRow(n, t, h)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("tokenEntropyExpr", this,
-      classOf[TokenEntropy].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $self.compute($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TokenEntropy =
-    copy(child = newChild)
-}
-
-/** Codegen'd span-cut — see [[TextKernels.cutSpans]]. */
-case class CutSpansExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_cut_spans"
-
-  override protected def nullSafeEval(text: Any, spans: Any): Any =
-    TextKernels.cutSpans(text.asInstanceOf[UTF8String],
-      spans.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, sp) =>
-      s"${ev.value} = graft.expressions.TextKernels.cutSpans($t, $sp);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CutSpansExpr =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Streaming positional gram-hash GENERATOR: one `(pos, g)` row per
@@ -1365,66 +958,138 @@ case class TokenGramHashGen(child: Expression, n: Int)
   }
 }
 
+/** The two kernel-call forms of [[TextExprs]] and [[VectorExprs]]. */
+private[expressions] object KernelCall {
+  private def exprs(args: Seq[(Column, DataType)]) =
+    args.map(a => ColumnBridge.expression(a._1))
+
+  /** A scalar kernel parameter and its input type, both from its Scala
+    * type. A Catalyst literal rather than `functions.lit`, so the call
+    * also resolves when a SQL function builder (which sees no Dataset)
+    * builds it. */
+  def param(v: Any): (Column, DataType) = {
+    val l = Literal(v)
+    ColumnBridge.column(l) -> l.dataType
+  }
+
+  /** `kernel.method(args)` on a stateless kernel object (Spark calls the
+    * object's static forwarder). */
+  def static(kernel: AnyRef, method: String, dataType: DataType,
+             returnsNull: Boolean = false)(
+      args: (Column, DataType)*): Column =
+    ColumnBridge.column(StaticInvoke(kernel.getClass, dataType, method,
+      exprs(args), args.map(_._2), returnNullable = returnsNull))
+
+  /** `kernel.method(args)` on a kernel value that carries its parameters.
+    * The value is a plan literal, so it is a case class of IndexedSeqs and
+    * scalars (plans built from equal parameters are equal), and its
+    * `toString` is how plans render it: the SQL function name and scalar
+    * parameters, never its arrays. */
+  def invoke(kernel: Product with Serializable, method: String,
+             dataType: DataType, returnsNull: Boolean = false)(
+      args: (Column, DataType)*): Column =
+    ColumnBridge.column(Invoke(Literal.fromObject(kernel), method, dataType,
+      exprs(args), args.map(_._2), returnNullable = returnsNull))
+}
+
+/** Columns over the text kernels. The kernel-call rule: a kernel is a
+  * public method, and its column is one `StaticInvoke` line (a method of
+  * a stateless kernel object) or one `Invoke` line (a method of a kernel
+  * value that carries its parameters, like [[MinHashKernel]]). Spark
+  * generates the direct call, NULL-in/NULL-out and the interpreted path;
+  * each argument's input type is the analysis-time type check. A kernel
+  * that can return NULL for a non-NULL input returns a boxed value and
+  * its call sets `returnsNull`. Scalar parameters are literal arguments
+  * whose Scala type matches the kernel signature. The two lazy generators,
+  * [[GramHashGen]] and [[TokenGramHashGen]], are the only hand-written
+  * Catalyst classes. */
 object TextExprs {
+  import KernelCall.{invoke, param, static}
+
+  private val Strings = ArrayType(StringType, containsNull = false)
+  // (start, end) code-point spans, as Dedup.cutSpans aggregates them
+  private val Spans = ArrayType(StructType(Seq(
+    StructField("s", LongType), StructField("e", LongType))))
+
+  private val TextStatsType = StructType(
+    Seq("ntok", "npunct", "nchar", "en", "de", "fr", "es", "nswall", "cjk")
+      .map(StructField(_, LongType, nullable = false)))
+
+  private val TokenEntropyType = StructType(Seq(
+    StructField("ntok", LongType, nullable = false),
+    StructField("ntypes", LongType, nullable = false),
+    StructField("entropy_bits", DoubleType, nullable = false)))
+
   def wordShingles(text: Column, n: Int): Column =
-    ColumnBridge.column(WordShingles(ColumnBridge.expression(text), n))
+    static(TextKernels, "wordShingles", Strings)(
+      text -> StringType, param(n))
 
   def wordNgramsAll(text: Column, n: Int): Column =
-    ColumnBridge.column(WordNgramsAll(ColumnBridge.expression(text), n))
+    static(TextKernels, "wordNgramsAll", Strings)(
+      text -> StringType, param(n))
 
   def cdcBoundaries(text: Column, window: Int, prime: Int, modBits: Int,
                     divisor: Int, residue: Int): Column =
-    ColumnBridge.column(CdcBoundaries(ColumnBridge.expression(text),
-      window, prime, modBits, divisor, residue))
+    static(TextKernels, "cdcBoundaries",
+        ArrayType(IntegerType, containsNull = false))(
+      text -> StringType, param(window), param(prime.toLong), param(modBits),
+      param(divisor.toLong), param(residue.toLong))
 
   def charShingles(text: Column, n: Int): Column =
-    ColumnBridge.column(CharShingles(ColumnBridge.expression(text), n))
+    static(TextKernels, "charShingles", Strings)(
+      text -> StringType, param(n))
 
   def gramHashes(text: Column, n: Int): Column =
     ColumnBridge.column(GramHashGen(ColumnBridge.expression(text), n))
 
   def gramDigest(gram: Column): Column =
-    ColumnBridge.column(GramDigest(ColumnBridge.expression(gram)))
+    static(Md5Kernel, "md5Digest16", BinaryType)(gram -> StringType)
 
   def tokenGramHashes(text: Column, n: Int): Column =
     ColumnBridge.column(TokenGramHashGen(ColumnBridge.expression(text), n))
 
   def cutSpans(text: Column, spans: Column): Column =
-    ColumnBridge.column(CutSpansExpr(ColumnBridge.expression(text),
-      ColumnBridge.expression(spans)))
+    static(TextKernels, "cutSpans", StringType)(
+      text -> StringType, spans -> Spans)
 
   def tokenSpans(text: Column, size: Int, stride: Int): Column =
-    ColumnBridge.column(TokenSpans(ColumnBridge.expression(text), size, stride))
+    static(TextKernels, "tokenSpans", Strings)(
+      text -> StringType, param(size), param(stride))
 
   def cdcSlices(text: Column, boundaries: Column): Column =
-    ColumnBridge.column(CdcSlices(ColumnBridge.expression(text),
-      ColumnBridge.expression(boundaries)))
+    static(TextKernels, "cdcSlices", Strings)(
+      text -> StringType, boundaries -> ArrayType(IntegerType))
 
   def normalizeText(text: Column, nfkc: Boolean = false,
                     casefold: Boolean = true,
                     collapseWs: Boolean = true): Column =
-    ColumnBridge.column(NormalizeText(ColumnBridge.expression(text),
-      nfkc, casefold, collapseWs))
+    static(TextKernels, "normalizeText", StringType)(
+      text -> StringType, param(nfkc), param(casefold), param(collapseWs))
 
   def minhashSig(shingles: Column, a: IndexedSeq[Long],
                  b: IndexedSeq[Long]): Column =
-    ColumnBridge.column(MinHashSig(ColumnBridge.expression(shingles), a, b))
+    invoke(MinHashKernel(a, b), "compute",
+      ArrayType(LongType, containsNull = false))(
+      shingles -> ArrayType(StringType))
 
   def textStats(text: Column): Column =
-    ColumnBridge.column(TextStats(ColumnBridge.expression(text)))
+    static(TextStatsKernel, "stats", TextStatsType)(text -> StringType)
 
   def tokenEntropy(text: Column): Column =
-    ColumnBridge.column(TokenEntropy(ColumnBridge.expression(text)))
+    static(TokenEntropyKernel, "stats", TokenEntropyType)(text -> StringType)
 
   def normalizedMd5(text: Column): Column =
-    ColumnBridge.column(NormalizedMd5(ColumnBridge.expression(text)))
+    static(Md5Kernel, "normalizedMd5", StringType)(text -> StringType)
 
   def dropRepeatedLines(text: Column): Column =
-    ColumnBridge.column(DropRepeatedLines(ColumnBridge.expression(text)))
+    static(TextKernels, "dropRepeatedLines", StringType)(text -> StringType)
 
   def simhash64(tokens: Column, portable: Boolean = false): Column =
-    ColumnBridge.column(SimHash64Expr(ColumnBridge.expression(tokens), portable))
+    static(SimHashKernel, if (portable) "simhashMd5" else "simhash",
+      LongType)(tokens -> ArrayType(StringType))
 
+  /** NULL for a text with zero tokens. */
   def simhashText(text: Column, portable: Boolean = false): Column =
-    ColumnBridge.column(SimHashFromText(ColumnBridge.expression(text), portable))
+    static(SimHashKernel, "simhashText", LongType, returnsNull = true)(
+      text -> StringType, param(portable))
 }

@@ -1,99 +1,44 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, LongType, StructField, StructType}
 
-/** Native Catalyst expression for the vector-similarity hot path.
+/** Stateless vector kernels.
   *
   * The built-in higher-order functions (`aggregate`, `zip_with`) evaluate
   * their lambda per element through the interpreter — fine for mapping a
   * column once, but a brute-force similarity join evaluates O(pairs * dim)
-  * lambdas and dominates the benchmark. This expression generates a tight
-  * primitive `double[]` loop inside whole-stage codegen instead (measured
-  * ~20x over the lambda form on the sf0.1 embedding self-join).
-  *
-  * Summation order is ascending index, identical to the lambda-based
-  * `aggregate(zip_with(a, b, *), 0.0, +)` it replaces and to DuckDB's
-  * sequential list fold — results are bitwise identical, which the
-  * duckdb-oracle hash compare requires. Mismatched-length inputs yield
-  * NULL (as the lambda form does via zip_with's null padding) rather
-  * than a silently truncated, plausible-but-wrong product.
+  * lambdas and dominates the benchmark. [[dot]] is one compiled loop
+  * instead (measured ~20x over the lambda form on the sf0.1 embedding
+  * self-join).
   */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+object VectorKernels {
 
-  override def dataType: DataType = DoubleType
-
-  // NULL is produced for ragged inputs even when both children are
-  // non-nullable, so nullability must not be derived from the children
-  override def nullable: Boolean = true
-
-  // Scala callers pass array<double> (VectorFunctions.asDoubles); the
-  // SQL surface (graft_dot via GraftExtensions) can pass anything, so
-  // reject non-double-array inputs at analysis time instead of failing
-  // with a ClassCastException mid-query.
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    import org.apache.spark.sql.types.ArrayType
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<double> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
+  /** Dot product in ascending index order, identical to the lambda-based
+    * `aggregate(zip_with(a, b, *), 0.0, +)` it replaces and to DuckDB's
+    * sequential list fold — results are bitwise identical, which the
+    * duckdb-oracle hash compare requires. Mismatched-length inputs yield
+    * NULL (as the lambda form does via zip_with's null padding) rather
+    * than a silently truncated, plausible-but-wrong product. */
+  def dot(a: ArrayData, b: ArrayData): java.lang.Double = {
+    val n = a.numElements()
+    if (n != b.numElements()) return null
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += a.getDouble(i) * b.getDouble(i); i += 1 }
+    s
   }
-  override def prettyName: String = "graft_dot"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData].toDoubleArray()
-    val ys = b.asInstanceOf[ArrayData].toDoubleArray()
-    if (xs.length != ys.length) null
-    else {
-      var s = 0.0
-      var i = 0
-      while (i < xs.length) { s += xs(i) * ys(i); i += 1 }
-      s
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val xs = ctx.freshName("xs")
-      val ys = ctx.freshName("ys")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |double[] $xs = $a.toDoubleArray();
-         |double[] $ys = $b.toDoubleArray();
-         |if ($xs.length != $ys.length) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $xs.length; $i++) { $s += $xs[$i] * $ys[$i]; }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
 }
 
 /** All hyperplane-LSH band keys in ONE kernel: `numBands` bands of
   * `bitsPerBand` sign bits each over a fixed plane matrix, emitted as
-  * array<bigint>. Composing this from per-plane DotProduct columns
+  * array<bigint>. Composing this from per-plane dot columns
   * (bands*bits separate expressions, each with a dim-sized literal)
   * makes Catalyst analysis/codegen itself the bottleneck — planning a
   * 484-expression projection took seconds per query. Here the plane
-  * matrix is one flat double[] referenced from generated code and the
+  * matrix is one flat double[] built once per JVM from the seed and the
   * whole signature is a single tight loop.
   *
   * Plane sequence: java.util.Random(seed), drawn band-major then
@@ -101,35 +46,18 @@ case class DotProduct(left: Expression, right: Expression)
   * spec-fixed). A vector whose length differs from `dim` gets all-zero
   * keys (the per-plane dot would be NULL -> bit unset).
   */
-case class HyperplaneBandKeys(child: Expression, dim: Int, bitsPerBand: Int,
-                              numBands: Int, seed: Long)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.types.{ArrayType, LongType}
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_band_keys"
-
+case class HyperplaneKernel(dim: Int, bitsPerBand: Int, numBands: Int,
+                            seed: Long) {
   // (band * bitsPerBand + bit) * dim + d
-  @transient lazy val planes: Array[Double] = {
+  @transient private lazy val planes: Array[Double] = {
     val rnd = new java.util.Random(seed)
     Array.fill(numBands * bitsPerBand * dim)(rnd.nextDouble() * 2.0 - 1.0)
   }
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<double>, got ${other.simpleString}")
-    }
-  }
-
-  // public: invoked from generated code via the captured reference
-  def compute(v: Array[Double]): Array[Long] = {
+  def compute(vec: ArrayData): ArrayData = {
+    val v = vec.toDoubleArray()
     val out = new Array[Long](numBands)
-    if (v.length != dim) return out
+    if (v.length != dim) return new GenericArrayData(out)
     var band = 0
     while (band < numBands) {
       var key = 0L
@@ -145,51 +73,29 @@ case class HyperplaneBandKeys(child: Expression, dim: Int, bitsPerBand: Int,
       out(band) = key
       band += 1
     }
-    out
+    new GenericArrayData(out)
   }
 
-  override def nullSafeEval(a: Any): Any =
-    new GenericArrayData(compute(a.asInstanceOf[ArrayData].toDoubleArray()))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("bandKeysExpr", this,
-      classOf[HyperplaneBandKeys].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  $self.compute($a.toDoubleArray()));
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : HyperplaneBandKeys = copy(child = newChild)
+  override def toString: String =
+    s"graft_band_keys($dim, $bitsPerBand, $numBands, $seed)"
 }
 
 /** Nearest-centroid argmax in one kernel: cosine against every centroid
   * of a driver-embedded matrix, returning struct(cell: bigint, sim:
   * double) for the best match (ties -> lowest cell id; centroids are
-  * scanned in ascending-cell order with a strict >). The matrix lives as
-  * a reference object — a literal array-of-structs expression tree costs
+  * scanned in ascending-cell order with a strict >). The matrix lives in
+  * the kernel value — a literal array-of-structs expression tree costs
   * seconds of analysis/codegen at moderate k and evaluates through the
   * interpreted higher-order-function path. A vector whose length differs
-  * from the centroid dim yields (cell = -1, sim = -Infinity). */
-// Seq params (not Arrays) for value-based case-class equality — see the
-// MinHashSig note: Array fields would break plan-cache matching and
-// semantic equality. The kernel loops run on the transient lazy copies.
-case class NearestCentroid(child: Expression, cells: IndexedSeq[Long],
-                           matrix: IndexedSeq[Double], dim: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.types.{LongType, StructField, StructType}
-  import org.apache.spark.sql.catalyst.InternalRow
-
+  * from the centroid dim yields (cell = -1, sim = -Infinity).
+  *
+  * IndexedSeq params (not Arrays) for value-based case-class equality —
+  * see [[MinHashKernel]]: Array fields would break plan-cache matching
+  * and semantic equality. The loops run on the transient lazy copies. */
+case class CentroidKernel(cells: IndexedSeq[Long], matrix: IndexedSeq[Double],
+                          dim: Int) {
   @transient private lazy val cellsArr: Array[Long] = cells.toArray
   @transient private lazy val matrixArr: Array[Double] = matrix.toArray
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("cell", LongType, nullable = false),
-    StructField("sim", DoubleType, nullable = false)))
-  override def prettyName: String = "graft_nearest_centroid"
 
   @transient private lazy val norms: Array[Double] = {
     val k = cellsArr.length
@@ -205,19 +111,8 @@ case class NearestCentroid(child: Expression, cells: IndexedSeq[Long],
     out
   }
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    import org.apache.spark.sql.types.ArrayType
-    child.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<double>, got ${other.simpleString}")
-    }
-  }
-
-  // public: invoked from generated code via the captured reference
-  def compute(v: Array[Double]): InternalRow = {
+  def compute(vec: ArrayData): InternalRow = {
+    val v = vec.toDoubleArray()
     var bestCell = -1L
     var bestSim = Double.NegativeInfinity
     if (v.length == dim) {
@@ -239,59 +134,24 @@ case class NearestCentroid(child: Expression, cells: IndexedSeq[Long],
     InternalRow(bestCell, bestSim)
   }
 
-  override def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[ArrayData].toDoubleArray())
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("nearestCentroidExpr", this,
-      classOf[NearestCentroid].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"${ev.value} = $self.compute($a.toDoubleArray());"
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : NearestCentroid = copy(child = newChild)
+  override def toString: String =
+    s"graft_nearest_centroid(${cells.length} cells, dim $dim)"
 }
 
-/** Per-dimension affine scalar quantization (SQ8) of an `array<double>`
-  * vector into one unsigned byte per dimension, plus the DEQUANTIZED
-  * l2 norm in the same pass: struct(code: binary, dnorm: double). The
-  * norm is computed from the reconstructed values (not the originals) so
-  * asymmetric-distance scoring with [[SqDot]] is internally consistent.
-  * A vector whose length differs from the codebook dim yields null.
+/** Per-dimension affine scalar quantization (SQ8) with a fixed codebook
+  * (IndexedSeq params for value equality, as in [[CentroidKernel]]).
   * Constant dimensions (scale 0) encode as 0 and reconstruct to min. */
-// Seq params (not Arrays) for value-based case-class equality — Array
-// fields break plan canonicalization and plan-cache matching; kernels
-// loop over the transient lazy copies.
-case class SqEncode(child: Expression, mins: IndexedSeq[Double],
-                    scales: IndexedSeq[Double])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
-  import org.apache.spark.sql.catalyst.InternalRow
-
+case class SqKernel(mins: IndexedSeq[Double], scales: IndexedSeq[Double]) {
   @transient private lazy val minsArr: Array[Double] = mins.toArray
   @transient private lazy val scalesArr: Array[Double] = scales.toArray
 
-  override def dataType: DataType = StructType(Seq(
-    StructField("code", BinaryType, nullable = false),
-    StructField("dnorm", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_sq_encode"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    import org.apache.spark.sql.types.ArrayType
-    child.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<double>, got ${other.simpleString}")
-    }
-  }
-
-  // public: invoked from generated code via the captured reference
-  def compute(v: Array[Double]): InternalRow = {
+  /** One unsigned byte per dimension, plus the DEQUANTIZED l2 norm in the
+    * same pass: struct(code: binary, dnorm: double). The norm is computed
+    * from the reconstructed values (not the originals) so
+    * asymmetric-distance scoring with [[dot]] is internally consistent.
+    * NULL for a vector whose length differs from the codebook dim. */
+  def encode(vec: ArrayData): InternalRow = {
+    val v = vec.toDoubleArray()
     val dim = minsArr.length
     if (v.length != dim) return null
     val code = new Array[Byte](dim)
@@ -313,54 +173,13 @@ case class SqEncode(child: Expression, mins: IndexedSeq[Double],
     InternalRow(code, math.sqrt(nsq))
   }
 
-  override def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[ArrayData].toDoubleArray())
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("sqEncodeExpr", this,
-      classOf[SqEncode].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""${ev.value} = (org.apache.spark.sql.catalyst.InternalRow)
-         |  $self.compute($a.toDoubleArray());
-         |${ev.isNull} = (${ev.value} == null);""".stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : SqEncode = copy(child = newChild)
-}
-
-/** Asymmetric-distance dot product: full-precision query
-  * (`array<double>`) against an SQ8 code (`binary`), reconstructing each
-  * corpus dimension as `min_j + scale_j * byte_j` inside the loop — the
-  * query is never quantized, so the only error is the corpus side's
-  * rounding. Null on dim mismatch. */
-case class SqDot(left: Expression, right: Expression,
-                 mins: IndexedSeq[Double], scales: IndexedSeq[Double])
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  @transient private lazy val minsArr: Array[Double] = mins.toArray
-  @transient private lazy val scalesArr: Array[Double] = scales.toArray
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_sq_dot"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    import org.apache.spark.sql.types.{ArrayType, BinaryType}
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), BinaryType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<double>, binary), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-  }
-
-  // public: invoked from generated code via the captured reference
-  def compute(q: Array[Double], code: Array[Byte]): Any = {
+  /** Asymmetric-distance dot product: full-precision query against an
+    * SQ8 code, reconstructing each corpus dimension as
+    * `min_j + scale_j * byte_j` inside the loop — the query is never
+    * quantized, so the only error is the corpus side's rounding. NULL on
+    * dim mismatch. */
+  def dot(query: ArrayData, code: Array[Byte]): java.lang.Double = {
+    val q = query.toDoubleArray()
     val dim = minsArr.length
     if (q.length != dim || code.length != dim) return null
     var s = 0.0
@@ -372,31 +191,11 @@ case class SqDot(left: Expression, right: Expression,
     s
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[ArrayData].toDoubleArray(),
-      b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("sqDotExpr", this, classOf[SqDot].getName)
-    // fresh local name: a fixed `r` collides (janino compile failure ->
-    // silent interpreted fallback) if two SqDot expressions land in the
-    // same generated function scope
-    val r = ctx.freshName("sqDotRes")
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""Object $r = $self.compute($a.toDoubleArray(), $b);
-         |${ev.isNull} = ($r == null);
-         |${ev.value} = ${ev.isNull} ? -1.0 : ((Double) $r).doubleValue();""".stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SqDot =
-    copy(left = newLeft, right = newRight)
+  override def toString: String = s"graft_sq(dim ${mins.length})"
 }
 
-/** Column-level entry points for the native expressions. */
 /** Seeded ±1 random projection (Achlioptas-style sign matrix) in one
-  * codegen kernel: y_j = (Σ_i v_i · s_ij) / sqrt(outDim) — the standard
+  * kernel: y_j = (Σ_i v_i · s_ij) / sqrt(outDim) — the standard
   * Johnson-Lindenstrauss dimension-reduction step a 100 TB embedding
   * pipeline runs before LSH banding or index build to cut shuffle and
   * state bytes per vector.
@@ -404,21 +203,13 @@ case class SqDot(left: Expression, right: Expression,
   * The sign matrix is derived from md5("rp:<salt>:<i>:<j>") (first hex
   * digit parity), NOT from a JVM PRNG — so any engine can replay the
   * exact matrix from the salt alone (the DuckDB oracle rebuilds it in
-  * SQL), and the expression's constructor args stay scalar (plan-cache
-  * friendly; the matrix itself is a @transient lazy val). Null vector →
-  * null; a vector whose length differs from `dim` yields an all-zero
-  * projection (the HyperplaneBandKeys convention) rather than a crash.
+  * SQL), and the kernel's parameters stay scalar (plan-cache friendly;
+  * the matrix itself is a @transient lazy val). A vector whose length
+  * differs from `dim` yields an all-zero projection (the
+  * [[HyperplaneKernel]] convention) rather than a crash.
   */
-case class SignedProject(child: Expression, dim: Int, outDim: Int,
-                         salt: String)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.types.ArrayType
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
-
+case class SignedProjectKernel(dim: Int, outDim: Int, salt: String) {
   require(dim > 0 && outDim > 0, "dims must be positive")
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_signed_project"
 
   // j * dim + i; +1.0 when the first md5 hex digit is even
   @transient private lazy val signs: Array[Double] = {
@@ -443,20 +234,10 @@ case class SignedProject(child: Expression, dim: Int, outDim: Int,
   // non-power-of-4 outDims
   @transient private lazy val scale: Double = math.sqrt(outDim.toDouble)
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    child.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<double>, got ${other.simpleString}")
-    }
-  }
-
-  // public: invoked from generated code via the captured reference
-  def compute(v: Array[Double]): Array[Double] = {
+  def compute(vec: ArrayData): ArrayData = {
+    val v = vec.toDoubleArray()
     val out = new Array[Double](outDim)
-    if (v.length != dim) return out
+    if (v.length != dim) return new GenericArrayData(out)
     var j = 0
     while (j < outDim) {
       val off = j * dim
@@ -466,52 +247,50 @@ case class SignedProject(child: Expression, dim: Int, outDim: Int,
       out(j) = s / scale
       j += 1
     }
-    out
+    new GenericArrayData(out)
   }
 
-  override def nullSafeEval(a: Any): Any =
-    new GenericArrayData(compute(a.asInstanceOf[ArrayData].toDoubleArray()))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("signedProjectExpr", this,
-      classOf[SignedProject].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  $self.compute($a.toDoubleArray()));
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : SignedProject = copy(child = newChild)
+  override def toString: String =
+    s"graft_signed_project($dim, $outDim, $salt)"
 }
 
+/** Columns over the vector kernels, by the kernel-call rule of
+  * [[TextExprs]]. */
 object VectorExprs {
+  import KernelCall.{invoke, static}
+
+  private val Doubles = ArrayType(DoubleType)
+
   def dot(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProduct(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    static(VectorKernels, "dot", DoubleType, returnsNull = true)(
+      a -> Doubles, b -> Doubles)
 
   def bandKeys(v: Column, dim: Int, bitsPerBand: Int, numBands: Int,
                seed: Long): Column =
-    ColumnBridge.column(HyperplaneBandKeys(
-      ColumnBridge.expression(v), dim, bitsPerBand, numBands, seed))
+    invoke(HyperplaneKernel(dim, bitsPerBand, numBands, seed), "compute",
+      ArrayType(LongType, containsNull = false))(v -> Doubles)
 
   def nearestCentroid(v: Column, cells: IndexedSeq[Long], matrix: IndexedSeq[Double],
                       dim: Int): Column =
-    ColumnBridge.column(NearestCentroid(
-      ColumnBridge.expression(v), cells, matrix, dim))
+    invoke(CentroidKernel(cells, matrix, dim), "compute", StructType(Seq(
+      StructField("cell", LongType, nullable = false),
+      StructField("sim", DoubleType, nullable = false))))(v -> Doubles)
 
   def signedProject(v: Column, dim: Int, outDim: Int, salt: String): Column =
-    ColumnBridge.column(SignedProject(
-      ColumnBridge.expression(v), dim, outDim, salt))
+    invoke(SignedProjectKernel(dim, outDim, salt), "compute",
+      ArrayType(DoubleType, containsNull = false))(v -> Doubles)
 
+  /** NULL for a vector whose length differs from the codebook dim. */
   def sqEncode(v: Column, mins: IndexedSeq[Double],
                scales: IndexedSeq[Double]): Column =
-    ColumnBridge.column(SqEncode(ColumnBridge.expression(v), mins, scales))
+    invoke(SqKernel(mins, scales), "encode", StructType(Seq(
+      StructField("code", BinaryType, nullable = false),
+      StructField("dnorm", DoubleType, nullable = false))),
+      returnsNull = true)(v -> Doubles)
 
+  /** NULL on a dim mismatch. */
   def sqDot(q: Column, code: Column, mins: IndexedSeq[Double],
             scales: IndexedSeq[Double]): Column =
-    ColumnBridge.column(SqDot(ColumnBridge.expression(q),
-      ColumnBridge.expression(code), mins, scales))
+    invoke(SqKernel(mins, scales), "dot", DoubleType, returnsNull = true)(
+      q -> Doubles, code -> BinaryType)
 }

@@ -16,7 +16,7 @@ object TextFunctions {
     filter(split(lower(trim(text)), "\\s+"), t => length(t) > 0)
 
   /** All quality/language counts in one single-pass kernel call
-    * (graft.expressions.TextStats): struct(ntok, npunct, nchar, en, de,
+    * (graft.expressions.TextStatsKernel): struct(ntok, npunct, nchar, en, de,
     * fr, es, nswall, cjk). The derived functions below reference it
     * repeatedly — codegen subexpression elimination evaluates it once
     * per row, replacing ~8 independent regex/split walks. */
@@ -104,7 +104,7 @@ object TextFunctions {
   }
 
   /** Per-document token-distribution stats in one row-local codegen pass
-    * (graft.expressions.TokenEntropy): struct(ntok, ntypes, entropy_bits)
+    * (graft.expressions.TokenEntropyKernel): struct(ntok, ntypes, entropy_bits)
     * — Shannon entropy of the within-document token distribution, the
     * lexical-diversity signal that catches keyword-stuffed / degenerate-
     * repetition documents length and punctuation ratios miss. Same
@@ -186,7 +186,7 @@ object TextFunctions {
   /** Word n-gram shingles ("a b c" style), distinct in first-occurrence
     * order; empty array when the document has fewer than n tokens.
     * Implemented as a single-pass codegen kernel
-    * (graft.expressions.WordShingles) — same normalization contract as
+    * (graft.expressions.TextKernels) — same normalization contract as
     * [[tokens]]. */
   def wordShingles(text: Column, n: Int): Column =
     graft.expressions.TextExprs.wordShingles(text, n)
@@ -195,7 +195,7 @@ object TextFunctions {
     * entry per starting position, unlike [[wordShingles]]); empty array
     * when the document has fewer than n tokens. The occurrence stream is
     * what frequency statistics ([[graft.operators.CorpusStats]]) count.
-    * Single-pass codegen kernel (graft.expressions.WordNgramsAll) — the
+    * Single-pass codegen kernel (graft.expressions.TextKernels) — the
     * composed transform-lambda form re-tokenized the document once per
     * position (O(len^2) per doc). */
   def wordNgramsAll(text: Column, n: Int): Column =

@@ -16,8 +16,8 @@ object VectorFunctions {
   /** Cast any numeric array to Array[Double] for stable arithmetic. */
   def asDoubles(a: Column): Column = a.cast("array<double>")
 
-  /** Dot product — a native codegen'd expression (graft.expressions
-    * .DotProduct); the lambda fold it replaces is interpreted per element
+  /** Dot product — a codegen'd kernel call (graft.expressions
+    * .VectorKernels.dot); the lambda fold it replaces is interpreted per element
     * and dominates similarity joins. Same ascending-index summation order,
     * bitwise-identical results. */
   def dot(a: Column, b: Column): Column =

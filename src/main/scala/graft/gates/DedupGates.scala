@@ -75,7 +75,7 @@ object DedupGates {
     s"allch AS MATERIALIZED (SELECT * FROM ${cdcChunksSql("documents")})"
 
   /** Shared SQL fragment: distinct 3-gram shingles per doc (list-valued,
-    * first-occurrence order, like the engine's WordShingles). Documents
+    * first-occurrence order, like the engine's wordShingles). Documents
     * with fewer than 3 tokens or null text produce NO row (the old
     * slice form produced an empty/NULL list) — every consumer joins `d`
     * through candidate pairs, which such documents cannot enter. */

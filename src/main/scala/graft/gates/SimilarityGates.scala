@@ -226,7 +226,7 @@ object SimilarityGates {
       // digit of md5('rp:rp1:i:j') is even; y_j = sum_i v_i*s_ij/sqrt(16)
       // (round 6 absorbs cross-engine summation-order ulp). Mirrors the
       // engine's ragged-vector convention explicitly: a non-null vector
-      // whose length != 64 projects to all zeros (SignedProject's
+      // whose length != 64 projects to all zeros (SignedProjectKernel's
       // degrade-to-zero rule), not to a partial sum over whatever
       // indices exist — so a dimension-injecting sweep fails loudly as
       // a semantic diff, never as a confusing value mismatch (ADVICE r14)

@@ -43,8 +43,8 @@ case class ChunkIndex(name: String, path: String, numBuckets: Int,
   * (`/root/reference/pipeline/pipeline.go` routes whole tuples); this
   * extends the LLM-pipeline layer like [[Dedup]]/[[Sampling]].
   *
-  * Spark-first shape: boundary detection is a custom codegen'd Catalyst
-  * expression ([[graft.expressions.CdcBoundaries]] — a compiled O(n)
+  * Spark-first shape: boundary detection is a codegen'd kernel call
+  * ([[graft.expressions.TextKernels.cdcBoundaries]] — a compiled O(n)
   * rolling-hash pass per document); chunk assembly around it is builtin
   * functions over the small boundary array. Zero UDFs and ZERO
   * SHUFFLES: every chunk is derived row-locally and exploded in place,
@@ -80,7 +80,7 @@ object Chunking {
         "window >= 2, prime > 0, modBits <= 40, divisor >= 2, " +
         "0 <= residue < divisor")
     // Boundary detection is a compiled O(n) rolling-hash kernel
-    // (graft.expressions.CdcBoundaries, one call per row, codegen'd) —
+    // (TextKernels.cdcBoundaries, one call per row, codegen'd) —
     // the composed higher-order-function form ran INTERPRETED, and
     // CollapseProject inlined the codes projection into the lambdas, so
     // split+transform re-evaluated at every (position, window) step:

@@ -167,24 +167,21 @@ object CorpusStats {
     * first); document frequency is a vocabulary-sized aggregate OF that
     * tf frame (one row per (doc, term) already, so a plain count), and
     * the corpus size joins in as a broadcast one-row aggregate — the
-    * document bodies are never shuffled. With `persistTf` the tf frame
-    * is cached across its two consumers (score rows + df aggregate);
-    * left false, the explode pipeline runs twice — the standard
-    * scan-twice vs. materialize trade, same dial as Dedup's
-    * persistShingles.
+    * document bodies are never shuffled. The tf frame is not cached:
+    * its two consumers (score rows + df aggregate) each run the explode
+    * pipeline, the scan-twice side of the scan-twice vs. materialize
+    * trade (the frame is vocabulary x doc sized).
     *
     * Output: (doc, term, tf, score), score rounded to 4 decimals.
     */
-  def tfidf(docs: DataFrame, idCol: String, textCol: String,
-            persistTf: Boolean = false): DataFrame = {
+  def tfidf(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val tf = docs
       .select(col(idCol).as("doc"),
         explode(graft.functions.TextFunctions.tokens(col(textCol))).as("term"))
       .groupBy("doc", "term").agg(count(lit(1)).as("tf"))
-    val tfc = if (persistTf) tf.persist() else tf
-    val dfreq = tfc.groupBy("term").agg(count(lit(1)).as("df"))
+    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).cast("double").as("__n"))
-    tfc.join(dfreq, "term")
+    tf.join(dfreq, "term")
       .crossJoin(broadcast(n))
       .select(col("doc"), col("term"), col("tf"),
         round(col("tf") *
@@ -205,19 +202,18 @@ object CorpusStats {
     * Plan shape: the bigram-occurrence stream shuffles twice by n-gram
     * key (its own count join, then the first-word unigram join) and
     * once by doc for the final mean — all three carry (doc, short
-    * string, count) rows, never document bodies. `persistBigrams`
-    * caches the exploded stream across its two consumers, the same
-    * dial as [[tfidf]]'s persistTf.
+    * string, count) rows, never document bodies. The exploded stream
+    * is not cached; its two consumers each recompute it, as in
+    * [[tfidf]].
     *
     * Output: (doc, n_bigrams, avg_lp rounded to 4); documents with
     * fewer than two tokens have no bigrams and drop out.
     */
-  def bigramLogProb(docs: DataFrame, idCol: String, textCol: String,
-                    persistBigrams: Boolean = false): DataFrame = {
+  def bigramLogProb(docs: DataFrame, idCol: String,
+                    textCol: String): DataFrame = {
     import graft.functions.TextFunctions
-    val bg0 = docs.select(col(idCol).as("doc"),
+    val bg = docs.select(col(idCol).as("doc"),
       explode(TextFunctions.wordNgramsAll(col(textCol), 2)).as("bg"))
-    val bg = if (persistBigrams) bg0.persist() else bg0
     val c2 = bg.groupBy("bg").agg(count(lit(1)).as("c2"))
     val ug = docs
       .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
@@ -366,7 +362,7 @@ object CorpusStats {
     * Collision-safe at 128 bits; a NULL gram (too-short history)
     * digests to NULL and keeps its no-match join semantics. Digests
     * are internal — no output column ever renders one. Computed by the
-    * [[graft.expressions.GramDigest]] kernel — bit-identical to
+    * [[graft.expressions.Md5Kernel.md5Digest16]] kernel — bit-identical to
     * `unhex(md5(g))` but through the single-block fast path, so the
     * fixed-width-key trade costs a hash, not a MessageDigest + hex
     * round-trip per gram (SCALE.md records the measured A/B). */
@@ -1053,18 +1049,17 @@ object CorpusStats {
     * Output: (stratum, n_tokens, kl rounded to 4), one row per
     * stratum. */
   def sourceDivergence(docs: DataFrame, stratumCol: String,
-                       textCol: String,
-                       persistCounts: Boolean = true): DataFrame = {
-    // persistCounts caches the (stratum, word) aggregate — four
-    // consumers (the KL join, word totals, stratum totals, the corpus
-    // total), and the cached frame is the vocabulary-grained AGGREGATE,
-    // not the raw token stream, so default-on
-    val sw0 = docs
+                       textCol: String): DataFrame = {
+    // the (stratum, word) aggregate is cached — four consumers (the KL
+    // join, word totals, stratum totals, the corpus total), and the
+    // cached frame is the vocabulary-grained AGGREGATE, not the raw
+    // token stream
+    val sw = docs
       .select(col(stratumCol).as("grp"),
         explode(graft.functions.TextFunctions
           .tokens(col(textCol))).as("w"))
       .groupBy("grp", "w").agg(count(lit(1)).as("c"))
-    val sw = if (persistCounts) sw0.persist() else sw0
+      .persist()
     val cw = sw.groupBy("w").agg(sum("c").as("cw"))
     // a NULL stratum is a legitimate groupBy group (docs with no source
     // tag are exactly the slice a drift report must not lose) — the

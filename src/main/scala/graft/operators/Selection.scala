@@ -44,17 +44,14 @@ import org.apache.spark.sql.functions._
   */
 object Selection {
 
-  /** `persistCounts` caches the (doc, bucket) count frame — it feeds
-    * FIVE consumers (the weight join, both distributions, both
-    * totals), and unlike the raw token stream it is bounded at
-    * ≤ B rows per document, so default-on is the right trade (the
-    * scan-twice dial tfidf/bigramLogProb expose defaults off because
-    * their cached frames are vocabulary×doc-sized and have only two
-    * consumers). */
+  /** The (doc, bucket) count frame is cached — it feeds FIVE
+    * consumers (the weight join, both distributions, both totals), and
+    * unlike the raw token stream it is bounded at ≤ B rows per
+    * document (tfidf/bigramLogProb cache nothing: their frames are
+    * vocabulary×doc-sized and have only two consumers). */
   def dsirWeights(docs: DataFrame, isTarget: Column, idCol: String,
                   textCol: String, buckets: Int = 512,
-                  k: Double = 0.5,
-                  persistCounts: Boolean = true): DataFrame = {
+                  k: Double = 0.5): DataFrame = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     require(k > 0.0, s"smoothing k must be positive, got $k")
     import graft.functions.TextFunctions
@@ -66,9 +63,8 @@ object Selection {
           lit(buckets.toLong)))
     // the one per-token shuffle: (doc, bucket) counts with map-side
     // combine; is_target rides along (functionally dependent on doc)
-    val dc0 = feats.groupBy("doc", "is_target", "b")
-      .agg(count(lit(1)).as("c"))
-    val dc = if (persistCounts) dc0.persist() else dc0
+    val dc = feats.groupBy("doc", "is_target", "b")
+      .agg(count(lit(1)).as("c")).persist()
     // both distributions re-aggregate the bounded frame: <= B rows each,
     // broadcast back; raw covers every bucket dc has by construction,
     // target may miss buckets (LEFT join + smoothing keeps them finite)

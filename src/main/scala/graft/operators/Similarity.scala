@@ -81,7 +81,7 @@ object Similarity {
   /** Seeded ±1 random projection (Johnson-Lindenstrauss dimension
     * reduction): adds `outCol` = the `outDim`-dimensional projection of
     * `vec` under the md5-derived sign matrix keyed by `salt` (see
-    * [[graft.expressions.SignedProject]]). The standard pre-compression
+    * [[graft.expressions.SignedProjectKernel]]). The standard pre-compression
     * step before LSH banding or index build at 100 TB — inner products
     * are preserved in expectation, state/shuffle bytes per vector drop
     * by dim/outDim, and the matrix is replayable from the salt alone by
@@ -603,7 +603,7 @@ object Similarity {
     val scored = c.join(broadcast(q), col("cid") =!= col("qid"))
       .withColumn("psim",
         cosineFrom(dot(col("qp"), col("cp")), col("qpn"), col("cpn")))
-      // a wrong-dim vector projects to all zeros (SignedProject's
+      // a wrong-dim vector projects to all zeros (SignedProjectKernel's
       // degrade rule) → NULL RP cosine; a zero vector likewise — both
       // drop here instead of occupying candidate slots
       .where(col("psim").isNotNull)

@@ -63,7 +63,7 @@ class PlanPropertiesSpec extends SparkSpec {
 
   test("q_dedup_embedding: banded equi-join candidates, no quadratic join") {
     val p = plan("q_dedup_embedding")
-    assert(p.contains("graft_dot"), "native expression missing from plan")
+    assert(p.contains("VectorKernels.dot("), "native expression missing from plan")
     // the scale property: candidate generation is an equi-join on band
     // keys — never a nested-loop/cartesian pair join
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
@@ -143,7 +143,7 @@ class PlanPropertiesSpec extends SparkSpec {
     assert(p.contains("gram_hash_gen") || p.contains("gramhashgen") ||
       p.toLowerCase.contains("gramhash"),
       s"gram generator missing from the composed plan:\n$p")
-    assert(p.toLowerCase.contains("graft_cut_spans"),
+    assert(p.contains("TextKernels.cutSpans("),
       s"cut kernel missing from the composed plan:\n$p")
   }
 
@@ -156,7 +156,7 @@ class PlanPropertiesSpec extends SparkSpec {
     // composition; the single-pass kernel stays in the plan
     assert(p.contains("ShuffledHashJoin"),
       s"corpus joins must be shuffle-hash:\n$p")
-    assert(p.contains("graft_drop_repeated_lines"),
+    assert(p.contains("TextKernels.dropRepeatedLines("),
       s"within-doc kernel missing from the composed plan:\n$p")
     assert(!p.contains("BroadcastHashJoin"),
       s"no corpus-sized side may broadcast:\n$p")

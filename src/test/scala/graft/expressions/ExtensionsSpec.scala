@@ -99,6 +99,16 @@ class ExtensionsSpec extends SparkSpec {
       .collect()(0).getLong(0) == 0L)
   }
 
+  test("kernel functions reject wrong argument types at analysis") {
+    val s = spark
+    GraftExtensions.register(s)
+    // arrays: no implicit cast turns them into the kernels' string input
+    Seq("SELECT graft_word_shingles(array('a b c'), 2)",
+        "SELECT graft_drop_repeated_lines(array('x'))").foreach { q =>
+      intercept[org.apache.spark.sql.AnalysisException](s.sql(q).collect())
+    }
+  }
+
   test("salted aggregation equals direct aggregation on skewed data") {
     val s = spark
     import s.implicits._

@@ -46,10 +46,8 @@ class SimHashFusedSpec extends SparkSpec {
     // interpreted path too (no codegen): literal folding via eval
     cases.foreach { t =>
       Seq(false, true).foreach { portable =>
-        val fused = SimHashFromText(
-          org.apache.spark.sql.catalyst.expressions.Literal(
-            org.apache.spark.unsafe.types.UTF8String.fromString(t)), portable)
-          .eval(null)
+        val fused = org.apache.spark.sql.graft.ColumnBridge.expression(
+          TextExprs.simhashText(KernelCall.param(t)._1, portable)).eval(null)
         val toks = t.toLowerCase.split("\\s+").filter(_.nonEmpty)
         val expected =
           if (toks.isEmpty) null

@@ -90,11 +90,11 @@ class CorpusStatsSpec extends SparkSpec {
     assert(got("g1") == ((25L, 26.0, 45.2, true, true)))
   }
 
-  private def tfidfOf(persist: Boolean) = {
+  private def tfidfOf() = {
     val s = spark
     import s.implicits._
     val docs = Seq((1L, "x y Y"), (2L, "y  z")).toDF("doc_id", "text")
-    CorpusStats.tfidf(docs, "doc_id", "text", persistTf = persist)
+    CorpusStats.tfidf(docs, "doc_id", "text")
       .collect()
       .map(r => (r.getLong(0), r.getString(1)) -> ((r.getLong(2), r.getDouble(3))))
       .toMap
@@ -194,13 +194,9 @@ class CorpusStatsSpec extends SparkSpec {
     // N=2; df: x 1, y 2, z 1; idf(x)=idf(z)=ln(3/2)+1, idf(y)=ln(1)+1=1
     val w = BigDecimal(math.log(1.5) + 1).setScale(4,
       BigDecimal.RoundingMode.HALF_UP).toDouble
-    for (persist <- Seq(false, true)) {
-      val got = tfidfOf(persist)
-      assert(got == Map(
-        (1L, "x") -> ((1L, w)), (1L, "y") -> ((2L, 2.0)),
-        (2L, "y") -> ((1L, 1.0)), (2L, "z") -> ((1L, w))),
-        s"persistTf=$persist")
-    }
+    assert(tfidfOf() == Map(
+      (1L, "x") -> ((1L, w)), (1L, "y") -> ((2L, 2.0)),
+      (2L, "y") -> ((1L, 1.0)), (2L, "z") -> ((1L, w))))
   }
 
   test("bigramLogProb matches hand-computed MLE transition probabilities") {
@@ -210,16 +206,12 @@ class CorpusStatsSpec extends SparkSpec {
     val docs = Seq((1L, "a b a b"), (2L, "a c")).toDF("doc_id", "text")
     def r4(x: Double) = BigDecimal(x).setScale(4,
       BigDecimal.RoundingMode.HALF_UP).toDouble
-    for (persist <- Seq(false, true)) {
-      val got = CorpusStats.bigramLogProb(docs, "doc_id", "text",
-          persistBigrams = persist)
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
-        .toMap
-      // d1: [ln(2/3), ln(1/2), ln(2/3)] mean; d2: [ln(1/3)]
-      val d1 = r4((2 * math.log(2.0 / 3.0) + math.log(0.5)) / 3.0)
-      assert(got == Map(1L -> ((3L, d1)), 2L -> ((1L, r4(math.log(1.0 / 3.0))))),
-        s"persistBigrams=$persist")
-    }
+    val got = CorpusStats.bigramLogProb(docs, "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
+      .toMap
+    // d1: [ln(2/3), ln(1/2), ln(2/3)] mean; d2: [ln(1/3)]
+    val d1 = r4((2 * math.log(2.0 / 3.0) + math.log(0.5)) / 3.0)
+    assert(got == Map(1L -> ((3L, d1)), 2L -> ((1L, r4(math.log(1.0 / 3.0))))))
   }
 
   test("bigramLogProb drops docs with fewer than two tokens") {

@@ -474,7 +474,7 @@ class IncrementalDedupSpec extends SparkSpec {
     }
   }
 
-  test("extend* verifies the delta-ids-disjoint contract by default") {
+  test("idx.extend refuses overlapping delta ids by default") {
     // a duplicate-id fold-in silently double-counts in every later
     // probe; all four extenders must fail loudly instead, and the
     // documented conf must opt a caller with upstream guarantees out

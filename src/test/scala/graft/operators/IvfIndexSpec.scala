@@ -98,7 +98,7 @@ class IvfIndexSpec extends SparkSpec {
     }
   }
 
-  test("extendIvfPqIndex fold-in: probe parity with scratch build, dup ids throw") {
+  test("IvfPqIndex.extend: probe parity with a scratch build, dup ids throw") {
     val s = spark
     val emb = Tables.embeddings(s, sf())
     val cents = emb.where(col("vec_id") < 10)
@@ -150,7 +150,7 @@ class IvfIndexSpec extends SparkSpec {
     }
   }
 
-  test("extendIvfIndex fold-in equals a from-scratch build at the same centroids") {
+  test("IvfIndex.extend equals a from-scratch build at the same centroids") {
     val s = spark
     val emb = Tables.embeddings(s, sf())
     val cents = emb.where(col("vec_id") < 10)

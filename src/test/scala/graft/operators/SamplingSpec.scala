@@ -548,7 +548,7 @@ class SamplingSpec extends SparkSpec {
       s"row_number<=k not planner-limited:\n$plan")
   }
 
-  test("shards: deterministic, append-stable, balanced; writer certifies") {
+  test("shards: stable, balanced; manifest totals exact and order-invariant") {
     val s = spark
     import s.implicits._
     val df = (0L until 400L).map(i => (i, 10L + i % 7)).toDF("doc_id", "n")

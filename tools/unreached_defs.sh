@@ -1,5 +1,6 @@
 #!/usr/bin/env bash
-# Report the public top-level defs of graft/{operators,functions,streaming}
+# Report the public top-level defs of graft/{operators,functions,streaming,
+# expressions,windows,engine,util}
 # that nothing in src/main refers to: for each `  def name` (two-space
 # indent, no modifier) of a public object, class or trait there, count
 # the code lines of src/main that mention `name` as a word, leaving out
@@ -16,7 +17,7 @@ main=src/main/scala
 # every code line of src/main as file:line:text, comment lines dropped
 code=$(grep -rn --include='*.scala' '' "$main" \
   | grep -v '^[^:]*:[0-9]*:[[:space:]]*\(//\|\*\|/\*\)')
-for f in "$main"/graft/{operators,functions,streaming}/*.scala; do
+for f in "$main"/graft/{operators,functions,streaming,expressions,windows,engine,util}/*.scala; do
   awk '/^[a-z]/ && / *(object|class|trait) [A-Za-z]/ {
          owner = $0
          sub(/.*(object|class|trait) /, "", owner)
