@@ -102,7 +102,7 @@ object GraftExtensions {
   private def litLong(e: Expression, what: String): Long = lit(e, what).toLong
 
   private def lit(e: Expression, what: String): String = e match {
-    case Literal(v, _) => v.toString
+    case Literal(v, _) if v != null => v.toString
     case other => throw new IllegalArgumentException(
       s"$what must be a literal, got $other")
   }

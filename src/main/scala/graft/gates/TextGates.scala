@@ -95,6 +95,20 @@ object TextGates {
       "x -> x <> '')"
   }
 
+  /** The q_bpe_encode / q_bpe_encode_large oracle: per-doc piece totals
+    * under [[bpeGateMerges]], each distinct word's pieces weighted by
+    * its per-doc occurrence count. */
+  private val bpeEncodeOracleSql: String =
+    s"""WITH $tokCte,
+       |wc AS (SELECT doc_id, w, count(*)::BIGINT AS c
+       |       FROM (SELECT doc_id, unnest(tk) AS w FROM t)
+       |       GROUP BY doc_id, w),
+       |wp AS (SELECT w, len($bpeApplySql)::BIGINT AS np
+       |       FROM (SELECT DISTINCT w FROM wc))
+       |SELECT doc_id AS doc, sum(c * np)::BIGINT AS n_pieces
+       |FROM wc JOIN wp USING (w)
+       |GROUP BY doc_id ORDER BY doc""".stripMargin
+
   /** The DoReMi gates' corpus: documents plus a deterministically
     * TRANSLATED 'synth' domain (vowels → digits over docs with id <
     * 150, re-keyed +500000) — the fixture corpus is homogeneous
@@ -1925,37 +1939,26 @@ object TextGates {
       graft.operators.Subword.bpeEncode(docs(s, d), "doc_id", "text",
           bpeGateMerges)
         .orderBy("doc"),
-      s"""WITH $tokCte,
-         |wc AS (SELECT doc_id, w, count(*)::BIGINT AS c
-         |       FROM (SELECT doc_id, unnest(tk) AS w FROM t)
-         |       GROUP BY doc_id, w),
-         |wp AS (SELECT w, len($bpeApplySql)::BIGINT AS np
-         |       FROM (SELECT DISTINCT w FROM wc))
-         |SELECT doc_id AS doc, sum(c * np)::BIGINT AS n_pieces
-         |FROM wc JOIN wp USING (w)
-         |GROUP BY doc_id ORDER BY doc""".stripMargin),
+      bpeEncodeOracleSql),
 
-    // the SAME contract through the unbounded-rule-count apply path
-    // (ranked mapPartitions walk instead of the 64-rule codegen fold —
-    // the path a trained 32k-rule vocabulary runs): same rules, same
-    // oracle, so the two implementations are pinned to each other AND
-    // to DuckDB
-    Gate("q_bpe_encode_large", (s, d) =>
-      graft.operators.Subword.bpeEncodeLarge(docs(s, d), "doc_id", "text",
-          bpeGateMerges)
-        .orderBy("doc"),
-      // same replay as q_bpe_encode — the large-path gate applies the
-      // same training-consistent rule list, for which ranked apply ==
-      // sequential rank-order fold (see Subword.applyMergesRanked)
-      s"""WITH $tokCte,
-         |wc AS (SELECT doc_id, w, count(*)::BIGINT AS c
-         |       FROM (SELECT doc_id, unnest(tk) AS w FROM t)
-         |       GROUP BY doc_id, w),
-         |wp AS (SELECT w, len($bpeApplySql)::BIGINT AS np
-         |       FROM (SELECT DISTINCT w FROM wc))
-         |SELECT doc_id AS doc, sum(c * np)::BIGINT AS n_pieces
-         |FROM wc JOIN wp USING (w)
-         |GROUP BY doc_id ORDER BY doc""".stripMargin),
+    // HF BPE tokenizer.json interchange gated through APPLIED
+    // segmentation (the q_unigram_vocab_io pattern): the merge list
+    // travels export -> import -> re-export (byte-equality required
+    // in-gate) and the IMPORTED rules drive bpeEncode — any rule the
+    // JSON layer drops, reorders or corrupts changes a segmentation and
+    // breaks the q_bpe_encode oracle
+    Gate("q_bpe_encode_large", (s, d) => {
+      val pieces = bpeGateMerges.map { case (l, r) => l + r }
+      val json = graft.operators.VocabIO.toHfBpeJson(pieces, bpeGateMerges)
+      val (vocab, imported) = graft.operators.VocabIO.fromHfBpeJson(json)
+      require(vocab == pieces && imported == bpeGateMerges &&
+        graft.operators.VocabIO.toHfBpeJson(vocab, imported) == json,
+        "BPE tokenizer.json round-trip drifted")
+      graft.operators.Subword.bpeEncode(docs(s, d), "doc_id", "text",
+          imported)
+        .orderBy("doc")
+    },
+      bpeEncodeOracleSql),
 
     // the tokenizer's OUTPUT artifact: every document as its sequence
     // of frequency-ranked vocabulary ids, pieces in document order.

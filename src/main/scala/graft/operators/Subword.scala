@@ -1,65 +1,48 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 
-/** Subword (WordPiece-inference-style) tokenization against an explicit
-  * vocabulary: greedy longest-match from the left; a position no vocab
-  * piece covers degrades to a single-char `<unk>` advance (progress is
-  * guaranteed, so tokenization is total and deterministic).
+/** Subword tokenization: three tokenizer families, each a per-word
+  * segmenter, and the trainers that learn their vocabularies.
   *
-  * This is the INFERENCE half of a real subword tokenizer — the apply
-  * path a pipeline runs over 100 TB once a vocabulary exists. The vocab
-  * is an explicit argument (trained elsewhere or standardized); greedy
-  * longest-match is exactly reproducible by any engine, and the DuckDB
-  * oracle replays it with a recursive CTE over the same vocabulary.
+  *  - Greedy longest-match against an explicit vocabulary
+  *    (WordPiece-inference style, [[tokenizeWord]]): a position no
+  *    vocab piece covers degrades to a single-char `<unk>` advance, so
+  *    tokenization is total and deterministic. [[topNgramPieces]]
+  *    mines candidate vocabularies.
+  *  - BPE by a rank-ordered merge list ([[applyMergesRanked]]); the
+  *    rules are what [[trainBpeMerges]] learns.
+  *  - Unigram-LM Viterbi segmentation over a scored vocabulary
+  *    ([[viterbiWord]]); the vocabulary is what [[trainUnigram]]
+  *    learns, whose soft E-step segments with [[softWordCounts]].
   *
-  * Scale shape — the Zipf trick: tokenization runs once per DISTINCT
-  * word, never per occurrence. The corpus shuffles once into (doc,
-  * word, count) triples (map-side combine collapses repeats); the
+  * Scale shape — the Zipf trick: segmentation runs once per DISTINCT
+  * word, never per occurrence. The corpus shuffles once into `(w, c)`
+  * ([[corpusWords]]) or `(doc, w, c)` ([[docWords]]) counts (map-side
+  * combine collapses repeats). One walk ([[walk]]) segments the
   * distinct-word frame — vocabulary-sized, orders of magnitude smaller
-  * than the corpus — is what the per-word scan walks; piece counts then
-  * join back and aggregate by doc. Document bodies never cross a
-  * shuffle, and per-word work is amortized over every occurrence.
+  * than the corpus — with the operator's segmenter; per-doc totals,
+  * piece frequencies, id encodings and the unigram E-steps all join
+  * its output back by word. Document bodies never cross a shuffle, and
+  * per-word work is amortized over every occurrence.
   *
-  * The reference engine has no tokenizer surface; this extends the
-  * LLM-pipeline layer like [[CorpusStats]]. */
+  * The DuckDB oracles replay each family over the same vocabulary or
+  * rules (recursive CTEs for greedy and Viterbi, nested `replace` for
+  * BPE). The reference engine has no tokenizer surface; this extends
+  * the LLM-pipeline layer like [[CorpusStats]]. */
 object Subword {
 
   /** The unk marker emitted for an uncovered single character. */
   val Unk = "<unk>"
 
-  /** One word as an array of CODE POINT strings — the initial BPE
-    * segmentation shared by every local walk in this file. NOT
-    * `word.split("")`: Java's split("") separates at UTF-16 code-unit
-    * boundaries, so an astral character (emoji — a surrogate pair)
-    * becomes TWO lone-surrogate symbols, silently diverging from
-    * Spark SQL's `split(w, '')` and DuckDB's `string_split(w, '')`,
-    * both of which are code-point based (caught by the round-14
-    * unicode fixture sweep). */
-  private[graft] def charSeg(word: String): Array[String] = {
-    val n = word.codePointCount(0, word.length)
-    val out = new Array[String](n)
-    var i = 0
-    var off = 0
-    while (i < n) {
-      val cc = Character.charCount(word.codePointAt(off))
-      out(i) = word.substring(off, off + cc)
-      i += 1
-      off += cc
-    }
-    out
-  }
-
-  /** Greedy longest-match pieces of one word. Pure function — the spec
-    * pins hand-computed vectors and the distributed paths call this.
-    * Positions and piece lengths count CODE POINTS (an astral char is
-    * one character, one unk), and candidate substrings sit on code
-    * point boundaries — the same character model as the DuckDB oracle
-    * and Spark's own string functions. */
-  def tokenizeWord(word: String, vocab: Set[String],
-                   maxPieceLen: Int): List[String] = {
-    // offs(i) = UTF-16 offset of the i-th code point; offs(ncp) = end
+  /** UTF-16 offsets of a word's code points: `offs(i)` starts the i-th
+    * code point and the last entry is the word's length. Every
+    * segmenter counts positions and piece lengths in CODE POINTS (an
+    * astral character is one character, one unk), and candidate
+    * substrings sit on code point boundaries — the character model of
+    * Spark's and DuckDB's string functions. */
+  private def cpOffsets(word: String): Array[Int] = {
     val offs = new Array[Int](word.codePointCount(0, word.length) + 1)
     var ci = 0
     var off = 0
@@ -69,78 +52,173 @@ object Subword {
       off += Character.charCount(word.codePointAt(off))
     }
     offs(ci) = word.length
-    val ncp = ci
-    val out = List.newBuilder[String]
-    var p = 0
-    while (p < ncp) {
-      var l = math.min(maxPieceLen, ncp - p)
-      var found: String = null
-      var flen = 0
-      while (l >= 1 && found == null) {
-        val cand = word.substring(offs(p), offs(p + l))
-        if (vocab.contains(cand)) { found = cand; flen = l }
-        l -= 1
-      }
-      if (found != null) { out += found; p += flen }
-      else { out += Unk; p += 1 }
-    }
-    out.result()
+    offs
   }
 
-  /** Per-word piece/unk counts for every distinct word of the corpus:
-    * `(w, np, nu)`. The mapPartitions walk builds the vocab set once
-    * per partition; the distinct-word frame it walks is tiny relative
-    * to the corpus by Zipf. */
-  private def wordPieces(wc: DataFrame, vocab: Seq[String]): DataFrame = {
-    require(vocab.nonEmpty, "subword vocab must not be empty")
-    require(vocab.forall(_.nonEmpty), "vocab pieces must be non-empty")
-    val spark = wc.sparkSession
+  /** One word as an array of CODE POINT strings — the initial BPE
+    * segmentation shared by every local walk in this file. NOT
+    * `word.split("")`: Java's split("") separates at UTF-16 code-unit
+    * boundaries, so an astral character (emoji — a surrogate pair)
+    * becomes TWO lone-surrogate symbols, silently diverging from
+    * Spark SQL's `split(w, '')` and DuckDB's `string_split(w, '')`,
+    * both of which are code-point based. */
+  private[graft] def charSeg(word: String): Array[String] = {
+    val offs = cpOffsets(word)
+    Array.tabulate(offs.length - 1)(i => word.substring(offs(i), offs(i + 1)))
+  }
+
+  /** One word's segmentation: its pieces in word order, how many of
+    * them are [[Unk]] (the segmenter's own count) and the path score
+    * (0 where the family has none). `wt` weighs each piece in the
+    * piece frequencies: 1 for every hard segmentation; the soft E-step
+    * emits each piece once, weighted by its expected count in
+    * micro-occurrences. Not `private`: the walk's generated serializer
+    * calls its accessors, which Janino cannot resolve on a private
+    * class. */
+  private[graft] final case class Seg(w: String, ps: Array[String],
+                                      wt: Array[Long], nu: Long,
+                                      sc: Double)
+
+  private def hardSeg(w: String, ps: Array[String], nu: Long,
+                      sc: Double): Seg =
+    Seg(w, ps, Array.fill(ps.length)(1L), nu, sc)
+
+  /** A per-word segmenter, opened once per partition of the walk:
+    * opening builds the lookup state (vocab set, score map, rank map)
+    * that the returned function segments every word of the partition
+    * with. */
+  private type Segmenter = () => String => Seg
+
+  /** The segmentation walk: every distinct word of `words`' `w` column,
+    * segmented once. Output `(w, ps, wt, nu, sc)`, one row per
+    * distinct word (see [[Seg]]). */
+  private def walk(words: DataFrame, open: Segmenter): DataFrame = {
+    val spark = words.sparkSession
     import spark.implicits._
-    val maxLen = vocab.map(p => p.codePointCount(0, p.length)).max
-    val vocabSeq = vocab // stable closure capture
-    wc.select(col("w")).distinct().as[String].mapPartitions { it =>
-      val vs = vocabSeq.toSet
-      it.map { w =>
-        val p = tokenizeWord(w, vs, maxLen)
-        (w, p.length.toLong, p.count(_ == Unk).toLong)
-      }
-    }.toDF("w", "np", "nu")
+    words.select(col("w")).distinct().as[String].mapPartitions { it =>
+      val seg = open()
+      it.map(seg)
+    }.toDF()
   }
 
-  /** (doc, word, count) triples — the one corpus-sized shuffle. */
-  private def wordCounts(docs: DataFrame, idCol: String,
-                         textCol: String): DataFrame =
+  /** The corpus word frame `(w, c)`: every distinct token of `textCol`
+    * and its occurrence count. */
+  private[graft] def corpusWords(docs: DataFrame,
+                                 textCol: String): DataFrame =
+    docs.select(explode(
+        graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("c"))
+
+  /** The per-doc word frame `(doc, w, c)` — the one corpus-sized
+    * shuffle of the per-doc operators. */
+  private def docWords(docs: DataFrame, idCol: String,
+                       textCol: String): DataFrame =
     docs.select(col(idCol).as("doc"),
         explode(graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
       .groupBy("doc", "w").agg(count(lit(1)).as("c"))
 
+  /** Per-doc word counts joined to their words' segmentations, grouped
+    * by doc over `(c, np, nu, sc)` — what the per-doc totals sum. */
+  private def perDoc(docs: DataFrame, idCol: String, textCol: String,
+                     open: Segmenter): RelationalGroupedDataset = {
+    val dwc = docWords(docs, idCol, textCol)
+    dwc.join(walk(dwc, open).select(col("w"),
+        size(col("ps")).as("np"), col("nu"), col("sc")), "w")
+      .groupBy("doc")
+  }
+
+  private def nPieces = sum(col("c") * col("np")).as("n_pieces")
+  private def nUnk = sum(col("c") * col("nu")).as("n_unk")
+
+  /** Corpus piece frequencies `(piece, n)` under a segmenter: every
+    * piece weighted by its word's occurrence count (and its own weight,
+    * see [[Seg]]); unks collapse into the `<unk>` row. */
+  private def frequencies(wc: DataFrame, open: Segmenter): DataFrame =
+    wc.join(walk(wc, open), "w")
+      .select(col("c"), inline(arrays_zip(col("ps"), col("wt"))))
+      .groupBy(col("ps").as("piece")).agg(sum(col("c") * col("wt")).as("n"))
+
+  // ----------------------------------------------------------------
+  // Greedy longest-match (WordPiece-inference style)
+  // ----------------------------------------------------------------
+
+  /** Greedy longest-match pieces of one word, and how many of them are
+    * [[Unk]]. Pure function — the spec pins hand-computed vectors. */
+  def tokenizeWord(word: String, vocab: Set[String],
+                   maxPieceLen: Int): (List[String], Long) = {
+    val offs = cpOffsets(word)
+    val ncp = offs.length - 1
+    val out = List.newBuilder[String]
+    var nu = 0L
+    var p = 0
+    while (p < ncp) {
+      var l = math.min(maxPieceLen, ncp - p)
+      var found: String = null
+      while (l >= 1 && found == null) {
+        val cand = word.substring(offs(p), offs(p + l))
+        if (vocab.contains(cand)) found = cand else l -= 1
+      }
+      if (found != null) { out += found; p += l }
+      else { out += Unk; nu += 1; p += 1 }
+    }
+    (out.result(), nu)
+  }
+
+  private def greedy(vocab: Seq[String]): Segmenter = {
+    require(vocab.nonEmpty, "subword vocab must not be empty")
+    require(vocab.forall(_.nonEmpty), "vocab pieces must be non-empty")
+    val maxLen = vocab.map(p => p.codePointCount(0, p.length)).max
+    () => {
+      val vs = vocab.toSet
+      w => {
+        val (ps, nu) = tokenizeWord(w, vs, maxLen)
+        hardSeg(w, ps.toArray, nu, 0.0)
+      }
+    }
+  }
+
   /** Per-document piece totals: `(doc, n_pieces, n_unk)` — the token
     * accounting a budget-packed training shard is built from. */
   def pieceCounts(docs: DataFrame, idCol: String, textCol: String,
-                  vocab: Seq[String]): DataFrame = {
-    val wc = wordCounts(docs, idCol, textCol)
-    wc.join(wordPieces(wc, vocab), "w")
-      .groupBy("doc")
-      .agg(sum(col("c") * col("np")).as("n_pieces"),
-        sum(col("c") * col("nu")).as("n_unk"))
-  }
+                  vocab: Seq[String]): DataFrame =
+    perDoc(docs, idCol, textCol, greedy(vocab)).agg(nPieces, nUnk)
 
-  /** Candidate-vocabulary mining — the TRAINING half of the tokenizer:
-    * the top-`k` character n-grams (lengths `minN..maxN`) by
-    * occurrence-weighted frequency, rank ties broken by piece. This is
-    * the candidate-scoring pass a BPE/WordPiece trainer iterates; one
-    * pass of it is already a usable frequency-derived vocabulary for
-    * [[pieceCounts]] (plus whatever single-char floor the caller adds).
+  /** Corpus-wide piece frequencies: `(piece, n)`, every unk collapsed
+    * into the `<unk>` row — the distribution a vocab curator audits
+    * (and the gate that proves PIECE IDENTITY across engines, not just
+    * counts). */
+  def pieceFrequencies(docs: DataFrame, textCol: String,
+                       vocab: Seq[String]): DataFrame =
+    frequencies(corpusWords(docs, textCol), greedy(vocab))
+
+  /** The top `k` character n-grams (lengths `minN..maxN`) of a `(w, c)`
+    * frame by occurrence-weighted count, ties by piece: `(piece,
+    * n_occ)`. All codegen'd `explode(sequence)` + `substring`; the
+    * top-k is an `orderBy.limit` (TakeOrderedAndProject — a bounded
+    * per-partition heap, no full sort). */
+  private def topNgrams(wc: DataFrame, minN: Int, maxN: Int,
+                        k: Int): DataFrame =
+    wc.withColumn("n", explode(sequence(lit(minN), lit(maxN))))
+      .where(length(col("w")) >= col("n"))
+      .withColumn("s", explode(sequence(lit(0), length(col("w")) - col("n"))))
+      .select(expr("substring(w, s + 1, n)").as("piece"), col("c"))
+      .groupBy("piece").agg(sum(col("c")).as("n_occ"))
+      .orderBy(col("n_occ").desc, col("piece").asc)
+      .limit(k)
+
+  /** Candidate-vocabulary mining — the TRAINING half of the greedy
+    * tokenizer: the top-`k` character n-grams (lengths `minN..maxN`)
+    * by occurrence-weighted frequency, rank ties broken by piece. This
+    * is the candidate-scoring pass a BPE/WordPiece trainer iterates;
+    * one pass of it is already a usable frequency-derived vocabulary
+    * for [[pieceCounts]] (plus whatever single-char floor the caller
+    * adds).
     *
-    * Scale shape: the same Zipf amortization as the apply path — char
-    * n-grams are generated from the DISTINCT-word frame (weighted by
-    * occurrence counts), entirely in codegen'd `explode(sequence)` +
-    * `substring` (no typed walk), and the candidate aggregate shuffles
-    * (piece, count) pairs whose cardinality is bounded by distinct
-    * words × piece lengths, never the corpus. The global top-k is an
-    * `orderBy.limit` (TakeOrderedAndProject — a bounded per-partition
-    * heap, no full sort); the rank column is windowed over the k
-    * survivors only.
+    * Scale shape: n-grams are generated from the DISTINCT-word frame
+    * (weighted by occurrence counts), and the candidate aggregate
+    * shuffles (piece, count) pairs whose cardinality is bounded by
+    * distinct words × piece lengths, never the corpus. The rank column
+    * is windowed over the k survivors only.
     *
     * Output: `(piece, n_occ, rk)`, rk 1-based dense. */
   def topNgramPieces(docs: DataFrame, textCol: String, minN: Int,
@@ -148,94 +226,64 @@ object Subword {
     require(minN >= 1 && maxN >= minN,
       s"need 1 <= minN <= maxN, got $minN..$maxN")
     require(k > 0, s"k must be positive, got $k")
-    val wcw = docs
-      .select(explode(
-        graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-    val top = wcw
-      .withColumn("n", explode(sequence(lit(minN), lit(maxN))))
-      .where(length(col("w")) >= col("n"))
-      .withColumn("s", explode(sequence(lit(0), length(col("w")) - col("n"))))
-      .select(expr("substring(w, s + 1, n)").as("piece"), col("c"))
-      .groupBy("piece").agg(sum(col("c")).as("n_occ"))
-      .orderBy(col("n_occ").desc, col("piece").asc)
-      .limit(k)
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("n_occ").desc, col("piece").asc)
-    top.withColumn("rk", row_number().over(w))
+    topNgrams(corpusWords(docs, textCol), minN, maxN, k)
+      .withColumn("rk", row_number().over(w))
   }
 
-  /** BPE merge training (Sennrich et al., ACL '16) — the TRAINING half
-    * proper: learn `numMerges` merge rules from the corpus. Rounds
-    * count adjacent symbol pairs over the DISTINCT-word frame
-    * (occurrence-weighted — the same Zipf amortization as
-    * [[pieceCounts]]: pair statistics per distinct word, multiplied by
-    * its count, never a per-occurrence walk), pick the most frequent
-    * pair (ties by (lhs, rhs) — binary string order, so any engine
-    * agrees), and apply it to every word as a left-to-right
-    * non-overlapping merge.
+  // ----------------------------------------------------------------
+  // BPE merge training
+  // ----------------------------------------------------------------
+
+  /** Cap on the driver-local merge loop's WORKING SET (JVM-estimate
+    * bytes, see the estimate in [[trainBpeMerges]]): the frame is
+    * Zipf-small — even a 100 TB corpus has a distinct-word frame in
+    * the tens of millions, and real BPE trainers run the merge loop
+    * over exactly this frame in one process. 2 GiB admits frames
+    * around 60M chars / 15M words, priced at what the loop actually
+    * allocates, so a near-cap frame does not risk a multi-GB
+    * driver-heap surprise. */
+  private val LocalFrameBytes: Long = 2048L << 20
+
+  /** BPE merge training (Sennrich et al., ACL '16) — learn `numMerges`
+    * merge rules from the corpus. Rounds count adjacent symbol pairs
+    * over the DISTINCT-word frame (occurrence-weighted: pair
+    * statistics per distinct word, multiplied by its count, never a
+    * per-occurrence walk), pick the most frequent pair (ties by (lhs,
+    * rhs) — binary string order, so any engine agrees), and apply it
+    * to every word as a left-to-right non-overlapping merge.
     *
-    * Spark shape: ONE corpus-sized shuffle builds the word frame —
-    * then, because that frame is Zipf-small, it normally COLLECTS
-    * under `localBytesCap` and the entire merge loop runs driver-local
-    * with incrementally-maintained pair counts (the standard in-memory
-    * BPE-trainer shape: a 32k-merge vocab is one Spark job plus one
-    * local loop, not 32k jobs). A frame above the cap falls back to
-    * the EXACT batched distributed trainer
+    * Spark shape: ONE corpus-sized shuffle builds the word frame, and
+    * its measured size picks the training shape. Because the frame is
+    * Zipf-small it normally COLLECTS and the entire merge loop runs
+    * driver-local with incrementally-maintained pair counts
+    * ([[trainBpeMergesLocal]] — the standard in-memory BPE-trainer
+    * shape: a 32k-merge vocab is one Spark job plus one local loop,
+    * not 32k jobs). A frame whose working set would pass 2 GiB falls
+    * back to the EXACT batched distributed trainer
     * ([[trainBpeMergesDistributed]]) — uncapped merge count, many
     * merges per round where the statistics prove it safe, one merge
-    * per round in the worst case. The two paths produce identical
-    * rule lists by construction (spec-pinned on adversarial corpora:
-    * overlapping runs, cascading merges, count ties, shared-symbol
-    * candidates — plus a randomized cross-check).
+    * per round in the worst case. The two produce identical rule lists
+    * by construction (spec-pinned on adversarial corpora: overlapping
+    * runs, cascading merges, count ties, shared-symbol candidates —
+    * plus a randomized cross-check).
     *
-    * Against a trained vocabulary (chars + merged pieces),
-    * [[pieceCounts]]/[[pieceFrequencies]] are the apply path. No
-    * end-of-word marker is modeled — merges never cross word
-    * boundaries here, which is the within-word BPE variant; the marker
-    * is one column away if a caller wants it.
+    * [[bpeEncode]] is the apply path. No end-of-word marker is modeled
+    * — merges never cross word boundaries here, which is the
+    * within-word BPE variant; the marker is one column away if a
+    * caller wants it.
     *
     * Returns `(rk, lhs, rhs, merged, pair_count)` — rank-ordered merge
     * rules; fewer than `numMerges` rows iff the corpus runs out of
     * pairs (every word fully merged). */
-  /** Left-to-right non-overlapping application of one merge rule to a
-    * symbol array — a codegen fold, no UDF. Shared by training and
-    * [[bpeEncode]] so both sides merge identically. */
-  private def applyMerge(syms: org.apache.spark.sql.Column, l: String,
-                         r: String): org.apache.spark.sql.Column =
-    aggregate(syms, array().cast("array<string>"),
-      (acc, x) => when(size(acc) > 0 &&
-          element_at(acc, -1) === lit(l) && x === lit(r),
-        concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
-        .otherwise(concat(acc, array(x))))
-
-  /** Default cap on the driver-local merge loop's WORKING SET
-    * (JVM-estimate bytes, see the estimate in [[trainBpeMerges]]): the
-    * frame is Zipf-small — even a 100 TB corpus has a distinct-word
-    * frame in the tens of millions, and real BPE trainers run the
-    * merge loop over exactly this frame in one process. 2 GiB here
-    * admits frames around 60M chars / 15M words — roughly the same
-    * corpora the old 256 MiB cap admitted when its estimate modeled
-    * only the collected tuples (2 B/char), but now priced at what the
-    * loop actually allocates, so a near-cap frame no longer risks a
-    * multi-GB driver-heap surprise. */
-  val DefaultLocalFrameBytes: Long = 2048L << 20
-
   def trainBpeMerges(docs: DataFrame, textCol: String,
-                     numMerges: Int,
-                     localBytesCap: Long = DefaultLocalFrameBytes)
-      : DataFrame = {
+                     numMerges: Int): DataFrame = {
     require(numMerges >= 1, s"numMerges must be positive, got $numMerges")
     val spark = docs.sparkSession
     import spark.implicits._
-    val wc = docs
-      .select(explode(
-        graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-      .persist()
+    val wc = corpusWords(docs, textCol).persist()
     try {
-      // the one corpus-sized pass; the word frame it leaves behind is
-      // Zipf-small, and its measured size decides the training shape
       val st = wc.agg(count(lit(1)).as("nw"),
         coalesce(sum(length(col("w"))), lit(0L)).as("nc")).collect().head
       val (nWords, nChars) = (st.getLong(0), st.getLong(1))
@@ -246,21 +294,11 @@ object Subword {
       // interned (one instance per distinct piece), so they don't scale
       // with nChars.
       val estBytes = 32L * nChars + 128L * nWords
-      if (estBytes <= localBytesCap) {
-        // standard BPE-trainer shape: ONE Spark job collects the word
-        // frame, then the whole merge loop runs driver-local with
-        // incrementally-maintained pair counts — numMerges in the
-        // thousands is a local loop, not numMerges Spark jobs
+      if (estBytes <= LocalFrameBytes)
         trainBpeMergesLocal(wc.as[(String, Long)].collect(), numMerges)
           .toDF("rk", "lhs", "rhs", "merged", "pair_count")
           .withColumn("rk", col("rk").cast("long"))
-      } else {
-        // distributed fallback for a word frame that genuinely cannot
-        // sit on the driver: EXACT batched rounds (see
-        // [[trainBpeMergesDistributed]]) — uncapped; the worst case
-        // degrades to one merge per round, never to a wrong rule list
-        trainBpeMergesDistributed(wc, numMerges)
-      }
+      else trainBpeMergesDistributed(wc, numMerges)
     } finally { wc.unpersist(); () }
   }
 
@@ -307,9 +345,8 @@ object Subword {
     * rounds-deep lineage. Triple statistics above `tripleCap` rows
     * (pathological frames) make the round fall back to the forced
     * single merge. */
-  private def trainBpeMergesDistributed(wc: DataFrame, numMerges: Int,
-                                        candK: Int = 4096,
-                                        tripleCap: Int = 4000000)
+  private[graft] def trainBpeMergesDistributed(wc: DataFrame,
+      numMerges: Int, candK: Int = 4096, tripleCap: Int = 4000000)
       : DataFrame = {
     val spark = wc.sparkSession
     import spark.implicits._
@@ -510,7 +547,7 @@ object Subword {
     * even off-ASCII (Java's `compareTo` is UTF-16 code-unit order,
     * which DISAGREES with UTF-8 byte order for supplementary-plane vs
     * U+E000..U+FFFF text). */
-  private def utf8Compare(a: String, b: String): Int = {
+  private[graft] def utf8Compare(a: String, b: String): Int = {
     val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     var i = 0
@@ -533,12 +570,10 @@ object Subword {
     false
   }
 
-  /** Left-to-right non-overlapping merge of one word — the local twin
-    * of [[applyMerge]]'s codegen fold (the fold compares the
-    * ACCUMULATED last symbol, but a merged symbol `l+r` can never
-    * itself equal `l` since `r` is non-empty, so scanning the original
-    * array with an i+2 skip is the same function). */
-  private def mergeWord(s: Array[String], l: String, r: String,
+  /** Left-to-right non-overlapping merge of one rule into one word:
+    * every `l r` adjacency, scanned from the left with an i+2 skip
+    * after each merge, becomes `l+r`. */
+  private[graft] def mergeWord(s: Array[String], l: String, r: String,
                         lr: String): Array[String] = {
     val out = Array.newBuilder[String]
     out.sizeHint(s.length)
@@ -655,137 +690,95 @@ object Subword {
     out.result()
   }
 
-  /** BPE ENCODE — inference with an explicit rank-ordered merge list
-    * (what [[trainBpeMerges]] learns): each word starts as characters
-    * and every merge applies in rank order, so `encode(train(corpus))`
-    * is the end-to-end tokenizer. This is the true BPE apply (merge
-    * ranks decide segmentation), distinct from [[pieceCounts]]'s greedy
-    * longest-match (WordPiece-style) — the two disagree on words like
-    * "lowering" whenever a high-rank merge blocks a longer vocab hit.
-    *
-    * Scale shape: the Zipf amortization again — all merges fold over
-    * the DISTINCT-word frame in ONE projection (the k rules compose
-    * into a single codegen expression; k is vocab-build-sized, bounded
-    * at 64 here to keep one Janino unit), then per-word piece counts
-    * join back by word. Document bodies never cross a shuffle.
-    *
-    * Returns per-document `(doc, n_pieces)`. */
-  def bpeEncode(docs: DataFrame, idCol: String, textCol: String,
-                merges: Seq[(String, String)]): DataFrame = {
-    require(merges.nonEmpty && merges.size <= 64,
-      s"merge list must have 1..64 rules, got ${merges.size}")
-    require(merges.forall { case (l, r) => l.nonEmpty && r.nonEmpty },
-      "merge rule sides must be non-empty")
-    val wc = wordCounts(docs, idCol, textCol)
-    val folded = merges.foldLeft(split(col("w"), "")) {
-      case (syms, (l, r)) => applyMerge(syms, l, r)
-    }
-    val pieces = wc.select(col("w")).distinct()
-      .select(col("w"), size(folded).as("np"))
-    wc.join(pieces, "w")
-      .groupBy(col("doc"))
-      .agg(sum(col("c") * col("np")).as("n_pieces"))
-  }
+  // ----------------------------------------------------------------
+  // BPE apply
+  // ----------------------------------------------------------------
 
-  /** Ranked BPE apply for one word — the standard encoder loop:
-    * repeatedly merge the LOWEST-RANK pair present (all its
-    * occurrences, left-to-right) until none of the rules match. For a
-    * TRAINING-CONSISTENT rule list (every rule's sides exist before
-    * the rule — what [[trainBpeMerges]] produces by construction) this
-    * equals applying the rules sequentially in rank order, i.e.
-    * [[applyMerge]]'s fold: a pair of rank r can only be created by
-    * rules of rank < r, so by the time the sequential pass reaches
-    * rule r every instance it will ever see exists. Per-word cost is
-    * O(len · merges-applied), INDEPENDENT of the rule-list size —
-    * which is what makes a 32k-rule vocabulary encodable. */
+  /** Ranked BPE apply for one word — the standard encoder loop, exact
+    * for ANY rule list: starting from the word's characters, repeatedly
+    * take the lowest rank ABOVE the last rank applied among the pairs
+    * present, and merge all of that pair's occurrences left-to-right
+    * ([[mergeWord]]), until no rule above the last one matches. This
+    * is the sequential rank-order fold (every rule applied once, in
+    * list order) with its no-op steps skipped: the word does not change
+    * between two applied rules, so every rule ranked between them finds
+    * its pair absent, exactly as the fold would. `ranks` keeps every
+    * rank of a repeated pair ([[rankMap]]), so a rule listed twice can
+    * fire twice, and a rule listed before the rule that creates one of
+    * its sides never fires on that side. Per-word cost is O(len ·
+    * merges applied), independent of the rule-list size — which is
+    * what makes a 32k-rule vocabulary encodable. */
   private[graft] def applyMergesRanked(
-      word: String, rank: java.util.HashMap[(String, String), Int])
+      word: String, ranks: java.util.HashMap[(String, String), Array[Int]])
       : Array[String] = {
     var syms = charSeg(word)
+    var last = -1
     var go = syms.length > 1
     while (go) {
       var best = Int.MaxValue
       var bi = -1
       var i = 0
       while (i < syms.length - 1) {
-        val r = rank.getOrDefault((syms(i), syms(i + 1)), Int.MaxValue)
-        if (r < best) { best = r; bi = i }
+        val rs = ranks.get((syms(i), syms(i + 1)))
+        if (rs != null) {
+          var k = 0
+          while (k < rs.length && rs(k) <= last) k += 1
+          if (k < rs.length && rs(k) < best) { best = rs(k); bi = i }
+        }
         i += 1
       }
       if (bi < 0) go = false
       else {
         val (l, r) = (syms(bi), syms(bi + 1))
         syms = mergeWord(syms, l, r, l + r)
+        last = best
         go = syms.length > 1
       }
     }
     syms
   }
 
-  private def rankMap(merges: Seq[(String, String)])
-      : java.util.HashMap[(String, String), Int] = {
-    val m = new java.util.HashMap[(String, String), Int](merges.size * 2)
-    merges.zipWithIndex.foreach { case (p, i) =>
-      if (!m.containsKey(p)) m.put(p, i)
-      ()
+  /** Every pair's ranks (0-based list positions), ascending. */
+  private[graft] def rankMap(merges: Seq[(String, String)])
+      : java.util.HashMap[(String, String), Array[Int]] = {
+    val m = new java.util.HashMap[(String, String), Array[Int]]()
+    merges.zipWithIndex.groupMap(_._1)(_._2).foreach { case (p, rs) =>
+      m.put(p, rs.toArray)
     }
     m
   }
 
-  /** BPE ENCODE at UNBOUNDED rule-list size — the apply path for a
-    * vocabulary [[trainBpeMerges]] actually produces (thousands of
-    * rules; [[bpeEncode]]'s codegen fold composes the rules into one
-    * Janino unit and is capped at 64). Same contract and output as
-    * [[bpeEncode]]; requires a training-consistent rule list (see
-    * [[applyMergesRanked]] — rule lists from [[trainBpeMerges]] always
-    * are, and the spec pins fold == ranked equality on them).
-    *
-    * Scale shape: the Zipf amortization — the ranked-apply walk runs
-    * once per DISTINCT word in `mapPartitions` (the rank map builds
-    * once per partition), piece counts join back by word, and document
-    * bodies never cross a shuffle. Rule-list size affects only the
-    * broadcast closure (~MBs for 32k rules), not per-word cost. */
-  def bpeEncodeLarge(docs: DataFrame, idCol: String, textCol: String,
-                     merges: Seq[(String, String)]): DataFrame = {
+  private def bpe(merges: Seq[(String, String)]): Segmenter = {
     require(merges.nonEmpty, "merge list must not be empty")
     require(merges.forall { case (l, r) => l.nonEmpty && r.nonEmpty },
       "merge rule sides must be non-empty")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val wc = wordCounts(docs, idCol, textCol)
-    val mergesSeq = merges
-    val pieces = wc.select(col("w")).distinct().as[String]
-      .mapPartitions { it =>
-        val rank = rankMap(mergesSeq)
-        it.map(w => (w, applyMergesRanked(w, rank).length.toLong))
-      }.toDF("w", "np")
-    wc.join(pieces, "w")
-      .groupBy(col("doc"))
-      .agg(sum(col("c") * col("np")).as("n_pieces"))
+    () => {
+      val ranks = rankMap(merges)
+      w => hardSeg(w, applyMergesRanked(w, ranks), 0L, 0.0)
+    }
   }
 
-  /** [[bpePieceFrequencies]] at unbounded rule-list size — the
-    * piece-identity witness for [[bpeEncodeLarge]]. */
-  def bpePieceFrequenciesLarge(docs: DataFrame, textCol: String,
-                               merges: Seq[(String, String)]): DataFrame = {
-    require(merges.nonEmpty, "merge list must not be empty")
-    require(merges.forall { case (l, r) => l.nonEmpty && r.nonEmpty },
-      "merge rule sides must be non-empty")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val wcw = docs
-      .select(explode(
-        graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-    val mergesSeq = merges
-    val pieces = wcw.select(col("w")).distinct().as[String]
-      .mapPartitions { it =>
-        val rank = rankMap(mergesSeq)
-        it.flatMap(w => applyMergesRanked(w, rank).map(p => (w, p)))
-      }.toDF("w", "piece")
-    wcw.join(pieces, "w")
-      .groupBy("piece").agg(sum(col("c")).as("n"))
-  }
+  /** BPE ENCODE — inference with an explicit rank-ordered merge list
+    * (what [[trainBpeMerges]] learns): each word starts as characters
+    * and every merge applies in rank order ([[applyMergesRanked]]), so
+    * `encode(train(corpus))` is the end-to-end tokenizer. This is the
+    * true BPE apply (merge ranks decide segmentation), distinct from
+    * [[pieceCounts]]'s greedy longest-match (WordPiece-style) — the
+    * two disagree on words like "lowering" whenever a high-rank merge
+    * blocks a longer vocab hit. Any number of rules: the rule list only
+    * sizes the per-partition rank map, not the per-word cost.
+    *
+    * Returns per-document `(doc, n_pieces)`. */
+  def bpeEncode(docs: DataFrame, idCol: String, textCol: String,
+                merges: Seq[(String, String)]): DataFrame =
+    perDoc(docs, idCol, textCol, bpe(merges)).agg(nPieces)
+
+  /** Corpus piece frequencies under BPE-by-merges: `(piece, n)` — the
+    * piece-IDENTITY witness for [[bpeEncode]]'s segmentation (counts
+    * alone cannot distinguish two segmentations of equal length). */
+  def bpePieceFrequencies(docs: DataFrame, textCol: String,
+                          merges: Seq[(String, String)]): DataFrame =
+    frequencies(corpusWords(docs, textCol), bpe(merges))
 
   /** Frequency-ranked vocabulary table for a merge list:
     * `(piece, id)` with 0-based ids by corpus frequency descending
@@ -796,7 +789,7 @@ object Subword {
                  merges: Seq[(String, String)]): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("n").desc, col("piece").asc)
-    bpePieceFrequenciesLarge(docs, textCol, merges)
+    bpePieceFrequencies(docs, textCol, merges)
       .withColumn("id", (row_number().over(w) - 1).cast("long"))
       .select(col("piece"), col("id"))
   }
@@ -807,22 +800,19 @@ object Subword {
     * `encode(train(corpus))`: what actually lands in a training shard
     * next to [[graft.operators.Sampling.packSequences]]' offsets.
     *
-    * Scale shape: the Zipf amortization one more time — segmentation
-    * runs per DISTINCT word ([[applyMergesRanked]]); the corpus-sized
-    * streams carry (doc, positions, piece-id) INTEGERS only, the
-    * vocab joins broadcast (vocab-sized by construction), and the
-    * per-doc array reassembles with one collect_list + array_sort
-    * (output == document length — inherent to emitting the encoding,
-    * the [[graft.windows.AggFunctions]] accumulate contract). Pieces
-    * absent from `vocab` (cross-corpus encoding) drop with the inner
-    * join — pass a vocab containing every single char to make
-    * encoding total. */
+    * Scale shape: segmentation runs per DISTINCT word (the walk); the
+    * corpus-sized streams carry (doc, positions, piece-id) INTEGERS
+    * only, the vocab joins broadcast (vocab-sized by construction),
+    * and the per-doc array reassembles with one collect_list +
+    * array_sort (output == document length — inherent to emitting the
+    * encoding, the [[graft.windows.AggFunctions]] accumulate
+    * contract). Pieces absent from `vocab` (cross-corpus encoding)
+    * drop with the inner join — pass a vocab containing every single
+    * char to make encoding total. */
   def encodeToIds(docs: DataFrame, idCol: String, textCol: String,
                   merges: Seq[(String, String)],
                   vocab: DataFrame): DataFrame = {
-    require(merges.nonEmpty, "merge list must not be empty")
-    val spark = docs.sparkSession
-    import spark.implicits._
+    val seg = bpe(merges)
     // spread: the tokenize + posexplode fan-out feeds the corpus-sized
     // word join's shuffle write — on the 2-task bench scan that map
     // side serialized (q_encode_ids task 6.4 s / wall 2.4 s under the
@@ -831,15 +821,9 @@ object Subword {
       .select(col(idCol).as("doc"),
         posexplode(graft.functions.TextFunctions.tokens(col(textCol)))
           .as(Seq("tp", "w")))
-    val mergesSeq = merges
-    val words = toks.select(col("w")).distinct().as[String]
-      .mapPartitions { it =>
-        val rank = rankMap(mergesSeq)
-        it.map(w => (w, applyMergesRanked(w, rank).toSeq))
-      }.toDF("w", "__pieces")
-    toks.join(words, "w")
+    toks.join(walk(toks, seg).select(col("w"), col("ps")), "w")
       .select(col("doc"), col("tp"),
-        posexplode(col("__pieces")).as(Seq("pp", "piece")))
+        posexplode(col("ps")).as(Seq("pp", "piece")))
       .join(broadcast(vocab), "piece")
       .groupBy(col("doc"))
       .agg(transform(
@@ -873,49 +857,6 @@ object Subword {
       .agg(concat_ws("", transform(
         array_sort(collect_list(struct(col("pos"), col("piece")))),
         s => s.getField("piece"))).as("decoded"))
-
-  /** Corpus piece frequencies under BPE-by-merges: `(piece, n)` — the
-    * piece-IDENTITY witness for [[bpeEncode]]'s segmentation (counts
-    * alone cannot distinguish two segmentations of equal length). */
-  def bpePieceFrequencies(docs: DataFrame, textCol: String,
-                          merges: Seq[(String, String)]): DataFrame = {
-    require(merges.nonEmpty && merges.size <= 64,
-      s"merge list must have 1..64 rules, got ${merges.size}")
-    val wcw = docs
-      .select(explode(
-        graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-    val folded = merges.foldLeft(split(col("w"), "")) {
-      case (syms, (l, r)) => applyMerge(syms, l, r)
-    }
-    wcw.select(explode(folded).as("piece"), col("c"))
-      .groupBy("piece").agg(sum(col("c")).as("n"))
-  }
-
-  /** Corpus-wide piece frequencies: `(piece, n)`, every unk collapsed
-    * into the `<unk>` row — the distribution a vocab curator audits
-    * (and the gate that proves PIECE IDENTITY across engines, not just
-    * counts). */
-  def pieceFrequencies(docs: DataFrame, textCol: String,
-                       vocab: Seq[String]): DataFrame = {
-    require(vocab.nonEmpty, "subword vocab must not be empty")
-    require(vocab.forall(_.nonEmpty), "vocab pieces must be non-empty")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val wcw = docs
-      .select(explode(
-        graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-    val maxLen = vocab.map(p => p.codePointCount(0, p.length)).max
-    val vocabSeq = vocab
-    val pieces = wcw.select(col("w")).distinct().as[String]
-      .mapPartitions { it =>
-        val vs = vocabSeq.toSet
-        it.flatMap(w => tokenizeWord(w, vs, maxLen).map(p => (w, p)))
-      }.toDF("w", "piece")
-    wcw.join(pieces, "w")
-      .groupBy("piece").agg(sum(col("c")).as("n"))
-  }
 
   // ----------------------------------------------------------------
   // Unigram-LM (SentencePiece-style) Viterbi segmentation
@@ -955,17 +896,8 @@ object Subword {
   def viterbiWord(word: String, vocab: Map[String, Double],
                   maxPieceLen: Int,
                   unkScore: Double): (List[String], Double, Long) = {
-    // offs(i) = UTF-16 offset of the i-th code point; offs(ncp) = end
-    val offs = new Array[Int](word.codePointCount(0, word.length) + 1)
-    var ci = 0
-    var off = 0
-    while (off < word.length) {
-      offs(ci) = off
-      ci += 1
-      off += Character.charCount(word.codePointAt(off))
-    }
-    offs(ci) = word.length
-    val ncp = ci
+    val offs = cpOffsets(word)
+    val ncp = offs.length - 1
     // best-per-position states; ps held REVERSED for O(1) extension
     val sc = new Array[Double](ncp + 1)
     val np = new Array[Long](ncp + 1)
@@ -1036,29 +968,6 @@ object Subword {
         val c = utf8Compare(x, y)
         if (c != 0) c else psCompare(xs, ys)
     }
-
-  /** Per-word Viterbi results for every distinct corpus word:
-    * `(w, np, nu, sc, ps)` — the same Zipf amortization as
-    * [[pieceCounts]]: the DP runs once per DISTINCT word on the
-    * vocabulary-sized frame, never per occurrence. */
-  private def unigramWordPieces(wc: DataFrame,
-                                vocab: Map[String, Double],
-                                unkScore: Double): DataFrame = {
-    require(vocab.nonEmpty, "unigram vocab must not be empty")
-    require(vocab.keys.forall(_.nonEmpty), "vocab pieces must be non-empty")
-    val spark = wc.sparkSession
-    import spark.implicits._
-    val maxLen = vocab.keys.map(p => p.codePointCount(0, p.length)).max
-    val vocabSeq = vocab.toSeq // stable closure capture
-    wc.select(col("w")).distinct().as[String].mapPartitions { it =>
-      val vm = vocabSeq.toMap
-      it.map { w =>
-        val (pieces, score, nUnk) = viterbiWord(w, vm, maxLen, unkScore)
-        (w, pieces.length.toLong, nUnk, score, pieces)
-      }
-    }.toDF("w", "np", "nu", "sc", "ps")
-  }
-
   /** Soft (forward-backward) expected piece counts for ONE word, in
     * integer MICRO-occurrences — the E-step of the soft-EM trainer
     * (Kudo '18 §3.2 trains with full EM; [[viterbiWord]] is the hard
@@ -1087,16 +996,8 @@ object Subword {
                                     vocab: Map[String, Double],
                                     maxPieceLen: Int, unkScore: Double)
       : Seq[(String, Long)] = {
-    val offs = new Array[Int](word.codePointCount(0, word.length) + 1)
-    var ci = 0
-    var off = 0
-    while (off < word.length) {
-      offs(ci) = off
-      ci += 1
-      off += Character.charCount(word.codePointAt(off))
-    }
-    offs(ci) = word.length
-    val ncp = ci
+    val offs = cpOffsets(word)
+    val ncp = offs.length - 1
     if (ncp == 0) return Nil
     val Absent = -1e9
     // fixed-order LSE over the maxPieceLen arm slots (l ascending)
@@ -1162,45 +1063,37 @@ object Subword {
     out.toSeq
   }
 
-  /** Per-word soft expected counts for every distinct corpus word:
-    * `(w, piece, micro)` — the soft twin of [[unigramWordPieces]],
-    * same Zipf amortization (the forward-backward runs once per
-    * DISTINCT word, never per occurrence, and never leaves the
-    * executors). */
-  private def unigramWordSoftCounts(wc: DataFrame,
-                                    vocab: Map[String, Double],
-                                    unkScore: Double): DataFrame = {
+  /** The unigram segmenter: the Viterbi path ([[viterbiWord]]), or with
+    * `soft` each piece's expected count over all paths
+    * ([[softWordCounts]]). */
+  private def unigram(vocab: Map[String, Double], unkScore: Double,
+                      soft: Boolean): Segmenter = {
     require(vocab.nonEmpty, "unigram vocab must not be empty")
-    val spark = wc.sparkSession
-    import spark.implicits._
+    require(vocab.keys.forall(_.nonEmpty), "vocab pieces must be non-empty")
     val maxLen = vocab.keys.map(p => p.codePointCount(0, p.length)).max
-    val vocabSeq = vocab.toSeq
-    wc.select(col("w")).distinct().as[String].mapPartitions { it =>
-      val vm = vocabSeq.toMap
-      it.flatMap { w =>
-        softWordCounts(w, vm, maxLen, unkScore)
-          .map { case (piece, micro) => (w, piece, micro) }
+    val scores = vocab.toSeq // a plain Seq: stable closure capture
+    () => {
+      val vm = scores.toMap
+      if (soft) w => {
+        val (ps, micro) = softWordCounts(w, vm, maxLen, unkScore).unzip
+        Seg(w, ps.toArray, micro.toArray, 0L, 0.0)
+      } else w => {
+        val (ps, sc, nu) = viterbiWord(w, vm, maxLen, unkScore)
+        hardSeg(w, ps.toArray, nu, sc)
       }
-    }.toDF("w", "piece", "micro")
+    }
   }
 
   /** Per-document unigram-segmentation totals:
     * `(doc, n_pieces, n_unk, score)` with the score rounded to 4
     * decimals (sums of per-word doubles; the per-word values are
     * bit-identical across engines, the cross-word sum order is not —
-    * the suite's avg_lp rounding convention). One corpus-sized
-    * shuffle into (doc, word, count); everything else is
-    * vocabulary-sized. */
+    * the suite's avg_lp rounding convention). */
   def unigramCounts(docs: DataFrame, idCol: String, textCol: String,
                     vocab: Map[String, Double],
-                    unkScore: Double): DataFrame = {
-    val wc = wordCounts(docs, idCol, textCol)
-    wc.join(unigramWordPieces(wc, vocab, unkScore), "w")
-      .groupBy("doc")
-      .agg(sum(col("c") * col("np")).as("n_pieces"),
-        sum(col("c") * col("nu")).as("n_unk"),
-        round(sum(col("c") * col("sc")), 4).as("score"))
-  }
+                    unkScore: Double): DataFrame =
+    perDoc(docs, idCol, textCol, unigram(vocab, unkScore, soft = false))
+      .agg(nPieces, nUnk, round(sum(col("c") * col("sc")), 4).as("score"))
 
   /** Corpus-wide unigram piece frequencies: `(piece, n)`, unks
     * collapsed into the `<unk>` row — pins PIECE IDENTITY of the
@@ -1208,15 +1101,9 @@ object Subword {
     * agreeing distribution cannot). */
   def unigramPieceFrequencies(docs: DataFrame, textCol: String,
                               vocab: Map[String, Double],
-                              unkScore: Double): DataFrame = {
-    val wc = docs
-      .select(explode(
-          graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-    wc.join(unigramWordPieces(wc, vocab, unkScore), "w")
-      .select(col("c"), explode(col("ps")).as("piece"))
-      .groupBy("piece").agg(sum(col("c")).as("n"))
-  }
+                              unkScore: Double): DataFrame =
+    frequencies(corpusWords(docs, textCol),
+      unigram(vocab, unkScore, soft = false))
 
   // ----------------------------------------------------------------
   // Unigram-LM TRAINING (SentencePiece-style hard EM)
@@ -1253,10 +1140,9 @@ object Subword {
     }.toMap
   }
 
-  /** The shared EM loop of [[trainUnigram]] / [[trainUnigramLocal]] —
-    * everything after seed mining, parameterized by the E-step so the
-    * distributed and driver-local trainers are the SAME algorithm by
-    * construction. Per round: E (Viterbi counts under the current
+  /** The EM loop of [[trainUnigram]] — everything after seed mining,
+    * parameterized by the E-step and its count unit (the specs run it
+    * with a driver-local E-step as the trainer's reference twin). Per round: E (Viterbi counts under the current
     * scores), M ([[unigramMStep]]); between rounds, multi-char pieces
     * are PRUNED by likelihood loss — the corpus log-likelihood drop if
     * the piece were replaced by its single-character decomposition,
@@ -1268,11 +1154,9 @@ object Subword {
     * `targetMulti`. After a prune the surviving pieces keep their
     * M-step scores unrenormalized (the next E renormalizes implicitly;
     * the oracle replays the same convention). */
-  private def unigramEmCore(seeds: Seq[(String, Long)],
-                            singles: Seq[(String, Long)], targetMulti: Int,
-                            emRounds: Int,
-                            eStep: Map[String, Double] => Map[String, Long],
-                            unit: Long = 1L)
+  private[graft] def unigramEmCore(seeds: Seq[(String, Long)],
+      singles: Seq[(String, Long)], targetMulti: Int, emRounds: Int,
+      eStep: Map[String, Double] => Map[String, Long], unit: Long = 1L)
       : Seq[(String, Double)] = {
     val singleSet = singles.map(_._1).toSet
     var vocab: Seq[String] = (singles ++ seeds).map(_._1)
@@ -1333,14 +1217,14 @@ object Subword {
     *     [[unigramEmCore]]).
     *
     * Scale shape: the corpus shuffles ONCE into the distinct-word
-    * frame, which is cached and re-walked by each E-step (per-word DP
-    * via the same `mapPartitions` family as [[unigramCounts]] — a
-    * vocabulary-sized closure broadcast, piece counts the only
-    * shuffle, bounded by |vocab| per partition after partial
-    * aggregation). Driver state is VOCABULARY-sized by construction
-    * (seedSize + corpus alphabet + per-round count maps) — no corpus
-    * cap needed, unlike the BPE trainer's word-frame collect: the
-    * per-word DP never leaves the executors.
+    * frame, which is cached and re-walked by each E-step (the same
+    * segmentation walk as [[unigramPieceFrequencies]] — a
+    * vocabulary-sized closure, piece counts the only shuffle, bounded
+    * by |vocab| per partition after partial aggregation). Driver state
+    * is VOCABULARY-sized by construction (seedSize + corpus alphabet +
+    * per-round count maps) — no corpus cap needed, unlike the BPE
+    * trainer's word-frame collect: the per-word DP never leaves the
+    * executors.
     *
     * Scores are [[round6]]-quantized at every M-step — the
     * cross-engine determinism contract (two engines' ln() differ by
@@ -1359,100 +1243,24 @@ object Subword {
     require(seedSize >= targetMulti && targetMulti >= 1,
       s"need seedSize >= targetMulti >= 1, got $seedSize/$targetMulti")
     require(emRounds >= 1, s"emRounds must be positive, got $emRounds")
-    val wcw = docs
-      .select(explode(
-        graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
+    val wc = corpusWords(docs, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val seeds = wcw
-        .withColumn("n", explode(sequence(lit(minN), lit(maxN))))
-        .where(length(col("w")) >= col("n"))
-        .withColumn("s",
-          explode(sequence(lit(0), length(col("w")) - col("n"))))
-        .select(expr("substring(w, s + 1, n)").as("piece"), col("c"))
-        .groupBy("piece").agg(sum(col("c")).as("n_occ"))
-        .orderBy(col("n_occ").desc, col("piece").asc)
-        .limit(seedSize)
+      val seeds = topNgrams(wc, minN, maxN, seedSize)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      val singles = wcw
+      val singles = wc
         .withColumn("s", explode(sequence(lit(0), length(col("w")) - 1)))
         .select(expr("substring(w, s + 1, 1)").as("piece"), col("c"))
         .groupBy("piece").agg(sum(col("c")).as("n_occ"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
         .sortWith((a, b) => utf8Compare(a._1, b._1) < 0)
+      // soft counts are micro-occurrences, weighted by word occurrence
+      // — exact integer aggregation in any order
       def eStep(scores: Map[String, Double]): Map[String, Long] =
-        wcw.join(unigramWordPieces(wcw, scores, unkScore), "w")
-          .select(col("c"), explode(col("ps")).as("piece"))
-          .groupBy("piece").agg(sum(col("c")).as("n"))
+        frequencies(wc, unigram(scores, unkScore, soft))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      // soft E-step: micro-occurrence expected counts, weighted by
-      // word occurrence — exact integer aggregation in any order
-      def eStepSoft(scores: Map[String, Double]): Map[String, Long] =
-        wcw.join(unigramWordSoftCounts(wcw, scores, unkScore), "w")
-          .select(col("piece"), (col("c") * col("micro")).as("cm"))
-          .groupBy("piece").agg(sum(col("cm")).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (soft)
-        unigramEmCore(seeds, singles, targetMulti, emRounds, eStepSoft,
-          unit = 1000000L)
-      else unigramEmCore(seeds, singles, targetMulti, emRounds, eStep)
-    } finally { wcw.unpersist(); () }
-  }
-
-  /** Driver-local twin of [[trainUnigram]] over an explicit
-    * `(distinct word, count)` frame — the local==distributed pin (the
-    * [[trainBpeMergesLocal]] discipline): both call [[unigramEmCore]],
-    * differing only in where the E-step's per-word DP runs, and
-    * SubwordSpec asserts identical vocabularies on adversarial
-    * corpora. */
-  private[graft] def trainUnigramLocal(words: Seq[(String, Long)],
-      seedSize: Int, targetMulti: Int, minN: Int, maxN: Int,
-      emRounds: Int, unkScore: Double,
-      soft: Boolean = false): Seq[(String, Double)] = {
-    val cnt = collection.mutable.HashMap.empty[String, Long]
-    val scnt = collection.mutable.HashMap.empty[String, Long]
-    for ((w, c) <- words) {
-      val cs = charSeg(w)
-      var i = 0
-      while (i < cs.length) {
-        scnt.updateWith(cs(i))(o => Some(o.getOrElse(0L) + c))
-        var n = minN
-        while (n <= maxN && i + n <= cs.length) {
-          val p = cs.slice(i, i + n).mkString
-          cnt.updateWith(p)(o => Some(o.getOrElse(0L) + c))
-          n += 1
-        }
-        i += 1
-      }
-    }
-    val seeds = cnt.toSeq.sortWith((a, b) => a._2 > b._2 ||
-        (a._2 == b._2 && utf8Compare(a._1, b._1) < 0))
-      .take(seedSize)
-    val singles = scnt.toSeq
-      .sortWith((a, b) => utf8Compare(a._1, b._1) < 0)
-    def eStep(scores: Map[String, Double]): Map[String, Long] = {
-      val maxLen = scores.keys.map(p => p.codePointCount(0, p.length)).max
-      val m = collection.mutable.HashMap.empty[String, Long]
-      for ((w, c) <- words) {
-        val (ps, _, _) = viterbiWord(w, scores, maxLen, unkScore)
-        ps.foreach(p => m.updateWith(p)(o => Some(o.getOrElse(0L) + c)))
-      }
-      m.toMap
-    }
-    def eStepSoft(scores: Map[String, Double]): Map[String, Long] = {
-      val maxLen = scores.keys.map(p => p.codePointCount(0, p.length)).max
-      val m = collection.mutable.HashMap.empty[String, Long]
-      for ((w, c) <- words)
-        softWordCounts(w, scores, maxLen, unkScore).foreach {
-          case (p, micro) =>
-            m.updateWith(p)(o => Some(o.getOrElse(0L) + c * micro))
-        }
-      m.toMap
-    }
-    if (soft)
-      unigramEmCore(seeds, singles, targetMulti, emRounds, eStepSoft,
-        unit = 1000000L)
-    else unigramEmCore(seeds, singles, targetMulti, emRounds, eStep)
+      unigramEmCore(seeds, singles, targetMulti, emRounds, eStep,
+        unit = if (soft) 1000000L else 1L)
+    } finally { wc.unpersist(); () }
   }
 }

@@ -173,12 +173,4 @@ class CsvReplay(path: String, header: Boolean = true, emitDelayMs: Long = 100,
     * accessor since graft rows are always map-shaped, captured at
     * load/reload time so it always matches the rows being replayed. */
   def columnNames: Vector[String] = dataset._1
-
-  /** Synchronous full emission (the tester's allDataAtOnce without the
-    * thread — deterministic for batch-style tests). */
-  def emitAllNow(): Unit = {
-    val now = System.currentTimeMillis()
-    if (rows.nonEmpty)
-      stream.add(rows.map(r => toJson(r, seq.getAndIncrement(), now)))
-  }
 }

@@ -769,7 +769,7 @@ object ScaleProbe {
         // independent per word — wall must track the distinct-word
         // frame (Zipf-sublinear), like subword inference
         "bpe_encode_large" -> (() =>
-          operators.Subword.bpeEncodeLarge(docs, "doc_id", "text",
+          operators.Subword.bpeEncode(docs, "doc_id", "text",
             Seq(("e", "r"), ("i", "n"), ("o", "w"), ("t", "h"),
               ("th", "e"), ("er", "s"), ("a", "n"), ("an", "d"))).count()),
         // the documented W1/W2 hot-key boundary, priced: ONE mega-hot

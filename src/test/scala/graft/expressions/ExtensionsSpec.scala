@@ -109,6 +109,18 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("a NULL literal parameter is refused as not a literal") {
+    val s = spark
+    GraftExtensions.register(s)
+    // an int parameter and a long one (the band-key seed)
+    Seq("SELECT graft_word_shingles('a b c', NULL)",
+        "SELECT graft_band_keys(array(1.0D, 2.0D), 2, 4, 3, NULL)")
+      .foreach { q =>
+        val e = intercept[IllegalArgumentException](s.sql(q).collect())
+        assert(e.getMessage.contains("must be a literal"), e.getMessage)
+      }
+  }
+
   test("salted aggregation equals direct aggregation on skewed data") {
     val s = spark
     import s.implicits._

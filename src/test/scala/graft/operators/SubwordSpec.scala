@@ -7,7 +7,7 @@ class SubwordSpec extends SparkSpec {
   private val vocab = Seq("a", "b", "d", "e", "l", "p", "val", "wind",
     "ow", "str", "eam", "ab", "bc")
   private def tok(w: String) =
-    Subword.tokenizeWord(w, vocab.toSet, vocab.map(_.length).max)
+    Subword.tokenizeWord(w, vocab.toSet, vocab.map(_.length).max)._1
 
   test("tokenizeWord: greedy longest-match with single-char unk fallback") {
     assert(tok("window") == List("wind", "ow"))
@@ -21,6 +21,9 @@ class SubwordSpec extends SparkSpec {
     // degrades 'c', even though a+bc would cover it fully — the
     // documented wordpiece-inference semantics both engines replay
     assert(tok("abc") == List("ab", Subword.Unk))
+    // the unk count is the segmenter's own, one per degraded position
+    assert(Subword.tokenizeWord("zvalz", vocab.toSet, 4) ==
+      ((List(Subword.Unk, "val", Subword.Unk), 2L)))
   }
 
   test("tokenizeWord and charSeg are code-point based, not UTF-16") {
@@ -34,12 +37,12 @@ class SubwordSpec extends SparkSpec {
     assert(tok(rocket + rocket) == List(Subword.Unk, Subword.Unk))
     // an astral char IN vocab matches as one piece of length 1
     val v2 = Set("a", rocket)
-    assert(Subword.tokenizeWord(s"a$rocket", v2, 1) == List("a", rocket))
+    assert(Subword.tokenizeWord(s"a$rocket", v2, 1) == ((List("a", rocket), 0L)))
     // multibyte BMP chars count 1 toward maxPieceLen too
-    assert(Subword.tokenizeWord("中文", Set("中文"), 2) == List("中文"))
+    assert(Subword.tokenizeWord("中文", Set("中文"), 2) == ((List("中文"), 0L)))
     // ranked BPE apply segments code points the same way
-    val rank = new java.util.HashMap[(String, String), Int]()
-    assert(Subword.applyMergesRanked(s"a${rocket}b", rank).toList ==
+    assert(Subword.applyMergesRanked(s"a${rocket}b",
+        Subword.rankMap(Seq.empty)).toList ==
       List("a", rocket, "b"))
   }
 
@@ -239,8 +242,8 @@ class SubwordSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getString(1), r.getString(2),
           r.getString(3), r.getLong(4))).toSeq.sortBy(_._1)
       val local = rules(Subword.trainBpeMerges(docs, "text", 8))
-      val dist = rules(
-        Subword.trainBpeMerges(docs, "text", 8, localBytesCap = 0L))
+      val dist = rules(Subword.trainBpeMergesDistributed(
+        Subword.corpusWords(docs, "text"), 8))
       assert(local == dist, s"'$text':\nlocal $local\ndist  $dist")
     }
   }
@@ -265,8 +268,8 @@ class SubwordSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getString(1), r.getString(2),
           r.getString(3), r.getLong(4))).toSeq.sortBy(_._1)
       val local = rules(Subword.trainBpeMerges(docs, "text", 10))
-      val dist = rules(
-        Subword.trainBpeMerges(docs, "text", 10, localBytesCap = 0L))
+      val dist = rules(Subword.trainBpeMergesDistributed(
+        Subword.corpusWords(docs, "text"), 10))
       assert(local == dist,
         s"trial $trial '$text':\nlocal $local\ndist  $dist")
     }
@@ -290,8 +293,8 @@ class SubwordSpec extends SparkSpec {
     def rules(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getString(3), r.getLong(4))).toSeq.sortBy(_._1)
-    val dist = rules(
-      Subword.trainBpeMerges(docs, "text", 4096, localBytesCap = 0L))
+    val dist = rules(Subword.trainBpeMergesDistributed(
+      Subword.corpusWords(docs, "text"), 4096))
     assert(dist.size == 4096, s"got ${dist.size} merges")
     val local = rules(Subword.trainBpeMerges(docs, "text", 4096))
     assert(local == dist)
@@ -299,41 +302,81 @@ class SubwordSpec extends SparkSpec {
     assert(dist.head._5 == 4097L && dist.last._5 == 2L)
   }
 
-  test("bpeEncodeLarge: ranked apply equals the codegen fold on trained" +
-      " rules, and scales past the 64-rule cap") {
+  test("bpeEncode and bpePieceFrequencies equal the sequential " +
+      "rank-order fold for any rule list") {
+    val s = spark
+    import s.implicits._
+    // the reference: every rule applied once, in list order
+    def fold(w: String, merges: Seq[(String, String)]): Array[String] =
+      merges.foldLeft(Subword.charSeg(w)) { case (syms, (l, r)) =>
+        Subword.mergeWord(syms, l, r, l + r)
+      }
+    val rnd = new scala.util.Random(0xb9e0L)
+    def word() = (1 to (1 + rnd.nextInt(12)))
+      .map(_ => ('a' + rnd.nextInt(4)).toChar).mkString
+    (1 to 4).foreach { trial =>
+      val texts = Seq.fill(3)(Seq.fill(12)(word()).mkString(" "))
+      val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text")
+      val wc = texts.flatMap(_.split(" ")).groupBy(identity)
+        .map { case (w, xs) => (w, xs.length.toLong) }.toArray
+      val trained = Subword.trainBpeMergesLocal(wc, 120).map(m => (m._2, m._3))
+      assert(trained.size > 64, s"trial $trial: ${trained.size} rules")
+      // a rule moved in front of the rule that creates one of its sides
+      val k = trained.indexWhere { case (l, r) => l.length > 1 || r.length > 1 }
+      val side = if (trained(k)._1.length > 1) trained(k)._1 else trained(k)._2
+      val j = trained.indexWhere { case (l, r) => l + r == side }
+      val early = trained.take(j) ++ Seq(trained(k)) ++
+        trained.slice(j, k) ++ trained.drop(k + 1)
+      // every rule kept, a third of them listed again further down
+      val repeated = trained.zipWithIndex.flatMap { case (m, i) =>
+        if (rnd.nextInt(3) == 0) Seq(m, trained(rnd.nextInt(i + 1))) else Seq(m)
+      }
+      // rules drawn at random from the trained ones and every char pair
+      val chars = Seq("a", "b", "c", "d")
+      val pool = trained ++ (for (l <- chars; r <- chars) yield (l, r))
+      val shuffled = Seq.fill(65 + rnd.nextInt(40))(pool(rnd.nextInt(pool.size)))
+      Seq("training-consistent" -> trained.take(20),
+        "more than 64 trained" -> trained, "side before its creator" -> early,
+        "repeated" -> repeated, "random" -> shuffled).foreach {
+        case (kind, merges) =>
+          val counts = Subword.bpeEncode(docs, "doc_id", "text", merges)
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          val wantCounts = texts.zipWithIndex.map { case (t, i) =>
+            i.toLong -> t.split(" ").map(w => fold(w, merges).length.toLong).sum
+          }.toMap
+          assert(counts == wantCounts, s"trial $trial, $kind: $merges")
+          val freqs = Subword.bpePieceFrequencies(docs, "text", merges)
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          val wantFreqs = texts.flatMap(_.split(" ")).flatMap(fold(_, merges))
+            .groupBy(identity).map { case (p, ps) => p -> ps.length.toLong }
+          assert(freqs == wantFreqs, s"trial $trial, $kind: $merges")
+      }
+    }
+  }
+
+  test("bpeEncode past 64 rules: a 300-merge training run compresses " +
+      "at least as well as its 48-rule prefix") {
     val s = spark
     import s.implicits._
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
       .select($"doc_id", $"text")
-    // a REAL trained rule list (training-consistent by construction)
-    val merges = Subword.trainBpeMerges(docs, "text", 48).collect()
+    def counts(merges: Seq[(String, String)]) =
+      Subword.bpeEncode(docs, "doc_id", "text", merges).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def train(n: Int) = Subword.trainBpeMerges(docs, "text", n).collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
-    assert(merges.size == 48)
-    // piece IDENTITY equality: fold path (<= 64 rules) vs ranked path
-    def freqs(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(freqs(Subword.bpePieceFrequenciesLarge(docs, "text", merges)) ==
-      freqs(Subword.bpePieceFrequencies(docs, "text", merges)))
-    // per-doc count equality
-    def counts(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val large48 = counts(Subword.bpeEncodeLarge(docs, "doc_id", "text", merges))
-    assert(large48 == counts(Subword.bpeEncode(docs, "doc_id", "text", merges)))
-    // past the fold's cap: the fold refuses, the ranked path runs and
-    // more merges can only compress further
-    val merges300 = Subword.trainBpeMerges(docs, "text", 300).collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
+    val merges48 = train(48)
+    val merges300 = train(300)
+    assert(merges48.size == 48)
     assert(merges300.size > 64, s"corpus exhausted at ${merges300.size}")
-    intercept[IllegalArgumentException] {
-      Subword.bpeEncode(docs, "doc_id", "text", merges300)
-    }
-    val large300 = counts(
-      Subword.bpeEncodeLarge(docs, "doc_id", "text", merges300))
-    assert(large300.keySet == large48.keySet)
-    assert(large300.forall { case (d, n) => n <= large48(d) },
+    val c48 = counts(merges48)
+    val c300 = counts(merges300)
+    assert(c300.keySet == c48.keySet)
+    assert(c300.forall { case (d, n) => n <= c48(d) },
       "300 trained merges must compress at least as well as their" +
         " 48-rule prefix")
-    assert(large300.values.sum < large48.values.sum)
+    assert(c300.values.sum < c48.values.sum)
   }
 
   test("encodeToIds: ids decode back to the exact token stream, " +
@@ -364,7 +407,7 @@ class SubwordSpec extends SparkSpec {
         s"doc $doc: '$decoded' != '${toks.mkString}'")
     }
     // id assignment: rank 0 is the most frequent piece
-    val freqTop = Subword.bpePieceFrequenciesLarge(docs, "text", merges)
+    val freqTop = Subword.bpePieceFrequencies(docs, "text", merges)
       .orderBy($"n".desc, $"piece".asc)
       .collect().head.getString(0)
     assert(idToPiece(0L) == freqTop)
@@ -563,7 +606,7 @@ class SubwordSpec extends SparkSpec {
       targetMulti = 8, minN = 2, maxN = 4, emRounds = 2, unkScore = -10.0)
     val wcLocal = texts.flatMap(_.split(" ")).filter(_.nonEmpty)
       .groupBy(identity).view.mapValues(_.size.toLong).toSeq
-    val local = Subword.trainUnigramLocal(wcLocal, 20, 8, 2, 4, 2, -10.0)
+    val local = SubwordReference.trainUnigramLocal(wcLocal, 20, 8, 2, 4, 2, -10.0)
     assert(dist == local)
     // contract shape: 8 multi-char pieces + every corpus code point
     val (multi, single) = dist.partition { case (p, _) =>
@@ -630,7 +673,7 @@ class SubwordSpec extends SparkSpec {
       -10.0, soft = true)
     val wcLocal = texts2.flatMap(_.split(" ")).filter(_.nonEmpty)
       .groupBy(identity).view.mapValues(_.size.toLong).toSeq
-    val local = Subword.trainUnigramLocal(wcLocal, 10, 3, 2, 4, 2,
+    val local = SubwordReference.trainUnigramLocal(wcLocal, 10, 3, 2, 4, 2,
       -10.0, soft = true)
     assert(dist == local)
   }

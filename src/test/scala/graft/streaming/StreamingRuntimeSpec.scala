@@ -372,20 +372,34 @@ class StreamingRuntimeSpec extends SparkSpec {
     } finally { q.stop(); ingest.stop() }
   }
 
+  /** Replays an `allDataAtOnce` source through its emitter thread: the
+    * whole dataset lands as one block, then the thread stops itself. */
+  private def emitAll(replay: CsvReplay): Unit = {
+    replay.start()
+    val deadline = System.currentTimeMillis() + 10000
+    while (replay.isRunning && System.currentTimeMillis() < deadline)
+      Thread.sleep(10)
+    assert(!replay.isRunning, "all-at-once replay did not finish")
+  }
+
   test("csv replay source: auto-parse, rate limit, control API") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val csv = java.io.File.createTempFile("replay", ".csv")
     java.nio.file.Files.writeString(csv.toPath,
       "name,score\nalice,1.5\nbob,2\ncarol,notanumber\n")
     val replay = new CsvReplay(csv.getAbsolutePath, header = true,
-      emitDelayMs = 10)
+      allDataAtOnce = true)
     val schema = StructType(Seq(StructField("name", StringType),
       StructField("score", StringType)))
     val df = replay.toDF(schema)
     val q = df.writeStream.format("memory").queryName("csv_rows")
       .outputMode("append").start()
+    val paced = new CsvReplay(csv.getAbsolutePath, header = true,
+      emitDelayMs = 10)
+    val pq = paced.toDF(schema).writeStream.format("memory")
+      .queryName("csv_paced").outputMode("append").start()
     try {
-      replay.emitAllNow()
+      emitAll(replay)
       q.processAllAvailable()
       val rows = s.sql("SELECT name, score, __seq FROM csv_rows ORDER BY __seq")
         .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
@@ -397,19 +411,19 @@ class StreamingRuntimeSpec extends SparkSpec {
       assert(rows(2)._2 == "notanumber")
 
       // rate-limited threaded emission with pause/resume/stop
-      replay.start()
+      paced.start()
       Thread.sleep(50)
-      replay.pause()
-      val afterPause = { q.processAllAvailable()
-        s.sql("SELECT count(*) FROM csv_rows").collect()(0).getLong(0) }
+      paced.pause()
+      val afterPause = { pq.processAllAvailable()
+        s.sql("SELECT count(*) FROM csv_paced").collect()(0).getLong(0) }
       Thread.sleep(50)
-      q.processAllAvailable()
-      val whilePaused = s.sql("SELECT count(*) FROM csv_rows")
+      pq.processAllAvailable()
+      val whilePaused = s.sql("SELECT count(*) FROM csv_paced")
         .collect()(0).getLong(0)
       assert(whilePaused == afterPause) // paused -> nothing new
-      replay.resume(); replay.stop()
-      assert(!replay.isRunning)
-    } finally { q.stop(); FsUtil.deleteRecursively(csv.toPath) }
+      paced.resume(); paced.stop()
+      assert(!paced.isRunning)
+    } finally { q.stop(); pq.stop(); FsUtil.deleteRecursively(csv.toPath) }
   }
 
   test("csv replay drives a DSL tumbling-window pipeline (streamtester demo)") {
@@ -419,7 +433,8 @@ class StreamingRuntimeSpec extends SparkSpec {
     val csv = java.io.File.createTempFile("demo", ".csv")
     java.nio.file.Files.writeString(csv.toPath,
       "value\n1\n2\n3\n4\n5\n6\n7\n")
-    val replay = new CsvReplay(csv.getAbsolutePath, header = true)
+    val replay = new CsvReplay(csv.getAbsolutePath, header = true,
+      allDataAtOnce = true)
     val p = Dsl.parsePipeline("demo",
       """{
         |"metadata": {"input": [{"name":"value","type":"double"}],
@@ -437,7 +452,7 @@ class StreamingRuntimeSpec extends SparkSpec {
       .writeStream.format("memory").queryName("demo_windows")
       .outputMode("append").start()
     try {
-      replay.emitAllNow()
+      emitAll(replay)
       q.processAllAvailable()
       val rows = s.sql(
         "SELECT emit_seq, result FROM demo_windows ORDER BY emit_seq")
@@ -455,13 +470,14 @@ class StreamingRuntimeSpec extends SparkSpec {
     // bridge must escape them or from_json nulls the whole row
     java.nio.file.Files.writeString(csv.toPath,
       "name,score\npath\\to\\thing,1\nsay \"hi\",2\n")
-    val replay = new CsvReplay(csv.getAbsolutePath, header = true)
+    val replay = new CsvReplay(csv.getAbsolutePath, header = true,
+      allDataAtOnce = true)
     val schema = StructType(Seq(StructField("name", StringType),
       StructField("score", StringType)))
     val q = replay.toDF(schema).writeStream.format("memory")
       .queryName("csv_esc").outputMode("append").start()
     try {
-      replay.emitAllNow()
+      emitAll(replay)
       q.processAllAvailable()
       val rows = s.sql("SELECT name FROM csv_esc ORDER BY __seq")
         .collect().map(_.getString(0))
@@ -477,7 +493,8 @@ class StreamingRuntimeSpec extends SparkSpec {
     // and misaligns names.zip — the silent-corruption case)
     java.nio.file.Files.writeString(csv.toPath,
       "name,score,note\n\"hello, world\",5,\"say \"\"hi\"\"\"\nplain,,\n")
-    val replay = new CsvReplay(csv.getAbsolutePath, header = true)
+    val replay = new CsvReplay(csv.getAbsolutePath, header = true,
+      allDataAtOnce = true)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("name",
         org.apache.spark.sql.types.StringType),
@@ -488,7 +505,7 @@ class StreamingRuntimeSpec extends SparkSpec {
     val q = replay.toDF(schema).writeStream.format("memory")
       .queryName("csv_quoted").outputMode("append").start()
     try {
-      replay.emitAllNow()
+      emitAll(replay)
       q.processAllAvailable()
       val rows = s.sql("SELECT name, score, note FROM csv_quoted ORDER BY __seq")
         .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))

@@ -1,8 +1,10 @@
 #!/usr/bin/env bash
-# Report the public top-level defs of graft/{operators,functions,streaming,
+# Report the top-level defs of graft/{operators,functions,streaming,
 # expressions,windows,engine,util}
-# that nothing in src/main refers to: for each `  def name` (two-space
-# indent, no modifier) of a public object, class or trait there, count
+# that nothing in src/main refers to: for each `  def name` or
+# `  private[graft] def name` (two-space indent; a `private[graft]` def
+# that only the specs call is a test hook) of a public object, class or
+# trait there, count
 # the code lines of src/main that mention `name` as a word, leaving out
 # the def line itself and every comment line (scaladoc included). A def
 # with no such line is printed as `Owner.name  file:line`. Same-named
@@ -24,8 +26,8 @@ for f in "$main"/graft/{operators,functions,streaming,expressions,windows,engine
          sub(/[^A-Za-z0-9_].*/, "", owner)
          if ($1 ~ /^private/) owner = ""
        }
-       owner != "" && /^  def [A-Za-z0-9_]+/ {
-         name = $2; sub(/[^A-Za-z0-9_].*/, "", name)
+       owner != "" && /^  (private\[graft\] )?def [A-Za-z0-9_]+/ {
+         name = ($1 == "def") ? $2 : $3; sub(/[^A-Za-z0-9_].*/, "", name)
          print owner, name, FNR
        }' "$f" |
   while read -r owner name line; do
