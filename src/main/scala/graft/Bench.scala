@@ -73,8 +73,9 @@ object Bench {
       // timed query. 50-row in-memory inputs mean none of the timed
       // queries' data or caches are touched — this warms code paths, not
       // data. Per-family try blocks: one failing warm-up must not skip
-      // the rest. persistShingles stays at its default so the cached
-      // InMemoryRelation stages the timed queries execute are compiled.
+      // the rest. The operators cache their shingle and key tables, so
+      // the InMemoryRelation stages the timed queries execute are
+      // compiled here too.
       locally {
         import org.apache.spark.sql.functions._
         val tinyDocs = spark.range(50)

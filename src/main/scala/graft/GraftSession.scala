@@ -54,4 +54,22 @@ object GraftSession {
         spark.sparkContext.setLogLevel("WARN")
         spark
       }
+
+  /** A session on `parent`'s SparkContext and catalog with its own SQL
+    * conf: `parent`'s runtime-modifiable settings, then `overrides`.
+    * `newSession()` starts from SparkConf-time defaults, not the
+    * parent's runtime conf, so without the copy a caller's runtime
+    * settings (shuffle partitions, ANSI mode, time zone) would revert
+    * inside the scoped run; static keys are shared through the
+    * SparkContext already. Queries planned concurrently on `parent`
+    * never see the overrides. */
+  def scoped(parent: SparkSession, overrides: (String, String)*): SparkSession = {
+    val s = parent.newSession()
+    parent.conf.getAll.foreach { case (k, v) =>
+      if (!s.conf.getOption(k).contains(v) && s.conf.isModifiable(k))
+        s.conf.set(k, v)
+    }
+    overrides.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
 }

@@ -68,13 +68,8 @@ object ChannelGates {
         // ~0.6-0.9 s pure wait, ~70 s of task time for a 2-group
         // aggregation), and the scoped conf can never be observed by
         // queries planned concurrently on the caller's session
-        val scoped = s.newSession()
-        s.conf.getAll.foreach { case (k, v) =>
-          if (!scoped.conf.getOption(k).contains(v) &&
-              scoped.conf.isModifiable(k))
-            scoped.conf.set(k, v)
-        }
-        scoped.conf.set("spark.sql.shuffle.partitions", "4")
+        val scoped = graft.GraftSession.scoped(s,
+          "spark.sql.shuffle.partitions" -> "4")
         val agg = graft.streaming.Channels.subscribe("mix",
             StructType(Seq(StructField("channel", StringType),
               StructField("value", DoubleType))))(scoped)

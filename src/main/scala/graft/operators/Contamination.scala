@@ -209,24 +209,11 @@ object Contamination {
     // the sketch plan rebound there, so the caller's session conf is
     // never touched — a concurrent query planned on the original
     // session during the (eager) build cannot observe the override.
-    // newSession() starts from SparkConf-time defaults, NOT the parent's
-    // runtime SQLConf — without the copy below, a caller's runtime-set
-    // conf (shuffle partitions, ANSI mode, session timezone) would
-    // silently revert to defaults inside the bloom build. Copy every
-    // runtime-modifiable entry first, then override the two bloom caps.
-    // (Static/non-runtime keys throw on set; skip them — they are
-    // SparkConf-time and therefore already shared via the SparkContext.)
-    val scoped = benchmark.sparkSession.newSession()
-    benchmark.sparkSession.conf.getAll.foreach { case (k, v) =>
-      try scoped.conf.set(k, v)
-      catch { case _: org.apache.spark.sql.AnalysisException => () }
-    }
-    scoped.conf.set(
-      "spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
-      sizedItems.toString)
-    scoped.conf.set(
-      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
-      numBits.toString)
+    val scoped = graft.GraftSession.scoped(benchmark.sparkSession,
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" ->
+        sizedItems.toString,
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" ->
+        numBits.toString)
     val bin = ColumnBridge.inSession(scoped,
         benchShinglesRaw.select(bloomAgg.as("bf")))
       .head().getAs[Array[Byte]](0)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
@@ -116,13 +116,10 @@ case class EmbeddingIndex(name: String, path: String, dim: Int,
     IndexTable.Bucketed(vectorsTable, "vid", numBuckets))
   protected def guard: (String, String) = (vectorsTable, "vid")
   protected def slices(df: DataFrame, id: String, vec: String,
-                       append: Boolean): Seq[(String, DataFrame)] = {
-    import graft.functions.VectorFunctions._
+                       append: Boolean): Seq[(String, DataFrame)] =
     Seq(bandsTable ->
         Dedup.embBandTable(df, id, vec, dim, bitsPerBand, numBands),
-      vectorsTable -> df.select(col(id).as("vid"), asDoubles(col(vec)).as("v"))
-        .withColumn("nrm", l2Norm(col("v"))))
-  }
+      vectorsTable -> Dedup.normedVectors(df, id, vec))
 }
 
 /** Document deduplication for large-scale training-data pipelines.
@@ -199,25 +196,6 @@ object Dedup {
       .withColumn("keep", col(id) === min(col(id)).over(w))
       .select(col(id), col("fp"), col("keep"))
   }
-
-  /** Streaming exact dedup at ingest: fingerprint each document and keep
-    * the FIRST arrival per fingerprint within the watermark horizon
-    * (`dropDuplicatesWithinWatermark` — Spark's bounded-state streaming
-    * dedup). State is one row per distinct fingerprint seen inside the
-    * horizon and is EVICTED once the watermark passes, so an unbounded
-    * stream holds O(distinct docs per horizon) state, not O(stream
-    * history) — the same watermark-bounds-state contract as the windowed
-    * aggregations (SCALE.md W3/W4). Rows behind the watermark are
-    * dropped as late BEFORE dedup sees them; a non-late duplicate
-    * arriving after its original's fingerprint was evicted passes
-    * again. Horizon-scoped dedup is the deliberate trade that keeps
-    * state finite; full-history exact dedup is the batch operator
-    * ([[exact]]/[[exactGroups]]) run over the accumulated corpus. */
-  def streamingExact(stream: DataFrame, textCol: String, tsCol: String,
-                     delay: String): DataFrame =
-    stream.withColumn("fp", TextFunctions.fingerprint(col(textCol)))
-      .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark("fp")
 
   /** One row per duplicate group: fingerprint, surviving id, group size. */
   def exactGroups(df: DataFrame, id: String, text: String): DataFrame =
@@ -485,6 +463,101 @@ object Dedup {
   }
 
   // ------------------------------------------------------------------
+  // Candidate pairs: keys -> one candidate join -> one verify
+  // ------------------------------------------------------------------
+
+  /** The one candidate join of the near-duplicate pair operators:
+    * distinct `(d1, d2)` = (`a.doc`, `b.doc`) over the rows of `a` and
+    * `b` that agree on `key` and satisfy `cond` (which reads the sides
+    * as `a.` and `b.`). Every such join is corpus x corpus — both
+    * sides grow with the data — so neither may ever broadcast.
+    * Catalyst's size estimate under an explode comes from the scan
+    * BENEATH it (bytes / multiplier blind), so at mid scale an
+    * exploded key table looks broadcastable and the Spark driver
+    * builds a multi-GB HashedRelation. Both sides are pinned shuffle-hash:
+    * partition by the key, build per-partition maps. */
+  private def candidatePairs(a: DataFrame, b: DataFrame, key: String)
+                            (cond: Column): DataFrame =
+    a.hint("shuffle_hash").as("a")
+      .join(b.hint("shuffle_hash").as("b"),
+        col(s"a.$key") === col(s"b.$key") && cond)
+      .select(col("a.doc").as("d1"), col("b.doc").as("d2"))
+      .distinct()
+
+  /** The one delta probe of a persisted key index: the candidate pairs
+    * that appear when the delta joins the indexed corpus — delta keys x
+    * index keys (`iKeys`, the index's bucketed key table) ∪ the delta's
+    * own candidate pairs, `(d1, d2)` with d1 < d2 — and the lookup rows
+    * their verification reads: the index lookup table `iLookup` pruned
+    * to the candidate ids, plus the delta's own rows `dLookup`. Key
+    * frames are `(id, bkey)`, lookups `(id, ...)`, the id first.
+    *
+    * Plan shape, and why it scales: the index key table is bucketed on
+    * `bkey`, so the delta x index join shuffles ONLY the delta's keys —
+    * the hint stays on the delta side, so SHJ builds its hash map from
+    * the delta partition while the index side streams straight out of
+    * its buckets with no Exchange and no Sort. The pruning semi-join
+    * broadcasts the candidate ids (O(emitted pairs), small by the
+    * banding argument), so the bucketed lookup table never shuffles
+    * either. Both results are cached: the candidates are read four
+    * times (the id broadcast, both verify sides and the verify join)
+    * and the lookup once per verify side, and both are O(candidates) +
+    * O(delta), never corpus-sized. Caller contract: delta ids disjoint
+    * from indexed ids. */
+  private def probeIndex(dKeys: DataFrame, iKeys: DataFrame,
+                         dLookup: DataFrame,
+                         iLookup: DataFrame): (DataFrame, DataFrame) = {
+    val dk = cachedIdempotent(dKeys.toDF("doc", "bkey"))
+    val cross = iKeys.toDF("__i", "bkey")
+      .join(dk.toDF("__d", "bkey").hint("shuffle_hash"), "bkey")
+      .where(col("__i") =!= col("__d"))
+      .select(least(col("__i"), col("__d")).as("d1"),
+        greatest(col("__i"), col("__d")).as("d2"))
+    val cand = cachedIdempotent(cross
+      .union(candidatePairs(dk, dk, "bkey")(col("a.doc") < col("b.doc")))
+      .distinct())
+    val id = iLookup.columns.head
+    val ids = cand.select(col("d1").as(id))
+      .union(cand.select(col("d2").as(id))).distinct()
+    (cand, cachedIdempotent(
+      iLookup.join(broadcast(ids), Seq(id), "left_semi").union(dLookup)))
+  }
+
+  /** The one verify: join candidate pairs `(d1, d2)` to `lookup` (the
+    * id first, then the columns `score` reads) on both sides, score
+    * each pair — `score(x, y)`, where `x(c)` / `y(c)` is lookup column
+    * `c` of the d1 / d2 side — keep the pairs scoring at least
+    * `threshold` and return `(ids._1, ids._2, name)`, smaller id first,
+    * score rounded to 4. The lookups are corpus-sized (full shingle
+    * arrays, vectors): never broadcast them; shuffle on the candidate
+    * ids instead. A threshold at or below 0 is refused: every pair
+    * qualifies there, but only the pairs that share a key come back. */
+  private def verify(cand: DataFrame, lookup: DataFrame, threshold: Double,
+                     name: String, ids: (String, String) = ("d1", "d2"))
+                    (score: (String => Column, String => Column) => Column)
+      : DataFrame = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"threshold must be in (0,1], got $threshold")
+    val id +: cols = lookup.columns.toSeq
+    def side(i: Int) = lookup.select(col(id).as(s"d$i") +:
+      cols.map(c => col(c).as(s"$c$i")): _*).hint("shuffle_hash")
+    cand.join(side(1), "d1").join(side(2), "d2")
+      .withColumn(name, score(c => col(s"${c}1"), c => col(s"${c}2")))
+      .where(col(name) >= threshold)
+      .select(least(col("d1"), col("d2")).as(ids._1),
+        greatest(col("d1"), col("d2")).as(ids._2),
+        round(col(name), 4).as(name))
+  }
+
+  /** Exact Jaccard of the two sides' full shingle sets — the TRUE score
+    * every jaccard-contract operator reports, identical to the DuckDB
+    * oracle. */
+  private def jaccard(x: String => Column, y: String => Column): Column = {
+    val inter = size(array_intersect(x("sh"), y("sh"))).cast("double")
+    inter / ((size(x("sh")) + size(y("sh"))).cast("double") - inter)
+  }
+
+  // ------------------------------------------------------------------
   // N-gram Jaccard via shingle inverted-index join
   // ------------------------------------------------------------------
 
@@ -498,8 +571,40 @@ object Dedup {
     // cached partitioning just multiplies that fixed cost
     df.select(col(id).as("doc"), TextFunctions.wordShingles(col(text), n).as("sh"))
 
+  /** The rarity-ranked inverted index shared by [[jaccardPairs]] and
+    * [[containmentPairs]]: `(doc, s, rn, sz)`, one row per HASHED
+    * shingle `s` of a doc, `rn` its rank in the global rarity order
+    * (df asc, s asc), `sz` the doc's full set size. Hashed keys are
+    * 8-byte longs instead of n-gram strings: a shared shingle always
+    * hashes equal on both sides, so no candidate is ever lost, and a
+    * collision can only ADD a candidate that exact verification then
+    * discards. Shingles in more than `maxShingleDf` docs are dropped
+    * (the skew cap); a shared shingle has df >= 2 by construction, so
+    * the df filter only enforces that cap. */
+  private def rarityRanked(sh: DataFrame, maxShingleDf: Long): DataFrame = {
+    val inv = sh.select(col("doc"), size(col("sh")).as("sz"),
+      explode(transform(col("sh"), s => xxhash64(s))).as("s"))
+    val dfs = inv.groupBy("s").agg(count(lit(1)).as("df"))
+      .where(col("df") <= maxShingleDf && col("df") >= 2)
+    val byRarity = Window.partitionBy(col("doc"))
+      .orderBy(col("df").asc, col("s").asc)
+    // corpus x corpus: see candidatePairs — pin shuffle hash
+    inv.hint("shuffle_hash").join(dfs.hint("shuffle_hash"), "s")
+      .withColumn("rn", row_number().over(byRarity))
+      .select(col("doc"), col("s"), col("rn"), col("sz"))
+  }
+
+  /** Each doc's `|d| - ceil(t*|d|) + 1` rarest ranked shingles: any pair
+    * with overlap >= ceil(t*|d|) must collide inside this prefix.
+    * Round before ceil: 0.8*35 = 28.000000000000004 in doubles, and
+    * ceil'ing the epsilon would illegally shorten the prefix by one. */
+  private def rarityPrefix(ranked: DataFrame, threshold: Double): DataFrame =
+    ranked.where(col("rn") <=
+      col("sz") - ceil(round(lit(threshold) * col("sz"), 6)) + 1)
+
   /** Candidate pairs sharing at least one shingle, with exact Jaccard
-    * computed and filtered at `threshold`. Output: (d1, d2, jaccard).
+    * computed and filtered at `threshold` in (0, 1]. Output:
+    * (d1, d2, jaccard).
     *
     * Candidate generation is PREFIX-FILTERED (the AllPairs/PPJoin family,
     * Chaudhuri et al. / Xiao et al. — public literature): order each
@@ -516,59 +621,23 @@ object Dedup {
     * (a shingle present in k docs contributes k^2 candidate pairs — the
     * classic skew bomb at 100 TB). Verification still uses ALL shingles,
     * so capped shingles cost recall only for pairs whose similarity
-    * hides in ubiquitous n-grams — boilerplate by definition. */
+    * hides in ubiquitous n-grams — boilerplate by definition.
+    *
+    * The shingle table (read by candidate generation AND verification)
+    * and the prefix index (read by both sides of the self-join) are
+    * cached; the caches outlive the returned (lazy) DataFrame, so a
+    * long-lived session calls [[clearCaches]] between corpora. At true
+    * 100 TB, materialize signatures to storage once and read them
+    * bucketed instead: [[buildIndex]] + [[pairsAgainstIndex]]. */
   def jaccardPairs(df: DataFrame, id: String, text: String, n: Int,
-                   threshold: Double, maxShingleDf: Long = 1000L,
-                   persistShingles: Boolean = true): DataFrame = {
-    // The shingle table feeds candidate generation AND verification, so it
-    // is cached by default. The cache outlives the returned (lazy)
-    // DataFrame — a long-lived session issuing many dedup calls should
-    // pass persistShingles=false (recompute) or Dedup.clearCaches()
-    // between corpora. At true 100 TB neither cache-and-share nor
-    // recompute is right: materialize signatures to storage once and
-    // read them bucketed — buildIndex + minhashPairsFromIndex /
-    // pairsAgainstIndex is that path.
-    val sh0 = withShingles(df, id, text, n)
-    val sh = if (persistShingles) cachedIdempotent(sh0) else sh0
-    // Candidate generation works on HASHED shingles (8-byte keys instead
-    // of n-gram strings): a shared shingle always hashes equal on both
-    // sides, so no candidate is ever lost, and a collision can only ADD
-    // a candidate that exact verification then discards — exactness is
-    // unconditional, while the inverted index, df table, and self-join
-    // all shuffle narrow longs.
-    val inv = sh.select(col("doc"), size(col("sh")).as("sz"),
-      explode(transform(col("sh"), s => xxhash64(s))).as("s"))
-    // global document frequency; a shared shingle has df >= 2 by
-    // construction, so the df filter only enforces the skew cap
-    val dfs = inv.groupBy("s").agg(count(lit(1)).as("df"))
-      .where(col("df") <= maxShingleDf && col("df") >= 2)
-    // every join below is corpus x corpus — both sides grow with the
-    // data, so none may ever broadcast. Catalyst's size estimate under
-    // an explode comes from the scan BENEATH it (bytes / multiplier
-    // blind), so at mid scale the exploded side looks broadcastable and
-    // the driver builds a multi-GB HashedRelation. Pin the shuffle hash
-    // join: partition by the join key, build per-partition maps.
-    val invR = inv.hint("shuffle_hash").join(dfs.hint("shuffle_hash"), "s")
-    // prefix index: each doc's rarest shingles, enough that any pair
-    // with capped-set jaccard >= t must collide inside both prefixes
-    val byRarity = Window.partitionBy(col("doc"))
-      .orderBy(col("df").asc, col("s").asc)
-    val prefix0 = invR
-      .withColumn("__rn", row_number().over(byRarity))
-      // round before ceil: 0.8*35 = 28.000000000000004 in doubles, and
-      // ceil'ing the epsilon would illegally shorten the prefix by one
-      .where(col("__rn") <=
-        col("sz") - ceil(round(lit(threshold) * col("sz"), 6)) + 1)
-      // rn/sz ride along for the positional filter below (ints — the
-      // prefix index stays narrow)
-      .select(col("doc"), col("s"), col("__rn").as("rn"), col("sz"))
-    // both sides of the self-join consume the prefix index — cache it
-    // (it is ~20% of the inverted index; at 100 TB you'd materialize it
-    // to storage the same way)
-    val prefix = if (persistShingles) cachedIdempotent(prefix0) else prefix0
+                   threshold: Double, maxShingleDf: Long = 1000L): DataFrame = {
+    val sh = cachedIdempotent(withShingles(df, id, text, n))
+    val prefix = cachedIdempotent(
+      rarityPrefix(rarityRanked(sh, maxShingleDf), threshold))
     // PPJoin-style instance filters (Xiao et al. — public literature),
-    // applied BEFORE the distinct so the dominant cost term (candidate
-    // pair instances carried into the dedup) shrinks. Both are lossless:
+    // applied in the join BEFORE the distinct so the dominant cost term
+    // (candidate pair instances carried into the dedup) shrinks. Both
+    // are lossless:
     //  - length filter: jaccard >= t forces t*|x| <= |y| <= |x|/t;
     //  - positional filter: a colliding shingle at rank i of x / j of y
     //    bounds the overlap by 1 + min(|x|-i, |y|-j) (every LATER common
@@ -584,36 +653,13 @@ object Dedup {
     val minOverlap =
       ceil(round(lit(threshold) / (lit(1.0) + lit(threshold))
         * (col("a.sz") + col("b.sz")), 6))
-    val cand = prefix.hint("shuffle_hash").as("a")
-      .join(prefix.hint("shuffle_hash").as("b"),
-        col("a.s") === col("b.s") && col("a.doc") < col("b.doc"))
-      .where(least(col("a.sz"), col("b.sz")) >=
-        ceil(round(lit(threshold) * greatest(col("a.sz"), col("b.sz")), 6)))
-      .where(lit(1) + least(col("a.sz") - col("a.rn"),
-        col("b.sz") - col("b.rn")) >= minOverlap)
-      .select(col("a.doc").as("d1"), col("b.doc").as("d2"))
-      .distinct()
-    // Exact full-set verification of the surviving pairs — the reported
-    // score is the TRUE Jaccard, identical to minhashPairs' verification
-    // and the DuckDB oracle.
-    verifyJaccard(cand, sh, threshold)
-  }
-
-  /** Join candidate (d1, d2) pairs back to shingle sets and keep pairs with
-    * Jaccard >= threshold. */
-  private def verifyJaccard(cand: DataFrame, sh: DataFrame,
-                            threshold: Double): DataFrame = {
-    // shingle-set lookups are corpus-sized (full arrays) — never
-    // broadcast them; shuffle on the candidate ids instead
-    val x = sh.select(col("doc").as("d1"), col("sh").as("sh1")).hint("shuffle_hash")
-    val y = sh.select(col("doc").as("d2"), col("sh").as("sh2")).hint("shuffle_hash")
-    val inter = size(array_intersect(col("sh1"), col("sh2"))).cast("double")
-    val uni = (size(col("sh1")) + size(col("sh2"))).cast("double") -
-      size(array_intersect(col("sh1"), col("sh2"))).cast("double")
-    cand.join(x, "d1").join(y, "d2")
-      .withColumn("jaccard", inter / uni)
-      .where(col("jaccard") >= threshold)
-      .select(col("d1"), col("d2"), round(col("jaccard"), 4).as("jaccard"))
+    val cand = candidatePairs(prefix, prefix, "s")(
+      col("a.doc") < col("b.doc") &&
+        least(col("a.sz"), col("b.sz")) >=
+          ceil(round(lit(threshold) * greatest(col("a.sz"), col("b.sz")), 6)) &&
+        lit(1) + least(col("a.sz") - col("a.rn"),
+          col("b.sz") - col("b.rn")) >= minOverlap)
+    verify(cand, sh, threshold, "jaccard")(jaccard)
   }
 
   /** ASYMMETRIC near-dup pairs by set CONTAINMENT:
@@ -639,53 +685,24 @@ object Dedup {
     * positional filter carries over with `min = |small|`:
     * `1 + min(szA - rnA, szB - rnB) >= ceil(t·szA)`.
     *
-    * Scale shape: identical skeleton to [[jaccardPairs]] — hashed
-    * 8-byte shingle keys, every corpus×corpus join pinned
-    * shuffle-hash, exact full-set verification on the surviving
-    * candidates only. */
+    * Scale shape: identical skeleton to [[jaccardPairs]] — the same
+    * rarity-ranked index (cached whole here, since the larger side
+    * reads all of it), the same candidate join and the same verify. */
   def containmentPairs(df: DataFrame, id: String, text: String, n: Int,
-                       threshold: Double, maxShingleDf: Long = 1000L,
-                       persistShingles: Boolean = true): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0,1], got $threshold")
-    val sh0 = withShingles(df, id, text, n)
-    val sh = if (persistShingles) cachedIdempotent(sh0) else sh0
-    val inv = sh.select(col("doc"), size(col("sh")).as("sz"),
-      explode(transform(col("sh"), s => xxhash64(s))).as("s"))
-    val dfs = inv.groupBy("s").agg(count(lit(1)).as("df"))
-      .where(col("df") <= maxShingleDf && col("df") >= 2)
-    val invR = inv.hint("shuffle_hash").join(dfs.hint("shuffle_hash"), "s")
-    val byRarity = Window.partitionBy(col("doc"))
-      .orderBy(col("df").asc, col("s").asc)
-    val ranked0 = invR
-      .withColumn("__rn", row_number().over(byRarity))
-      .select(col("doc"), col("s"), col("__rn").as("rn"), col("sz"))
-    val ranked = if (persistShingles) cachedIdempotent(ranked0) else ranked0
-    // round-before-ceil: same 0.8*35 epsilon discipline as jaccardPairs
-    val prefix = ranked.where(col("rn") <=
-      col("sz") - ceil(round(lit(threshold) * col("sz"), 6)) + 1)
-    val cand = prefix.hint("shuffle_hash").as("a")
-      .join(ranked.hint("shuffle_hash").as("b"),
-        col("a.s") === col("b.s") &&
-          (col("a.sz") < col("b.sz") ||
-            (col("a.sz") === col("b.sz") && col("a.doc") < col("b.doc"))))
-      .where(lit(1) + least(col("a.sz") - col("a.rn"),
-        col("b.sz") - col("b.rn")) >=
-        ceil(round(lit(threshold) * col("a.sz"), 6)))
-      .select(col("a.doc").as("d1"), col("b.doc").as("d2"))
-      .distinct()
-    val x = sh.select(col("doc").as("d1"), col("sh").as("sh1"))
-      .hint("shuffle_hash")
-    val y = sh.select(col("doc").as("d2"), col("sh").as("sh2"))
-      .hint("shuffle_hash")
-    val inter = size(array_intersect(col("sh1"), col("sh2"))).cast("double")
-    cand.join(x, "d1").join(y, "d2")
-      .withColumn("containment",
-        inter / least(size(col("sh1")), size(col("sh2"))).cast("double"))
-      .where(col("containment") >= threshold)
-      .select(least(col("d1"), col("d2")).as("d1"),
-        greatest(col("d1"), col("d2")).as("d2"),
-        round(col("containment"), 4).as("containment"))
+                       threshold: Double,
+                       maxShingleDf: Long = 1000L): DataFrame = {
+    val sh = cachedIdempotent(withShingles(df, id, text, n))
+    val ranked = cachedIdempotent(rarityRanked(sh, maxShingleDf))
+    val cand = candidatePairs(rarityPrefix(ranked, threshold), ranked, "s")(
+      (col("a.sz") < col("b.sz") ||
+        (col("a.sz") === col("b.sz") && col("a.doc") < col("b.doc"))) &&
+        lit(1) + least(col("a.sz") - col("a.rn"),
+          col("b.sz") - col("b.rn")) >=
+          ceil(round(lit(threshold) * col("a.sz"), 6)))
+    verify(cand, sh, threshold, "containment") { (x, y) =>
+      size(array_intersect(x("sh"), y("sh"))).cast("double") /
+        least(size(x("sh")), size(y("sh"))).cast("double")
+    }
   }
 
   // ------------------------------------------------------------------
@@ -719,27 +736,19 @@ object Dedup {
   }
 
   /** Near-duplicate pairs via banded MinHash LSH, verified with exact
-    * Jaccard. rowsPerBand=2 and numPerms=64 (32 bands) give >99.99% recall
-    * at jaccard 0.8. Output: (d1, d2, jaccard) — identical contract to
-    * [[jaccardPairs]], so the two are cross-checkable. */
+    * Jaccard at `threshold` in (0, 1]. rowsPerBand=2 and numPerms=64
+    * (32 bands) give >99.99% recall at jaccard 0.8. Output: (d1, d2,
+    * jaccard) — identical contract to [[jaccardPairs]], so the two are
+    * cross-checkable. The shingle table is cached, as in
+    * [[jaccardPairs]]. */
   def minhashPairs(df: DataFrame, id: String, text: String, n: Int,
                    threshold: Double, numPerms: Int = 64,
-                   rowsPerBand: Int = 2,
-                   persistShingles: Boolean = true): DataFrame = {
-    // same cache-retention contract as jaccardPairs; at corpus scales
-    // where neither caching nor recompute fits, use the materialized
-    // path (buildIndex + minhashPairsFromIndex) instead
-    val sh0 = withShingles(df, id, text, n)
-    val sh = if (persistShingles) cachedIdempotent(sh0) else sh0
+                   rowsPerBand: Int = 2): DataFrame = {
+    val sh = cachedIdempotent(withShingles(df, id, text, n))
     val bands = bandKeyTable(minhashSignatureTable(sh, numPerms),
       numPerms, rowsPerBand)
-    // corpus x corpus band join: see the jaccard note — pin shuffle hash
-    val cand = bands.hint("shuffle_hash").as("a")
-      .join(bands.hint("shuffle_hash").as("b"),
-        col("a.bkey") === col("b.bkey") && col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("d1"), col("b.doc").as("d2"))
-      .distinct()
-    verifyJaccard(cand, sh, threshold)
+    verify(candidatePairs(bands, bands, "bkey")(col("a.doc") < col("b.doc")),
+      sh, threshold, "jaccard")(jaccard)
   }
 
   /** Banded LSH keys from a MinHash signature table: (doc, bkey), one
@@ -782,96 +791,25 @@ object Dedup {
     DedupIndex(name, path, n, numPerms, rowsPerBand, numBuckets)
       .build(df, id, text)
 
-  /** Batch MinHash dedup over MATERIALIZED signatures: the whole-corpus
-    * analogue of [[pairsAgainstIndex]], and the 100 TB answer to
-    * `persistShingles` — instead of caching shingle/signature tables in
-    * cluster memory (the in-session default, sized for corpora that
-    * fit), signatures are computed ONCE into the bucketed index tables
-    * and the banded self-join reads them with NO Exchange on EITHER
-    * side (both sides stream out of the same buckets). Verification
-    * prunes the bucketed shingle table to candidate ids via broadcast
-    * semi-join, so document bodies never shuffle. Output contract
-    * identical to [[minhashPairs]].
-    *
-    * Build the index once with [[buildIndex]]; pass `threshold` per
-    * query. Equivalence with the in-memory operator and the plan shape
-    * are spec-pinned (IncrementalDedupSpec). */
-  def minhashPairsFromIndex(spark: org.apache.spark.sql.SparkSession,
-                            idx: DedupIndex, threshold: Double): DataFrame = {
-    val bands = spark.table(idx.bandsTable)
-    val cand = cachedIdempotent(
-      bands.hint("shuffle_hash").as("a")
-        .join(bands.hint("shuffle_hash").as("b"),
-          col("a.bkey") === col("b.bkey") && col("a.doc") < col("b.doc"))
-        .select(col("a.doc").as("d1"), col("b.doc").as("d2"))
-        .distinct())
-    val candIds = cand.select(col("d1").as("doc"))
-      .union(cand.select(col("d2").as("doc"))).distinct()
-    val sh = spark.table(idx.shinglesTable)
-      .join(broadcast(candIds), Seq("doc"), "left_semi")
-    verifyJaccard(cand, cachedIdempotent(sh), threshold)
-  }
-
   /** Near-duplicate pairs between `delta` and the indexed corpus, plus
     * pairs within `delta` itself — exactly the NEW pairs that appear
     * when the delta joins the corpus, so
     * `minhashPairs(corpus) ∪ pairsAgainstIndex(delta, idx)` equals
     * `minhashPairs(corpus ∪ delta)` (union-equivalence; spec-pinned).
     * Output: (d1, d2, jaccard), d1 < d2, same contract as
-    * [[minhashPairs]].
-    *
-    * Plan shape, and why it scales: the index bands table is bucketed
-    * on `bkey`, so the hinted shuffle-hash candidate join shuffles ONLY
-    * the delta's band keys — the corpus side streams straight out of
-    * its buckets with no Exchange and no Sort. Verification never
-    * touches corpus shingles wholesale either: a broadcast semi-join
-    * prunes the bucketed shingle table to candidate doc ids (O(pairs),
-    * small by the banding argument) before the exact-Jaccard join.
-    * Caller contract: delta ids are disjoint from indexed ids. */
+    * [[minhashPairs]]. The plan is [[probeIndex]]'s: only the delta's
+    * band keys shuffle, and verification reads the bucketed shingle
+    * table pruned to the candidate ids. Caller contract: delta ids are
+    * disjoint from indexed ids. */
   def pairsAgainstIndex(delta: DataFrame, id: String, text: String,
-                        idx: DedupIndex, threshold: Double,
-                        persistShingles: Boolean = true): DataFrame = {
+                        idx: DedupIndex, threshold: Double): DataFrame = {
     val spark = delta.sparkSession
-    val dSh0 = withShingles(delta, id, text, idx.n)
-    val dSh = if (persistShingles) cachedIdempotent(dSh0) else dSh0
-    val dBands0 = bandKeyTable(minhashSignatureTable(dSh, idx.numPerms),
-      idx.numPerms, idx.rowsPerBand)
-      .select(col("bkey"), col("doc").as("dd"))
-    // the delta band table feeds both the cross join and the delta
-    // self-join — same retention contract as the shingle table
-    val dBands = if (persistShingles) cachedIdempotent(dBands0) else dBands0
-    val iBands = spark.table(idx.bandsTable)
-      .select(col("bkey"), col("doc").as("di"))
-    // delta x corpus: hint the DELTA side — SHJ builds its hash map from
-    // the delta partition while the bucketed index side streams
-    val cross = iBands.join(dBands.hint("shuffle_hash"), "bkey")
-      .where(col("di") =!= col("dd"))
-      .select(least(col("di"), col("dd")).as("d1"),
-        greatest(col("di"), col("dd")).as("d2"))
-    // delta x delta: the delta is corpus-shaped (grows with ingest), so
-    // the same no-broadcast discipline applies
-    val dd = dBands.hint("shuffle_hash").as("a")
-      .join(dBands.hint("shuffle_hash").as("b"),
-        col("a.bkey") === col("b.bkey") && col("a.dd") < col("b.dd"))
-      .select(col("a.dd").as("d1"), col("b.dd").as("d2"))
-    // The candidate set is referenced FOUR times downstream (the id
-    // broadcast, both verify-side shingle prunes, and the verify join
-    // itself) — uncached, the whole band-join subtree would re-execute
-    // per reference. It is O(emitted pairs) small by the banding
-    // argument, so it is always cached regardless of persistShingles
-    // (which exists because corpus-sized SHINGLE tables may not fit).
-    val cand = cachedIdempotent(cross.union(dd).distinct())
-    // prune the bucketed shingle table to candidate ids WITHOUT
-    // shuffling it: candidate ids are O(emitted pairs) by the banding
-    // argument, so they broadcast
-    val candIds = cand.select(col("d1").as("doc"))
-      .union(cand.select(col("d2").as("doc"))).distinct()
-    val iSh = spark.table(idx.shinglesTable)
-      .join(broadcast(candIds), Seq("doc"), "left_semi")
-    // verification reads the lookup once per candidate SIDE — cache the
-    // pruned union (O(candidates) + O(delta), never corpus-sized) so the
-    // bucketed shingle scan and semi-join run once, not per side
-    verifyJaccard(cand, cachedIdempotent(iSh.union(dSh)), threshold)
+    val dSh = cachedIdempotent(withShingles(delta, id, text, idx.n))
+    val (cand, lookup) = probeIndex(
+      bandKeyTable(minhashSignatureTable(dSh, idx.numPerms), idx.numPerms,
+        idx.rowsPerBand),
+      spark.table(idx.bandsTable), dSh, spark.table(idx.shinglesTable))
+    verify(cand, lookup, threshold, "jaccard")(jaccard)
   }
 
   // ------------------------------------------------------------------
@@ -931,9 +869,6 @@ object Dedup {
   // Embedding near-duplicates
   // ------------------------------------------------------------------
 
-  /** Pairs of vectors with cosine similarity >= threshold, by brute-force
-    * pairwise comparison. Quadratic — the exactness oracle the LSH path
-    * is verified against in DedupSpec. */
   /** SemDeDup (Abbas et al., "SemDeDup: Data-efficient learning at
     * web-scale through semantic deduplication", 2023): cluster
     * embeddings, find near-duplicate pairs WITHIN each cluster only,
@@ -975,10 +910,8 @@ object Dedup {
   private def semAssign(df: DataFrame, id: String, vec: String,
                         centroids: DataFrame, cid: String,
                         cvec: String): DataFrame = {
-    import graft.functions.VectorFunctions._
-    val v0 = df.select(col(id).cast("long").as("vid"),
-        asDoubles(col(vec)).as("v"))
-      .withColumn("nrm", l2Norm(col("v")))
+    val v0 = normedVectors(df, id, vec)
+      .withColumn("vid", col("vid").cast("long"))
       .where(col("nrm") > 0.0)
     Similarity.assignCells(v0, "vid", "v", centroids, cid, cvec)
       .select(col("vid"), col("v"), col("nrm"), col("cell"),
@@ -1109,7 +1042,7 @@ object Dedup {
     * candidate-generation strategy analytically from the banding math:
     *
     *  - High thresholds (banding prunes): banded hyperplane LSH
-    *    ([[embeddingPairsLsh]]) — candidates from a (band, key)
+    *    ([[embeddingPairsLsh]]) — candidates from a band-key
     *    equi-join, then exact verification; miss probability bounded
     *    at 1e-9 per qualifying pair.
     *  - Low thresholds (banding cannot prune): [[Similarity.bandingFor]]'s own
@@ -1160,8 +1093,7 @@ object Dedup {
                             threshold: Double, numBlocks: Int = 16): DataFrame = {
     import graft.functions.VectorFunctions._
     require(numBlocks >= 1, s"numBlocks must be >= 1, got $numBlocks")
-    val v = df.select(col(id).as("vid"), asDoubles(col(vec)).as("v"))
-      .withColumn("nrm", l2Norm(col("v")))
+    val v = normedVectors(df, id, vec)
       .withColumn("blk", pmod(xxhash64(col("vid")), lit(numBlocks)).cast("int"))
     val blockIds = sequence(lit(0), lit(numBlocks - 1))
     val left = v.withColumn("k2", explode(filter(blockIds, j => j >= col("blk"))))
@@ -1183,29 +1115,23 @@ object Dedup {
         round(col("cosine"), 4).as("cosine"))
   }
 
-  /** Pairs of vectors with cosine similarity >= threshold via banded
-    * hyperplane LSH: candidates = pairs agreeing on ANY band's sign
-    * bits, then exact cosine verification of candidates only — so every
-    * reported pair carries its TRUE similarity and the only possible
-    * error is a missed pair, bounded by [[Similarity.bandingFor]]'s
-    * target (1e-9 per qualifying pair; deterministic planes make any
-    * given corpus either fully recalled or not, which DedupSpec proves
-    * against the exact baseline).
-    *
-    * Scale shape: the corpus self-join is an EQUI-join on (band, key) —
-    * shuffle-partitionable, no broadcast of the big side, no O(n^2)
-    * nested loop. Pruning power depends on the threshold: at >= 0.8
-    * (near-dup territory) bands are long and candidates are rare; at
-    * near-random thresholds the banding admits ~all pairs and
-    * [[embeddingPairs]] dispatches to [[embeddingPairsBlocked]]
-    * instead.
-    *
-    * `maxBands` is the collision-vs-linear-work dial (SCALE.md "cost
-    * anatomy"): the default 512 fits corpora to ~100k vectors per
-    * shard; beyond that, raising it buys proportionally more bits per
-    * band — each extra bit HALVES the quadratic false-candidate term
-    * for ~1/p more linear band rows — which is the correct trade
-    * exactly when the quadratic term dominates. */
+  /** `(vid, v, nrm)`: the vectors as doubles with their L2 norms — the
+    * lookup side of every cosine check, and the embedding index's
+    * vector table. */
+  private[operators] def normedVectors(df: DataFrame, id: String,
+                                       vec: String): DataFrame = {
+    import graft.functions.VectorFunctions._
+    df.select(col(id).as("vid"), asDoubles(col(vec)).as("v"))
+      .withColumn("nrm", l2Norm(col("v")))
+  }
+
+  /** Exact cosine of the two sides' vectors; NULL (the pair falls out)
+    * when either norm is zero. */
+  private def cosine(x: String => Column, y: String => Column): Column = {
+    import graft.functions.VectorFunctions._
+    cosineFrom(dot(x("v"), y("v")), x("nrm"), y("nrm"))
+  }
+
   /** (vid, bkey) banded LSH keys with the band index folded into the
     * key hash — single-column join/bucketing, same argument as
     * [[bandKeyTable]] (a cross-band collision only adds a candidate
@@ -1238,59 +1164,53 @@ object Dedup {
   /** Near-dup pairs between `delta` and the indexed corpus plus pairs
     * within `delta`, at cosine >= `threshold` (>= the index's build
     * threshold — the banding's recall guarantee only covers pairs at
-    * or above it). Same plan shape as [[pairsAgainstIndex]]: only the
-    * delta's band keys shuffle, the index streams out of its buckets,
-    * and verification prunes the bucketed vector table to candidate
-    * ids via broadcast semi-join. Output: (id1, id2, cosine), same
-    * contract as [[embeddingPairsLsh]]. Caller contract: delta ids
-    * disjoint from indexed ids. */
+    * or above it). The same probe as [[pairsAgainstIndex]]
+    * ([[probeIndex]]) over the embedding index's tables. Output:
+    * (id1, id2, cosine), same contract as [[embeddingPairsLsh]].
+    * Caller contract: delta ids disjoint from indexed ids. */
   def embeddingPairsAgainstIndex(delta: DataFrame, id: String,
                                  vec: String, idx: EmbeddingIndex,
                                  threshold: Double = -1.0): DataFrame = {
-    import graft.functions.VectorFunctions._
     val t = if (threshold < 0) idx.threshold else threshold
     require(t >= idx.threshold,
       s"probe threshold $t is below the index's build threshold " +
         s"${idx.threshold}: banded recall is only guaranteed at or " +
         "above the threshold the signatures were built for")
     val spark = delta.sparkSession
-    val dBands = cachedIdempotent(
-      embBandTable(delta, id, vec, idx.dim, idx.bitsPerBand, idx.numBands)
-        .select(col("bkey"), col("vid").as("dd")))
-    val iBands = spark.table(idx.bandsTable)
-      .select(col("bkey"), col("vid").as("di"))
-    val cross = iBands.join(dBands.hint("shuffle_hash"), "bkey")
-      .where(col("di") =!= col("dd"))
-      .select(least(col("di"), col("dd")).as("id1"),
-        greatest(col("di"), col("dd")).as("id2"))
-    val dd = dBands.hint("shuffle_hash").as("a")
-      .join(dBands.hint("shuffle_hash").as("b"),
-        col("a.bkey") === col("b.bkey") && col("a.dd") < col("b.dd"))
-      .select(col("a.dd").as("id1"), col("b.dd").as("id2"))
-    val cand = cachedIdempotent(cross.union(dd).distinct())
-    val candIds = cand.select(col("id1").as("vid"))
-      .union(cand.select(col("id2").as("vid"))).distinct()
-    val dVec = delta.select(col(id).as("vid"), asDoubles(col(vec)).as("v"))
-      .withColumn("nrm", l2Norm(col("v")))
-    val lookup = cachedIdempotent(
-      spark.table(idx.vectorsTable)
-        .join(broadcast(candIds), Seq("vid"), "left_semi")
-        .union(dVec))
-    val x = lookup.select(col("vid").as("id1"), col("v").as("v1"),
-      col("nrm").as("n1")).hint("shuffle_hash")
-    val y = lookup.select(col("vid").as("id2"), col("v").as("v2"),
-      col("nrm").as("n2")).hint("shuffle_hash")
-    cand.join(x, "id1").join(y, "id2")
-      .withColumn("cosine",
-        cosineFrom(dot(col("v1"), col("v2")), col("n1"), col("n2")))
-      .where(col("cosine") >= t)
-      .select(col("id1"), col("id2"), round(col("cosine"), 4).as("cosine"))
+    val (cand, lookup) = probeIndex(
+      embBandTable(delta, id, vec, idx.dim, idx.bitsPerBand, idx.numBands),
+      spark.table(idx.bandsTable), normedVectors(delta, id, vec),
+      spark.table(idx.vectorsTable))
+    verify(cand, lookup, t, "cosine", ("id1", "id2"))(cosine)
   }
 
+  /** Pairs of vectors with cosine similarity >= threshold via banded
+    * hyperplane LSH: candidates = pairs agreeing on ANY band's sign
+    * bits, then exact cosine verification of candidates only — so every
+    * reported pair carries its TRUE similarity and the only possible
+    * error is a missed pair, bounded by [[Similarity.bandingFor]]'s
+    * target (1e-9 per qualifying pair; deterministic planes make any
+    * given corpus either fully recalled or not, which DedupSpec proves
+    * against the exact baseline).
+    *
+    * Scale shape: the corpus self-join is the one candidate join on the
+    * folded band key ([[embBandTable]], as the index uses) —
+    * shuffle-partitionable, no broadcast of the big side, no O(n^2)
+    * nested loop. Pruning power depends on the threshold: at >= 0.8
+    * (near-dup territory) bands are long and candidates are rare; at
+    * near-random thresholds the banding admits ~all pairs and
+    * [[embeddingPairs]] dispatches to [[embeddingPairsBlocked]]
+    * instead.
+    *
+    * `maxBands` is the collision-vs-linear-work dial (SCALE.md "cost
+    * anatomy"): the default 512 fits corpora to ~100k vectors per
+    * shard; beyond that, raising it buys proportionally more bits per
+    * band — each extra bit HALVES the quadratic false-candidate term
+    * for ~1/p more linear band rows — which is the correct trade
+    * exactly when the quadratic term dominates. */
   def embeddingPairsLsh(df: DataFrame, id: String, vec: String,
                         threshold: Double, dim: Int = 0,
                         maxBands: Int = 512): DataFrame = {
-    import graft.functions.VectorFunctions._
     // dim inference needs one row (pass `dim` to stay fully lazy); an
     // empty / all-null-vector input has no pairs at all
     val d = if (dim > 0) dim
@@ -1305,39 +1225,17 @@ object Dedup {
               lit(0.0).as("cosine")).limit(0)
         }
     val (bits, bands) = Similarity.bandingFor(threshold, maxBands)
-    val vBase = df.select(col(id).as("vid"), asDoubles(col(vec)).as("v"))
-      .withColumn("nrm", l2Norm(col("v")))
+    val vecs = normedVectors(df, id, vec)
     // spread before the band-key kernel ONLY (bits x bands hyperplane
     // dots per row — measured at sf0.1: 3.4 s of pure CPU on the
     // 2 tasks a bytes-sized scan yields, with 30 cores idle; guard
-    // makes it a no-op at cluster scale). The verify lookups x/y stay
-    // on the unspread base: they are re-shuffled by id regardless, so
-    // a spread there would only add an exchange.
-    val binned = graft.util.Parallelism.spread(vBase)
-      .select(col("vid"), posexplode(
-        Similarity.cosineLshBandKeys(col("v"), d, bits, bands))
-        .as(Seq("band", "bkey")))
-    // the exploded band table is `bands`x the source rows, but Catalyst
-    // sizes it from the parquet scan and happily BROADCASTS it (a 1M-row
-    // single-threaded HashedRelation build at sf0.1; at corpus scale the
-    // driver would OOM). Force the shuffle hash join the scaladoc
-    // promises: partition by (band, bkey), build per-partition maps.
-    val cand = binned.hint("shuffle_hash").as("a")
-      .join(binned.hint("shuffle_hash").as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.vid") < col("b.vid"))
-      .select(col("a.vid").as("id1"), col("b.vid").as("id2"))
-      .distinct()
-    // vector lookups are corpus-sized (full embeddings) — never
-    // broadcast; shuffle on the candidate ids
-    val x = vBase.select(col("vid").as("id1"), col("v").as("v1"), col("nrm").as("n1"))
-      .hint("shuffle_hash")
-    val y = vBase.select(col("vid").as("id2"), col("v").as("v2"), col("nrm").as("n2"))
-      .hint("shuffle_hash")
-    cand.join(x, "id1").join(y, "id2")
-      .withColumn("cosine", cosineFrom(dot(col("v1"), col("v2")), col("n1"), col("n2")))
-      .where(col("cosine") >= threshold)
-      .select(col("id1"), col("id2"), round(col("cosine"), 4).as("cosine"))
+    // makes it a no-op at cluster scale). The verify lookups stay on
+    // the unspread frame: they are re-shuffled by id regardless, so a
+    // spread there would only add an exchange.
+    val keys = embBandTable(graft.util.Parallelism.spread(vecs), "vid", "v",
+      d, bits, bands).toDF("doc", "bkey")
+    verify(candidatePairs(keys, keys, "bkey")(col("a.doc") < col("b.doc")),
+      vecs, threshold, "cosine", ("id1", "id2"))(cosine)
   }
 
   /** Passage-level (sub-document) dedup: chunk each document's token

@@ -156,12 +156,9 @@ object ReplayStats {
 private[streaming] object ReplayHarness {
 
   /** Stage `events` by `chunk`, run `agg(fileStream)` in a scoped
-    * session (caller's runtime conf replayed, then shuffle partitions
+    * session ([[graft.GraftSession.scoped]]: shuffle partitions
     * pinned to `statePartitions` — micro-batch cost scales with
-    * state-store partition count, and the scoped conf can never be
-    * observed by queries planned concurrently on the caller's
-    * session; newSession() is NOT a clone, so the caller's modifiable
-    * conf delta is copied first), drain per chunk in order, and
+    * state-store partition count), drain per chunk in order, and
     * return the memory sink's rows. The sink's uniquely-named temp
     * view is dropped after materialization (a long-lived session
     * re-running a gate would otherwise accumulate sinks without
@@ -193,12 +190,8 @@ private[streaming] object ReplayHarness {
     val replays = sources.map { case (events, payload, chunk) =>
       new ChunkedReplay(events, payload, chunk, nChunks)
     }
-    val scoped = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      if (!scoped.conf.getOption(k).contains(v) && scoped.conf.isModifiable(k))
-        scoped.conf.set(k, v)
-    }
-    scoped.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+    val scoped = graft.GraftSession.scoped(spark,
+      "spark.sql.shuffle.partitions" -> statePartitions.toString)
     LocalCheckpointFiles.install(scoped)
     val streams = replays.map(r =>
       scoped.readStream.schema(r.schema).parquet(r.streamDir.toString))

@@ -435,10 +435,8 @@ object ScaleProbe {
         .where(col("doc_id") % 100 === 0)
       val e0 = replicateEmb(engine.Tables.embeddings(spark, sfDir), 2)
         .where(col("vec_id") % 100 === 0)
-      Dedup.jaccardPairs(d0, "doc_id", "text", 3, 0.8,
-        persistShingles = false).count()
-      Dedup.minhashPairs(d0, "doc_id", "text", 3, 0.8,
-        persistShingles = false).count()
+      Dedup.jaccardPairs(d0, "doc_id", "text", 3, 0.8).count()
+      Dedup.minhashPairs(d0, "doc_id", "text", 3, 0.8).count()
       Dedup.simhashPairs(d0, "doc_id", "text", 3).count()
       Dedup.exactGroups(d0, "doc_id", "text").count()
       Dedup.embeddingPairs(e0, "vec_id", "embedding", 0.85, dim = 64).count()
@@ -477,8 +475,7 @@ object ScaleProbe {
       // published closure exponent); only computed when selected
       val ccPairs =
         if (wanted("dedup_clusters")) {
-          val p = Dedup.minhashPairs(docs, "doc_id", "text", 3, 0.8,
-            persistShingles = false).persist()
+          val p = Dedup.minhashPairs(docs, "doc_id", "text", 3, 0.8).persist()
           p.count(); p
         } else null
 
@@ -812,8 +809,7 @@ object ScaleProbe {
             engine.Tables.documents(spark, sfDir)
               .where(col("doc_id") < 250)
               .withColumn("doc_id", col("doc_id") + lit(100000000000L)),
-            "doc_id", "text", incIdx, 0.8,
-            persistShingles = false).count()),
+            "doc_id", "text", incIdx, 0.8).count()),
         "dedup_emb_incremental" -> (() =>
           Dedup.embeddingPairsAgainstIndex(embIncDelta, "vec_id",
             "embedding", embIncIdx).count()),
@@ -850,17 +846,14 @@ object ScaleProbe {
             "text", w, b).count()
         }),
         "dedup_jaccard" -> (() =>
-          Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.8,
-            persistShingles = false).count()),
+          Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.8).count()),
         "dedup_minhash" -> (() =>
-          Dedup.minhashPairs(docs, "doc_id", "text", 3, 0.8,
-            persistShingles = false).count()),
+          Dedup.minhashPairs(docs, "doc_id", "text", 3, 0.8).count()),
         // asymmetric containment: prefix(small) x FULL inverted index —
         // candidate work grows faster than jaccard's prefix x prefix by
         // design; the probe prices that honesty (df cap bounds it)
         "dedup_containment" -> (() =>
-          Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.6,
-            persistShingles = false).count()),
+          Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.6).count()),
         // stratum-pair matrix: distinct (source, shingle) + one
         // self-join; output cardinality is pairs-that-share (constant
         // 20 sources here), so wall must track the distinct, not pairs
@@ -1167,7 +1160,10 @@ object ScaleProbe {
         val (dts, ns) = (1 to reps).map { _ =>
           val t0 = System.nanoTime()
           val n = run()
-          ((System.nanoTime() - t0) / 1e9, n)
+          val dt = (System.nanoTime() - t0) / 1e9
+          // every rep and query starts cold: no dedup cache carries over
+          Dedup.clearCaches()
+          (dt, n)
         }.unzip
         val dt = dts.sorted.apply((reps - 1) / 2)
         System.err.println(

@@ -34,7 +34,10 @@ class KernelCallSpec extends SparkSpec {
 
   private val sliceDir = java.nio.file.Files.createTempDirectory("kernel_call_slice")
 
-  override def afterAll(): Unit = graft.util.FsUtil.deleteRecursively(sliceDir)
+  override def afterAll(): Unit = {
+    graft.operators.Dedup.clearCaches()
+    graft.util.FsUtil.deleteRecursively(sliceDir)
+  }
 
   // read back from parquet, so the kernels see UnsafeArrayData inputs and
   // no projection folds into a local relation
@@ -145,7 +148,7 @@ class KernelCallSpec extends SparkSpec {
   test("plans built from equal kernel parameters are sameResult") {
     val docs = graft.engine.Tables.documents(spark, sf())
     def pairs = graft.operators.Dedup.minhashPairs(docs, "doc_id", "text", 5,
-      0.8, persistShingles = false)
+      0.8)
     assert(pairs.queryExecution.optimizedPlan
       .sameResult(pairs.queryExecution.optimizedPlan))
     def nearest(m: IndexedSeq[Double]) = slice.select(

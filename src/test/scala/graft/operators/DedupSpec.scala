@@ -9,6 +9,8 @@ class DedupSpec extends SparkSpec {
 
   private lazy val docs = Tables.documents(spark, sf())
 
+  override def afterAll(): Unit = Dedup.clearCaches()
+
   test("exact dedup: synthetic duplicates collapse by normalized text") {
     val s = spark
     import s.implicits._
@@ -45,6 +47,19 @@ class DedupSpec extends SparkSpec {
     assert(mh == jac)
   }
 
+  test("a threshold outside (0, 1] is refused, not answered with a subset") {
+    // every pair qualifies at threshold 0, but only the pairs that share
+    // a shingle or a band could come back
+    for (t <- Seq(0.0, -0.5, 1.5)) {
+      intercept[IllegalArgumentException](
+        Dedup.jaccardPairs(docs, "doc_id", "text", 3, t))
+      intercept[IllegalArgumentException](
+        Dedup.minhashPairs(docs, "doc_id", "text", 3, t))
+      intercept[IllegalArgumentException](
+        Dedup.containmentPairs(docs, "doc_id", "text", 3, t))
+    }
+  }
+
   test("prefix-filtered jaccard equals brute-force exact pairs (lossless lemma)") {
     val s = spark
     import s.implicits._
@@ -63,8 +78,7 @@ class DedupSpec extends SparkSpec {
     }).zipWithIndex.map { case (t, i) => (i.toLong, t) }
     val df = docsSeq.toDF("doc_id", "text")
     Seq(0.5, 0.7, 0.8, 0.9).foreach { t =>
-      val fast = Dedup.jaccardPairs(df, "doc_id", "text", 2, t,
-          persistShingles = false)
+      val fast = Dedup.jaccardPairs(df, "doc_id", "text", 2, t)
         .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       // brute force: exact jaccard over all pairs of shingle sets
       val sh = Dedup.withShingles(df, "doc_id", "text", 2)
@@ -102,8 +116,7 @@ class DedupSpec extends SparkSpec {
     val sh = Dedup.withShingles(df, "doc_id", "text", 2)
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
     Seq(0.5, 0.6, 0.8, 1.0).foreach { t =>
-      val fast = Dedup.containmentPairs(df, "doc_id", "text", 2, t,
-          persistShingles = false)
+      val fast = Dedup.containmentPairs(df, "doc_id", "text", 2, t)
         .select("d1", "d2").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val exact = (for {
@@ -117,8 +130,7 @@ class DedupSpec extends SparkSpec {
     }
     // the asymmetric point: a full quote has containment 1.0 but can
     // sit far below any practical jaccard threshold
-    val full = Dedup.containmentPairs(df, "doc_id", "text", 2, 1.0,
-        persistShingles = false)
+    val full = Dedup.containmentPairs(df, "doc_id", "text", 2, 1.0)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(full.nonEmpty && full.forall(_._3 == 1.0))
     val quotePair = full.find { case (a, b, _) =>
@@ -386,43 +398,6 @@ class DedupSpec extends SparkSpec {
     val v = Dedup.exact(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(v == Map(1L -> true, 2L -> false, 3L -> true, 4L -> false))
-  }
-
-  test("streaming exact dedup: first arrival wins inside the watermark horizon") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val input = MemoryStream[(String, Long)] // (text, event seconds)
-    val stream = input.toDF()
-      .select(col("_1").as("text"),
-        timestamp_seconds(col("_2")).as("ts"))
-    val q = Dedup.streamingExact(stream, "text", "ts", "10 seconds")
-      .select(col("text"), unix_timestamp(col("ts")).as("sec"))
-      .writeStream.format("memory").queryName("stream_dedup")
-      .outputMode("append").start()
-    try {
-      // batch 1: duplicate inside the batch — one survivor
-      input.addData(("alpha", 100L), ("alpha", 101L), ("beta", 102L))
-      q.processAllAvailable()
-      // batch 2: duplicate across batches, still inside the horizon —
-      // dropped; watermark advances to 120-10=110
-      input.addData(("alpha", 105L), ("gamma", 120L))
-      q.processAllAvailable()
-      // batch 3: advance watermark (to 490) far past alpha's state,
-      // which was evicted once the watermark passed 100+delay; batch 4:
-      // alpha re-arrives at 495 — NOT late (>= watermark), and its old
-      // fingerprint state is gone, so horizon-scoped dedup admits it
-      input.addData(("delta", 500L))
-      q.processAllAvailable()
-      input.addData(("alpha", 495L))
-      q.processAllAvailable()
-      val got = s.sql("SELECT text, sec FROM stream_dedup ORDER BY sec")
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      assert(got.toSeq == Seq(("alpha", 100L), ("beta", 102L),
-        ("gamma", 120L), ("alpha", 495L), ("delta", 500L)),
-        s"got ${got.toSeq}")
-    } finally q.stop()
   }
 
   test("passage dedup: repeated spans dropped keep-first, docs reassembled") {

@@ -13,6 +13,8 @@ import org.apache.spark.sql.functions._
   * folding a delta in for the next round. */
 class IncrementalDedupSpec extends SparkSpec {
 
+  override def afterAll(): Unit = Dedup.clearCaches()
+
   private def pairSet(df: DataFrame): Set[(Long, Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
@@ -64,32 +66,6 @@ class IncrementalDedupSpec extends SparkSpec {
         .takeWhile(l => !l.contains("Join")).mkString("\n")
       assert(!above.contains("Exchange"),
         s"Exchange above the index scan:\n$plan")
-    } finally idx.drop(s)
-  }
-
-  test("materialized-signature batch dedup equals the in-memory operator") {
-    // the 100 TB persistShingles answer: signatures read from the
-    // bucketed index, banded self-join Exchange-free on BOTH sides
-    val s = spark
-    val all = Tables.documents(s, sf())
-    val idx = Dedup.buildIndex(all, "doc_id", "text", "inc_spec_m",
-      tmpPath())
-    try {
-      val fromIndex = Dedup.minhashPairsFromIndex(s, idx, 0.8)
-      assert(pairSet(fromIndex) ==
-        pairSet(Dedup.minhashPairs(all, "doc_id", "text", 3, 0.8)))
-      // plan property the operator relies on, pinned on the exact join
-      // shape it builds (the operator's own candidate frame is cached,
-      // so its executed plan prints as an InMemoryTableScan): a banded
-      // self-join of the bucketed table shuffles NEITHER side
-      val bands = s.table(idx.bandsTable)
-      val selfJoin = bands.hint("shuffle_hash").as("a")
-        .join(bands.hint("shuffle_hash").as("b"),
-          col("a.bkey") === col("b.bkey") && col("a.doc") < col("b.doc"))
-      val plan = selfJoin.queryExecution.executedPlan.toString
-      assert(plan.contains("ShuffledHashJoin"), s"expected SHJ:\n$plan")
-      assert(!plan.contains("Exchange"),
-        s"bucketed banded self-join should be Exchange-free:\n$plan")
     } finally idx.drop(s)
   }
 
@@ -367,8 +343,7 @@ class IncrementalDedupSpec extends SparkSpec {
           "doc_id", "text")
       val probe = all.where(col("doc_id") % 8 === 7)
       val before = pairSet(
-        Dedup.pairsAgainstIndex(probe, "doc_id", "text", idx, 0.8,
-          persistShingles = false))
+        Dedup.pairsAgainstIndex(probe, "doc_id", "text", idx, 0.8))
       val filesBefore = parquetFiles(s, idx.bandsTable).size
       assert(filesBefore > idx.numBuckets,
         s"vector vacuous: $filesBefore files after 3 folds does not " +
@@ -376,8 +351,7 @@ class IncrementalDedupSpec extends SparkSpec {
       out = idx.compact(s, "inc_spec_cp2", tmpPath())
       // pairs identical through the compacted handle
       val after = pairSet(
-        Dedup.pairsAgainstIndex(probe, "doc_id", "text", out, 0.8,
-          persistShingles = false))
+        Dedup.pairsAgainstIndex(probe, "doc_id", "text", out, 0.8))
       assert(after == before, "compaction changed the pairs output")
       // one file per non-empty bucket, for both tables
       for (t <- Seq(out.bandsTable, out.shinglesTable)) {
@@ -405,8 +379,7 @@ class IncrementalDedupSpec extends SparkSpec {
         java.nio.file.Paths.get(idx.path)),
         "DedupIndex.drop left the backing directory behind")
       val afterDrop = pairSet(
-        Dedup.pairsAgainstIndex(probe, "doc_id", "text", out, 0.8,
-          persistShingles = false))
+        Dedup.pairsAgainstIndex(probe, "doc_id", "text", out, 0.8))
       assert(afterDrop == before,
         "dropping the old generation broke the compacted index")
     } finally {

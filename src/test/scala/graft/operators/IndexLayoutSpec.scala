@@ -21,6 +21,8 @@ import org.apache.spark.sql.functions._
   *  - compaction into the same name or the same path is refused. */
 class IndexLayoutSpec extends SparkSpec {
 
+  override def afterAll(): Unit = Dedup.clearCaches()
+
   /** One handle family: build over a corpus slice, extend with a delta
     * slice, probe with the held-out slice. Slices are `id % 4` of the
     * documents (or embeddings): 0 builds, 1 and 2 extend, 3 probes.
@@ -48,8 +50,7 @@ class IndexLayoutSpec extends SparkSpec {
   private val families: Seq[Case] = Seq(
     Family[DedupIndex]("minhash", () => docs, "doc_id", "text",
       (df, n, p) => Dedup.buildIndex(df, "doc_id", "text", n, p),
-      (df, i) => Dedup.pairsAgainstIndex(df, "doc_id", "text", i, 0.8,
-        persistShingles = false)),
+      (df, i) => Dedup.pairsAgainstIndex(df, "doc_id", "text", i, 0.8)),
     Family[ExactIndex]("exact", () => docs, "doc_id", "text",
       (df, n, p) => Dedup.buildExactIndex(df, "doc_id", "text", n, p),
       (df, i) => Dedup.exactAgainstIndex(df, "doc_id", "text", i)),

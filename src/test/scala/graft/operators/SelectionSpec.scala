@@ -145,9 +145,9 @@ class SelectionSpec extends SparkSpec {
     // driver-local twin over the same feature sets
     val rows = (pos ++ neg).map { case (id, text, lab) =>
       (id, if (lab.get) 1.0 else 0.0,
-        text.split(" ").map(t => Selection.tokenBucket(t, 64)).toSet)
+        text.split(" ").map(t => SelectionReference.tokenBucket(t, 64)).toSet)
     }
-    val (wl, bl) = Selection.trainQualityClassifierLocal(rows, 6, 0.5, 64)
+    val (wl, bl) = SelectionReference.trainQualityClassifierLocal(rows, 6, 0.5, 64)
     assert(w.toSeq == wl.toSeq && b == bl,
       s"distributed != local: bias $b vs $bl")
     // the learned model separates the corpus AND scores the unlabeled
