@@ -623,32 +623,6 @@ object CorpusStats {
         round(avg(col("__lp")), 4).as("avg_lp"))
   }
 
-  /** [[ngramLogProbAgainst]] per SOURCE — the specialist models
-    * DoReMi's order-n loss passes score against: count tables re-keyed
-    * by (src, gram digest) (same stream volume, one extra key column —
-    * exactly how the bigram form re-keys), per-source (N, V) rows
-    * broadcast (#domains rows), and each held-out doc joined to ITS
-    * OWN domain's tables. A held-out domain absent from train has no
-    * specialist model and drops (the inner nv join — loudly documented
-    * rather than silently mis-scored). Output per doc is the same
-    * (doc, n_tokens, n_oov, n_backed, avg_lp) contract, where OOV/V
-    * are relative to the doc's own domain vocabulary. */
-  def ngramLogProbAgainstBySource(train: DataFrame, score: DataFrame,
-                                  idCol: String, textCol: String,
-                                  srcCol: String, order: Int,
-                                  alpha: Double = 0.4,
-                                  k: Double = 0.5): DataFrame = {
-    require(order >= 2 && order <= 8,
-      s"order must be in 2..8, got $order")
-    val countsU = ngramCountsUnified(train, textCol, order, Some(srcCol))
-    // per-src (N, V) derived from the per-src unigram slice — same
-    // exact-derivation argument as the global form, one less corpus pass
-    val nv = countsU.where(col("j") === 1).groupBy("src")
-      .agg(sum("c").as("__n"), count(lit(1)).as("__v"))
-    ngramScoreTail(countsU, nv, score, idCol, textCol, order, alpha, k,
-      Some(srcCol))
-  }
-
   /** Persist the corpus's order-1..order gram counts as a scorable
     * index — see [[NgramIndex]]. Each order's table is ONE map-side-
     * combined count shuffle ([[ngramCounts]], at the grain the direct

@@ -119,7 +119,8 @@ case class EmbeddingIndex(name: String, path: String, dim: Int,
                        append: Boolean): Seq[(String, DataFrame)] =
     Seq(bandsTable ->
         Dedup.embBandTable(df, id, vec, dim, bitsPerBand, numBands),
-      vectorsTable -> Dedup.normedVectors(df, id, vec))
+      vectorsTable ->
+        Similarity.normedVectors(df, id, vec, "vid", "v", "nrm"))
 }
 
 /** Document deduplication for large-scale training-data pipelines.
@@ -910,7 +911,7 @@ object Dedup {
   private def semAssign(df: DataFrame, id: String, vec: String,
                         centroids: DataFrame, cid: String,
                         cvec: String): DataFrame = {
-    val v0 = normedVectors(df, id, vec)
+    val v0 = Similarity.normedVectors(df, id, vec, "vid", "v", "nrm")
       .withColumn("vid", col("vid").cast("long"))
       .where(col("nrm") > 0.0)
     Similarity.assignCells(v0, "vid", "v", centroids, cid, cvec)
@@ -1093,7 +1094,7 @@ object Dedup {
                             threshold: Double, numBlocks: Int = 16): DataFrame = {
     import graft.functions.VectorFunctions._
     require(numBlocks >= 1, s"numBlocks must be >= 1, got $numBlocks")
-    val v = normedVectors(df, id, vec)
+    val v = Similarity.normedVectors(df, id, vec, "vid", "v", "nrm")
       .withColumn("blk", pmod(xxhash64(col("vid")), lit(numBlocks)).cast("int"))
     val blockIds = sequence(lit(0), lit(numBlocks - 1))
     val left = v.withColumn("k2", explode(filter(blockIds, j => j >= col("blk"))))
@@ -1113,16 +1114,6 @@ object Dedup {
       .select(least(col("a.vid"), col("b.vid")).as("id1"),
         greatest(col("a.vid"), col("b.vid")).as("id2"),
         round(col("cosine"), 4).as("cosine"))
-  }
-
-  /** `(vid, v, nrm)`: the vectors as doubles with their L2 norms — the
-    * lookup side of every cosine check, and the embedding index's
-    * vector table. */
-  private[operators] def normedVectors(df: DataFrame, id: String,
-                                       vec: String): DataFrame = {
-    import graft.functions.VectorFunctions._
-    df.select(col(id).as("vid"), asDoubles(col(vec)).as("v"))
-      .withColumn("nrm", l2Norm(col("v")))
   }
 
   /** Exact cosine of the two sides' vectors; NULL (the pair falls out)
@@ -1179,7 +1170,8 @@ object Dedup {
     val spark = delta.sparkSession
     val (cand, lookup) = probeIndex(
       embBandTable(delta, id, vec, idx.dim, idx.bitsPerBand, idx.numBands),
-      spark.table(idx.bandsTable), normedVectors(delta, id, vec),
+      spark.table(idx.bandsTable),
+      Similarity.normedVectors(delta, id, vec, "vid", "v", "nrm"),
       spark.table(idx.vectorsTable))
     verify(cand, lookup, t, "cosine", ("id1", "id2"))(cosine)
   }
@@ -1225,7 +1217,7 @@ object Dedup {
               lit(0.0).as("cosine")).limit(0)
         }
     val (bits, bands) = Similarity.bandingFor(threshold, maxBands)
-    val vecs = normedVectors(df, id, vec)
+    val vecs = Similarity.normedVectors(df, id, vec, "vid", "v", "nrm")
     // spread before the band-key kernel ONLY (bits x bands hyperplane
     // dots per row — measured at sf0.1: 3.4 s of pure CPU on the
     // 2 tasks a bytes-sized scan yields, with 30 cores idle; guard

@@ -32,9 +32,9 @@ import org.apache.spark.sql.functions._
   * degrade per-row to `decoded = false`, with
   * [[VideoDemux.extractSamples]] resolving the exact byte ranges a
   * caller routes to an external codec. Independent of any codec, the
-  * BYTE-STREAM operators below ([[byteFeatures]] / [[byteFrameSlices]]
-  * / [[padPayload]]) compute deterministic features, slices and
-  * normalization over opaque payloads — the honest thing to compute
+  * BYTE-STREAM operators below ([[byteFeatures]] /
+  * [[byteFrameSlices]]) compute deterministic features and slices
+  * over opaque payloads — the honest thing to compute
   * when the bytes are not decodable in-process, with the same
   * batching/partitioning shape as the real decoders.
   */
@@ -354,18 +354,6 @@ object Multimodal {
 
   /** A decoded frame/tile: (record id, frame index, payload slice). */
   case class MediaFrame(id: Long, frame: Int, bytes: Array[Byte])
-
-  /** BYTE-LEVEL payload normalization: deterministically truncate/pad
-    * the payload to `targetBytes` — fixed-size record shaping for
-    * payloads that are not pixel-decodable in-process (for images use
-    * the REAL [[resizeImage]], which re-encodes pixels). Partitioning
-    * and batch shape (one record in, one record out, no driver
-    * involvement) are the production contract. */
-  def padPayload(r: MediaRecord, targetBytes: Int): MediaRecord = {
-    val src = Option(r.payload).getOrElse(Array.emptyByteArray)
-    val out = java.util.Arrays.copyOf(src, targetBytes)
-    r.copy(payload = out)
-  }
 
   /** BYTE-STREAM frame slicing: emits every `stride`-th 64-byte slice
     * of an opaque payload (for real video frame sampling at a TIME

@@ -250,6 +250,27 @@ object Selection {
         (col("score_micro") > 0L).as("pred"))
   }
 
+  /** Tercile labels over a scored frame's `avg_lp` — the shared back
+    * half of both [[perplexityBuckets]] overloads (one copy of the
+    * bucket rule, zero drift — review finding): avg_lp is rounded to
+    * 4 decimals, so ×10^4 is integral up to FP dust and
+    * round-to-nearest lands every score exactly on the long grid;
+    * boundaries are discrete data values via the shared
+    * `discreteBounds` cum-sum, 1-row broadcast, row-local label. */
+  private def tercileBuckets(scored: DataFrame,
+                             passthrough: Seq[String]): DataFrame = {
+    val g = scored.withColumn("__s",
+      round(col("avg_lp") * 10000, 0).cast("long"))
+    val bounds = Sampling.discreteBounds(g, "__s", Seq(1.0 / 3, 2.0 / 3))
+    g.crossJoin(broadcast(bounds))
+      .withColumn("bucket",
+        when(col("__s") > col("__b1"), lit("head"))
+          .when(col("__s") > col("__b0"), lit("middle"))
+          .otherwise(lit("tail")))
+      .select((Seq("doc") ++ passthrough ++
+        Seq("avg_lp", "bucket")).map(col): _*)
+  }
+
   /** CCNet-style head/middle/tail partition (Wenzek et al., "CCNet:
     * Extracting High Quality Monolingual Datasets from Web Crawl
     * Data", LREC 2020): score every document against a reference-
@@ -279,27 +300,6 @@ object Selection {
     * Output: (doc, n_bigrams, n_unseen, avg_lp, bucket∈{head,middle,
     * tail}). Documents with fewer than two tokens have no bigrams and
     * drop out (bigramLogProbAgainst's contract). */
-  /** Tercile labels over a scored frame's `avg_lp` — the shared back
-    * half of both [[perplexityBuckets]] overloads (one copy of the
-    * bucket rule, zero drift — review finding): avg_lp is rounded to
-    * 4 decimals, so ×10^4 is integral up to FP dust and
-    * round-to-nearest lands every score exactly on the long grid;
-    * boundaries are discrete data values via the shared
-    * `discreteBounds` cum-sum, 1-row broadcast, row-local label. */
-  private def tercileBuckets(scored: DataFrame,
-                             passthrough: Seq[String]): DataFrame = {
-    val g = scored.withColumn("__s",
-      round(col("avg_lp") * 10000, 0).cast("long"))
-    val bounds = Sampling.discreteBounds(g, "__s", Seq(1.0 / 3, 2.0 / 3))
-    g.crossJoin(broadcast(bounds))
-      .withColumn("bucket",
-        when(col("__s") > col("__b1"), lit("head"))
-          .when(col("__s") > col("__b0"), lit("middle"))
-          .otherwise(lit("tail")))
-      .select((Seq("doc") ++ passthrough ++
-        Seq("avg_lp", "bucket")).map(col): _*)
-  }
-
   def perplexityBuckets(train: DataFrame, score: DataFrame, idCol: String,
                         textCol: String, k: Double = 0.5): DataFrame =
     tercileBuckets(
@@ -451,8 +451,8 @@ object Selection {
 
   /** DoReMi at the ORDER-n grain — [[doremiWeights]] with both loss
     * passes routed through the stupid-backoff LM
-    * ([[CorpusStats.ngramLogProbAgainst]] for the global generalist,
-    * [[CorpusStats.ngramLogProbAgainstBySource]] for each domain's
+    * ([[CorpusStats.ngramLogProbAgainst]]'s model for the global
+    * generalist, the same model per source for each domain's
     * specialist) instead of the add-k bigram surrogate: the paper's
     * excess-loss signal at CCNet's actual 5-gram grain is just
     * `order = 5` here. Everything downstream of the two scoring

@@ -25,10 +25,8 @@ case class IvfIndex(name: String, path: String) extends PersistedIndex {
   protected def guard: (String, String) = (corpusTable, "cid")
   protected def slices(df: DataFrame, id: String, vec: String,
                        append: Boolean): Seq[(String, DataFrame)] =
-    Seq(corpusTable -> Similarity.assignCells(df, id, vec,
-        df.sparkSession.table(centroidsTable), "cell", "centroid")
-      .select(col(id).as("cid"), asDoubles(col(vec)).as("cv"), col("cell"))
-      .withColumn("cn", l2Norm(col("cv"))))
+    Seq(corpusTable -> Similarity.cellVectors(df, id, vec,
+      df.sparkSession.table(centroidsTable), "cell", "centroid"))
 }
 
 /** Handle to a persisted IVF-PQ index (see
@@ -54,27 +52,38 @@ case class IvfPqIndex(name: String, path: String) extends PersistedIndex {
   protected def slices(df: DataFrame, id: String, vec: String,
                        append: Boolean): Seq[(String, DataFrame)] = {
     val spark = df.sparkSession
-    Seq(corpusTable -> Similarity.pqEncoded(Similarity.assignCells(df, id,
-        vec, spark.table(centroidsTable), "cell", "centroid")
-      .select(col(id).cast("long").as("cid"), asDoubles(col(vec)).as("cv"),
-        col("cell").cast("long").as("cell")),
+    Seq(corpusTable -> Similarity.pqEncoded(Similarity.cellVectors(df, id,
+        vec, spark.table(centroidsTable), "cell", "centroid"),
       Similarity.loadPqCodebook(spark, this)))
   }
 }
 
-/** Approximate / exact nearest-neighbor search over an embedding column.
+/** Exact and approximate nearest-neighbour search over an embedding
+  * column. Every search has one shape: it builds CANDIDATE PAIRS of a
+  * query frame `(qid, qv, qn)` and a corpus frame `(cid, cv, cn)`, and
+  * one exact cosine plus one per-query cut ([[topK]]) turn them into
+  * the shared output `(qid, rank: bigint, cid, sim)`: ties broken by
+  * ascending cid, sims on the 4-decimal grid, zero-norm and wrong-dim
+  * pairs dropped. The searches differ only in their candidates:
   *
-  * - [[bruteForceKnn]]: exact top-k by cosine — the correctness baseline.
-  *   Query side is broadcast (queries << corpus), so the corpus is scanned
-  *   once with no shuffle of the big side; per-partition top-k then a final
-  *   k-merge via window rank.
-  * - [[ivfKnn]]: inverted-file ANN — assign every corpus vector to its
-  *   nearest centroid (broadcast centroids), then search only the query's
-  *   `nProbe` closest cells. At 100 TB the corpus is bucketed/partitioned
-  *   by cell id, so a query touches nProbe partitions instead of all.
-  * - [[cosineLshBandKeys]]: banded random-hyperplane signatures for LSH
-  *   candidate generation — deterministic planes from a seeded PRNG, so
-  *   signatures are reproducible across runs/JVMs.
+  * - [[bruteForceKnn]]: every corpus vector (queries broadcast, the
+  *   corpus scanned once) — the exact baseline.
+  * - [[hardNegatives]]: brute force over label-mismatched pairs.
+  * - [[ivfKnn]]: vectors in the query's `nProbe` nearest centroid
+  *   cells ([[assignCells]]).
+  * - [[knnGraph]]: [[ivfKnn]] with the corpus as its own queries,
+  *   joined shuffle-hash (nothing corpus-sized broadcasts).
+  * - [[ivfKnnFromIndex]]: [[ivfKnn]] over a persisted [[IvfIndex]],
+  *   partition-pruned to the probed cells.
+  * - [[lshKnn]]: vectors sharing a hyperplane-LSH band with the query
+  *   ([[cosineLshBandKeys]]).
+  * - [[rpKnn]]: the top `k * refine` by random-projection cosine.
+  * - [[sqKnn]]: the top `k * refine` by SQ8-code cosine, re-ranked on
+  *   the original vectors ([[rerank]]).
+  * - [[pqKnn]]: the top `k * refine` by PQ asymmetric distance
+  *   ([[adcTopR]]), re-ranked on the original vectors.
+  * - [[ivfPqKnnFromIndex]]: [[pqKnn]]'s scan over the probed cells of
+  *   a persisted [[IvfPqIndex]], re-ranked on the index's vectors.
   */
 object Similarity {
 
@@ -92,26 +101,60 @@ object Similarity {
     df.withColumn(outCol, graft.expressions.VectorExprs.signedProject(
       asDoubles(col(vec)), dim, outDim, salt))
 
+  /** `(idCol, vCol, keep…, nCol)`: `vec` as doubles with its L2 norm —
+    * every query frame `(qid, qv, qn)`, every corpus frame
+    * `(cid, cv, cn)`, and the embedding dedup's `(vid, v, nrm)`. */
+  private[operators] def normedVectors(df: DataFrame, id: String,
+                                       vec: String, idCol: String,
+                                       vCol: String, nCol: String,
+                                       keep: Column*): DataFrame =
+    df.select(Seq(col(id).as(idCol), asDoubles(col(vec)).as(vCol)) ++ keep: _*)
+      .withColumn(nCol, l2Norm(col(vCol)))
+
+  private def queryVectors(df: DataFrame, id: String, vec: String): DataFrame =
+    normedVectors(df, id, vec, "qid", "qv", "qn")
+
+  private def corpusVectors(df: DataFrame, id: String, vec: String): DataFrame =
+    normedVectors(df, id, vec, "cid", "cv", "cn")
+
+  /** The per-query cut: the rows of `df` whose `row_number` over
+    * (qid ORDER BY `score` DESC, cid ASC) is at most `n`, numbered in
+    * `rank`. A filter straight over the window, so the planner bounds
+    * it to an n-heap per query and task (WindowGroupLimit). */
+  private def ranked(df: DataFrame, score: String, n: Int): DataFrame =
+    df.withColumn("rank", row_number().over(Window.partitionBy(col("qid"))
+        .orderBy(col(score).desc, col("cid").asc)))
+      .where(col("rank") <= n)
+
+  /** The exact tail of every search: the cosine of each candidate pair
+    * `(qid, qv, qn, cid, cv, cn, …)` — a NULL sim (zero-norm or
+    * wrong-dim vector) drops instead of taking a slot — cut to the top
+    * `k` per query, as `(qid, rank: bigint, cid, extra…, sim)` with
+    * sims rounded to 4 places and -0.0 normalized to 0.0. */
+  private def topK(pairs: DataFrame, k: Int, extra: String*): DataFrame =
+    ranked(pairs.withColumn("sim",
+          cosineFrom(dot(col("qv"), col("cv")), col("qn"), col("cn")))
+        .where(col("sim").isNotNull), "sim", k)
+      .select(Seq(col("qid"), col("rank").cast("bigint").as("rank"),
+        col("cid")) ++ extra.map(col) :+
+        (round(col("sim"), 4) + lit(0.0)).as("sim"): _*)
+
+  /** The exact re-rank of a compressed search's candidates `(qid, cid,
+    * …)`: their original vectors come from `corpus` `(cid, cv, cn)` —
+    * corpus-sized, so shuffle-hash pinned and never broadcast — and
+    * the few `queries` `(qid, qv, qn)` broadcast into [[topK]]. */
+  private def rerank(cand: DataFrame, corpus: DataFrame,
+                     queries: DataFrame, k: Int): DataFrame =
+    topK(cand.select(col("qid"), col("cid"))
+      .join(corpus.hint("shuffle_hash"), "cid")
+      .join(broadcast(queries), "qid"), k)
+
   /** Exact top-k neighbors by cosine for each query vector.
     * Output: (qid, rank, cid, sim). Ties broken by ascending cid. */
   def bruteForceKnn(queries: DataFrame, corpus: DataFrame, id: String,
-                    vec: String, k: Int): DataFrame = {
-    val q = queries.select(col(id).as("qid"), asDoubles(col(vec)).as("qv"))
-      .withColumn("qn", l2Norm(col("qv")))
-    val c = corpus.select(col(id).as("cid"), asDoubles(col(vec)).as("cv"))
-      .withColumn("cn", l2Norm(col("cv")))
-    val sims = c.join(broadcast(q), col("cid") =!= col("qid"))
-      .withColumn("sim", cosineFrom(dot(col("qv"), col("cv")), col("qn"), col("cn")))
-      // zero-norm vectors have NULL (undefined) sim — drop rather than
-      // letting a NULL row occupy a top-k slot
-      .where(col("sim").isNotNull)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("cid").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("bigint").as("rank"), col("cid"),
-        (round(col("sim"), 4) + lit(0.0)).as("sim"))
-  }
+                    vec: String, k: Int): DataFrame =
+    topK(corpusVectors(corpus, id, vec).join(
+      broadcast(queryVectors(queries, id, vec)), col("cid") =!= col("qid")), k)
 
   /** Hard-negative mining for contrastive training: per query, the k
     * most-similar corpus vectors whose LABEL DIFFERS — near the anchor
@@ -128,28 +171,16 @@ object Similarity {
     * planner-bounded (WindowGroupLimit) so each task holds a k-heap
     * per query. For corpus-scale anchor sets, run the same predicate
     * over an IVF/PQ candidate frame instead of the raw corpus — the
-    * filter composes with any ANN path's output. */
+    * filter composes with any ANN path's output.
+    * Output: (qid, rank, cid, clabel, sim). */
   def hardNegatives(queries: DataFrame, corpus: DataFrame, id: String,
-                    vec: String, label: String, k: Int): DataFrame = {
-    val q = queries.select(col(id).as("qid"), asDoubles(col(vec)).as("qv"),
-        col(label).as("qlabel"))
-      .withColumn("qn", l2Norm(col("qv")))
-    val c = corpus.select(col(id).as("cid"), asDoubles(col(vec)).as("cv"),
+                    vec: String, label: String, k: Int): DataFrame =
+    topK(normedVectors(corpus, id, vec, "cid", "cv", "cn",
         col(label).as("clabel"))
-      .withColumn("cn", l2Norm(col("cv")))
-    val sims = c.join(broadcast(q),
-        col("cid") =!= col("qid") && !(col("clabel") <=> col("qlabel")))
-      .withColumn("sim",
-        cosineFrom(dot(col("qv"), col("cv")), col("qn"), col("cn")))
-      .where(col("sim").isNotNull)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("cid").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("bigint").as("rank"),
-        col("cid"), col("clabel"),
-        (round(col("sim"), 4) + lit(0.0)).as("sim"))
-  }
+      .join(broadcast(normedVectors(queries, id, vec, "qid", "qv", "qn",
+          col(label).as("qlabel"))),
+        col("cid") =!= col("qid") && !(col("clabel") <=> col("qlabel"))),
+      k, "clabel")
 
   /** Assign each vector to its nearest centroid by cosine (ties: lowest
     * centroid id). Output: df + (cell, cell_sim).
@@ -161,9 +192,10 @@ object Similarity {
     * projection: no k-times row expansion, no rank shuffle — the corpus
     * is scanned once and never grows. Folding in ascending cell order
     * makes a strict `>` keep the lowest cell id on ties, matching the
-    * rank-formulation it replaces. */
-  /** Contract note: a vector whose length differs from the centroid dim
-    * gets `cell = -1` / `sim = -Infinity` (it matches no probe and is
+    * rank-formulation it replaces.
+    *
+    * A vector whose length differs from the centroid dim gets
+    * `cell = -1` / `sim = -Infinity` (it matches no probe and is
     * excluded from ANN search); filter `cell === -1` to audit such rows.
     * A zero vector's sims are all NaN and also lands on cell -1. */
   def assignCells(df: DataFrame, id: String, vec: String,
@@ -187,39 +219,28 @@ object Similarity {
       .drop("__best")
   }
 
-  /** Each query's nProbe nearest centroids (broadcast centroid table).
-    * Output: (qid, qv, qn, cell). */
-  private def queryProbes(queries: DataFrame, id: String, vec: String,
-                          centroids: DataFrame, centId: String,
-                          centVec: String, nProbe: Int): DataFrame = {
-    val c = centroids.select(col(centId).as("__cell"),
-        asDoubles(col(centVec)).as("__cv"))
-      .withColumn("__cvn", l2Norm(col("__cv")))
-    val qw = Window.partitionBy(col("qid"))
-      .orderBy(col("__csim").desc, col("__cell").asc)
-    queries.select(col(id).as("qid"), asDoubles(col(vec)).as("qv"))
-      .withColumn("qn", l2Norm(col("qv")))
-      .join(broadcast(c), lit(true))
-      .withColumn("__csim",
-        cosineFrom(dot(col("qv"), col("__cv")), col("qn"), col("__cvn")))
-      .withColumn("__rn", row_number().over(qw))
-      .where(col("__rn") <= nProbe)
-      .select(col("qid"), col("qv"), col("qn"), col("__cell").as("cell"))
-  }
+  /** `(cid, cv, cell, cn)`: the corpus frame with each vector's
+    * [[assignCells]] cell — the IVF search side, and the table an
+    * [[IvfIndex]] persists. */
+  private[operators] def cellVectors(df: DataFrame, id: String, vec: String,
+                                     centroids: DataFrame, centId: String,
+                                     centVec: String): DataFrame =
+    normedVectors(assignCells(df, id, vec, centroids, centId, centVec),
+      id, vec, "cid", "cv", "cn", col("cell"))
 
-  /** Join probes to the cell-assigned corpus and rank to top-k.
-    * corpusCells: (cid, cv, cn, cell). Output: (qid, rank, cid, sim). */
-  private def probeAndRank(corpusCells: DataFrame, probes: DataFrame,
-                           k: Int): DataFrame = {
-    val sims = corpusCells.join(broadcast(probes), Seq("cell"))
-      .where(col("cid") =!= col("qid"))
-      .withColumn("sim", cosineFrom(dot(col("qv"), col("cv")), col("qn"), col("cn")))
-      .where(col("sim").isNotNull) // zero-norm guard, as in bruteForceKnn
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("bigint").as("rank"), col("cid"),
-        (round(col("sim"), 4) + lit(0.0)).as("sim"))
+  /** Each query of the frame `q` `(qid, qv, qn)` with its nProbe nearest
+    * centroids (centroid table broadcast): `(qid, qv, qn, cell)`. The
+    * centroid ids ride in `cid` through the cut, so ties keep the
+    * lowest cell. */
+  private def queryProbes(q: DataFrame, centroids: DataFrame,
+                          centId: String, centVec: String,
+                          nProbe: Int): DataFrame = {
+    val c = normedVectors(centroids, centId, centVec, "cid", "__cv", "__cvn")
+    ranked(q.join(broadcast(c), lit(true))
+        .withColumn("__csim",
+          cosineFrom(dot(col("qv"), col("__cv")), col("qn"), col("__cvn"))),
+        "__csim", nProbe)
+      .select(col("qid"), col("qv"), col("qn"), col("cid").as("cell"))
   }
 
   /** IVF ANN: top-k within the query's own cell (nProbe=1) or its nProbe
@@ -230,11 +251,11 @@ object Similarity {
   def ivfKnn(queries: DataFrame, corpus: DataFrame, id: String, vec: String,
              centroids: DataFrame, centId: String, centVec: String,
              k: Int, nProbe: Int = 1): DataFrame = {
-    val corpusCells = assignCells(corpus, id, vec, centroids, centId, centVec)
-      .select(col(id).as("cid"), asDoubles(col(vec)).as("cv"), col("cell"))
-      .withColumn("cn", l2Norm(col("cv")))
-    probeAndRank(corpusCells,
-      queryProbes(queries, id, vec, centroids, centId, centVec, nProbe), k)
+    val probes = queryProbes(queryVectors(queries, id, vec), centroids,
+      centId, centVec, nProbe)
+    topK(cellVectors(corpus, id, vec, centroids, centId, centVec)
+      .join(broadcast(probes), Seq("cell"))
+      .where(col("cid") =!= col("qid")), k)
   }
 
   /** Whole-corpus kNN GRAPH via IVF cells — every vector's top-k
@@ -253,23 +274,12 @@ object Similarity {
   def knnGraph(vecs: DataFrame, id: String, vec: String,
                centroids: DataFrame, centId: String, centVec: String,
                k: Int, nProbe: Int = 1): DataFrame = {
-    val corpusCells = assignCells(vecs, id, vec, centroids, centId, centVec)
-      .select(col(id).as("cid"), asDoubles(col(vec)).as("cv"), col("cell"))
-      .withColumn("cn", l2Norm(col("cv")))
-    val probes =
-      queryProbes(vecs, id, vec, centroids, centId, centVec, nProbe)
-    val sims = corpusCells.hint("shuffle_hash")
+    val probes = queryProbes(queryVectors(vecs, id, vec), centroids,
+      centId, centVec, nProbe)
+    topK(cellVectors(vecs, id, vec, centroids, centId, centVec)
+      .hint("shuffle_hash")
       .join(probes.hint("shuffle_hash"), Seq("cell"))
-      .where(col("cid") =!= col("qid"))
-      .withColumn("sim",
-        cosineFrom(dot(col("qv"), col("cv")), col("qn"), col("cn")))
-      .where(col("sim").isNotNull)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("cid").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("bigint").as("rank"), col("cid"),
-        (round(col("sim"), 4) + lit(0.0)).as("sim"))
+      .where(col("cid") =!= col("qid")), k)
   }
 
   /** The (cell, centroid) table an IVF or IVF-PQ index persists. */
@@ -302,20 +312,20 @@ object Similarity {
   def ivfKnnFromIndex(spark: SparkSession, queries: DataFrame, id: String,
                       vec: String, idx: IvfIndex, k: Int,
                       nProbe: Int = 1): DataFrame = {
-    val cents = spark.table(idx.centroidsTable)
     // collect the probe rows ONCE (O(queries x nProbe) by the few-
     // queries contract) and rebuild the probe frame from them — lazily
     // reusing the plan would re-run the centroid join + window twice,
     // once for the cell collect and again inside the ranking join
-    val probes = queryProbes(queries, id, vec, cents, "cell", "centroid",
-      nProbe)
+    val probes = queryProbes(queryVectors(queries, id, vec),
+      spark.table(idx.centroidsTable), "cell", "centroid", nProbe)
     val probeRows = probes.collect()
     val cells = probeRows.map(_.getAs[Long]("cell")).distinct.toSeq
     val probesDf = spark.createDataFrame(
       java.util.Arrays.asList(probeRows: _*), probes.schema)
-    val corpus = spark.table(idx.corpusTable)
+    topK(spark.table(idx.corpusTable)
       .where(col("cell").isInCollection(cells))
-    probeAndRank(corpus, probesDf, k)
+      .join(broadcast(probesDf), Seq("cell"))
+      .where(col("cid") =!= col("qid")), k)
   }
 
   /** Train IVF centroids with seeded k-means (deterministic).
@@ -536,10 +546,8 @@ object Similarity {
   def lshKnn(queries: DataFrame, corpus: DataFrame, id: String, vec: String,
              dim: Int, k: Int, bitsPerBand: Int = 6,
              numBands: Int = 24): DataFrame = {
-    val qv = queries.select(col(id).as("qid"), asDoubles(col(vec)).as("qv"))
-      .withColumn("qn", l2Norm(col("qv")))
-    val cv = corpus.select(col(id).as("cid"), asDoubles(col(vec)).as("cv"))
-      .withColumn("cn", l2Norm(col("cv")))
+    val qv = queryVectors(queries, id, vec)
+    val cv = corpusVectors(corpus, id, vec)
     val qBands = qv.select(col("qid"), posexplode(
       cosineLshBandKeys(col("qv"), dim, bitsPerBand, numBands))
       .as(Seq("band", "bkey")))
@@ -552,17 +560,9 @@ object Similarity {
     val cand = cBands.join(broadcast(qBands), Seq("band", "bkey"))
       .where(col("cid") =!= col("qid"))
       .select(col("qid"), col("cid")).distinct()
-    val sims = cand.join(cv, "cid").join(broadcast(qv), "qid")
-      .withColumn("sim", cosineFrom(dot(col("qv"), col("cv")), col("qn"), col("cn")))
-      // a wrong-dim vector's all-zero band keys can collide with a
-      // legitimate all-negative-signs key; its dot (and sim) is NULL —
-      // drop it rather than letting a NULL-sim row take a top-k slot
-      .where(col("sim").isNotNull)
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid").asc)
-    sims.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("bigint").as("rank"), col("cid"),
-        (round(col("sim"), 4) + lit(0.0)).as("sim"))
+    // a wrong-dim vector's all-zero band keys can collide with a
+    // legitimate all-negative-signs key; topK drops its NULL sim
+    topK(cand.join(cv, "cid").join(broadcast(qv), "qid"), k)
   }
 
   /** RP→rerank ANN: candidates scored in Johnson-Lindenstrauss
@@ -590,15 +590,11 @@ object Similarity {
             dim: Int, outDim: Int, salt: String, k: Int,
             refine: Int = 16): DataFrame = {
     require(k >= 1 && refine >= 1, s"need k, refine >= 1, got $k, $refine")
-    val q = randomProject(
-        queries.select(col(id).as("qid"), asDoubles(col(vec)).as("qv")),
-        "qv", dim, outDim, salt, "qp")
-      .withColumn("qn", l2Norm(col("qv")))
+    val q = randomProject(queryVectors(queries, id, vec), "qv", dim, outDim,
+        salt, "qp")
       .withColumn("qpn", l2Norm(col("qp")))
-    val c = randomProject(
-        corpus.select(col(id).as("cid"), asDoubles(col(vec)).as("cv")),
-        "cv", dim, outDim, salt, "cp")
-      .withColumn("cn", l2Norm(col("cv")))
+    val c = randomProject(corpusVectors(corpus, id, vec), "cv", dim, outDim,
+        salt, "cp")
       .withColumn("cpn", l2Norm(col("cp")))
     val scored = c.join(broadcast(q), col("cid") =!= col("qid"))
       .withColumn("psim",
@@ -607,20 +603,7 @@ object Similarity {
       // degrade rule) → NULL RP cosine; a zero vector likewise — both
       // drop here instead of occupying candidate slots
       .where(col("psim").isNotNull)
-    val wp = Window.partitionBy(col("qid"))
-      .orderBy(col("psim").desc, col("cid").asc)
-    val cand = scored.withColumn("prank", row_number().over(wp))
-      .where(col("prank") <= k * refine)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("cid").asc)
-    cand
-      .withColumn("sim",
-        cosineFrom(dot(col("qv"), col("cv")), col("qn"), col("cn")))
-      .where(col("sim").isNotNull)
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("bigint").as("rank"), col("cid"),
-        (round(col("sim"), 4) + lit(0.0)).as("sim"))
+    topK(ranked(scored, "psim", k * refine).drop("rank"), k)
   }
 
   // --------------------------------------------------------------------
@@ -677,8 +660,7 @@ object Similarity {
             k: Int, codebook: SqCodebook, refine: Int = 4): DataFrame = {
     import graft.expressions.VectorExprs
     require(refine >= 1, s"refine must be >= 1, got $refine")
-    val q = queries.select(col(id).as("qid"), asDoubles(col(vec)).as("qv"))
-      .withColumn("qn", l2Norm(col("qv")))
+    val q = queryVectors(queries, id, vec)
     // one-pass encode: byte code + dequantized norm
     val enc = corpus.select(col(id).as("cid"),
         VectorExprs.sqEncode(asDoubles(col(vec)), codebook.mins,
@@ -691,25 +673,8 @@ object Similarity {
           codebook.scales),
         col("qn"), col("dnorm")))
       .where(col("asim").isNotNull)
-    val wA = Window.partitionBy(col("qid"))
-      .orderBy(col("asim").desc, col("cid").asc)
-    val cand = scored.withColumn("r", row_number().over(wA))
-      .where(col("r") <= k * refine)
-      .select(col("qid"), col("cid"))
-    // refine: exact cosine on the candidates' ORIGINAL vectors — the
-    // corpus lookup side is corpus-sized, pin shuffle-hash
-    val cv = corpus.select(col(id).as("cid"), asDoubles(col(vec)).as("cv"))
-      .withColumn("cn", l2Norm(col("cv")))
-      .hint("shuffle_hash")
-    val exact = cand.join(cv, "cid").join(broadcast(q), "qid")
-      .withColumn("sim", cosineFrom(dot(col("qv"), col("cv")), col("qn"), col("cn")))
-      .where(col("sim").isNotNull)
-    val wE = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("cid").asc)
-    exact.withColumn("rank", row_number().over(wE))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("bigint").as("rank"), col("cid"),
-        (round(col("sim"), 4) + lit(0.0)).as("sim"))
+    rerank(ranked(scored, "asim", k * refine), corpusVectors(corpus, id, vec),
+      q, k)
   }
 
   // --------------------------------------------------------------------
@@ -796,123 +761,135 @@ object Similarity {
     require(refine >= 1, s"refine must be >= 1, got $refine")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val m = cb.m; val dsub = cb.dsub; val kSub = cb.codesPerSub
-    val qRows = queries
-      .select(col(id).cast("long").as("qid"), asDoubles(col(vec)).as("qv"))
-      .where(col("qv").isNotNull).collect()
-      .map(r => (r.getLong(0), r.getAs[Seq[Double]](1).toArray))
-    require(qRows.nonEmpty, "pqKnn: no queries")
-    qRows.foreach { case (qid, qv) => require(qv.length == cb.dim,
-      s"pqKnn: query $qid has dim ${qv.length}, codebook dim ${cb.dim}") }
-    // centroid norm² per (sub, code): the reconstruction's norm² is the
-    // sum over subspaces (subspaces are disjoint coordinates)
-    val cn2 = Array.tabulate(m, kSub) { (s, c) =>
-      val cent = cb.centroids(s)(c)
-      var t = 0.0; var j = 0
-      while (j < dsub) { t += cent(j) * cent(j); j += 1 }
-      t
-    }
-    val qids = qRows.map(_._1)
-    val qns = qRows.map { case (_, qv) =>
-      math.sqrt(qv.map(x => x * x).sum) }
-    val luts = qRows.map { case (_, qv) =>
-      Array.tabulate(m, kSub) { (s, c) =>
-        val cent = cb.centroids(s)(c)
-        var t = 0.0; var j = 0
-        while (j < dsub) { t += qv(s * dsub + j) * cent(j); j += 1 }
-        t
-      }
-    }
-    val centsArr = cb.centroids.map(_.toArray).toArray
-    val bc = spark.sparkContext.broadcast((qids, qns, luts, cn2, centsArr))
+    val aq = adcQueries(queryVectors(queries, id, vec), cb, "pqKnn")
+    val dsub = cb.dsub
     val topR = k * refine
+    val bc = spark.sparkContext.broadcast(
+      (aq, cb.centroids.map(_.toArray).toArray, pqCentNorm2(cb)))
     val cand = corpus
       .select(col(id).cast("long").as("cid"), asDoubles(col(vec)).as("cv"))
       .where(col("cv").isNotNull)
       .as[(Long, Seq[Double])]
       .mapPartitions { it =>
-        val (bQids, bQns, bLuts, bCn2, bCents) = bc.value
-        val nq = bQids.length
-        // per-query min-heap of (asim, cid): head = worst survivor
-        val heaps = Array.fill(nq)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-            Ordering.by[(Double, Long), Double](_._1).reverse))
-        it.foreach { case (cid, cvSeq) =>
-          val (codes, cn2sum) = pqEncode(cvSeq.toArray, bCents, bCn2, dsub)
-          val cnorm = math.sqrt(cn2sum)
-          var q = 0
-          while (q < nq) {
-            if (bQids(q) != cid && cnorm > 0 && bQns(q) > 0) {
-              var dot = 0.0; var s2 = 0
-              while (s2 < m) { dot += bLuts(q)(s2)(codes(s2) & 0xff); s2 += 1 }
-              val asim = dot / (bQns(q) * cnorm)
-              val h = heaps(q)
-              if (h.size < topR) h.enqueue((asim, cid))
-              else if (asim > h.head._1) { h.dequeue(); h.enqueue((asim, cid)) }
-            }
-            q += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-          h.iterator.map { case (asim, cid) => (bQids(q), cid, asim) }
-        }
+        val (q, cents, cn2) = bc.value
+        // encoded inside the scan; every query probes every row
+        val every = q.qids.indices.toArray
+        adcTopR(it.flatMap { case (cid, cv) =>
+          pqEncode(cv.toArray, cents, cn2, dsub).map { case (codes, n2) =>
+            (cid, codes, math.sqrt(n2), every) }
+        }, q, topR)
       }
       .toDF("qid", "cid", "asim")
-    val wA = Window.partitionBy(col("qid"))
-      .orderBy(col("asim").desc, col("cid").asc)
-    val top = cand.withColumn("r", row_number().over(wA))
-      .where(col("r") <= topR)
-      .select(col("qid"), col("cid"))
-    // exact refine on original vectors — same tail as sqKnn
-    val q = spark.createDataFrame(
-        java.util.Arrays.asList(qRows.map { case (qid, qv) =>
-          org.apache.spark.sql.Row(qid, qv.toSeq) }: _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("qid",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("qv",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.DoubleType)))))
-      .withColumn("qn", l2Norm(col("qv")))
-    val cv = corpus.select(col(id).cast("long").as("cid"),
-        asDoubles(col(vec)).as("cv"))
-      .withColumn("cn", l2Norm(col("cv")))
-      .hint("shuffle_hash")
-    val exact = top.join(cv, "cid").join(broadcast(q), "qid")
-      .withColumn("sim",
-        cosineFrom(dot(col("qv"), col("cv")), col("qn"), col("cn")))
-      .where(col("sim").isNotNull)
-    val wE = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("cid").asc)
-    exact.withColumn("rank", row_number().over(wE))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("bigint").as("rank"), col("cid"),
-        (round(col("sim"), 4) + lit(0.0)).as("sim"))
+    rerank(ranked(cand, "asim", topR), corpusVectors(corpus, id, vec),
+      aq.frame(spark), k)
+  }
+
+  /** The driver half of an ADC scan: the few queries of `q` (`qid, qv,
+    * qn`, plus `cell` when they probe an index) in qid order, each with
+    * its [[pqLutFor]] lookup table, and each probed cell's query
+    * indexes. */
+  private case class AdcQueries(qids: Array[Long], qvs: Array[Array[Double]],
+                                qns: Array[Double],
+                                luts: Array[Array[Array[Double]]],
+                                cellToQ: Map[Long, Array[Int]]) {
+    /** `(qid, qv, qn)` for the exact [[rerank]]. */
+    def frame(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      qids.indices.map(i => (qids(i), qvs(i).toSeq, qns(i)))
+        .toDF("qid", "qv", "qn")
+    }
+  }
+
+  /** Collect the queries of an ADC scan once (O(queries x nProbe) by the
+    * few-queries contract): NULL vectors drop, ids read as bigint, and
+    * a query whose dim is not the codebook's fails loudly. */
+  private def adcQueries(q: DataFrame, cb: PqCodebook,
+                         op: String): AdcQueries = {
+    val probed = q.columns.contains("cell")
+    val rows = q.where(col("qv").isNotNull)
+      .withColumn("qid", col("qid").cast("long")).collect()
+    require(rows.nonEmpty, s"$op: no queries")
+    val byQ = rows.groupBy(_.getAs[Long]("qid"))
+    val qids = byQ.keys.toArray.sorted
+    val first = qids.map(byQ(_).head)
+    val qvs = first.map(_.getAs[Seq[Double]]("qv").toArray)
+    qids.indices.foreach { i => require(qvs(i).length == cb.dim,
+      s"$op: query ${qids(i)} has dim ${qvs(i).length}, " +
+        s"codebook dim ${cb.dim}") }
+    val qIdx = qids.zipWithIndex.toMap
+    val cellToQ =
+      if (!probed) Map.empty[Long, Array[Int]]
+      else rows.groupBy(_.getAs[Long]("cell")).map { case (c, rs) =>
+        c -> rs.map(r => qIdx(r.getAs[Long]("qid"))).distinct }
+    AdcQueries(qids, qvs, first.map(_.getAs[Double]("qn")),
+      qvs.map(pqLutFor(_, cb)), cellToQ)
+  }
+
+  /** The one ADC heap loop, over one partition of rows `(cid, codes,
+    * dnorm, qs)`: each row scores against the query indexes `qs` that
+    * probe it — `m` lookup-table adds per pair, never a d-dim dot — and
+    * a bounded min-heap keeps each query's `topR` best, so a partition
+    * emits at most queries × topR rows `(qid, cid, asim)` and the
+    * shuffle after the scan carries kilobytes, not the corpus. */
+  private def adcTopR(rows: Iterator[(Long, Array[Byte], Double, Array[Int])],
+                      q: AdcQueries,
+                      topR: Int): Iterator[(Long, Long, Double)] = {
+    // per-query min-heap of (asim, cid): head = worst survivor
+    val heaps = Array.fill(q.qids.length)(
+      scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
+        Ordering.by[(Double, Long), Double](_._1).reverse))
+    rows.foreach { case (cid, codes, dnorm, qs) =>
+      var qi = 0
+      while (qi < qs.length) {
+        val i = qs(qi)
+        if (q.qids(i) != cid && dnorm > 0 && q.qns(i) > 0) {
+          val lut = q.luts(i)
+          var dot = 0.0; var s = 0
+          while (s < codes.length) { dot += lut(s)(codes(s) & 0xff); s += 1 }
+          val asim = dot / (q.qns(i) * dnorm)
+          val h = heaps(i)
+          if (h.size < topR) h.enqueue((asim, cid))
+          else if (asim > h.head._1) { h.dequeue(); h.enqueue((asim, cid)) }
+        }
+        qi += 1
+      }
+    }
+    heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
+      h.iterator.map { case (asim, cid) => (q.qids(i), cid, asim) }
+    }
   }
 
   /** Encode one vector against PQ codebooks: per-subspace argmin code
     * (one byte each) + the reconstruction's norm² (sum of the chosen
-    * centroids' norm² — subspaces are disjoint coordinates). */
+    * centroids' norm² — subspaces are disjoint coordinates). None for a
+    * vector whose length is not the codebook's dim: it is left out of
+    * PQ search and of the IVF-PQ index, as SQ8 encodes it to NULL and
+    * IVF assigns it cell -1. */
   private def pqEncode(cv: Array[Double], cents: Array[Array[Array[Double]]],
                        cn2: Array[Array[Double]], dsub: Int)
-      : (Array[Byte], Double) = {
+      : Option[(Array[Byte], Double)] = {
     val m = cents.length
-    val codes = new Array[Byte](m)
-    var cn2sum = 0.0
-    var s = 0
-    while (s < m) {
-      var best = 0; var bestD = Double.MaxValue
-      var c = 0
-      while (c < cents(s).length) {
-        val cent = cents(s)(c)
-        var d = 0.0; var j = 0
-        while (j < dsub) { val t = cv(s * dsub + j) - cent(j); d += t * t; j += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
+    if (cv.length != m * dsub) None
+    else {
+      val codes = new Array[Byte](m)
+      var cn2sum = 0.0
+      var s = 0
+      while (s < m) {
+        var best = 0; var bestD = Double.MaxValue
+        var c = 0
+        while (c < cents(s).length) {
+          val cent = cents(s)(c)
+          var d = 0.0; var j = 0
+          while (j < dsub) {
+            val t = cv(s * dsub + j) - cent(j); d += t * t; j += 1
+          }
+          if (d < bestD) { bestD = d; best = c }
+          c += 1
+        }
+        codes(s) = best.toByte; cn2sum += cn2(s)(best); s += 1
       }
-      codes(s) = best.toByte; cn2sum += cn2(s)(best); s += 1
+      Some((codes, cn2sum))
     }
-    (codes, cn2sum)
   }
 
   /** centroid norm² per (sub, code) for a codebook. */
@@ -961,26 +938,25 @@ object Similarity {
         }.toDF("sub", "code", "centroid").coalesce(1))
   }
 
-  /** Encode assigned (cid, cv, cell) rows against `cb`: one IVF-PQ
-    * corpus slice. */
-  private[operators] def pqEncoded(assigned: DataFrame,
+  /** Encode the [[cellVectors]] frame `(cid, cv, cell, cn)` against
+    * `cb`: one IVF-PQ corpus slice, NULL and wrong-dim vectors left
+    * out (see [[pqEncode]]). */
+  private[operators] def pqEncoded(cells: DataFrame,
                                    cb: PqCodebook): DataFrame = {
-    val spark = assigned.sparkSession
+    val spark = cells.sparkSession
     import spark.implicits._
-    val cn2 = pqCentNorm2(cb)
-    val centsArr = cb.centroids.map(_.toArray).toArray
     val dsub = cb.dsub
-    val bc = spark.sparkContext.broadcast((centsArr, cn2))
-    assigned.as[(Long, Seq[Double], Long)]
+    val bc = spark.sparkContext.broadcast(
+      (cb.centroids.map(_.toArray).toArray, pqCentNorm2(cb)))
+    cells.where(col("cv").isNotNull)
+      .select(col("cid").cast("long"), col("cv"), col("cell").cast("long"),
+        col("cn"))
+      .as[(Long, Seq[Double], Long, Double)]
       .mapPartitions { it =>
-        val (bCents, bCn2) = bc.value
-        it.map { case (cid, cvSeq, cell) =>
-          val cv = cvSeq.toArray
-          val (codes, cn2sum) = pqEncode(cv, bCents, bCn2, dsub)
-          var n2 = 0.0; var j = 0
-          while (j < cv.length) { n2 += cv(j) * cv(j); j += 1 }
-          PqIndexedRow(cid, cell, codes, math.sqrt(cn2sum), cvSeq,
-            math.sqrt(n2))
+        val (cents, cn2) = bc.value
+        it.flatMap { case (cid, cv, cell, cn) =>
+          pqEncode(cv.toArray, cents, cn2, dsub).map { case (codes, n2) =>
+            PqIndexedRow(cid, cell, codes, math.sqrt(n2), cv, cn) }
         }
       }.toDF()
   }
@@ -1013,94 +989,26 @@ object Similarity {
                         nProbe: Int = 1, refine: Int = 8): DataFrame = {
     import spark.implicits._
     require(refine >= 1, s"refine must be >= 1, got $refine")
-    val cb = loadPqCodebook(spark, idx)
-    val cents = spark.table(idx.centroidsTable)
-    val probeRows = queryProbes(queries, id, vec, cents, "cell", "centroid",
-      nProbe).collect()
-    require(probeRows.nonEmpty, "ivfPqKnnFromIndex: no queries")
-    // per-query state (deterministic order), plus cell -> query indexes
-    val qids = probeRows.map(_.getAs[Long]("qid")).distinct.sorted
-    val qIdx = qids.zipWithIndex.toMap
-    val qvs = new Array[Array[Double]](qids.length)
-    val qns = new Array[Double](qids.length)
-    probeRows.foreach { r =>
-      val i = qIdx(r.getAs[Long]("qid"))
-      if (qvs(i) == null) {
-        qvs(i) = r.getAs[Seq[Double]]("qv").toArray
-        qns(i) = r.getAs[Double]("qn")
-      }
-    }
-    qvs.zipWithIndex.foreach { case (qv, i) => require(qv.length == cb.dim,
-      s"query ${qids(i)} dim ${qv.length} != codebook dim ${cb.dim}") }
-    val luts = qvs.map(pqLutFor(_, cb))
-    val cellToQ: Map[Long, Array[Int]] = probeRows
-      .map(r => (r.getAs[Long]("cell"), qIdx(r.getAs[Long]("qid"))))
-      .groupBy(_._1).map { case (c, ps) => c -> ps.map(_._2).distinct }
-    val cells = cellToQ.keys.toSeq
+    val aq = adcQueries(queryProbes(queryVectors(queries, id, vec),
+        spark.table(idx.centroidsTable), "cell", "centroid", nProbe),
+      loadPqCodebook(spark, idx), "ivfPqKnnFromIndex")
     val topR = k * refine
-    val bc = spark.sparkContext.broadcast((qids, qns, luts, cellToQ))
-    val m = cb.m
-    val cand = spark.table(idx.corpusTable)
-      .where(col("cell").isInCollection(cells))
+    val bc = spark.sparkContext.broadcast(aq)
+    val probed = spark.table(idx.corpusTable)
+      .where(col("cell").isInCollection(aq.cellToQ.keys.toSeq))
+    val cand = probed
       .select(col("cid"), col("cell"), col("codes"), col("dnorm"))
       .as[(Long, Long, Array[Byte], Double)]
       .mapPartitions { it =>
-        val (bQids, bQns, bLuts, bCellToQ) = bc.value
-        val heaps = Array.fill(bQids.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-            Ordering.by[(Double, Long), Double](_._1).reverse))
-        it.foreach { case (cid, cell, codes, dnorm) =>
-          val qs = bCellToQ.getOrElse(cell, Array.emptyIntArray)
-          var qi = 0
-          while (qi < qs.length) {
-            val q = qs(qi)
-            if (bQids(q) != cid && dnorm > 0 && bQns(q) > 0) {
-              var dot = 0.0; var s = 0
-              while (s < m) { dot += bLuts(q)(s)(codes(s) & 0xff); s += 1 }
-              val asim = dot / (bQns(q) * dnorm)
-              val h = heaps(q)
-              if (h.size < topR) h.enqueue((asim, cid))
-              else if (asim > h.head._1) { h.dequeue(); h.enqueue((asim, cid)) }
-            }
-            qi += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-          h.iterator.map { case (asim, cid) => (bQids(q), cid, asim) }
-        }
+        val q = bc.value
+        adcTopR(it.map { case (cid, cell, codes, dnorm) =>
+          (cid, codes, dnorm, q.cellToQ.getOrElse(cell, Array.emptyIntArray))
+        }, q, topR)
       }
       .toDF("qid", "cid", "asim")
-    val wA = Window.partitionBy(col("qid"))
-      .orderBy(col("asim").desc, col("cid").asc)
-    val top = cand.withColumn("r", row_number().over(wA))
-      .where(col("r") <= topR)
-      .select(col("qid"), col("cid"))
     // exact refine against the index's OWN vector column — still
     // partition-pruned to the probed cells, read only for candidates
-    val cv = spark.table(idx.corpusTable)
-      .where(col("cell").isInCollection(cells))
-      .select(col("cid"), col("cv"), col("cn"))
-      .hint("shuffle_hash")
-    val q = spark.createDataFrame(
-        java.util.Arrays.asList(qids.indices.map(i =>
-          org.apache.spark.sql.Row(qids(i), qvs(i).toSeq, qns(i))): _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("qid",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("qv",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.DoubleType)),
-          org.apache.spark.sql.types.StructField("qn",
-            org.apache.spark.sql.types.DoubleType))))
-    val exact = top.join(cv, "cid").join(broadcast(q), "qid")
-      .withColumn("sim",
-        cosineFrom(dot(col("qv"), col("cv")), col("qn"), col("cn")))
-      .where(col("sim").isNotNull)
-    val wE = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("cid").asc)
-    exact.withColumn("rank", row_number().over(wE))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("bigint").as("rank"), col("cid"),
-        (round(col("sim"), 4) + lit(0.0)).as("sim"))
+    rerank(ranked(cand, "asim", topR),
+      probed.select(col("cid"), col("cv"), col("cn")), aq.frame(spark), k)
   }
 }

@@ -413,7 +413,7 @@ class CorpusStatsSpec extends SparkSpec {
       .select("doc", "n_tokens", "n_oov", "n_backed", "avg_lp")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(4))).sortBy(_._1).toSeq
-    val bySrc = rows(CorpusStats.ngramLogProbAgainstBySource(
+    val bySrc = rows(CorpusStatsReference.ngramLogProbAgainstBySource(
       tr, ho, "doc_id", "text", "source", 3))
     val domains = ho.select("source").distinct()
       .collect().map(_.getString(0)).toSeq.sorted
@@ -429,7 +429,7 @@ class CorpusStatsSpec extends SparkSpec {
     val hoExtra = ho.select(
       (col("doc_id") + 900000L).as("doc_id"),
       lit("never_in_train").as("source"), col("text"))
-    val dropped = CorpusStats.ngramLogProbAgainstBySource(
+    val dropped = CorpusStatsReference.ngramLogProbAgainstBySource(
       tr, hoExtra, "doc_id", "text", "source", 3)
     assert(dropped.count() == 0L)
   }

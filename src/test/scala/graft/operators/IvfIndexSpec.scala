@@ -192,4 +192,30 @@ class IvfIndexSpec extends SparkSpec {
       assert(ok, "post-fold recall certificate failed at floor 0.3")
     } finally Seq(full, folded).foreach(_.drop(s))
   }
+
+  test("ivf-pq probe drops NULL query vectors and reads int ids as bigint") {
+    val s = spark
+    val emb = Tables.embeddings(s, sf())
+    val cents = emb.where(col("vec_id") < 10)
+    val queries = emb.where(col("vec_id").between(100, 104))
+    val cb = Similarity.trainPq(emb, "embedding", m = 16,
+      codesPerSub = 32, seed = 7L)
+    val idx = Similarity.buildIvfPqIndex(emb, "vec_id", "embedding",
+      cents, "vec_id", "embedding", cb, "ivfpq_spec_guard",
+      java.nio.file.Files.createTempDirectory("graft-ivfpq-spec").toString)
+    try {
+      val intIds = queries.select(col("vec_id").cast("int").as("vec_id"),
+        col("embedding"))
+      val withNull = intIds.unionByName(emb.where(col("vec_id") === 105)
+        .select(col("vec_id").cast("int").as("vec_id"),
+          lit(null).cast(emb.schema("embedding").dataType).as("embedding")))
+      for (nProbe <- Seq(1, 4)) {
+        val want = rows(Similarity.ivfPqKnnFromIndex(s, queries, "vec_id",
+          "embedding", idx, 3, nProbe, refine = 48))
+        val got = rows(Similarity.ivfPqKnnFromIndex(s, withNull, "vec_id",
+          "embedding", idx, 3, nProbe, refine = 48))
+        assert(got == want, s"nProbe=$nProbe")
+      }
+    } finally idx.drop(s)
+  }
 }

@@ -29,13 +29,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("resize + frame-sample stages: schema, expansion, partition-parallel") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
-    import s.implicits._
     val docs = Tables.documents(s, sf()).limit(40).repartition(4)
     val records = Multimodal.asMediaRecords(docs, "doc_id", "text")
-    // resize: payload exactly targetBytes, partitioning preserved
-    val resized = records.map(Multimodal.padPayload(_, 128))
-    assert(resized.rdd.getNumPartitions == 4)
-    resized.collect().foreach(r => assert(r.payload.length == 128))
     // frame sampling: row-expanding, frames reference their record
     val frames = Multimodal.sampleFrames(records, 2).collect()
     assert(frames.length > 40) // expansion happened
@@ -97,20 +92,6 @@ class MultimodalSpec extends SparkSpec {
         assert(framesById(p.id) == feats(p.id).frameCount,
           s"payload ${p.id}: ${framesById(p.id)} frames emitted but " +
             s"frameCount=${feats(p.id).frameCount}")
-    }
-    // resize pads with zero bytes beyond the source, preserving a prefix
-    val resized = ds.map(Multimodal.padPayload(_, 256)).collect()
-    resized.foreach { r =>
-      val src = payloads(r.id.toInt).payload
-      assert(r.payload.length == 256)
-      assert(java.util.Arrays.equals(r.payload.take(math.min(src.length, 256)),
-        src.take(256)))
-      // the padding itself must be zero bytes — garbage padding (e.g. a
-      // charset replacement-char round-trip) is exactly the non-binary-
-      // safe behavior this test exists to rule out
-      if (src.length < 256)
-        assert(r.payload.drop(src.length).forall(_ == 0),
-          s"record ${r.id}: non-zero resize padding")
     }
   }
 

@@ -326,7 +326,7 @@ class SelectionSpec extends SparkSpec {
         3, 0.4, 0.5)
       .select(col("doc"), round(col("avg_lp") * 10000, 0)
         .cast("long").as("gi"))
-    val o = CorpusStats.ngramLogProbAgainstBySource(tr, hnn, "doc_id",
+    val o = CorpusStatsReference.ngramLogProbAgainstBySource(tr, hnn, "doc_id",
         "text", "source", 3, 0.4, 0.5)
       .select(col("doc"), round(col("avg_lp") * 10000, 0)
         .cast("long").as("oi"))

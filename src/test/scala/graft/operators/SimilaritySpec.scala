@@ -337,4 +337,131 @@ class SimilaritySpec extends SparkSpec {
       "embedding", "label", 4).queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), s"no group limit:\n$plan")
   }
+
+  test("every search at exact settings equals brute force row for row " +
+      "(sim ties, zero and antipodal vectors, no -0.0)") {
+    val s = spark
+    import s.implicits._
+    val a = Seq(1.0, 2.0, 0.0, 1.0, 3.0, 1.0, 0.0, 2.0)
+    val b = Seq(0.0, 1.0, 3.0, 1.0, 0.0, 2.0, 1.0, 1.0)
+    val pad = Seq.fill(5)(0.0)
+    // 1/2 and 3/4 are exact duplicates (sim ties broken by cid), 5 is
+    // the zero vector (no sim), 6 is 1's antipode (sim -1), and 8/9
+    // are orthogonal with a floating-point dot of -6.9e-18
+    val vecs = Seq(1L -> a, 2L -> a, 3L -> b, 4L -> b,
+      5L -> Seq.fill(8)(0.0), 6L -> a.map(-_),
+      7L -> Seq(2.0, 0.0, 1.0, 0.0, 1.0, 0.0, 2.0, 1.0),
+      8L -> (Seq(0.1, 0.1, 0.2) ++ pad), 9L -> (Seq(0.3, -0.1, -0.1) ++ pad),
+      10L -> Seq(3.0, 1.0, 2.0, 2.0, 0.0, 1.0, 1.0, 0.0),
+      11L -> Seq.fill(8)(1.0),
+      12L -> Seq(0.0, 3.0, 1.0, 2.0, 2.0, 0.0, 1.0, 3.0))
+    val corpus = vecs.map { case (i, v) => (i, v, i.toInt) }
+      .toDF("vec_id", "embedding", "label")
+    val n = vecs.length
+    val cents = corpus.where(col("vec_id").isin(1L, 3L, 7L))
+    def tmp() = java.nio.file.Files.createTempDirectory("graft-knn-spec")
+      .toString
+    val ivf = Similarity.buildIvfIndex(corpus, "vec_id", "embedding", cents,
+      "vec_id", "embedding", "knn_contract_ivf", tmp())
+    val pq = Similarity.trainPq(corpus, "embedding", m = 4, codesPerSub = 4,
+      seed = 7L)
+    val ivfPq = Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding",
+      cents, "vec_id", "embedding", pq, "knn_contract_ivfpq", tmp())
+    val sq = Similarity.trainSq(corpus, "embedding")
+    def rows(df: org.apache.spark.sql.DataFrame, simAt: Int = 3) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(simAt))).sortBy(t => (t._1, t._2)).toSeq
+    try {
+      for (k <- Seq(3, n)) {
+        val exact = rows(Similarity.bruteForceKnn(corpus, corpus, "vec_id",
+          "embedding", k))
+        val searches: Seq[(String, Seq[(Long, Long, Long, Double)])] = Seq(
+          "hardNegatives" -> rows(Similarity.hardNegatives(corpus, corpus,
+            "vec_id", "embedding", "label", k), simAt = 4),
+          "ivfKnn" -> rows(Similarity.ivfKnn(corpus, corpus, "vec_id",
+            "embedding", cents, "vec_id", "embedding", k, nProbe = 3)),
+          "knnGraph" -> rows(Similarity.knnGraph(corpus, "vec_id",
+            "embedding", cents, "vec_id", "embedding", k, nProbe = 3)),
+          "ivfKnnFromIndex" -> rows(Similarity.ivfKnnFromIndex(s, corpus,
+            "vec_id", "embedding", ivf, k, nProbe = 3)),
+          "rpKnn" -> rows(Similarity.rpKnn(corpus, corpus, "vec_id",
+            "embedding", 8, 6, "contract", k, refine = n)),
+          "sqKnn" -> rows(Similarity.sqKnn(corpus, corpus, "vec_id",
+            "embedding", k, sq, refine = n)),
+          "pqKnn" -> rows(Similarity.pqKnn(corpus, corpus, "vec_id",
+            "embedding", k, pq, refine = n)),
+          "ivfPqKnnFromIndex" -> rows(Similarity.ivfPqKnnFromIndex(s, corpus,
+            "vec_id", "embedding", ivfPq, k, nProbe = 3, refine = n)))
+        searches.foreach { case (name, got) =>
+          assert(got == exact, s"$name at k=$k diverges from brute force")
+        }
+        // LSH has no exact setting: its rows are brute-force pairs with
+        // brute-force sims
+        val pairs = rows(Similarity.bruteForceKnn(corpus, corpus, "vec_id",
+          "embedding", n)).map(t => (t._1, t._3, t._4)).toSet
+        val lsh = rows(Similarity.lshKnn(corpus, corpus, "vec_id",
+          "embedding", 8, k)).map(t => (t._1, t._3, t._4))
+        assert(lsh.nonEmpty && lsh.forall(pairs), s"lshKnn at k=$k: $lsh")
+        // the fixture exercises what it claims: a tie, the antipode, a
+        // 0.0 from a negative dot — and never a -0.0
+        val sims = exact.map(_._4)
+        assert(sims.forall(x => java.lang.Double.doubleToRawLongBits(x) !=
+          java.lang.Double.doubleToRawLongBits(-0.0)), s"-0.0 in $exact")
+        assert(!exact.exists(t => t._1 == 5L || t._3 == 5L))
+        // at k = 3, query 6's tied 3/4 straddle the cut: cid 3 keeps it
+        if (k == 3) assert(exact.filter(_._1 == 6L).map(_._3) ==
+          Seq(9L, 8L, 3L))
+        if (k == n) {
+          assert(exact.contains((1L, 1L, 2L, 1.0)))
+          val of7 = exact.filter(_._1 == 7L).map(t => t._3 -> (t._2, t._4))
+            .toMap
+          assert(of7(1L)._2 == of7(2L)._2 && of7(2L)._1 == of7(1L)._1 + 1)
+          assert(exact.exists(t => t._1 == 1L && t._3 == 6L && t._4 == -1.0))
+          assert(exact.exists(t => t._1 == 8L && t._3 == 9L && t._4 == 0.0))
+        }
+      }
+    } finally Seq(ivf, ivfPq).foreach(_.drop(s))
+  }
+
+  test("pq search leaves wrong-dimension vectors out: pqKnn and an " +
+      "ivf-pq build + probe equal the runs without them") {
+    val s = spark
+    import s.implicits._
+    val base = emb.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("embedding"))
+    val q = base.where(col("vec_id") < 3)
+    val q0 = q.where(col("vec_id") === 0L).collect().head.getSeq[Double](1)
+    // a short vector, a long one whose prefix is query 0 itself —
+    // encoded from that prefix it would take a top-R slot the exact
+    // refine then drops — and a NULL one
+    val dirty = base.unionByName(Seq(900001L -> q0.take(63),
+      900002L -> (q0 :+ 1.0), 900003L -> null.asInstanceOf[Seq[Double]])
+      .toDF("vec_id", "embedding"))
+    val cb = Similarity.trainPq(base, "embedding", m = 16,
+      codesPerSub = 32, seed = 7L)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .sortBy(t => (t._1, t._2)).toSeq
+    assert(rows(Similarity.pqKnn(q, dirty, "vec_id", "embedding", 3, cb,
+        refine = 1)) ==
+      rows(Similarity.pqKnn(q, base, "vec_id", "embedding", 3, cb,
+        refine = 1)))
+    val cents = base.where(col("vec_id") < 10)
+    def tmp() = java.nio.file.Files.createTempDirectory("graft-pq-spec")
+      .toString
+    val clean = Similarity.buildIvfPqIndex(base, "vec_id", "embedding",
+      cents, "vec_id", "embedding", cb, "pq_dim_clean", tmp())
+    val mixed = Similarity.buildIvfPqIndex(dirty, "vec_id", "embedding",
+      cents, "vec_id", "embedding", cb, "pq_dim_mixed", tmp())
+    try {
+      for (nProbe <- Seq(1, 10)) {
+        assert(rows(Similarity.ivfPqKnnFromIndex(s, q, "vec_id", "embedding",
+            mixed, 3, nProbe, refine = 1)) ==
+          rows(Similarity.ivfPqKnnFromIndex(s, q, "vec_id", "embedding",
+            clean, 3, nProbe, refine = 1)), s"nProbe=$nProbe")
+      }
+      assert(s.table(mixed.corpusTable).where(col("cid") > 900000L)
+        .isEmpty, "wrong-dim vectors were encoded into the index")
+    } finally Seq(clean, mixed).foreach(_.drop(s))
+  }
 }
